@@ -110,6 +110,14 @@ object LakeTable {
     }
   }
 
+  /** A batch of NEW rows in the table's declared shape: generated columns
+    * materialized ([[applyGenerated]]), every column cast to its declared
+    * type and in declared order. */
+  private def shape(table: String, sch: TableSchema,
+                    df: DataFrame): DataFrame =
+    applyGenerated(table, sch, df).select(toStructType(sch).fields.toSeq
+      .map(f => col(f.name).cast(f.dataType)): _*)
+
   /** Enforce the table's CHECK constraints on a batch of NEW rows: one
     * aggregate pass counting per-constraint violations (row violates only
     * when the predicate is FALSE — NULL passes, per SQL CHECK). Throws
@@ -399,66 +407,33 @@ object LakeTable {
       return CommitResult(v, duplicate = true))
     val adds = stageFiles(spark, log, table, df, txnId, numFiles,
       clusterBy, zOrderBy, bloomCols, curve)
-    val res =
-      try log.commitWithRetry(table, txnId, maxAttempts)(
-        _ => Some((adds, Nil))).get
-      catch { case e: Throwable => discardAdds(adds); throw e }
-    // a concurrent writer won this txnId: its files are the committed
-    // ones, ours are orphans
-    if (res.duplicate) discardAdds(adds)
-    res
+    commitStaged(log, table, txnId, adds, maxAttempts)(appendOnly).get
   }
 
   /** Insert independent `slices` as SEPARATE commits whose version order,
     * per-version contents and txn ids are identical to calling [[insert]]
-    * once per slice in order — only the wall-clock schedule changes: every
-    * slice's staged write runs concurrently (disjoint UUID attempt dirs,
-    * guide §2.6 — the single-coalesce write tails back-fill each other),
-    * then the OCC commits apply sequentially in slice order, so readers of
-    * any version, the change feed and time travel see byte-identical
-    * history. A failure anywhere discards every staged-but-uncommitted
-    * slice's promoted files (no trace); commits already applied stay,
-    * exactly like a sequential loop that threw partway. */
+    * once per slice in order — only the wall-clock schedule changes: the
+    * slices stage concurrently and commit in slice order
+    * ([[stageAllCommitInOrder]]), so readers of any version, the change
+    * feed and time travel see byte-identical history. A failure leaves no
+    * uncommitted slice behind; commits already applied stay, exactly like
+    * a sequential loop that threw partway. */
   def insertAll(spark: SparkSession, log: LakeLog, table: String,
                 slices: Seq[(DataFrame, String)],
                 numFiles: Int = 1,
                 maxAttempts: Int = 3): Seq[CommitResult] = {
-    val n = slices.size
     // replayed txn ids (streaming batch redelivery, client retry) must not
     // re-stage data files — same early check as insert()
     val dup = slices.map { case (_, txnId) => log.committedVersion(table, txnId) }
-    val staged = new Array[Seq[FileAdd]](n)
-    try inParallel(slices.zipWithIndex.collect {
-      case ((df, txnId), i) if dup(i).isEmpty =>
-        () => staged(i) = stageFiles(spark, log, table, df, txnId, numFiles)
-    })
-    catch { case e: Throwable =>
-      staged.filter(_ != null).foreach(discardAdds)
-      throw e
+    val fresh = stageAllCommitInOrder(log, table, maxAttempts,
+      slices.zip(dup).collect { case ((df, txnId), None) =>
+        (txnId, () => stageFiles(spark, log, table, df, txnId, numFiles),
+          appendOnly)
+      }).iterator.map(_._2.get)
+    dup.map {
+      case Some(v) => CommitResult(v, duplicate = true)
+      case None => fresh.next()
     }
-    var i = 0
-    val results = Seq.newBuilder[CommitResult]
-    try {
-      while (i < n) {
-        val txnId = slices(i)._2
-        results += (dup(i) match {
-          case Some(v) => CommitResult(v, duplicate = true)
-          case None =>
-            val res = log.commitWithRetry(table, txnId, maxAttempts)(
-              _ => Some((staged(i), Nil))).get
-            // a concurrent writer won this txnId: its files are the
-            // committed ones, ours are orphans
-            if (res.duplicate) discardAdds(staged(i))
-            res
-        })
-        i += 1
-      }
-    } catch { case e: Throwable =>
-      (i until n).foreach(j =>
-        if (dup(j).isEmpty && staged(j) != null) discardAdds(staged(j)))
-      throw e
-    }
-    results.result()
   }
 
   /** Stage `df` as promoted, stat'd data files — everything [[insert]]
@@ -474,11 +449,7 @@ object LakeTable {
              bloomCols: Seq[String] = Nil,
              curve: String = "morton"): Seq[FileAdd] = {
     val sch = log.snapshot(table).schema.get
-    val st = toStructType(sch)
-    val partCols = sch.partCols
-    val tmp = log.tmpDir(table, txnId)
-    val shaped = applyGenerated(table, sch, df).select(st.fields.toSeq
-      .map(f => col(f.name).cast(f.dataType)): _*)
+    val shaped = shape(table, sch, df)
     // persist whenever ANOTHER job will consume `shaped` before the
     // staged write: the CHECK-violation aggregate and the z-order range
     // aggregate each execute the caller's (possibly expensive) upstream
@@ -486,51 +457,35 @@ object LakeTable {
     val checksOn = sch.checks.nonEmpty
     val reused = checksOn || zOrderBy.nonEmpty
     if (reused) shaped.persist()
-    // clusterBy = the reference's hash-partitioned sink
-    // (`worker/src/parquet_writer.rs:182-234`): rows hash-routed by key into
-    // numFiles files, so equal keys co-locate — narrows each file's min/max
-    // stats and makes point-predicate file pruning effective.
-    // zOrderBy = multi-dimensional clustering: range-partition + sort by an
-    // interleaved-bit curve value, so EVERY listed column gets tight
-    // per-file min/max ranges and [[LakeFileIndex]] prunes on any of them.
-    val arranged =
-      if (zOrderBy.nonEmpty) {
-        val z = ZOrder.curveValue(spark, shaped, zOrderBy, curve)
-        shaped.withColumn("__z", z)
-          .repartitionByRange(math.max(1, numFiles), col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z")
-      }
-      else if (clusterBy.nonEmpty) shaped.repartition(numFiles, clusterBy.map(col): _*)
-      else if (numFiles > 1) shaped.repartition(numFiles)
-      else shaped.coalesce(1)
     try {
-      withStatFriendlyWrites(spark) {
-        // partitioned tables: hive-style staged layout (col=value/ dirs,
-        // data files stripped of partition columns); values are parsed back
-        // into the log's partition map at promotion
-        val write = () => toPhys(arranged, sch)
-          .write.mode("overwrite").option("compression", "snappy")
-          .partitionBy(partCols: _*)
-          .parquet(tmp.toString): Unit
-        // CHECK aggregate and staged write are independent over the
-        // persisted frame — overlap them (guide §2.6). A violation still
-        // rejects the batch with nothing promoted: statAndPromote below
-        // is never reached and the staged dir dies in the finally.
-        if (checksOn)
-          inParallel(Seq(() => enforceChecks(table, sch, shaped), write))
-        else write()
-      }
-    } catch { case e: Throwable =>
-      if (reused) shaped.unpersist()
-      deleteRecursively(tmp)
-      throw e
-    }
-    if (reused) shaped.unpersist()
-    try statAndPromote(spark, log, table, tmp, sch, st,
-      partCols = partCols, bloomCols =
-        validateBloomCols(sch, (sch.bloomCols ++ bloomCols).distinct))
-    finally deleteRecursively(tmp)
+      // clusterBy = the reference's hash-partitioned sink
+      // (`worker/src/parquet_writer.rs:182-234`): rows hash-routed by key
+      // into numFiles files, so equal keys co-locate — narrows each file's
+      // min/max stats and makes point-predicate file pruning effective.
+      // zOrderBy = multi-dimensional clustering: range-partition + sort by
+      // an interleaved-bit curve value, so EVERY listed column gets tight
+      // per-file min/max ranges and [[LakeFileIndex]] prunes on any of them.
+      val arranged =
+        if (zOrderBy.nonEmpty) {
+          val z = ZOrder.curveValue(spark, shaped, zOrderBy, curve)
+          shaped.withColumn("__z", z)
+            .repartitionByRange(math.max(1, numFiles), col("__z"))
+            .sortWithinPartitions("__z")
+            .drop("__z")
+        }
+        else if (clusterBy.nonEmpty)
+          shaped.repartition(numFiles, clusterBy.map(col): _*)
+        else if (numFiles > 1) shaped.repartition(numFiles)
+        else shaped.coalesce(1)
+      // CHECK aggregate and staged write are independent over the
+      // persisted frame — overlap them. A violation still rejects the
+      // batch with nothing promoted.
+      stage(spark, log, table, sch)(arranged, txnId,
+        bloomCols = validateBloomCols(sch,
+          (sch.bloomCols ++ bloomCols).distinct),
+        alongside =
+          if (checksOn) Seq(() => enforceChecks(table, sch, shaped)) else Nil)
+    } finally if (reused) shaped.unpersist()
   }
 
   /** Atomically REPLACE the table's contents with `df`: stage the new
@@ -549,58 +504,12 @@ object LakeTable {
                 maxAttempts: Int = 3): CommitResult = {
     log.committedVersion(table, txnId).foreach(v =>
       return CommitResult(v, duplicate = true))
-    val sch = log.snapshot(table).schema.get
-    val st = toStructType(sch)
-    val partCols = sch.partCols
-    val tmp = log.tmpDir(table, txnId)
-    val shaped = applyGenerated(table, sch, df).select(st.fields.toSeq
-      .map(f => col(f.name).cast(f.dataType)): _*)
-    val checksOn = sch.checks.nonEmpty
-    if (checksOn) shaped.persist()
-    try {
-      withStatFriendlyWrites(spark) {
-        val write = () => toPhys(if (numFiles > 1) shaped.repartition(numFiles)
-               else shaped.coalesce(1), sch)
-          .write.mode("overwrite").option("compression", "snappy")
-          .partitionBy(partCols: _*)
-          .parquet(tmp.toString): Unit
-        // CHECK aggregate overlaps the staged write (guide §2.6); a
-        // violation throws before statAndPromote, so nothing promotes
-        // and the staged dir dies in the caller's finally
-        if (checksOn)
-          inParallel(Seq(() => enforceChecks(table, sch, shaped), write))
-        else write()
-      }
-    } catch { case e: Throwable =>
-      deleteRecursively(tmp); throw e // a CHECK failure leaves no trace
-    } finally if (checksOn) shaped.unpersist()
-    try {
-      val adds = statAndPromote(spark, log, table, tmp, sch, st,
-        partCols = partCols, bloomCols = sch.bloomCols)
-      val res =
-        try log.commitWithRetry(table, txnId, maxAttempts)(fresh =>
-          Some((adds, fresh.files.map(_.path)))).get
-        catch { case e: Throwable => discardAdds(adds); throw e }
-      if (res.duplicate) discardAdds(adds)
-      res
-    } finally deleteRecursively(tmp)
+    val adds = stageFiles(spark, log, table, df, txnId, numFiles)
+    commitStaged(log, table, txnId, adds, maxAttempts) { fresh =>
+      Some(fresh.files.map(_.path))
+    }.get
   }
 
-  /** Promote staged parquet into `data/`, computing per-file row count +
-    * min/max stats from the parquet FOOTERS ([[FooterStats]]) — O(#files)
-    * metadata reads, no re-scan of the data that was just written. Zero-row
-    * part files (Spark writes them on over-partitioned small data) are
-    * dropped, never committed.
-    *
-    * Partitioned tables: the staged dir carries hive-style `col=value/`
-    * subdirs (from `.partitionBy` writes); values are parsed into the
-    * [[FileAdd]] partition map and the promoted file is FLAT — partition
-    * placement lives only in the log. `partition` pre-sets the map when the
-    * staged write was not `.partitionBy` (compaction merges one partition's
-    * files and already knows their shared values). Every partition column
-    * also gets synthesized `min = max = value` stats, so the stat-based
-    * pruners skip partitions with no extra machinery.
-    */
   /** Bloom columns must be real data columns with a canonical string
     * rendering — never partition columns (their values prune via the
     * partition map already). */
@@ -620,6 +529,52 @@ object LakeTable {
     bloomCols
   }
 
+  /** The one staged parquet write every data mutation goes through:
+    * `arranged` — already coalesced, repartitioned or z-ordered by the
+    * caller, since that differs per op — is written under a fresh
+    * `_tmp/<tag>-…` dir and promoted by [[statAndPromote]], and the dir is
+    * deleted however the write ends, so a throwing write leaves no staging
+    * behind. `alongside` actions (CHECK aggregates, report counts) run
+    * overlapped with the write and finish before promotion: their failure
+    * promotes nothing. Columns whose value `partition` presets are not in
+    * the frame (compaction's flat group write); the rest of `partCols` are
+    * written as hive-style `col=value/` dirs. */
+  private def stage(spark: SparkSession, log: LakeLog, table: String,
+                    sch: TableSchema)(
+      arranged: DataFrame, tag: String,
+      rewrite: Boolean = false,
+      partCols: Seq[String] = sch.partCols,
+      partition: Map[String, String] = Map.empty,
+      bloomCols: Seq[String] = sch.bloomCols,
+      alongside: Seq[() => Unit] = Nil): Seq[FileAdd] = {
+    val tmp = log.tmpDir(table, tag)
+    try {
+      withStatFriendlyWrites(spark) {
+        inParallel(alongside :+ (() => toPhys(arranged, sch)
+          .write.mode("overwrite").option("compression", "snappy")
+          .partitionBy(partCols.filterNot(partition.contains): _*)
+          .parquet(tmp.toString): Unit))
+      }
+      statAndPromote(spark, log, table, tmp, sch, toStructType(sch),
+        rewrite, partCols, partition, bloomCols)
+    } finally deleteRecursively(tmp)
+  }
+
+  /** Promote staged parquet into `data/`, computing per-file row count +
+    * min/max stats from the parquet FOOTERS ([[FooterStats]]) — O(#files)
+    * metadata reads, no re-scan of the data that was just written. Zero-row
+    * part files (Spark writes them on over-partitioned small data) are
+    * dropped, never committed.
+    *
+    * Partitioned tables: the staged dir carries hive-style `col=value/`
+    * subdirs (from `.partitionBy` writes); values are parsed into the
+    * [[FileAdd]] partition map and the promoted file is FLAT — partition
+    * placement lives only in the log. `partition` pre-sets the map when the
+    * staged write was not `.partitionBy` (compaction merges one partition's
+    * files and already knows their shared values). Every partition column
+    * also gets synthesized `min = max = value` stats, so the stat-based
+    * pruners skip partitions with no extra machinery.
+    */
   private def statAndPromote(spark: SparkSession, log: LakeLog, table: String,
                              staged: Path, sch: TableSchema, st: StructType,
                              rewrite: Boolean = false,
@@ -787,6 +742,81 @@ object LakeTable {
       } catch { case _: java.io.IOException => () }
     }
 
+  /** The one commit tail of every lake data mutation: an OCC commit (with
+    * retry) of `adds` plus the removes `plan` returns against each fresh
+    * snapshot — None when the op's inputs changed under it, which aborts
+    * the commit and returns None. `plan` is a by-name block, evaluated
+    * once before committing: an op that overlaps several staged writes
+    * runs them in it, and `adds` is read afterwards. The staged files are
+    * reclaimed whenever no version ends up referencing them: the block
+    * threw (one write may have promoted before another failed), the
+    * commit threw, the plan aborted, or a concurrent writer already
+    * committed this txn id. `reclaim` replaces [[discardAdds]] for an op
+    * whose adds are not staged files (the merge-on-read delete re-adds
+    * live files; its staged artifact is the DV sidecar). */
+  private def commitStaged(log: LakeLog, table: String, txnId: String,
+                           adds: => Seq[FileAdd], maxAttempts: Int = 3,
+                           reclaim: Option[() => Unit] = None)(
+      plan: => (Snapshot => Option[Seq[String]])): Option[CommitResult] = {
+    val drop = reclaim.getOrElse(() => discardAdds(adds))
+    try {
+      val removes = plan
+      val staged = adds
+      val res = log.commitWithRetry(table, txnId, maxAttempts)(fresh =>
+        removes(fresh).map(staged -> _))
+      if (res.forall(_.duplicate)) drop()
+      res
+    } catch { case e: Throwable => drop(); throw e }
+  }
+
+  /** [[commitStaged]] for many independent units (txn id, staged write,
+    * plan): every unit stages concurrently (disjoint attempt dirs, UUID
+    * promote names; the write tails back-fill each other),
+    * then the units commit one at a time in order, so version numbering,
+    * per-version contents and conflict behavior are exactly a sequential
+    * loop's. Returns each unit's adds with its commit (None: its plan
+    * aborted). A failure anywhere reclaims every staged-but-uncommitted
+    * unit; commits already applied stay, exactly like a sequential loop
+    * that threw partway. */
+  private def stageAllCommitInOrder(log: LakeLog, table: String,
+      maxAttempts: Int,
+      units: Seq[(String, () => Seq[FileAdd], Snapshot => Option[Seq[String]])])
+      : Seq[(Seq[FileAdd], Option[CommitResult])] = {
+    val staged = new Array[Seq[FileAdd]](units.size)
+    try {
+      inParallel(units.zipWithIndex.map { case ((_, stageUnit, _), i) =>
+        () => staged(i) = stageUnit() })
+      units.zipWithIndex.map { case ((txnId, _, plan), i) =>
+        val adds = staged(i)
+        staged(i) = null // committed or reclaimed by the tail from here on
+        adds -> commitStaged(log, table, txnId, adds, maxAttempts)(plan)
+      }
+    } catch { case e: Throwable =>
+      staged.filter(_ != null).foreach(discardAdds)
+      throw e
+    }
+  }
+
+  /** Plan of an append: nothing to remove, nothing to guard. */
+  private val appendOnly: Snapshot => Option[Seq[String]] = _ => Some(Nil)
+
+  /** Plan of a rewrite: remove `inputs`, provided every one is still live
+    * with the SAME deletion vector. The dv ref is part of the guard
+    * because a concurrent merge-on-read delete keeps a file's path but
+    * changes the rows it holds — a rewrite of the rows read earlier would
+    * silently undo it. Otherwise None: the inputs changed, abort. */
+  private def removeIfUnchanged(inputs: Seq[FileAdd])
+      : Snapshot => Option[Seq[String]] = fresh => {
+    val live = fresh.files.map(f => f.path -> f.dv).toMap
+    if (inputs.forall(f => live.get(f.path).contains(f.dv)))
+      Some(inputs.map(_.path))
+    else None
+  }
+
+  private def lostInputs(op: String): Nothing =
+    throw new CommitConflictException(
+      s"$op lost its input files to a concurrent commit")
+
   /** Load an external file into the table — the reference's insert/load
     * source (`pkg/coordinator/table_service.go:121-244`: external file →
     * `_tmp/<txn>/` parquet → commit). Formats: parquet, csv (with header),
@@ -931,18 +961,14 @@ object LakeTable {
         (needsDvRewrite(f, cfg) || (force && f.dvRows > 0)))
       .sortBy(_.path).map(Seq(_))
     val groups = sizeGroups ++ dvGroups
-    var committed = 0; var removed = 0; var added = 0
-    // Stage + promote every group CONCURRENTLY (independent inputs,
-    // disjoint staged dirs, UUID promote names — guide §2.6: the rewrite
-    // jobs' task tails back-fill each other); the OCC commits below stay
-    // SEQUENTIAL in group order, so version numbering and conflict
-    // behavior are exactly the old sequential loop's.
-    val prepared = new Array[(String, Seq[FileAdd])](groups.size)
-    try {
-      inParallel(groups.zipWithIndex.map { case (group, gi) => () =>
+    // each group is one unit of the in-order loop: staged concurrently,
+    // committed in group order; a group whose inputs changed under it
+    // (compacted, removed or re-deleted concurrently) is skipped and its
+    // rewrite, bloom sidecars included, reclaimed
+    val results = stageAllCommitInOrder(log, table, maxAttempts = 3,
+      groups.map { group =>
         val txnId = s"compact-${UUID.randomUUID().toString}"
-        val staged = log.tmpDir(table, txnId)
-        try {
+        val stageGroup = () => {
           // the group shares one partition value vector: merge the flat
           // data files (minus any DV'd positions — a compacted file
           // materializes its deletes) and carry the partition map through
@@ -960,50 +986,16 @@ object LakeTable {
                   ZOrder.curveValue(spark, merged, zCols, cfg.curve))
                 .coalesce(1).sortWithinPartitions("__z").drop("__z")
             else merged.coalesce(1)
-          withStatFriendlyWrites(spark) {
-            toPhys(rewritten, sch)
-              .write.mode("overwrite").option("compression", "snappy")
-              .parquet(staged.toString)
-          }
-          prepared(gi) = (txnId, statAndPromote(spark, log, table, staged,
-            sch, st, rewrite = true, partCols = gPartCols,
-            partition = group.head.partition, bloomCols = sch.bloomCols))
-        } finally deleteRecursively(staged)
+          stage(spark, log, table, sch)(rewritten, txnId, rewrite = true,
+            partCols = gPartCols, partition = group.head.partition)
+        }
+        (txnId, stageGroup, removeIfUnchanged(group))
       })
-      groups.zipWithIndex.foreach { case (group, gi) =>
-        val (txnId, adds) = prepared(gi)
-        val inputPaths = group.map(_.path)
-        // inputs must be unchanged INCLUDING their dv refs — a concurrent
-        // merge-on-read delete on an input would otherwise be silently
-        // undone by this rewrite (it merged positions we didn't read)
-        val expectDv = group.map(f => f.path -> f.dv).toMap
-        val result =
-          try log.commitWithRetry(table, txnId) { fresh =>
-            val live = fresh.files.map(f => f.path -> f.dv).toMap
-            if (expectDv.forall { case (p, d) => live.get(p).contains(d) })
-              Some((adds, inputPaths))
-            else None // inputs compacted/removed/re-deleted concurrently
-          } catch { case e: Throwable =>
-            // exhausted retries / IO failure: the promoted rewrite (data
-            // AND bloom sidecars) is referenced by no log entry — reclaim
-            // now, as every other write path does, instead of leaving it
-            // to vacuum's age-gated sweep
-            discardAdds(adds); throw e
-          }
-        if (result.isDefined) {
-          committed += 1; removed += group.size; added += adds.size
-        } else discardAdds(adds) // orphaned rewrite incl. sidecars
-        prepared(gi) = null // committed or discarded — not orphaned
-      }
-    } catch { case e: Throwable =>
-      // a failed stage or commit leaves promoted-but-uncommitted rewrites
-      // for the OTHER groups — reclaim them all before propagating
-      // (double-discard of the failing group is an idempotent no-op)
-      prepared.filter(_ != null).foreach(p => discardAdds(p._2))
-      throw e
+    val done = groups.zip(results).collect {
+      case (group, (adds, Some(_))) => (group.size, adds.size)
     }
-    CompactionReport(groups.size, committed, removed, added,
-      log.latestVersion(table))
+    CompactionReport(groups.size, done.size, done.map(_._1).sum,
+      done.map(_._2).sum, log.latestVersion(table))
   }
 
   final case class DeleteReport(filesRewritten: Int, filesUntouched: Int,
@@ -1026,13 +1018,11 @@ object LakeTable {
     val snap = log.snapshot(table)
     val sch = snap.schema.get
     val st = toStructType(sch)
-    val partCols = sch.partCols
     val candidates = FilePruning.prune(snap.files,
       physExpr(predicate, sch), physStruct(st, sch))
     if (candidates.isEmpty)
       return DeleteReport(0, snap.files.size, 0, snap.version)
     val pred = QueryEngine.parsePredicate(predicate)
-    val staged = log.tmpDir(table, txnId)
     // rewrite candidates: retained rows only; a file whose rows all match
     // is dropped entirely (no empty-file adds — parquet writes skip them).
     // SQL DELETE removes only rows where the condition is TRUE — a NULL
@@ -1041,37 +1031,13 @@ object LakeTable {
     // (the predicate may reference them) and re-split on write.
     val retained = readWithPartitions(spark, sch, st, candidates)
       .filter(!coalesce(pred, lit(false)))
-    withStatFriendlyWrites(spark) {
-      toPhys(retained.coalesce(math.max(1, candidates.size)), sch)
-        .write.mode("overwrite").option("compression", "snappy")
-        .partitionBy(partCols: _*)
-        .parquet(staged.toString)
-    }
-    try {
-      val adds = statAndPromote(spark, log, table, staged, sch, st, rewrite = true,
-          partCols = partCols, bloomCols = sch.bloomCols)
-        .filter(_.rows > 0)
-      val inputPaths = candidates.map(_.path)
-      // (path, dv) must both be unchanged: a concurrent merge-on-read
-      // delete keeps the path but changes the logical content we read
-      val expectDv = candidates.map(f => f.path -> f.dv).toMap
-      val resultOpt =
-        try log.commitWithRetry(table, txnId) { fresh =>
-          val live = fresh.files.map(f => f.path -> f.dv).toMap
-          if (expectDv.forall { case (p, d) => live.get(p).contains(d) })
-            Some((adds, inputPaths))
-          else None // concurrent rewrite of our inputs — abort
-        } catch { case e: Throwable => discardAdds(adds); throw e }
-      val result = resultOpt.getOrElse {
-        discardAdds(adds)
-        throw new CommitConflictException(
-          s"delete lost its input files to a concurrent commit")
-      }
-      if (result.duplicate) discardAdds(adds)
-      val deleted = candidates.map(_.liveRows).sum - adds.map(_.rows).sum
-      DeleteReport(candidates.size, snap.files.size - candidates.size,
-        deleted, result.version)
-    } finally deleteRecursively(staged)
+    val adds = stage(spark, log, table, sch)(
+      retained.coalesce(math.max(1, candidates.size)), txnId, rewrite = true)
+    val result = commitStaged(log, table, txnId, adds)(
+      removeIfUnchanged(candidates)).getOrElse(lostInputs("delete"))
+    val deleted = candidates.map(_.liveRows).sum - adds.map(_.rows).sum
+    DeleteReport(candidates.size, snap.files.size - candidates.size,
+      deleted, result.version)
   }
 
   final case class UpdateReport(filesRewritten: Int, filesUntouched: Int,
@@ -1130,7 +1096,6 @@ object LakeTable {
     // leaves the row unchanged (the dual of deleteWhere's retain rule)
     val hit = coalesce(pred, lit(false))
     val setFor = sets.toMap
-    val staged = log.tmpDir(table, txnId)
     val src = readWithPartitions(spark, sch, st, candidates)
     val updated = src.select(st.fields.map { f =>
       setFor.get(f.name) match {
@@ -1142,50 +1107,19 @@ object LakeTable {
     }.toIndexedSeq: _*)
     // three independent actions — CHECK aggregate, matched-row count for
     // the report, staged rewrite — overlapped (guide §2.6). A CHECK
-    // violation still rejects the statement with nothing staged: the
-    // catch below removes the staged dir before rethrowing, so the
-    // no-trace contract holds.
+    // violation still rejects the statement with nothing promoted.
     var rowsUpdated = 0L
-    try {
-      withStatFriendlyWrites(spark) {
-        inParallel(Seq(
-          () => enforceChecks(table, sch, updated),
-          () => { rowsUpdated = src.agg(coalesce(
-              sum(when(hit, 1L).otherwise(0L)), lit(0L)).as("n"))
-            .head.getLong(0) },
-          () => toPhys(updated.coalesce(math.max(1, candidates.size)), sch)
-            .write.mode("overwrite").option("compression", "snappy")
-            .partitionBy(partCols: _*)
-            .parquet(staged.toString)))
-      }
-    } catch { case e: Throwable => deleteRecursively(staged); throw e }
-    try {
-      // .filter(_.rows > 0) is DEFENSIVE parity with the sibling rewrite
-      // paths, not load-bearing: statAndPromote itself already skips
-      // zero-row staged files (the `if (rows == 0L) None` branch), which
-      // is what actually makes an UPDATE over fully-DV-deleted
-      // candidates a clean no-op.
-      val adds = statAndPromote(spark, log, table, staged, sch, st, rewrite = true,
-        partCols = partCols, bloomCols = sch.bloomCols)
-        .filter(_.rows > 0)
-      val inputPaths = candidates.map(_.path)
-      val expectDv = candidates.map(f => f.path -> f.dv).toMap
-      val resultOpt =
-        try log.commitWithRetry(table, txnId) { fresh =>
-          val live = fresh.files.map(f => f.path -> f.dv).toMap
-          if (expectDv.forall { case (p, d) => live.get(p).contains(d) })
-            Some((adds, inputPaths))
-          else None // concurrent rewrite of our inputs — abort
-        } catch { case e: Throwable => discardAdds(adds); throw e }
-      val result = resultOpt.getOrElse {
-        discardAdds(adds)
-        throw new CommitConflictException(
-          "update lost its input files to a concurrent commit")
-      }
-      if (result.duplicate) discardAdds(adds)
-      UpdateReport(candidates.size, snap.files.size - candidates.size,
-        rowsUpdated, result.version)
-    } finally deleteRecursively(staged)
+    val adds = stage(spark, log, table, sch)(
+      updated.coalesce(math.max(1, candidates.size)), txnId, rewrite = true,
+      alongside = Seq(
+        () => enforceChecks(table, sch, updated),
+        () => { rowsUpdated = src.agg(coalesce(
+            sum(when(hit, 1L).otherwise(0L)), lit(0L)).as("n"))
+          .head.getLong(0) }))
+    val result = commitStaged(log, table, txnId, adds)(
+      removeIfUnchanged(candidates)).getOrElse(lostInputs("update"))
+    UpdateReport(candidates.size, snap.files.size - candidates.size,
+      rowsUpdated, result.version)
   }
 
   /** ALTER TABLE ... ADD CONSTRAINT name CHECK (pred) — Delta semantics:
@@ -1353,93 +1287,53 @@ object LakeTable {
     val snap = log.snapshot(table)
     val sch = snap.schema.get
     val st = toStructType(sch)
-    val partCols = sch.partCols
     val pred = QueryEngine.parsePredicate(predicate)
     // persisted: the violation count, checks and the staged write must
     // execute the caller's upstream query once, not three times
-    val shaped = applyGenerated(table, sch, df).select(st.fields.toSeq
-      .map(f => col(f.name).cast(f.dataType)): _*).persist()
-    val keepDir = log.tmpDir(table, s"$txnId-keep")
-    val newDir = log.tmpDir(table, s"$txnId-new")
+    val shaped = shape(table, sch, df).persist()
     try {
       val candidates = FilePruning.prune(snap.files,
         physExpr(predicate, sch), physStruct(st, sch))
-      // four independent actions, overlapped (guide §2.6): CHECK
-      // aggregate, region-violation count, survivor rewrite+promote, new
-      // rows write+promote. A check/violation failure still rejects the
-      // whole statement with no trace: the catch discards whatever the
-      // write pipelines promoted, and the staged dirs die in the outer
-      // finally.
       var keepAdds: Seq[FileAdd] = Nil
       var newAdds: Seq[FileAdd] = Nil
       var violations = 0L
-      try {
-        withStatFriendlyWrites(spark) {
-          inParallel(Seq(
-            () => enforceChecks(table, sch, shaped),
-            () => { violations =
-              shaped.filter(!coalesce(pred, lit(false))).count() },
-            () => if (candidates.nonEmpty) {
-              // NULL predicate keeps the row (same rule as SQL DELETE):
-              // replaced = pred IS TRUE, survivors = everything else
-              val retained = readWithPartitions(spark, sch, st, candidates)
-                .filter(!coalesce(pred, lit(false)))
-              toPhys(retained.coalesce(math.max(1, candidates.size)), sch)
-                .write.mode("overwrite").option("compression", "snappy")
-                .partitionBy(partCols: _*)
-                .parquet(keepDir.toString)
-              keepAdds = statAndPromote(spark, log, table, keepDir, sch, st,
-                rewrite = true, partCols = partCols,
-                bloomCols = sch.bloomCols)
-                .filter(_.rows > 0)
-            },
-            () => {
-              toPhys(if (numFiles > 1) shaped.repartition(numFiles)
-                     else shaped.coalesce(1), sch)
-                .write.mode("overwrite").option("compression", "snappy")
-                .partitionBy(partCols: _*)
-                .parquet(newDir.toString)
-              newAdds = statAndPromote(spark, log, table, newDir, sch, st,
-                partCols = partCols, bloomCols = sch.bloomCols)
-                .filter(_.rows > 0) // empty df ⇒ schema-only part: no adds
-            }))
-        }
+      val snapPaths = snap.files.map(_.path).toSet
+      val result = commitStaged(log, table, txnId, keepAdds ++ newAdds,
+          maxAttempts) {
+        // four independent actions, overlapped: CHECK
+        // aggregate, region-violation count, survivor rewrite+promote, new
+        // rows write+promote. A check/violation failure still rejects the
+        // whole statement with no trace: the tail reclaims whatever the
+        // write pipelines promoted.
+        inParallel(Seq(
+          () => enforceChecks(table, sch, shaped),
+          () => { violations =
+            shaped.filter(!coalesce(pred, lit(false))).count() },
+          () => if (candidates.nonEmpty) {
+            // NULL predicate keeps the row (same rule as SQL DELETE):
+            // replaced = pred IS TRUE, survivors = everything else
+            val retained = readWithPartitions(spark, sch, st, candidates)
+              .filter(!coalesce(pred, lit(false)))
+            keepAdds = stage(spark, log, table, sch)(
+              retained.coalesce(math.max(1, candidates.size)),
+              s"$txnId-keep", rewrite = true)
+          },
+          () => newAdds = stage(spark, log, table, sch)(
+            if (numFiles > 1) shaped.repartition(numFiles)
+            else shaped.coalesce(1), s"$txnId-new")))
         if (violations > 0)
           throw new LakeValidationException(
             s"replaceWhere: $violations incoming row(s) do not satisfy " +
               s"'$predicate' (rows outside the replaced region)")
-      } catch { case e: Throwable =>
-        discardAdds(keepAdds ++ newAdds); throw e
-      }
-      val adds = keepAdds ++ newAdds
-      val inputPaths = candidates.map(_.path)
-      // (path, dv) both unchanged, as in deleteWhere: a concurrent
-      // merge-on-read delete keeps paths but changes what we read
-      val expectDv = candidates.map(f => f.path -> f.dv).toMap
-      val snapPaths = snap.files.map(_.path).toSet
-      val resultOpt =
-        try log.commitWithRetry(table, txnId, maxAttempts) { cur =>
-          val live = cur.files.map(f => f.path -> f.dv).toMap
-          if (expectDv.forall { case (p, d) => live.get(p).contains(d) } &&
-              !replaceAppendConflict(snapPaths, cur.files,
-                physExpr(predicate, sch), physStruct(st, sch)))
-            Some((adds, inputPaths))
-          else None
-        } catch { case e: Throwable => discardAdds(adds); throw e }
-      val result = resultOpt.getOrElse {
-        discardAdds(adds)
-        throw new CommitConflictException(
-          "replaceWhere lost its input files to a concurrent commit")
-      }
-      if (result.duplicate) discardAdds(adds)
+        // the rewrite guard, plus Delta's append conflict
+        cur => removeIfUnchanged(candidates)(cur).filter(_ =>
+          !replaceAppendConflict(snapPaths, cur.files,
+            physExpr(predicate, sch), physStruct(st, sch)))
+      }.getOrElse(lostInputs("replaceWhere"))
       ReplaceReport(candidates.size, snap.files.size - candidates.size,
         candidates.map(_.liveRows).sum - keepAdds.map(_.rows).sum,
         newAdds.map(_.rows).sum, result.version)
-    } finally {
-      shaped.unpersist()
-      deleteRecursively(keepDir)
-      deleteRecursively(newDir)
-    }
+    } finally shaped.unpersist()
   }
 
   final case class MorDeleteReport(filesWithDv: Int, filesRemoved: Int,
@@ -1526,8 +1420,6 @@ object LakeTable {
       val (fullDead, partial) = touched.partition(f => total(f) == f.rows)
       val staged = log.tmpDir(table, txnId)
       var dvPath: Option[Path] = None
-      def discardDv(): Unit =
-        dvPath.foreach(p => Files.deleteIfExists(p))
       try {
         if (partial.nonEmpty) {
           val partialNames = partial.map(f => baseName(f.path))
@@ -1553,30 +1445,48 @@ object LakeTable {
           Files.move(one, dest, StandardCopyOption.ATOMIC_MOVE)
           dvPath = Some(dest)
         }
+        // the re-adds are LIVE files: the tail reclaims only the sidecar
         val adds = partial.map(f => f.copy(rewrite = true,
           dv = Some(DvRef(dvPath.get.toString, total(f)))))
-        val removes = touched.map(_.path)
-        // candidates must be unchanged INCLUDING dv refs: a concurrent MOR
-        // delete merged positions this commit didn't fold in
-        val expectDv = touched.map(f => f.path -> f.dv).toMap
-        val resultOpt =
-          try log.commitWithRetry(table, txnId) { fresh =>
-            val live = fresh.files.map(f => f.path -> f.dv).toMap
-            if (expectDv.forall { case (p, d) => live.get(p).contains(d) })
-              Some((adds, removes))
-            else None
-          } catch { case e: Throwable => discardDv(); throw e }
-        val result = resultOpt.getOrElse {
-          discardDv()
-          throw new CommitConflictException(
-            "merge-on-read delete lost its input files to a concurrent commit")
-        }
-        if (result.duplicate) discardDv()
+        val result = commitStaged(log, table, txnId, adds,
+            reclaim = Some(() => dvPath.foreach(Files.deleteIfExists(_))))(
+          removeIfUnchanged(touched))
+          .getOrElse(lostInputs("merge-on-read delete"))
         val deleted = touched.map(f => total(f) - f.dvRows).sum
         MorDeleteReport(partial.size, fullDead.size,
           snap.files.size - touched.size, deleted, result.version)
       } finally deleteRecursively(staged)
     } finally merged.unpersist()
+  }
+
+  /** Files that might hold a key in `[lo, hi]`, the key range of an
+    * upsert's update set or a merge's source: stats-pruned by one min and
+    * one max conjunct. The prune predicate round-trips through the
+    * whitespace-tokenizing 3-token grammar: a string key containing
+    * whitespace/quotes (or an all-null key set) would be mangled and could
+    * prune a file that holds the OLD row — a silent duplicate key. Float
+    * keys are ALSO unsafe: cast-to-string renders the shortest float repr
+    * ("0.3") while footer stats carry the exact decimal
+    * ("0.30000001..."), so a boundary key's file could be pruned and its
+    * old row survive. Unsafe values/types skip pruning; correctness
+    * first, the scan is the fallback. */
+  private def keyRangeCandidates(snap: Snapshot, sch: TableSchema,
+                                 keyCol: String, lo: Any,
+                                 hi: Any): Seq[FileAdd] = {
+    val st = toStructType(sch)
+    val Seq(loK, hiK) = Seq(lo, hi).map(String.valueOf)
+    val keyIsFloat = st(keyCol).dataType match {
+      case FloatType | DoubleType => true
+      case _ => false
+    }
+    val rangeSafe = !keyIsFloat && Seq(loK, hiK).forall(s =>
+      s != "null" && s.nonEmpty &&
+        !s.exists(c => c.isWhitespace || c == '\'' || c == '"'))
+    if (!rangeSafe) snap.files
+    else FilePruning.prune(
+      FilePruning.prune(snap.files,
+        s"${sch.physFor(keyCol)} >= $loK", physStruct(st, sch)),
+      s"${sch.physFor(keyCol)} <= $hiK", physStruct(st, sch))
   }
 
   /** Upsert by key — MERGE INTO semantics for the common whole-row case:
@@ -1592,110 +1502,42 @@ object LakeTable {
     val snap = log.snapshot(table)
     val sch = snap.schema.get
     val st = toStructType(sch)
-    val partCols = sch.partCols
-    val shaped0 = applyGenerated(table, sch, updates).select(st.fields
-      .toSeq.map(f => col(f.name).cast(f.dataType)): _*)
     // the update set is read by the checks aggregate, the key projection,
     // the key-range aggregate AND the staged write — materialize once
-    val shaped = shaped0.persist()
+    val shaped = shape(table, sch, updates).persist()
     try {
     enforceChecks(table, sch, shaped)
     val keys = shaped.select(keyCol)
-    val staged = log.tmpDir(table, txnId)
-    // Two fully independent pipelines, overlapped end to end (guide §2.6):
+    // Two fully independent pipelines, overlapped end to end, so no
+    // action waits out another's planning gap:
     //  A: key-range probe → stats-prune → survivor rewrite → promote
     //  B: new-rows write → promote
-    // Previously the key-range aggregate ran serially BEFORE the writes and
-    // the two promote passes (bloom job + footer reads each) ran serially
-    // AFTER them — every one of those actions paid its own driver planning
-    // gap. Disjoint staged dirs, and promoted names embed fresh UUIDs, so
-    // the two promotes never collide. Thread.join gives the vars below
-    // their happens-before.
+    // Disjoint staged dirs, and promoted names embed fresh UUIDs, so the
+    // two promotes never collide. Thread.join gives the vars below their
+    // happens-before.
     var candidates: Seq[FileAdd] = Nil
     var rwAdds: Seq[FileAdd] = Nil
     var newAdds: Seq[FileAdd] = Nil
-    try {
-      withStatFriendlyWrites(spark) {
-        inParallel(Seq(
-          () => {
-            // files that might contain an updated key (stats-pruned via
-            // the key range of the update set — single min/max conjunct)
-            val Seq(loK, hiK) = keys.agg(min(keyCol).cast("string"),
-              max(keyCol).cast("string")).collect().head.toSeq
-              .map(String.valueOf)
-            // the prune predicate round-trips through the whitespace-
-            // tokenizing 3-token grammar: a string key containing
-            // whitespace/quotes (or an all-null key set) would be mangled
-            // and could prune a file that holds the OLD row — a silent
-            // duplicate key. Float keys are ALSO unsafe: cast-to-string
-            // renders the shortest float repr ("0.3") while footer stats
-            // carry the exact decimal ("0.30000001..."), so a boundary
-            // key's file could be pruned and its old row survive. Skip
-            // pruning for unsafe values/types; correctness first, the
-            // scan is the fallback.
-            val keyIsFloat = st(keyCol).dataType match {
-              case FloatType | DoubleType => true
-              case _ => false
-            }
-            val rangeSafe = !keyIsFloat && Seq(loK, hiK).forall(s =>
-              s != "null" && s.nonEmpty &&
-                !s.exists(c => c.isWhitespace || c == '\'' || c == '"'))
-            candidates =
-              if (!rangeSafe) snap.files
-              else FilePruning.prune(
-                FilePruning.prune(snap.files,
-                  s"${sch.physFor(keyCol)} >= $loK", physStruct(st, sch)),
-                s"${sch.physFor(keyCol)} <= $hiK", physStruct(st, sch))
-            // stage survivors (layout rewrite of untouched rows) apart
-            // from the update set (logical adds), so the CDC feed can
-            // replay upserted rows without replaying the survivors
-            if (candidates.nonEmpty) {
-              toPhys(readWithPartitions(spark, sch, st, candidates)
-                  .join(keys, Seq(keyCol), "left_anti")
-                  .coalesce(candidates.size), sch)
-                .write.mode("overwrite").option("compression", "snappy")
-                .partitionBy(partCols: _*)
-                .parquet(staged.resolve("rw").toString)
-              rwAdds = statAndPromote(spark, log, table,
-                staged.resolve("rw"), sch, st, rewrite = true,
-                partCols = partCols, bloomCols = sch.bloomCols)
-            }
-          },
-          () => {
-            toPhys(shaped.coalesce(1), sch)
-              .write.mode("overwrite").option("compression", "snappy")
-              .partitionBy(partCols: _*)
-              .parquet(staged.resolve("new").toString)
-            newAdds = statAndPromote(spark, log, table,
-              staged.resolve("new"), sch, st,
-              partCols = partCols, bloomCols = sch.bloomCols)
-          }))
-      }
-    } catch { case e: Throwable =>
-      // one side may have promoted before the other failed — reclaim
-      discardAdds(rwAdds ++ newAdds); throw e
-    }
-    try {
-      val adds = (rwAdds ++ newAdds).filter(_.rows > 0)
-      val inputPaths = candidates.map(_.path)
-      // dv refs included for the same reason as deleteWhere: a concurrent
-      // merge-on-read delete keeps the path but changes what we read
-      val expectDv = candidates.map(f => f.path -> f.dv).toMap
-      val resultOpt =
-        try log.commitWithRetry(table, txnId) { fresh =>
-          val live = fresh.files.map(f => f.path -> f.dv).toMap
-          if (expectDv.forall { case (p, d) => live.get(p).contains(d) })
-            Some((adds, inputPaths))
-          else None
-        } catch { case e: Throwable => discardAdds(adds); throw e }
-      val result = resultOpt.getOrElse {
-        discardAdds(adds)
-        throw new CommitConflictException(
-          s"upsert lost its input files to a concurrent commit")
-      }
-      if (result.duplicate) discardAdds(adds)
-      result
-    } finally deleteRecursively(staged)
+    commitStaged(log, table, txnId, rwAdds ++ newAdds) {
+      inParallel(Seq(
+        () => {
+          val r = keys.agg(min(keyCol).cast("string"),
+            max(keyCol).cast("string")).collect().head
+          candidates =
+            keyRangeCandidates(snap, sch, keyCol, r.get(0), r.get(1))
+          // stage survivors (layout rewrite of untouched rows) apart
+          // from the update set (logical adds), so the CDC feed can
+          // replay upserted rows without replaying the survivors
+          if (candidates.nonEmpty)
+            rwAdds = stage(spark, log, table, sch)(
+              readWithPartitions(spark, sch, st, candidates)
+                .join(keys, Seq(keyCol), "left_anti")
+                .coalesce(candidates.size), s"$txnId-rw", rewrite = true)
+        },
+        () => newAdds = stage(spark, log, table, sch)(
+          shaped.coalesce(1), s"$txnId-new")))
+      removeIfUnchanged(candidates)
+    }.getOrElse(lostInputs("upsert"))
     } finally shaped.unpersist()
   }
 
@@ -1745,20 +1587,16 @@ object LakeTable {
     val snap = log.snapshot(table)
     val sch = snap.schema.get
     val st = toStructType(sch)
-    val partCols = sch.partCols
     if (st.fieldNames.exists(_.startsWith("src_")))
       throw new LakeValidationException(
         s"merge into $table: target columns may not start with 'src_' " +
           "(reserved for the source side in clause conditions)")
-    val shaped0 = applyGenerated(table, sch, source).select(st.fields
-      .toSeq.map(f => col(f.name).cast(f.dataType)): _*)
-    val shaped = shaped0.persist()
+    val shaped = shape(table, sch, source).persist()
     try {
     // ONE aggregate answers the ambiguous-match guard AND the key range
     // (was two jobs, each with its own planning gap): per-key group
     // counts, then max(count) + min/max key in the same pass. min/max over
     // the group keys equal min/max over the non-null keys.
-    val staged = log.tmpDir(table, txnId)
     val kprobe = shaped.filter(col(keyCol).isNotNull)
       .groupBy(keyCol).agg(count(lit(1)).as("__c"))
       .agg(max(col("__c")).as("__maxc"),
@@ -1773,22 +1611,9 @@ object LakeTable {
           s"once in $keyCol — multiple matches per target row are " +
           "ambiguous")
     }
-    // same stats-pruned candidate selection (and the same prune-safety
-    // rules) as upsert — a file that could hold a matched key is in range
-    val Seq(loK, hiK) = Seq(kprobe.get(1), kprobe.get(2)).map(String.valueOf)
-    val keyIsFloat = st(keyCol).dataType match {
-      case FloatType | DoubleType => true
-      case _ => false
-    }
-    val rangeSafe = !keyIsFloat && Seq(loK, hiK).forall(s =>
-      s != "null" && s.nonEmpty &&
-        !s.exists(c => c.isWhitespace || c == '\'' || c == '"'))
+    // a file that could hold a matched key is in the source key range
     val candidates =
-      if (!rangeSafe) snap.files
-      else FilePruning.prune(
-        FilePruning.prune(snap.files,
-          s"${sch.physFor(keyCol)} >= $loK", physStruct(st, sch)),
-        s"${sch.physFor(keyCol)} <= $hiK", physStruct(st, sch))
+      keyRangeCandidates(snap, sch, keyCol, kprobe.get(1), kprobe.get(2))
 
     // the matched-pair frame: candidate target rows left-joined with the
     // source under src_ prefixes; clause conditions evaluate over it
@@ -1860,55 +1685,22 @@ object LakeTable {
       else paired.filter(col("__action") === "k")
         .select(st.fieldNames.toSeq.map(col): _*)
     // independent staged write+promote pipelines, overlapped end to end
-    // (same rationale and exception handling as upsert)
+    // (same rationale as upsert)
     var rwAdds: Seq[FileAdd] = Nil
     var newAdds: Seq[FileAdd] = Nil
-    try {
-      withStatFriendlyWrites(spark) {
-        val rwWrite: Option[() => Unit] =
-          if (paired == null) None
-          else Some(() => {
-            toPhys(keptRows.coalesce(math.max(1, candidates.size)), sch)
-              .write.mode("overwrite").option("compression", "snappy")
-              .partitionBy(partCols: _*)
-              .parquet(staged.resolve("rw").toString)
-            rwAdds = statAndPromote(spark, log, table, staged.resolve("rw"),
-              sch, st, rewrite = true, partCols = partCols,
-              bloomCols = sch.bloomCols)
-          })
-        val newWrite: () => Unit = () => {
-          toPhys(newRows.coalesce(1), sch)
-            .write.mode("overwrite").option("compression", "snappy")
-            .partitionBy(partCols: _*)
-            .parquet(staged.resolve("new").toString)
-          newAdds = statAndPromote(spark, log, table, staged.resolve("new"),
-            sch, st, partCols = partCols, bloomCols = sch.bloomCols)
-        }
-        inParallel(rwWrite.toSeq :+ newWrite)
-      }
-    } catch { case e: Throwable =>
-      discardAdds(rwAdds ++ newAdds); throw e
-    }
-    try {
-      val adds = (rwAdds ++ newAdds).filter(_.rows > 0)
-      val inputPaths = candidates.map(_.path)
-      val expectDv = candidates.map(f => f.path -> f.dv).toMap
-      val resultOpt =
-        try log.commitWithRetry(table, txnId) { fresh =>
-          val live = fresh.files.map(f => f.path -> f.dv).toMap
-          if (expectDv.forall { case (p, d) => live.get(p).contains(d) })
-            Some((adds, inputPaths))
-          else None
-        } catch { case e: Throwable => discardAdds(adds); throw e }
-      val result = resultOpt.getOrElse {
-        discardAdds(adds)
-        throw new CommitConflictException(
-          "merge lost its input files to a concurrent commit")
-      }
-      if (result.duplicate) discardAdds(adds)
-      MergeResult(result.version, nUpdated, nDeleted, nInserted,
-        kept = nKept, duplicate = result.duplicate)
-    } finally deleteRecursively(staged)
+    val result = commitStaged(log, table, txnId, rwAdds ++ newAdds) {
+      val rwWrite: Option[() => Unit] =
+        if (paired == null) None
+        else Some(() => rwAdds = stage(spark, log, table, sch)(
+          keptRows.coalesce(math.max(1, candidates.size)), s"$txnId-rw",
+          rewrite = true))
+      val newWrite: () => Unit = () => newAdds = stage(spark, log, table,
+        sch)(newRows.coalesce(1), s"$txnId-new")
+      inParallel(rwWrite.toSeq :+ newWrite)
+      removeIfUnchanged(candidates)
+    }.getOrElse(lostInputs("merge"))
+    MergeResult(result.version, nUpdated, nDeleted, nInserted,
+      kept = nKept, duplicate = result.duplicate)
     } finally newRows.unpersist()
     } finally if (paired != null) paired.unpersist()
     } finally shaped.unpersist()
