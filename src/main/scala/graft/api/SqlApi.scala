@@ -28,7 +28,9 @@ object SqlApi {
   /** Run SQL against lake tables (each registered at its snapshot version —
     * the SQL sees exactly the files the log makes visible). Views are backed
     * by [[graft.lake.LakeFileIndex]], so WHERE clauses prune files by the
-    * log's min/max stats before any I/O. */
+    * log's min/max stats before any I/O. Registration is memoized per
+    * session ([[graft.lake.Views.registerAll]]): only tables whose snapshot
+    * moved since this session's last statement are rebuilt. */
   def queryLake(spark: SparkSession, log: graft.lake.LakeLog, sql: String,
                 versions: Map[String, Long] = Map.empty): DataFrame = {
     // tables (at the pinned versions) THEN logical views in creation

@@ -112,7 +112,13 @@ object FilePruning {
   *    supplementary characters vs U+E000..U+FFFF;
   *  - timestamp stats trim trailing fractional zeros while user literals
   *    need not, so lexicographic comparison of semantically equal values
-  *    is nonzero.
+  *    is nonzero;
+  *  - timestamp stats are wall-clock times in the writer's session zone,
+  *    which the log does not record, while a Catalyst literal is an
+  *    instant: [[zonedTimestamp]] bounds the stat's instant by the full
+  *    zone-offset range instead of assuming a zone.
+  * The 3-token pruner compares its wall-clock literal with [[timestamp]];
+  * [[LakeFileIndex]] compares instants with [[zonedTimestamp]].
   */
 private[lake] object StatCompare {
 
@@ -141,4 +147,29 @@ private[lake] object StatCompare {
     try Some(java.sql.Timestamp.valueOf(stat.trim)
       .compareTo(java.sql.Timestamp.valueOf(lit.trim)))
     catch { case _: IllegalArgumentException => None }
+
+  /** ±18 h, the full [[java.time.ZoneOffset]] range, in micros. */
+  private val MaxOffsetMicros =
+    java.time.ZoneOffset.MAX.getTotalSeconds * 1000000L
+
+  /** compare(stat bound, instant literal in micros since the epoch) for a
+    * `yyyy-MM-dd HH:mm:ss[.f…]` stat rendered in an unknown zone. The
+    * wall clock read as UTC is moved by the widest offset any zone can
+    * have: a min (`upper = false`) down by 18 h, a max up by 18 h. Only
+    * that bound holds for every writer/reader zone pair, DST folds
+    * included; day-aligned windows still prune. None on any other shape. */
+  def zonedTimestamp(stat: String, micros: Long,
+                     upper: Boolean): Option[Int] =
+    try {
+      val wall = java.time.LocalDateTime.parse(stat.trim.replace(' ', 'T'))
+      val sec = wall.toEpochSecond(java.time.ZoneOffset.UTC)
+      val base = Math.addExact(Math.multiplyExact(sec, 1000000L),
+        wall.getNano / 1000L)
+      val bound =
+        if (upper) Math.addExact(base, MaxOffsetMicros)
+        else Math.subtractExact(base, MaxOffsetMicros)
+      Some(java.lang.Long.compare(bound, micros))
+    } catch {
+      case _: java.time.DateTimeException | _: ArithmeticException => None
+    }
 }

@@ -134,13 +134,21 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
       case _ => true
     }
 
-  /** Apply `check(cmp(min,lit), cmp(max,lit))`; keep on missing stats. */
+  /** Apply `check(cmp(min,lit), cmp(max,lit))`; keep on missing stats.
+    * Timestamp stats are zone-less wall clocks, so they compare as bounds
+    * widened by the full zone-offset range ([[StatCompare.zonedTimestamp]]). */
   private def cmp(f: FileAdd, a: AttributeReference, v: Any)(
       check: (Int, Int) => Boolean): Boolean =
     range(f, a.name, a.dataType) match {
       case Some((lo, hi)) =>
-        (cmpLit(lo, v, a.dataType), cmpLit(hi, v, a.dataType)) match {
-          case (Some(cl), Some(ch)) => check(cl, ch)
+        val (cl, ch) = (a.dataType, v) match {
+          case (TimestampType, micros: Long) =>
+            (StatCompare.zonedTimestamp(lo, micros, upper = false),
+             StatCompare.zonedTimestamp(hi, micros, upper = true))
+          case _ => (cmpLit(lo, v, a.dataType), cmpLit(hi, v, a.dataType))
+        }
+        (cl, ch) match {
+          case (Some(l), Some(h)) => check(l, h)
           case _ => true
         }
       case None => true
@@ -170,6 +178,8 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
         // catalyst DateType literal = days since epoch
         val statDays = java.time.LocalDate.parse(stat).toEpochDay
         Some(java.lang.Long.compare(statDays, v.toString.toLong))
-      case _ => None // timestamps etc.: stat format vs micros — keep file
+      // timestamps: the stat's zone is unknown, so they compare only as
+      // widened bounds in [[cmp]]; elsewhere (the `!=` rule) keep the file
+      case _ => None
     } catch { case _: RuntimeException => None }
 }

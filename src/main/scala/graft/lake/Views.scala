@@ -1,6 +1,9 @@
 package graft.lake
 
+import java.lang.ref.WeakReference
 import java.nio.file.Path
+
+import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -74,18 +77,110 @@ object Views {
       case None => Catalog(Nil)
     }
 
+  /** The snapshot a table's temp view was built from. A version number
+    * alone repeats across a drop and re-create of the same name, so the
+    * version's own commit (txn id, timestamp) is part of the identity. */
+  private final case class TableKey(version: Long, txnId: String,
+                                    timestampMs: Long)
+
+  /** A temp view [[registerAll]] installed: the lake root (and, for a
+    * table, the snapshot) it was built from, and the catalog object
+    * itself, held weakly so the memo never pins a plan or its session. */
+  private final case class Installed(root: String, key: Option[TableKey],
+                                     view: WeakReference[AnyRef])
+
+  /** One session's registrations, by temp-view name. */
+  private final class Registered {
+    val tables = mutable.Map.empty[String, Installed]
+    val views = mutable.Map.empty[String, Installed]
+    var catalogKey: Option[(String, Long)] = None
+  }
+
+  // weak keys: a stopped and dropped session must not pin its memo
+  private val registered = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, Registered]())
+
+  /** `table` at `pinned` (0 = latest) as a [[TableKey]]; None when that
+    * version does not exist, so the caller's read raises the error. */
+  private def tableKey(log: LakeLog, table: String,
+                       pinned: Long): Option[TableKey] = {
+    val latest = log.latestVersion(table)
+    val v = if (pinned <= 0) latest else pinned
+    if (v > latest) None
+    else {
+      val e = log.readEntry(table, v)
+      Some(TableKey(v, e.txn_id, e.timestamp_ms))
+    }
+  }
+
   /** Register every lake table (at `versions` or latest) and every view
     * (in creation order, so references to earlier views resolve) as
     * temp views in `spark`. The one registration point shared by
-    * [[create]]'s validation and [[graft.api.SqlApi.queryLake]]. */
+    * [[read]] and [[graft.api.SqlApi.queryLake]].
+    *
+    * Registration is memoized per session. A table is rebuilt only when
+    * its resolved snapshot (lake root, version, that version's txn id
+    * and commit timestamp) differs from the one this session installed,
+    * or the session's temp view is no longer the exact object installed
+    * then (a user's own `createOrReplaceTempView`, a `dropTempView`). The
+    * views' SQL re-runs only when some table was rebuilt or dropped, the
+    * catalog version moved, or a view's temp view was replaced, because
+    * a view's stored plan captures its tables' relations. Temp views
+    * installed for tables or views that no longer exist are dropped, so
+    * a dropped name fails to resolve instead of reading deleted files.
+    * A SELECT over unchanged tables therefore runs no Spark command
+    * before its own execution. */
   def registerAll(spark: SparkSession, log: LakeLog,
                   versions: Map[String, Long] = Map.empty): Unit = {
-    log.listTables().foreach { t =>
-      LakeTable.readIndexed(spark, log, t, versions.getOrElse(t, 0L))
-        .createOrReplaceTempView(t)
+    val reg = registered.computeIfAbsent(spark, _ => new Registered)
+    val root = log.root.toAbsolutePath.normalize.toString
+    def ours(name: String, i: Installed): Boolean =
+      spark.sessionState.catalog.getRawTempView(name)
+        .exists(_ eq i.view.get)
+    def install(into: mutable.Map[String, Installed], name: String,
+                key: Option[TableKey], df: DataFrame): Unit = {
+      df.createOrReplaceTempView(name)
+      val raw = spark.sessionState.catalog.getRawTempView(name).orNull
+      into(name) = Installed(root, key, new WeakReference[AnyRef](raw))
     }
-    catalog(log).views.foreach { v =>
-      spark.sql(v.sql).createOrReplaceTempView(v.name)
+    // forget this root's registrations whose name is gone, dropping the
+    // temp view unless someone else has replaced it since
+    def dropGone(from: mutable.Map[String, Installed],
+                 live: Set[String]): Boolean = {
+      val gone = from.filter { case (n, i) =>
+        i.root == root && !live.contains(n) }
+      gone.foreach { case (n, i) =>
+        if (ours(n, i)) spark.catalog.dropTempView(n)
+        from.remove(n)
+      }
+      gone.nonEmpty
+    }
+    reg.synchronized {
+      // any table change stales every view's stored plan; marked before
+      // the rebuild so a read that throws half-way leaves them stale
+      val tables = log.listTables()
+      if (dropGone(reg.tables, tables.toSet)) reg.catalogKey = None
+      tables.foreach { t =>
+        val pinned = versions.getOrElse(t, 0L)
+        val key = tableKey(log, t, pinned)
+        val fresh = key.isDefined && reg.tables.get(t).exists(i =>
+          i.root == root && i.key == key && ours(t, i))
+        if (!fresh) {
+          reg.catalogKey = None
+          install(reg.tables, t, key, LakeTable.readIndexed(
+            spark, log, t, key.fold(pinned)(_.version)))
+        }
+      }
+      val catKey = (root, catalogVersion(log))
+      val viewsFresh = reg.catalogKey.contains(catKey) &&
+        reg.views.forall { case (n, i) => i.root != root || ours(n, i) }
+      if (!viewsFresh) {
+        val views = catalog(log).views
+        dropGone(reg.views, views.map(_.name).toSet)
+        views.foreach(v =>
+          install(reg.views, v.name, None, spark.sql(v.sql)))
+        reg.catalogKey = Some(catKey)
+      }
     }
   }
 
@@ -121,8 +216,9 @@ object Views {
     * dropped name (validated by re-analyzing the survivors). Also
     * unregisters the session's temp view so a later SELECT in THIS
     * session fails to resolve instead of silently serving the dropped
-    * macro ([[registerAll]] re-registers live views on every query but
-    * never removes, so the drop must). */
+    * macro, even through a plain `spark.sql` that never passes through
+    * [[registerAll]] (which drops its temp views of removed names only
+    * when it next runs). */
   def drop(spark: SparkSession, log: LakeLog, name: String): Unit = {
     PolicyLog.commit(s"view catalog (drop $name)", viewsDir(log)) { () =>
       val cur = catalog(log)
