@@ -20,9 +20,9 @@ import org.apache.spark.sql.types._
   *
   * The reference carries stats in its log schema (`proto/metadata.proto:
   * 102-105`) but fabricates them (`table_service.go:416-425`); we emit real
-  * values in the exact string encodings [[FilePruning]] and [[LakeFileIndex]]
-  * parse: decimal numerics, ISO dates, Spark-cast-style timestamps, raw
-  * strings, `true`/`false` booleans.
+  * values in the exact string encodings [[LakeFileIndex]] parses: decimal
+  * numerics, ISO dates, Spark-cast-style timestamps, raw strings,
+  * `true`/`false` booleans.
   *
   * Conservative by construction: any column whose chunk statistics are
   * absent (INT96 timestamps, >4 KB binary values, NaN-polluted doubles)
@@ -129,9 +129,9 @@ object FooterStats {
 
   /** Micros-since-epoch → Spark's `cast(ts as string)` rendering in the
     * session timezone: `yyyy-MM-dd HH:mm:ss[.f…]` with the fractional part
-    * trimmed of trailing zeros — so lexicographic comparison against
-    * predicate literals in [[FilePruning]] behaves like the scan-based
-    * stats did. */
+    * trimmed of trailing zeros. The zone is not recorded, so
+    * [[LakeFileIndex]] reads the wall clock back as a bound widened by the
+    * full zone-offset range ([[StatCompare.zonedTimestamp]]). */
   private[lake] def tsString(micros: Long, tz: String): String = {
     val instant = java.time.Instant.ofEpochSecond(
       Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)

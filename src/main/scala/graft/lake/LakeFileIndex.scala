@@ -7,24 +7,24 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types._
 
-/** Catalyst-integrated stat-based file skipping — the "deluxe" version of
-  * [[FilePruning]] (SURVEY.md §4): a custom `FileIndex` whose `listFiles`
-  * receives the query's pushed `dataFilters` as resolved Catalyst
-  * expressions, so ANY Spark/SQL predicate over a lake table prunes files by
-  * the transaction log's min/max stats — not just the reference's 3-token
-  * grammar. Conjunctions prune per-conjunct; disjunctions keep a file if
-  * either arm might match; unknown expression shapes are conservatively
-  * kept. The residual filter still runs, so pruning is purely an I/O win.
+/** The one place a predicate meets file stats. A custom `FileIndex`
+  * whose `listFiles` receives a query's pushed `dataFilters` as resolved
+  * Catalyst expressions (SURVEY.md §4), so ANY Spark/SQL predicate over a
+  * lake table prunes files by the transaction log's min/max stats. DML,
+  * `OPTIMIZE … WHERE` and replaceWhere's append-conflict check push their
+  * predicate through the same scan shape ([[LakeTable.candidateFiles]]) and
+  * decide with the same [[LakeFileIndex.prune]]. Conjunctions prune
+  * per-conjunct; disjunctions keep a file if either arm might match;
+  * unknown expression shapes are conservatively kept. The residual filter
+  * still runs, so pruning is purely an I/O win.
   */
 final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
                           dataSchema: StructType,
                           partSchema: StructType = StructType(Nil))
     extends FileIndex {
 
-  private val statuses: Seq[(FileAdd, FileStatus)] = snap.files.map { f =>
-    val p = new HPath("file://" + f.path)
-    (f, new FileStatus(f.size, false, 1, 128L * 1024 * 1024, 0L, p))
-  }
+  private def status(f: FileAdd): FileStatus = new FileStatus(f.size,
+    false, 1, 128L * 1024 * 1024, 0L, new HPath("file://" + f.path))
 
   /** Identity of the scanned snapshot — lets plan-level rewrites
     * ([[MvRewriteRule]]) recognize WHICH table at WHICH version a
@@ -32,7 +32,7 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
   def tableName: String = snap.table
   def tableVersion: Long = snap.version
 
-  override def rootPaths: Seq[HPath] = statuses.map(_._2.getPath)
+  override def rootPaths: Seq[HPath] = snap.files.map(status(_).getPath)
 
   /** Partitioned tables: one [[PartitionDirectory]] per distinct partition
     * value vector (typed from the log's string map), so Spark both prunes
@@ -43,18 +43,16 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
     */
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val dataKept = statuses.filter { case (f, _) =>
-      dataFilters.forall(expr => mightMatch(f, expr))
-    }
+    val dataKept = LakeFileIndex.prune(snap.files, dataFilters)
     if (partSchema.isEmpty)
-      return Seq(PartitionDirectory(InternalRow.empty, dataKept.map(_._2).toArray))
-    dataKept.groupBy { case (f, _) =>
+      return Seq(PartitionDirectory(InternalRow.empty, dataKept.map(status).toArray))
+    dataKept.groupBy { f =>
       partSchema.map(p => f.partition(p.name)).toIndexedSeq
     }.toSeq.sortBy(_._1.mkString("/")).flatMap { case (vals, group) =>
       val row = InternalRow.fromSeq(vals.zip(partSchema).map {
         case (v, p) => internalValue(v, p.dataType) })
       if (partitionFilters.forall(pf => evalPartitionFilter(pf, row)))
-        Some(PartitionDirectory(row, group.map(_._2).toArray))
+        Some(PartitionDirectory(row, group.map(status).toArray))
       else None
     }
   }
@@ -82,6 +80,16 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
   override def refresh(): Unit = ()
   override def sizeInBytes: Long = snap.files.map(_.size).sum
   override def partitionSchema: StructType = partSchema
+}
+
+object LakeFileIndex {
+
+  /** The files of `files` whose stats do not PROVE that no row satisfies
+    * every conjunct — the whole stat-pruning decision, for reads and
+    * writes alike. Never throws: a conjunct it cannot compare keeps the
+    * file. */
+  def prune(files: Seq[FileAdd], conjuncts: Seq[Expression]): Seq[FileAdd] =
+    files.filter(f => conjuncts.forall(mightMatch(f, _)))
 
   /** Could any row of `f` satisfy `e`? Conservative three-valued logic. */
   private def mightMatch(f: FileAdd, e: Expression): Boolean = e match {
@@ -162,13 +170,16 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
       hi <- st.max_values.get(name)
     } yield (lo, hi)
 
-  /** compare(statString, catalystLiteral) in the column's domain —
-    * delegates the exactness-sensitive kernels to [[StatCompare]] so this
-    * path and [[FilePruning]] can never prune inconsistently. */
+  /** compare(statString, catalystLiteral) in the column's domain, through
+    * the exactness-sensitive kernels of [[StatCompare]]. */
   private def cmpLit(stat: String, v: Any, dt: DataType): Option[Int] =
     try dt match {
-      case IntegerType | LongType | FloatType | DoubleType | ShortType |
-           ByteType =>
+      // float stats are the exact decimal of the promoted double
+      // ([[FooterStats]]); Float.toString ("0.3") would sit below it
+      case FloatType => StatCompare.numeric(stat,
+        new java.math.BigDecimal(v.asInstanceOf[java.lang.Float].doubleValue)
+          .toString)
+      case IntegerType | LongType | DoubleType | ShortType | ByteType =>
         StatCompare.numeric(stat, v.toString)
       case StringType =>
         Some(StatCompare.codePoints(stat, v.toString)) // UTF8String value
@@ -182,4 +193,64 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
       // widened bounds in [[cmp]]; elsewhere (the `!=` rule) keep the file
       case _ => None
     } catch { case _: RuntimeException => None }
+}
+
+/** Exact stat-vs-literal comparison kernels of [[LakeFileIndex.prune]].
+  * All of these exist because the "obvious" comparison is UNSOUND for
+  * pruning:
+  *  - doubles lose integer precision above 2^53 (an int64 stat and a
+  *    nearby literal collapse to the same double and `>` falsely prunes);
+  *  - java String.compareTo orders by UTF-16 code unit, but Spark string
+  *    comparison is binary UTF-8 = code-POINT order — they disagree on
+  *    supplementary characters vs U+E000..U+FFFF;
+  *  - timestamp stats are wall-clock times in the writer's session zone,
+  *    which the log does not record, while a Catalyst literal is an
+  *    instant: [[zonedTimestamp]] bounds the stat's instant by the full
+  *    zone-offset range instead of assuming a zone.
+  */
+private[lake] object StatCompare {
+
+  /** Arbitrary-precision numeric compare (handles int64 beyond 2^53 and
+    * decimal/scientific literals exactly); None if either side is not a
+    * plain number (NaN/Infinity included — conservative keep). */
+  def numeric(stat: String, lit: String): Option[Int] =
+    try Some(new java.math.BigDecimal(stat.trim)
+      .compareTo(new java.math.BigDecimal(lit.trim)))
+    catch { case _: NumberFormatException => None }
+
+  /** Code-point order — Spark/UTF-8 binary string semantics. */
+  def codePoints(a: String, b: String): Int = {
+    var i = 0; var j = 0
+    while (i < a.length && j < b.length) {
+      val ca = a.codePointAt(i); val cb = b.codePointAt(j)
+      if (ca != cb) return Integer.compare(ca, cb)
+      i += Character.charCount(ca); j += Character.charCount(cb)
+    }
+    Integer.compare(a.length - i, b.length - j)
+  }
+
+  /** ±18 h, the full [[java.time.ZoneOffset]] range, in micros. */
+  private val MaxOffsetMicros =
+    java.time.ZoneOffset.MAX.getTotalSeconds * 1000000L
+
+  /** compare(stat bound, instant literal in micros since the epoch) for a
+    * `yyyy-MM-dd HH:mm:ss[.f…]` stat rendered in an unknown zone. The
+    * wall clock read as UTC is moved by the widest offset any zone can
+    * have: a min (`upper = false`) down by 18 h, a max up by 18 h. Only
+    * that bound holds for every writer/reader zone pair, DST folds
+    * included; day-aligned windows still prune. None on any other shape. */
+  def zonedTimestamp(stat: String, micros: Long,
+                     upper: Boolean): Option[Int] =
+    try {
+      val wall = java.time.LocalDateTime.parse(stat.trim.replace(' ', 'T'))
+      val sec = wall.toEpochSecond(java.time.ZoneOffset.UTC)
+      val base = Math.addExact(Math.multiplyExact(sec, 1000000L),
+        wall.getNano / 1000L)
+      val bound =
+        if (upper) Math.addExact(base, MaxOffsetMicros)
+        else Math.subtractExact(base, MaxOffsetMicros)
+      Some(java.lang.Long.compare(bound, micros))
+    } catch {
+      case _: java.time.DateTimeException | _: ArithmeticException => None
+    }
 }

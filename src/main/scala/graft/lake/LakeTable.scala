@@ -3,7 +3,11 @@ package graft.lake
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.QueryEngine
@@ -143,12 +147,13 @@ object LakeTable {
   /** Column mapping (Delta-style): data files and their footer stats /
     * bloom sidecars are keyed by PHYSICAL column names — immutable from
     * column creation — while the API surface speaks logical names. The
-    * three seams below are the whole mapping layer: [[physStruct]] turns a
-    * logical struct into the on-file shape, [[toPhys]] renames an outgoing
-    * frame at the write boundary, and [[physExpr]] rewrites a predicate
-    * string before it is consulted against file stats. Reads alias
-    * physical → logical inside [[readFlat]]. All are identity for tables
-    * that never renamed a column. */
+    * two seams below are the whole mapping layer: [[physStruct]] turns a
+    * logical struct into the on-file shape and [[toPhys]] renames an
+    * outgoing frame at the write boundary. Reads alias physical → logical
+    * inside [[readFlat]] and [[indexedScan]]; a predicate consulted against
+    * file stats resolves through the latter's aliases
+    * ([[candidateFiles]]). Both are identity for tables that never renamed
+    * a column. */
   private def physStruct(st: StructType, sch: TableSchema): StructType =
     if (!sch.hasMapping) st
     else StructType(st.fields.map(f => f.copy(name = sch.physFor(f.name))))
@@ -160,23 +165,6 @@ object LakeTable {
       df.select(df.columns.toSeq.map(c =>
         col(c).as(m.getOrElse(c, c))): _*)
     }
-
-  /** Rewrite the logical column name to physical in a stats-consultation
-    * predicate. Every consumer is [[FilePruning.prune]], whose grammar is
-    * exactly `<col> <op> <literal>` — so ONLY the first token can be a
-    * column; everything after the operator is literal position. Rewriting
-    * by word anywhere (the old behavior) turned bare-word or double-quoted
-    * string literals that collide with a renamed column's logical name
-    * into that column's physical name, unsoundly pruning files. Predicates
-    * that don't parse as the 3-token shape prune nothing downstream, so
-    * they pass through unchanged. */
-  private[lake] def physExpr(e: String, sch: TableSchema): String = {
-    if (!sch.hasMapping) return e
-    val parts = e.trim.split("\\s+", 3)
-    if (parts.length != 3) return e
-    val phys = sch.physMap.getOrElse(parts(0), parts(0))
-    if (phys == parts(0)) e else s"$phys ${parts(1)} ${parts(2)}"
-  }
 
   /** The schema physically stored in data files: declared schema minus
     * partition columns (those live only in the log's partition map). */
@@ -301,22 +289,19 @@ object LakeTable {
 
   /** Catalyst-integrated read: the returned DataFrame prunes files by log
     * stats for WHATEVER filters later land on it — `.filter(...)`, SQL
-    * WHERE, join pushdowns — because a [[LakeFileIndex]] receives the
-    * resolved predicates at planning time. This is the read path to prefer;
-    * [[readFiltered]] remains for the reference's explicit 3-token API.
+    * WHERE, join pushdowns, the reference's 3-token grammar through
+    * [[QueryEngine.parsePredicate]] — because a [[LakeFileIndex]] receives
+    * the resolved predicates at planning time. This is the read path to
+    * prefer.
     */
   def readIndexed(spark: SparkSession, log: LakeLog, table: String,
                   version: Long = 0L): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val snap = log.snapshot(table, version)
     val sch = snap.schema.getOrElse(
       throw new LakeValidationException(s"table $table has no schema"))
     val st = toStructType(sch)
     if (snap.files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
-    val partCols = sch.partCols
-    val partSt = StructType(partCols.map(c => st(c)))
     // DV'd files can't ride the FileIndex (their read is an anti-join, not
     // a scan): they union in via the maintenance read path and rejoin the
     // stat-pruned fast path when compaction materializes their DVs. The
@@ -326,55 +311,69 @@ object LakeTable {
     // current spec — and a legacy file's physical columns differ; its
     // partition values reattach as per-group literals instead (filters
     // on them still constant-fold group-wise at planning time).
-    val curSpec = partCols.toSet
+    val curSpec = sch.partCols.toSet
     val (specFiles, legacy) = snap.files.partition(
       _.partition.keySet == curSpec)
     val (dvd0, plain) = specFiles.partition(_.dvRows > 0)
     val dvd = dvd0 ++ legacy
     if (plain.isEmpty)
       return readWithPartitions(spark, sch, st, dvd)
-    // the scan speaks PHYSICAL column names (what the files and the
-    // log's stats contain); filters pushed through the alias projection
-    // below arrive already rewritten to physical attributes, so the
-    // FileIndex's stat pruning stays consistent under column mapping
+    val indexed = indexedScan(spark, snap.copy(files = plain), sch)
+    if (dvd.isEmpty) indexed
+    else indexed.unionAll(readWithPartitions(spark, sch, st, dvd))
+  }
+
+  /** The scan [[readIndexed]] plans over `snap`'s files: a
+    * [[LakeFileIndex]] relation speaking PHYSICAL column names (what the
+    * files and the log's stats contain), aliased to the declared logical
+    * columns in declared order. Filters pushed through the aliases arrive
+    * at the index already rewritten to physical attributes, so stat
+    * pruning stays consistent under column mapping. */
+  private def indexedScan(spark: SparkSession, snap: Snapshot,
+                          sch: TableSchema): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val st = toStructType(sch)
+    val partSt = StructType(sch.partCols.map(c => st(c)))
     val relation = HadoopFsRelation(
-      location = new LakeFileIndex(spark, snap.copy(files = plain),
-        physStruct(st, sch), partSt),
+      location = new LakeFileIndex(spark, snap, physStruct(st, sch), partSt),
       partitionSchema = partSt,
-      dataSchema = physStruct(dataStruct(st, partCols), sch),
+      dataSchema = physStruct(dataStruct(st, sch.partCols), sch),
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
       options = Map.empty)(spark)
     // Spark appends partition columns after data columns — restore the
     // declared order (and the logical names)
-    val indexed = org.apache.spark.sql.classic.ClassicConversions
-      .castToImpl(spark)
+    org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
       .baseRelationToDataFrame(relation)
       .select(st.fieldNames.toSeq.map(n => col(sch.physFor(n)).as(n)): _*)
-    if (dvd.isEmpty) indexed
-    else indexed.unionAll(readWithPartitions(spark, sch, st, dvd))
   }
 
-  /** Stat-pruned read: drop files whose [min,max] range for the predicate
-    * column excludes the literal — the file-skipping optimization the
-    * reference scaffolds (stats in `proto/metadata.proto:102-105`) but never
-    * implements (`query_planner.go:238-256` takes the full list). Falls back
-    * to the full file list for predicates the 3-token grammar can't prove.
-    * The residual filter is always applied — pruning is an I/O optimization,
-    * never a semantics change.
-    */
-  def readFiltered(spark: SparkSession, log: LakeLog, table: String,
-                   predicate: String, version: Long = 0L): DataFrame = {
-    val snap = log.snapshot(table, version)
-    val sch = snap.schema.get
-    val st = toStructType(sch)
-    // partition columns carry synthesized min=max stats, so partition
-    // predicates prune here exactly like data predicates
-    val kept = FilePruning.prune(snap.files, physExpr(predicate, sch),
-      physStruct(st, sch))
-    readWithPartitions(spark, sch, st, kept)
-      .filter(QueryEngine.parsePredicate(predicate))
+  /** `pred` as the stat-comparable conjuncts a read of `snap` filtered by
+    * it hands [[LakeFileIndex]]: resolved against [[indexedScan]]'s
+    * aliases, then the filter the optimizer pushes onto the relation —
+    * typed, constant-folded, over physical columns (and partition columns,
+    * whose synthesized min = max stats prune the same way). Plans, runs no
+    * Spark job. An unresolvable predicate fails here as the op's own read
+    * of it would; one the optimizer cannot push yields no conjuncts, which
+    * keeps every file. */
+  private[lake] def pushedFilters(spark: SparkSession, snap: Snapshot,
+                                  pred: Column): Seq[Expression] = {
+    val filtered = indexedScan(spark, snap, snap.schema.get).filter(pred)
+    try filtered.queryExecution.optimizedPlan.collectFirst {
+      case Filter(cond, _: LogicalRelation) => cond
+    }.toSeq
+    catch { case NonFatal(_) => Nil }
   }
+
+  /** The files of `snap` that might hold a row where `pred` is true — the
+    * candidate set of every predicate-scoped write: DELETE, UPDATE,
+    * replaceWhere and `OPTIMIZE … WHERE` prune exactly as a read filtered
+    * by the same predicate would. */
+  private[lake] def candidateFiles(spark: SparkSession, snap: Snapshot,
+                                   pred: Column): Seq[FileAdd] =
+    if (snap.files.isEmpty) Nil
+    else LakeFileIndex.prune(snap.files, pushedFilters(spark, snap, pred))
 
   /** Columns eligible for min/max stats (atomic comparable types). */
   private def statCols(st: StructType): Seq[StructField] =
@@ -939,8 +938,8 @@ object LakeTable {
     // the trigger heuristics all see only the scoped files. Commit
     // validation below still runs against the fresh FULL snapshot.
     val scopedFiles = where match {
-      case Some(p) => FilePruning.prune(snap.files, physExpr(p, sch),
-        physStruct(st, sch))
+      case Some(p) =>
+        candidateFiles(spark, snap, QueryEngine.parsePredicate(p))
       case None => snap.files
     }
     // a compaction group never crosses partition boundaries — merging files
@@ -1007,8 +1006,8 @@ object LakeTable {
     * zero I/O); each rewritten file is replaced by its retained rows in one
     * OCC commit, so readers see the delete atomically and old versions time
     * travel to the pre-delete data. Predicate is the 3-token grammar or any
-    * Spark SQL expression (unparseable → all files rewritten, still
-    * correct).
+    * Spark SQL expression; the candidates are the files a read filtered by
+    * it would scan ([[candidateFiles]]).
     */
   def deleteWhere(spark: SparkSession, log: LakeLog, table: String,
                   predicate: String,
@@ -1018,11 +1017,10 @@ object LakeTable {
     val snap = log.snapshot(table)
     val sch = snap.schema.get
     val st = toStructType(sch)
-    val candidates = FilePruning.prune(snap.files,
-      physExpr(predicate, sch), physStruct(st, sch))
+    val pred = QueryEngine.parsePredicate(predicate)
+    val candidates = candidateFiles(spark, snap, pred)
     if (candidates.isEmpty)
       return DeleteReport(0, snap.files.size, 0, snap.version)
-    val pred = QueryEngine.parsePredicate(predicate)
     // rewrite candidates: retained rows only; a file whose rows all match
     // is dropped entirely (no empty-file adds — parquet writes skip them).
     // SQL DELETE removes only rows where the condition is TRUE — a NULL
@@ -1087,11 +1085,10 @@ object LakeTable {
               "(delete + insert expresses the recompute honestly)")
       }
     }
-    val candidates = FilePruning.prune(snap.files,
-      physExpr(predicate, sch), physStruct(st, sch))
+    val pred = QueryEngine.parsePredicate(predicate)
+    val candidates = candidateFiles(spark, snap, pred)
     if (candidates.isEmpty)
       return UpdateReport(0, snap.files.size, 0, snap.version)
-    val pred = QueryEngine.parsePredicate(predicate)
     // SQL UPDATE touches only rows where the condition is TRUE — NULL
     // leaves the row unchanged (the dual of deleteWhere's retain rule)
     val hit = coalesce(pred, lit(false))
@@ -1245,12 +1242,9 @@ object LakeTable {
     */
   private[lake] def replaceAppendConflict(snapPaths: Set[String],
                                           freshFiles: Seq[FileAdd],
-                                          physPredicate: String,
-                                          physSt: StructType): Boolean = {
-    val foreign = freshFiles.filterNot(f => snapPaths.contains(f.path))
-    foreign.nonEmpty &&
-      FilePruning.prune(foreign, physPredicate, physSt).nonEmpty
-  }
+                                          region: Seq[Expression]): Boolean =
+    LakeFileIndex.prune(
+      freshFiles.filterNot(f => snapPaths.contains(f.path)), region).nonEmpty
 
   /** Atomic predicate-scoped overwrite — Delta's `replaceWhere`, the
     * partition-backfill idiom ("recompute yesterday's slice, leave the
@@ -1292,8 +1286,10 @@ object LakeTable {
     // execute the caller's upstream query once, not three times
     val shaped = shape(table, sch, df).persist()
     try {
-      val candidates = FilePruning.prune(snap.files,
-        physExpr(predicate, sch), physStruct(st, sch))
+      // the region as stat conjuncts: prunes the candidates now and the
+      // concurrent appends at every commit attempt
+      val region = pushedFilters(spark, snap, pred)
+      val candidates = LakeFileIndex.prune(snap.files, region)
       var keepAdds: Seq[FileAdd] = Nil
       var newAdds: Seq[FileAdd] = Nil
       var violations = 0L
@@ -1327,8 +1323,7 @@ object LakeTable {
               s"'$predicate' (rows outside the replaced region)")
         // the rewrite guard, plus Delta's append conflict
         cur => removeIfUnchanged(candidates)(cur).filter(_ =>
-          !replaceAppendConflict(snapPaths, cur.files,
-            physExpr(predicate, sch), physStruct(st, sch)))
+          !replaceAppendConflict(snapPaths, cur.files, region))
       }.getOrElse(lostInputs("replaceWhere"))
       ReplaceReport(candidates.size, snap.files.size - candidates.size,
         candidates.map(_.liveRows).sum - keepAdds.map(_.rows).sum,
@@ -1374,11 +1369,10 @@ object LakeTable {
       throw new LakeValidationException(
         s"table $table has duplicate data-file basenames; merge-on-read " +
           "delete requires unique names (use copy-on-write deleteWhere)")
-    val candidates = FilePruning.prune(snap.files,
-      physExpr(predicate, sch), physStruct(st, sch))
+    val pred = QueryEngine.parsePredicate(predicate)
+    val candidates = candidateFiles(spark, snap, pred)
     if (candidates.isEmpty)
       return MorDeleteReport(0, 0, snap.files.size, 0, snap.version)
-    val pred = QueryEngine.parsePredicate(predicate)
     val dataSt = dataStruct(st, partCols)
     // matching positions, partition-aware (the predicate may reference
     // partition columns, which live only in the log). The scan reads RAW
@@ -1460,34 +1454,20 @@ object LakeTable {
   }
 
   /** Files that might hold a key in `[lo, hi]`, the key range of an
-    * upsert's update set or a merge's source: stats-pruned by one min and
-    * one max conjunct. The prune predicate round-trips through the
-    * whitespace-tokenizing 3-token grammar: a string key containing
-    * whitespace/quotes (or an all-null key set) would be mangled and could
-    * prune a file that holds the OLD row — a silent duplicate key. Float
-    * keys are ALSO unsafe: cast-to-string renders the shortest float repr
-    * ("0.3") while footer stats carry the exact decimal
-    * ("0.30000001..."), so a boundary key's file could be pruned and its
-    * old row survive. Unsafe values/types skip pruning; correctness
-    * first, the scan is the fallback. */
+    * upsert's update set or a merge's source: `key >= lo AND key <= hi`
+    * with the probe row's typed values as literals. A null bound (an empty
+    * or all-null key set) keeps every file. */
   private def keyRangeCandidates(snap: Snapshot, sch: TableSchema,
                                  keyCol: String, lo: Any,
-                                 hi: Any): Seq[FileAdd] = {
-    val st = toStructType(sch)
-    val Seq(loK, hiK) = Seq(lo, hi).map(String.valueOf)
-    val keyIsFloat = st(keyCol).dataType match {
-      case FloatType | DoubleType => true
-      case _ => false
+                                 hi: Any): Seq[FileAdd] =
+    if (lo == null || hi == null) snap.files
+    else {
+      val dt = toStructType(sch)(keyCol).dataType
+      val key = AttributeReference(sch.physFor(keyCol), dt)()
+      LakeFileIndex.prune(snap.files, Seq(
+        GreaterThanOrEqual(key, Literal.create(lo, dt)),
+        LessThanOrEqual(key, Literal.create(hi, dt))))
     }
-    val rangeSafe = !keyIsFloat && Seq(loK, hiK).forall(s =>
-      s != "null" && s.nonEmpty &&
-        !s.exists(c => c.isWhitespace || c == '\'' || c == '"'))
-    if (!rangeSafe) snap.files
-    else FilePruning.prune(
-      FilePruning.prune(snap.files,
-        s"${sch.physFor(keyCol)} >= $loK", physStruct(st, sch)),
-      s"${sch.physFor(keyCol)} <= $hiK", physStruct(st, sch))
-  }
 
   /** Upsert by key — MERGE INTO semantics for the common whole-row case:
     * delete current rows whose key appears in `updates`, then insert
@@ -1521,8 +1501,7 @@ object LakeTable {
     commitStaged(log, table, txnId, rwAdds ++ newAdds) {
       inParallel(Seq(
         () => {
-          val r = keys.agg(min(keyCol).cast("string"),
-            max(keyCol).cast("string")).collect().head
+          val r = keys.agg(min(keyCol), max(keyCol)).collect().head
           candidates =
             keyRangeCandidates(snap, sch, keyCol, r.get(0), r.get(1))
           // stage survivors (layout rewrite of untouched rows) apart
@@ -1600,7 +1579,7 @@ object LakeTable {
     val kprobe = shaped.filter(col(keyCol).isNotNull)
       .groupBy(keyCol).agg(count(lit(1)).as("__c"))
       .agg(max(col("__c")).as("__maxc"),
-        min(col(keyCol)).cast("string"), max(col(keyCol)).cast("string"))
+        min(col(keyCol)), max(col(keyCol)))
       .head()
     if (!kprobe.isNullAt(0) && kprobe.getLong(0) > 1) {
       // error path only: re-find one offending key for the message

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.operators.QueryEngine
 
 /** Per-file Bloom data skipping: equality probes drop files whose bloom
   * proves the value absent even when every file's min/max RANGE covers the
@@ -78,12 +79,12 @@ class BloomSkipSpec extends SparkSpec {
     val log = new LakeLog(tmpDir("bloom3tok"))
     threeInterleavedInserts(log, "t", Seq("id"))
     val snap = log.snapshot("t")
-    val st = StructType(Seq(StructField("id", LongType),
-      StructField("tag", StringType)))
-    val kept = FilePruning.prune(snap.files, "id = 151", st)
+    def prune(p: String) = LakeTable.candidateFiles(spark, snap,
+      QueryEngine.parsePredicate(p))
+    val kept = prune("id = 151")
     assert(kept.size == 1, s"expected 1 file, got ${kept.size}")
     // range ops ignore blooms (a bloom can't answer inequalities)
-    assert(FilePruning.prune(snap.files, "id > 0", st).size == 3)
+    assert(prune("id > 0").size == 3)
   }
 
   test("bloom-less entries and non-bloomed columns are kept (back-compat)") {

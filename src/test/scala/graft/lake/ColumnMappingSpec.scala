@@ -3,6 +3,7 @@ package graft.lake
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.QueryEngine
 import graft.api.LakeSql
 
 /** Column mapping (RENAME / DROP COLUMN as metadata-only commits):
@@ -134,7 +135,8 @@ class ColumnMappingSpec extends SparkSpec {
     LakeSql.execute(spark, log, "ALTER TABLE b RENAME COLUMN key TO term")
     assert(log.snapshot("b").schema.get.bloomCols == Seq("term"))
     // 3-token stat pruning through the renamed name
-    val got = LakeTable.readFiltered(spark, log, "b", "doc <= 10")
+    val got = LakeTable.readIndexed(spark, log, "b")
+      .filter(QueryEngine.parsePredicate("doc <= 10"))
     assert(got.count() == 10)
     // metadata-only aggregate resolves renamed columns against the
     // physical stats keys
@@ -176,13 +178,24 @@ class ColumnMappingSpec extends SparkSpec {
       zOrderBy = Seq("cat"))
     LakeSql.execute(spark, log,
       "ALTER TABLE lit RENAME COLUMN price TO amount")
-    val sch = log.snapshot("lit").schema.get
-    // sanity: the collision exists and the rewrite keeps literals alone
-    assert(sch.physFor("amount") == "price")
-    assert(LakeTable.physExpr("cat = amount", sch) == "cat = amount")
-    assert(LakeTable.physExpr("cat = \"amount\"", sch) ==
-      "cat = \"amount\"")
-    assert(LakeTable.physExpr("amount > 10", sch) == "price > 10")
+    val snap = log.snapshot("lit")
+    // sanity: the collision exists, and pruning keeps literals alone
+    // while the column resolves to its physical stats
+    assert(snap.schema.get.physFor("amount") == "price")
+    def kept(p: String) = LakeTable.candidateFiles(spark, snap,
+      QueryEngine.parsePredicate(p)).map(_.path).toSet
+    def statsAdmit(c: String, ok: (String, String) => Boolean) =
+      snap.files.filter { f =>
+        val s = f.stats.get
+        ok(s.min_values(c), s.max_values(c))
+      }.map(_.path).toSet
+    val holdsAmount = statsAdmit("cat", (lo, hi) =>
+      lo <= "amount" && hi >= "amount")
+    assert(holdsAmount.nonEmpty && holdsAmount.size < snap.files.size)
+    assert(kept("cat = amount") == holdsAmount)
+    assert(kept("cat = \"amount\"") == holdsAmount)
+    assert(kept("amount > 10") ==
+      statsAdmit("price", (_, hi) => hi.toDouble > 10))
     val r = LakeTable.deleteWhere(spark, log, "lit", "cat = amount")
     assert(r.rowsDeleted == 50L,
       s"literal rewritten before pruning skipped rows: ${r.rowsDeleted}")

@@ -1,6 +1,7 @@
 package graft.lake
 
 import graft.SparkSpec
+import graft.operators.QueryEngine
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -84,8 +85,10 @@ class FooterStatsSpec extends SparkSpec {
     assert(stats.min_values("id") == "1" && stats.max_values("id") == "2")
     // NaN present: footer either drops the stat or records non-NaN bounds —
     // whichever way, pruning must keep the file for x = 3.5
-    assert(FilePruning.prune(Seq(f), "x = 3.5", st).nonEmpty)
-    assert(FilePruning.prune(Seq(f), "s = zzz", st).nonEmpty)
+    def prune(p: String) = LakeTable.candidateFiles(spark,
+      log.snapshot("t"), QueryEngine.parsePredicate(p))
+    assert(prune("x = 3.5").nonEmpty)
+    assert(prune("s = zzz").nonEmpty)
   }
 
   test("timestamp stat rendering matches Spark's cast-to-string") {

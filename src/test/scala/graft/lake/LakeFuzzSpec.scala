@@ -1,6 +1,7 @@
 package graft.lake
 
 import graft.SparkSpec
+import graft.operators.QueryEngine
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -377,8 +378,8 @@ class LakeFuzzSpec extends SparkSpec {
       if (model.nonEmpty) {
         val probe = model.values.map(_._2).toSeq.sorted.apply(
           rnd.nextInt(model.size))
-        val got = LakeTable.readFiltered(spark, log, "t", s"x > $probe")
-          .count()
+        val got = LakeTable.readIndexed(spark, log, "t")
+          .filter(QueryEngine.parsePredicate(s"x > $probe")).count()
         assert(got == model.values.count(_._2 > probe),
           s"step $step: pruned x > $probe mismatch")
       }

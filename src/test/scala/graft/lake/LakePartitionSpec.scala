@@ -1,6 +1,7 @@
 package graft.lake
 
 import graft.SparkSpec
+import graft.operators.QueryEngine
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -90,15 +91,16 @@ class LakePartitionSpec extends SparkSpec {
       .metrics("numFiles").value == 2)
   }
 
-  test("readFiltered prunes on partition values through synthesized stats") {
+  test("3-token predicates prune on partition values through synthesized stats") {
     val log = newLog()
     LakeTable.createTable(log, "t", schema, partitionBy = Seq("region"))
     LakeTable.insert(spark, log, "t", sample(1 to 10, "eu", "2024-01-01"))
     LakeTable.insert(spark, log, "t", sample(11 to 20, "us", "2024-01-01"))
     val snap = log.snapshot("t")
-    val st = LakeTable.toStructType(snap.schema.get)
-    assert(FilePruning.prune(snap.files, "region = eu", st).size == 1)
-    assert(LakeTable.readFiltered(spark, log, "t", "region = us")
+    assert(LakeTable.candidateFiles(spark, snap,
+      QueryEngine.parsePredicate("region = eu")).size == 1)
+    assert(LakeTable.readIndexed(spark, log, "t")
+      .filter(QueryEngine.parsePredicate("region = us"))
       .select("id").as[Long].collect().sorted.toSeq == (11L to 20L))
   }
 

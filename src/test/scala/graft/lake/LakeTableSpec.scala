@@ -1,6 +1,7 @@
 package graft.lake
 
 import graft.SparkSpec
+import graft.operators.QueryEngine
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -123,21 +124,28 @@ class LakeTableSpec extends SparkSpec {
     LakeTable.insert(spark, log, "t", sampleDf(201 to 300, "c"))
     val snap = log.snapshot("t")
     val st = LakeTable.toStructType(snap.schema.get)
-    assert(FilePruning.prune(snap.files, "id > 250", st).size == 1)
-    assert(FilePruning.prune(snap.files, "id <= 100", st).size == 1)
-    assert(FilePruning.prune(snap.files, "id = 150", st).size == 1)
-    assert(FilePruning.prune(snap.files, "id > 300", st).isEmpty)
-    assert(FilePruning.prune(snap.files, "category = 'b'", st).size == 1)
-    assert(FilePruning.prune(snap.files, "id != 5", st).size == 3)
-    // unknown column / rich predicate → no pruning (conservative)
-    assert(FilePruning.prune(snap.files, "nope > 1", st).size == 3)
-    assert(FilePruning.prune(snap.files, "id > 1 AND id < 5", st).size == 3)
+    def kept(p: String) = LakeTable.candidateFiles(spark, snap,
+      QueryEngine.parsePredicate(p))
+    assert(kept("id > 250").size == 1)
+    assert(kept("id <= 100").size == 1)
+    assert(kept("id = 150").size == 1)
+    assert(kept("id > 300").isEmpty)
+    assert(kept("category = 'b'").size == 1)
+    assert(kept("id != 5").size == 3)
+    // a rich predicate prunes like a read filtered by it
+    assert(kept("id > 1 AND id < 5").size == 1)
     // and the pruned read returns exactly the filtered rows
-    val df = LakeTable.readFiltered(spark, log, "t", "id > 250")
+    def read(p: String) = LakeTable.readIndexed(spark, log, "t")
+      .filter(QueryEngine.parsePredicate(p))
+    val df = read("id > 250")
     assert(df.count() == 50)
     assert(df.rdd.getNumPartitions <= 2) // only one file scanned
-    val empty = LakeTable.readFiltered(spark, log, "t", "id > 300")
+    val empty = read("id > 300")
     assert(empty.count() == 0 && empty.schema == st)
+    // an unknown column fails the op, as its read of the predicate does
+    intercept[org.apache.spark.sql.AnalysisException](
+      LakeTable.deleteWhere(spark, log, "t", "nope > 1"))
+    assert(log.latestVersion("t") == snap.version)
   }
 
   test("clusterBy insert co-locates keys and tightens per-file stats") {
@@ -266,8 +274,8 @@ class LakeTableSpec extends SparkSpec {
     // (FooterStats), so a literal strictly between Float.toString's
     // decimal (0.3) and the promoted value (0.30000001192…) cannot
     // mis-prune — the row DOES match in Spark's double comparison domain
-    assert(LakeTable.readFiltered(spark, log, "t2", "x > 0.3000000")
-      .count() == 1)
+    assert(LakeTable.readIndexed(spark, log, "t2")
+      .filter(QueryEngine.parsePredicate("x > 0.3000000")).count() == 1)
     val widened = TableSchema(Seq(Field("id", "int64"), Field("n", "int64"),
       Field("x", "float64")))
     assert(!log.evolveSchema("t2", widened, "widen-1").duplicate)
@@ -292,7 +300,8 @@ class LakeTableSpec extends SparkSpec {
     assert(st.min_values("n") == "7") // int stats untouched
     // boundary predicate: 0.3f as a double is 0.30000001192… > 0.3, so the
     // row matches — a stale "0.3" max stat would have pruned the file
-    assert(LakeTable.readFiltered(spark, log, "t2", "x > 0.3").count() == 1)
+    assert(LakeTable.readIndexed(spark, log, "t2")
+      .filter(QueryEngine.parsePredicate("x > 0.3")).count() == 1)
     // the restate is layout-only: the CDC feed delivers no rows for it
     assert(LakeTable.changesSince(spark, log, "t2", 1L).count() == 0)
     // the Catalyst-integrated read path (LakeFileIndex + HadoopFsRelation)

@@ -1,6 +1,8 @@
 package graft.lake
 
 import graft.SparkSpec
+import graft.operators.QueryEngine
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Regression tests for stat-comparison soundness: each case falsely
@@ -11,27 +13,32 @@ class PruningSoundnessSpec extends SparkSpec {
   private def fileWith(stats: Map[String, String]): FileAdd =
     FileAdd("f", 1, 1, stats = Some(FileStats(stats, stats)))
 
+  /** The files of a one-file table of `schema` the DML pruner keeps. */
+  private def prune(f: FileAdd, predicate: String,
+                    schema: StructType): Seq[FileAdd] =
+    LakeTable.candidateFiles(spark,
+      Snapshot("t", 1, Some(LakeTable.fromStructType(schema)), Seq(f)),
+      QueryEngine.parsePredicate(predicate))
+
   test("int64 beyond 2^53 compares exactly, not through a double") {
     val schema = StructType(Seq(StructField("id", LongType)))
     val f = fileWith(Map("id" -> "9007199254740993")) // 2^53 + 1
     // both sides collapse to 2^53 as doubles; exact compare must keep it
-    assert(FilePruning.prune(Seq(f), "id > 9007199254740992", schema)
-      .nonEmpty)
-    assert(FilePruning.prune(Seq(f), "id = 9007199254740993", schema)
-      .nonEmpty)
-    assert(FilePruning.prune(Seq(f), "id > 9007199254740993", schema)
+    assert(prune(f, "id > 9007199254740992", schema).nonEmpty)
+    assert(prune(f, "id = 9007199254740993", schema).nonEmpty)
+    assert(prune(f, "id > 9007199254740993", schema)
       .isEmpty) // and exactness still prunes what it should
   }
 
   test("timestamp stats with trimmed fractional zeros match padded literals") {
     val schema = StructType(Seq(StructField("ts", TimestampType)))
     val f = fileWith(Map("ts" -> "2024-01-01 00:00:00.5"))
-    assert(FilePruning.prune(Seq(f), "ts = 2024-01-01T00", schema)
+    assert(prune(f, "ts = 2024-01-01T00", schema)
       .nonEmpty) // unparseable literal → conservative keep
-    // semantically equal, lexicographically unequal — must keep
-    val kept = FilePruning.prune(
-      Seq(fileWith(Map("ts" -> "2024-01-01 00:00:00.5"))),
-      "ts = 2024-01-01 00:00:00.500000", schema)
+    // semantically equal, lexicographically unequal — must keep (quoted:
+    // unquoted, the literal is two tokens and no op parses the predicate)
+    val kept = prune(fileWith(Map("ts" -> "2024-01-01 00:00:00.5")),
+      "ts = '2024-01-01 00:00:00.500000'", schema)
     assert(kept.nonEmpty)
   }
 
@@ -43,7 +50,19 @@ class PruningSoundnessSpec extends SparkSpec {
     assert("𐀀".compareTo("") < 0) // the trap this fixes
     val schema = StructType(Seq(StructField("s", StringType)))
     val f = fileWith(Map("s" -> supp))
-    assert(FilePruning.prune(Seq(f), "s > ", schema).nonEmpty)
+    assert(prune(f, "s > ", schema).nonEmpty)
+  }
+
+  test("float literals compare with float stats as the promoted double") {
+    // the stat is the exact decimal of 0.3f as a double (0.30000001…);
+    // the literal must render the same way, not as Float.toString's "0.3"
+    val log = new LakeLog(tmpDir("floatlit"))
+    LakeTable.createTable(log, "t",
+      StructType(Seq(StructField("x", FloatType))))
+    LakeTable.insert(spark, log, "t", Seq(0.3f, 0.3f).toDF("x"))
+    val df = LakeTable.readIndexed(spark, log, "t")
+    assert(df.filter(col("x") === lit(0.3f)).count() == 2)
+    assert(df.filter(col("x") <= lit(0.3f)).count() == 2)
   }
 
   test("upsert with whitespace-bearing string keys does not duplicate rows") {

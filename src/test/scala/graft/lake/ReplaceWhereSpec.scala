@@ -1,6 +1,7 @@
 package graft.lake
 
 import graft.SparkSpec
+import graft.operators.QueryEngine
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -162,18 +163,21 @@ class ReplaceWhereSpec extends SparkSpec {
       size = 100, stats = Some(FileStats(
         Map("id" -> lo.toString), Map("id" -> hi.toString))))
     val snapPaths = Set("f1", "f2")
+    val region = LakeTable.pushedFilters(spark,
+      Snapshot("t", 1, Some(LakeTable.fromStructType(st)), Nil),
+      QueryEngine.parsePredicate("id < 10"))
     // no foreign files → never a conflict
     assert(!LakeTable.replaceAppendConflict(snapPaths,
-      Seq(fa("f1", 1, 50), fa("f2", 51, 100)), "id < 10", st))
+      Seq(fa("f1", 1, 50), fa("f2", 51, 100)), region))
     // foreign file provably outside the region → safe
     assert(!LakeTable.replaceAppendConflict(snapPaths,
-      Seq(fa("f1", 1, 50), fa("f3", 500, 600)), "id < 10", st))
+      Seq(fa("f1", 1, 50), fa("f3", 500, 600)), region))
     // foreign file overlapping the region → conflict
     assert(LakeTable.replaceAppendConflict(snapPaths,
-      Seq(fa("f1", 1, 50), fa("f3", 5, 8)), "id < 10", st))
+      Seq(fa("f1", 1, 50), fa("f3", 5, 8)), region))
     // foreign file with NO stats → unprunable → conservative conflict
     assert(LakeTable.replaceAppendConflict(snapPaths,
-      Seq(FileAdd("f3", rows = 1, size = 10)), "id < 10", st))
+      Seq(FileAdd("f3", rows = 1, size = 10)), region))
   }
 
   test("empty replacement df clears the region without committing 0-row files") {

@@ -205,4 +205,32 @@ class TimestampPruningSpec extends SparkSpec {
     assert(m.filesScanned == 1L, s"scanned ${m.filesScanned} files")
     assert(m.filesPruned == 11L)
   }
+
+  /** DML on the same zone trap: one file written at +14 h holds a row at
+    * 2024-01-01T00:00Z (wall-clock stat 2024-01-01 14:00) and one a day
+    * later. Run under UTC, `ts < '2024-01-01 12:00:00'` matches the first
+    * row, so each op must act on it; the read must equal the model. */
+  private val jan1 = us("2024-01-01T00:00:00Z")
+  private val jan2 = us("2024-01-02T00:00:00Z")
+  private val beforeNoon = "ts < '2024-01-01 12:00:00'"
+  private val zoneDml: Seq[(String, LakeLog => Any, Set[(Long, Long)])] =
+    Seq(
+      ("deleteWhere", log => LakeTable.deleteWhere(spark, log, "t",
+        beforeNoon), Set(2L -> jan2)),
+      ("deleteWhereMor", log => LakeTable.deleteWhereMor(spark, log, "t",
+        beforeNoon), Set(2L -> jan2)),
+      ("updateWhere", log => LakeTable.updateWhere(spark, log, "t",
+        beforeNoon, Seq("id" -> "id + 100")),
+        Set(101L -> jan1, 2L -> jan2)))
+
+  zoneDml.foreach { case (name, op, model) =>
+    test(s"$name under UTC acts on a row a +14 h writer stored") {
+      val (log, _) = lake(s"zone-$name", "Pacific/Kiritimati",
+        Seq(Seq(jan1, jan2)))
+      val report = withZone("UTC")(op(log))
+      val got = LakeTable.read(spark, log, "t")
+        .select($"id", unix_micros($"ts")).as[(Long, Long)].collect().toSet
+      assert(got == model, s"report $report")
+    }
+  }
 }
