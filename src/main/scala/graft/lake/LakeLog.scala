@@ -2,6 +2,7 @@ package graft.lake
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicReference
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
 import com.fasterxml.jackson.annotation.JsonInclude
@@ -170,10 +171,7 @@ final class LakeValidationException(msg: String) extends RuntimeException(msg)
   */
 final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
 
-  private val mapper = JsonMapper.builder()
-    .addModule(DefaultScalaModule)
-    .serializationInclusion(JsonInclude.Include.NON_ABSENT)
-    .build() :: ClassTagExtensions
+  import LakeLog.mapper
 
   // Commit-outcome counters: the reference exports commit failure/attempt
   // Prometheus series and alerts on a windowed failure RATE
@@ -369,17 +367,16 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
       }
   }
 
-  /** Write the checkpoint for `version`. Atomic rename like entries, so a
-    * partial checkpoint can never be observed; called with the table lock
-    * held (from writeEntry), so the replay it materializes is stable. */
+  /** Write the checkpoint for `version`. An atomic [[LakeLog.replace]], so
+    * a partial checkpoint can never be observed; called with the table
+    * lock held (from writeEntry), so the replay it materializes is
+    * stable. */
   private def writeCheckpoint(table: String, version: Long): Unit = {
     val snap = snapshot(table, version)
     val cp = LogCheckpoint(version, snap.schema, snap.files,
       txnsThrough(table, version))
-    val staged = Files.createTempFile(logDir(table), ".staged", ".json")
-    Files.writeString(staged, mapper.writeValueAsString(cp))
-    Files.move(staged, checkpointPath(table, version),
-      StandardCopyOption.ATOMIC_MOVE)
+    LakeLog.replace(checkpointPath(table, version),
+      mapper.writeValueAsString(cp))
   }
 
   /** Committed versions in ascending order. Only canonical `%020d.json`
@@ -444,44 +441,16 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
 
   private def writeEntry(table: String, entry: LogEntry): Unit = {
     val target = entryPath(table, entry.version)
+    // the exists() check is only a fast path: the create-if-absent below
+    // is what excludes a second process racing the same version
+    // (CrossProcessCommitSpec races a second JVM to pin it)
     if (Files.exists(target))
       throw new CommitConflictException(
         s"version ${entry.version} already committed for $table")
-    val staged = Files.createTempFile(logDir(table), ".staged", ".json")
-    Files.writeString(staged, mapper.writeValueAsString(entry))
-    // The COMMIT POINT must be atomic create-if-absent ACROSS PROCESSES.
-    // rename(2) (Files.move + ATOMIC_MOVE) silently REPLACES an existing
-    // target on POSIX, so the exists() pre-check above is only a fast
-    // path — two processes racing the same version could overwrite a
-    // committed entry. link(2) fails with EEXIST atomically: the first
-    // linker wins the version, every loser gets a clean conflict (the
-    // Raft-less analog of the reference's single-sequencer exclusion,
-    // pkg/metadata/state.go:162-164; CrossProcessCommitSpec races a
-    // second JVM to pin it).
-    try
-      try Files.createLink(target, staged)
-      catch {
-        // EEXIST is the commit race being won by someone else — it must
-        // reach the conflict handler below, never the fallback (it is a
-        // FileSystemException subclass, so it must be matched first)
-        case e: java.nio.file.FileAlreadyExistsException => throw e
-        case _: UnsupportedOperationException
-             | _: java.nio.file.FileSystemException =>
-          // filesystem without hard links (UOE from the provider, or
-          // EPERM/EACCES surfacing as FileSystemException on e.g.
-          // FAT/exFAT and some network mounts): keep the
-          // single-process-safe rename path (in-JVM exclusion still
-          // holds via the table lock)
-          if (Files.exists(target))
-            throw new java.nio.file.FileAlreadyExistsException(target.toString)
-          Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-      }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"version ${entry.version} already committed for $table " +
-            "(lost the cross-process commit race)")
-    } finally Files.deleteIfExists(staged)
+    if (!LakeLog.createIfAbsent(target, mapper.writeValueAsString(entry)))
+      throw new CommitConflictException(
+        s"version ${entry.version} already committed for $table " +
+          "(lost the cross-process commit race)")
     // checkpoint cadence: every Nth commit materializes the replay state.
     // Best-effort by design — the entry above IS committed, and a reader
     // finding no checkpoint just replays more entries
@@ -525,11 +494,14 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
   }
 
   /** Look up whether `txnId` already committed (its version if so) —
-    * writers use this to skip re-staging data for a redelivered batch. */
+    * writers use this to skip re-staging data for a redelivered batch,
+    * and to settle a commit whose outcome a throw left unknown. */
   def committedVersion(table: String, txnId: String): Option[Long] =
-    txnVersions(table).get(txnId)
+    txnsThrough(table, latestVersion(table)).get(txnId)
 
-  /** txn-id → version map through `upTo`, checkpoint-accelerated. */
+  /** The transaction-id → version idempotency map through `upTo`, rebuilt
+    * from the log (the reference persists it in the Raft FSM,
+    * `state.go:150-159`), checkpoint-accelerated. */
   private def txnsThrough(table: String, upTo: Long): Map[String, Long] = {
     val cp = latestCheckpointAt(table, upTo)
     val from = cp.map(_.version).getOrElse(-1L)
@@ -538,67 +510,75 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
         .map(v => { val e = readEntry(table, v); e.txn_id -> v })
   }
 
-  /** The transaction-id → version idempotency map, rebuilt from the log
-    * (the reference persists it in the Raft FSM, `state.go:150-159`). */
-  private def txnVersions(table: String): Map[String, Long] =
-    txnsThrough(table, latestVersion(table))
-
-  /** OCC commit (`state.go:124-195`):
-    *  1. duplicate txn_id → return prior version, duplicate=true;
-    *  2. base_version must equal latest, else [[CommitConflictException]];
-    *  3. removes must exist in the current snapshot; adds must be new paths
-    *     (unless removed in the same transaction); adds validated
-    *     (non-empty path, size>0 implies rows>0);
-    *  4. new entry written create-new + atomic rename.
+  /** The one commit tail of every log entry after CREATE
+    * (`state.go:124-195`), under the table's lock:
+    *  1. duplicate txn_id → return prior version, duplicate=true (counted
+    *     as a duplicate, not an attempt);
+    *  2. otherwise count an attempt; a data commit's `base` must equal
+    *     latest, else [[CommitConflictException]] (metadata verbs pass
+    *     None: they apply to whatever is latest);
+    *  3. `build` turns the one snapshot replay into the entry's (schema,
+    *     adds, removes), throwing [[LakeValidationException]] to refuse;
+    *  4. the entry is written at latest + 1 through the create-if-absent
+    *     commit point.
     */
+  private def commitEntry(table: String, txnId: String, base: Option[Long])(
+      build: Snapshot => (Option[TableSchema], Seq[FileAdd], Seq[String]))
+      : CommitResult = lockFor(table).synchronized {
+    val latest = latestVersion(table) // also validates existence
+    txnsThrough(table, latest).get(txnId) match {
+      case Some(v) =>
+        // a replay is not a commit ATTEMPT for alerting purposes:
+        // counting it would deflate the conflict ratio the alert watches
+        commitDuplicates.incrementAndGet()
+        CommitResult(v, duplicate = true)
+      case None =>
+        commitAttempts.incrementAndGet()
+        base.filter(_ != latest).foreach { b =>
+          commitConflicts.incrementAndGet()
+          throw new CommitConflictException(
+            s"optimistic concurrency failure: base version $b " +
+              s"does not match current version $latest")
+        }
+        val (schema, adds, removes) = build(snapshot(table, latest))
+        writeEntry(table, LogEntry(latest + 1, System.currentTimeMillis(),
+          txnId, schema, adds, removes))
+        CommitResult(latest + 1, duplicate = false)
+    }
+  }
+
+  private def schemaOf(snap: Snapshot): TableSchema =
+    snap.schema.getOrElse(
+      throw new LakeValidationException(s"table ${snap.table} has no schema"))
+
+  /** OCC data commit: removes must exist in the current snapshot; adds
+    * must be new paths (unless removed in the same transaction) and are
+    * validated (non-empty path, size>0 implies rows>0). */
   def commit(table: String, baseVersion: Long, txnId: String,
              adds: Seq[FileAdd], removes: Seq[String] = Nil): CommitResult = {
     if (txnId.isEmpty)
       throw new LakeValidationException("transaction ID cannot be empty")
-    lockFor(table).synchronized {
-      val latest = latestVersion(table) // also validates existence
-      txnVersions(table).get(txnId) match {
-        case Some(v) =>
-          // a replay is not a commit ATTEMPT for alerting purposes:
-          // counting it would deflate the conflict ratio the alert watches
-          commitDuplicates.incrementAndGet()
-          CommitResult(v, duplicate = true)
-        case None =>
-          commitAttempts.incrementAndGet()
-          if (baseVersion != latest) {
-            commitConflicts.incrementAndGet()
-            throw new CommitConflictException(
-              s"optimistic concurrency failure: base version $baseVersion " +
-                s"does not match current version $latest")
-          }
-          // ONE snapshot replay per commit attempt (it was computed twice
-          // — once for validation, once for the entry — doubling log
-          // replay on the hot write path)
-          val snap = snapshot(table, latest)
-          val current = snap.files.map(_.path).toSet
-          removes.foreach { r =>
-            if (!current.contains(r)) throw new LakeValidationException(
-              s"cannot remove file $r: file does not exist")
-          }
-          val removedNow = removes.toSet
-          adds.foreach { a =>
-            if (a.path.isEmpty)
-              throw new LakeValidationException("file path cannot be empty")
-            if (current.contains(a.path) && !removedNow.contains(a.path))
-              throw new LakeValidationException(
-                s"cannot add file ${a.path}: file already exists")
-            if (a.rows == 0 && a.size > 0) throw new LakeValidationException(
-              s"file ${a.path} has size but no rows")
-          }
-          val newVersion = latest + 1
-          // data commits carry NO schema: replay's "latest schema wins"
-          // takes it from the create/evolve entries (and checkpoints), so
-          // embedding the current schema here only bloated every entry
-          // and made history()'s schema_change flag permanently true
-          writeEntry(table, LogEntry(newVersion, System.currentTimeMillis(),
-            txnId, None, adds, removes))
-          CommitResult(newVersion, duplicate = false)
+    commitEntry(table, txnId, Some(baseVersion)) { snap =>
+      val current = snap.files.map(_.path).toSet
+      removes.foreach { r =>
+        if (!current.contains(r)) throw new LakeValidationException(
+          s"cannot remove file $r: file does not exist")
       }
+      val removedNow = removes.toSet
+      adds.foreach { a =>
+        if (a.path.isEmpty)
+          throw new LakeValidationException("file path cannot be empty")
+        if (current.contains(a.path) && !removedNow.contains(a.path))
+          throw new LakeValidationException(
+            s"cannot add file ${a.path}: file already exists")
+        if (a.rows == 0 && a.size > 0) throw new LakeValidationException(
+          s"file ${a.path} has size but no rows")
+      }
+      // data commits carry NO schema: replay's "latest schema wins"
+      // takes it from the create/evolve entries (and checkpoints), so
+      // embedding the current schema here only bloated every entry
+      // and made history()'s schema_change flag permanently true
+      (None, adds, removes)
     }
   }
 
@@ -628,123 +608,109 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     * float-quoted stats that match their float-typed schema.
     */
   def evolveSchema(table: String, newSchema0: TableSchema,
-                   txnId: String): CommitResult = {
-    lockFor(table).synchronized {
-      val latest = latestVersion(table)
-      txnVersions(table).get(txnId) match {
-        case Some(v) =>
-          commitDuplicates.incrementAndGet()
-          CommitResult(v, duplicate = true)
-        case None =>
-          commitAttempts.incrementAndGet()
-          val snap = snapshot(table, latest)
-          val current = snap.schema.getOrElse(
-            throw new LakeValidationException(s"table $table has no schema"))
-          // CHECK constraints ride along: a caller evolving fields need
-          // not restate them (None inherits), but restating them
-          // DIFFERENTLY would silently disable enforcement for rows the
-          // old predicate rejected — refuse anything but an exact echo
-          val newSchema1 =
-            if (newSchema0.check_constraints.isEmpty)
-              newSchema0.copy(check_constraints = current.check_constraints)
-            else if (newSchema0.checks == current.checks) newSchema0
-            else throw new LakeValidationException(
-              "schema evolution cannot add, drop or change CHECK constraints")
-          // bloom columns inherit the same way: a caller evolving fields
-          // that omits them must not silently stop sidecar builds on
-          // every later write (the pruning regression is invisible until
-          // point lookups slow down) — previously each API caller had to
-          // re-thread them by hand
-          val newSchema2 =
-            if (newSchema1.bloom_columns.isEmpty)
-              newSchema1.copy(bloom_columns = current.bloom_columns)
-            else newSchema1
-          val newSchema =
-            if (newSchema2.generated_columns.isEmpty)
-              newSchema2.copy(generated_columns = current.generated_columns)
-            else if (newSchema2.generated == current.generated) newSchema2
-            else throw new LakeValidationException(
-              "schema evolution cannot add, drop or change generated columns")
-          validateSchema(newSchema)
-          if (newSchema.partCols != current.partCols)
-            throw new LakeValidationException(
-              "schema evolution cannot change partition columns")
-          current.fields.foreach { f =>
-            val kept = newSchema.fields.find(_.name == f.name).getOrElse(
-              throw new LakeValidationException(
-                s"schema evolution cannot drop field ${f.name}"))
-            if (kept.`type` != f.`type` &&
-                !Widenings.contains((f.`type`, kept.`type`)))
-              throw new LakeValidationException(
-                s"schema evolution cannot change type of ${f.name} " +
-                  s"(${f.`type`} -> ${kept.`type`}; only int32->int64 and " +
-                  "float32->float64 widen losslessly)")
-            // tightening nullability would declare old files' nulls away —
-            // Catalyst trusts non-nullability and mis-optimizes over them
-            if (f.nullable && !kept.nullable)
-              throw new LakeValidationException(
-                s"schema evolution cannot make ${f.name} non-nullable " +
-                  "(existing files may contain nulls)")
-          }
-          newSchema.fields.filterNot(f =>
-            current.fields.exists(_.name == f.name)).foreach { added =>
-            if (!added.nullable) throw new LakeValidationException(
-              s"new field ${added.name} must be nullable (old files lack it)")
-          }
-          // column-mapping invariants: physical names are immutable and
-          // inherited (callers restate fields logically); an ADDED field
-          // whose name collides with a live or retired PHYSICAL name gets
-          // a fresh unique physical name — otherwise it would read the
-          // old column's stale bytes out of pre-existing files
-          val currentByName = current.fields.map(f => f.name -> f).toMap
-          val takenPhys = current.fields.map(_.phys).toSet ++ current.retired
-          val mappedFields = newSchema.fields.map { f =>
-            currentByName.get(f.name) match {
-              case Some(cur) =>
-                if (f.physical_name.exists(_ != cur.phys))
-                  throw new LakeValidationException(
-                    s"schema evolution cannot change the physical name " +
-                      s"of ${f.name}")
-                f.copy(physical_name = cur.physical_name)
-              case None =>
-                if (takenPhys.contains(f.name))
-                  f.copy(physical_name = Some(s"${f.name}__p${latest + 1}"))
-                else f
-            }
-          }
-          val mappedSchema = newSchema.copy(fields = mappedFields,
-            retired_columns = current.retired_columns)
-          // stats keys below are PHYSICAL names
-          val floatWidened = current.fields.filter(f =>
-            f.`type` == "float32" && newSchema.fields
-              .exists(k => k.name == f.name && k.`type` == "float64"))
-            .map(_.phys).toSet
-          def requote(m: Map[String, String]): Map[String, String] =
-            m.map { case (c, v) =>
-              c -> (if (floatWidened(c))
-                new java.math.BigDecimal(
-                  java.lang.Float.parseFloat(v).toDouble).toPlainString
-              else v)
-            }
-          val restated =
-            if (floatWidened.isEmpty) Nil
-            else snap.files
-              .filter(_.stats.exists(st =>
-                (st.min_values.keySet ++ st.max_values.keySet)
-                  .exists(floatWidened)))
-              // rewrite = true: replay replaces the add in place, and the
-              // CDC feed / MV delta must NOT re-deliver these rows
-              .map(f => f.copy(rewrite = true,
-                stats = f.stats.map(st => st.copy(
-                  min_values = requote(st.min_values),
-                  max_values = requote(st.max_values)))))
-          val newVersion = latest + 1
-          writeEntry(table, LogEntry(newVersion, System.currentTimeMillis(),
-            txnId, Some(mappedSchema), restated, Nil))
-          CommitResult(newVersion, duplicate = false)
+                   txnId: String): CommitResult =
+    commitEntry(table, txnId, None) { snap =>
+      val current = schemaOf(snap)
+      // CHECK constraints ride along: a caller evolving fields need
+      // not restate them (None inherits), but restating them
+      // DIFFERENTLY would silently disable enforcement for rows the
+      // old predicate rejected — refuse anything but an exact echo
+      val newSchema1 =
+        if (newSchema0.check_constraints.isEmpty)
+          newSchema0.copy(check_constraints = current.check_constraints)
+        else if (newSchema0.checks == current.checks) newSchema0
+        else throw new LakeValidationException(
+          "schema evolution cannot add, drop or change CHECK constraints")
+      // bloom columns inherit the same way: a caller evolving fields
+      // that omits them must not silently stop sidecar builds on
+      // every later write (the pruning regression is invisible until
+      // point lookups slow down) — previously each API caller had to
+      // re-thread them by hand
+      val newSchema2 =
+        if (newSchema1.bloom_columns.isEmpty)
+          newSchema1.copy(bloom_columns = current.bloom_columns)
+        else newSchema1
+      val newSchema =
+        if (newSchema2.generated_columns.isEmpty)
+          newSchema2.copy(generated_columns = current.generated_columns)
+        else if (newSchema2.generated == current.generated) newSchema2
+        else throw new LakeValidationException(
+          "schema evolution cannot add, drop or change generated columns")
+      validateSchema(newSchema)
+      if (newSchema.partCols != current.partCols)
+        throw new LakeValidationException(
+          "schema evolution cannot change partition columns")
+      current.fields.foreach { f =>
+        val kept = newSchema.fields.find(_.name == f.name).getOrElse(
+          throw new LakeValidationException(
+            s"schema evolution cannot drop field ${f.name}"))
+        if (kept.`type` != f.`type` &&
+            !Widenings.contains((f.`type`, kept.`type`)))
+          throw new LakeValidationException(
+            s"schema evolution cannot change type of ${f.name} " +
+              s"(${f.`type`} -> ${kept.`type`}; only int32->int64 and " +
+              "float32->float64 widen losslessly)")
+        // tightening nullability would declare old files' nulls away —
+        // Catalyst trusts non-nullability and mis-optimizes over them
+        if (f.nullable && !kept.nullable)
+          throw new LakeValidationException(
+            s"schema evolution cannot make ${f.name} non-nullable " +
+              "(existing files may contain nulls)")
       }
+      newSchema.fields.filterNot(f =>
+        current.fields.exists(_.name == f.name)).foreach { added =>
+        if (!added.nullable) throw new LakeValidationException(
+          s"new field ${added.name} must be nullable (old files lack it)")
+      }
+      // column-mapping invariants: physical names are immutable and
+      // inherited (callers restate fields logically); an ADDED field
+      // whose name collides with a live or retired PHYSICAL name gets
+      // a fresh unique physical name — otherwise it would read the
+      // old column's stale bytes out of pre-existing files
+      val currentByName = current.fields.map(f => f.name -> f).toMap
+      val takenPhys = current.fields.map(_.phys).toSet ++ current.retired
+      val mappedFields = newSchema.fields.map { f =>
+        currentByName.get(f.name) match {
+          case Some(cur) =>
+            if (f.physical_name.exists(_ != cur.phys))
+              throw new LakeValidationException(
+                s"schema evolution cannot change the physical name " +
+                  s"of ${f.name}")
+            f.copy(physical_name = cur.physical_name)
+          case None =>
+            if (takenPhys.contains(f.name))
+              f.copy(physical_name = Some(s"${f.name}__p${snap.version + 1}"))
+            else f
+        }
+      }
+      val mappedSchema = newSchema.copy(fields = mappedFields,
+        retired_columns = current.retired_columns)
+      // stats keys below are PHYSICAL names
+      val floatWidened = current.fields.filter(f =>
+        f.`type` == "float32" && newSchema.fields
+          .exists(k => k.name == f.name && k.`type` == "float64"))
+        .map(_.phys).toSet
+      def requote(m: Map[String, String]): Map[String, String] =
+        m.map { case (c, v) =>
+          c -> (if (floatWidened(c))
+            new java.math.BigDecimal(
+              java.lang.Float.parseFloat(v).toDouble).toPlainString
+          else v)
+        }
+      val restated =
+        if (floatWidened.isEmpty) Nil
+        else snap.files
+          .filter(_.stats.exists(st =>
+            (st.min_values.keySet ++ st.max_values.keySet)
+              .exists(floatWidened)))
+          // rewrite = true: replay replaces the add in place, and the
+          // CDC feed / MV delta must NOT re-deliver these rows
+          .map(f => f.copy(rewrite = true,
+            stats = f.stats.map(st => st.copy(
+              min_values = requote(st.min_values),
+              max_values = requote(st.max_values)))))
+      (Some(mappedSchema), restated, Nil)
     }
-  }
 
   /** Partition-spec evolution (Iceberg `UpdatePartitionSpec`): change the
     * partition columns for FUTURE writes in one metadata-only commit.
@@ -758,46 +724,24 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     * layout evolution stay separate verbs with separate validation. */
   def alterPartitioning(table: String, newPartCols: Seq[String],
                         txnId: String): CommitResult =
-    lockFor(table).synchronized {
-      txnVersions(table).get(txnId) match {
-        case Some(v) =>
-          commitDuplicates.incrementAndGet()
-          CommitResult(v, duplicate = true)
-        case None =>
-          commitAttempts.incrementAndGet()
-          val latest = latestVersion(table)
-          val current = snapshot(table, latest).schema.getOrElse(
-            throw new LakeValidationException(s"table $table has no schema"))
-          if (current.partCols == newPartCols)
-            throw new LakeValidationException(
-              s"table $table is already partitioned by " +
-                s"(${newPartCols.mkString(", ")})")
-          val newSchema = current.copy(partition_columns =
-            if (newPartCols.isEmpty) None else Some(newPartCols))
-          validateSchema(newSchema)
-          val newVersion = latest + 1
-          writeEntry(table, LogEntry(newVersion, System.currentTimeMillis(),
-            txnId, Some(newSchema), Nil, Nil))
-          CommitResult(newVersion, duplicate = false)
-      }
+    commitEntry(table, txnId, None) { snap =>
+      val current = schemaOf(snap)
+      if (current.partCols == newPartCols)
+        throw new LakeValidationException(
+          s"table $table is already partitioned by " +
+            s"(${newPartCols.mkString(", ")})")
+      val newSchema = current.copy(partition_columns =
+        if (newPartCols.isEmpty) None else Some(newPartCols))
+      validateSchema(newSchema)
+      (Some(newSchema), Nil, Nil)
     }
 
   /** Persist ANALYZE results (advisory; stringified like file stats). */
   def setTableStats(table: String,
                     stats: Map[String, Map[String, String]],
                     txnId: String): CommitResult =
-    lockFor(table).synchronized {
-      txnVersions(table).get(txnId) match {
-        case Some(v) => CommitResult(v, duplicate = true)
-        case None =>
-          val latest = latestVersion(table)
-          val sch = snapshot(table, latest).schema.getOrElse(
-            throw new LakeValidationException(s"table $table has no schema"))
-          val v = latest + 1
-          writeEntry(table, LogEntry(v, System.currentTimeMillis(), txnId,
-            Some(sch.copy(table_stats = Some(stats)))))
-          CommitResult(v, duplicate = false)
-      }
+    commitEntry(table, txnId, None) { snap =>
+      (Some(schemaOf(snap).copy(table_stats = Some(stats))), Nil, Nil)
     }
 
   /** Replace the CHECK-constraint set — the commit half of ADD/DROP
@@ -808,20 +752,9 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     * how they change, so a field-evolution call can never smuggle one. */
   def setConstraints(table: String, checks: Map[String, String],
                      txnId: String): CommitResult =
-    lockFor(table).synchronized {
-      txnVersions(table).get(txnId) match {
-        case Some(v) => CommitResult(v, duplicate = true)
-        case None =>
-          val latest = latestVersion(table)
-          val sch = snapshot(table, latest).schema.getOrElse(
-            throw new LakeValidationException(s"table $table has no schema"))
-          val updated = sch.copy(check_constraints =
-            if (checks.isEmpty) None else Some(checks))
-          val v = latest + 1
-          writeEntry(table, LogEntry(v, System.currentTimeMillis(), txnId,
-            Some(updated)))
-          CommitResult(v, duplicate = false)
-      }
+    commitEntry(table, txnId, None) { snap =>
+      (Some(schemaOf(snap).copy(check_constraints =
+        if (checks.isEmpty) None else Some(checks))), Nil, Nil)
     }
 
   /** Shared guard for rename/drop: the column must exist, must not be a
@@ -864,30 +797,21 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     * travel sees the old name. Bloom declarations follow the rename. */
   def renameColumn(table: String, oldName: String, newName: String,
                    txnId: String): CommitResult =
-    lockFor(table).synchronized {
-      txnVersions(table).get(txnId) match {
-        case Some(v) => CommitResult(v, duplicate = true)
-        case None =>
-          val latest = latestVersion(table)
-          val sch = snapshot(table, latest).schema.getOrElse(
-            throw new LakeValidationException(s"table $table has no schema"))
-          val f = mappableColumn(table, sch, oldName)
-          if (sch.fields.exists(_.name == newName))
-            throw new LakeValidationException(
-              s"table $table already has a column $newName")
-          validateSchema(TableSchema(Seq(Field(newName, f.`type`))))
-          val renamed = sch.copy(
-            fields = sch.fields.map(x =>
-              if (x.name == oldName)
-                x.copy(name = newName, physical_name = Some(x.phys))
-              else x),
-            bloom_columns = sch.bloom_columns.map(_.map(c =>
-              if (c == oldName) newName else c)))
-          val v = latest + 1
-          writeEntry(table, LogEntry(v, System.currentTimeMillis(), txnId,
-            Some(renamed)))
-          CommitResult(v, duplicate = false)
-      }
+    commitEntry(table, txnId, None) { snap =>
+      val sch = schemaOf(snap)
+      val f = mappableColumn(table, sch, oldName)
+      if (sch.fields.exists(_.name == newName))
+        throw new LakeValidationException(
+          s"table $table already has a column $newName")
+      validateSchema(TableSchema(Seq(Field(newName, f.`type`))))
+      val renamed = sch.copy(
+        fields = sch.fields.map(x =>
+          if (x.name == oldName)
+            x.copy(name = newName, physical_name = Some(x.phys))
+          else x),
+        bloom_columns = sch.bloom_columns.map(_.map(c =>
+          if (c == oldName) newName else c)))
+      (Some(renamed), Nil, Nil)
     }
 
   /** ALTER TABLE ... DROP COLUMN — metadata-only: the field leaves the
@@ -897,27 +821,18 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     * the same name cannot resurrect stale values. Dropping the last
     * column is refused; bloom declarations are cleaned up. */
   def dropColumn(table: String, name: String, txnId: String): CommitResult =
-    lockFor(table).synchronized {
-      txnVersions(table).get(txnId) match {
-        case Some(v) => CommitResult(v, duplicate = true)
-        case None =>
-          val latest = latestVersion(table)
-          val sch = snapshot(table, latest).schema.getOrElse(
-            throw new LakeValidationException(s"table $table has no schema"))
-          val f = mappableColumn(table, sch, name)
-          if (sch.fields.size == 1)
-            throw new LakeValidationException(
-              s"cannot drop the only column of $table")
-          val dropped = sch.copy(
-            fields = sch.fields.filterNot(_.name == name),
-            bloom_columns = sch.bloom_columns
-              .map(_.filterNot(_ == name)).filter(_.nonEmpty),
-            retired_columns = Some(sch.retired :+ f.phys))
-          val v = latest + 1
-          writeEntry(table, LogEntry(v, System.currentTimeMillis(), txnId,
-            Some(dropped)))
-          CommitResult(v, duplicate = false)
-      }
+    commitEntry(table, txnId, None) { snap =>
+      val sch = schemaOf(snap)
+      val f = mappableColumn(table, sch, name)
+      if (sch.fields.size == 1)
+        throw new LakeValidationException(
+          s"cannot drop the only column of $table")
+      val dropped = sch.copy(
+        fields = sch.fields.filterNot(_.name == name),
+        bloom_columns = sch.bloom_columns
+          .map(_.filterNot(_ == name)).filter(_.nonEmpty),
+        retired_columns = Some(sch.retired :+ f.phys))
+      (Some(dropped), Nil, Nil)
     }
 
   /** Commit with automatic OCC retry: re-resolves the base version and
@@ -944,4 +859,84 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     throw new CommitConflictException(
       s"commit of $txnId to $table failed after $maxAttempts attempts")
   }
+}
+
+/** The one commit point of every durable lake record: log entries and
+  * checkpoints, WAP staging records, refs, cross-table txn decisions,
+  * policy mini-log entries and materialized-view definitions all become
+  * durable through these helpers and nothing else. */
+object LakeLog {
+
+  /** The JSON shape of log entries, checkpoints and the record files
+    * beside them (NON_ABSENT: a None field is omitted, so records written
+    * before a field existed and records that leave it unset read alike). */
+  private[lake] val mapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .serializationInclusion(JsonInclude.Include.NON_ABSENT)
+    .build() :: ClassTagExtensions
+
+  /** One-shot failpoint: the record whose won create throws right after
+    * it became durable — the ambiguous commit, where the writer cannot
+    * tell that it won. Tests arm it; production never does. */
+  private[lake] val failAfterCreating = new AtomicReference[Path]()
+
+  /** Atomically create `target` holding `content` unless it exists: true
+    * when this call created it, false when the file was already there.
+    * The content is fully written to a temp file first, so a visible
+    * record is never torn. The create must be exclusive ACROSS PROCESSES:
+    * rename(2) silently REPLACES an existing target on POSIX, while
+    * link(2) fails with EEXIST atomically, so the first linker wins and
+    * every loser sees false (the Raft-less analog of the reference's
+    * single-sequencer exclusion, `pkg/metadata/state.go:162-164`). A
+    * filesystem without hard links (UOE from the provider, or
+    * EPERM/EACCES as a FileSystemException on e.g. FAT/exFAT and some
+    * network mounts) falls back to check-then-rename, exclusive only
+    * within the process. The parent directory must exist. Once the
+    * record is durable, removing the temp file is best-effort: a failed
+    * cleanup must not report a won create as an error. */
+  def createIfAbsent(target: Path, content: String): Boolean = {
+    val staged = Files.createTempFile(target.getParent, ".staged", ".json")
+    try {
+      Files.writeString(staged, content)
+      val won =
+        try { Files.createLink(target, staged); true }
+        catch {
+          // EEXIST is a FileSystemException too: match it before the
+          // fallback, or a lost race would take the rename path
+          case _: java.nio.file.FileAlreadyExistsException => false
+          case _: UnsupportedOperationException
+               | _: java.nio.file.FileSystemException =>
+            !Files.exists(target) && {
+              Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+              true
+            }
+        }
+      val armed = failAfterCreating.get
+      if (won && target == armed &&
+          failAfterCreating.compareAndSet(armed, null))
+        throw new java.io.IOException(s"failpoint: created $target")
+      won
+    } finally
+      try Files.deleteIfExists(staged)
+      catch { case scala.util.control.NonFatal(_) => () }
+  }
+
+  /** Atomic whole-file replace: readers see the old content or the new,
+    * never a torn file. */
+  def replace(target: Path, content: String): Unit = {
+    val staged = Files.createTempFile(target.getParent, ".staged", ".json")
+    try {
+      Files.writeString(staged, content)
+      Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally
+      try Files.deleteIfExists(staged)
+      catch { case scala.util.control.NonFatal(_) => () }
+  }
+
+  /** The record's content, None when it does not exist — including when a
+    * concurrent writer retires it just before the read. */
+  def readIfExists(p: Path): Option[String] =
+    try Some(Files.readString(p))
+    catch { case _: java.nio.file.NoSuchFileException => None }
 }

@@ -749,10 +749,11 @@ object LakeTable {
     * runs them in it, and `adds` is read afterwards. The staged files are
     * reclaimed whenever no version ends up referencing them: the block
     * threw (one write may have promoted before another failed), the
-    * commit threw, the plan aborted, or a concurrent writer already
-    * committed this txn id. `reclaim` replaces [[discardAdds]] for an op
-    * whose adds are not staged files (the merge-on-read delete re-adds
-    * live files; its staged artifact is the DV sidecar). */
+    * commit threw before its entry became durable, the plan aborted, or
+    * a concurrent writer already committed this txn id. `reclaim`
+    * replaces [[discardAdds]] for an op whose adds are not staged files
+    * (the merge-on-read delete re-adds live files; its staged artifact is
+    * the DV sidecar). */
   private def commitStaged(log: LakeLog, table: String, txnId: String,
                            adds: => Seq[FileAdd], maxAttempts: Int = 3,
                            reclaim: Option[() => Unit] = None)(
@@ -765,7 +766,16 @@ object LakeTable {
         removes(fresh).map(staged -> _))
       if (res.forall(_.duplicate)) drop()
       res
-    } catch { case e: Throwable => drop(); throw e }
+    } catch { case e: Throwable =>
+      // a throw can land after the entry became durable (the ambiguous
+      // commit): reclaim only when the txn map shows this txn id did not
+      // commit; when even that read fails, keep the files
+      val committed =
+        try log.committedVersion(table, txnId).isDefined
+        catch { case s: Throwable => e.addSuppressed(s); true }
+      if (!committed) drop()
+      throw e
+    }
   }
 
   /** [[commitStaged]] for many independent units (txn id, staged write,

@@ -1,6 +1,6 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,8 +22,8 @@ import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModul
   * records — masks govern READS and are deliberately not part of
   * time-travelable table state: revoking a mask must never be undone
   * by reading an old snapshot). Every mutation is OCC over that
-  * mini-log with the lake's own commit device — stage a temp file,
-  * link(2) it to the next version number, retry on EEXIST — so:
+  * mini-log with the lake's own commit point — create the next version
+  * number through [[LakeLog.createIfAbsent]], retry when it exists — so:
   *
   *  - a crash mid-write leaves only an invisible temp file, never a
   *    truncated policy (the commit point is the atomic link);
@@ -47,11 +47,11 @@ import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModul
   * pruning/file skipping on UNMASKED columns are untouched.
   */
 /** The shared versioned-policy commit device ([[Masking]] `_masks/`,
-  * [[RowFilter]] `_rowfilters/`): an OCC mini-log of JSON entries using
-  * the lake's own link(2) create-if-absent commit point. A visible
-  * entry is never torn (the temp is fully written before the link), a
-  * losing racer re-reads the winner's content and reapplies, and every
-  * mutation lands exactly once as one new version. */
+  * [[RowFilter]] `_rowfilters/`): an OCC mini-log of JSON entries
+  * committed through [[LakeLog.createIfAbsent]]. A visible entry is
+  * never torn, a losing racer re-reads the winner's content and
+  * reapplies, and every mutation lands exactly once as one new
+  * version. */
 private[lake] object PolicyLog {
 
   def entryPath(dir: Path, v: Long): Path = dir.resolve(f"$v%020d.json")
@@ -73,8 +73,8 @@ private[lake] object PolicyLog {
   }
 
   /** OCC read-modify-write: `transform` sees nothing (it re-reads its
-    * own current state) and returns the next entry's content; EEXIST on
-    * the link means another mutator won version N+1 — loop so the
+    * own current state) and returns the next entry's content; a lost
+    * create means another mutator won version N+1 — loop so the
     * transform reapplies over THEIR state and no update is ever lost
     * (the [[LakeLog.commitWithRetry]] discipline, scoped to policy
     * metadata). */
@@ -84,32 +84,11 @@ private[lake] object PolicyLog {
     while (true) {
       attempts += 1
       val base = currentVersion(dir)
-      val content = transform()
-      val staged = Files.createTempFile(dir, ".staged", ".json")
-      try {
-        Files.writeString(staged, content)
-        try {
-          try Files.createLink(entryPath(dir, base + 1), staged)
-          catch {
-            case e: java.nio.file.FileAlreadyExistsException => throw e
-            case _: UnsupportedOperationException
-                 | _: java.nio.file.FileSystemException =>
-              // linkless filesystem fallback (single-process-safe there,
-              // same caveat as LakeLog.writeEntry)
-              val target = entryPath(dir, base + 1)
-              if (Files.exists(target))
-                throw new java.nio.file.FileAlreadyExistsException(
-                  target.toString)
-              Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-          }
-          return
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            if (attempts >= 100)
-              throw new LakeValidationException(
-                s"$what: lost $attempts OCC races in a row — giving up")
-        }
-      } finally Files.deleteIfExists(staged)
+      if (LakeLog.createIfAbsent(entryPath(dir, base + 1), transform()))
+        return
+      if (attempts >= 100)
+        throw new LakeValidationException(
+          s"$what: lost $attempts OCC races in a row — giving up")
     }
   }
 

@@ -171,18 +171,16 @@ object MaterializedView {
   /** Persist the view definition beside its backing table so the
     * SQL/REST faces can refresh by NAME (`_mvdef.json` in the MV's
     * table dir — versionless metadata like `_wap`, not snapshot
-    * state). */
+    * state). An atomic replace: a crash mid-write never tears it. */
   def saveDef(log: LakeLog, d: MvDef): Unit = {
-    val p = log.tableDir(d.name).resolve("_mvdef.json")
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, mapper.writeValueAsString(d))
+    java.nio.file.Files.createDirectories(log.tableDir(d.name))
+    LakeLog.replace(log.tableDir(d.name).resolve("_mvdef.json"),
+      mapper.writeValueAsString(d))
   }
 
-  def loadDef(log: LakeLog, name: String): Option[MvDef] = {
-    val p = log.tableDir(name).resolve("_mvdef.json")
-    if (!java.nio.file.Files.exists(p)) None
-    else Some(mapper.readValue[MvDef](java.nio.file.Files.readString(p)))
-  }
+  def loadDef(log: LakeLog, name: String): Option[MvDef] =
+    LakeLog.readIfExists(log.tableDir(name).resolve("_mvdef.json"))
+      .map(mapper.readValue[MvDef](_))
 
   /** The highest base version already folded into the MV, parsed from the
     * MV log's refresh txn ids (0 = never refreshed). */

@@ -1,13 +1,12 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.annotation.JsonInclude
-import com.fasterxml.jackson.databind.json.JsonMapper
-import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import LakeLog.mapper
 
 /** Cross-table atomic transactions, layered over per-table [[Wap]]
   * staging and one catalog-level decision record — the move Iceberg
@@ -22,8 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     (real data files, invisible to main-line readers; wap id = the
   *     txn id, one per table).
   *  2. DECIDE — `commit` validates every participant is staged, then
-  *     creates `_txns/<id>.json` with the same create-if-absent link(2)
-  *     commit point as log entries. THE EXISTENCE OF THIS FILE is the
+  *     creates `_txns/<id>.json` through [[LakeLog.createIfAbsent]], the
+  *     log entries' commit point. THE EXISTENCE OF THIS FILE is the
   *     transaction's atomic yes: before it, recovery aborts the stage;
   *     after it, recovery rolls the publish forward. Two coordinators
   *     racing the same id get one winner.
@@ -62,11 +61,6 @@ object MultiTxn {
     def versionMap: Map[String, Long] =
       versions.getOrElse(Nil).map(tv => tv.table -> tv.version).toMap
   }
-
-  private val mapper = JsonMapper.builder()
-    .addModule(DefaultScalaModule)
-    .serializationInclusion(JsonInclude.Include.NON_ABSENT)
-    .build() :: ClassTagExtensions
 
   private def txnsDir(log: LakeLog): Path = log.root.resolve("_txns")
   private def intentPath(log: LakeLog, id: String): Path =
@@ -220,39 +214,19 @@ object MultiTxn {
     }
   }
 
+  // a racing driver can retire the intent as it is read (None) —
+  // rollForward's done-record fallback covers it
   private def readRec(p: Path): Option[TxnRecord] =
-    try {
-      if (!Files.exists(p)) None
-      else Some(mapper.readValue[TxnRecord](Files.readString(p)))
-    } catch {
-      // a racing driver can retire the intent between the exists check
-      // and the read — rollForward's done-record fallback covers it
-      case _: java.nio.file.NoSuchFileException => None
-    }
+    LakeLog.readIfExists(p).map(mapper.readValue[TxnRecord](_))
 
-  /** Atomic create-if-absent (link(2), rename fallback): returns None if
-    * this call created the file, Some(existing record) if it lost the
-    * race — the caller reads the winner's decision. */
+  /** Create-if-absent: None if this call created the file, Some(existing
+    * record) if it lost the race — the caller reads the winner's
+    * decision. */
   private def writeCreateIfAbsent(target: Path, rec: TxnRecord)
       : Option[TxnRecord] = {
     Files.createDirectories(target.getParent)
-    val staged = Files.createTempFile(target.getParent, ".staged", ".json")
-    Files.writeString(staged, mapper.writeValueAsString(rec))
-    try {
-      try { Files.createLink(target, staged); None }
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException => throw e
-        case _: UnsupportedOperationException
-             | _: java.nio.file.FileSystemException =>
-          if (Files.exists(target))
-            throw new java.nio.file.FileAlreadyExistsException(target.toString)
-          Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-          None
-      }
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Some(readRec(target).getOrElse(throw new LakeValidationException(
-          s"torn txn record at $target")))
-    } finally Files.deleteIfExists(staged)
+    if (LakeLog.createIfAbsent(target, mapper.writeValueAsString(rec))) None
+    else Some(readRec(target).getOrElse(throw new LakeValidationException(
+      s"torn txn record at $target")))
   }
 }

@@ -1,12 +1,10 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.annotation.JsonInclude
-import com.fasterxml.jackson.databind.json.JsonMapper
-import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
+import LakeLog.mapper
 
 /** Named refs over table versions — Iceberg-style TAGS and BRANCHES for
   * the lake's version line. A TAG is an immutable named snapshot
@@ -24,14 +22,14 @@ import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModul
   * lightweight refs.
   *
   * Storage: one JSON file per ref under `tables/<t>/_refs/`. CREATION
-  * uses the same create-if-absent link(2) commit point as the log's
-  * version entries — two processes racing the same name get one winner
-  * and one clean conflict, never a silent overwrite. Tag MUTATION is
-  * forbidden by construction (create fails on an existing name); branch
-  * moves replace the file atomically (rename(2) — replacement is the
-  * point for a mutable ref). VACUUM safety: refs pin VERSIONS, so
-  * version-retention policies keep every ref-pinned version's files
-  * ([[LakeTable.vacuum]] takes the floor over [[pinnedVersions]]).
+  * goes through [[LakeLog.createIfAbsent]], the log entries' commit
+  * point — two processes racing the same name get one winner and one
+  * clean conflict, never a silent overwrite. Tag MUTATION is forbidden
+  * by construction (create fails on an existing name); branch moves are
+  * a [[LakeLog.replace]] (replacement is the point for a mutable ref).
+  * VACUUM safety: refs pin VERSIONS, so version-retention policies keep
+  * every ref-pinned version's files ([[LakeTable.vacuum]] takes the floor
+  * over [[pinnedVersions]]).
   */
 object Refs {
 
@@ -40,11 +38,6 @@ object Refs {
 
   val Tag = "tag"
   val Branch = "branch"
-
-  private val mapper = JsonMapper.builder()
-    .addModule(DefaultScalaModule)
-    .serializationInclusion(JsonInclude.Include.NON_ABSENT)
-    .build() :: ClassTagExtensions
 
   private val NameRe = "^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$".r
 
@@ -80,31 +73,13 @@ object Refs {
   private def createRef(log: LakeLog, table: String, name: String,
                         version: Long, kind: String): TableRef = {
     validate(log, table, name, version)
-    val dir = refsDir(log, table)
-    Files.createDirectories(dir)
+    Files.createDirectories(refsDir(log, table))
     val ref = TableRef(name, version, System.currentTimeMillis(), kind)
-    val staged = Files.createTempFile(dir, ".staged", ".json")
-    Files.writeString(staged, mapper.writeValueAsString(ref))
-    val target = refPath(log, table, name)
-    // same atomic create-if-absent commit point as LakeLog.writeEntry:
-    // link(2) fails with EEXIST atomically across processes; the rename
-    // fallback covers linkless filesystems (single-process-safe there)
-    try
-      try Files.createLink(target, staged)
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException => throw e
-        case _: UnsupportedOperationException
-             | _: java.nio.file.FileSystemException =>
-          if (Files.exists(target))
-            throw new java.nio.file.FileAlreadyExistsException(target.toString)
-          Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-      }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new LakeValidationException(
-          s"ref '$name' already exists on $table (tags are immutable; " +
-            "move a branch with moveBranch, or drop the ref first)")
-    } finally Files.deleteIfExists(staged)
+    if (!LakeLog.createIfAbsent(refPath(log, table, name),
+        mapper.writeValueAsString(ref)))
+      throw new LakeValidationException(
+        s"ref '$name' already exists on $table (tags are immutable; " +
+          "move a branch with moveBranch, or drop the ref first)")
     ref
   }
 
@@ -119,21 +94,15 @@ object Refs {
         s"'$name' on $table is a tag — tags are immutable (drop and " +
           "re-create, or use a branch for a movable pointer)")
     validate(log, table, name, version)
-    val dir = refsDir(log, table)
     val ref = TableRef(name, version, System.currentTimeMillis(), Branch)
-    val staged = Files.createTempFile(dir, ".staged", ".json")
-    Files.writeString(staged, mapper.writeValueAsString(ref))
-    Files.move(staged, refPath(log, table, name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    LakeLog.replace(refPath(log, table, name), mapper.writeValueAsString(ref))
     ref
   }
 
   /** Resolve a ref name to its pinned version. */
-  def resolve(log: LakeLog, table: String, name: String): Option[TableRef] = {
-    val p = refPath(log, table, name)
-    if (!Files.exists(p)) None
-    else Some(mapper.readValue[TableRef](Files.readString(p)))
-  }
+  def resolve(log: LakeLog, table: String, name: String): Option[TableRef] =
+    LakeLog.readIfExists(refPath(log, table, name))
+      .map(mapper.readValue[TableRef](_))
 
   /** Resolve or fail loudly — the read-path entry point. */
   def resolveOrThrow(log: LakeLog, table: String, name: String): TableRef =

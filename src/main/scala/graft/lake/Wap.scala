@@ -1,13 +1,12 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.annotation.JsonInclude
-import com.fasterxml.jackson.databind.json.JsonMapper
-import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import LakeLog.mapper
 
 /** Write-audit-publish — Iceberg's WAP pattern (`spark.wap.id` staged
   * snapshots) for the lake: a new batch lands as REAL data files with
@@ -21,9 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - `stage` writes files through the same promote+stat path as
   *    [[LakeTable.insert]] ([[LakeTable.stageFiles]]) and records them
-  *    in `tables/<t>/_wap/<wapId>.json` (create-if-absent, same crash-
-  *    safe commit point as log entries). Data is written ONCE: publish
-  *    adopts the staged files by path, no rewrite.
+  *    in `tables/<t>/_wap/<wapId>.json` through
+  *    [[LakeLog.createIfAbsent]], the log entries' commit point. Data is
+  *    written ONCE: publish adopts the staged files by path, no rewrite.
   *  - `readStaged` = the current snapshot PLUS the staged adds — the
   *    audit's view. Main readers ([[LakeTable.read]]) never see staged
   *    files because snapshots only list committed adds.
@@ -40,11 +39,6 @@ object Wap {
 
   final case class StagedBatch(wap_id: String, base_version: Long,
                                created_ms: Long, adds: Seq[FileAdd])
-
-  private val mapper = JsonMapper.builder()
-    .addModule(DefaultScalaModule)
-    .serializationInclusion(JsonInclude.Include.NON_ABSENT)
-    .build() :: ClassTagExtensions
 
   private def wapDir(log: LakeLog, table: String): Path =
     log.tableDir(table).resolve("_wap")
@@ -69,44 +63,24 @@ object Wap {
       txnId = s"wap-$wapId", numFiles = numFiles)
     val batch = StagedBatch(wapId, log.latestVersion(table),
       System.currentTimeMillis(), adds)
-    val dir = wapDir(log, table)
-    Files.createDirectories(dir)
-    val staged = Files.createTempFile(dir, ".staged", ".json")
-    Files.writeString(staged, mapper.writeValueAsString(batch))
-    val target = wapPath(log, table, wapId)
-    try
-      try Files.createLink(target, staged)
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException => throw e
-        case _: UnsupportedOperationException
-             | _: java.nio.file.FileSystemException =>
-          if (Files.exists(target))
-            throw new java.nio.file.FileAlreadyExistsException(target.toString)
-          Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-      }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // lost a concurrent stage race for the same id: our files are
-        // orphans, the winner's record stands
-        LakeTable.discardAdds(adds)
-        throw new LakeValidationException(
-          s"wap id '$wapId' is already staged on $table (publish or abort it)")
-    } finally Files.deleteIfExists(staged)
+    Files.createDirectories(wapDir(log, table))
+    if (!LakeLog.createIfAbsent(wapPath(log, table, wapId),
+        mapper.writeValueAsString(batch))) {
+      // lost a concurrent stage race for the same id: our files are
+      // orphans, the winner's record stands
+      LakeTable.discardAdds(adds)
+      throw new LakeValidationException(
+        s"wap id '$wapId' is already staged on $table (publish or abort it)")
+    }
     batch
   }
 
-  def staged(log: LakeLog, table: String, wapId: String): Option[StagedBatch] = {
-    val p = wapPath(log, table, wapId)
-    try {
-      if (!Files.exists(p)) None
-      else Some(mapper.readValue[StagedBatch](Files.readString(p)))
-    } catch {
-      // a concurrent publish/abort can retire the record between the
-      // exists check and the read — same answer as "not staged"; the
-      // caller's txn-map fallback resolves what happened to it
-      case _: java.nio.file.NoSuchFileException => None
-    }
-  }
+  /** The staged batch, None when not staged — also when a concurrent
+    * publish/abort retires the record as it is read; the caller's
+    * txn-map fallback resolves what happened to it. */
+  def staged(log: LakeLog, table: String, wapId: String): Option[StagedBatch] =
+    LakeLog.readIfExists(wapPath(log, table, wapId))
+      .map(mapper.readValue[StagedBatch](_))
 
   def listStaged(log: LakeLog, table: String): Seq[StagedBatch] = {
     val dir = wapDir(log, table)

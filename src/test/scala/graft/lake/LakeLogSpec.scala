@@ -186,4 +186,63 @@ class LakeLogSpec extends AnyFunSuite {
     assert(attempts == 2)
     assert(log.snapshot("t").files.map(_.path) == Seq("a", "b", "mine"))
   }
+
+  test("every metadata verb counts its attempt once and each replay as a " +
+      "duplicate") {
+    val log = newLog()
+    log.createTable("t", TableSchema(Seq(Field("id", "int64"),
+      Field("v", "float64"), Field("w", "string"))))
+    val verbs: Seq[(String, String => CommitResult)] = Seq(
+      "setConstraints" -> (tx =>
+        log.setConstraints("t", Map("pos" -> "id > 0"), tx)),
+      "setTableStats" -> (tx => log.setTableStats("t",
+        Map("__table" -> Map("row_count" -> "0")), tx)),
+      "renameColumn" -> (tx => log.renameColumn("t", "v", "value", tx)),
+      "dropColumn" -> (tx => log.dropColumn("t", "w", tx)))
+    verbs.foreach { case (name, verb) =>
+      val (attempts, dups) =
+        (log.commitAttempts.get(), log.commitDuplicates.get())
+      val first = verb(s"$name-tx")
+      assert(!first.duplicate, name)
+      assert(log.commitAttempts.get() == attempts + 1, name)
+      assert(log.commitDuplicates.get() == dups, name)
+      assert(verb(s"$name-tx") == CommitResult(first.version, duplicate = true),
+        name)
+      assert(log.commitAttempts.get() == attempts + 1, name)
+      assert(log.commitDuplicates.get() == dups + 1, name)
+    }
+  }
+
+  test("record formats: the shared mapper's JSON is byte-stable") {
+    import LakeLog.mapper
+    val entry = LogEntry(7, 1700000000123L, "txn-7", None,
+      Seq(FileAdd("/lake/tables/t/data/part-00000-a.parquet", 10, 1234,
+        Map("d" -> "2024-01-01"), Some(FileStats(Map("id" -> "1"),
+          Map("id" -> "10"), None, Some(Map("id" -> 0L)))))),
+      Seq("/lake/tables/t/data/old.parquet"))
+    assert(mapper.writeValueAsString(entry) ==
+      """{"version":7,"timestamp_ms":1700000000123,"txn_id":"txn-7",""" +
+      """"adds":[{"path":"/lake/tables/t/data/part-00000-a.parquet",""" +
+      """"rows":10,"size":1234,"partition":{"d":"2024-01-01"},""" +
+      """"stats":{"min_values":{"id":"1"},"max_values":{"id":"10"},""" +
+      """"null_counts":{"id":0}},"rewrite":false}],""" +
+      """"removes":["/lake/tables/t/data/old.parquet"]}""")
+    assert(mapper.writeValueAsString(Wap.StagedBatch("w1", 3,
+      1700000000456L, Seq(FileAdd("/x/p.parquet", 5, 99)))) ==
+      """{"wap_id":"w1","base_version":3,"created_ms":1700000000456,""" +
+      """"adds":[{"path":"/x/p.parquet","rows":5,"size":99,""" +
+      """"partition":{},"rewrite":false}]}""")
+    assert(mapper.writeValueAsString(
+      Refs.TableRef("prod", 4, 1700000000789L, Refs.Branch)) ==
+      """{"name":"prod","version":4,"created_ms":1700000000789,""" +
+      """"kind":"branch"}""")
+    assert(mapper.writeValueAsString(MultiTxn.TxnRecord("tx1",
+      Seq("a", "b"), 1700000000999L, Some(Seq(MultiTxn.TableVersion("a", 2),
+        MultiTxn.TableVersion("b", 5))))) ==
+      """{"txn_id":"tx1","tables":["a","b"],"created_ms":1700000000999,""" +
+      """"versions":[{"table":"a","version":2},{"table":"b","version":5}]}""")
+    assert(mapper.writeValueAsString(
+      MultiTxn.TxnRecord("tx2", Seq("a"), 1700000001000L)) ==
+      """{"txn_id":"tx2","tables":["a"],"created_ms":1700000001000}""")
+  }
 }
