@@ -547,7 +547,7 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     }
   }
 
-  private def schemaOf(snap: Snapshot): TableSchema =
+  private[lake] def schemaOf(snap: Snapshot): TableSchema =
     snap.schema.getOrElse(
       throw new LakeValidationException(s"table ${snap.table} has no schema"))
 
@@ -758,16 +758,21 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     }
 
   /** Shared guard for rename/drop: the column must exist, must not be a
-    * partition column (its name keys the log's partition maps and the
-    * hive directory layout), and must not be referenced by a CHECK
-    * constraint (constraint text holds logical names; rewriting arbitrary
-    * SQL safely is not worth the risk — drop the constraint first). */
-  private def mappableColumn(table: String, sch: TableSchema,
+    * partition column of the current spec or of any live file's map (its
+    * name keys the log's partition maps and the hive directory layout;
+    * readers take a column named in a file's map from that map, so a
+    * renamed or re-added one would read NULL or stale values), and must
+    * not be referenced by a CHECK constraint (constraint text holds
+    * logical names; rewriting arbitrary SQL safely is not worth the risk —
+    * drop the constraint first). */
+  private def mappableColumn(table: String, snap: Snapshot,
                              name: String): Field = {
+    val sch = schemaOf(snap)
     val f = sch.fields.find(_.name == name).getOrElse(
       throw new LakeValidationException(
         s"table $table has no column $name"))
-    if (sch.partCols.contains(name))
+    if (sch.partCols.contains(name) ||
+        snap.files.exists(_.partition.contains(name)))
       throw new LakeValidationException(
         s"cannot rename or drop partition column $name")
     if (sch.generated.contains(name))
@@ -799,7 +804,7 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
                    txnId: String): CommitResult =
     commitEntry(table, txnId, None) { snap =>
       val sch = schemaOf(snap)
-      val f = mappableColumn(table, sch, oldName)
+      val f = mappableColumn(table, snap, oldName)
       if (sch.fields.exists(_.name == newName))
         throw new LakeValidationException(
           s"table $table already has a column $newName")
@@ -823,7 +828,7 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
   def dropColumn(table: String, name: String, txnId: String): CommitResult =
     commitEntry(table, txnId, None) { snap =>
       val sch = schemaOf(snap)
-      val f = mappableColumn(table, sch, name)
+      val f = mappableColumn(table, snap, name)
       if (sch.fields.size == 1)
         throw new LakeValidationException(
           s"cannot drop the only column of $table")

@@ -4,7 +4,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Structured Streaming CDC source over a lake table — `readStream` tails
@@ -26,8 +27,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     restores) are layout changes and are never replayed, so a compaction
   *     storm over a 100 TB table streams zero rows;
   *   - one input partition per added file: a version that added 1000 files
-  *     fans out across the cluster, and partition-column values come from
-  *     the log (the data files are flat) with zero per-row decode cost.
+  *     fans out across the cluster. Each file's row rebuilds by the rule of
+  *     [[LakeTable.readFiles]]: a column in the file's OWN logged partition
+  *     map comes from that map (zero per-row decode cost), any other from
+  *     its bytes by physical name — so a stream runs across partition
+  *     evolution and column renames.
   *
   * Exactly-once composition: offsets are checkpointed by the engine, and
   * the lake sink ([[graft.streaming.Streams.sinkToLake]]) dedups replayed
@@ -72,9 +76,8 @@ final class LakeTableProvider extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    val (log, table) = logFor(opts)
-    val sch = log.snapshot(table).schema.get
-    new LakeStreamTable(opts.get("root"), table, schema, sch.partCols,
+    val (_, table) = logFor(opts)
+    new LakeStreamTable(opts.get("root"), table, schema,
       Option(opts.get("startingVersion")).map(_.toLong).getOrElse(0L),
       Option(opts.get("maxVersionsPerBatch")).map(_.toLong), isCdf(opts))
   }
@@ -82,7 +85,6 @@ final class LakeTableProvider extends TableProvider with DataSourceRegister {
 
 private final class LakeStreamTable(root: String, table: String,
                                     tableSchema: StructType,
-                                    partCols: Seq[String],
                                     startingVersion: Long,
                                     maxVersionsPerBatch: Option[Long],
                                     changeFeed: Boolean)
@@ -98,7 +100,7 @@ private final class LakeStreamTable(root: String, table: String,
       override def readSchema(): StructType = tableSchema
       override def toMicroBatchStream(checkpointLocation: String)
           : MicroBatchStream =
-        new LakeMicroBatchStream(root, table, tableSchema, partCols,
+        new LakeMicroBatchStream(root, table, tableSchema,
           startingVersion, maxVersionsPerBatch, changeFeed)
     }
 }
@@ -111,7 +113,6 @@ final case class LakeOffset(version: Long) extends Offset {
 
 private final class LakeMicroBatchStream(root: String, table: String,
                                          schema: StructType,
-                                         partCols: Seq[String],
                                          startingVersion: Long,
                                          maxVersionsPerBatch: Option[Long],
                                          changeFeed: Boolean = false)
@@ -119,23 +120,19 @@ private final class LakeMicroBatchStream(root: String, table: String,
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
 
   private val log = new LakeLog(java.nio.file.Paths.get(root))
-  // columns physically present in data files: declared schema minus
-  // partition columns (log-carried) minus the synthetic _change_type
-  private val physical = StructType(schema.fields.filterNot(f =>
+  // the declared columns minus the synthetic _change_type
+  private val declared = StructType(schema.fields.filterNot(f =>
     changeFeed && f.name == "_change_type"))
-  private val partSchema = StructType(partCols.map(c => physical(c)))
-  private val dataSchema =
-    StructType(physical.fields.filterNot(f => partCols.contains(f.name)))
-  // the FILE-side twin of dataSchema under column mapping: parquet matches
-  // columns by name, and files carry PHYSICAL names (immutable across
-  // renames, so a stream running across a RENAME COLUMN keeps reading the
-  // right bytes). Same field order and types — rows stay positionally
-  // identical, so the logical projection in the reader factory is
-  // untouched.
-  private val physDataSchema = {
-    val sch = log.snapshot(table).schema.getOrElse(
-      throw new LakeValidationException(s"table $table has no schema"))
-    StructType(dataSchema.fields.map(f => f.copy(name = sch.physFor(f.name))))
+  // the FILE-side twin of `declared`: parquet matches columns by name, and
+  // files carry PHYSICAL names (immutable across renames, so a stream
+  // running across a RENAME COLUMN keeps reading the right bytes). Same
+  // field order and types, all nullable — a column a file lacks (its own
+  // partition columns) reads as NULL and the reader takes it from the
+  // file's map.
+  private val physSchema = {
+    val sch = log.schemaOf(log.snapshot(table))
+    StructType(declared.fields.map(f =>
+      f.copy(name = sch.physFor(f.name), nullable = true)))
   }
 
   override def initialOffset(): Offset = LakeOffset(startingVersion)
@@ -175,15 +172,15 @@ private final class LakeMicroBatchStream(root: String, table: String,
       return versions
         .flatMap(v => log.readEntry(table, v).adds)
         .filterNot(_.rewrite)
-        .map(f => LakeInputPartition(f.path, f.size,
-          partCols.map(f.partition(_)).toArray): InputPartition)
+        .map(f => LakeInputPartition(f.path, f.size, f.partition)
+          : InputPartition)
         .toArray
     // change-feed mode: classify each version from the log alone
     versions.flatMap { v =>
       val e = log.readEntry(table, v)
       if (e.removes.isEmpty && e.adds.forall(!_.rewrite))
-        e.adds.map(f => LakeInputPartition(f.path, f.size,
-          partCols.map(f.partition(_)).toArray, changeType = "insert"))
+        e.adds.map(f => LakeInputPartition(f.path, f.size, f.partition,
+          changeType = "insert"))
       else if (LakeTable.isDvDeltaEntry(log, table, e)) {
         // one delete partition per re-added file: its rows at (new dv
         // positions ∖ prior dv positions)
@@ -192,8 +189,8 @@ private final class LakeMicroBatchStream(root: String, table: String,
         e.adds.map { a =>
           val dv = a.dv.get
           val pdv = prior(a.path).dv
-          LakeInputPartition(a.path, a.size,
-            partCols.map(a.partition(_)).toArray, changeType = "delete",
+          LakeInputPartition(a.path, a.size, a.partition,
+            changeType = "delete",
             dvPath = dv.path, dvSize = fileSize(dv.path),
             priorDvPath = pdv.map(_.path).orNull,
             priorDvSize = pdv.map(p => fileSize(p.path)).getOrElse(0L))
@@ -225,9 +222,9 @@ private final class LakeMicroBatchStream(root: String, table: String,
           spark.conf.set(key, "false")
           val data = new ParquetFileFormat().buildReaderWithPartitionValues(
             sparkSession = spark,
-            dataSchema = physDataSchema,
-            partitionSchema = partSchema,
-            requiredSchema = physDataSchema,
+            dataSchema = physSchema,
+            partitionSchema = StructType(Nil),
+            requiredSchema = physSchema,
             filters = Nil,
             options = Map.empty,
             hadoopConf = spark.sessionState.newHadoopConf())
@@ -247,8 +244,7 @@ private final class LakeMicroBatchStream(root: String, table: String,
           case None => spark.conf.unset(key)
         }
       }
-    new LakeReaderFactory(readFn, physical, dataSchema, partSchema,
-      changeFeed, dvReadFn)
+    new LakeReaderFactory(readFn, declared, changeFeed, dvReadFn)
   }
 }
 
@@ -259,7 +255,7 @@ private object LakeMicroBatchStream {
 }
 
 private final case class LakeInputPartition(path: String, size: Long,
-                                            partValues: Array[String],
+                                            partition: Map[String, String],
                                             changeType: String = "insert",
                                             dvPath: String = null,
                                             dvSize: Long = 0L,
@@ -267,16 +263,16 @@ private final case class LakeInputPartition(path: String, size: Long,
                                             priorDvSize: Long = 0L)
     extends InputPartition
 
-/** Reads one flat data file and projects `dataCols ++ partCols` back into
-  * the table's declared column order (+ the `_change_type` literal in
+/** Reads one data file's declared columns by physical name and projects
+  * them in declared order, each column in the file's own partition map
+  * replaced by that map's literal (+ the `_change_type` literal in
   * change-feed mode). Delete partitions read the file's DV sidecars
   * executor-side, build the position delta (new ∖ prior) in memory —
   * bounded by the file's deleted-row count — and emit only the rows the
   * delete punched out, by running row index. */
 private final class LakeReaderFactory(
     readFn: PartitionedFile => Iterator[InternalRow],
-    schema: StructType, dataSchema: StructType, partSchema: StructType,
-    changeFeed: Boolean = false,
+    schema: StructType, changeFeed: Boolean = false,
     dvReadFn: Option[PartitionedFile => Iterator[InternalRow]] = None)
     extends PartitionReaderFactory {
 
@@ -284,9 +280,7 @@ private final class LakeReaderFactory(
                           path: String, size: Long,
                           forBase: String): java.util.HashSet[Long] = {
     val out = new java.util.HashSet[Long]()
-    val emptyPart = PartitionValues.internalRow(IndexedSeq.empty,
-      StructType(Nil))
-    val it = fn(PartitionedFile(emptyPart,
+    val it = fn(PartitionedFile(InternalRow.empty,
       SparkPath.fromPathString("file://" + path), 0, size))
     while (it.hasNext) {
       val r = it.next()
@@ -297,19 +291,17 @@ private final class LakeReaderFactory(
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val lp = p.asInstanceOf[LakeInputPartition]
-    val partRow = PartitionValues.internalRow(
-      lp.partValues.toIndexedSeq, partSchema)
-    val file = PartitionedFile(partRow,
+    val file = PartitionedFile(InternalRow.empty,
       SparkPath.fromPathString("file://" + lp.path), 0, lp.size)
-    val produced = dataSchema.fields ++ partSchema.fields
-    val columns: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-      schema.fields.toSeq.map { f =>
-        val i = produced.indexWhere(_.name == f.name)
-        BoundReference(i, produced(i).dataType, nullable = true)
+    val columns: Seq[Expression] =
+      schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        lp.partition.get(f.name) match {
+          case Some(v) =>
+            Literal(PartitionValues.internalValue(v, f.dataType), f.dataType)
+          case None => BoundReference(i, f.dataType, nullable = true)
+        }
       } ++ (if (changeFeed)
-        Seq(org.apache.spark.sql.catalyst.expressions.Literal(
-          org.apache.spark.unsafe.types.UTF8String.fromString(lp.changeType),
-          org.apache.spark.sql.types.StringType))
+        Seq(Literal(UTF8String.fromString(lp.changeType), StringType))
       else Nil)
     val projection = UnsafeProjection.create(columns)
     val raw = readFn(file)

@@ -150,7 +150,7 @@ object LakeTable {
     * two seams below are the whole mapping layer: [[physStruct]] turns a
     * logical struct into the on-file shape and [[toPhys]] renames an
     * outgoing frame at the write boundary. Reads alias physical → logical
-    * inside [[readFlat]] and [[indexedScan]]; a predicate consulted against
+    * inside [[readFiles]] and [[indexedScan]]; a predicate consulted against
     * file stats resolves through the latter's aliases
     * ([[candidateFiles]]). Both are identity for tables that never renamed
     * a column. */
@@ -170,11 +170,6 @@ object LakeTable {
     * partition columns (those live only in the log's partition map). */
   private def dataStruct(st: StructType, partCols: Seq[String]): StructType =
     StructType(st.fields.filterNot(f => partCols.contains(f.name)))
-
-  /** Parse a partition-directory value string back to the column's external
-    * Spark value (for reconstructing partition columns on read). */
-  private def partLit(value: String, dt: DataType): Column =
-    lit(value).cast(dt)
 
   /** Basename of a data file path. DV sidecars key positions by basename:
     * promotion names embed a fresh UUID so basenames are unique within a
@@ -196,72 +191,75 @@ object LakeTable {
     * anti-join, it just signals the file wants compaction. */
   private val DvBroadcastMaxPositions = 4L * 1000 * 1000
 
-  /** Read a set of FLAT data files applying any deletion vectors: plain
-    * files scan as-is; DV'd files scan with the parquet row index exposed
-    * (`_metadata.row_index`) and anti-join their positions-only sidecars —
-    * broadcast while small, so the data side never shuffles. */
-  private[lake] def readFlat(spark: SparkSession, sch: TableSchema,
-                       dataSt: StructType,
-                       files: Seq[FileAdd]): DataFrame = {
-    // files carry PHYSICAL column names; alias back to logical on exit
-    val pSt = physStruct(dataSt, sch)
-    def logical(df: DataFrame): DataFrame =
-      if (!sch.hasMapping) df
-      else df.select(dataSt.fieldNames.toSeq.map(n =>
-        col(sch.physFor(n)).as(n)): _*)
-    val (dvd, plain) = files.partition(_.dvRows > 0)
-    val plainDf =
-      if (plain.isEmpty) None
-      else Some(logical(
-        spark.read.schema(pSt).parquet(plain.map(_.path): _*)))
-    val dvdDf =
-      if (dvd.isEmpty) None
-      else {
-        val base = spark.read.schema(pSt).parquet(dvd.map(_.path): _*)
-          .withColumn("__file",
+  /** The one reader of lake data files: `files` → rows of `sch`, logical
+    * names in declared order. Every by-path read goes through here, so one
+    * rule decides how a file's bytes become rows:
+    *   - files sharing a partition map read as one scan; each file's OWN
+    *     logged map supplies its partition columns as literals
+    *     (constant-folded — zero per-row cost), never the table's current
+    *     spec, because under partition evolution
+    *     ([[LakeLog.alterPartitioning]]) one snapshot mixes layouts and a
+    *     file's bytes hold exactly (schema minus ITS OWN map's keys);
+    *   - every other column reads by PHYSICAL name (see [[physStruct]]),
+    *     aliased to its logical name;
+    *   - deletion vectors are subtracted: DV'd files scan with the parquet
+    *     row index exposed (`_metadata.row_index`) and anti-join their
+    *     positions-only sidecars — broadcast while small, so the data side
+    *     never shuffles.
+    * With `rowIds` the DVs are NOT subtracted: every raw row comes back
+    * with its `__file` (basename, the DV key) and `__pos` (row index) —
+    * the position scans of [[deleteWhereMor]] and [[dvDeletedRows]].
+    * High-partition-count interactive reads prefer [[readIndexed]], which
+    * exposes partition columns through the `FileIndex` instead of a union.
+    */
+  private[lake] def readFiles(spark: SparkSession, sch: TableSchema,
+                              files: Seq[FileAdd],
+                              rowIds: Boolean = false): DataFrame = {
+    val st = toStructType(sch)
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        if (!rowIds) st
+        else st.add("__file", StringType, nullable = false)
+          .add("__pos", LongType, nullable = false))
+    files.groupBy(_.partition).toSeq.flatMap { case (pmap, group) =>
+      val pSt = physStruct(dataStruct(st, pmap.keys.toSeq), sch)
+      def scan(fs: Seq[FileAdd], withIds: Boolean): DataFrame = {
+        val raw = spark.read.schema(pSt).parquet(fs.map(_.path): _*)
+        if (!withIds) raw
+        else raw.withColumn("__file",
             element_at(split(col("_metadata.file_path"), "/"), -1))
           .withColumn("__pos", col("_metadata.row_index"))
-        val dvPaths = dvd.flatMap(_.dv.map(_.path)).distinct
-        val names = dvd.map(f => baseName(f.path))
-        // one sidecar can serve several files — restrict to THIS file set
-        val dv0 = spark.read.schema(DvSchema).parquet(dvPaths: _*)
-          .filter(col("file").isin(names: _*))
-        val dvDf =
-          if (dvd.map(_.dvRows).sum <= DvBroadcastMaxPositions) broadcast(dv0)
-          else dv0
-        Some(logical(base.join(dvDf,
-            base("__file") === dvDf("file") && base("__pos") === dvDf("pos"),
-            "left_anti")
-          .drop("__file", "__pos")))
       }
-    (plainDf.toSeq ++ dvdDf.toSeq).reduce(_ unionAll _)
-  }
-
-  /** Reconstruct full-schema rows from flat data files + their log-carried
-    * partition values: one scan per distinct partition value, partition
-    * columns re-attached as literals (constant-folded — zero per-row cost),
-    * then unioned. Fine for maintenance paths; high-partition-count
-    * interactive reads should use [[readIndexed]], which exposes the
-    * partition columns through the `FileIndex` instead of a union.
-    *
-    * SPEC-AWARE: each file reattaches its OWN logged partition map, not
-    * the table's current spec — under partition evolution
-    * ([[LakeLog.alterPartitioning]]) one snapshot legitimately mixes
-    * layouts, and a file's physical columns are exactly (schema minus
-    * ITS OWN partition keys). The `partCols` parameter is gone for that
-    * reason: the truth is per-file.
-    */
-  private[lake] def readWithPartitions(spark: SparkSession, sch: TableSchema,
-                                 st: StructType,
-                                 files: Seq[FileAdd]): DataFrame = {
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
-    files.groupBy(_.partition).map { case (pmap, group) =>
-      val gCols = st.fieldNames.toSeq.filter(pmap.contains)
-      val base = readFlat(spark, sch, dataStruct(st, gCols), group)
-      val withParts = gCols.foldLeft(base) { case (df, c) =>
-        df.withColumn(c, partLit(pmap(c), st(c).dataType)) }
-      withParts.select(st.fieldNames.toSeq.map(col): _*)
+      // physical scan → declared logical rows (identity, so no projection,
+      // for a flat group of a table that never renamed a column)
+      def rows(df: DataFrame): DataFrame =
+        if (pmap.isEmpty && !sch.hasMapping) df
+        else df.select(st.fields.toSeq.map(f => pmap.get(f.name) match {
+          case Some(v) => lit(v).cast(f.dataType).as(f.name)
+          case None => col(sch.physFor(f.name)).as(f.name)
+        }) ++ (if (rowIds) Seq(col("__file"), col("__pos")) else Nil): _*)
+      if (rowIds) Seq(rows(scan(group, withIds = true)))
+      else {
+        val (dvd, plain) = group.partition(_.dvRows > 0)
+        val live = if (dvd.isEmpty) None else Some {
+          val base = scan(dvd, withIds = true)
+          val dvPaths = dvd.flatMap(_.dv.map(_.path)).distinct
+          val names = dvd.map(f => baseName(f.path))
+          // one sidecar can serve several files — restrict to THIS file set
+          val dv0 = spark.read.schema(DvSchema).parquet(dvPaths: _*)
+            .filter(col("file").isin(names: _*))
+          val dvDf =
+            if (dvd.map(_.dvRows).sum <= DvBroadcastMaxPositions)
+              broadcast(dv0)
+            else dv0
+          rows(base.join(dvDf,
+              base("__file") === dvDf("file") && base("__pos") === dvDf("pos"),
+              "left_anti")
+            .drop("__file", "__pos"))
+        }
+        (if (plain.isEmpty) None
+         else Some(rows(scan(plain, withIds = false)))).toSeq ++ live
+      }
     }.reduce(_ unionAll _)
   }
 
@@ -272,19 +270,7 @@ object LakeTable {
   def read(spark: SparkSession, log: LakeLog, table: String,
            version: Long = 0L): DataFrame = {
     val snap = log.snapshot(table, version)
-    val sch = snap.schema.getOrElse(
-      throw new LakeValidationException(s"table $table has no schema"))
-    val st = toStructType(sch)
-    if (snap.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
-    // Dispatch on the FILES, not just the current spec: after partition
-    // evolution back to flat (SET PARTITIONED BY ()), legacy files still
-    // carry log-side partition values their physical bytes lack — readFlat
-    // would fill those columns with NULL. readWithPartitions reattaches
-    // each file's OWN partition map, so it is correct for any mix.
-    else if (sch.partCols.nonEmpty || snap.files.exists(_.partition.nonEmpty))
-      readWithPartitions(spark, sch, st, snap.files)
-    else readFlat(spark, sch, st, snap.files)
+    readFiles(spark, log.schemaOf(snap), snap.files)
   }
 
   /** Catalyst-integrated read: the returned DataFrame prunes files by log
@@ -297,30 +283,25 @@ object LakeTable {
   def readIndexed(spark: SparkSession, log: LakeLog, table: String,
                   version: Long = 0L): DataFrame = {
     val snap = log.snapshot(table, version)
-    val sch = snap.schema.getOrElse(
-      throw new LakeValidationException(s"table $table has no schema"))
-    val st = toStructType(sch)
-    if (snap.files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
+    val sch = log.schemaOf(snap)
     // DV'd files can't ride the FileIndex (their read is an anti-join, not
-    // a scan): they union in via the maintenance read path and rejoin the
-    // stat-pruned fast path when compaction materializes their DVs. The
-    // untouched majority of a big table keeps full planning-time pruning.
+    // a scan): they union in via [[readFiles]] and rejoin the stat-pruned
+    // fast path when compaction materializes their DVs. The untouched
+    // majority of a big table keeps full planning-time pruning.
     // LEGACY-SPEC files (written before an alterPartitioning) take the
     // same detour: the FileIndex speaks one partition schema — the
     // current spec — and a legacy file's physical columns differ; its
     // partition values reattach as per-group literals instead (filters
     // on them still constant-fold group-wise at planning time).
     val curSpec = sch.partCols.toSet
-    val (specFiles, legacy) = snap.files.partition(
-      _.partition.keySet == curSpec)
-    val (dvd0, plain) = specFiles.partition(_.dvRows > 0)
-    val dvd = dvd0 ++ legacy
-    if (plain.isEmpty)
-      return readWithPartitions(spark, sch, st, dvd)
-    val indexed = indexedScan(spark, snap.copy(files = plain), sch)
-    if (dvd.isEmpty) indexed
-    else indexed.unionAll(readWithPartitions(spark, sch, st, dvd))
+    val (plain, detour) = snap.files.partition(f =>
+      f.dvRows == 0 && f.partition.keySet == curSpec)
+    if (plain.isEmpty) readFiles(spark, sch, detour)
+    else {
+      val indexed = indexedScan(spark, snap.copy(files = plain), sch)
+      if (detour.isEmpty) indexed
+      else indexed.unionAll(readFiles(spark, sch, detour))
+    }
   }
 
   /** The scan [[readIndexed]] plans over `snap`'s files: a
@@ -978,14 +959,14 @@ object LakeTable {
       groups.map { group =>
         val txnId = s"compact-${UUID.randomUUID().toString}"
         val stageGroup = () => {
-          // the group shares one partition value vector: merge the flat
-          // data files (minus any DV'd positions — a compacted file
-          // materializes its deletes) and carry the partition map through
-          // to the new FileAdd. Physical layout follows the GROUP's spec,
-          // not the current one
+          // the group shares one partition map: merge its rows (minus any
+          // DV'd positions — a compacted file materializes its deletes)
+          // without the map's columns, and carry the map through to the
+          // new FileAdd. Physical layout follows the GROUP's spec, not the
+          // current one
           val gPartCols = st.fieldNames.toSeq
             .filter(group.head.partition.contains)
-          val merged = readFlat(spark, sch, dataStruct(st, gPartCols), group)
+          val merged = readFiles(spark, sch, group).drop(gPartCols: _*)
           // partition columns are constant within a group — drop them from
           // the z-order key (they're not in the data files either)
           val zCols = cfg.zOrderBy.filterNot(gPartCols.contains)
@@ -1026,7 +1007,6 @@ object LakeTable {
       return DeleteReport(0, 0, 0, v))
     val snap = log.snapshot(table)
     val sch = snap.schema.get
-    val st = toStructType(sch)
     val pred = QueryEngine.parsePredicate(predicate)
     val candidates = candidateFiles(spark, snap, pred)
     if (candidates.isEmpty)
@@ -1037,7 +1017,7 @@ object LakeTable {
     // predicate keeps the row, so retain !coalesce(pred, false), not !pred.
     // Partitioned tables reconstruct partition columns before evaluating
     // (the predicate may reference them) and re-split on write.
-    val retained = readWithPartitions(spark, sch, st, candidates)
+    val retained = readFiles(spark, sch, candidates)
       .filter(!coalesce(pred, lit(false)))
     val adds = stage(spark, log, table, sch)(
       retained.coalesce(math.max(1, candidates.size)), txnId, rewrite = true)
@@ -1103,7 +1083,7 @@ object LakeTable {
     // leaves the row unchanged (the dual of deleteWhere's retain rule)
     val hit = coalesce(pred, lit(false))
     val setFor = sets.toMap
-    val src = readWithPartitions(spark, sch, st, candidates)
+    val src = readFiles(spark, sch, candidates)
     val updated = src.select(st.fields.map { f =>
       setFor.get(f.name) match {
         case Some(e) =>
@@ -1290,7 +1270,6 @@ object LakeTable {
       return ReplaceReport(0, 0, 0, 0, v))
     val snap = log.snapshot(table)
     val sch = snap.schema.get
-    val st = toStructType(sch)
     val pred = QueryEngine.parsePredicate(predicate)
     // persisted: the violation count, checks and the staged write must
     // execute the caller's upstream query once, not three times
@@ -1318,7 +1297,7 @@ object LakeTable {
           () => if (candidates.nonEmpty) {
             // NULL predicate keeps the row (same rule as SQL DELETE):
             // replaced = pred IS TRUE, survivors = everything else
-            val retained = readWithPartitions(spark, sch, st, candidates)
+            val retained = readFiles(spark, sch, candidates)
               .filter(!coalesce(pred, lit(false)))
             keepAdds = stage(spark, log, table, sch)(
               retained.coalesce(math.max(1, candidates.size)),
@@ -1370,8 +1349,6 @@ object LakeTable {
       return MorDeleteReport(0, 0, 0, 0, v))
     val snap = log.snapshot(table)
     val sch = snap.schema.get
-    val st = toStructType(sch)
-    val partCols = sch.partCols
     // DV positions key by basename (see baseName) — refuse, rather than
     // silently corrupt, the pathological table with colliding names
     val allNames = snap.files.map(f => baseName(f.path))
@@ -1383,26 +1360,13 @@ object LakeTable {
     val candidates = candidateFiles(spark, snap, pred)
     if (candidates.isEmpty)
       return MorDeleteReport(0, 0, snap.files.size, 0, snap.version)
-    val dataSt = dataStruct(st, partCols)
-    // matching positions, partition-aware (the predicate may reference
+    // matching positions over whole rows (the predicate may reference
     // partition columns, which live only in the log). The scan reads RAW
     // files including already-deleted positions — re-matching a dead row
     // is harmless (the union below is a set).
-    val newPos = candidates.groupBy(f => partCols.map(f.partition(_)))
-      .map { case (vals, group) =>
-        val base = spark.read.schema(physStruct(dataSt, sch))
-          .parquet(group.map(_.path): _*)
-          .withColumn("__file",
-            element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("__pos", col("_metadata.row_index"))
-          .select(dataSt.fieldNames.toSeq.map(n =>
-            col(sch.physFor(n)).as(n)) ++
-            Seq(col("__file"), col("__pos")): _*)
-        val withParts = partCols.zip(vals).foldLeft(base) {
-          case (df, (c, v)) => df.withColumn(c, partLit(v, st(c).dataType)) }
-        withParts.filter(coalesce(pred, lit(false)))
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-      }.reduce(_ unionAll _)
+    val newPos = readFiles(spark, sch, candidates, rowIds = true)
+      .filter(coalesce(pred, lit(false)))
+      .select(col("__file").as("file"), col("__pos").as("pos"))
     // complete hole set per candidate: prior DV positions ∪ new matches
     val priorDvPaths = candidates.flatMap(_.dv.map(_.path)).distinct
     val candNames = candidates.map(f => baseName(f.path))
@@ -1491,7 +1455,6 @@ object LakeTable {
       return CommitResult(v, duplicate = true))
     val snap = log.snapshot(table)
     val sch = snap.schema.get
-    val st = toStructType(sch)
     // the update set is read by the checks aggregate, the key projection,
     // the key-range aggregate AND the staged write — materialize once
     val shaped = shape(table, sch, updates).persist()
@@ -1519,7 +1482,7 @@ object LakeTable {
           // replay upserted rows without replaying the survivors
           if (candidates.nonEmpty)
             rwAdds = stage(spark, log, table, sch)(
-              readWithPartitions(spark, sch, st, candidates)
+              readFiles(spark, sch, candidates)
                 .join(keys, Seq(keyCol), "left_anti")
                 .coalesce(candidates.size), s"$txnId-rw", rewrite = true)
         },
@@ -1618,7 +1581,7 @@ object LakeTable {
     }
     val paired =
       if (candidates.isEmpty) null
-      else readWithPartitions(spark, sch, st, candidates)
+      else readFiles(spark, sch, candidates)
         .join(srcPrefixed, col(keyCol) === col(s"src_$keyCol"), "left_outer")
         .withColumn("__action", action)
         .persist()
@@ -1710,13 +1673,11 @@ object LakeTable {
     val latest = log.latestVersion(table)
     val to = if (toVersion <= 0) latest else toVersion
     require(fromVersion <= to, s"fromVersion $fromVersion > toVersion $to")
-    val sch = log.snapshot(table, to).schema.get
-    val st = toStructType(sch)
     val addedFiles = log.versions(table)
       .filter(v => v > fromVersion && v <= to)
       .map(v => log.readEntry(table, v))
       .flatMap(_.adds.filterNot(_.rewrite))
-    readWithPartitions(spark, sch, st, addedFiles)
+    readFiles(spark, log.snapshot(table, to).schema.get, addedFiles)
   }
 
   /** Rows DELETED via deletion-vector growth across `(fromVersion,
@@ -1737,7 +1698,6 @@ object LakeTable {
     val snapB = log.snapshot(table, to)
     val sch = snapB.schema.get
     val st = toStructType(sch)
-    val partCols = sch.partCols
     // snapshot() reads version ≤ 0 as LATEST; `fromVersion = 0` here means
     // "since creation", whose file set is empty
     val priorFiles =
@@ -1761,19 +1721,11 @@ object LakeTable {
         spark.read.schema(DvSchema).parquet(priorDvPaths: _*)
           .filter(col("file").isin(grownNames: _*)),
         Seq("file", "pos"), "left_anti"))
-    val dataSt = dataStruct(st, partCols)
-    grown.groupBy(f => partCols.map(f.partition(_))).map { case (vals, group) =>
-      val base = spark.read.schema(dataSt).parquet(group.map(_.path): _*)
-        .withColumn("__file",
-          element_at(split(col("_metadata.file_path"), "/"), -1))
-        .withColumn("__pos", col("_metadata.row_index"))
-      val hit = base.join(broadcast(delta),
+    val base = readFiles(spark, sch, grown, rowIds = true)
+    base.join(broadcast(delta),
         base("__file") === delta("file") && base("__pos") === delta("pos"),
         "left_semi")
-      val withParts = partCols.zip(vals).foldLeft(hit) { case (df, (c, v)) =>
-        df.withColumn(c, partLit(v, st(c).dataType)) }
-      withParts.select(st.fieldNames.toSeq.map(col): _*)
-    }.reduce(_ unionAll _)
+      .select(st.fieldNames.toSeq.map(col): _*)
   }
 
   /** True iff `entry` is a pure deletion-vector delta: every add re-adds a
@@ -1884,14 +1836,9 @@ object LakeTable {
     val keysB = snapB.files.map(f => (f.path, f.dv)).toSet
     val onlyA = snapA.files.filterNot(f => keysB.contains((f.path, f.dv)))
     val onlyB = snapB.files.filterNot(f => keysA.contains((f.path, f.dv)))
-    def side(files: Seq[FileAdd], tag: String): DataFrame = {
-      val base =
-        if (files.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
-        else readWithPartitions(spark, sch, st, files)
-      base.select(keyCols.map(col) ++
+    def side(files: Seq[FileAdd], tag: String): DataFrame =
+      readFiles(spark, sch, files).select(keyCols.map(col) ++
         valCols.map(c => col(c).as(s"${tag}_$c")): _*)
-    }
     val joined = side(onlyA, "old").withColumn("__in_old", lit(true))
       .join(side(onlyB, "new").withColumn("__in_new", lit(true)),
         keyCols, "full_outer")

@@ -1,6 +1,5 @@
 package graft.lake
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,8 +14,4 @@ object PartitionValues {
     case DateType => java.time.LocalDate.parse(v).toEpochDay.toInt
     case _ => UTF8String.fromString(v)
   }
-
-  def internalRow(values: Seq[String], schema: StructType): InternalRow =
-    InternalRow.fromSeq(values.zip(schema).map {
-      case (v, f) => internalValue(v, f.dataType) })
 }

@@ -152,9 +152,14 @@ object StatsAgg {
       throw new LakeValidationException(s"table ${snap.table} has no schema"))
     val st = LakeTable.toStructType(sch)
     val partCols = sch.partCols
-    if (partCols.isEmpty) return None
-    val groups = snap.files.groupBy(f => partCols.map(f.partition(_)))
-      .toSeq.sortBy(_._1.mkString("\u0000"))
+    // a file written under another spec (partition evolution) groups by
+    // other keys: its rows' values for the current spec's columns are in
+    // its bytes, not the log — leave that table to the scan
+    if (partCols.isEmpty ||
+        snap.files.exists(_.partition.keySet != partCols.toSet)) return None
+    val groups = snap.files.groupBy(_.partition).toSeq
+      .map { case (pmap, files) => (partCols.map(pmap), files) }
+      .sortBy(_._1.mkString("\u0000"))
     val rows = groups.map { case (pv, files) =>
       statsForFiles(files, sch, st, cols).map(values =>
         Row.fromSeq(pv ++ values))

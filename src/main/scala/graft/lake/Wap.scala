@@ -102,16 +102,7 @@ object Wap {
       throw new LakeValidationException(
         s"no staged wap batch '$wapId' on $table"))
     val snap = log.snapshot(table)
-    val sch = snap.schema.getOrElse(
-      throw new LakeValidationException(s"table $table has no schema"))
-    val st = LakeTable.toStructType(sch)
-    val files = snap.files ++ b.adds
-    // per-file partition reattachment whenever ANY file carries logged
-    // partition values — legacy files after spec evolution back to flat
-    // would otherwise lose them (readFlat fills missing columns as NULL)
-    if (sch.partCols.nonEmpty || files.exists(_.partition.nonEmpty))
-      LakeTable.readWithPartitions(spark, sch, st, files)
-    else LakeTable.readFlat(spark, sch, st, files)
+    LakeTable.readFiles(spark, log.schemaOf(snap), snap.files ++ b.adds)
   }
 
   /** Just the staged batch's rows (no main-line data) — the face an
@@ -123,13 +114,7 @@ object Wap {
     val b = staged(log, table, wapId).getOrElse(
       throw new LakeValidationException(
         s"no staged wap batch '$wapId' on $table"))
-    val snap = log.snapshot(table)
-    val sch = snap.schema.getOrElse(
-      throw new LakeValidationException(s"table $table has no schema"))
-    val st = LakeTable.toStructType(sch)
-    if (sch.partCols.nonEmpty || b.adds.exists(_.partition.nonEmpty))
-      LakeTable.readWithPartitions(spark, sch, st, b.adds)
-    else LakeTable.readFlat(spark, sch, st, b.adds)
+    LakeTable.readFiles(spark, log.schemaOf(log.snapshot(table)), b.adds)
   }
 
   /** Publish the staged batch: one OCC commit adopting the staged files.

@@ -89,6 +89,14 @@ class ColumnMappingSpec extends SparkSpec {
       log2.renameColumn("p", "part", "region", "g3")
     }
     intercept[LakeValidationException] { log2.dropColumn("p", "v", "g4") }
+    // after the spec drop, live files still key their maps by `part`
+    log2.alterPartitioning("p", Nil, "g6")
+    intercept[LakeValidationException] {
+      log2.renameColumn("p", "part", "region", "g7")
+    }
+    intercept[LakeValidationException] { log2.dropColumn("p", "part", "g8") }
+    assert(LakeTable.read(spark, log2, "p").select("part").as[String]
+      .collect().toSeq == Seq("a"))
     val log3 = new LakeLog(tmpDir("cmapo"))
     LakeTable.createTable(log3, "one", Seq((1L)).toDF("x").schema)
     LakeTable.insert(spark, log3, "one", Seq((1L)).toDF("x"))
@@ -160,6 +168,21 @@ class ColumnMappingSpec extends SparkSpec {
     val delta = LakeTable.changesSince(spark, log, t, v1)
     assert(delta.columns.toSeq == Seq("id", "amount", "cat"))
     assert(delta.count() == 1 && delta.head.getDouble(1) == 101.0)
+  }
+
+  test("change-feed deletes after a rename carry the renamed column") {
+    val (log, t) = fresh()
+    LakeSql.execute(spark, log, s"ALTER TABLE $t RENAME COLUMN price TO amount")
+    val v = log.latestVersion(t)
+    LakeTable.deleteWhereMor(spark, log, t, "id <= 5")
+    val want = (1 to 5).map(_.toDouble)
+    def amounts(df: org.apache.spark.sql.DataFrame) =
+      df.select("amount").as[Double].collect().sorted.toSeq
+    assert(amounts(LakeTable.dvDeletedRows(spark, log, t, v)) == want)
+    assert(amounts(LakeTable.changeFeed(spark, log, t, v)
+      .filter(col("_change_type") === "delete")) == want)
+    assert(amounts(LakeSql.execute(spark, log, "SELECT amount FROM " +
+      s"TABLE_CHANGES('$t', $v) WHERE _change_type = 'delete'")) == want)
   }
 
   test("literal colliding with a renamed logical name is NOT rewritten") {

@@ -1,6 +1,10 @@
 package graft.lake
 
 import graft.SparkSpec
+import graft.api.QueryApi
+import graft.operators.QueryEngine
+import graft.streaming.Streams
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,6 +18,24 @@ class PartitionEvolutionSpec extends SparkSpec {
 
   private def rows(ids: Range, seg: String) =
     ids.map(i => (i.toLong, seg, i.toLong * 10)).toDF("id", "seg", "n")
+
+  private def tuples(df: DataFrame): Seq[(Long, String, Long)] =
+    df.select("id", "seg", "n").as[(Long, String, Long)].collect().sorted.toSeq
+
+  /** A table whose spec changed flat → seg (`toSeg`) or seg → flat after
+    * v1 (ids 1-4 'a', 5-8 'b'); v3 (ids 9-10 'a', 11-12 'c') is written
+    * under the new spec. */
+  private def evolved(name: String, toSeg: Boolean): LakeLog = {
+    val log = new LakeLog(tmpDir(name))
+    LakeTable.createTable(log, "t", schema,
+      partitionBy = if (toSeg) Nil else Seq("seg"))
+    LakeTable.insert(spark, log, "t",
+      rows(1 to 4, "a").union(rows(5 to 8, "b")))
+    log.alterPartitioning("t", if (toSeg) Seq("seg") else Nil, "alter")
+    LakeTable.insert(spark, log, "t",
+      rows(9 to 10, "a").union(rows(11 to 12, "c")))
+    log
+  }
 
   test("spec change is metadata-only; layouts mix and reads stay exact") {
     val log = new LakeLog(tmpDir("pevo"))
@@ -90,6 +112,74 @@ class PartitionEvolutionSpec extends SparkSpec {
     val df = LakeTable.read(spark, log, "t")
     assert(df.count() === 9)
     assert(df.filter(col("seg") === "b").count() === 3)
+  }
+
+  test("MoR delete across a spec change equals the copy-on-write delete") {
+    for (toSeg <- Seq(true, false)) {
+      val mor = evolved("pevo-mor", toSeg)
+      val cow = evolved("pevo-cow", toSeg)
+      // the second delete re-deletes from a file the first one DV'd
+      for ((pred, n) <- Seq("id <= 2" -> 2, "seg = 'a'" -> 4)) {
+        val r = LakeTable.deleteWhereMor(spark, mor, "t", pred)
+        val c = LakeTable.deleteWhere(spark, cow, "t", pred)
+        assert(c.rowsDeleted === n && r.rowsDeleted === n, s"toSeg=$toSeg $pred")
+      }
+      val want = tuples(LakeTable.read(spark, cow, "t"))
+      assert(want.map(_._1) === (5L to 8L) ++ (11L to 12L))
+      assert(tuples(LakeTable.read(spark, mor, "t")) === want)
+      assert(tuples(LakeTable.readIndexed(spark, mor, "t")) === want)
+    }
+  }
+
+  test("dvDeletedRows and the change feed keep each file's own map") {
+    val log = evolved("pevo-dv", toSeg = false)
+    val v = log.latestVersion("t")
+    LakeTable.deleteWhereMor(spark, log, "t", "id IN (1, 2, 9)")
+    val want = Seq((1L, "a", 10L), (2L, "a", 20L), (9L, "a", 90L))
+    assert(tuples(LakeTable.dvDeletedRows(spark, log, "t", v)) === want)
+    assert(tuples(LakeTable.changeFeed(spark, log, "t", v)
+      .filter(col("_change_type") === "delete")) === want)
+  }
+
+  test("a lake stream from version 0 reads every file under its own map") {
+    for (toSeg <- Seq(true, false)) {
+      val log = evolved("pevo-stream", toSeg)
+      val all = tuples(LakeTable.read(spark, log, "t"))
+      assert(all.size === 12 && all.forall(_._2 != null))
+      for (cdf <- Seq(false, true)) {
+        val name = s"pevo_stream_${toSeg}_$cdf"
+        val q = (if (cdf) Streams.lakeChangeFeedStream(spark, log, "t")
+            else Streams.lakeStream(spark, log, "t"))
+          .writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", tmpDir(name).toString).start()
+        try {
+          q.processAllAvailable()
+          assert(tuples(spark.table(name)) === all, s"toSeg=$toSeg cdf=$cdf")
+          if (cdf) {
+            // delete partitions over a file of each spec
+            LakeTable.deleteWhereMor(spark, log, "t", "id IN (1, 9)")
+            q.processAllAvailable()
+            assert(tuples(spark.table(name)
+                .filter(col("_change_type") === "delete")) ===
+              Seq((1L, "a", 10L), (9L, "a", 90L)))
+          }
+        } finally q.stop()
+      }
+    }
+  }
+
+  test("JSON group_by on the partition column after flat → seg equals the scan") {
+    val log = evolved("pevo-json", toSeg = true)
+    val json = """{"table_name": "t", "group_by": ["seg"], "aggregates": [
+      {"function": "count", "column": "*"},
+      {"function": "max", "column": "id"}]}"""
+    val want = QueryEngine.run(LakeTable.read(spark, log, "t"),
+      QueryApi.toSimpleQuery(QueryApi.parse(json)))
+    val got = QueryApi.runLake(spark, log, json)
+    assert(got.columns.toSeq === want.columns.toSeq)
+    assert(got.collect().map(_.toString).sorted.toSeq ===
+      want.collect().map(_.toString).sorted.toSeq)
+    assert(got.count() === 3)
   }
 
   test("SQL face: ALTER TABLE .. SET PARTITIONED BY evolves the spec") {
