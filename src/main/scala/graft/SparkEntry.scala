@@ -2686,9 +2686,9 @@ object SparkEntry {
         .orderBy("c_mktsegment", "event_type")
     }),
 
-    // The DataSource-V2 lake CDC source under the exact oracle: three OCC
-    // commits land in `src`, the CDC stream tails the log (offsets = log
-    // versions, one input partition per logically-added file), a
+    // The lake CDC source under the exact oracle: three OCC commits land
+    // in `src`, the CDC stream tails the log (offsets = log versions, each
+    // micro-batch the changesSince frame of its version window), a
     // filter+derive transform runs per micro-batch, and survivors append
     // exactly-once into `dst` via the txn-id contract. The final `dst`
     // contents must equal the one-shot batch transform of the source rows,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The one place a predicate meets file stats. A custom `FileIndex`
   * whose `listFiles` receives a query's pushed `dataFilters` as resolved
@@ -57,8 +58,14 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
     }
   }
 
-  private def internalValue(v: String, dt: DataType): Any =
-    PartitionValues.internalValue(v, dt)
+  /** A log partition-map string → its Catalyst internal value. */
+  private def internalValue(v: String, dt: DataType): Any = dt match {
+    case IntegerType => v.toInt
+    case LongType => v.toLong
+    case BooleanType => v.toBoolean
+    case DateType => java.time.LocalDate.parse(v).toEpochDay.toInt
+    case _ => UTF8String.fromString(v)
+  }
 
   /** Evaluate a pushed partition filter against one partition row;
     * unexpectedly-shaped expressions conservatively keep the partition. */

@@ -192,8 +192,9 @@ object LakeTable {
   private val DvBroadcastMaxPositions = 4L * 1000 * 1000
 
   /** The one reader of lake data files: `files` → rows of `sch`, logical
-    * names in declared order. Every by-path read goes through here, so one
-    * rule decides how a file's bytes become rows:
+    * names in declared order. Every by-path read goes through here — the
+    * lake stream source included, whose micro-batches are [[changeWindow]]
+    * frames — so one rule decides how a file's bytes become rows:
     *   - files sharing a partition map read as one scan; each file's OWN
     *     logged map supplies its partition columns as literals
     *     (constant-folded — zero per-row cost), never the table's current
@@ -208,7 +209,7 @@ object LakeTable {
     *     never shuffles.
     * With `rowIds` the DVs are NOT subtracted: every raw row comes back
     * with its `__file` (basename, the DV key) and `__pos` (row index) —
-    * the position scans of [[deleteWhereMor]] and [[dvDeletedRows]].
+    * the position scans of [[deleteWhereMor]] and [[deletedRows]].
     * High-partition-count interactive reads prefer [[readIndexed]], which
     * exposes partition columns through the `FileIndex` instead of a union.
     */
@@ -1658,6 +1659,141 @@ object LakeTable {
     } finally shaped.unpersist()
   }
 
+  /** How one log version changes a table's logical rows, read from the log
+    * alone against the file map just before it — the empty map before
+    * version 1. The one classifier behind [[changeFeed]], the lake stream
+    * source and [[MaterializedView.refresh]]. */
+  private[lake] sealed trait Change
+  private[lake] object Change {
+    /** Logical adds only: inserts, loads, stream sink batches; also
+      * schema-only entries, whose delta is empty. */
+    case object Append extends Change
+    /** A merge-on-read delete: every add re-adds a prior path with the
+      * same physical rows and a strictly larger DV, and the removes are
+      * exactly those paths — the DV enumerates the deleted rows. */
+    case object DvDelta extends Change
+    /** A layout rewrite (compaction, schema requotes, a restore to
+      * identical content): rewrite adds, each path's DV unchanged, live
+      * rows balancing what the entry displaces. */
+    case object LayoutOnly extends Change
+    /** Anything else — copy-on-write deletes, upserts, restores, a clone's
+      * first version, a delete that drops a whole file: rows changed with
+      * no logged pre-images. */
+    case object Opaque extends Change
+  }
+
+  /** A window `(from, to]` of a table's log: each version labelled by
+    * [[classify]], the file map at `from` and the schema at `to`. */
+  private[lake] final case class ChangeWindow(table: String,
+      schema: TableSchema, start: Map[String, FileAdd],
+      versions: Seq[(LogEntry, Change)]) {
+    def has(c: Change): Boolean = versions.exists(_._2 == c)
+    /** Logically added files: rewrite adds (compaction, delete/upsert
+      * survivors, restores, DV re-adds) never replay. */
+    def inserts: Seq[FileAdd] =
+      versions.flatMap(_._1.adds.filterNot(_.rewrite))
+    /** Each DV'd file's LAST DV-delta re-add in the window. */
+    def dvReadds: Seq[FileAdd] =
+      versions.collect { case (e, Change.DvDelta) => e.adds }.flatten
+        .map(a => a.path -> a).toMap.values.toSeq.sortBy(_.path)
+  }
+
+  /** Label every version of `(fromVersion, toVersion]` (0/negative
+    * `toVersion` = latest), rolling the file map forward from the
+    * snapshot at `fromVersion` — one replay per window, not one per
+    * version. */
+  private[lake] def changeWindow(log: LakeLog, table: String,
+                                 fromVersion: Long,
+                                 toVersion: Long = 0L): ChangeWindow = {
+    val to = if (toVersion <= 0) log.latestVersion(table) else toVersion
+    require(fromVersion <= to, s"fromVersion $fromVersion > toVersion $to")
+    // snapshot() reads version <= 0 as LATEST; the state before version 1
+    // is the empty table under the CREATE entry's schema
+    val start =
+      if (fromVersion <= 0)
+        Snapshot(table, 0L, log.readEntry(table, 0L).schema, Nil)
+      else log.snapshot(table, fromVersion)
+    val startFiles = start.files.map(f => f.path -> f).toMap
+    var files = startFiles
+    var schema = start.schema
+    val labelled = log.versions(table)
+      .filter(v => v > fromVersion && v <= to).map { v =>
+        val e = log.readEntry(table, v)
+        val c = classify(files, e)
+        // removes BEFORE adds, as in snapshot replay
+        files = files -- e.removes ++ e.adds.map(a => a.path -> a)
+        schema = e.schema.orElse(schema)
+        (e, c)
+      }
+    ChangeWindow(table, log.schemaOf(start.copy(schema = schema)),
+      startFiles, labelled)
+  }
+
+  private def classify(prior: Map[String, FileAdd], e: LogEntry): Change = {
+    val rewrites = e.adds.nonEmpty && e.adds.forall(_.rewrite)
+    def live(p: String, absent: Long) = prior.get(p).fold(absent)(_.liveRows)
+    if (e.removes.isEmpty && e.adds.forall(!_.rewrite)) Change.Append
+    else if (rewrites && e.removes.toSet == e.adds.map(_.path).toSet &&
+        e.adds.forall(a => a.dv.isDefined && prior.get(a.path).exists(p =>
+          a.rows == p.rows && a.dvRows > p.dvRows)))
+      Change.DvDelta
+    // layout-only: a re-added path keeps its DV, a fresh path carries
+    // none, and live rows balance against what the entry displaces (via
+    // removes, or via in-place path replacement)
+    else if (rewrites &&
+        e.adds.forall(a =>
+          prior.get(a.path).fold(a.dv.isEmpty)(_.dv == a.dv)) &&
+        e.removes.map(live(_, Long.MinValue)).sum +
+          e.adds.map(a => live(a.path, 0L)).sum ==
+          e.adds.map(_.liveRows).sum)
+      Change.LayoutOnly
+    else Change.Opaque
+  }
+
+  /** The rows a window logically added. */
+  private[lake] def insertedRows(spark: SparkSession,
+                                 w: ChangeWindow): DataFrame =
+    readFiles(spark, w.schema, w.inserts)
+
+  /** The rows a window's merge-on-read deletes punched out: for each file,
+    * the positions in its last DV-delta re-add in the window minus its DV
+    * at the window start, read with [[readFiles]]' row ids. A file
+    * compacted away later in the window still yields its deletes; a file
+    * added inside the window yields all its positions (its insert rode
+    * the same window in full, so the two balance). */
+  private[lake] def deletedRows(spark: SparkSession,
+                                w: ChangeWindow): DataFrame = {
+    val files = w.dvReadds
+    if (files.isEmpty) return readFiles(spark, w.schema, Nil)
+    val names = files.map(f => baseName(f.path))
+    // one sidecar can serve several files — restrict to THIS file set
+    def positions(dvs: Seq[DvRef]): DataFrame =
+      spark.read.schema(DvSchema).parquet(dvs.map(_.path).distinct: _*)
+        .filter(col("file").isin(names: _*))
+    val now = positions(files.flatMap(_.dv))
+    val priorDvs = files.flatMap(f => w.start.get(f.path).flatMap(_.dv))
+    val delta =
+      if (priorDvs.isEmpty) now
+      else now.join(positions(priorDvs), Seq("file", "pos"), "left_anti")
+    val base = readFiles(spark, w.schema, files, rowIds = true)
+    base.join(broadcast(delta),
+        base("__file") === delta("file") && base("__pos") === delta("pos"),
+        "left_semi")
+      .select(toStructType(w.schema).fieldNames.toSeq.map(col): _*)
+  }
+
+  /** A window's change feed: [[insertedRows]] tagged 'insert' and
+    * [[deletedRows]] tagged 'delete'. A window holding an opaque version
+    * is refused — never a silent partial feed. */
+  private[lake] def feedOf(spark: SparkSession, w: ChangeWindow): DataFrame = {
+    w.versions.collectFirst { case (e, Change.Opaque) => e.version }
+      .foreach(v => throw new LakeValidationException(
+        s"version $v of ${w.table} is not change-feed expressible " +
+          "(copy-on-write rewrite without pre-images) — use diff()"))
+    insertedRows(spark, w).withColumn("_change_type", lit("insert"))
+      .unionAll(deletedRows(spark, w).withColumn("_change_type", lit("delete")))
+  }
+
   /** Incremental change feed: all rows LOGICALLY added in versions
     * `(fromVersion, toVersion]` (CDC-style consumption — the batch analog
     * of a streaming source over the table; 0/negative `toVersion` = latest).
@@ -1666,132 +1802,40 @@ object LakeTable {
     * operations (compaction, delete/upsert survivor rewrites) carry
     * `rewrite = true` in the log and are excluded — so upsert's new rows DO
     * appear while its rewritten survivors don't. Consumers wanting delete
-    * events diff snapshots instead.
+    * events use [[changeFeed]] or diff snapshots.
     */
   def changesSince(spark: SparkSession, log: LakeLog, table: String,
-                   fromVersion: Long, toVersion: Long = 0L): DataFrame = {
-    val latest = log.latestVersion(table)
-    val to = if (toVersion <= 0) latest else toVersion
-    require(fromVersion <= to, s"fromVersion $fromVersion > toVersion $to")
-    val addedFiles = log.versions(table)
-      .filter(v => v > fromVersion && v <= to)
-      .map(v => log.readEntry(table, v))
-      .flatMap(_.adds.filterNot(_.rewrite))
-    readFiles(spark, log.snapshot(table, to).schema.get, addedFiles)
-  }
+                   fromVersion: Long, toVersion: Long = 0L): DataFrame =
+    insertedRows(spark, changeWindow(log, table, fromVersion, toVersion))
 
-  /** Rows DELETED via deletion-vector growth across `(fromVersion,
-    * toVersion]` — the delete half of a change feed, priced like one:
-    * positions are metadata, so the cost is one scan of only the files
-    * whose DV grew, semi-joined on (basename, row index). A file absent at
-    * `fromVersion` but DV'd at `toVersion` contributes ALL its positions
-    * (its insert rode [[changesSince]] in full, so the subtraction
-    * balances). Copy-on-write rewrites are invisible here by design —
-    * their windows aren't DV-expressible and consumers (MV refresh, CDC)
-    * detect that from the log and fall back to [[diff]]/recompute.
+  /** Rows DELETED by merge-on-read deletes in `(fromVersion, toVersion]` —
+    * the delete half of a change feed, priced like one: DV positions are
+    * metadata, so the cost is one scan of only the files a DV-delta
+    * version re-added, semi-joined on (basename, row index). Each file
+    * contributes the positions of its last DV-delta re-add in the window
+    * minus its DV at `fromVersion` ([[deletedRows]]), so a file compacted
+    * later in the window still yields its deletes. Copy-on-write rewrites
+    * are invisible here by design — their versions are opaque to the
+    * window classifier, and consumers (MV refresh, CDC) fall back to
+    * [[diff]]/recompute.
     */
   def dvDeletedRows(spark: SparkSession, log: LakeLog, table: String,
-                    fromVersion: Long, toVersion: Long = 0L): DataFrame = {
-    val latest = log.latestVersion(table)
-    val to = if (toVersion <= 0) latest else toVersion
-    require(fromVersion <= to, s"fromVersion $fromVersion > toVersion $to")
-    val snapB = log.snapshot(table, to)
-    val sch = snapB.schema.get
-    val st = toStructType(sch)
-    // snapshot() reads version ≤ 0 as LATEST; `fromVersion = 0` here means
-    // "since creation", whose file set is empty
-    val priorFiles =
-      if (fromVersion <= 0) Nil else log.snapshot(table, fromVersion).files
-    val priorByName = priorFiles.map(f => baseName(f.path) -> f).toMap
-    def priorDvRows(f: FileAdd): Long =
-      priorByName.get(baseName(f.path)).map(_.dvRows).getOrElse(0L)
-    val grown = snapB.files.filter(f => f.dvRows > priorDvRows(f))
-    if (grown.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
-    val grownNames = grown.map(f => baseName(f.path))
-    val newDv = spark.read.schema(DvSchema)
-      .parquet(grown.flatMap(_.dv.map(_.path)).distinct: _*)
-      .filter(col("file").isin(grownNames: _*))
-    val priorDvPaths = grown
-      .flatMap(f => priorByName.get(baseName(f.path)).flatMap(_.dv))
-      .map(_.path).distinct
-    // delta = new positions minus the positions already holes at `from`
-    val delta = (if (priorDvPaths.isEmpty) newDv
-      else newDv.join(
-        spark.read.schema(DvSchema).parquet(priorDvPaths: _*)
-          .filter(col("file").isin(grownNames: _*)),
-        Seq("file", "pos"), "left_anti"))
-    val base = readFiles(spark, sch, grown, rowIds = true)
-    base.join(broadcast(delta),
-        base("__file") === delta("file") && base("__pos") === delta("pos"),
-        "left_semi")
-      .select(st.fieldNames.toSeq.map(col): _*)
-  }
-
-  /** True iff `entry` is a pure deletion-vector delta: every add re-adds a
-    * pre-entry path unchanged except for a strictly larger DV, and the
-    * removes are exactly those paths. The shape [[deleteWhereMor]] commits
-    * for partial deletes — the window a change feed or an incremental MV
-    * can fold WITHOUT pre-images. (A fully-dead file's removal is not
-    * expressible this way and correctly fails the test.) */
-  def isDvDeltaEntry(log: LakeLog, table: String, e: LogEntry): Boolean = {
-    if (e.adds.isEmpty || !e.adds.forall(a => a.rewrite && a.dv.isDefined))
-      return false
-    if (e.removes.toSet != e.adds.map(_.path).toSet) return false
-    val prior = log.snapshot(table, e.version - 1).files
-      .map(f => f.path -> f).toMap
-    e.adds.forall(a => prior.get(a.path).exists(p =>
-      a.rows == p.rows && a.dvRows > p.dvRows))
-  }
-
-  /** True iff `entry` rewrites layout without changing logical content:
-    * every add is a rewrite whose dv matches the pre-entry state for its
-    * path, and live row counts balance against what the entry displaces
-    * (via removes, or via in-place path replacement). Compaction, schema
-    * requotes and restores-to-identical-content qualify; CoW deletes and
-    * upserts don't (their live counts shrink/grow). */
-  def isLayoutOnlyEntry(log: LakeLog, table: String, e: LogEntry): Boolean = {
-    if (e.adds.isEmpty || !e.adds.forall(_.rewrite)) return false
-    val priorFiles = log.snapshot(table, e.version - 1).files
-    val priorDv = priorFiles.map(f => f.path -> f.dv).toMap
-    if (e.adds.exists(a => priorDv.get(a.path) match {
-      case Some(d0) => d0 != a.dv // in-place replacement with a new dv
-      case None => a.dv.isDefined // fresh path carrying a dv
-    })) return false
-    val prior = priorFiles.map(f => f.path -> f.liveRows).toMap
-    val removed = e.removes.map(p => prior.getOrElse(p, Long.MinValue)).sum
-    val replaced = e.adds.map(a => prior.getOrElse(a.path, 0L)).sum
-    removed + replaced == e.adds.map(_.liveRows).sum
-  }
+                    fromVersion: Long, toVersion: Long = 0L): DataFrame =
+    deletedRows(spark, changeWindow(log, table, fromVersion, toVersion))
 
   /** Change feed with row-level deletes (Delta CDF analog): every logical
     * row change in `(fromVersion, toVersion]` tagged `_change_type`
-    * 'insert' | 'delete'. Inserts come from the append feed
-    * ([[changesSince]]); deletes from deletion-vector growth
-    * ([[dvDeletedRows]]) — both metadata-priced. Windows containing
-    * copy-on-write rewrites (CoW delete, upsert, restore) have no logged
-    * pre-images and are refused: callers key on [[diff]] for those.
+    * 'insert' | 'delete'. One classifier ([[changeWindow]]) labels each
+    * version append, DV delta, layout-only or opaque; inserts are the
+    * logically added files ([[changesSince]]), deletes the DV growth
+    * ([[dvDeletedRows]]) — both metadata-priced. Windows holding an opaque
+    * version (CoW delete, upsert, restore) have no logged pre-images and
+    * are refused: callers key on [[diff]] for those. The lake stream
+    * source's change-feed mode serves each micro-batch from this frame.
     */
   def changeFeed(spark: SparkSession, log: LakeLog, table: String,
-                 fromVersion: Long, toVersion: Long = 0L): DataFrame = {
-    val latest = log.latestVersion(table)
-    val to = if (toVersion <= 0) latest else toVersion
-    ((fromVersion + 1) to to).foreach { v =>
-      val e = log.readEntry(table, v)
-      val expressible =
-        (e.removes.isEmpty && e.adds.forall(!_.rewrite)) || // append-only
-          isDvDeltaEntry(log, table, e) ||
-          isLayoutOnlyEntry(log, table, e)
-      if (!expressible)
-        throw new LakeValidationException(
-          s"version $v of $table is not change-feed expressible " +
-            "(copy-on-write rewrite without pre-images) — use diff()")
-    }
-    changesSince(spark, log, table, fromVersion, to)
-      .withColumn("_change_type", lit("insert"))
-      .unionAll(dvDeletedRows(spark, log, table, fromVersion, to)
-        .withColumn("_change_type", lit("delete")))
-  }
+                 fromVersion: Long, toVersion: Long = 0L): DataFrame =
+    feedOf(spark, changeWindow(log, table, fromVersion, toVersion))
 
   /** Row-level DIFF between two versions (Delta `table_changes` analog,
     * keyed): classify every logical row change from `fromVersion` to

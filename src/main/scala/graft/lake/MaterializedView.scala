@@ -25,18 +25,20 @@ import org.apache.spark.sql.types._
   * raise a min, so any non-append window already takes the full-recompute
   * fallback below, which restores exactness for every aggregate at once.
   *
-  * Refresh picks its mode per delta entry from the log alone (no data
-  * read):
-  *  - append-only entries (inserts, loads, streaming sink batches) →
+  * Refresh picks its mode from the labels [[LakeTable.changeWindow]] (the
+  * change feed's one classifier) gives the window's versions, from the
+  * log alone (no data read):
+  *  - append versions (inserts, loads, streaming sink batches) →
   *    incremental;
-  *  - layout-only entries (compaction: every add is `rewrite` and re-adds
-  *    exactly the removed row count) → logically empty, skipped;
-  *  - deletion-vector entries (merge-on-read deletes) → incremental TOO,
-  *    for count/sum MVs: the DV enumerates exactly the deleted rows — the
+  *  - layout-only versions (compaction: every add is `rewrite` and live
+  *    rows balance) → logically empty, skipped;
+  *  - DV-delta versions (merge-on-read deletes) → incremental TOO, for
+  *    count/sum MVs: the DV enumerates exactly the deleted rows — the
   *    pre-images a copy-on-write delete lacks — so their aggregate folds
-  *    in as a NEGATIVE delta ([[LakeTable.dvDeletedRows]]); min/max MVs
+  *    in as a NEGATIVE delta ([[LakeTable.dvDeletedRows]]), even when a
+  *    later compaction in the window removed the DV'd file; min/max MVs
   *    still fall back (a delete can raise a min);
-  *  - anything else (CoW delete, upsert, restore) → full recompute
+  *  - opaque versions (CoW delete, upsert, restore) → full recompute
   *    fallback, which is what every production IVM system does when the
   *    delta is not enumerable and no pre-images were logged.
   *
@@ -238,17 +240,6 @@ object MaterializedView {
       (d.keyCols.map(col) :+ surrogate(d).as("mv_key")) ++
         grouped.columns.filterNot(d.keyCols.contains).map(col): _*)
 
-  /** True iff the entry only appends logical rows. Schema-evolution
-    * entries (no adds, no removes) also qualify: their delta is empty. */
-  private def isAppendOnly(e: LogEntry): Boolean =
-    e.removes.isEmpty && e.adds.forall(!_.rewrite)
-
-  /** Layout-only = no logical content change (shared classifier — see
-    * [[LakeTable.isLayoutOnlyEntry]]: rewrite adds, dv state unchanged,
-    * live row counts balance). */
-  private def isLayoutOnly(log: LakeLog, d: MvDef, e: LogEntry): Boolean =
-    LakeTable.isLayoutOnlyEntry(log, d.base, e)
-
   // Refreshes of one MV are serialized in-process: two concurrent
   // refreshers could otherwise observe DIFFERENT base versions and the
   // later-observing one commit first — the earlier one's merge (computed
@@ -265,9 +256,12 @@ object MaterializedView {
     * `noop` (already current), `incremental` (delta aggregated + merged via
     * one idempotent upsert — or, for a logically-empty delta such as a
     * compaction-only window, a metadata-only commit that just advances the
-    * high-water mark), or `full` (recompute via [[LakeTable.overwrite]] —
-    * ONE atomic commit, so readers never observe an empty MV and a crash
-    * or duplicate replay can never leave one behind).
+    * high-water mark), `incremental_dv` (the same, with the window's
+    * merge-on-read deletes folded in negated), or `full` (recompute via
+    * [[LakeTable.overwrite]] — ONE atomic commit, so readers never observe
+    * an empty MV and a crash or duplicate replay can never leave one
+    * behind). The mode follows the window's labels from
+    * [[LakeTable.changeWindow]], the classifier the change feed uses.
     */
   def refresh(spark: SparkSession, log: LakeLog, d: MvDef): RefreshResult =
     refreshLocks.computeIfAbsent(s"${log.root}#${d.name}", _ => new Object)
@@ -291,30 +285,25 @@ object MaterializedView {
     if (!dimOk)
       return fullRefresh(spark, log, d, last, cur, dimCur, enrich)
 
-    val entries = ((last + 1) to cur).map(log.readEntry(d.base, _))
-    val incrementalOk =
-      entries.forall(e => isAppendOnly(e) || isLayoutOnly(log, d, e))
-    // deletion-vector windows fold incrementally too — count/sum are
+    val w = LakeTable.changeWindow(log, d.base, last, cur)
+    // DV-delta windows fold incrementally too — count/sum are
     // self-maintainable under deletes because the DV enumerates EXACTLY
     // the deleted rows (the pre-images a CoW delete lacks): subtract
     // their aggregate as a negative delta. min/max are not (a delete can
     // raise a min), so their presence keeps the full-recompute fallback.
-    val dvEntries = entries.filter(LakeTable.isDvDeltaEntry(log, d.base, _))
-    val dvOk = !incrementalOk && d.minCols.isEmpty && d.maxCols.isEmpty &&
-      entries.forall(e => isAppendOnly(e) || isLayoutOnly(log, d, e) ||
-        LakeTable.isDvDeltaEntry(log, d.base, e))
+    val dv = w.has(LakeTable.Change.DvDelta)
+    val incrementalOk = !w.has(LakeTable.Change.Opaque) &&
+      (!dv || (d.minCols.isEmpty && d.maxCols.isEmpty))
 
-    if (incrementalOk || dvOk) {
-      val inserts = aggOf(
-        enrich(LakeTable.changesSince(spark, log, d.base, last, cur)), d)
-      val delta = (if (dvEntries.isEmpty) inserts else {
-        val deleted = aggOf(
-          enrich(LakeTable.dvDeletedRows(spark, log, d.base, last, cur)), d)
+    if (incrementalOk) {
+      val inserts = aggOf(enrich(LakeTable.insertedRows(spark, w)), d)
+      val delta = (if (!dv) inserts else {
+        val deleted = aggOf(enrich(LakeTable.deletedRows(spark, w)), d)
         val negated = deleted.withColumn("n_rows", -col("n_rows"))
         inserts.unionByName(d.sumCols.foldLeft(negated)((df, c) =>
           df.withColumn(s"sum_$c", -col(s"sum_$c"))))
       }).persist()
-      val mode = if (dvEntries.isEmpty) "incremental" else "incremental_dv"
+      val mode = if (dv) "incremental_dv" else "incremental"
       try {
         // merged totals for touched keys only: current MV rows for those
         // keys + the delta, re-aggregated. The MV-side read is
@@ -350,7 +339,7 @@ object MaterializedView {
             // anti-join never matches NULL = NULL, so the old NULL-group
             // row would survive NEXT TO the merged one. Full path instead.
             fullRefresh(spark, log, d, last, cur, dimCur, enrich)
-          } else if (dvEntries.nonEmpty && deadKeys > 0L) {
+          } else if (dv && deadKeys > 0L) {
             // a key whose every row died merges to n_rows = 0 — SQL GROUP
             // BY would not emit it, and the upsert merge cannot DROP a
             // row. Rare (a whole group deleted); recompute restores truth.

@@ -111,19 +111,22 @@ object MultiTxn {
             "abort the txn")
       val rec = TxnRecord(txnId, tables.sorted, System.currentTimeMillis(),
         body_hash = bodyHash)
-      writeCreateIfAbsent(intentPath(log, txnId), rec) match {
-        case Some(existing) =>
-          // lost the decision race: the winner's participant list rules
-          if (existing.tables != rec.tables)
-            throw new LakeValidationException(
-              s"txn '$txnId' was decided concurrently over different " +
-                s"tables (${existing.tables.mkString(", ")})")
-          if (existing.body_hash.isDefined && bodyHash.isDefined &&
-              existing.body_hash != bodyHash)
-            throw new LakeValidationException(
-              s"txn '$txnId' was decided concurrently with a different " +
-                "statement body (reused txn id?)")
-        case None => ()
+      if (!createIfAbsent(intentPath(log, txnId), rec)) {
+        // lost the decision race: the winner's participant list rules.
+        // The winner may already have retired its intent into the done
+        // record between our create attempt and this read.
+        val existing = intent(log, txnId).orElse(done(log, txnId))
+          .getOrElse(throw new LakeValidationException(
+            s"torn txn record at ${intentPath(log, txnId)}"))
+        if (existing.tables != rec.tables)
+          throw new LakeValidationException(
+            s"txn '$txnId' was decided concurrently over different " +
+              s"tables (${existing.tables.mkString(", ")})")
+        if (existing.body_hash.isDefined && bodyHash.isDefined &&
+            existing.body_hash != bodyHash)
+          throw new LakeValidationException(
+            s"txn '$txnId' was decided concurrently with a different " +
+              "statement body (reused txn id?)")
       }
     }
     rollForward(spark, log, txnId)
@@ -162,7 +165,7 @@ object MultiTxn {
         TableVersion(t, v)
       }
       val doneRec = rec.copy(versions = Some(versions))
-      writeCreateIfAbsent(donePath(log, txnId), doneRec) // first writer wins
+      createIfAbsent(donePath(log, txnId), doneRec) // first writer wins
       Files.deleteIfExists(intentPath(log, txnId))
       done(log, txnId).get.versionMap
     }
@@ -219,14 +222,9 @@ object MultiTxn {
   private def readRec(p: Path): Option[TxnRecord] =
     LakeLog.readIfExists(p).map(mapper.readValue[TxnRecord](_))
 
-  /** Create-if-absent: None if this call created the file, Some(existing
-    * record) if it lost the race — the caller reads the winner's
-    * decision. */
-  private def writeCreateIfAbsent(target: Path, rec: TxnRecord)
-      : Option[TxnRecord] = {
+  /** Create-if-absent: true iff this call created the file. */
+  private def createIfAbsent(target: Path, rec: TxnRecord): Boolean = {
     Files.createDirectories(target.getParent)
-    if (LakeLog.createIfAbsent(target, mapper.writeValueAsString(rec))) None
-    else Some(readRec(target).getOrElse(throw new LakeValidationException(
-      s"torn txn record at $target")))
+    LakeLog.createIfAbsent(target, mapper.writeValueAsString(rec))
   }
 }

@@ -137,29 +137,26 @@ object Streams {
     intervalJoin(left, right, keyCol, windowSec, lateness, "left_outer")
 
   /** CDC stream over a lake table: each micro-batch is the rows logically
-    * added by new log versions (rewrites — compaction, delete survivors,
+    * added by new log versions ([[graft.lake.LakeTable.changesSince]] over
+    * the batch's version window; rewrites — compaction, delete survivors,
     * restores — are never replayed). See [[graft.lake.LakeTableProvider]].
-    * Composes with [[sinkToLake]] into end-to-end exactly-once
+    * `maxVersionsPerBatch` caps the log versions one micro-batch consumes,
+    * so a backfill from version 0 of a long table catches up in bounded
+    * steps. Composes with [[sinkToLake]] into end-to-end exactly-once
     * lake → transform → lake pipelines.
     */
   def lakeStream(spark: org.apache.spark.sql.SparkSession,
                  log: graft.lake.LakeLog, table: String,
                  startingVersion: Long = 0L,
-                 maxVersionsPerBatch: Option[Long] = None): DataFrame = {
-    val base = spark.readStream.format("graft-lake")
-      .option("root", log.root.toString)
-      .option("table", table)
-      .option("startingVersion", startingVersion.toString)
-    // admission control: cap log versions consumed per micro-batch so a
-    // backfill from version 0 of a long table catches up in bounded steps
-    maxVersionsPerBatch.fold(base)(m =>
-      base.option("maxVersionsPerBatch", m.toString)).load()
-  }
+                 maxVersionsPerBatch: Option[Long] = None): DataFrame =
+    lakeSource(spark, log, table, startingVersion, maxVersionsPerBatch,
+      changeFeed = false)
 
   /** Streaming CHANGE FEED over a lake table — [[lakeStream]] plus a
-    * `_change_type` column ('insert' | 'delete'). Deletes are the rows
-    * deletion vectors punched out, read executor-side at O(dv positions)
-    * per touched file; layout-only windows stream zero rows; windows with
+    * `_change_type` column ('insert' | 'delete'): each micro-batch is
+    * [[graft.lake.LakeTable.changeFeed]] over its version window. Deletes
+    * are the rows deletion vectors punched out, read through the lake's
+    * one file reader; layout-only windows stream zero rows; windows with
     * copy-on-write rewrites fail the stream (no pre-images — Delta's CDF
     * makes the same demand of its writers). Pairs with
     * [[graft.lake.MaterializedView.continuousRefresh]]-style consumers
@@ -169,15 +166,21 @@ object Streams {
                            log: graft.lake.LakeLog, table: String,
                            startingVersion: Long = 0L,
                            maxVersionsPerBatch: Option[Long] = None)
-      : DataFrame = {
-    val base = spark.readStream.format("graft-lake")
-      .option("root", log.root.toString)
-      .option("table", table)
-      .option("changeFeed", "true")
-      .option("startingVersion", startingVersion.toString)
-    maxVersionsPerBatch.fold(base)(m =>
-      base.option("maxVersionsPerBatch", m.toString)).load()
-  }
+      : DataFrame =
+    lakeSource(spark, log, table, startingVersion, maxVersionsPerBatch,
+      changeFeed = true)
+
+  private def lakeSource(spark: org.apache.spark.sql.SparkSession,
+                         log: graft.lake.LakeLog, table: String,
+                         startingVersion: Long,
+                         maxVersionsPerBatch: Option[Long],
+                         changeFeed: Boolean): DataFrame =
+    spark.readStream.format("graft-lake")
+      .options(Map("root" -> log.root.toString, "table" -> table,
+        "startingVersion" -> startingVersion.toString,
+        "changeFeed" -> changeFeed.toString) ++
+        maxVersionsPerBatch.map("maxVersionsPerBatch" -> _.toString))
+      .load()
 
   /** Stable per-query writer identity: derived from the checkpoint dir —
     * the identity that actually scopes `batchId` (a restart from the same

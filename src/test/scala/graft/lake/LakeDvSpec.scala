@@ -307,6 +307,69 @@ class LakeDvSpec extends SparkSpec {
     }
   }
 
+  test("changeFeed keeps the deletes of a file compacted later in the window") {
+    val log = newLog()
+    LakeTable.createTable(log, "t", schema)
+    val v0 = log.latestVersion("t")
+    LakeTable.insert(spark, log, "t", sampleDf(1 to 100, "a"))
+    LakeTable.deleteWhereMor(spark, log, "t", "id <= 10")
+    LakeTable.compact(spark, log, "t", force = true)
+    // the compaction removed the DV'd file; its deletes still count
+    assert(log.snapshot("t").files.forall(_.dv.isEmpty))
+    val feed = LakeTable.changeFeed(spark, log, "t", v0)
+    val del = feed.filter(col("_change_type") === "delete")
+      .select("id").as[Long].collect().sorted.toSeq
+    assert(del == (1L to 10L))
+    assert(feed.filter(col("_change_type") === "insert").count() == 100)
+  }
+
+  test("count/sum MV folds a MOR delete whose file a compaction removed") {
+    val log = newLog()
+    LakeTable.createTable(log, "base", schema)
+    LakeTable.insert(spark, log, "base", sampleDf(1 to 100, "a"))
+    val d = MaterializedView.MvDef("mv5", "base", "category",
+      sumCols = Seq("price"))
+    MaterializedView.create(log, d)
+    MaterializedView.refresh(spark, log, d)
+    LakeTable.deleteWhereMor(spark, log, "base", "id > 80")
+    LakeTable.compact(spark, log, "base", force = true)
+    val res = MaterializedView.refresh(spark, log, d)
+    assert(res.mode == "incremental_dv")
+    val mv = MaterializedView.read(spark, log, d).collect()
+      .map(r => r.getAs[String]("category") ->
+        (r.getAs[Long]("n_rows"), r.getAs[Double]("sum_price"))).toMap
+    val truth = LakeTable.read(spark, log, "base").groupBy("category")
+      .agg(count(lit(1)), sum("price")).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    assert(truth("a")._1 == 80L)
+    assert(mv == truth)
+  }
+
+  test("a clone's version 1 classifies against the empty table") {
+    val log = newLog()
+    LakeTable.createTable(log, "src", schema)
+    LakeTable.insert(spark, log, "src", sampleDf(1 to 100, "a"))
+    LakeTable.deleteWhereMor(spark, log, "src", "id <= 5")
+    LakeTable.compact(spark, log, "src", force = true)
+    LakeTable.cloneTable(log, "src", "dst")
+    // version 1 re-adds the compacted (rewrite-flagged) file: content the
+    // change feed cannot express, whatever commits come later
+    assert(log.readEntry("dst", 1L).adds.forall(_.rewrite))
+    def v1() = LakeTable.changeWindow(log, "dst", 0L, 1L).versions.map(_._2)
+    val before = v1()
+    assert(before == Seq(LakeTable.Change.Opaque))
+    assertThrows[LakeValidationException] {
+      LakeTable.changeFeed(spark, log, "dst", 0L, 1L)
+    }
+    val v1Paths = log.readEntry("dst", 1L).adds.map(_.path).toSet
+    LakeTable.deleteWhere(spark, log, "dst", "id <= 10")
+    assert(!v1Paths.subsetOf(log.snapshot("dst").files.map(_.path).toSet))
+    assert(v1() == before)
+    assertThrows[LakeValidationException] {
+      LakeTable.changeFeed(spark, log, "dst", 0L, 1L)
+    }
+  }
+
   test("filesTable inventory + auto-sized inserts") {
     val log = newLog()
     LakeTable.createTable(log, "inv", schema)

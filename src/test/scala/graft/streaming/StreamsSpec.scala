@@ -227,6 +227,46 @@ class StreamsSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("lakeStream: checkpoint offsets read {\"version\":N}; restart replays none") {
+    import graft.lake.{LakeLog, LakeTable}
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val log = new LakeLog(tmpDir("lakeoffsets"))
+    LakeTable.createTable(log, "ev", StructType(Seq(
+      StructField("id", LongType), StructField("value", DoubleType))))
+    (1 to 3).foreach(i => LakeTable.insert(spark, log, "ev",
+      Seq((i.toLong, i.toDouble)).toDF("id", "value")))
+    val ckpt = tmpDir("lakeoffsets_ckpt")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    def start() = Streams.lakeStream(spark, log, "ev").writeStream
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.select("id").collect().foreach(r => seen.add(r.getLong(0)))
+      }
+      .start()
+    val q1 = start()
+    try q1.processAllAvailable() finally q1.stop()
+    assert(seen.asScala.toSeq.sorted == Seq(1L, 2L, 3L))
+    // the source's line of the newest offset-log file: the format a
+    // checkpoint of any graft-lake source carries
+    val offsets = ckpt.resolve("offsets")
+    val newest = java.nio.file.Files.list(offsets).iterator.asScala
+      .map(_.getFileName.toString).filter(_.forall(_.isDigit))
+      .map(_.toLong).max
+    val lines = java.nio.file.Files.readAllLines(
+      offsets.resolve(newest.toString)).asScala
+    assert(lines.last == s"""{"version":${log.latestVersion("ev")}}""")
+    seen.clear()
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      assert(seen.isEmpty, "a restart from the checkpoint replayed rows")
+      LakeTable.insert(spark, log, "ev", Seq((4L, 4.0)).toDF("id", "value"))
+      q2.processAllAvailable()
+      assert(seen.asScala.toSeq == Seq(4L))
+    } finally q2.stop()
+  }
+
   test("lakeChangeFeedStream: inserts and DV deletes with _change_type") {
     import graft.lake.{LakeLog, LakeTable}
     import org.apache.spark.sql.types._
