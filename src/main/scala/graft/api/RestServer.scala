@@ -9,7 +9,9 @@ import java.util.concurrent.{ConcurrentHashMap, Executors}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.lake.{Field, LakeLog, LakeTable, TableSchema, Wap}
 
@@ -872,11 +874,15 @@ final class RestServer(spark: SparkSession, log: LakeLog,
     *    duplicate-txn replays exported separately (graft extension) so
     *    idempotent redelivery is visible without diluting failures;
     *  - `lakehouse_compactions_total` (`metrics.go` CompactionsTotal) from
-    *    this server's completed compaction requests.
+    *    this server's completed compaction requests;
+    *  - `lakehouse_codegen_compiles_total` / `_compile_seconds_total`
+    *    (graft extension): the JVM's Janino compiles of generated code and
+    *    their summed time — a query shape whose code depends on literal
+    *    values shows up here once per distinct value.
     */
   private def prometheusMetrics(ex: HttpExchange): Unit = {
     val sb = new StringBuilder
-    def counter(name: String, help: String, v: Long): Unit = {
+    def counter(name: String, help: String, v: AnyVal): Unit = {
       sb ++= s"# HELP $name $help\n# TYPE $name counter\n$name $v\n"
     }
     val ms = graft.Metrics.live.recent
@@ -906,6 +912,12 @@ final class RestServer(spark: SparkSession, log: LakeLog,
       resultCache.hits)
     counter("lakehouse_result_cache_misses_total",
       "SELECT results computed (cache miss)", resultCache.misses)
+    counter("lakehouse_codegen_compiles_total",
+      "Generated-code classes compiled with Janino",
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    counter("lakehouse_codegen_compile_seconds_total",
+      "Time spent compiling generated code, in seconds",
+      CodeGenerator.compileTime / 1e9)
     val bytes = sb.result().getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type",
       "text/plain; version=0.0.4; charset=utf-8")

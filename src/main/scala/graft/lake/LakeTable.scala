@@ -216,6 +216,7 @@ object LakeTable {
   private[lake] def readFiles(spark: SparkSession, sch: TableSchema,
                               files: Seq[FileAdd],
                               rowIds: Boolean = false): DataFrame = {
+    ParamScan.install(spark)
     val st = toStructType(sch)
     if (files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -315,6 +316,7 @@ object LakeTable {
                           sch: TableSchema): DataFrame = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    ParamScan.install(spark)
     val st = toStructType(sch)
     val partSt = StructType(sch.partCols.map(c => st(c)))
     val relation = HadoopFsRelation(
@@ -1669,16 +1671,16 @@ object LakeTable {
       * schema-only entries, whose delta is empty. */
     case object Append extends Change
     /** A merge-on-read delete: every add re-adds a prior path with the
-      * same physical rows and a strictly larger DV, and the removes are
-      * exactly those paths — the DV enumerates the deleted rows. */
+      * same physical rows and a strictly larger DV — the DV enumerates the
+      * deleted rows — and every other remove drops a prior file whole, so
+      * its live rows are the deleted ones. */
     case object DvDelta extends Change
     /** A layout rewrite (compaction, schema requotes, a restore to
       * identical content): rewrite adds, each path's DV unchanged, live
       * rows balancing what the entry displaces. */
     case object LayoutOnly extends Change
-    /** Anything else — copy-on-write deletes, upserts, restores, a clone's
-      * first version, a delete that drops a whole file: rows changed with
-      * no logged pre-images. */
+    /** Anything else — copy-on-write rewrites, upserts, restores, a clone's
+      * first version: rows changed with no logged pre-images. */
     case object Opaque extends Change
   }
 
@@ -1692,10 +1694,24 @@ object LakeTable {
       * survivors, restores, DV re-adds) never replay. */
     def inserts: Seq[FileAdd] =
       versions.flatMap(_._1.adds.filterNot(_.rewrite))
-    /** Each DV'd file's LAST DV-delta re-add in the window. */
-    def dvReadds: Seq[FileAdd] =
+    private def dropped: Set[String] =
+      versions.collect { case (e, Change.DvDelta) =>
+        e.removes.toSet -- e.adds.map(_.path) }.flatten.toSet
+    /** Each DV'd file's LAST DV-delta re-add in the window, unless a later
+      * DV delta drops the file whole. */
+    def dvReadds: Seq[FileAdd] = {
+      val gone = dropped
       versions.collect { case (e, Change.DvDelta) => e.adds }.flatten
-        .map(a => a.path -> a).toMap.values.toSeq.sortBy(_.path)
+        .map(a => a.path -> a).toMap.values.filterNot(a => gone(a.path))
+        .toSeq.sortBy(_.path)
+    }
+    /** Each file a DV delta dropped whole, as the window start had it —
+      * or, added inside the window, without a DV. */
+    def drops: Seq[FileAdd] = {
+      val added = versions.flatMap(_._1.adds).map(a => a.path -> a).toMap
+      dropped.toSeq.sorted.map(p =>
+        start.getOrElse(p, added(p).copy(dv = None)))
+    }
   }
 
   /** Label every version of `(fromVersion, toVersion]` (0/negative
@@ -1733,9 +1749,10 @@ object LakeTable {
     val rewrites = e.adds.nonEmpty && e.adds.forall(_.rewrite)
     def live(p: String, absent: Long) = prior.get(p).fold(absent)(_.liveRows)
     if (e.removes.isEmpty && e.adds.forall(!_.rewrite)) Change.Append
-    else if (rewrites && e.removes.toSet == e.adds.map(_.path).toSet &&
-        e.adds.forall(a => a.dv.isDefined && prior.get(a.path).exists(p =>
-          a.rows == p.rows && a.dvRows > p.dvRows)))
+    else if (e.removes.forall(prior.contains) &&
+        e.adds.forall(a => a.rewrite && a.dv.isDefined &&
+          e.removes.contains(a.path) && prior.get(a.path).exists(p =>
+            a.rows == p.rows && a.dvRows > p.dvRows)))
       Change.DvDelta
     // layout-only: a re-added path keeps its DV, a fresh path carries
     // none, and live rows balance against what the entry displaces (via
@@ -1757,14 +1774,16 @@ object LakeTable {
 
   /** The rows a window's merge-on-read deletes punched out: for each file,
     * the positions in its last DV-delta re-add in the window minus its DV
-    * at the window start, read with [[readFiles]]' row ids. A file
-    * compacted away later in the window still yields its deletes; a file
-    * added inside the window yields all its positions (its insert rode
-    * the same window in full, so the two balance). */
+    * at the window start, read with [[readFiles]]' row ids; for each file
+    * dropped whole, its live rows at the window start. A file compacted
+    * away later in the window still yields its deletes; a file added
+    * inside the window yields all its positions (its insert rode the same
+    * window in full, so the two balance). */
   private[lake] def deletedRows(spark: SparkSession,
                                 w: ChangeWindow): DataFrame = {
+    val drops = w.drops
     val files = w.dvReadds
-    if (files.isEmpty) return readFiles(spark, w.schema, Nil)
+    if (files.isEmpty) return readFiles(spark, w.schema, drops)
     val names = files.map(f => baseName(f.path))
     // one sidecar can serve several files — restrict to THIS file set
     def positions(dvs: Seq[DvRef]): DataFrame =
@@ -1776,10 +1795,12 @@ object LakeTable {
       if (priorDvs.isEmpty) now
       else now.join(positions(priorDvs), Seq("file", "pos"), "left_anti")
     val base = readFiles(spark, w.schema, files, rowIds = true)
-    base.join(broadcast(delta),
+    val punched = base.join(broadcast(delta),
         base("__file") === delta("file") && base("__pos") === delta("pos"),
         "left_semi")
       .select(toStructType(w.schema).fieldNames.toSeq.map(col): _*)
+    if (drops.isEmpty) punched
+    else punched.unionAll(readFiles(spark, w.schema, drops))
   }
 
   /** A window's change feed: [[insertedRows]] tagged 'insert' and
@@ -1814,7 +1835,8 @@ object LakeTable {
     * version re-added, semi-joined on (basename, row index). Each file
     * contributes the positions of its last DV-delta re-add in the window
     * minus its DV at `fromVersion` ([[deletedRows]]), so a file compacted
-    * later in the window still yields its deletes. Copy-on-write rewrites
+    * later in the window still yields its deletes; a file a delete dropped
+    * whole yields its live rows at `fromVersion`. Copy-on-write rewrites
     * are invisible here by design — their versions are opaque to the
     * window classifier, and consumers (MV refresh, CDC) fall back to
     * [[diff]]/recompute.

@@ -447,6 +447,15 @@ class RestServerSpec extends SparkSpec with BeforeAndAfterAll {
       .filter(_.startsWith("lakehouse_query_duration_seconds_bucket"))
       .map(_.split(" ")(1).toLong).toList
     assert(buckets == buckets.sorted && buckets.last == count)
+    // the JVM's generated-code compiles: the /query above planned and ran
+    // whole-stage code, so at least one class was compiled by now
+    def value(name: String): Double = r.body.linesIterator
+      .find(_.startsWith(s"$name ")).get.split(" ")(1).toDouble
+    assert(r.body.contains("# TYPE lakehouse_codegen_compiles_total counter"))
+    assert(r.body.contains(
+      "# TYPE lakehouse_codegen_compile_seconds_total counter"))
+    assert(value("lakehouse_codegen_compiles_total") >= 1)
+    assert(value("lakehouse_codegen_compile_seconds_total") > 0)
   }
 
   test("error conventions: 404 unknown route, 400 bad bodies, plain text") {

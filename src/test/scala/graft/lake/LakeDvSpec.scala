@@ -323,6 +323,54 @@ class LakeDvSpec extends SparkSpec {
     assert(feed.filter(col("_change_type") === "insert").count() == 100)
   }
 
+  test("a MOR delete that drops a whole file is a DV delta in the feed") {
+    val log = newLog()
+    LakeTable.createTable(log, "t", schema)
+    val created = log.latestVersion("t")
+    LakeTable.insert(spark, log, "t", sampleDf(1 to 50, "a"))
+    LakeTable.insert(spark, log, "t", sampleDf(51 to 100, "b"))
+    val v0 = log.latestVersion("t")
+    val r = LakeTable.deleteWhereMor(spark, log, "t",
+      "category = 'b' OR id <= 5")
+    assert(r.filesWithDv == 1 && r.filesRemoved == 1)
+    assert(LakeTable.changeWindow(log, "t", v0).versions.map(_._2) ==
+      Seq(LakeTable.Change.DvDelta))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").as[Long].collect().sorted.toSeq
+    val feed = LakeTable.changeFeed(spark, log, "t", v0)
+    val diffed = LakeTable.diff(spark, log, "t", v0, keyCols = Seq("id"))
+    assert(ids(diffed.filter(col("change_type") === "delete")) ==
+      ((1L to 5L) ++ (51L to 100L)))
+    assert(ids(feed.filter(col("_change_type") === "delete")) ==
+      ids(diffed.filter(col("change_type") === "delete")))
+    assert(feed.filter(col("_change_type") === "insert").isEmpty)
+    // from before the inserts: the dropped file's rows were inserted in
+    // the same window, so the feed replays onto the empty table exactly
+    val all = LakeTable.changeFeed(spark, log, "t", created)
+    def rows(kind: String) =
+      all.filter(col("_change_type") === kind).drop("_change_type")
+    val replayed = rows("insert").exceptAll(rows("delete"))
+    assert(rows("delete").count() == 55)
+    val now = LakeTable.read(spark, log, "t")
+    assert(replayed.exceptAll(now).isEmpty && now.exceptAll(replayed).isEmpty)
+  }
+
+  test("count/sum MV folds a MOR delete that drops a whole file") {
+    val log = newLog()
+    LakeTable.createTable(log, "base", schema)
+    LakeTable.insert(spark, log, "base", sampleDf(1 to 50, "a"))
+    LakeTable.insert(spark, log, "base", sampleDf(51 to 100, "a"))
+    val d = MaterializedView.MvDef("mv6", "base", "category",
+      sumCols = Seq("price"))
+    MaterializedView.create(log, d)
+    MaterializedView.refresh(spark, log, d)
+    LakeTable.deleteWhereMor(spark, log, "base", "id > 50 OR id <= 5")
+    assert(MaterializedView.refresh(spark, log, d).mode == "incremental_dv")
+    val mv = MaterializedView.read(spark, log, d).collect().head
+    assert(mv.getAs[Long]("n_rows") == 45L &&
+      mv.getAs[Double]("sum_price") == (6 to 50).map(_ * 1.5).sum)
+  }
+
   test("count/sum MV folds a MOR delete whose file a compaction removed") {
     val log = newLog()
     LakeTable.createTable(log, "base", schema)

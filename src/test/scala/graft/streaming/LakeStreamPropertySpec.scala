@@ -22,8 +22,8 @@ class LakeStreamPropertySpec extends SparkSpec {
   /** A seeded history on table `t` with value column `v`: `n` ops drawn
     * from all five, then `n` from the three the change feed can express.
     * Returns the version between the two halves. Deletes keep every
-    * multiple of 3, so no merge-on-read delete drops a whole file (an
-    * opaque version) and upserts touch only such keys. */
+    * multiple of 3, so no merge-on-read delete drops a whole file and
+    * upserts touch only such keys. */
   private def history(log: LakeLog, t: String, v: String, seed: Long,
                       n: Int): Long = {
     val rnd = new scala.util.Random(seed)
