@@ -67,8 +67,10 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
     case _ => UTF8String.fromString(v)
   }
 
-  /** Evaluate a pushed partition filter against one partition row;
-    * unexpectedly-shaped expressions conservatively keep the partition. */
+  /** Evaluate a pushed partition filter against one partition row, exactly
+    * (the scan does not re-apply it) and interpreted — generated code would
+    * inline the literals, one new class per value; unexpectedly-shaped
+    * expressions conservatively keep the partition. */
   private def evalPartitionFilter(e: Expression, row: InternalRow): Boolean =
     try {
       val bound = e.transform {
@@ -76,7 +78,7 @@ final class LakeFileIndex(spark: SparkSession, snap: Snapshot,
           val i = partSchema.fieldIndex(a.name)
           BoundReference(i, partSchema(i).dataType, nullable = true)
       }
-      Predicate.create(bound).eval(row)
+      Predicate.createInterpreted(bound).eval(row)
     } catch { case _: RuntimeException => true }
 
   /** Snapshot-wide file count — the "total" side of the scanned-vs-pruned

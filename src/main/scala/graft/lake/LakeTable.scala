@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+import org.apache.spark.scheduler.ZombieTasks
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
@@ -125,8 +126,9 @@ object LakeTable {
   /** Enforce the table's CHECK constraints on a batch of NEW rows: one
     * aggregate pass counting per-constraint violations (row violates only
     * when the predicate is FALSE — NULL passes, per SQL CHECK). Throws
-    * with every failing constraint and its row count; called before any
-    * file is staged, so a rejected batch leaves no trace in log or data.
+    * with every failing constraint and its row count; it runs as a probe
+    * beside the staged write ([[stageWithProbes]]), so a rejected batch
+    * leaves no trace in log or data.
     */
   private def enforceChecks(table: String, sch: TableSchema,
                             batch: DataFrame): Unit = {
@@ -460,14 +462,13 @@ object LakeTable {
           shaped.repartition(numFiles, clusterBy.map(col): _*)
         else if (numFiles > 1) shaped.repartition(numFiles)
         else shaped.coalesce(1)
-      // CHECK aggregate and staged write are independent over the
-      // persisted frame — overlap them. A violation still rejects the
-      // batch with nothing promoted.
-      stage(spark, log, table, sch)(arranged, txnId,
-        bloomCols = validateBloomCols(sch,
-          (sch.bloomCols ++ bloomCols).distinct),
-        alongside =
-          if (checksOn) Seq(() => enforceChecks(table, sch, shaped)) else Nil)
+      // the CHECK aggregate overlaps the staged write; a violation still
+      // rejects the batch, its staged files reclaimed
+      val blooms = validateBloomCols(sch, (sch.bloomCols ++ bloomCols).distinct)
+      stageWithProbes(Seq(() => stage(spark, log, table, sch)(arranged,
+          txnId, bloomCols = blooms)),
+        if (checksOn) Seq(() => enforceChecks(table, sch, shaped)) else Nil)
+        .head
     } finally if (reused) shaped.unpersist()
   }
 
@@ -517,29 +518,30 @@ object LakeTable {
     * caller, since that differs per op — is written under a fresh
     * `_tmp/<tag>-…` dir and promoted by [[statAndPromote]], and the dir is
     * deleted however the write ends, so a throwing write leaves no staging
-    * behind. `alongside` actions (CHECK aggregates, report counts) run
-    * overlapped with the write and finish before promotion: their failure
-    * promotes nothing. Columns whose value `partition` presets are not in
-    * the frame (compaction's flat group write); the rest of `partCols` are
-    * written as hive-style `col=value/` dirs. */
+    * behind — once no task of a failed stage still runs ([[ZombieTasks]]).
+    * Columns whose value `partition` presets are not in the frame
+    * (compaction's flat group write); the rest of `partCols` are written
+    * as hive-style `col=value/` dirs. */
   private def stage(spark: SparkSession, log: LakeLog, table: String,
                     sch: TableSchema)(
       arranged: DataFrame, tag: String,
       rewrite: Boolean = false,
       partCols: Seq[String] = sch.partCols,
       partition: Map[String, String] = Map.empty,
-      bloomCols: Seq[String] = sch.bloomCols,
-      alongside: Seq[() => Unit] = Nil): Seq[FileAdd] = {
+      bloomCols: Seq[String] = sch.bloomCols): Seq[FileAdd] = {
     val tmp = log.tmpDir(table, tag)
     try {
       withStatFriendlyWrites(spark) {
-        inParallel(alongside :+ (() => toPhys(arranged, sch)
+        toPhys(arranged, sch)
           .write.mode("overwrite").option("compression", "snappy")
           .partitionBy(partCols.filterNot(partition.contains): _*)
-          .parquet(tmp.toString): Unit))
+          .parquet(tmp.toString)
       }
       statAndPromote(spark, log, table, tmp, sch, toStructType(sch),
         rewrite, partCols, partition, bloomCols)
+    } catch { case e: Throwable =>
+      ZombieTasks.await(spark.sparkContext)
+      throw e
     } finally deleteRecursively(tmp)
   }
 
@@ -571,15 +573,7 @@ object LakeTable {
     val physBloomCols = bloomCols.map(sch.physFor)
     val hadoopConf = spark.sessionState.newHadoopConf()
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val walk = Files.walk(staged)
-    val walked = try walk.iterator().asScala.toList finally walk.close()
-    val parts = walked
-      .filter { p =>
-        val n = p.getFileName.toString
-        Files.isRegularFile(p) && n.endsWith(".parquet") &&
-          !n.startsWith(".") && !n.startsWith("_")
-      }
-      .sortBy(_.toString)
+    val parts = stagedParts(staged)
 
     // one Spark job builds every (file, column) bloom over the staged dir;
     // keyed by decoded local path so the per-file move below can look up
@@ -630,6 +624,17 @@ object LakeTable {
           rewrite = rewrite))
       }
     }
+  }
+
+  /** The parquet part files a Spark write left under `staged`, in path
+    * order (its `_SUCCESS` marker and `.crc` files excluded). */
+  private def stagedParts(staged: Path): List[Path] = {
+    val walk = Files.walk(staged)
+    try walk.iterator().asScala.toList.filter { p =>
+      val n = p.getFileName.toString
+      Files.isRegularFile(p) && n.endsWith(".parquet") &&
+        !n.startsWith(".") && !n.startsWith("_")
+    }.sortBy(_.toString) finally walk.close()
   }
 
   /** `col=value` components of `file`'s path below `staged`, hive-unescaped.
@@ -706,9 +711,10 @@ object LakeTable {
       threads.foreach(_.start())
       threads.foreach(_.join())
       if (!errs.isEmpty) {
-        // surface every failure, not just the first (diagnostics)
+        // surface every failure, not just the first (diagnostics); Spark
+        // fails every job that depends on a failed stage with ONE object
         val first = errs.poll()
-        errs.forEach(first.addSuppressed(_))
+        errs.forEach(e => if (e ne first) first.addSuppressed(e))
         throw first
       }
   }
@@ -726,28 +732,23 @@ object LakeTable {
     }
 
   /** The one commit tail of every lake data mutation: an OCC commit (with
-    * retry) of `adds` plus the removes `plan` returns against each fresh
-    * snapshot — None when the op's inputs changed under it, which aborts
-    * the commit and returns None. `plan` is a by-name block, evaluated
-    * once before committing: an op that overlaps several staged writes
-    * runs them in it, and `adds` is read afterwards. The staged files are
-    * reclaimed whenever no version ends up referencing them: the block
-    * threw (one write may have promoted before another failed), the
-    * commit threw before its entry became durable, the plan aborted, or
-    * a concurrent writer already committed this txn id. `reclaim`
-    * replaces [[discardAdds]] for an op whose adds are not staged files
-    * (the merge-on-read delete re-adds live files; its staged artifact is
-    * the DV sidecar). */
+    * retry) of the staged `adds` plus the removes `plan` returns against
+    * each fresh snapshot — None when the op's inputs changed under it,
+    * which aborts the commit and returns None. The staged files are
+    * reclaimed whenever no version ends up referencing them: the commit
+    * threw before its entry became durable, the plan aborted, or a
+    * concurrent writer already committed this txn id. `reclaim` replaces
+    * [[discardAdds]] for an op whose adds are not staged files (the
+    * merge-on-read delete re-adds live files; its staged artifact is the
+    * DV sidecar). */
   private def commitStaged(log: LakeLog, table: String, txnId: String,
-                           adds: => Seq[FileAdd], maxAttempts: Int = 3,
+                           adds: Seq[FileAdd], maxAttempts: Int = 3,
                            reclaim: Option[() => Unit] = None)(
-      plan: => (Snapshot => Option[Seq[String]])): Option[CommitResult] = {
+      plan: Snapshot => Option[Seq[String]]): Option[CommitResult] = {
     val drop = reclaim.getOrElse(() => discardAdds(adds))
     try {
-      val removes = plan
-      val staged = adds
       val res = log.commitWithRetry(table, txnId, maxAttempts)(fresh =>
-        removes(fresh).map(staged -> _))
+        plan(fresh).map(adds -> _))
       if (res.forall(_.duplicate)) drop()
       res
     } catch { case e: Throwable =>
@@ -760,6 +761,18 @@ object LakeTable {
       if (!committed) drop()
       throw e
     }
+  }
+
+  /** The staged `writes` and the `probes` (CHECK aggregates, report
+    * counts, throwing guards) overlapped on one [[inParallel]]; a failure
+    * anywhere reclaims every write that promoted, then propagates. */
+  private def stageWithProbes(writes: Seq[() => Seq[FileAdd]],
+                              probes: Seq[() => Unit]): Seq[Seq[FileAdd]] = {
+    val staged = Array.fill(writes.size)(Seq.empty[FileAdd])
+    try inParallel(probes ++ writes.zipWithIndex.map { case (w, i) =>
+      () => staged(i) = w() })
+    catch { case e: Throwable => staged.foreach(discardAdds); throw e }
+    staged.toSeq
   }
 
   /** [[commitStaged]] for many independent units (txn id, staged write,
@@ -775,15 +788,11 @@ object LakeTable {
       maxAttempts: Int,
       units: Seq[(String, () => Seq[FileAdd], Snapshot => Option[Seq[String]])])
       : Seq[(Seq[FileAdd], Option[CommitResult])] = {
-    val staged = new Array[Seq[FileAdd]](units.size)
-    try {
-      inParallel(units.zipWithIndex.map { case ((_, stageUnit, _), i) =>
-        () => staged(i) = stageUnit() })
-      units.zipWithIndex.map { case ((txnId, _, plan), i) =>
-        val adds = staged(i)
-        staged(i) = null // committed or reclaimed by the tail from here on
-        adds -> commitStaged(log, table, txnId, adds, maxAttempts)(plan)
-      }
+    val staged = stageWithProbes(units.map(_._2), Nil).toArray
+    try units.zipWithIndex.map { case ((txnId, _, plan), i) =>
+      val adds = staged(i)
+      staged(i) = null // committed or reclaimed by the tail from here on
+      adds -> commitStaged(log, table, txnId, adds, maxAttempts)(plan)
     } catch { case e: Throwable =>
       staged.filter(_ != null).foreach(discardAdds)
       throw e
@@ -809,6 +818,40 @@ object LakeTable {
   private def lostInputs(op: String): Nothing =
     throw new CommitConflictException(
       s"$op lost its input files to a concurrent commit")
+
+  /** What [[rewriteRows]] committed: survivor files, new-row files. */
+  private final case class RowWrite(kept: Seq[FileAdd], added: Seq[FileAdd],
+                                    result: CommitResult)
+
+  /** The one transaction of every copy-on-write row write (DELETE, UPDATE,
+    * replaceWhere, upsert, MERGE): the survivors of `inputs` (by-name, run
+    * on the rewrite's own thread) rewrite as layout (`rewrite = true`,
+    * invisible to the change feed) under `_tmp/<txn>-rw-…`, `newRows` stage
+    * as logical adds under `_tmp/<txn>-new-…`, overlapped with the
+    * `probes` ([[stageWithProbes]]). ONE commit then removes the inputs if
+    * each is still live with the same DV and `guard` holds on the fresh
+    * snapshot; otherwise the op lost its inputs and throws. */
+  private def rewriteRows(spark: SparkSession, log: LakeLog, table: String,
+                          sch: TableSchema, txnId: String, op: String,
+                          maxAttempts: Int = 3)(
+      inputs: => Seq[FileAdd],
+      survivors: Seq[FileAdd] => DataFrame,
+      newRows: Option[DataFrame] = None,
+      probes: Seq[() => Unit] = Nil,
+      guard: Snapshot => Boolean = _ => true): RowWrite = {
+    lazy val in = inputs
+    val staged = stageWithProbes(
+      (() => if (in.isEmpty) Nil else stage(spark, log, table, sch)(
+        survivors(in).coalesce(in.size), s"$txnId-rw", rewrite = true)) +:
+        newRows.toSeq.map(df => () =>
+          stage(spark, log, table, sch)(df, s"$txnId-new")),
+      probes)
+    val (kept, added) = (staged.head, staged.drop(1).flatten)
+    val result = commitStaged(log, table, txnId, kept ++ added, maxAttempts)(
+      cur => removeIfUnchanged(in)(cur).filter(_ => guard(cur)))
+      .getOrElse(lostInputs(op))
+    RowWrite(kept, added, result)
+  }
 
   /** Load an external file into the table — the reference's insert/load
     * source (`pkg/coordinator/table_service.go:121-244`: external file →
@@ -1020,15 +1063,11 @@ object LakeTable {
     // predicate keeps the row, so retain !coalesce(pred, false), not !pred.
     // Partitioned tables reconstruct partition columns before evaluating
     // (the predicate may reference them) and re-split on write.
-    val retained = readFiles(spark, sch, candidates)
-      .filter(!coalesce(pred, lit(false)))
-    val adds = stage(spark, log, table, sch)(
-      retained.coalesce(math.max(1, candidates.size)), txnId, rewrite = true)
-    val result = commitStaged(log, table, txnId, adds)(
-      removeIfUnchanged(candidates)).getOrElse(lostInputs("delete"))
-    val deleted = candidates.map(_.liveRows).sum - adds.map(_.rows).sum
+    val w = rewriteRows(spark, log, table, sch, txnId, "delete")(candidates,
+      readFiles(spark, sch, _).filter(!coalesce(pred, lit(false))))
+    val deleted = candidates.map(_.liveRows).sum - w.kept.map(_.rows).sum
     DeleteReport(candidates.size, snap.files.size - candidates.size,
-      deleted, result.version)
+      deleted, w.result.version)
   }
 
   final case class UpdateReport(filesRewritten: Int, filesUntouched: Int,
@@ -1046,7 +1085,7 @@ object LakeTable {
     * SET expressions may reference any column of the row (`a = a + b`);
     * partition columns are not updatable (that is a row MOVE between
     * partitions — delete + insert expresses it honestly). CHECK
-    * constraints are enforced on the rewritten rows before staging.
+    * constraints are enforced on the rewritten rows.
     */
   def updateWhere(spark: SparkSession, log: LakeLog, table: String,
                   predicate: String, sets: Seq[(String, String)],
@@ -1095,21 +1134,17 @@ object LakeTable {
         case None => col(f.name)
       }
     }.toIndexedSeq: _*)
-    // three independent actions — CHECK aggregate, matched-row count for
-    // the report, staged rewrite — overlapped (guide §2.6). A CHECK
-    // violation still rejects the statement with nothing promoted.
+    // probes beside the rewrite: the CHECK aggregate (a violation rejects
+    // the statement) and the matched-row count for the report
     var rowsUpdated = 0L
-    val adds = stage(spark, log, table, sch)(
-      updated.coalesce(math.max(1, candidates.size)), txnId, rewrite = true,
-      alongside = Seq(
+    val w = rewriteRows(spark, log, table, sch, txnId, "update")(candidates,
+      _ => updated, probes = Seq(
         () => enforceChecks(table, sch, updated),
         () => { rowsUpdated = src.agg(coalesce(
             sum(when(hit, 1L).otherwise(0L)), lit(0L)).as("n"))
           .head.getLong(0) }))
-    val result = commitStaged(log, table, txnId, adds)(
-      removeIfUnchanged(candidates)).getOrElse(lostInputs("update"))
     UpdateReport(candidates.size, snap.files.size - candidates.size,
-      rowsUpdated, result.version)
+      rowsUpdated, w.result.version)
   }
 
   /** ALTER TABLE ... ADD CONSTRAINT name CHECK (pred) — Delta semantics:
@@ -1252,7 +1287,7 @@ object LakeTable {
     * Semantics guards:
     *  - every incoming row must satisfy `predicate` (else the "replace"
     *    would smuggle rows outside the replaced region) — violations
-    *    reject the whole statement before any staging;
+    *    reject the whole statement and nothing staged survives;
     *  - surviving rows of partially-matching files are rewritten
     *    copy-on-write with deletion-vector holes already subtracted;
     *    their re-adds carry `rewrite = true` so the change feed reports
@@ -1282,44 +1317,28 @@ object LakeTable {
       // concurrent appends at every commit attempt
       val region = pushedFilters(spark, snap, pred)
       val candidates = LakeFileIndex.prune(snap.files, region)
-      var keepAdds: Seq[FileAdd] = Nil
-      var newAdds: Seq[FileAdd] = Nil
-      var violations = 0L
       val snapPaths = snap.files.map(_.path).toSet
-      val result = commitStaged(log, table, txnId, keepAdds ++ newAdds,
-          maxAttempts) {
-        // four independent actions, overlapped: CHECK
-        // aggregate, region-violation count, survivor rewrite+promote, new
-        // rows write+promote. A check/violation failure still rejects the
-        // whole statement with no trace: the tail reclaims whatever the
-        // write pipelines promoted.
-        inParallel(Seq(
+      // NULL predicate keeps the row (same rule as SQL DELETE): replaced =
+      // pred IS TRUE, survivors = everything else. A CHECK or region
+      // violation rejects the whole statement with no trace.
+      val outside = !coalesce(pred, lit(false))
+      val w = rewriteRows(spark, log, table, sch, txnId, "replaceWhere",
+          maxAttempts)(candidates, readFiles(spark, sch, _).filter(outside),
+        newRows = Some(if (numFiles > 1) shaped.repartition(numFiles)
+          else shaped.coalesce(1)),
+        probes = Seq(
           () => enforceChecks(table, sch, shaped),
-          () => { violations =
-            shaped.filter(!coalesce(pred, lit(false))).count() },
-          () => if (candidates.nonEmpty) {
-            // NULL predicate keeps the row (same rule as SQL DELETE):
-            // replaced = pred IS TRUE, survivors = everything else
-            val retained = readFiles(spark, sch, candidates)
-              .filter(!coalesce(pred, lit(false)))
-            keepAdds = stage(spark, log, table, sch)(
-              retained.coalesce(math.max(1, candidates.size)),
-              s"$txnId-keep", rewrite = true)
-          },
-          () => newAdds = stage(spark, log, table, sch)(
-            if (numFiles > 1) shaped.repartition(numFiles)
-            else shaped.coalesce(1), s"$txnId-new")))
-        if (violations > 0)
-          throw new LakeValidationException(
-            s"replaceWhere: $violations incoming row(s) do not satisfy " +
-              s"'$predicate' (rows outside the replaced region)")
-        // the rewrite guard, plus Delta's append conflict
-        cur => removeIfUnchanged(candidates)(cur).filter(_ =>
-          !replaceAppendConflict(snapPaths, cur.files, region))
-      }.getOrElse(lostInputs("replaceWhere"))
+          () => {
+            val violations = shaped.filter(outside).count()
+            if (violations > 0) throw new LakeValidationException(
+              s"replaceWhere: $violations incoming row(s) do not satisfy " +
+                s"'$predicate' (rows outside the replaced region)")
+          }),
+        // Delta's append conflict, beside the rewrite guard
+        guard = cur => !replaceAppendConflict(snapPaths, cur.files, region))
       ReplaceReport(candidates.size, snap.files.size - candidates.size,
-        candidates.map(_.liveRows).sum - keepAdds.map(_.rows).sum,
-        newAdds.map(_.rows).sum, result.version)
+        candidates.map(_.liveRows).sum - w.kept.map(_.rows).sum,
+        w.added.map(_.rows).sum, w.result.version)
     } finally shaped.unpersist()
   }
 
@@ -1398,13 +1417,7 @@ object LakeTable {
             .repartition(1).sortWithinPartitions("file", "pos")
             .write.mode("overwrite").option("compression", "snappy")
             .parquet(staged.toString)
-          val listed = Files.list(staged)
-          val part = try listed.iterator().asScala.toList finally listed.close()
-          val one = part.filter { p =>
-            val n = p.getFileName.toString
-            Files.isRegularFile(p) && n.endsWith(".parquet") &&
-              !n.startsWith(".") && !n.startsWith("_")
-          } match {
+          val one = stagedParts(staged) match {
             case Seq(p) => p
             case other => throw new IllegalStateException(
               s"expected one staged dv file, found ${other.size}")
@@ -1432,12 +1445,13 @@ object LakeTable {
 
   /** Files that might hold a key in `[lo, hi]`, the key range of an
     * upsert's update set or a merge's source: `key >= lo AND key <= hi`
-    * with the probe row's typed values as literals. A null bound (an empty
-    * or all-null key set) keeps every file. */
+    * with the probe row's typed values as literals. A null bound means the
+    * key set holds no non-null key, and a NULL key matches no row (SQL
+    * equality), so no file is a candidate. */
   private def keyRangeCandidates(snap: Snapshot, sch: TableSchema,
                                  keyCol: String, lo: Any,
                                  hi: Any): Seq[FileAdd] =
-    if (lo == null || hi == null) snap.files
+    if (lo == null || hi == null) Nil
     else {
       val dt = toStructType(sch)(keyCol).dataType
       val key = AttributeReference(sch.physFor(keyCol), dt)()
@@ -1458,41 +1472,18 @@ object LakeTable {
       return CommitResult(v, duplicate = true))
     val snap = log.snapshot(table)
     val sch = snap.schema.get
-    // the update set is read by the checks aggregate, the key projection,
-    // the key-range aggregate AND the staged write — materialize once
+    // read by the CHECK and key-range aggregates, the survivors' anti-join
+    // and the staged write — materialize once. The key-range probe picks
+    // the inputs on the survivor rewrite's own thread.
     val shaped = shape(table, sch, updates).persist()
     try {
-    enforceChecks(table, sch, shaped)
-    val keys = shaped.select(keyCol)
-    // Two fully independent pipelines, overlapped end to end, so no
-    // action waits out another's planning gap:
-    //  A: key-range probe → stats-prune → survivor rewrite → promote
-    //  B: new-rows write → promote
-    // Disjoint staged dirs, and promoted names embed fresh UUIDs, so the
-    // two promotes never collide. Thread.join gives the vars below their
-    // happens-before.
-    var candidates: Seq[FileAdd] = Nil
-    var rwAdds: Seq[FileAdd] = Nil
-    var newAdds: Seq[FileAdd] = Nil
-    commitStaged(log, table, txnId, rwAdds ++ newAdds) {
-      inParallel(Seq(
-        () => {
+      val keys = shaped.select(keyCol)
+      rewriteRows(spark, log, table, sch, txnId, "upsert")({
           val r = keys.agg(min(keyCol), max(keyCol)).collect().head
-          candidates =
-            keyRangeCandidates(snap, sch, keyCol, r.get(0), r.get(1))
-          // stage survivors (layout rewrite of untouched rows) apart
-          // from the update set (logical adds), so the CDC feed can
-          // replay upserted rows without replaying the survivors
-          if (candidates.nonEmpty)
-            rwAdds = stage(spark, log, table, sch)(
-              readFiles(spark, sch, candidates)
-                .join(keys, Seq(keyCol), "left_anti")
-                .coalesce(candidates.size), s"$txnId-rw", rewrite = true)
-        },
-        () => newAdds = stage(spark, log, table, sch)(
-          shaped.coalesce(1), s"$txnId-new")))
-      removeIfUnchanged(candidates)
-    }.getOrElse(lostInputs("upsert"))
+          keyRangeCandidates(snap, sch, keyCol, r.get(0), r.get(1))
+        }, readFiles(spark, sch, _).join(keys, Seq(keyCol), "left_anti"),
+        newRows = Some(shaped.coalesce(1)),
+        probes = Seq(() => enforceChecks(table, sch, shaped))).result
     } finally shaped.unpersist()
   }
 
@@ -1524,11 +1515,12 @@ object LakeTable {
     * NULL-keyed source rows never match (SQL equality), flowing to the
     * NOT MATCHED clause like Delta.
     *
-    * Scale/commit shape is [[upsert]]'s: touched files = stats-pruned
-    * candidates for the source key range; survivors rewrite as layout
-    * (`rewrite = true`, invisible to CDC), updated+inserted rows stage
-    * as logical adds; one atomic OCC commit with the same concurrent-DV
-    * conflict check; idempotent under txn-id replay.
+    * Scale/commit shape is [[upsert]]'s ([[rewriteRows]]): touched files
+    * = stats-pruned candidates for the source key range; survivors
+    * rewrite as layout (`rewrite = true`, invisible to CDC),
+    * updated+inserted rows stage as logical adds; one atomic OCC commit
+    * with the same concurrent-DV conflict check; idempotent under txn-id
+    * replay.
     */
   def merge(spark: SparkSession, log: LakeLog, table: String,
             source: DataFrame, keyCol: String,
@@ -1548,10 +1540,9 @@ object LakeTable {
           "(reserved for the source side in clause conditions)")
     val shaped = shape(table, sch, source).persist()
     try {
-    // ONE aggregate answers the ambiguous-match guard AND the key range
-    // (was two jobs, each with its own planning gap): per-key group
-    // counts, then max(count) + min/max key in the same pass. min/max over
-    // the group keys equal min/max over the non-null keys.
+    // ONE aggregate answers the ambiguous-match guard AND the key range:
+    // per-key group counts, then max(count) + min/max key in the same
+    // pass (min/max over the group keys = over the non-null keys)
     val kprobe = shaped.filter(col(keyCol).isNotNull)
       .groupBy(keyCol).agg(count(lit(1)).as("__c"))
       .agg(max(col("__c")).as("__maxc"),
@@ -1590,8 +1581,7 @@ object LakeTable {
         .persist()
     try {
     val updates =
-      if (paired == null) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
+      if (paired == null) readFiles(spark, sch, Nil)
       else paired.filter(col("__action") === "u")
         .select(st.fieldNames.toSeq.map(n => col(s"src_$n").as(n)): _*)
     val inserts = insertWhen match {
@@ -1616,46 +1606,28 @@ object LakeTable {
     }
     val newRows = updates.unionByName(inserts).persist()
     try {
-    // three independent probe actions — the CHECK aggregate over the new
-    // rows, the action-count aggregate over the cached pair frame, and
-    // the new-row count — overlapped so they pay one planning gap's
-    // worth of wall, not three (guide §2.6). Each was already a single
-    // folded aggregate (round 13); this round overlaps them.
+    // probes beside the two writes: the CHECK aggregate over the new
+    // rows, the new-row count and the action counts over the cached pair
+    // frame, each one folded aggregate
     var nUpdated = 0L; var nDeleted = 0L; var nKept = 0L
     var newRowCount = 0L
-    inParallel(Seq(
-      () => enforceChecks(table, sch, newRows),
-      () => { newRowCount = newRows.count() }) ++
-      (if (paired == null) Nil else Seq(() => {
-        val r = paired.agg(
-          sum(when(col("__action") === "u", 1L).otherwise(0L)),
-          sum(when(col("__action") === "d", 1L).otherwise(0L)),
-          sum(when(col("__action") === "k", 1L).otherwise(0L))).head()
-        def n(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-        nUpdated = n(0); nDeleted = n(1); nKept = n(2)
-      })))
-    val nInserted = newRowCount - nUpdated
-    val keptRows =
-      if (paired == null) null
-      else paired.filter(col("__action") === "k")
-        .select(st.fieldNames.toSeq.map(col): _*)
-    // independent staged write+promote pipelines, overlapped end to end
-    // (same rationale as upsert)
-    var rwAdds: Seq[FileAdd] = Nil
-    var newAdds: Seq[FileAdd] = Nil
-    val result = commitStaged(log, table, txnId, rwAdds ++ newAdds) {
-      val rwWrite: Option[() => Unit] =
-        if (paired == null) None
-        else Some(() => rwAdds = stage(spark, log, table, sch)(
-          keptRows.coalesce(math.max(1, candidates.size)), s"$txnId-rw",
-          rewrite = true))
-      val newWrite: () => Unit = () => newAdds = stage(spark, log, table,
-        sch)(newRows.coalesce(1), s"$txnId-new")
-      inParallel(rwWrite.toSeq :+ newWrite)
-      removeIfUnchanged(candidates)
-    }.getOrElse(lostInputs("merge"))
-    MergeResult(result.version, nUpdated, nDeleted, nInserted,
-      kept = nKept, duplicate = result.duplicate)
+    val w = rewriteRows(spark, log, table, sch, txnId, "merge")(candidates,
+      _ => paired.filter(col("__action") === "k")
+        .select(st.fieldNames.toSeq.map(col): _*),
+      newRows = Some(newRows.coalesce(1)),
+      probes = Seq(
+        () => enforceChecks(table, sch, newRows),
+        () => { newRowCount = newRows.count() }) ++
+        (if (paired == null) Nil else Seq(() => {
+          val r = paired.agg(
+            sum(when(col("__action") === "u", 1L).otherwise(0L)),
+            sum(when(col("__action") === "d", 1L).otherwise(0L)),
+            sum(when(col("__action") === "k", 1L).otherwise(0L))).head()
+          def n(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+          nUpdated = n(0); nDeleted = n(1); nKept = n(2)
+        })))
+    MergeResult(w.result.version, nUpdated, nDeleted,
+      newRowCount - nUpdated, kept = nKept, duplicate = w.result.duplicate)
     } finally newRows.unpersist()
     } finally if (paired != null) paired.unpersist()
     } finally shaped.unpersist()

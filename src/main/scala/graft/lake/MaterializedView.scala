@@ -329,8 +329,8 @@ object MaterializedView {
           if (mRows == 0L) {
             // logically-empty window (layout-only / schema-only entries):
             // advance the high-water mark with a metadata-only commit —
-            // routing this through upsert would rewrite the ENTIRE MV (an
-            // empty update set defeats its key-range pruning)
+            // routing this through upsert would rewrite no file but still
+            // pay its key-range probe and new-row write jobs
             log.commitWithRetry(d.name, txnFor(d, cur, dimCur))(
               _ => Some((Nil, Nil)))
             RefreshResult(mode, last, cur)

@@ -94,8 +94,8 @@ object Scd {
       .localCheckpoint() // read once for the guard, once by upsert
     if (delta.isEmpty)
       // an all-echo batch (the steady-state CDC case) must not pay
-      // upsert's rewrite: with no keys, its range prune can't hold and
-      // the whole table would rewrite for nothing. It still REGISTERS
+      // upsert's jobs: with no keys it rewrites no file, but still runs
+      // its key-range probe and new-row write. It still REGISTERS
       // under its txnId (an empty commit entry) so idempotency is a
       // durable fact, not a bet that a replay recomputes the same echo
       // — reusing the id later with different data short-circuits as a

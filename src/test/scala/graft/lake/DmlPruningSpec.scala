@@ -81,6 +81,37 @@ class DmlPruningSpec extends SparkSpec {
     assert(LakeTable.read(spark, log, "t").count() == 500L)
   }
 
+  test("an empty or all-NULL key set rewrites no file") {
+    val log = disjoint("null-keys", 3)
+    val schema = LakeTable.toStructType(log.snapshot("t").schema.get)
+    def frame(rows: Row*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema)
+    def tuples(rows: Seq[Row]) = rows.map(r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getDouble(1))).sorted
+    var model = (1L to 300L).map(i => Row(i, i * 1.0))
+    /** `op`'s result and the files of "t" it removed */
+    def removing[A](op: => A): (A, Set[String]) = {
+      val before = log.snapshot("t").files.map(_.path).toSet
+      val a = op
+      a -> (before -- log.snapshot("t").files.map(_.path))
+    }
+
+    assert(removing(LakeTable.upsert(spark, log, "t", frame(), "id"))
+      ._2.isEmpty)
+    val nullKeys = Seq(Row(null, 1.5), Row(null, 2.5))
+    assert(removing(LakeTable.upsert(spark, log, "t", frame(nullKeys: _*),
+      "id"))._2.isEmpty)
+    model ++= nullKeys
+    val source = Seq(Row(null, 3.5), Row(null, 4.5))
+    val (m, gone) = removing(LakeTable.merge(spark, log, "t",
+      frame(source: _*), "id", Seq(LakeTable.MergeClause("update"))))
+    assert(gone.isEmpty)
+    model ++= source
+    assert((m.updated, m.deleted, m.inserted, m.kept) == (0L, 0L, 2L, 0L))
+    assert(tuples(LakeTable.read(spark, log, "t").collect().toSeq) ==
+      tuples(model))
+  }
+
   // ---- property: random predicates over every stat-pruned type ----
 
   private val typed = StructType(Seq(

@@ -79,6 +79,32 @@ class ParamScanSpec extends SparkSpec {
     assert(r == Row(rs.size.toLong, rs.map(_ * 1.5).sum))
   }
 
+  test("a new partition-filter value compiles no class") {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType)))
+    val log = new LakeLog(tmpDir("param-part"))
+    LakeTable.createTable(log, "t", schema, partitionBy = Seq("p"))
+    LakeTable.insert(spark, log, "t", spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        (0 until 80).map(k => Row(k.toLong, k % 8)), 1), schema))
+    assert(log.snapshot("t").files.size == 8)
+    def slice(s: SparkSession, p: Int): DataFrame =
+      LakeTable.readIndexed(s, log, "t").filter(col("p") === p)
+        .agg(count(lit(1)), sum("id"))
+    slice(spark, 1).head()
+    slice(spark, 2).head()
+    val before = compiles()
+    val got = Seq(3, 4).map(p => slice(spark, p).head())
+    assert(compiles() - before == 0,
+      "a new partition-filter value compiled a new class")
+    Seq(3, 4).zip(got).foreach { case (p, r) =>
+      val ids = (0 until 80).filter(_ % 8 == p)
+      assert(r == Row(ids.size.toLong, ids.sum.toLong))
+      val (plain, param) = arms(slice(_, p))(_.collect().toSeq)
+      assert(param == plain && param == Seq(r))
+    }
+  }
+
   // every hoisted type: int, long, float, double, date and timestamp
   // columns, short, byte and timestamp_ntz through casts
   private val ints = Seq(Int.MinValue, -100, -7, -1, 0, 1, 7, 42, 99,
