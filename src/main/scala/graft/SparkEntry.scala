@@ -1,12 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.operators.QueryEngine
-import graft.operators.QueryEngine.{AggregateSpec, SimpleQuery}
-import graft.operators.{Decontaminate, Dedup, EmbeddingPca, Multimodal, Similarity}
-import graft.functions.TextFunctions._
-import graft.sources.Tables
+import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -17,95 +12,12 @@ import graft.sources.Tables
   * floating aggregates (fp summation order differs across engines).
   */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Streaming state parallelism: each micro-batch commits one state-store
-    * delta PER SHUFFLE PARTITION (fsync'd), so a stateful query's fixed
-    * cost is partitions × batches × stores regardless of data volume —
-    * size the conf to the stream's key cardinality, not the session
-    * default. The streaming gate queries pin 4 for the test corpus —
-    * measured: 8 → 4 cuts the stateful queries ~30% at sf0.1 purely in
-    * state-store delta commits, and the corpus key cardinalities (≤ 1.5k
-    * users, hundreds of agg groups) nowhere near saturate 4 stores (a
-    * production deployment sizes this to executor count); restored after.
-    */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(f: => T): T = {
-    val old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try f finally s.conf.set("spark.sql.shuffle.partitions", old)
-  }
-
-  /** Land `ev` (must carry `ts`) as `n` event-time-range chunk files with
-    * PINNED strictly-increasing mtimes — the file-stream source orders
-    * batches by modification time, and that order is the replay semantics
-    * the streaming oracle queries depend on. One write job for all chunks
-    * (dynamic partition write), then each part file moves into place.
-    */
-  /** Fixture memo: identical (canonical input plan, n) requests reuse the
-    * already-staged chunk dir — harness processes (Verify/Bench) run many
-    * stream queries over the same corpus slice, and min-of-N bench
-    * repetition would otherwise re-stage identical read-only files every
-    * run, billing fixture construction to the streaming operator being
-    * measured. Content is deterministic (same plan ⇒ same rows, pinned
-    * mtimes), and every consumer only READS the dir.
-    */
-  private val chunkCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), java.nio.file.Path]()
-
-  private def writeTimeChunks(ev: DataFrame, n: Int,
-                              tmp: java.nio.file.Path): java.nio.file.Path =
-    // the canonicalized plan does NOT pin the data (LogicalRelation's
-    // string form elides the file paths), so the source files join the
-    // key — without them, the same projection over two scale-factor dirs
-    // in one JVM would silently reuse the first dir's staged chunks
-    chunkCache.computeIfAbsent(
-      (ev.inputFiles.sorted.mkString(","),
-        ev.queryExecution.logical.canonicalized.toString, n),
-      _ => writeTimeChunksUncached(ev, n, tmp))
-
-  private def writeTimeChunksUncached(ev: DataFrame, n: Int,
-                              tmp: java.nio.file.Path): java.nio.file.Path = {
-    import scala.jdk.CollectionConverters._
-    val srcDir = tmp.resolve("src")
-    java.nio.file.Files.createDirectories(srcDir)
-    val Array(loMs, hiMs) = ev
-      .agg(min(unix_millis(col("ts"))), max(unix_millis(col("ts"))))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    val span = math.max(1L, (hiMs - loMs) / n + 1)
-    val stage = tmp.resolve("stage")
-    ev.withColumn("__chunk",
-        floor((unix_millis(col("ts")) - loMs) / span).cast("int"))
-      // hash-repartition BY the chunk column: still exactly one file per
-      // chunk dir (a value's rows land in one partition), but the n chunk
-      // files encode in parallel instead of through one task; the sort
-      // keeps within-file row order deterministic (the old single-task
-      // write was deterministic by construction)
-      .repartition(n, col("__chunk"))
-      .sortWithinPartitions("ts", "event_id")
-      .write.partitionBy("__chunk").parquet(stage.toString)
-    (0 until n).foreach { i =>
-      val dir = stage.resolve(s"__chunk=$i")
-      if (java.nio.file.Files.exists(dir)) {
-        val part = java.nio.file.Files.list(dir).iterator().asScala
-          .find(_.toString.endsWith(".parquet")).get
-        val dst = srcDir.resolve(f"chunk$i%02d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + i * 60000L))
-      }
-    }
-    srcDir
-  }
-
-  /** documents arrives as ONE scan partition (single parquet row group) —
-    * fan out before per-row text analysis so the regex work parallelizes;
-    * results are order-insensitive (every query orders its output).
-    */
-  private def docsSpread(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
+  /** Every declared query by name, assembled once from the family
+    * modules; a name declared twice fails here, at first use. */
+  private val declared: Map[String, Q] = Q.byName(
+    RelationalQueries.all ++ FunctionQueries.all ++ ProfilingQueries.all ++
+      TextQueries.all ++ StreamingQueries.all ++ MultimodalQueries.all ++
+      LakeQueries.all ++ EmbeddingQueries.all ++ PipelineQueries.all)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's golden aggregation shape
@@ -114,5951 +26,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_agg_golden")(spark, "/root/testdata/sf0.001")
 
-  /** Recall of an approximate pair generator against an exact truth pair
-    * set, as integer ppm — the falsifiable number the `_recall` gate
-    * queries pin for the production (Spark-internal-hash) dedup faces
-    * whose pair sets DuckDB cannot replay. Eager by design: the gate
-    * queries `require` the floor at build time so a recall regression
-    * fails the correctness gate loudly (an attempted query with no
-    * output FAILS) instead of shipping a silently thinner pair set.
-    */
-  private def pairRecallPpm(cand: DataFrame, truth: DataFrame,
-                            floorPpm: Long, what: String): Long = {
-    val tPairs = truth.select("a_id", "b_id")
-    val nTruth = tPairs.count()
-    val nHit = tPairs
-      .join(cand.select("a_id", "b_id"), Seq("a_id", "b_id"), "left_semi")
-      .count()
-    val ppm = if (nTruth == 0L) 1000000L else nHit * 1000000L / nTruth
-    System.err.println(
-      s"[recall] $what: $nHit of $nTruth truth pairs = $ppm ppm " +
-        s"(floor $floorPpm)")
-    require(ppm >= floorPpm,
-      s"$what recall $ppm ppm fell below the $floorPpm ppm floor " +
-        s"($nHit of $nTruth truth pairs recovered)")
-    nTruth
-  }
-
-  /** Which lake tables a query's OPTIMIZED plan scans — the in-query
-    * plan pin the MV-rewrite queries `require` on (a rewrite that
-    * silently stopped firing would still hash-match, so the pin is what
-    * makes the plan claim falsifiable). */
-  private def lakeScans(q: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.datasources.{
-      HadoopFsRelation, LogicalRelation}
-    q.queryExecution.optimizedPlan.collectLeaves().flatMap {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation => h.location match {
-          case i: graft.lake.LakeFileIndex => Some(i.tableName)
-          case _ => None
-        }
-        case _ => None
-      }
-      case _ => None
-    }
-  }
-
   /** NOTE on the trailing `.orderBy(...)` in every query: the driver's
     * correctness gate hashes sorted rows, so outputs are made deterministic
     * here. The sorts are gate artifacts, not operator cost — a production
     * caller would drop them (and plans without them lose the final
     * rangepartitioning exchange).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- §2.1 scans -----------------------------------------------------
-    "q_scan" -> ((s, d) =>
-      t(s, d, "lineitem").orderBy("l_orderkey", "l_linenumber")),
-
-    // ---- §2.2 filter / projection (reference 3-token grammar) ----------
-    "q_filter" -> ((s, d) =>
-      QueryEngine.run(t(s, d, "lineitem"),
-          SimpleQuery("lineitem", filter = Some("l_quantity > 45")))
-        .orderBy("l_orderkey", "l_linenumber")),
-    "q_filter_string" -> ((s, d) =>
-      QueryEngine.run(t(s, d, "orders"),
-          SimpleQuery("orders", filter = Some("o_orderstatus = 'F'"),
-            projection = Seq("o_orderkey", "o_totalprice")))
-        .orderBy("o_orderkey")),
-    "q_project" -> ((s, d) =>
-      QueryEngine.run(t(s, d, "lineitem"),
-          SimpleQuery("lineitem",
-            projection = Seq("l_orderkey", "l_linenumber", "l_extendedprice")))
-        .orderBy("l_orderkey", "l_linenumber")),
-
-    // ---- §2.4 aggregations (count/sum/avg/min/max, COUNT(*)) -----------
-    "q_agg" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_returnflag")
-        .agg(count(lit(1)).as("cnt"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(avg("l_extendedprice"), 4).as("avg_price"),
-          round(min("l_extendedprice"), 2).as("min_price"),
-          round(max("l_extendedprice"), 2).as("max_price"))
-        .orderBy("l_returnflag")),
-    // The async job lifecycle (submit → poll → fetch result location)
-    // exercised inside the correctness gate: the SAME aggregate as q_agg,
-    // but executed through Jobs.JobManager — written to the job's result
-    // path on a worker thread, polled to COMPLETED, read back from the
-    // result location. The oracle hash thus covers the whole round-trip.
-    "q_job_lifecycle" -> ((s, d) => {
-      val jm = new graft.api.Jobs.JobManager(s,
-        java.nio.file.Files.createTempDirectory("graftjobs").toString)
-      val id = jm.submit(
-        t(s, d, "lineitem").groupBy("l_returnflag")
-          .agg(count(lit(1)).as("cnt"),
-            round(sum("l_quantity"), 2).as("sum_qty")))
-      val status = jm.await(id)
-      assert(status.status == graft.api.Jobs.Completed, status.toString)
-      jm.result(id).orderBy("l_returnflag")
-    }),
-
-    "q_agg_nogroup" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .agg(count(lit(1)).as("cnt"),
-          round(sum("l_extendedprice"), 2).as("sum_price"),
-          round(avg("l_quantity"), 6).as("avg_qty"),
-          round(min("l_discount"), 2).as("min_disc"),
-          round(max("l_tax"), 2).as("max_tax"))),
-    "q_agg_golden" -> ((s, d) =>
-      // golden_query_test.go:127: SELECT category, COUNT(*), SUM(price*qty),
-      // AVG(price) GROUP BY category ORDER BY category — on lineitem.
-      t(s, d, "lineitem").groupBy(col("l_returnflag").as("category"))
-        .agg(count(lit(1)).as("total_orders"),
-          round(sum(col("l_extendedprice") * col("l_quantity")), 2)
-            .as("total_revenue"),
-          round(avg("l_extendedprice"), 4).as("avg_price"))
-        .orderBy("category")),
-    "q_agg_having" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_suppkey")
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"),
-          count(lit(1)).as("cnt"))
-        .filter(col("cnt") > 100)
-        .orderBy("l_suppkey")),
-    "q_simple_api" -> ((s, d) =>
-      // Full reference structured-query path: filter grammar + agg specs +
-      // default `{fn}_{col}` output naming (task_executor.rs:650-653).
-      QueryEngine.run(t(s, d, "lineitem"),
-        SimpleQuery("lineitem",
-          filter = Some("l_quantity >= 30"),
-          groupBy = Seq("l_returnflag"),
-          aggregates = Seq(
-            AggregateSpec("count", "*"),
-            AggregateSpec("sum", "l_quantity"),
-            AggregateSpec("min", "l_extendedprice"),
-            AggregateSpec("max", "l_extendedprice"))))),
-
-    // ---- §2.6 sorts / limits / top-k ------------------------------------
-    "q_sort_limit" -> ((s, d) =>
-      t(s, d, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(10)),
-    "q_distinct" -> ((s, d) =>
-      t(s, d, "lineitem").select("l_returnflag", "l_linestatus").distinct()
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    // ---- §2.3 joins (extension beyond reference — it has none) ---------
-    "q_join_broadcast" -> ((s, d) =>
-      t(s, d, "orders")
-        .join(broadcast(t(s, d, "customer")),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("revenue"))
-        .orderBy("c_mktsegment")),
-    "q_join_multi" -> ((s, d) => {
-      // TPC-H Q5 shape: 5-way join, small dims broadcast by AQE/stats.
-      val li = t(s, d, "lineitem"); val o = t(s, d, "orders")
-      val c = t(s, d, "customer"); val n = t(s, d, "nation")
-      val r = t(s, d, "region")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy("r_name", "n_name")
-    }),
-    "q_join_full" -> ((s, d) => {
-      // FULL OUTER join with BOTH sides genuinely unmatched: customers
-      // holding only finished ('F') orders vs only open ('O') orders.
-      // Both inputs aggregate on o_custkey first, so the full-outer
-      // SortMergeJoin reuses the aggregates' hash partitioning — one
-      // shuffle per side, none for the join itself, and the join carries
-      // one row per customer, not per order. (A full outer can never
-      // broadcast — both sides must see all unmatched keys — so shrinking
-      // the sides BEFORE the join is the 100 TB lever.)
-      val o = t(s, d, "orders")
-      val fin = o.filter(col("o_orderstatus") === "F").groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_f"), round(sum("o_totalprice"), 2).as("rev_f"))
-        .withColumnRenamed("o_custkey", "ck_f")
-      val open = o.filter(col("o_orderstatus") === "O").groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_o"), round(sum("o_totalprice"), 2).as("rev_o"))
-        .withColumnRenamed("o_custkey", "ck_o")
-      fin.join(open, col("ck_f") === col("ck_o"), "full_outer")
-        .select(coalesce(col("ck_f"), col("ck_o")).as("custkey"),
-          coalesce(col("n_f"), lit(0L)).as("n_f"),
-          coalesce(col("rev_f"), lit(0.0)).as("rev_f"),
-          coalesce(col("n_o"), lit(0L)).as("n_o"),
-          coalesce(col("rev_o"), lit(0.0)).as("rev_o"))
-        .orderBy("custkey")
-    }),
-    "q_udaf_weighted" -> ((s, d) => {
-      // typed Aggregator UDAF (partial-merge like any built-in): per
-      // return flag, the quantity-weighted mean unit price — checked
-      // against the closed-form sum(p*q)/sum(q)
-      graft.functions.Aggregators.register(s)
-      t(s, d, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(round(call_function("graft_weighted_mean",
-          col("l_extendedprice") / col("l_quantity"), col("l_quantity")), 4)
-          .as("w_mean_unit_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    "q_join_skew_salted" -> ((s, d) => {
-      // salted skew join hash-checked against the plain join: salting is a
-      // partitioning change only — the result set must be identical
-      val ev = t(s, d, "events").select("user_id", "value")
-      val cust = t(s, d, "customer")
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      graft.operators.SkewJoin.saltedJoin(ev, cust, Seq("user_id"),
-          saltFactor = 8)
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_events"),
-          round(sum("value"), 2).as("total_value"))
-        .orderBy("c_mktsegment")
-    }),
-
-    "q_join_skew_adaptive" -> ((s, d) => {
-      // adaptive salting: a counting pass detects hot keys, only those are
-      // salted/replicated — cold keys take the plain one-shuffle join path.
-      // Same oracle shape as the blanket-salted query: salting is a
-      // partitioning change only, the result set must equal the plain join.
-      // hotThreshold=50 so the events table's heavier users actually trip
-      // the hot path at bench scale (auto-derivation needs more rows/key).
-      val ev = t(s, d, "events").select("user_id", "value")
-      val cust = t(s, d, "customer")
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      graft.operators.SkewJoin.adaptiveSaltedJoin(ev, cust, Seq("user_id"),
-          saltFactor = 8, hotThreshold = 50)
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          round(sum("value"), 2).as("total_value"))
-        .orderBy("c_mktsegment")
-    }),
-
-    "q_join_range" -> ((s, d) => {
-      // pure inequality join (no equi key): events whose value falls in a
-      // per-customer band. Naive Spark = BroadcastNestedLoopJoin; the
-      // bucketed rewrite shuffles an equi-join key instead
-      // (RangeJoinSpec pins both the plan and naive-equivalence). Bands
-      // derive from c_custkey with exact double arithmetic so the DuckDB
-      // oracle reproduces boundaries bit-for-bit.
-      val ev = t(s, d, "events").select("event_id", "value")
-      val bands = t(s, d, "customer").select(col("c_custkey"),
-        (pmod(col("c_custkey"), lit(30)) * 10.0).as("band_lo"),
-        (pmod(col("c_custkey"), lit(30)) * 10.0 + 2.0).as("band_hi"))
-      graft.operators.RangeJoin.pointInInterval(ev, bands, "value",
-          "band_lo", "band_hi", bucketWidth = 10.0)
-        .groupBy("c_custkey")
-        .agg(count(lit(1)).as("n_events"),
-          round(sum("value"), 2).as("total_value"))
-        .orderBy("c_custkey")
-    }),
-
-    "q_tpch_q3" -> ((s, d) => {
-      // TPC-H Q3 shape (shipping-priority): selective filters pushed into
-      // all three scans, broadcast customer dim, grouped revenue top-N.
-      // o_shippriority doesn't exist in this testdata — o_orderpriority
-      // stands in. Ordering uses the ROUNDED revenue so the top-10 set is
-      // engine-independent (ties broken by the unique group key).
-      val cut = lit("1998-01-01").cast("timestamp")
-      val cust = t(s, d, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-      val ord = t(s, d, "orders").filter(col("o_orderdate") < cut)
-      val li = t(s, d, "lineitem").filter(col("l_shipdate") > cut)
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-    "q_tpch_q5" -> ((s, d) => {
-      // TPC-H Q5 shape (local-supplier revenue): the canonical 6-table
-      // join-reorder test. Scale shape: region→nation→supplier collapse
-      // into ONE broadcast dim (region and nation are tiny, supplier is
-      // the smallest big table — at 100 TB it's ~1/10000 of lineitem, well
-      // under a broadcast threshold after the nation semi-filter);
-      // lineitem⋈orders and ⋈customer are the real shuffles, keyed on
-      // orderkey/custkey. The c_nationkey = s_nationkey constraint rides
-      // the supplier broadcast, so it costs no extra exchange.
-      val lo = lit("1996-01-01").cast("timestamp")
-      val hi = lit("1998-01-01").cast("timestamp")
-      val supNation = t(s, d, "supplier")
-        .join(broadcast(t(s, d, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, d, "region").filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select("s_suppkey", "s_nationkey", "n_name")
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders")
-            .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(supNation),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .groupBy("n_name")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-    "q_tpch_q17" -> ((s, d) => {
-      // TPC-H Q17 shape (small-quantity-order revenue): the canonical
-      // correlated scalar subquery — decorrelated by hand into the plan
-      // Catalyst would derive: ONE per-partkey average over lineitem
-      // (shuffle keyed on partkey, partial agg map-side), semi-filtered to
-      // the brand's parts FIRST via the broadcast part dim so the avg
-      // never aggregates partkeys the outer query discards. l_quantity is
-      // integral, so the per-key mean is exact FP and the `<` threshold
-      // is engine-deterministic (a float avg of non-integral values would
-      // make the comparison order-dependent near ties).
-      val pt = t(s, d, "part").filter(col("p_brand") === "Brand#23")
-        .select("p_partkey")
-      val branded = t(s, d, "lineitem")
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-      val avgQ = branded.groupBy("l_partkey")
-        .agg(avg("l_quantity").as("__avg_qty"))
-      branded.join(avgQ, "l_partkey")
-        .filter(col("l_quantity") < lit(0.2) * col("__avg_qty"))
-        .agg(round(sum("l_extendedprice") / 7.0, 2).as("avg_yearly"))
-    }),
-    "q_tpch_q18" -> ((s, d) => {
-      // TPC-H Q18 shape (large-volume customers): the HAVING-subquery
-      // semi-join. The heavy-hitter key set is one aggregate over lineitem
-      // (map-side partials; the > threshold keeps a tiny fraction), then a
-      // LEFT SEMI join gates lineitem before the orders/customer joins —
-      // at 100 TB the semi-join output is the only lineitem data that ever
-      // reaches a wide join, and AQE broadcasts the key set. l_quantity is
-      // integral, so the HAVING threshold and the final sums are exact FP.
-      val li = t(s, d, "lineitem")
-      val big = li.groupBy("l_orderkey")
-        .agg(sum("l_quantity").as("__q")).filter(col("__q") > 150)
-        .select("l_orderkey")
-      li.join(big, Seq("l_orderkey"), "left_semi")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate",
-          "o_totalprice")
-        .agg(round(sum("l_quantity"), 2).as("total_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(20)
-    }),
-    "q_tpch_q1" -> ((s, d) =>
-      // TPC-H Q1 (pricing summary report): the canonical wide-aggregate
-      // scan. Scale shape: ONE pass over lineitem — the shipdate filter
-      // and all 8 aggregates ride a single partial/final HashAggregate
-      // pair over a 2-value group key (map-side partials collapse ~all
-      // rows before the exchange, so the shuffle moves 6 rows per
-      // partition regardless of SF). l_quantity is integral so sum_qty /
-      // avg_qty are exact FP; price sums follow the round(,2) contract
-      // the golden queries established.
-      t(s, d, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("sum_disc_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))
-            * (lit(1) + col("l_tax"))), 2).as("sum_charge"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(avg("l_extendedprice"), 4).as("avg_price"),
-          round(avg("l_discount"), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
-    "q_tpch_q21" -> ((s, d) => {
-      // TPC-H Q21 shape (suppliers who kept waiting): the canonical
-      // EXISTS + NOT-EXISTS double self-join, decorrelated by hand into
-      // the plan Catalyst derives for it: ONE per-order supplier profile
-      // (countDistinct suppliers / late suppliers — partial aggregates
-      // map-side, shuffle keyed on l_orderkey) replaces BOTH correlated
-      // subqueries, then joins back to the late rows on the SAME key, so
-      // AQE co-partitions the probe with the profile and lineitem text
-      // never moves twice. Supplier is a broadcast dim. The testdata has
-      // no l_commitdate/l_receiptdate, so "late" is adapted to
-      // l_shipdate > o_orderdate + 60 days — same plan, same semantics
-      // class (a row predicate over the lineitem⋈orders join).
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_shipdate")
-      val ord = t(s, d, "orders")
-        .filter(col("o_orderstatus") === "F")
-        .select("o_orderkey", "o_orderdate")
-      val flagged = li
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .withColumn("__late",
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-      val perOrder = flagged.groupBy("l_orderkey")
-        .agg(countDistinct("l_suppkey").as("__nsupp"),
-          countDistinct(when(col("__late"), col("l_suppkey"))).as("__nlate"))
-      flagged.filter(col("__late"))
-        .join(perOrder, "l_orderkey")
-        .filter(col("__nsupp") >= 2 && col("__nlate") === 1)
-        .join(broadcast(t(s, d, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy("s_name").agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name")).limit(20)
-    }),
-    "q_tpch_q4" -> ((s, d) => {
-      // TPC-H Q4 shape (order priority checking): EXISTS over a child
-      // table where the correlated predicate spans BOTH tables
-      // (l_shipdate > o_orderdate + 30 days). Expressed directly as a
-      // LEFT SEMI join carrying the inequality as an extra join
-      // condition — Spark keys the shuffle on the equi part (orderkey)
-      // and evaluates the date predicate inside the join, so lineitem is
-      // touched once and never duplicated by multi-match orders. The
-      // date window prunes orders BEFORE the join (the testdata has no
-      // l_commitdate/l_receiptdate; "late" = shipped >30 days after the
-      // order date — same plan class as the reference predicate).
-      val lo = lit("1996-07-01").cast("timestamp")
-      val hi = lit("1996-10-01").cast("timestamp")
-      val ord = t(s, d, "orders")
-        .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
-        .select("o_orderkey", "o_orderdate", "o_orderpriority")
-      val li = t(s, d, "lineitem").select("l_orderkey", "l_shipdate")
-      ord.join(li,
-          col("o_orderkey") === col("l_orderkey") &&
-            col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAYS"),
-          "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy("o_orderpriority")
-    }),
-    "q_tpch_q12" -> ((s, d) => {
-      // TPC-H Q12 shape (shipping-mode priority audit): the canonical
-      // conditional-aggregation join — sum(CASE WHEN ...) pivots the
-      // order-priority split into two counters per group in the SAME
-      // partial/final aggregate pair, so the plan is one shuffle keyed
-      // on the join key plus one keyed on the group key, no matter how
-      // many CASE arms ride along. l_returnflag stands in for the
-      // missing l_shipmode; the date window prunes lineitem at the scan.
-      val lo = lit("1997-01-01").cast("timestamp")
-      val hi = lit("1998-01-01").cast("timestamp")
-      val li = t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
-        .select("l_orderkey", "l_returnflag")
-      val urgent = col("o_orderpriority") === "1-URGENT" ||
-        col("o_orderpriority") === "2-HIGH"
-      li.join(t(s, d, "orders").select("o_orderkey", "o_orderpriority"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(sum(when(urgent, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(!urgent, 1L).otherwise(0L)).as("low_line_count"))
-        .orderBy("l_returnflag")
-    }),
-    "q_tpch_q14" -> ((s, d) => {
-      // TPC-H Q14 shape (promotion effect): a ratio of two conditional
-      // sums over the same join — both numerator and denominator ride
-      // ONE aggregate over ONE broadcast join (part is the dim side), so
-      // the lineitem pass is single. The month window prunes the scan.
-      // Ratio rounded to 4dp; the sums are the round(,2)-class price
-      // expressions whose cross-engine stability the golden queries pin.
-      val lo = lit("1997-06-01").cast("timestamp")
-      val hi = lit("1997-07-01").cast("timestamp")
-      val li = t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
-        .select("l_partkey", "l_extendedprice", "l_discount")
-      val rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
-      li.join(broadcast(t(s, d, "part").select("p_partkey", "p_type")),
-          col("l_partkey") === col("p_partkey"))
-        .agg(round(
-          lit(100.0) * sum(when(col("p_type") === "PROMO", rev).otherwise(0.0))
-            / sum(rev), 4).as("promo_revenue"))
-    }),
-    "q_tpch_q19" -> ((s, d) => {
-      // TPC-H Q19 shape (discounted revenue): the canonical DISJUNCTIVE
-      // join predicate — three (brand, size, quantity) clause triples
-      // OR'd together across the part⋈lineitem equi key. Catalyst
-      // factors the disjunction: the common l_partkey = p_partkey key
-      // plans a broadcast hash join, per-side implied filters
-      // (p_brand IN (...), l_quantity <= 30) push into BOTH scans, and
-      // the residual OR evaluates post-join — the shape that keeps a
-      // 100 TB lineitem scan pruned even though no single clause is a
-      // conjunction. Predicate values adapted to this testdata's
-      // brand/size/quantity domains.
-      val li = t(s, d, "lineitem")
-        .select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
-      val pt = t(s, d, "part").select("p_partkey", "p_brand", "p_size")
-      val clause =
-        (col("p_brand") === "Brand#12" && col("p_size").between(1, 5) &&
-          col("l_quantity").between(1, 11)) ||
-        (col("p_brand") === "Brand#23" && col("p_size").between(1, 10) &&
-          col("l_quantity").between(10, 20)) ||
-        (col("p_brand") === "Brand#34" && col("p_size").between(1, 15) &&
-          col("l_quantity").between(20, 30))
-      li.join(broadcast(pt), col("l_partkey") === col("p_partkey") && clause)
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))),
-          2).as("revenue"))
-    }),
-    "q_tpch_q6" -> ((s, d) =>
-      // TPC-H Q6 (forecasting revenue change): the pure-scan aggregate.
-      // All three predicates push into the parquet scan (PushedFilters
-      // carries shipdate+quantity; the discount band evaluates in the
-      // scan's filter node) and the single global sum collapses map-side
-      // — at 100 TB this reads only the shipdate-pruned row groups and
-      // shuffles one partial row per partition.
-      t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-01-01").cast("timestamp") &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2)
-          .as("revenue"))),
-    "q_tpch_q7" -> ((s, d) => {
-      // TPC-H Q7 shape (volume shipping between two nations): lineitem
-      // joins orders (shuffle on orderkey), customer (shuffle on custkey),
-      // and BOTH nation lookups ride broadcasts (supplier⋈nation and the
-      // customer-side nation dim are tiny). The nation-pair disjunction
-      // filters after the broadcasts, so the big shuffles never carry
-      // rows outside the shipdate window. l_year from l_shipdate.
-      val supN = t(s, d, "supplier")
-        .join(broadcast(t(s, d, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val custN = t(s, d, "customer")
-        .join(broadcast(t(s, d, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("n_name").as("cust_nation"))
-      t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(custN, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(supN), col("l_suppkey") === col("s_suppkey"))
-        .filter((col("supp_nation") === "NATION_1" &&
-            col("cust_nation") === "NATION_2") ||
-          (col("supp_nation") === "NATION_2" &&
-            col("cust_nation") === "NATION_1"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))),
-          2).as("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
-    "q_tpch_q8" -> ((s, d) => {
-      // TPC-H Q8 shape (national market share): conditional share —
-      // sum(CASE nation)/sum(all) per order-year over a 5-way join.
-      // part (type filter, broadcast) gates lineitem FIRST so the
-      // orders/customer shuffles only carry the ~1/6 of rows that
-      // survive; region prunes the customer side via a broadcast
-      // nation⋈region dim. Share rounded to 4dp.
-      val pt = t(s, d, "part").filter(col("p_type") === "ECONOMY")
-        .select("p_partkey")
-      val custAmerica = t(s, d, "customer")
-        .join(broadcast(t(s, d, "nation")
-            .join(broadcast(t(s, d, "region")
-              .filter(col("r_name") === "AMERICA")),
-              col("n_regionkey") === col("r_regionkey"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .select("c_custkey")
-      val supN = t(s, d, "supplier")
-        .join(broadcast(t(s, d, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val vol = col("l_extendedprice") * (lit(1) - col("l_discount"))
-      t(s, d, "lineitem")
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(t(s, d, "orders")
-            .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("o_orderdate") < lit("1998-01-01").cast("timestamp")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(custAmerica, col("o_custkey") === col("c_custkey"), "left_semi")
-        .join(broadcast(supN), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(round(
-          sum(when(col("supp_nation") === "NATION_3", vol).otherwise(0.0))
-            / sum(vol), 4).as("mkt_share"))
-        .orderBy("o_year")
-    }),
-    "q_tpch_q9" -> ((s, d) => {
-      // TPC-H Q9 shape (product-type profit): the 6-table profit rollup.
-      // part (name filter, broadcast) gates lineitem before the orders
-      // shuffle; supplier⋈nation is the other broadcast. The testdata has
-      // no partsupp.ps_supplycost — a deterministic retail-margin proxy
-      // (p_retailprice * 0.1 per unit) stands in, preserving the
-      // expression shape (revenue minus per-unit cost times quantity).
-      val pt = t(s, d, "part")
-        .filter(col("p_name").like("%widget%"))
-        .select("p_partkey", "p_retailprice")
-      val supN = t(s, d, "supplier")
-        .join(broadcast(t(s, d, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("nation"))
-      // profit is summed as exact integer cents (per-row round, then a
-      // long sum): double summation is order-dependent across engines and
-      // this query's sums land on .005 boundaries at sf0.01 — the same
-      // integer-scaling trick LangModel uses for cross-engine log-prob sums
-      val profit = (col("l_extendedprice") * (lit(1) - col("l_discount"))) -
-        (col("p_retailprice") * lit(0.1) * col("l_quantity"))
-      t(s, d, "lineitem")
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(t(s, d, "orders").select("o_orderkey", "o_orderdate"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(supN), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("nation"),
-          year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg((sum(round(profit * 100).cast("long")) / 100.0).as("sum_profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-    "q_tpch_q10" -> ((s, d) => {
-      // TPC-H Q10 shape (returned-item reporting): revenue lost to
-      // returns per customer. The returnflag filter prunes lineitem at
-      // the scan, the orderdate quarter prunes orders; customer and the
-      // nation dim broadcast. Ordering uses the ROUNDED revenue (ties
-      // broken by the unique custkey) so the top-20 set is
-      // engine-independent — same contract as Q3.
-      val lo = lit("1997-01-01").cast("timestamp")
-      val hi = lit("1997-04-01").cast("timestamp")
-      t(s, d, "lineitem").filter(col("l_returnflag") === "R")
-        .join(t(s, d, "orders")
-            .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, d, "customer")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, d, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))),
-          2).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-    "q_tpch_q11" -> ((s, d) => {
-      // TPC-H Q11 shape (important stock): per-part value with a
-      // GLOBAL-total scalar threshold in HAVING. partsupp is derived
-      // from lineitem's (partkey, suppkey) pairs (no partsupp table in
-      // this testdata); value = discounted spend through the nation's
-      // suppliers. The global total is the SAME aggregate re-used as a
-      // one-row broadcast (crossJoin), so lineitem is read once per
-      // branch and nothing re-shuffles for the threshold.
-      val supN = t(s, d, "supplier")
-        .join(broadcast(t(s, d, "nation").filter(col("n_name") === "NATION_7")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey")
-      // persisted: the global-total branch would otherwise re-run the
-      // whole lineitem aggregate a second time (same subtree, two
-      // consumers); the cache is one row per part
-      val ps = t(s, d, "lineitem")
-        .join(broadcast(supN), col("l_suppkey") === col("s_suppkey"),
-          "left_semi")
-        .groupBy("l_partkey")
-        .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("__value"))
-        .persist()
-      val total = ps.agg(sum("__value").as("__total"))
-      ps.crossJoin(broadcast(total))
-        .filter(col("__value") > col("__total") * lit(0.001))
-        .select(col("l_partkey"), round(col("__value"), 2).as("part_value"))
-        .orderBy(col("part_value").desc, col("l_partkey"))
-    }),
-    "q_tpch_q13" -> ((s, d) => {
-      // TPC-H Q13 shape (customer order-count distribution): the
-      // canonical LEFT OUTER join with a predicate on the RIGHT side
-      // (kept in the join condition, NOT a WHERE — a WHERE would turn
-      // the outer join inner and drop zero-order customers). Two
-      // aggregates: per-customer count (shuffle on custkey), then the
-      // tiny distribution rollup. o_orderpriority <> '1-URGENT' stands
-      // in for the missing o_comment NOT LIKE filter — same plan class.
-      val ord = t(s, d, "orders").select("o_custkey", "o_orderkey",
-        "o_orderpriority")
-      t(s, d, "customer").select("c_custkey")
-        .join(ord, col("c_custkey") === col("o_custkey") &&
-          col("o_orderpriority") =!= "1-URGENT", "left_outer")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-    "q_tpch_q15" -> ((s, d) => {
-      // TPC-H Q15 shape (top supplier): the revenue "view" computed once
-      // (one shuffle keyed on suppkey), its max taken as a one-row
-      // broadcast, and the equality re-join — revenue is ROUNDED before
-      // the max so the equality compares identical 2dp values in both
-      // engines. Supplier is a broadcast dim.
-      val lo = lit("1997-01-01").cast("timestamp")
-      val hi = lit("1997-04-01").cast("timestamp")
-      // persisted: the max branch would otherwise re-run the lineitem
-      // aggregate (one cached row per supplier)
-      val rev = t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
-        .groupBy("l_suppkey")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))),
-          2).as("total_revenue"))
-        .persist()
-      val mx = rev.agg(max("total_revenue").as("__mx"))
-      rev.crossJoin(broadcast(mx))
-        .filter(col("total_revenue") === col("__mx"))
-        .join(broadcast(t(s, d, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
-    }),
-    "q_tpch_q16" -> ((s, d) => {
-      // TPC-H Q16 shape (parts/supplier relationship): distinct-pair
-      // partsupp derived from lineitem, an ANTI join excluding flagged
-      // suppliers (negative balance stands in for the missing
-      // s_comment complaints filter), then countDistinct per part
-      // attribute triple. The anti side is 100 rows — broadcast; the
-      // distinct-pair aggregate is the only big shuffle.
-      val ps = t(s, d, "lineitem").select("l_partkey", "l_suppkey").distinct()
-      val flagged = t(s, d, "supplier").filter(col("s_acctbal") < 0)
-        .select("s_suppkey")
-      val pt = t(s, d, "part")
-        .filter(col("p_brand") =!= "Brand#5" && col("p_type") =!= "MEDIUM" &&
-          col("p_size").isin(1, 4, 9, 16, 25, 36, 49))
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-      ps.join(broadcast(flagged), col("l_suppkey") === col("s_suppkey"),
-          "left_anti")
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(countDistinct("l_suppkey").as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-          col("p_size"))
-    }),
-    "q_tpch_q20" -> ((s, d) => {
-      // TPC-H Q20 shape (potential part promotion): nested IN subqueries
-      // — suppliers holding more pre-1997 stock of the named parts than
-      // half of what shipped in 1997. Both per-pair aggregates
-      // (availqty proxy = pre-window quantity; the in-window shipped
-      // sum) ride ONE groupBy over lineitem via conditional sums —
-      // a single shuffle keyed on (partkey, suppkey) replaces the
-      // correlated subquery. Parts filter broadcasts; the supplier
-      // probe is a semi-join against a 100-row dim.
-      val cut = lit("1997-01-01").cast("timestamp")
-      val hi = lit("1998-01-01").cast("timestamp")
-      val named = t(s, d, "part").filter(col("p_name").like("small%"))
-        .select("p_partkey")
-      val pairs = t(s, d, "lineitem")
-        .filter(col("l_shipdate") < hi)
-        .join(broadcast(named), col("l_partkey") === col("p_partkey"),
-          "left_semi")
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(sum(when(col("l_shipdate") < cut, col("l_quantity"))
-            .otherwise(0.0)).as("__avail"),
-          sum(when(col("l_shipdate") >= cut, col("l_quantity"))
-            .otherwise(0.0)).as("__shipped"))
-        .filter(col("__avail") > col("__shipped") * 0.5)
-        .select("l_suppkey").distinct()
-      t(s, d, "supplier")
-        .join(broadcast(t(s, d, "nation").filter(col("n_name") === "NATION_4")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(pairs, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select("s_name", "s_acctbal")
-        .orderBy("s_name")
-    }),
-    "q_tpch_q22" -> ((s, d) => {
-      // TPC-H Q22 shape (global sales opportunity): scalar-subquery
-      // threshold + NOT EXISTS. The country code is derived from
-      // c_nationkey (no c_phone column) — pmod keeps it non-negative in
-      // both engines. The positive-balance average is a one-row
-      // broadcast; customers with no orders are a LEFT ANTI join keyed
-      // on custkey (at 100 TB the anti join shuffles only the two key
-      // columns).
-      val cust = t(s, d, "customer")
-        .withColumn("cntrycode", pmod(col("c_nationkey"), lit(10))
-          .cast("long"))
-        .filter(col("cntrycode").isin(1, 2, 3, 4, 5))
-      val avgBal = cust.filter(col("c_acctbal") > 0)
-        .agg(avg("c_acctbal").as("__avg_bal"))
-      cust.crossJoin(broadcast(avgBal))
-        .filter(col("c_acctbal") > col("__avg_bal"))
-        .join(t(s, d, "orders").select("o_custkey"),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("cntrycode")
-        .agg(count(lit(1)).as("numcust"),
-          round(sum("c_acctbal"), 2).as("totacctbal"))
-        .orderBy("cntrycode")
-    }),
-    "q_tpch_q2" -> ((s, d) => {
-      // TPC-H Q2 shape (minimum-cost supplier): the correlated-MIN
-      // subquery, decorrelated into a per-part min over the derived
-      // partsupp (unit cost = min extendedprice/quantity per pair — the
-      // testdata has no ps_supplycost) joined back on (partkey, cost)
-      // equality. Both sides of that join descend from the SAME
-      // aggregate output, so the doubles compare bit-identically in
-      // Spark and DuckDB. Part filter and the supplier⋈nation⋈region
-      // dim broadcast; the pair aggregate is the only lineitem shuffle.
-      val pt = t(s, d, "part")
-        .filter(col("p_size") === 15 && col("p_type") === "LARGE")
-        .select("p_partkey")
-      val supEurope = t(s, d, "supplier")
-        .join(broadcast(t(s, d, "nation")
-            .join(broadcast(t(s, d, "region")
-              .filter(col("r_name") === "EUROPE")),
-              col("n_regionkey") === col("r_regionkey"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-      // per-part min via a WINDOW, not a groupBy+self-join: the join form
-      // plans the whole pair-aggregate subtree TWICE (once per branch); the
-      // window is one extra exchange on l_partkey over rows already reduced
-      // to one per (part, supplier) — and a part's supplier group is tiny,
-      // so the window frame can never skew a task
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("l_partkey")
-      t(s, d, "lineitem")
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"),
-          "left_semi")
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(min(col("l_extendedprice") / col("l_quantity")).as("__cost"))
-        .join(broadcast(supEurope), col("l_suppkey") === col("s_suppkey"))
-        .withColumn("__min_cost", min("__cost").over(w))
-        .filter(col("__cost") === col("__min_cost"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"),
-          col("l_partkey"), round(col("__cost"), 2).as("supply_cost"))
-        .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"),
-          col("l_partkey"))
-        .limit(10)
-    }),
-    "q_grouping_sets" -> ((s, d) =>
-      // Explicit GROUPING SETS — neither a rollup nor a cube (the
-      // (priority)-only set skips status), plus grouping_id() so callers
-      // can tell a real NULL group key from a rolled-up one. Spark plans
-      // one Expand (3 replicas) + one hash aggregate — same single
-      // shuffle as a plain groupBy, just 3× the map-side rows.
-      t(s, d, "orders")
-        .groupingSets(
-          Seq(Seq(col("o_orderstatus"), col("o_orderpriority")),
-            Seq(col("o_orderpriority")), Seq()),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(grouping_id().cast("long").as("gid"),
-          count(lit(1)).as("cnt"),
-          round(sum("o_totalprice"), 2).as("rev"))
-        .orderBy(col("gid"), col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)),
-    "q_percentile" -> ((s, d) =>
-      // EXACT percentiles (sort-based `percentile`, not the approx
-      // sketch): per-group sorted-merge aggregate — the right tool when
-      // the group's value set fits an executor (quantity/price columns
-      // do); q_profile's histogram+cumulative-window path is the
-      // 100 TB-per-group alternative. Oracle-exact because integral
-      // quantities interpolate to halves and 2-decimal prices to
-      // quarter-cents — both exact in binary FP at round(,4).
-      t(s, d, "lineitem").groupBy("l_returnflag")
-        .agg(round(percentile(col("l_quantity"), lit(0.5)), 4).as("qty_p50"),
-          round(percentile(col("l_quantity"), lit(0.9)), 4).as("qty_p90"),
-          round(percentile(col("l_extendedprice"), lit(0.5)), 4)
-            .as("price_p50"))
-        .orderBy("l_returnflag")),
-    "q_join_semi" -> ((s, d) =>
-      t(s, d, "customer")
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"),
-          "left_semi")
-        .select("c_custkey").orderBy("c_custkey")),
-    "q_join_anti" -> ((s, d) =>
-      t(s, d, "customer")
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"),
-          "left_anti")
-        .select("c_custkey", "c_name").orderBy("c_custkey")),
-
-    // ---- §2.5 window functions (extension) ------------------------------
-    "q_window_rank" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, d, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-        .orderBy("o_custkey", "rn")
-    }),
-    "q_window_running" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "events")
-        .withColumn("running_value", round(sum("value").over(w), 4))
-        .select("user_id", "event_id", "running_value")
-        .orderBy("user_id", "event_id")
-    }),
-
-    "q_window_range" -> ((s, d) => {
-      // value-RANGE frame (trailing 1h of event time — frame bound by the
-      // ORDER value, not row count) + sliding 3-row average
-      import org.apache.spark.sql.expressions.Window
-      val secs = col("ts").cast("long")
-      val wRange = Window.partitionBy("user_id").orderBy(secs)
-        .rangeBetween(-3600, Window.currentRow)
-      val wRows = Window.partitionBy("user_id").orderBy("event_id")
-        .rowsBetween(-2, Window.currentRow)
-      t(s, d, "events")
-        .select(col("user_id"), col("event_id"),
-          count(lit(1)).over(wRange).as("n_last_hour"),
-          round(avg("value").over(wRows), 4).as("avg_3"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    "q_window_analytics" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("event_id")
-      t(s, d, "events")
-        .select(col("user_id"), col("event_id"),
-          round(lag("value", 1).over(w), 4).as("prev_value"),
-          round(lead("value", 1).over(w), 4).as("next_value"),
-          round(first("value").over(w.rowsBetween(
-            Window.unboundedPreceding, Window.currentRow)), 4).as("first_value"),
-          ntile(4).over(w).as("quartile"),
-          rank().over(Window.partitionBy("user_id")
-            .orderBy(col("value").desc, col("event_id"))).as("value_rank"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    // ---- §2.7 set operations (extension) --------------------------------
-    "q_union" -> ((s, d) =>
-      t(s, d, "region").select(col("r_name").as("name"))
-        .unionAll(t(s, d, "nation").select(col("n_name").as("name")))
-        .orderBy("name")),
-    "q_intersect" -> ((s, d) =>
-      t(s, d, "customer").select(col("c_nationkey").as("nk"))
-        .intersect(t(s, d, "supplier").select(col("s_nationkey").as("nk")))
-        .orderBy("nk")),
-    "q_except" -> ((s, d) =>
-      t(s, d, "customer").select(col("c_nationkey").as("nk"))
-        .except(t(s, d, "supplier").select(col("s_nationkey").as("nk")))
-        .orderBy("nk")),
-
-    // ---- §2.8 scalar functions (extension) -------------------------------
-    "q_scalar_funcs" -> ((s, d) =>
-      t(s, d, "orders").select(
-          col("o_orderkey"),
-          year(col("o_orderdate")).as("yr"),
-          month(col("o_orderdate")).as("mo"),
-          upper(substring(col("o_orderpriority"), 1, 4)).as("prio4"),
-          length(col("o_orderstatus")).as("status_len"),
-          round(abs(col("o_totalprice") - 1000.0), 2).as("abs_diff"),
-          (col("o_orderkey") % 7).as("key_mod"),
-          when(col("o_totalprice") > 100000, "big")
-            .when(col("o_totalprice") > 10000, "mid")
-            .otherwise("small").as("bucket"))
-        .orderBy("o_orderkey")),
-
-    // ---- §2.3 as-of join (training-pipeline operator; union+window) ------
-    "q_asof" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val quotes = ev.groupBy("user_id", "ts")
-        .agg(max("value").as("rv"))
-      val probes = ev.filter(col("event_id") % 10 === 0)
-        .select("event_id", "user_id", "ts")
-      graft.operators.AsOfJoin.asof(probes, quotes, Seq("user_id"), "ts", "ts")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("rv"), 4).as("ref_value"))
-        .orderBy("event_id")
-    }),
-
-    "q_asof_fwd" -> ((s, d) => {
-      // forward as-of with a bounded staleness window: the next quote at or
-      // after each probe, but only within 1 hour — pandas merge_asof
-      // (direction="forward", tolerance=1h) semantics, oracle-checked via a
-      // DuckDB LATERAL min-over-window reformulation.
-      val ev = t(s, d, "events")
-      val quotes = ev.groupBy("user_id", "ts")
-        .agg(max("value").as("rv"))
-      val probes = ev.filter(col("event_id") % 10 === 0)
-        .select("event_id", "user_id", "ts")
-      graft.operators.AsOfJoin.asof(probes, quotes, Seq("user_id"), "ts", "ts",
-          direction = "forward", tolerance = Some(expr("INTERVAL 1 HOUR")))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("rv"), 4).as("ref_value"))
-        .orderBy("event_id")
-    }),
-
-    // ---- scalar function breadth: dates, strings, math, nulls ------------
-    "q_scalar_dates" -> ((s, d) =>
-      t(s, d, "orders").select(
-          col("o_orderkey"),
-          datediff(lit("1998-12-31").cast("date"), col("o_orderdate"))
-            .as("days_to_end"),
-          date_add(col("o_orderdate"), 30).as("due_date"),
-          dayofweek(col("o_orderdate")).as("dow"),
-          quarter(col("o_orderdate")).as("qtr"),
-          last_day(col("o_orderdate")).as("month_end"))
-        .orderBy("o_orderkey")),
-    "q_scalar_strings" -> ((s, d) =>
-      t(s, d, "customer").select(
-          col("c_custkey"),
-          concat_ws("|", col("c_mktsegment"), col("c_name")).as("joined"),
-          replace(col("c_name"), lit("Customer"), lit("Cust")).as("replaced"),
-          lpad(col("c_custkey").cast("string"), 10, "0").as("padded"),
-          reverse(col("c_mktsegment")).as("rev"),
-          locate("E", col("c_mktsegment")).as("e_pos"),
-          trim(lower(col("c_mktsegment"))).as("lower_seg"))
-        .orderBy("c_custkey")),
-    "q_scalar_math" -> ((s, d) =>
-      t(s, d, "lineitem").select(
-          col("l_orderkey"), col("l_linenumber"),
-          round(sqrt(col("l_extendedprice")), 6).as("sqrt_price"),
-          round(ln(col("l_extendedprice") + 1), 6).as("ln_price"),
-          round(pow(col("l_discount"), 2), 6).as("disc_sq"),
-          ceil(col("l_quantity")).as("qty_ceil"),
-          floor(col("l_tax") * 100).as("tax_pct"),
-          // cast: Spark sign returns DOUBLE, DuckDB TINYINT — align on BIGINT
-          sign(col("l_quantity") - 25).cast("long").as("qty_sign"))
-        .orderBy("l_orderkey", "l_linenumber")),
-    "q_nulls" -> ((s, d) =>
-      // nullif manufactures nulls; coalesce/null-aware aggs recover them
-      t(s, d, "lineitem")
-        .withColumn("maybe_qty", nullif(col("l_quantity"), lit(1.0)))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("maybe_qty")).as("n_nonnull"),
-          round(sum(coalesce(col("maybe_qty"), lit(0.0))), 2).as("sum_qty0"),
-          round(avg(col("maybe_qty")), 6).as("avg_nonnull"))
-        .orderBy("l_returnflag")),
-    "q_cube" -> ((s, d) =>
-      t(s, d, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("cnt"), round(sum("o_totalprice"), 2).as("rev"))
-        .orderBy(col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)),
-
-    // ---- JSON functions (events.props is a JSON payload) -----------------
-    "q_json" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(avg("k"), 6).as("avg_k"),
-          min("k").as("min_k"), max("k").as("max_k"))
-        .orderBy("event_type")),
-
-    // ---- array functions over embeddings ---------------------------------
-    "q_array_ops" -> ((s, d) =>
-      t(s, d, "embeddings").select(
-          col("vec_id"),
-          size(col("embedding")).as("dim"),
-          round(element_at(col("embedding"), 1).cast("double"), 6)
-            .as("first_elem"),
-          round(element_at(col("embedding"), -1).cast("double"), 6)
-            .as("last_elem"),
-          round(aggregate(slice(col("embedding"), 1, 8),
-            lit(0.0), (acc, x) => acc + x.cast("double")), 6).as("head_sum"))
-        .orderBy("vec_id")),
-
-    // ---- deterministic stratified sampling -------------------------------
-    "q_sample" -> ((s, d) =>
-      // selection is hash-deterministic (not SQL-replicable); the exact-size
-      // guarantee IS the oracle: per stratum, min(25, stratum size) rows
-      graft.operators.Sampling.stratifiedExact(
-          t(s, d, "documents"), "source", 25, "doc_id")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_sampled"),
-          countDistinct("doc_id").as("n_distinct"))
-        .orderBy("source")),
-    "q_mixture_temp" -> ((s, d) =>
-      // mT5-style temperature resampling (α=0.5) over the skewed lang
-      // column: low-resource languages upsample WITH repetition, the head
-      // downsamples, targeting 1000 rows in expectation. The portable md5
-      // hash lets DuckDB replay the per-row Bernoulli bit-for-bit, so the
-      // gate checks every copy count, not just totals. Plan: one tiny
-      // count agg → driver rates → broadcast join + posexplode; the
-      // corpus never shuffles.
-      graft.operators.Sampling.temperatureResample(
-          t(s, d, "documents"), "lang", "doc_id",
-          targetRows = 1000L, alpha = 0.5,
-          hash01 = graft.operators.Sampling.portableHash01("t"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct("doc_id").as("n_docs"),
-          max("copy").as("max_copy"))
-        .orderBy("lang")),
-
-    // ---- pivot (wide aggregation) ----------------------------------------
-    "q_pivot" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .groupBy("l_linestatus")
-        .pivot("l_returnflag", Seq("A", "N", "R"))
-        .agg(round(sum("l_quantity"), 2))
-        .orderBy("l_linestatus")),
-
-    // ---- unpivot / melt (long-format reshape) ---------------------------
-    "q_unpivot" -> ((s, d) =>
-      // Dataset.unpivot = one Expand node (3 output rows per input, no
-      // shuffle, stays inside whole-stage codegen) — the inverse of
-      // q_pivot's wide aggregation; long format is what per-measure
-      // profiling and plotting pipelines consume
-      t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_discount",
-          "l_tax")
-        .unpivot(Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_discount"), col("l_tax")),
-          "measure", "val")
-        .withColumn("val", round(col("val"), 2))
-        .orderBy("l_orderkey", "l_linenumber", "measure")),
-
-    // ---- explode / generator (UDTF-shaped) -------------------------------
-    "q_explode_tokens" -> ((s, d) =>
-      docsSpread(s, d)
-        .select(explode(tokens(normalizeText(col("text")))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("tok")).limit(20)),
-
-    // ---- heavy hitters (two-pass sketch-then-verify) ---------------------
-    "q_heavy_hitters" -> ((s, d) => {
-      // tokens with frequency > n/40, EXACT, without ever shuffling the
-      // vocabulary: pass 1 is a Misra–Gries partial aggregate (≤ 80
-      // counters per partition cross the exchange, guarantee bound
-      // n/81 < threshold), pass 2 re-counts only the ≤ 80 candidates
-      // behind a scan-pruning isin filter. See operators/HeavyHitters.
-      // (This corpus's vocabulary fits the sketch whole — the SPEC drives
-      // vocab ≫ k Zipf streams through the compress/merge path.)
-      val toks = docsSpread(s, d)
-        .select(explode(tokens(normalizeText(col("text")))).as("item"))
-      graft.operators.HeavyHitters.exactHeavy(toks, denom = 40)
-        .orderBy(col("cnt").desc, col("item"))
-    }),
-    "q_heavy_hitters_grouped" -> ((s, d) => {
-      // the grouped face: per-LANGUAGE frequent tokens, each language's
-      // threshold its own n_lang/40. Pass 1 is one groupBy(lang) sketch
-      // aggregate (≤ 80 counters per group cross the exchange); the
-      // candidate (lang, item) pairs broadcast back to prune pass 2.
-      val toks = docsSpread(s, d).select(col("lang"),
-        explode(tokens(normalizeText(col("text")))).as("item"))
-      graft.operators.HeavyHitters
-        .exactHeavyPerGroup(toks, "lang", "item", denom = 40)
-        .orderBy(col("lang"), col("cnt").desc, col("item"))
-    }),
-
-    // ---- data profiling (one-pass column statistics) ---------------------
-    // Shannon character entropy — the information-density quality signal
-    // (integer-scaled log-prob terms make the float-free reduction replay
-    // bit-for-bit; see Entropy.scala's determinism contract)
-    "q_entropy" -> ((s, d) =>
-      // exact integer micro-nats output (same decimal-tie hardening as
-      // q_lm_score's avg_logp_u)
-      graft.operators.Entropy.charEntropy(t(s, d, "documents"))
-        .select("doc_id", "n_chars", "distinct_chars", "entropy_micro")
-        .orderBy("doc_id")),
-
-    // Budgeted selection: best documents by quality until a token budget.
-    // The global prefix sum runs DISTRIBUTED (range partition on the order
-    // key → per-slice running totals → offsets from a #partitions-row
-    // collect) — no single-task Window.orderBy funnel. Integer token
-    // weights make every running total and the keep boundary exact, so
-    // DuckDB's window cumsum replays the selection bit-for-bit.
-    "q_token_budget" -> ((s, d) => {
-      val docs = docsSpread(s, d).select(col("doc_id"),
-        qualityScore(col("text")).as("q"),
-        tokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.operators.Selection.takeUntilBudget(docs, "n_tokens",
-          Seq(col("q").desc), "doc_id", budget = 20000L)
-        .select(col("doc_id"), col("q"), col("n_tokens"), col("cum_weight"))
-        .orderBy("cum_weight")
-    }),
-
-    // Per-source frequency cap (the FineWeb/Dolma per-domain cap): top 5
-    // docs per source by length, rank reported. Total ordering via
-    // (n_chars desc, doc_id) makes the cap boundary engine-exact.
-    "q_source_cap" -> ((s, d) =>
-      graft.operators.Selection.capPerGroup(
-          t(s, d, "documents").select("doc_id", "source", "n_chars"),
-          "source", Seq(col("n_chars").desc), "doc_id", n = 5)
-        .select("source", "doc_id", "n_chars", "rank_in_group")
-        .orderBy("source", "rank_in_group")),
-
-    // Link-graph centrality: fixed-point PageRank (5 iterations, d=0.85)
-    // over the deterministic synthetic link graph i → (17i+c) mod n,
-    // c=1..3. Every rank is integer arithmetic (rank div outdeg,
-    // (85·sum) div 100), so DuckDB unrolling the same iterations in SQL
-    // reproduces the values bit-for-bit — no float drift across engines.
-    // 8 shuffle partitions: the per-iteration exchanges carry (long,
-    // long) rows for a graph whose node count is corpus-sized, and the
-    // loop runs 10+ small jobs — at 32 partitions the task-scheduling
-    // overhead dominates the arithmetic.
-    "q_pagerank" -> ((s, d) => withShufflePartitions(s, 8) {
-      val edges = graft.operators.LinkGraph.syntheticLinks(
-        t(s, d, "documents"), k = 3, mult = 17L)
-      graft.operators.LinkGraph.pageRank(edges, iters = 5)
-        .orderBy(col("rank_fp").desc, col("id").asc).limit(20)
-    }),
-
-    // Warm-start PageRank on a GROWING graph — the continuous-crawl
-    // recompute: converged ranks over the k=2 link set seed 2 iterations
-    // over the enlarged k=3 set (new edges, same recurrence). DuckDB
-    // unrolls both phases — 3 cold iterations on the old edges, the
-    // warm hand-off, 2 more on the new edges — to bit-equality.
-    "q_pagerank_warm" -> ((s, d) => withShufflePartitions(s, 8) {
-      val docs = t(s, d, "documents")
-      val edgesOld = graft.operators.LinkGraph.syntheticLinks(
-        docs, k = 2, mult = 17L)
-      val edgesNew = graft.operators.LinkGraph.syntheticLinks(
-        docs, k = 3, mult = 17L)
-      val prev = graft.operators.LinkGraph.pageRank(edgesOld, iters = 3)
-      graft.operators.LinkGraph.pageRankWarmStart(edgesNew, prev, iters = 2)
-        .orderBy(col("rank_fp").desc, col("id").asc).limit(20)
-    }),
-
-    // TrustRank (personalized PageRank): teleport mass lands only on the
-    // trusted seed set (every 10th doc) — trust decays with link
-    // distance from the seeds, the link-spam detection recipe. Same
-    // integer recurrence as q_pagerank; DuckDB unrolls it with the seed
-    // CASE in the teleport term.
-    "q_trustrank" -> ((s, d) => withShufflePartitions(s, 8) {
-      val docs = t(s, d, "documents")
-      val edges = graft.operators.LinkGraph.syntheticLinks(
-        docs, k = 3, mult = 17L)
-      val seeds = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-        .select("doc_id")
-      graft.operators.LinkGraph.pageRankPersonalized(edges, seeds,
-          iters = 5)
-        .orderBy(col("rank_fp").desc, col("id").asc).limit(20)
-    }),
-
-    // BFS hop distance from a trusted seed frontier — the crawl-depth
-    // gate ("drop pages > k hops from curated seeds") as data: per-node
-    // shortest hop count over the synthetic link graph, unreached nodes
-    // absent. Set-valued BFS layers need no tie-breaking, so the DuckDB
-    // oracle replays the same unrolled rounds exactly.
-    "q_bfs_depth" -> ((s, d) => withShufflePartitions(s, 8) {
-      val docs = t(s, d, "documents")
-      val edges = graft.operators.LinkGraph.syntheticLinks(
-        docs, k = 3, mult = 17L)
-      val seeds = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select("doc_id")
-      graft.operators.LinkGraph.bfsDepth(edges, seeds, maxDepth = 3)
-        .orderBy("depth", "id")
-    }),
-
-    // Bounded-hop weighted single-source shortest paths (Bellman–Ford
-    // rounds): after 6 relaxations, dist(v) is the exact min weight over
-    // ≤6-edge paths from node 0 — the "within k clicks, cheapest route"
-    // crawl query. Integer weights 1..9 from the portable md5 of the
-    // edge, so DuckDB rebuilds the identical weighted graph and unrolls
-    // all 6 rounds; per round one edge-sized (long,long,long) join, a
-    // min aggregate and an explicit-CASE full-outer merge (NULL
-    // semantics pinned identically in both engines).
-    "q_sssp" -> ((s, d) => withShufflePartitions(s, 8) {
-      val docs = t(s, d, "documents")
-      val edges = graft.operators.LinkGraph.syntheticLinks(
-        docs, k = 3, mult = 17L)
-      graft.operators.LinkGraph.sssp(
-          graft.operators.LinkGraph.hashWeights(edges, maxW = 9),
-          docs.filter(col("doc_id") === 0).select("doc_id"),
-          rounds = 6)
-        .orderBy("id")
-    }),
-
-    // Cross-source quantile normalization (the calibration step before
-    // mixed-corpus score thresholds mean anything): each doc's score →
-    // its source-conditional CDF position in integer ppm, computed in
-    // histogram-CDF form — scores aggregate to (source, score, count)
-    // FIRST (map-side combine, cardinality = value domain), the running
-    // CDF windows over those bounded rows, and docs get their ppm back
-    // by one hash join. No per-source global sort of the corpus.
-    "q_score_qnorm" -> ((s, d) => withShufflePartitions(s, 8) {
-      graft.operators.Qnorm.quantileNormalize(
-          t(s, d, "documents").select("doc_id", "source", "n_chars"),
-          "source", "n_chars")
-        .select(col("doc_id"), col("source"), col("n_chars"), col("q_ppm"))
-        .orderBy("doc_id")
-    }),
-
-    // Contrastive pair construction (ICT/DPR-style in-batch negatives):
-    // each ≥8-token doc splits at ⌊n/2⌋ into (anchor, positive), lands
-    // in a portable-md5 batch, and carries n_negatives = batch−1 (the
-    // loss math's constant). Zero-shuffle projection + a 16-row batch-
-    // size broadcast; the lossless split is spec-pinned corpus-wide.
-    "q_contrastive" -> ((s, d) => withShufflePartitions(s, 8) {
-      graft.operators.Contrastive.spanPairs(
-          t(s, d, "documents"), minToks = 8, batches = 16)
-        .orderBy("doc_id")
-    }),
-
-    // HITS hubs & authorities over the same link graph (Kleinberg
-    // JACM'99) — the hub/authority role split PageRank conflates.
-    // Integer fixed-point with DIVISION-ONLY L1 renormalization (divisor
-    // = max(total div scale, 1), so no multiply can overflow at any
-    // graph size); two edge-sized (long,long) exchanges per round, the
-    // scalar totals ride in-plan as broadcast one-row joins. DuckDB
-    // unrolls the same 3 integer rounds to bit-equality.
-    "q_hits" -> ((s, d) => withShufflePartitions(s, 8) {
-      val edges = graft.operators.LinkGraph.syntheticLinks(
-        t(s, d, "documents"), k = 3, mult = 17L)
-      graft.operators.LinkGraph.hits(edges, iters = 3)
-        .orderBy(col("auth_fp").desc, col("id").asc).limit(20)
-    }),
-
-    // N-gram containment (Broder's asymmetric near-dup metric): pairs
-    // where ≥30% of doc A's distinct 3-grams occur in doc B — the quote/
-    // embedded-document signal Jaccard structurally misses. Every 5th
-    // page carries a planted 20-word quote with known source (synthesized
-    // in BOTH engines); stop-grams with df > 50 are excluded (the
-    // informativeness AND join-fan-out gate). Integer ppm; DuckDB
-    // replays grams → df gate → pair counts → ppm exactly.
-    "q_dedup_containment" -> ((s, d) => withShufflePartitions(s, 8) {
-      graft.operators.Containment.containmentPairs(
-          graft.operators.Containment.synthesizeQuoted(docsSpread(s, d)),
-          n = 3, maxDf = 50, minPpm = 300000)
-        .orderBy("a_id", "b_id")
-    }),
-
-    // Winnowing fingerprint overlap (Schleimer SIGMOD'03, the MOSS core):
-    // each w=4 window of word-3-gram hashes keeps its rightmost minimum,
-    // storing ~2/(w+1) of all positions while guaranteeing any shared run
-    // of ≥ w+k-1 = 6 tokens yields a shared fingerprint — the planted
-    // 20-word quotes surface with ≥2 shared prints. Selection is a fixed
-    // OR over w lag/lead conjunctions on ONE doc-keyed window; hub hashes
-    // with df > 50 are excluded (join fan-out gate). DuckDB replays
-    // grams → 60-bit md5 → rightmost-min selection → df gate → pair
-    // counts → coverage ppm exactly.
-    "q_dedup_winnow" -> ((s, d) => withShufflePartitions(s, 8) {
-      graft.operators.Winnowing.overlapPairs(
-          graft.operators.Containment.synthesizeQuoted(docsSpread(s, d)),
-          k = 3, w = 4, maxDf = 50, minShared = 2)
-        .orderBy("a_id", "b_id")
-    }),
-
-    // Lloyd's k-means over the embeddings table in INTEGER arithmetic
-    // (floor(e·1000)+4000 quantization, integer squared L2, min-cid
-    // ties, per-dim sum-div-count centroid updates, first-k-by-id
-    // init): 3 rounds, k=8. Per round one k×d broadcast onto the
-    // points, a struct-ordered argmin AGGREGATE, one (cid, dim)
-    // exchange for the update — LinkGraph's fixed-width iteration
-    // discipline. DuckDB unrolls all 3 rounds to bit-equality.
-    "q_cluster_kmeans" -> ((s, d) => withShufflePartitions(s, 8) {
-      graft.operators.Kmeans.clusterSummary(s, t(s, d, "embeddings"),
-          k = 8, iters = 3)
-        .orderBy("cid")
-    }),
-
-    // Grid-blocked DBSCAN over a planted integer 2-D layout (8 dense
-    // blobs + uniform noise, synthesized from vec_id via the portable
-    // hash in BOTH engines): density clusters discovered (not declared),
-    // border points deterministically assigned (min adjacent core), noise
-    // = -1. The eps-neighbor join is an equi-join on grid cells — no
-    // cross join at any scale. DuckDB replays synthesis → pairs → cores
-    // → min-label flooding → border/noise verdicts exactly.
-    "q_cluster_dbscan" -> ((s, d) => withShufflePartitions(s, 8) {
-      val pts = graft.operators.Dbscan.synthesizePoints(
-        t(s, d, "embeddings"))
-      graft.operators.Dbscan.cluster(pts, eps = 60L, minPts = 4, rounds = 5)
-        .groupBy("cluster")
-        .agg(count(lit(1)).as("n_points"), sum("is_core").as("n_core"),
-          min("id").as("min_id"), max("id").as("max_id"))
-        .orderBy("cluster")
-    }),
-
-    // Conversation assembly for SFT data: sessionized event logs render
-    // as role-tagged chat transcripts, consecutive same-role events
-    // coalesced into single turns (the run-grouping real chat corpora
-    // need). Deterministic string assembly over the (ts, event_id) total
-    // order — DuckDB replays sessionization, turn grouping and both
-    // string_agg levels byte-for-byte. One user-keyed exchange feeds all
-    // four window/aggregate steps.
-    "q_dialog_sft" -> ((s, d) => withShufflePartitions(s, 8) {
-      graft.operators.Dialog.assembleTranscripts(
-          t(s, d, "events"), userTypes = Seq("click", "view"))
-        .orderBy("user_id", "session_id")
-    }),
-
-    // Boilerplate line removal (CCNet/RefinedWeb cleaning): lines
-    // recurring in ≥2 distinct documents (nav headers, promos, footers —
-    // synthesized deterministically onto each page in BOTH engines) are
-    // template chrome and get dropped; unique content survives. The
-    // decision is exact string document-frequency; the 64-bit line-hash
-    // pass is a collision-proof prefilter (superset, re-counted by
-    // string). DuckDB rebuilds the same pages and replays the df gate
-    // and reassembly byte-for-byte.
-    "q_boilerplate" -> ((s, d) => withShufflePartitions(s, 8) {
-      graft.operators.Boilerplate.removeBoilerplate(
-          graft.operators.Boilerplate.synthesize(docsSpread(s, d)),
-          minDf = 2)
-        .orderBy("doc_id")
-    }),
-
-    // Span corruption (T5 denoising objective, Raffel JMLR'20): every
-    // document becomes an (input, target) training pair — maximal runs of
-    // masked tokens collapse to <extra_id_k> sentinels in the input, the
-    // target lists each sentinel with its masked tokens. Mask decisions
-    // are a portable md5 hash of (doc, pos) — reproducible across runs,
-    // retries and engines; DuckDB replays tokenize → mask → run-grouping
-    // → both assemblies byte-for-byte. One exchange keyed by doc id (the
-    // run window and the final aggregate share hash partitioning).
-    "q_span_corrupt" -> ((s, d) => withShufflePartitions(s, 8) {
-      graft.operators.Augment.spanCorrupt(docsSpread(s, d), every = 5)
-        .orderBy("doc_id")
-    }),
-
-    // Label-propagation community detection (Raghavan 2007) over a
-    // block-structured synthetic graph with planted communities — the
-    // topical-cluster / mirror-family grouper for crawl curation.
-    // Synchronous rounds with min-label tie-breaking make the result a
-    // pure function of the graph; DuckDB unrolls the same 4 integer
-    // rounds to bit-equality. Output: per-label community size + id span.
-    "q_communities" -> ((s, d) => withShufflePartitions(s, 8) {
-      val docs = t(s, d, "documents")
-      val edges = graft.operators.LinkGraph.syntheticBlockLinks(
-        docs, block = 50, k = 2)
-      graft.operators.LinkGraph.labelPropagation(edges, iters = 4)
-        .groupBy("label")
-        .agg(count(lit(1)).as("size"), min("id").as("min_id"),
-          max("id").as("max_id"))
-        .orderBy("label")
-    }),
-
-    // URL canonicalization — the address-normalization step before any
-    // per-domain cap/blocklist/dedup keying: mixed-case scheme+host,
-    // default ports, www., fragments and tracking params (utm_*/fbclid/
-    // gclid/ref) all erased by a pure RE2-compatible regex chain (zero
-    // shuffles, one codegen projection); registrable domain = longest
-    // known public suffix + 1. Deterministic raw URLs are synthesized
-    // from doc_id in BOTH engines; DuckDB replays the whole chain
-    // byte-for-byte.
-    "q_url_canon" -> ((s, d) =>
-      graft.operators.Urls.normalize(
-          graft.operators.Urls.synthesize(docsSpread(s, d)))
-        .orderBy("doc_id")),
-
-    // Per-registrable-domain rollup over the canonicalized URLs with a
-    // broadcast blocklist anti-join (the blocklist is KB-sized — it
-    // never justifies shuffling the corpus side): docs, distinct hosts,
-    // total path depth per domain — what a crawl-budget allocator or
-    // per-domain cap consumes.
-    "q_url_domain_stats" -> ((s, d) => {
-      import s.implicits._
-      val norm = graft.operators.Urls.normalize(
-        graft.operators.Urls.synthesize(docsSpread(s, d)))
-      graft.operators.Urls.domainStats(norm,
-          Seq("sample.net").toDF("domain"))
-        .orderBy("domain")
-    }),
-
-    // Per-label embedding centroids (mean pooling) in the long form —
-    // (label, dim, mean): fixed-width rows with map-side partial sums,
-    // arrays never cross an exchange.
-    "q_embed_pool" -> ((s, d) =>
-      graft.operators.EmbedPool.meanPoolLong(
-          t(s, d, "embeddings"), "label", "embedding")
-        .withColumn("mean", round(col("mean"), 6))
-        .orderBy("label", "pos")),
-
-    // Triangle count over the same link graph — the clustering /
-    // link-spam density signal. Degree-oriented two-join enumeration
-    // (each wedge at its lowest-rank vertex, closure as a pure
-    // equi-join); DuckDB counts the same triangles with the naive
-    // a<b<c three-way join — counts must agree exactly.
-    "q_triangles" -> ((s, d) => withShufflePartitions(s, 8) {
-      val edges = graft.operators.LinkGraph.syntheticLinks(
-        t(s, d, "documents"), k = 3, mult = 17L)
-      // localCheckpoint EXECUTES here, inside the conf scope — a lazy
-      // plan would escape the wrapper and materialize later at the
-      // session-default partition count, silently voiding the sizing
-      graft.operators.LinkGraph.triangleCount(edges).localCheckpoint()
-    }),
-
-    // DSIR-style importance scoring (arXiv:2302.03169): rank the corpus
-    // by unigram log-likelihood ratio against the English slice as the
-    // target distribution; keep the 100 most target-like docs. The
-    // explicit-vocabulary path replays in DuckDB (same tokenizer, same
-    // add-1 smoothing); the hashed-bucket scale path is spec-checked
-    // for rank agreement in DsirSpec.
-    "q_dsir" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // target = subset of raw: one tokenize pass covers both count tables
-      graft.operators.Dsir.scoreExactSubset(docs, col("lang") === "en")
-        .withColumn("score", round(col("score"), 6))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(100)
-    }),
-
-    // The composed curation recipe — this round's new operators chained
-    // as ONE Catalyst plan: per-domain frequency caps (≤40 docs per
-    // source by length) feed DSIR importance scoring (weights learned on
-    // the capped corpus vs its English slice), and the 100 most
-    // target-like survivors ship with their provenance. Every stage's
-    // decisions are integer- or rounded-decidable, so DuckDB replays the
-    // whole funnel end-to-end.
-    "q_curation_recipe" -> ((s, d) => {
-      // persisted: the DSIR tokenize pass AND the provenance join both
-      // re-evaluate the cap window otherwise
-      val capped = graft.operators.Selection.capPerGroup(
-          docsSpread(s, d), "source", Seq(col("n_chars").desc), "doc_id",
-          n = 40)
-        .drop("rank_in_group")
-        .persist()
-      // target = subset of raw: one tokenize pass covers both count tables
-      graft.operators.Dsir.scoreExactSubset(capped, col("lang") === "en")
-        .join(capped.select("doc_id", "source"), "doc_id")
-        .withColumn("score", round(col("score"), 6))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .select("doc_id", "source", "n_tokens", "score")
-        .limit(100)
-    }),
-
-    // Robust outlier gate (median/MAD, Iglewicz–Hoaglin z ≤ 3.5) — the
-    // length-outlier curation step. Medians of integral n_chars interpolate
-    // to exact halves, so every keep/drop decision replays bit-for-bit.
-    "q_outlier_gate" -> ((s, d) =>
-      graft.operators.Outliers.report(
-          t(s, d, "documents"), "n_chars", "lang", k = 3.5)
-        .orderBy("lang")),
-
-    // Feature-hashing vectorizer under the EXACT oracle: the sparse
-    // (doc_id, bucket, tf) face replays bit-for-bit — DuckDB tokenizes
-    // with the corpus tokenizer and recomputes the portable 60-bit md5
-    // bucket for every token. The dense Array[Float] face feeds the
-    // ANN/PCA operators (spec-checked equivalent to this sparse form).
-    "q_text_vectorize" -> ((s, d) =>
-      graft.operators.TextVectorizer.sparseHashedTf(
-          t(s, d, "documents"), dim = 64)
-        .orderBy("doc_id", "bucket")),
-
-    // Distribution drift (PSI) between two corpus slices under the EXACT
-    // oracle: integer-cent bucketing replays bit-for-bit; proportions,
-    // smoothing and the ln term are the same IEEE expressions both sides.
-    "q_drift" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      def cents(df: org.apache.spark.sql.DataFrame) = df.select(
-        round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      graft.operators.Drift.psiBuckets(
-          cents(li.filter(col("l_orderkey") % 2 === 0)),
-          cents(li.filter(col("l_quantity") > 25)),
-          "cents", lo = 0L, width = 500000L, nBuckets = 20)
-        .withColumn("psi_term", round(col("psi_term"), 6))
-        .orderBy("bucket")
-    }),
-
-    // Model-based quality filtering under the EXACT oracle: a FROZEN
-    // logistic model (dyadic weights/means/stds → exact standardization
-    // literals) scores the corpus-standard quality features; DuckDB
-    // recomputes the features (q_quality's formulas), the same
-    // left-to-right margin and the sigmoid. Training itself is
-    // spec-checked like BPE/k-means (QualityClassifierSpec).
-    "q_quality_model" -> ((s, d) => {
-      import graft.operators.QualityClassifier
-      val m = frozenQualityModel
-      val f = withQualityFeatures(t(s, d, "documents"), Seq("doc_id"))
-      QualityClassifier.score(f, m)
-        .select(col("doc_id"), col("quality_prob"),
-          (col("quality_prob") >= 0.5).as("keep"))
-        .withColumn("quality_prob", round(col("quality_prob"), 6))
-        .orderBy("doc_id")
-    }),
-
-    // Threshold-sweep evaluation of the frozen quality classifier:
-    // confusion counts + precision/recall per cutoff — the curve read
-    // before picking a filter threshold. Thresholds cut the raw MARGIN
-    // (IEEE +,-,*,/ only — bit-reproducible cross-engine) never the
-    // sigmoid (libm exp is the 1-ulp hazard q_hll measured). One corpus
-    // pass: rows fan out to #thresholds via a literal-array explode, the
-    // exchange carries #thresholds×4 counters.
-    "q_model_eval" -> ((s, d) => {
-      import graft.operators.QualityClassifier
-      val m = frozenQualityModel
-      val f = withQualityFeatures(t(s, d, "documents"), Seq("doc_id"))
-      // ground-truth proxy on dyadic constants — IEEE-exact both engines
-      val scored = f
-        .withColumn("margin", QualityClassifier.marginColumn(m))
-        .withColumn("label",
-          col("n_tokens_d") >= 64.0 && col("symbol_ratio") <= 0.03125)
-      graft.operators.ModelEval.confusionSweep(scored, "label", "margin",
-          Seq(-1.0, -0.5, 0.0, 0.5, 1.0))
-        .orderBy("threshold")
-    }),
-
-    // Mixture planning: the pre-sampling arithmetic — each source's
-    // natural token supply vs its integer weight share of a total
-    // budget; epochs_ppm > 1e6 = up-sampling. Unlisted sources get
-    // weight 0 and stay VISIBLE as target 0 rows. Metadata-priced
-    // after one corpus aggregate.
-    "q_mixture_plan" -> ((s, d) => {
-      import s.implicits._
-      val tc = t(s, d, "documents")
-        .select(col("source"),
-          size(graft.functions.TextFunctions.tokens(
-            graft.functions.TextFunctions.normalizeText(col("text"))))
-            .cast("long").as("nt"))
-        .groupBy("source").agg(sum("nt").as("n_tokens"))
-      val weights = Seq(("src0", 5L), ("src1", 3L), ("src2", 1L))
-        .toDF("source", "weight")
-      graft.operators.MixturePlan.solve(tc, weights,
-          budgetTokens = 500000L)
-        .orderBy("source")
-    }),
-
-    // Dataset-card generation: the per-source release summary (docs,
-    // tokens, duplication, length and quality profile) in ONE
-    // aggregation pass — every column integer (ppm rates, ×100
-    // floor-scaled means, IEEE margin decisions, md5 dup keys).
-    "q_dataset_card" -> ((s, d) => {
-      import graft.operators.QualityClassifier
-      val withFeats = withQualityFeatures(t(s, d, "documents"),
-        Seq("source", "text"))
-      graft.operators.DatasetCard.perSource(withFeats,
-          QualityClassifier.marginColumn(frozenQualityModel))
-        .orderBy("source")
-    }),
-
-    // RAG context assembly in ONE plan (fourth flagship composition):
-    // chunk → sparse INTEGER tf dot-product scoring (cosine's sqrt is
-    // libm; norms add nothing to a fixed query's ranking) → per-query
-    // token-budget cut under the Selection boundary rule. Query terms
-    // broadcast; candidates have inverted-index sparsity via the
-    // shared-term floor.
-    "q_rag_context" -> ((s, d) => {
-      import s.implicits._
-      val queries = Seq(
-        ("q1", "sort merge join"),
-        ("q2", "table scan filter"),
-        ("q3", "stream window state")).toDF("query_id", "qtext")
-      graft.operators.Rag.assembleContext(
-          t(s, d, "documents"), queries,
-          chunkSize = 32, overlap = 8, budgetTokens = 256L)
-        .orderBy("query_id", "cum_before", "doc_id", "chunk_idx")
-    }),
-
-    // Cross-source score calibration: raw quality scores are not
-    // comparable across sources, so a global cutoff silently keeps
-    // whole sources and drops others. Rank-normalize within source
-    // (integer pct_ppm from a declared total order), then keep each
-    // source's top 40% — the same FRACTION of every source. One
-    // source-partitioned window over (id, score) scalars + a broadcast
-    // per-source count join; thresholds cut the IEEE-exact margin rank,
-    // never a libm value.
-    "q_calibrate" -> ((s, d) => {
-      import graft.operators.{Calibrate, QualityClassifier}
-      val scored = withQualityFeatures(t(s, d, "documents"),
-          Seq("doc_id", "source"))
-        .withColumn("margin",
-          QualityClassifier.marginColumn(frozenQualityModel))
-        .select("doc_id", "source", "margin")
-      Calibrate.keepTopPerSource(scored, "source", "doc_id", "margin",
-          keepPpm = 400000L)
-        .select(col("doc_id"), col("source"), col("pct_ppm"))
-        .orderBy("source", "pct_ppm", "doc_id")
-    }),
-
-    // Collocation mining: top adjacent word pairs by CONFIDENCE
-    // P(w2|w1) in exact ppm (PMI would need cross-engine ln or an
-    // overflowing triple product). Bigrams form ARRAY-SIDE (slice +
-    // zip_with in one projection — no posexplode/self-join); only
-    // word-count-shaped exchanges, text never moves.
-    "q_collocations" -> ((s, d) =>
-      graft.operators.Collocations.topByConfidence(
-        docsSpread(s, d), minCount = 5L, k = 20)),
-
-    // Count-series anomaly detection: hourly event-type buckets more
-    // than 3σ from their type's mean, decided ENTIRELY in integer
-    // arithmetic — (n·x − s)² > k²·(n·q − s²) — no sqrt, no doubles,
-    // replays bit-for-bit. The moments join back as a broadcast
-    // (one row per event type); the flag pass prices as metadata.
-    "q_anomaly" -> ((s, d) => {
-      val series = t(s, d, "events")
-        .groupBy(col("event_type"),
-          date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n"))
-      graft.operators.Anomaly.countSpikes(series, "event_type", "hour",
-          "n", k = 3)
-        .orderBy("event_type", "hour")
-    }),
-
-    // Length-bucketed batch assembly: similar-length docs batch
-    // together so padding-to-longest stops burning slots. Bucket =
-    // (len−1) div width; batches cut longest-first within bucket;
-    // per-batch padding waste emitted as integer evidence. Window
-    // partitions by BUCKET (parallelism = #buckets) over (id, len)
-    // scalars only — text never shuffles.
-    "q_length_batches" -> ((s, d) =>
-      graft.operators.Packing.lengthBucketedBatches(
-          t(s, d, "documents"), bucketWidth = 16, batchSize = 8)
-        .orderBy("bucket", "batch_id")),
-
-    // Bucket-spine gap filling: the step a monitor runs BEFORE
-    // statistics — a groupBy emits rows only for buckets that HAVE
-    // events, so absence must become an explicit zero first. Every
-    // event type gets the GLOBAL hourly spine (broadcast one-row bounds
-    // exploded per group, one left join); everything metadata-priced.
-    "q_gapfill" -> ((s, d) => {
-      val series = t(s, d, "events")
-        .groupBy(col("event_type"),
-          date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n"))
-      graft.operators.GapFill.fillHourly(series, "event_type", "hour",
-          "n")
-        .orderBy("event_type", "hour")
-    }),
-
-    // Streaming trending terms: the corpus word count maintained as an
-    // update-mode aggregate upserted exactly-once into a lake table
-    // keyed by term — counts are additive and order-invariant, so the
-    // stream's final state equals the batch word count bit-for-bit and
-    // the top-20 replays under the exact oracle. (Vocabulary-sized
-    // state is the documented cost; the sketch siblings — CMS, MG —
-    // are the bounded-state alternatives.)
-    "q_stream_trending" -> ((s, d) => withShufflePartitions(s, 4) {
-      import graft.lake.{LakeLog, LakeTable}
-      import graft.streaming.Streams
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val tmp = java.nio.file.Files.createTempDirectory("graftstream")
-      val srcDir = tmp.resolve("src").toString
-      docs.repartition(6, col("doc_id")).write.parquet(srcDir)
-      val log = new LakeLog(tmp.resolve("lake"))
-      val sinkDf = s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("term",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))
-      LakeTable.createTable(log, "trending", sinkDf.schema)
-      val agg = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir)
-        .select(explode(graft.functions.TextFunctions.tokens(
-          graft.functions.TextFunctions.normalizeText(col("text"))))
-          .as("term"))
-        .groupBy("term").agg(count(lit(1)).as("n"))
-        .withColumn("k", col("term"))
-        .select("k", "term", "n")
-      val q = Streams.sinkAggToLake(agg, log, "trending", "k",
-        tmp.resolve("ckpt").toString)
-      q.processAllAvailable(); q.stop()
-      LakeTable.read(s, log, "trending")
-        .select("term", "n")
-        .orderBy(col("n").desc, col("term").asc).limit(20)
-    }),
-
-    // The anomaly monitor on a CONTINUOUS ingest: the hourly count
-    // series is maintained as a streaming update-mode aggregate
-    // upserted exactly-once into a lake table (the q_stream_hourly
-    // machinery), and the spike pass runs over the table's final
-    // state. Stream state ≡ batch aggregate, so the flags replay
-    // bit-for-bit against the same batch oracle as q_anomaly.
-    "q_stream_anomaly" -> ((s, d) => withShufflePartitions(s, 4) {
-      import graft.lake.{LakeLog, LakeTable}
-      import graft.streaming.Streams
-      val ev = t(s, d, "events").select("ts", "event_id", "event_type")
-      val tmp = java.nio.file.Files.createTempDirectory("graftstream")
-      val srcDir = tmp.resolve("src").toString
-      ev.repartition(6, col("event_id")).write.parquet(srcDir)
-      val log = new LakeLog(tmp.resolve("lake"))
-      val sinkDf = ev.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("hour",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))
-      LakeTable.createTable(log, "hourly_n", sinkDf.schema)
-      val agg = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("k",
-          concat(col("hour").cast("string"), lit("|"), col("event_type")))
-        .select("k", "hour", "event_type", "n")
-      val q = Streams.sinkAggToLake(agg, log, "hourly_n", "k",
-        tmp.resolve("ckpt").toString)
-      q.processAllAvailable(); q.stop()
-      val series = LakeTable.read(s, log, "hourly_n")
-        .select("event_type", "hour", "n")
-      graft.operators.Anomaly.countSpikes(series, "event_type", "hour",
-          "n", k = 3)
-        .orderBy("event_type", "hour")
-    }),
-
-    // Right-to-be-forgotten across the lake: one subject key erased
-    // from EVERY table carrying it — merge-on-read per table (erasure
-    // requests must not each rewrite terabytes; the physical purge is
-    // the compaction/VACUUM horizon), idempotent per (request, table)
-    // via derived txn ids so a replayed half-done request never
-    // double-deletes. In-query pins: rows actually deleted, replay is
-    // a no-op, the key is gone from both tables.
-    "q_lake_forget" -> ((s, d) => {
-      import graft.lake.{Forget, LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftforget"))
-      val ev = t(s, d, "events").select("user_id", "event_type", "value")
-      val prof = ev.groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"))
-      LakeTable.createTable(log, "ev", ev.schema)
-      LakeTable.createTable(log, "prof", prof.schema)
-      // different tables (per-table commit locks): fully independent loads
-      LakeTable.inParallel(Seq(
-        () => { LakeTable.insert(s, log, "ev", ev, numFiles = 4); () },
-        () => { LakeTable.insert(s, log, "prof", prof, numFiles = 4); () }))
-      val r1 = Forget.forgetKey(s, log, Seq("ev", "prof"), "user_id",
-        "7", "req-1")
-      assert(r1.find(_.table == "ev").get.rowsDeleted > 0)
-      assert(r1.find(_.table == "prof").get.rowsDeleted == 1)
-      // replay of the same request: idempotent no-op on every table
-      val r2 = Forget.forgetKey(s, log, Seq("ev", "prof"), "user_id",
-        "7", "req-1")
-      assert(r2.forall(_.rowsDeleted == 0))
-      val evAfter = LakeTable.read(s, log, "ev")
-      val profAfter = LakeTable.read(s, log, "prof")
-      assert(evAfter.filter(col("user_id") === 7).count() == 0)
-      assert(profAfter.filter(col("user_id") === 7).count() == 0)
-      val a = evAfter.agg(count(lit(1)).as("n_rows"),
-          countDistinct("user_id").as("n_users"))
-        .withColumn("tbl", lit("ev"))
-      val b = profAfter.agg(count(lit(1)).as("n_rows"),
-          countDistinct("user_id").as("n_users"))
-        .withColumn("tbl", lit("prof"))
-      a.unionByName(b).select("tbl", "n_rows", "n_users").orderBy("tbl")
-    }),
-
-    "q_profile" -> ((s, d) =>
-      graft.operators.Profile.numericProfile(
-          t(s, d, "lineitem").select("l_quantity", "l_extendedprice",
-            "l_discount", "l_tax"))
-        .select(col("column"), col("nRows").as("n_rows"),
-          col("nNulls").as("n_nulls"),
-          round(col("min"), 4).as("min_v"), round(col("max"), 4).as("max_v"),
-          round(col("mean"), 6).as("mean_v"),
-          round(col("stddev"), 6).as("stddev_v"),
-          round(col("p25"), 4).as("p25"), round(col("p50"), 4).as("p50"),
-          round(col("p75"), 4).as("p75"))
-        .orderBy("column")),
-
-    // Equi-width histogram: the distribution profile behind outlier bounds
-    // and mixture design. One metadata-priced min/max aggregate broadcast
-    // back as a 1-row crossJoin, then bucket = integer `div` over CENTS —
-    // every boundary decision is integer-exact, so DuckDB replays bucket
-    // assignment bit-for-bit (a double divide could round a value across a
-    // bucket edge differently per engine). Scan → broadcast → one groupBy
-    // on ≤ 20 keys: the only full-data exchange carries bucket ids.
-    "q_histogram" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .select(round(col("l_extendedprice") * 100).cast("long").as("cents"))
-        .crossJoin(broadcast(
-          t(s, d, "lineitem")
-            .select(round(col("l_extendedprice") * 100).cast("long")
-              .as("cents"))
-            .agg(min("cents").as("lo"), max("cents").as("hi"))))
-        .withColumn("bucket",
-          expr("(cents - lo) * 20 div (hi - lo + 1)"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("cnt"),
-          min("cents").as("min_cents"), max("cents").as("max_cents"))
-        .orderBy("bucket")),
-
-    // Pairwise correlation / covariance — the feature-redundancy signal a
-    // curation pipeline reads before dropping collinear quality scores.
-    // ONE codegen'd partial+final aggregate pass computes every pair via
-    // mergeable co-moments (no per-pair scans, no shuffle beyond one
-    // partial-agg row per partition) — the same one-pass shape at 100 TB.
-    "q_corr" -> ((s, d) =>
-      t(s, d, "lineitem").agg(
-        round(corr("l_quantity", "l_extendedprice"), 6).as("corr_qty_price"),
-        round(corr("l_quantity", "l_discount"), 6).as("corr_qty_disc"),
-        round(corr("l_extendedprice", "l_tax"), 6).as("corr_price_tax"),
-        round(covar_samp("l_quantity", "l_extendedprice"), 2)
-          .as("covar_qty_price"),
-        round(covar_samp("l_discount", "l_tax"), 8).as("covar_disc_tax"))),
-
-    // ---- grouping sets / rollup (extension) ------------------------------
-    "q_rollup" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("cnt"), round(sum("l_quantity"), 2).as("sum_qty"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)),
-
-    // ---- events: time-bucketed agg + regexp extraction -------------------
-    "q_events_hourly" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total_value"))
-        .orderBy("hour", "event_type")),
-    "q_events_regexp" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("k", regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-          .cast("int"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(avg("k"), 6).as("avg_k"))
-        .orderBy("event_type")),
-
-    // Best-of-n rejection sampling (RLHF data prep): events are the
-    // sampler's layout — contiguous fans of 8 reward-scored completions
-    // per prompt — and the argmax completion per prompt is selected by a
-    // struct-ordered AGGREGATE (map-side combine, no per-prompt window
-    // funnel). Rewards in integer cents (IEEE-exact round of 2-decimal
-    // doubles); ties break to min candidate id.
-    "q_best_of_n" -> ((s, d) =>
-      graft.operators.Preference.bestOfN(
-          graft.operators.Preference.candidates(t(s, d, "events"), fan = 8))
-        .orderBy("prompt_id")),
-
-    // DPO preference pairs: (chosen, rejected, margin) per prompt from
-    // the same candidate fans — chosen = max reward (min id tie),
-    // rejected = min reward (min id tie), kept when the margin clears
-    // 500 cents. ONE exchange on prompt_id; output is corpus/fan rows.
-    "q_pref_pairs" -> ((s, d) =>
-      graft.operators.Preference.preferencePairs(
-          graft.operators.Preference.candidates(t(s, d, "events"), fan = 8),
-          minMarginCents = 500)
-        .orderBy("prompt_id")),
-
-    // Strictly-ordered behavioral funnel (view → click → purchase): each
-    // stage is "first qualifying event AFTER the previous stage's time",
-    // not mere event existence. Every stage aggregates and joins on
-    // user_id, so one hash partitioning carries the whole chain (the
-    // later joins reuse the earlier stages' exchanges) and each stage's
-    // input is pre-filtered to its own event type before any shuffle.
-    // Counts are integers — exact across engines.
-    "q_funnel" -> ((s, d) => {
-      val ev = t(s, d, "events").select("user_id", "event_type", "ts")
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts").as("t_view"))
-      val c = ev.filter(col("event_type") === "click")
-        .join(v, Seq("user_id"))
-        .filter(col("ts") > col("t_view"))
-        .groupBy("user_id").agg(min("ts").as("t_click"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .join(c, Seq("user_id"))
-        .filter(col("ts") > col("t_click"))
-        .groupBy("user_id").agg(min("ts").as("t_purchase"))
-      v.agg(count(lit(1)).as("n")).withColumn("stage", lit("1_view"))
-        .unionByName(
-          c.agg(count(lit(1)).as("n")).withColumn("stage", lit("2_click")))
-        .unionByName(
-          p.agg(count(lit(1)).as("n")).withColumn("stage", lit("3_purchase")))
-        .select("stage", "n").orderBy("stage")
-    }),
-
-    // Cohort retention: users bucketed by signup week, counted in each
-    // later activity week (the week-offset matrix growth teams read).
-    // Cohorts and activity both aggregate on user_id first — the corpus
-    // shuffles once per side, the join is cohort-sized, and every output
-    // value is an integer count over Monday-truncated weeks (both engines
-    // truncate ISO weeks to Monday, offsets are exact multiples of 7 days).
-    "q_retention" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val cohorts = ev.filter(col("event_type") === "signup")
-        .groupBy("user_id")
-        .agg(date_trunc("week", min("ts")).as("cweek"))
-      val activity = ev
-        .select(col("user_id"), date_trunc("week", col("ts")).as("aweek"))
-        .distinct()
-      cohorts.join(activity, Seq("user_id"))
-        .filter(col("aweek") >= col("cweek"))
-        .withColumn("week_offset",
-          (datediff(col("aweek"), col("cweek")) / 7).cast("long"))
-        .groupBy("cweek", "week_offset")
-        .agg(countDistinct("user_id").as("n_users"))
-        .orderBy("cweek", "week_offset")
-    }),
-
-    // ---- LLM-data-pipeline: text analysis --------------------------------
-    "q_text_stats" -> ((s, d) =>
-      docsSpread(s, d).select(
-          col("doc_id"),
-          tokenCount(col("text")).as("n_tokens"),
-          bpeTokenCount(col("text")).as("n_bpe_tokens"),
-          length(normalizeText(col("text"))).as("n_norm_chars"),
-          fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")),
-    "q_quality" -> ((s, d) => {
-      val f = qualityFeatures(col("text"))
-      docsSpread(s, d).select(
-          col("doc_id"),
-          f.getField("n_tokens").as("n_tokens"),
-          round(f.getField("mean_token_len"), 6).as("mean_token_len"),
-          round(f.getField("symbol_ratio"), 6).as("symbol_ratio"),
-          round(f.getField("digit_ratio"), 6).as("digit_ratio"),
-          qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")
-    }),
-    "q_lang_id" -> ((s, d) =>
-      docsSpread(s, d).select(
-          col("doc_id"),
-          langId(col("text")).as("lang_guess"),
-          round(langScore(col("text"), "en"), 6).as("en_score"))
-        .orderBy("doc_id")),
-
-    // ---- the flagship 100 TB use case, end-to-end ------------------------
-    "q_corpus_pipeline" -> ((s, d) => {
-      // training-data curation in one plan: quality gate → exact dedup
-      // (lowest doc_id per normalized-text fingerprint) → language tag →
-      // per-language corpus stats. ALL text expressions evaluate in ONE
-      // projection over the scan (a dedup formulated as a self-join would
-      // re-run the quality/lang/fingerprint regexes on every branch); the
-      // dedup window then shuffles only (doc_id, q, lang, fp) scalars —
-      // the text column never leaves its scan partition.
-      import org.apache.spark.sql.expressions.Window
-      val perDoc = docsSpread(s, d).select(col("doc_id"),
-          qualityScore(col("text")).as("q"),
-          langId(col("text")).as("lang"),
-          fingerprint(col("text")).as("fp"))
-      // The quality gate rides ABOVE the window, folded into the min (a
-      // failing doc contributes NULL, which min ignores): an early
-      // `.filter(q >= 0.5)` gets predicate-pushed below the repartition
-      // onto the single-row-group scan, re-evaluating the whole regex
-      // tree once in the Filter (single-threaded!) and again in the
-      // Project — measured 3.8 s single-task vs ~0.3 s spread. Same rows
-      // out: for a passing doc, doc_id == min(passing doc_ids of its fp
-      // group) is exactly the old filtered-window survivor rule.
-      perDoc
-        .withColumn("min_id", min(when(col("q") >= 0.5, col("doc_id")))
-          .over(Window.partitionBy("fp")))
-        .filter(col("q") >= 0.5 && col("doc_id") === col("min_id"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), round(avg("q"), 6).as("avg_quality"))
-        .orderBy("lang")
-    }),
-
-    // Flagship #2: the round-3 curation gates composed end-to-end — exact
-    // dedup → repetition gate → benchmark decontamination → per-source
-    // volume stats. Each gate keeps its optimal internal shape (two-phase
-    // aggregates, broadcast eval set) and gates compose as doc_id
-    // semi-joins: per-doc metrics are invariant to which other training
-    // docs survive earlier gates, so the composition is order-stable and
-    // the whole pipeline is oracle-checkable.
-    "q_pipeline_gates" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val eval = docs.filter(col("source") === "src0")
-      val train = docs.filter(col("source") =!= "src0")
-      // Each gate's keep-set is computed INDEPENDENTLY from the base
-      // corpus — one text pass per gate, then narrow id-set semi-joins.
-      // Naively chaining keep(keep(keep(train))) doubles the upstream
-      // subtree at every stage (each gate references its input twice), so
-      // the scan re-executes 2^gates times; subset-invariant metrics make
-      // the independent/intersect form equivalent and linear.
-      val keepDedup = Dedup.exactDedup(train).select("doc_id")
-      val keepRep = operators.Repetition.metrics(train)
-        .filter(col("distinct_frac") >= 0.35 &&
-          col("top2gram_frac") <= 0.25 && col("top3gram_frac") <= 0.30)
-        .select("doc_id")
-      val keepDecon = Decontaminate.overlap(train, eval, n = 5)
-        .filter(col("overlap_frac") <= 0.2)
-        .select("doc_id")
-      train
-        .join(keepDedup, Seq("doc_id"), "left_semi")
-        .join(keepRep, Seq("doc_id"), "left_semi")
-        .join(keepDecon, Seq("doc_id"), "left_semi")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(tokenCount(col("text")).cast("long")).as("n_tokens"))
-        .orderBy("source")
-    }),
-
-    // ---- LLM-data-pipeline: dedup ----------------------------------------
-    "q_dedup_exact" -> ((s, d) =>
-      Dedup.exactDedup(t(s, d, "documents"))
-        .select("doc_id").orderBy("doc_id")),
-    "q_dedup_minhash" -> ((s, d) =>
-      // the production face runs the PORTABLE hash family (one md5-derived
-      // 28-bit base hash per shingle + k universal-hash affines — the same
-      // machinery the persisted LSH index ships in production, chosen for
-      // engine-version-stable signatures) at the production operating
-      // point bands=16, r=4, k=64 — so the FULL pair set replays
-      // bit-for-bit in DuckDB and the face that was rows-only through
-      // round 10 sits under the exact oracle. est = matches/64, exact
-      // dyadic. The xxhash64 fast path stays exercised and recall-gated
-      // by q_dedup_minhash_recall.
-      Dedup.minhashLshPairsFixed(t(s, d, "documents"), threshold = 0.5,
-          bands = 16, rowsPerBand = 4)
-        .orderBy("a_id", "b_id")),
-    "q_dedup_minhash_fixed" -> ((s, d) =>
-      // the LSH machinery's exact-oracle face: md5-derived 60-bit per-seed
-      // hashes DuckDB recomputes bit-for-bit (hex-string cast), raw
-      // signature slices as band keys — banding, candidates and the
-      // signature-estimated Jaccard all replayed cross-engine. est is
-      // count/16 (exact dyadic), no rounding needed.
-      Dedup.minhashLshPairsFixed(t(s, d, "documents"), threshold = 0.5)
-        .orderBy("a_id", "b_id")),
-    // PERSISTED LSH index, the continuous-crawl shape: 2/3 of the corpus
-    // becomes an indexed lake table (bucket-clustered + bucket blooms);
-    // the other 1/3 arrives as a "new batch" and probes it — history is
-    // never re-shingled, and within the key budget the probe's isin
-    // filter reaches the scan and file-prunes. Same portable hashes as
-    // q_dedup_minhash_fixed, so DuckDB replays index build + probe
-    // end-to-end (candidates restricted to cross hist×batch pairs).
-    "q_dedup_minhash_index" -> ((s, d) => {
-      // build+probe bodies live ONCE in benchPhases (Bench times them
-      // apart); the correctness gate replays the bundled lifecycle
-      val (build, probe) = benchPhases("q_dedup_minhash_index")(s, d)
-      build(); probe()
-    }),
-    "q_dedup_simhash" -> ((s, d) =>
-      // production face on PORTABLE (md5-derived) shingle hashes at a
-      // TIGHTER radius than the _fixed face (4 vs 8 — a distinct Manku
-      // (k, c) banding choice), so the pair set replays exactly in DuckDB
-      // (brute-force Hamming = the pigeonhole full-recall guarantee) and
-      // the face that was rows-only through round 10 sits under the
-      // exact oracle. The xxhash64 fast path stays exercised and
-      // recall-gated by q_dedup_simhash_recall.
-      Dedup.simhashPairsFixed(t(s, d, "documents"), maxHamming = 4)
-        .orderBy("a_id", "b_id")),
-    "q_dedup_simhash_fixed" -> ((s, d) =>
-      // the Manku machinery's exact-oracle face: portable md5-derived
-      // shingle hashes, Spark runs the REAL multi-block candidate join,
-      // DuckDB brute-forces all-pairs Hamming — equality IS the pigeonhole
-      // full-recall guarantee, checked on real data.
-      Dedup.simhashPairsFixed(t(s, d, "documents"), maxHamming = 8)
-        .orderBy("a_id", "b_id")),
-    "q_dedup_jaccard" -> ((s, d) =>
-      Dedup.ngramJaccardPairs(t(s, d, "documents"), threshold = 0.6, n = 3)
-        .withColumn("jaccard", round(col("jaccard"), 6))
-        .orderBy("a_id", "b_id")),
-    // Dedup-candidate evaluation: precision/recall of the LSH pair
-    // generator against exact 3-gram-Jaccard ground truth — the metric a
-    // pipeline watches when tuning bands/rows. Both inputs are
-    // already-reduced pair sets; one full-outer join + one aggregate,
-    // all-integer outputs. The oracle replays BOTH generators (the
-    // portable-hash LSH face and the exact Jaccard) and set-compares.
-    "q_dedup_eval" -> ((s, d) => {
-      // truth arm (exact all-pairs 3-gram Jaccard) lives in benchPhases'
-      // build so Bench prices the PRODUCTION face (LSH candidates + the
-      // set compare) as the headline and the gate-scale truth as a
-      // `builds` sidecar; the correctness gate replays the bundle
-      val (build, probe) = benchPhases("q_dedup_eval")(s, d)
-      build(); probe()
-    }),
-    // Recall gates for the three production (Spark-internal-hash) faces —
-    // the ONLY queries whose pair sets DuckDB cannot replay. Each gate
-    // computes recall against an exact truth set Spark-side, `require`s a
-    // floor (a regression crashes the query → the gate FAILS it), and
-    // emits a row DuckDB verifies exactly: the truth-pair count where the
-    // truth is oracle-expressible, plus the floor and a met flag the hash
-    // check falsifies. The approximate faces themselves stay rows-only by
-    // nature; these siblings carry their falsifiable number.
-    "q_dedup_minhash_recall" -> ((s, d) => {
-      val (build, probe) = benchPhases("q_dedup_minhash_recall")(s, d)
-      build(); probe()
-    }),
-    "q_dedup_simhash_recall" -> ((s, d) => {
-      val (build, probe) = benchPhases("q_dedup_simhash_recall")(s, d)
-      build(); probe()
-    }),
-    "q_dedup_semantic_recall" -> ((s, d) => {
-      val (build, probe) = benchPhases("q_dedup_semantic_recall")(s, d)
-      build(); probe()
-    }),
-    // Incremental (cross-batch) dedup via the Bloom fingerprint index:
-    // src1 plays the newly crawled batch, every third doc of the existing
-    // corpus is re-crawled under a fresh id (a guaranteed exact dup). The
-    // bloom path's result is EXACT (no false negatives; false positives
-    // only route extra rows into the verification anti-join), so the
-    // whole scenario sits under the DuckDB oracle.
-    "q_dedup_incremental" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val corpus = docs.filter(col("source") =!= "src1")
-      val recrawl = corpus.filter(pmod(col("doc_id"), lit(3)) === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-      val newBatch = docs.filter(col("source") === "src1")
-        .unionByName(recrawl)
-      val corpusFps = corpus.select(fingerprint(col("text")).as("fp"))
-      val bloom = Dedup.fingerprintBloom(corpus, expectedItems = 100000)
-      Dedup.incrementalExactDedupBloom(corpusFps, bloom, newBatch)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    // Benchmark decontamination: src0 plays the held-out eval suite, the
-    // rest of the corpus is "training data" checked for 5-gram leakage.
-    "q_decontaminate" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Decontaminate.overlap(
-          docs.filter(col("source") =!= "src0"),
-          docs.filter(col("source") === "src0"), n = 5)
-        .withColumn("overlap_frac", round(col("overlap_frac"), 6))
-        .orderBy("doc_id")
-    }),
-
-    // Gopher-style repetition quality metrics over the whole corpus.
-    "q_repetition" -> ((s, d) =>
-      operators.Repetition.metrics(t(s, d, "documents"))
-        .withColumn("distinct_frac", round(col("distinct_frac"), 6))
-        .withColumn("top2gram_frac", round(col("top2gram_frac"), 6))
-        .withColumn("top3gram_frac", round(col("top3gram_frac"), 6))
-        .orderBy("doc_id")),
-    // Token-budget sequence packing (sharded greedy chunk assignment).
-    "q_pack" -> ((s, d) =>
-      operators.Packing.packByTokenBudget(t(s, d, "documents"),
-          budget = 2048, nShards = 8)
-        .orderBy("doc_id")),
-    // PII redaction: the corpus text is digit-free, so the query plants
-    // deterministic doc_id-derived PII (the oracle plants the identical
-    // strings) and the scrub + per-class counts are checked exactly.
-    "q_redact" -> ((s, d) => {
-      val id = col("doc_id")
-      def m(k: Int) = pmod(id, lit(k))
-      val seeded = t(s, d, "documents").withColumn("text", concat(
-        col("text"),
-        when(m(7) === 0,
-          concat(lit(" mail u"), id, lit("@ex"), m(5), lit(".org")))
-          .otherwise(lit("")),
-        when(m(11) === 0,
-          concat(lit(" ip 10."), m(250), lit(".0."), m(100)))
-          .otherwise(lit("")),
-        when(m(13) === 0,
-          concat(lit(" tel +1 415-555-"), m(9000) + 1000))
-          .otherwise(lit("")),
-        when(m(17) === 0,
-          concat(lit(" ssn 078-05-"), m(9000) + 1000))
-          .otherwise(lit(""))))
-      operators.Redact.scrub(seeded)
-        .select("doc_id", "n_emails", "n_ips", "n_phones", "n_ssns",
-          "text_clean")
-        .orderBy("doc_id")
-    }),
-    // Corpus TF-IDF: top-3 characteristic terms per document, ranked on
-    // integers only (tf desc, df asc, term asc) so ranks reproduce exactly.
-    "q_tfidf" -> ((s, d) =>
-      operators.TfIdf.topTerms(t(s, d, "documents"), k = 3)
-        .withColumn("tfidf", round(col("tfidf"), 6))
-        .orderBy("doc_id", "rank")),
-    // Int8 vector quantization quality: per-vector scale, max reconstruction
-    // error (bounded by scale/2) and original↔dequantized cosine — the
-    // storage/bandwidth half of the ANN stack, all per-row projections.
-    "q_quantize" -> ((s, d) => {
-      val q = operators.Quantize.quantizeInt8(t(s, d, "embeddings"))
-      // metrics first, rounding second: aliasing round(scale) AS scale in
-      // the same select would lateral-alias-shadow the raw scale inside
-      // the metric expressions (Spark 4 LCA resolution) and skew max_err
-      q.select(col("vec_id"), col("scale"),
-          operators.Quantize.reconMaxErr(
-            col("embedding"), col("q"), col("scale")).as("max_err"),
-          operators.Quantize.reconCosine(
-            col("embedding"), col("q")).as("recon_cos"))
-        .select(col("vec_id"),
-          round(col("scale"), 6).as("scale"),
-          round(col("max_err"), 6).as("max_err"),
-          round(col("recon_cos"), 6).as("recon_cos"))
-        .orderBy("vec_id")
-    }),
-    // CCNet-style LM quality scoring: train a smoothed bigram model on the
-    // corpus itself, score every document by mean log-prob. Log-probs are
-    // integer-scaled at training time so per-doc sums are order-independent
-    // and the oracle is exact.
-    "q_lm_score" -> ((s, d) => {
-      // avg log-prob in FLOOR-MICRO units: the per-bigram terms are exact
-      // integers, and floor(ssum/n) is the same integer on every engine —
-      // round(double, 6) was one-ulp-fragile (decimal-tie disagreement
-      // surfaced at sf0.1)
-      val docs = t(s, d, "documents")
-      // fused self-train+score: one tokenize pass instead of four
-      operators.LangModel.scoreSelfTrained(docs, k = 1.0)
-        .select(col("doc_id"), col("n_bigrams"),
-          floor(col("ssum_micro").cast("double") / col("n_bigrams"))
-            .cast("long").as("avg_logp_u"))
-        .orderBy("doc_id")
-    }),
-    // Declarative data-quality validation (the Deequ shape): six checks
-    // compile into ONE aggregate pass; the report row set replays
-    // exactly (all counters are exact aggregates).
-    "q_validate" -> ((s, d) => {
-      import graft.operators.Validate._
-      graft.operators.Validate.run(t(s, d, "documents"), Seq(
-          NotNull("text"), Unique("doc_id"),
-          InRange("n_chars", 1, 1000000),
-          InSet("lang", Seq("de", "en", "es", "fr", "zh")),
-          Matches("source", "^src[0-9]+$"),
-          RowCountBetween(1, 10000000)))
-        .orderBy("check_name", "target")
-    }),
-
-    // Quality-weighted corpus draw: Efraimidis–Spirakis sampling without
-    // replacement, inclusion ∝ n_chars — the weighted subset selection a
-    // mixture recipe uses when "sample by quality" must be exact,
-    // deterministic and one-pass. DuckDB recomputes every portable key.
-    "q_sample_weighted" -> ((s, d) =>
-      operators.Sampling.weightedSampleNoReplace(
-          t(s, d, "documents").select("doc_id", "source", "n_chars"),
-          k = 50, weightCol = "n_chars", keyCol = "doc_id", tag = "ws")
-        .withColumn("sample_key", round(col("sample_key"), 9))
-        .select("doc_id", "source", "n_chars", "sample_key")),
-
-    // CCNet's perplexity bucketing: per-language head/middle/tail
-    // terciles of the bigram-LM score (head = most fluent third). The
-    // integer-scaled scoring makes every rounded avg exact, and the
-    // (score, doc_id) total order makes each ntile boundary
-    // engine-deterministic — DuckDB replays LM training, scoring and the
-    // tercile split end-to-end.
-    "q_ccnet_buckets" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, d, "documents")
-      // floor-micro average (exact integer on every engine) keys the
-      // tercile order — same hardening as q_lm_score; fused self-
-      // train+score = one tokenize pass instead of four
-      val scored = operators.LangModel.scoreSelfTrained(docs, k = 1.0)
-        .withColumn("avg_logp_u",
-          floor(col("ssum_micro").cast("double") / col("n_bigrams"))
-            .cast("long"))
-        .join(docs.select("doc_id", "lang"), "doc_id")
-      val w = Window.partitionBy("lang")
-        .orderBy(col("avg_logp_u").desc, col("doc_id").asc)
-      scored.withColumn("bucket", ntile(3).over(w))
-        .groupBy("lang", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          max("avg_logp_u").as("best"), min("avg_logp_u").as("worst"))
-        .orderBy("lang", "bucket")
-    }),
-
-    // Training-shard assignment: deterministic modular-mix shuffle into 16
-    // shards, checked via the per-shard manifest stats (exact integers).
-    "q_shard" -> ((s, d) =>
-      operators.Sharding.shardStats(t(s, d, "documents"), nShards = 16)
-        .orderBy("shard")),
-    // RAG-prep chunking: 32-token windows overlapping by 8, one row per
-    // chunk with position metadata.
-    "q_chunk" -> ((s, d) =>
-      operators.Chunker.chunkByTokens(t(s, d, "documents"),
-          size = 32, overlap = 8)
-        .orderBy("doc_id", "chunk_idx")),
-    // Deterministic train/val/test assignment (90/5/5 via mix buckets).
-    "q_split" -> ((s, d) =>
-      operators.Sharding.assignSplits(t(s, d, "documents"))
-        .groupBy("split", "source")
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("split", "source")),
-
-    // LEAKAGE-FREE split: duplicate clusters (exact-dup graph → connected
-    // components) land whole on one side of the train/val/test boundary —
-    // every member splits by its component representative, so a near-dup
-    // of a training doc can never sit in eval (the Lee et al. 2022
-    // train-test contamination). Dup cliques give CC a closed-form
-    // oracle: rep = min(doc_id) per fingerprint group.
-    "q_split_leakfree" -> ((s, d) => {
-      val docs = docsSpread(s, d)
-      val fp = docs.select(col("doc_id"), fingerprint(col("text")).as("f"))
-      val pairs = fp.select(col("doc_id").as("a_id"), col("f"))
-        .join(fp.select(col("doc_id").as("b_id"), col("f")), Seq("f"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id")
-      operators.Sharding.assignSplitsLeakFree(docs, pairs)
-        .select("doc_id", "rep", "split")
-        .orderBy("doc_id")
-    }),
-
-    // ---- SQL surface (un-mocked /query endpoint) -------------------------
-    // The reference mocks this endpoint (rest_api.go:709-734); here the same
-    // golden-test SQL text runs for real through spark.sql AND through DuckDB
-    // as its own oracle.
-    "q_sql_golden" -> ((s, d) =>
-      graft.api.SqlApi.query(s, d, """
-        SELECT l_returnflag AS category, COUNT(*) AS total_orders,
-               round(SUM(l_extendedprice * l_quantity), 2) AS total_revenue,
-               round(AVG(l_extendedprice), 4) AS avg_price
-        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")),
-
-    "q_sql_topn" -> ((s, d) =>
-      // TPC-H Q3 shape: 3-way join + agg + top-N, same text both engines
-      graft.api.SqlApi.query(s, d, """
-        SELECT l_orderkey,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               o_orderdate
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-        GROUP BY l_orderkey, o_orderdate
-        ORDER BY revenue DESC, l_orderkey LIMIT 20""")),
-    "q_sql_subquery" -> ((s, d) =>
-      // TPC-H Q17 shape: correlated scalar subquery (decorrelated by
-      // Catalyst into a join — the reference has no subqueries at all)
-      graft.api.SqlApi.query(s, d, """
-        SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-        FROM lineitem l1
-        WHERE l_quantity < (SELECT 0.5 * avg(l_quantity)
-                            FROM lineitem l2
-                            WHERE l2.l_partkey = l1.l_partkey)""")),
-
-    // ---- batch sessionization (window-function shape of Streams.sessionize)
-    "q_sessions" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val gapSec = 1800L
-      t(s, d, "events")
-        .withColumn("prev_ts", lag("ts", 1).over(byUser))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")) > gapSec,
-            1L).otherwise(0L))
-        .withColumn("session_id", sum("new_session").over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "session_id")
-        .agg(count(lit(1)).as("n_events"),
-          round(sum("value"), 4).as("total_value"))
-        .orderBy("user_id", "session_id")
-    }),
-
-    // Structured Streaming under the exact oracle: the events corpus lands
-    // as several parquet files, replays as micro-batches (maxFilesPerTrigger)
-    // through an UPDATE-mode windowed aggregation, and each batch's changed
-    // groups UPSERT exactly-once into a lake table (Streams.sinkAggToLake's
-    // txn-id contract). The final table state must equal the one-shot batch
-    // GROUP BY — which DuckDB recomputes — so the hash check covers the
-    // incremental state machine, the update-mode delta emission AND the
-    // idempotent merge, end-to-end. At scale the same code tails a Kafka/file
-    // stream; state is partitioned by group key across executors.
-    "q_stream_hourly" -> ((s, d) => withShufflePartitions(s, 4) {
-      import graft.lake.{LakeLog, LakeTable}
-      import graft.streaming.Streams
-      val ev = t(s, d, "events").select("ts", "event_id", "event_type", "value")
-      val tmp = java.nio.file.Files.createTempDirectory("graftstream")
-      val srcDir = tmp.resolve("src").toString
-      ev.repartition(6, col("event_id")).write.parquet(srcDir)
-      val log = new LakeLog(tmp.resolve("lake"))
-      val sinkDf = ev.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("hour",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("total_value",
-            org.apache.spark.sql.types.DoubleType))))
-      LakeTable.createTable(log, "hourly", sinkDf.schema)
-      val agg = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
-        .withColumn("k",
-          concat(col("hour").cast("string"), lit("|"), col("event_type")))
-        .select("k", "hour", "event_type", "n", "total_value")
-      val q = Streams.sinkAggToLake(agg, log, "hourly", "k",
-        tmp.resolve("ckpt").toString)
-      q.processAllAvailable(); q.stop()
-      LakeTable.read(s, log, "hourly")
-        .select(col("hour"), col("event_type"), col("n"),
-          round(col("total_value"), 4).as("total_value"))
-        .orderBy("hour", "event_type")
-    }),
-
-    // Streaming distinct-cardinality: the HLL register file maintained as
-    // a running update-mode aggregate, upserted per micro-batch into an
-    // exactly-once lake table keyed by register index. Register max-merge
-    // is ORDER-INVARIANT, so the stream's final state equals the batch
-    // register file bit-for-bit regardless of micro-batch boundaries —
-    // which is exactly what makes a streaming sketch exactly-oracle-
-    // checkable (DuckDB replays the batch build). At crawl scale this is
-    // the shape of "distinct urls seen so far, per day": state ≤ m rows,
-    // each micro-batch's exchange ≤ m rows, history never re-read.
-    "q_stream_hll" -> ((s, d) => withShufflePartitions(s, 4) {
-      import graft.lake.{LakeLog, LakeTable}
-      import graft.streaming.Streams
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val tmp = java.nio.file.Files.createTempDirectory("graftshll")
-      val srcDir = tmp.resolve("src").toString
-      docs.repartition(6, col("doc_id")).write.parquet(srcDir)
-      val log = new LakeLog(tmp.resolve("lake"))
-      val sinkDf = s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("idx",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("rho",
-            org.apache.spark.sql.types.IntegerType))))
-      LakeTable.createTable(log, "hll_regs", sinkDf.schema)
-      val regStream = graft.operators.Hll.registers(
-          s.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "2").parquet(srcDir)
-            .select(explode(tokens(normalizeText(col("text")))).as("term")),
-          "term", b = 6)
-        .withColumn("k", col("idx").cast("string"))
-        .select("k", "idx", "rho")
-      val q = Streams.sinkAggToLake(regStream, log, "hll_regs", "k",
-        tmp.resolve("ckpt").toString)
-      q.processAllAvailable(); q.stop()
-      val exact = docs
-        .select(explode(tokens(normalizeText(col("text")))).as("term"))
-        .agg(countDistinct("term").as("exact_distinct"))
-      graft.operators.Hll.estimate(
-          LakeTable.read(s, log, "hll_regs").select("idx", "rho"), b = 6)
-        .crossJoin(exact)
-        .select(col("exact_distinct"), col("s_scaled"), col("zero_regs"),
-          col("est_milli"))
-    }),
-
-    // flatMapGroupsWithState under the exact oracle: gap sessionization is
-    // the custom-STATE streaming operator (KeyValueGroupedDataset +
-    // GroupState), the one surface update-mode aggs can't express. The
-    // events corpus is split into 6 time-range chunks fed as micro-batches
-    // in event-time order (pinned mtimes; maxFilesPerTrigger=1), so
-    // sessions that span batch boundaries must be carried in state and
-    // closed by a later batch. With NoTimeout each user's LAST session
-    // never closes — deterministically — so the oracle is DuckDB's batch
-    // sessionization minus each user's final session, on the same
-    // millisecond gap rule the operator uses. Every emitted session's
-    // count, sum, start and end hash-match.
-    "q_stream_sessions" -> ((s, d) => withShufflePartitions(s, 4) {
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
-      import scala.jdk.CollectionConverters._
-      val ev = t(s, d, "events")
-        .select(col("ts"), col("event_id"), col("user_id"),
-          col("event_type"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graftsess")
-      val srcDir = writeTimeChunks(ev, 6, tmp)
-      import org.apache.spark.sql.Encoders
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val sessions = graft.streaming.Streams.sessionize(
-        stream.as[graft.streaming.Streams.Event](
-          Encoders.product[graft.streaming.Streams.Event]),
-        gapMs = 1800000L, timeout = GroupStateTimeout.NoTimeout())
-      val outDir = tmp.resolve("out").toString
-      val q = sessions.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(outDir)
-        .select(col("user_id"), col("n_events"),
-          round(col("total_value"), 4).as("total_value"),
-          unix_millis(col("start")).as("start_ms"),
-          unix_millis(col("end")).as("end_ms"))
-        .orderBy("user_id", "start_ms")
-    }),
-
-    // Streaming exact dedup under the oracle: dropDuplicatesWithinWatermark
-    // keyed on a composite fingerprint emits each key exactly once across
-    // all micro-batches (state carries seen keys; the 7-day horizon keeps
-    // every key in state, so this is exact dedup). Only key-derived columns
-    // are output — which copy of a duplicate survives is the one
-    // within-batch nondeterminism the operator legitimately has — so the
-    // emitted set must equal DuckDB's DISTINCT.
-    "q_stream_dedup" -> ((s, d) => withShufflePartitions(s, 4) {
-      import org.apache.spark.sql.streaming.Trigger
-      val ev = t(s, d, "events")
-        .select(col("ts"), col("event_id"), col("user_id"),
-          col("event_type"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graftsd")
-      val srcDir = writeTimeChunks(ev, 4, tmp)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir.toString)
-        .withColumn("k", concat_ws("|", col("user_id"), col("event_type")))
-      val deduped = graft.streaming.Streams
-        .streamingDedup(stream, "k", lateness = "7 days")
-        .select(col("user_id"), col("event_type"))
-      val outDir = tmp.resolve("out").toString
-      val q = deduped.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(outDir).orderBy("user_id", "event_type")
-    }),
-
-    // Stream-STATIC join under the exact oracle — the dimension-enrichment
-    // shape (event stream ⋈ slowly-changing dim table). Unlike the
-    // stream-stream joins there is NO state store: each micro-batch plans a
-    // fresh BroadcastHashJoin against the static side, so the stream side
-    // never shuffles and the dim is re-resolved per batch (at scale that is
-    // what picks up dim-table updates between batches). The batch output
-    // must equal DuckDB's one-shot LEFT JOIN of the same tables.
-    "q_stream_enrich" -> ((s, d) => withShufflePartitions(s, 4) {
-      import org.apache.spark.sql.streaming.Trigger
-      val ev = t(s, d, "events")
-        .select(col("ts"), col("event_id"), col("user_id"),
-          col("event_type"), col("value"))
-      val dim = t(s, d, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val tmp = java.nio.file.Files.createTempDirectory("graftse")
-      val srcDir = writeTimeChunks(ev, 4, tmp)
-      val enriched = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir.toString)
-        .join(broadcast(dim), col("user_id") === col("c_custkey"),
-          "left_outer")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("c_mktsegment"))
-      val outDir = tmp.resolve("out").toString
-      val q = enriched.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(outDir)
-        .groupBy("c_mktsegment", "event_type")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total_value"))
-        .orderBy("c_mktsegment", "event_type")
-    }),
-
-    // The lake CDC source under the exact oracle: three OCC commits land
-    // in `src`, the CDC stream tails the log (offsets = log versions, each
-    // micro-batch the changesSince frame of its version window), a
-    // filter+derive transform runs per micro-batch, and survivors append
-    // exactly-once into `dst` via the txn-id contract. The final `dst`
-    // contents must equal the one-shot batch transform of the source rows,
-    // which DuckDB recomputes from lineitem directly — covering the custom
-    // source's offset/replay semantics, the transform and the idempotent
-    // sink in one hash.
-    // Streaming CHANGE FEED: the CDC source in changeFeed mode tails a
-    // table through two overlapping merge-on-read deletes — deletes
-    // arrive as rows tagged _change_type='delete', enumerated from DV
-    // growth per micro-batch (each hole streamed exactly once), reading
-    // only the touched files' positions. DuckDB recomputes both halves.
-    "q_stream_cdf" -> ((s, d) => withShufflePartitions(s, 4) {
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftscdf"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "src", li.schema)
-      // stage both halves concurrently, commit in order (identical history)
-      LakeTable.insertAll(s, log, "src", Seq(
-        (li.filter(col("l_orderkey") % 2 === 0), "even"),
-        (li.filter(col("l_orderkey") % 2 === 1), "odd")))
-      LakeTable.deleteWhereMor(s, log, "src", "l_quantity > 45")
-      LakeTable.deleteWhereMor(s, log, "src", "l_quantity > 40")
-      val tmp = java.nio.file.Files.createTempDirectory("graftscdf_io")
-      val q = graft.streaming.Streams.lakeChangeFeedStream(s, log, "src")
-        .writeStream.format("parquet")
-        .option("path", tmp.resolve("out").toString)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(tmp.resolve("out").toString)
-        .groupBy("_change_type")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-        .orderBy("_change_type")
-    }),
-
-    "q_stream_cdc" -> ((s, d) => withShufflePartitions(s, 4) {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftcdc"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "src", li.schema)
-      def xform(df: DataFrame): DataFrame = df
-        .filter(col("l_quantity") > 10)
-        .withColumn("revenue", col("l_quantity") * col("l_extendedprice"))
-      LakeTable.createTable(log, "dst", xform(li).schema)
-      LakeTable.insertAll(s, log, "src", (0 to 2).map(m =>
-        (li.filter(col("l_orderkey") % 3 === m), s"slice-$m")))
-      val tmp = java.nio.file.Files.createTempDirectory("graftcdc_ckpt")
-      val q = graft.streaming.Streams.sinkToLake(
-        xform(graft.streaming.Streams.lakeStream(s, log, "src")),
-        log, "dst", tmp.toString)
-      q.processAllAvailable(); q.stop()
-      LakeTable.read(s, log, "dst")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), round(sum("revenue"), 2).as("sum_rev"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Streaming QUARANTINE: WAP-gated exactly-once ingestion. Four
-    // key-sliced micro-batches stage invisibly through the lake's
-    // write-audit-publish; the audit gate rejects any batch carrying a
-    // blocklisted key bucket (slice 2), which therefore aborts with
-    // ZERO versions minted — a bad crawl chunk is never listable, even
-    // transiently. DuckDB recomputes the published union (slices 0,1,3)
-    // exactly; the in-query requires pin the version math (create +
-    // exactly 3 publishes) and that no staged leftovers remain.
-    "q_stream_wap" -> ((s, d) => withShufflePartitions(s, 4) {
-      import graft.lake.{LakeLog, LakeTable, Wap}
-      import scala.jdk.CollectionConverters._
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftswap"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity",
-          "l_extendedprice")
-      LakeTable.createTable(log, "dst", li.schema)
-      val tmp = java.nio.file.Files.createTempDirectory("graftswap_src")
-      val srcDir = tmp.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
-      val stage = tmp.resolve("stage")
-      li.withColumn("__chunk", (col("l_orderkey") % 4).cast("int"))
-        // parallel per-chunk encode, one file per chunk dir (hash by the
-        // chunk column). The sort narrows within-file order but is not a
-        // total order (the key isn't unique and the dynamic-partition
-        // write adds its own sort on __chunk) — immaterial downstream:
-        // every consumer is an order-insensitive aggregate
-        .repartition(4, col("__chunk"))
-        .sortWithinPartitions("l_orderkey", "l_quantity", "l_extendedprice")
-        .write.partitionBy("__chunk").parquet(stage.toString)
-      (0 until 4).foreach { i =>
-        val dir = stage.resolve(s"__chunk=$i")
-        val part = java.nio.file.Files.list(dir).iterator().asScala
-          .find(_.toString.endsWith(".parquet")).get
-        val dst = srcDir.resolve(f"chunk$i%02d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + i * 60000L))
-      }
-      val stream = s.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val q = graft.streaming.Streams.wapSinkToLake(stream, log, "dst",
-        tmp.resolve("ckpt").toString) { (batch, _) =>
-        // the audit: no rows from the blocklisted key bucket
-        batch.filter(col("l_orderkey") % 4 === 2).limit(1).count() == 0L
-      }
-      q.processAllAvailable(); q.stop()
-      require(log.latestVersion("dst") == 3L,
-        s"expected create + 3 publishes, got ${log.latestVersion("dst")}")
-      require(Wap.listStaged(log, "dst").isEmpty, "staged leftovers")
-      LakeTable.read(s, log, "dst")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Stream-stream interval join under the exact oracle (the
-    // impression⋈click shape): two streams of the same corpus joined on
-    // user_id with r.ts ∈ [l.ts, l.ts+1h]. Inner joins emit as rows arrive
-    // — state buffers both sides, watermarks bound it — and with
-    // event-time-ordered batches and a lateness horizon wider than the
-    // corpus nothing is ever late, so the emitted set must equal the batch
-    // join exactly, which DuckDB recomputes. (Watermark EVICTION semantics
-    // — the part that needs late data — is spec-tested in StreamsSpec;
-    // here the oracle pins join completeness and the interval arithmetic.)
-    "q_stream_join" -> ((s, d) => withShufflePartitions(s, 4) {
-      import org.apache.spark.sql.streaming.Trigger
-      val ev = t(s, d, "events")
-        .select(col("ts"), col("event_id"), col("user_id"),
-          col("event_type"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graftsj")
-      val srcDir = writeTimeChunks(ev, 4, tmp)
-      def src(eventType: String) = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir.toString)
-        // filter BEFORE the join: each side buffers only its own type's
-        // rows in state — the impression⋈click shape, not a corpus²
-        .filter(col("event_type") === eventType)
-      val joined = graft.streaming.Streams.intervalJoin(
-          src("view"), src("click"), "user_id",
-          windowSec = 3600L, lateness = "7 days")
-        .select(col("l.user_id").as("user_id"),
-          col("l.event_id").as("a_id"), col("r.event_id").as("b_id"),
-          unix_millis(col("l.ts")).as("a_ms"),
-          unix_millis(col("r.ts")).as("b_ms"))
-      val outDir = tmp.resolve("out").toString
-      val q = joined.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(outDir).orderBy("user_id", "a_id", "b_id")
-    }),
-
-    // Stream-stream LEFT OUTER interval join under the exact oracle: the
-    // null-emission operator. Matches emit as they arrive (≡ the inner
-    // join); an unmatched view emits its null row only once the global
-    // watermark (min of both sides' max event time, minus lateness)
-    // passes view.ts + window — so the batch equivalence is: ALL matched
-    // pairs, plus null rows exactly for unmatched views old enough that
-    // no future click could still pair with them. DuckDB recomputes the
-    // final watermark and that cutoff from the same rows.
-    "q_stream_join_outer" -> ((s, d) => withShufflePartitions(s, 4) {
-      import org.apache.spark.sql.streaming.Trigger
-      val ev = t(s, d, "events")
-        .select(col("ts"), col("event_id"), col("user_id"),
-          col("event_type"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graftsjo")
-      val srcDir = writeTimeChunks(ev, 4, tmp)
-      def src(eventType: String) = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir.toString)
-        .filter(col("event_type") === eventType)
-      val joined = graft.streaming.Streams.intervalJoinLeftOuter(
-          src("view"), src("click"), "user_id",
-          windowSec = 3600L, lateness = "1 hour")
-        .select(col("l.user_id").as("user_id"),
-          col("l.event_id").as("a_id"), col("r.event_id").as("b_id"),
-          unix_millis(col("l.ts")).as("a_ms"),
-          unix_millis(col("r.ts")).as("b_ms"))
-      val outDir = tmp.resolve("out").toString
-      val q = joined.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(outDir).orderBy("user_id", "a_id", "b_id")
-    }),
-
-    // ---- multimodal: binary payloads + metadata (real header decode) -----
-    "q_multimodal_meta" -> ((s, d) =>
-      Multimodal.withMeta(Multimodal.syntheticCorpus(t(s, d, "documents")))
-        .select(col("id").as("doc_id"), col("modality"),
-          col("meta.size_bytes").as("size_bytes"),
-          col("meta.content_type").as("content_type"))
-        .orderBy("doc_id")),
-    // Real byte-level header parsing (PNG IHDR / WAV fmt+data / MP4 mvhd)
-    // over synthesized-but-valid headers; the DuckDB oracle recomputes the
-    // same metadata from the corpus construction rule, so every parsed
-    // field is exact-value checked.
-    "q_multimodal_decode" -> ((s, d) => {
-      import org.apache.spark.sql.Encoders
-      val corpus = Multimodal.syntheticCorpus(t(s, d, "documents"))
-      Multimodal.decode(
-          corpus.as[Multimodal.MediaRow](Encoders.product[Multimodal.MediaRow]))
-        .groupBy("modality")
-        .agg(count(lit(1)).as("n"), round(avg("width"), 4).as("avg_width"),
-          round(avg("channels"), 4).as("avg_channels"),
-          round(avg("durationMs"), 4).as("avg_duration_ms"))
-        .orderBy("modality")
-    }),
-    // REAL codec decode under the exact oracle: every document id becomes a
-    // complete spec-valid PNG (ImageIO-encoded, deterministic closed-form
-    // pixels), decoded BACK through the ImageIO codec; the integer
-    // channel-byte sums survive the round trip exactly, and DuckDB
-    // recomputes them from the closed form — so a hash match proves the
-    // decoder really read the IDAT rasters, not the construction rule.
-    // Video frame sampling with REAL per-frame decode: each document is a
-    // 6-frame container of complete PNGs; every 2nd frame (0,2,4) is
-    // decoded through the ImageIO codec — unsampled frames are skipped by
-    // length prefix, never decoded — and the sampled rasters' exact
-    // channel-byte sums are hash-checked against DuckDB's closed-form
-    // recomputation. A hash match proves the sampler really read the IDAT
-    // rasters of exactly the sampled frames.
-    "q_multimodal_video" -> ((s, d) => {
-      Multimodal.sampleVideoFrames(
-          Multimodal.videoCorpus(t(s, d, "documents"), nFrames = 6),
-          stride = 2)
-        .groupBy(col("id").as("doc_id"))
-        .agg(count(lit(1)).as("n_sampled"),
-          max("width").as("w"), max("height").as("h"),
-          sum("channel_sum").as("sum_channel_bytes"))
-        .orderBy("doc_id")
-    }),
-
-    // Perceptual near-dup detection (dHash): REAL PNG decode → 9×8
-    // floor-boundary block-mean luma grid → 64 row-gradient bits in two
-    // 32-bit halves → Manku 4×16-bit block candidates (pigeonhole-
-    // complete for hamming ≤ 3) → exact popcount verify. Every 7th doc
-    // plants a brightness-shifted variant (same dims, pixel seed + 1)
-    // through the real encoder; DuckDB replays decode via the closed
-    // pixel formula and pins the FULL hamming ≤ 3 pair set — which also
-    // independently proves banding completeness.
-    "q_multimodal_phash" -> ((s, d) => withShufflePartitions(s, 8) {
-      import graft.operators.Phash
-      Phash.nearDupPairs(
-          Phash.dHash(Phash.variantCorpus(t(s, d, "documents"))).toDF(),
-          maxHamming = 3)
-        .orderBy("a_id", "b_id")
-    }),
-
-    "q_multimodal_pixels" -> ((s, d) => {
-      Multimodal.decodeImage(Multimodal.pixelCorpus(t(s, d, "documents")))
-        .groupBy((col("id") % 4).as("grp"))
-        .agg(count(lit(1)).as("n"), sum("width").as("sum_w"),
-          sum("height").as("sum_h"),
-          sum(col("width") * col("height")).as("sum_px"),
-          sum("pixSum").as("sum_channel_bytes"))
-        .orderBy("grp")
-    }),
-    // REAL audio sample decode under the exact oracle: the synthetic WAVs
-    // carry the document's UTF-8 bytes as 16-bit LE PCM, the Spark side
-    // walks the RIFF chunks and reduces the ACTUAL data-chunk samples to
-    // integer invariants, and DuckDB rebuilds the same samples from the
-    // construction rule (hex-pair extraction) — a hash match proves the
-    // decoder read the real PCM stream.
-    "q_multimodal_audio" -> ((s, d) => {
-      import org.apache.spark.sql.Encoders
-      val corpus = Multimodal.syntheticCorpus(t(s, d, "documents"))
-        .filter(col("modality") === "audio")
-      Multimodal.decodeAudio(
-          corpus.as[Multimodal.MediaRow](Encoders.product[Multimodal.MediaRow]))
-        .select(col("id").as("doc_id"), col("channels"),
-          col("nSamples").as("n_samples"), col("sumSq").as("sum_sq"),
-          col("peak"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- §2.12 lake: ACID commits, time travel, compaction ---------------
-    // End-to-end through the LakeLog: three OCC-committed inserts (disjoint
-    // lineitem slices), then REAL compaction. The oracle recomputes each
-    // version's visible rows from the same slices — this hash-checks
-    // log-controlled visibility (Property 4), time travel, and result
-    // preservation across compaction (Property 30) against DuckDB.
-    "q_lake_timetravel" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftlake"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insertAll(s, log, "li", (0 to 2).map(m =>
-        (li.filter(col("l_orderkey") % 3 === m), s"slice-$m")))
-      LakeTable.compact(s, log, "li", force = true)
-      val perVersion = (1 to 4).map { v =>
-        LakeTable.read(s, log, "li", v).agg(
-          lit(v).as("version"),
-          count(lit(1)).as("n_rows"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-      }
-      perVersion.reduce(_ unionAll _).orderBy("version")
-    }),
-
-    // Schema evolution end-to-end under the oracle: create with narrow
-    // types (int32 / float32), insert, WIDEN to int64/float64 + add a
-    // nullable column (the log's latest-schema-wins replay hook —
-    // transaction_log.go:191-194 — which the reference declares but never
-    // exercises), insert again under the new schema, and read EVERY
-    // version: v1/v2 through the original narrow schema, v3/v4 through the
-    // widened one (old INT32/FLOAT pages upcast losslessly by the reader;
-    // the added column nulls for pre-evolution rows). The float sums are
-    // integer-scaled (cents) so cross-engine summation is exact; DuckDB
-    // replays the same batches with explicit narrow-then-widen casts.
-    "q_lake_evolution" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, Field, TableSchema}
-      import org.apache.spark.sql.types._
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftevo"))
-      val cust = t(s, d, "customer")
-      val narrow = StructType(Seq(
-        StructField("id", LongType), StructField("nk", IntegerType),
-        StructField("bal", FloatType)))
-      LakeTable.createTable(log, "c", narrow)
-      def batch(m: Int) = cust.filter(pmod(col("c_custkey"), lit(2)) === m)
-        .select(col("c_custkey").as("id"),
-          col("c_nationkey").cast("int").as("nk"),
-          col("c_acctbal").cast("float").as("bal"))
-      LakeTable.insert(s, log, "c", batch(0), txnId = "evo-b0")
-      log.evolveSchema("c", TableSchema(Seq(
-        Field("id", "int64", nullable = true),
-        Field("nk", "int64", nullable = true),
-        Field("bal", "float64", nullable = true),
-        Field("seg", "string", nullable = true))), "evo-widen")
-      LakeTable.insert(s, log, "c",
-        cust.filter(pmod(col("c_custkey"), lit(2)) === 1)
-          .select(col("c_custkey").as("id"),
-            col("c_nationkey").cast("long").as("nk"),
-            col("c_acctbal").as("bal"),
-            col("c_mktsegment").as("seg")), txnId = "evo-b1")
-      val perVersion = Seq(1, 2, 3).map { v =>
-        val df = LakeTable.read(s, log, "c", v.toLong)
-        val segCnt = if (df.columns.contains("seg"))
-          count(col("seg")) else lit(0L)
-        df.agg(lit(v).as("version"), count(lit(1)).as("n_rows"),
-          sum(col("nk").cast("long")).as("sum_nk"),
-          (sum(round(col("bal").cast("double") * 100).cast("long")) / 100.0)
-            .as("sum_bal"),
-          segCnt.as("n_seg"))
-      }
-      perVersion.reduce(_ unionAll _).orderBy("version")
-    }),
-
-    "q_dedup_cc" -> ((s, d) => {
-      // connected components over the exact-duplicate graph; dup groups are
-      // cliques, so component(min-reachable-id) == min(doc_id) per
-      // fingerprint group — giving CC a closed-form SQL oracle
-      val fp = docsSpread(s, d)
-        .select(col("doc_id"), fingerprint(col("text")).as("f"))
-      val pairs = fp.select(col("doc_id").as("a_id"), col("f"))
-        .join(fp.select(col("doc_id").as("b_id"), col("f")), Seq("f"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id")
-      Dedup.connectedComponents(pairs)
-        .orderBy("id")
-    }),
-
-    // RESTORE under the exact oracle: three committed slices, roll back to
-    // the first, then commit a third — the final state must equal slice 0
-    // + slice 2 with slice 1 GONE (restore is a new commit that re-exposes
-    // v1's file set; time travel to the pre-restore head still sees B).
-    "q_lake_restore" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftres"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insertAll(s, log, "li", (0 to 1).map(m =>
-        (li.filter(col("l_orderkey") % 3 === m), s"res-$m")))
-      LakeTable.restore(log, "li", toVersion = 1L)
-      LakeTable.insert(s, log, "li",
-        li.filter(col("l_orderkey") % 3 === 2), txnId = "res-2")
-      val head = LakeTable.read(s, log, "li").agg(
-        lit("head").as("state"), count(lit(1)).as("n_rows"),
-        round(sum("l_extendedprice"), 2).as("sum_price"))
-      // the pre-restore head (version 2 = slices 0+1) is still addressable
-      val preRestore = LakeTable.read(s, log, "li", 2L).agg(
-        lit("pre_restore").as("state"), count(lit(1)).as("n_rows"),
-        round(sum("l_extendedprice"), 2).as("sum_price"))
-      head.unionAll(preRestore).orderBy("state")
-    }),
-
-    // UPSERT (MERGE) under the exact oracle: update half the keys, insert
-    // fresh ones; the final table must equal the source with updated rows
-    // CASE-mapped and the inserts appended — checked value-by-value.
-    "q_lake_upsert" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftups"))
-      val ord = t(s, d, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      LakeTable.createTable(log, "o", ord.schema)
-      LakeTable.insert(s, log, "o", ord, numFiles = 4)
-      // the update is an EXACT dyadic doubling: a ×1.1-and-round update
-      // diverges cross-engine on .005 ties (Spark rounds the shortest
-      // decimal rendering, DuckDB the raw binary value)
-      val updates = ord.filter(col("o_orderkey") % 5 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val inserts = ord.filter(col("o_orderkey") % 7 === 0)
-        .select((col("o_orderkey") + 10000000L).as("o_orderkey"),
-          col("o_custkey"), lit(0.0).as("o_totalprice"))
-      LakeTable.upsert(s, log, "o", updates.unionByName(inserts),
-        "o_orderkey")
-      LakeTable.read(s, log, "o")
-        .groupBy(pmod(col("o_orderkey"), lit(10)).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("o_totalprice"), 2).as("sum_price"))
-        .orderBy("bucket")
-    }),
-
-    // REAL connected components under the exact oracle on a NON-clique
-    // graph: q_dedup_cc's closed-form oracle only covers exact-dup
-    // cliques, so here the portable-minhash candidate pairs feed the
-    // label-propagation/pointer-doubling operator and DuckDB recomputes
-    // the SAME pairs and closes them transitively with a recursive CTE —
-    // the hash checks the fixpoint labels themselves. Survivors =
-    // component representative (min doc_id) plus every unpaired doc;
-    // byte lengths (octet_length/strlen) keep the check text-sensitive.
-    "q_dedup_cc_minhash" -> ((s, d) => {
-      // LSH pair generation lives in benchPhases' build (the
-      // q_dedup_eval treatment): Bench prices the shared candidate-pair
-      // build in the builds sidecar and the CC + anti-join + aggregate
-      // as the headline probe; the correctness gate replays the bundle
-      val (build, probe) = benchPhases("q_dedup_cc_minhash")(s, d)
-      build(); probe()
-    }),
-
-    "q_lake_delete" -> ((s, d) => {
-      // copy-on-write DELETE, hash-checked: the post-delete table must
-      // equal the source filtered by the negated predicate
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftdel"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      LakeTable.deleteWhere(s, log, "li", "l_quantity > 40")
-      LakeTable.read(s, log, "li").agg(
-        count(lit(1)).as("n_rows"),
-        round(sum("l_quantity"), 2).as("sum_qty"),
-        round(sum("l_extendedprice"), 2).as("sum_price"))
-    }),
-
-    // Merge-on-read DELETE via deletion vectors, hash-checked: two
-    // overlapping deletes punch position holes into files that are NEVER
-    // rewritten (the in-query requires pin byte-identical data files and a
-    // live DvRef), a third delete that only re-hits dead rows must be a
-    // no-op, time travel still sees the pre-delete rows, and the
-    // metadata-only COUNT(*) subtracts the holes exactly. DuckDB recomputes
-    // the surviving rows from the raw source.
-    "q_lake_dv" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, StatsAgg}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftdv"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      val pre = log.snapshot("li")
-      val preBytes = pre.files.map(f =>
-        f.path -> java.nio.file.Files.size(java.nio.file.Paths.get(f.path)))
-      LakeTable.deleteWhereMor(s, log, "li", "l_quantity > 45")
-      LakeTable.deleteWhereMor(s, log, "li", "l_quantity > 40")
-      // re-hitting only already-deleted positions commits nothing
-      val vStable = log.latestVersion("li")
-      LakeTable.deleteWhereMor(s, log, "li", "l_quantity > 44")
-      require(log.latestVersion("li") == vStable,
-        "no-op MOR delete committed a version")
-      val snap = log.snapshot("li")
-      require(snap.files.map(_.path).sorted == pre.files.map(_.path).sorted,
-        "merge-on-read delete changed the data file set")
-      require(preBytes.forall { case (p, sz) =>
-        java.nio.file.Files.size(java.nio.file.Paths.get(p)) == sz },
-        "merge-on-read delete rewrote data bytes")
-      require(snap.files.exists(_.dvRows > 0), "no deletion vector attached")
-      // time travel: the pre-delete version still sees every row
-      require(LakeTable.read(s, log, "li", pre.version).count() ==
-        pre.files.map(_.rows).sum, "time travel lost pre-delete rows")
-      // metadata-only count subtracts dv positions exactly
-      require(StatsAgg.fromStats(s, snap, Nil).get
-        .head().getAs[Long]("n_rows") == snap.files.map(_.liveRows).sum,
-        "stats count disagrees with dv metadata")
-      LakeTable.read(s, log, "li")
-        .groupBy(pmod(col("l_orderkey"), lit(4)).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-        .orderBy("bucket")
-    }),
-
-    // Shuffle-free fact-fact join via BUCKETED layout: both sides are
-    // written hash-clustered into 8 buckets on the join key, so the join
-    // AND the key-prefixed aggregation plan with ZERO hash exchanges — the
-    // in-query require pins it (broadcast forced off so the zero can only
-    // come from bucket alignment). DuckDB recomputes the join from the raw
-    // sources: layout must never change answers.
-    "q_join_bucketed" -> ((s, d) => {
-      // build+probe bodies live ONCE in benchPhases: the bucketed
-      // LAYOUT is a one-time write (Bench's `builds` sidecar); the
-      // headline is the recurring zero-exchange join it buys
-      val (build, probe) = benchPhases("q_join_bucketed")(s, d)
-      build(); probe()
-    }),
-
-    // Change feed with row-level deletes (Delta CDF analog): inserts from
-    // the append feed, deletes enumerated EXACTLY from deletion-vector
-    // growth — both metadata-priced (only files whose DV grew are read,
-    // position-joined). DuckDB recomputes both halves from the raw source.
-    // The CDC reader as a SQL table-valued function — Delta's
-    // `table_changes` UX: TABLE_CHANGES('w', 1) substitutes the (1,
-    // latest] change feed (inserts + DV-delete pre-images tagged
-    // _change_type) anywhere a table can appear, so the caller
-    // aggregates/joins it in plain SQL. Oracle replays both feed arms
-    // from raw lineitem.
-    "q_lake_table_changes" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("grafttc"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity")
-      LakeTable.createTable(log, "w", li.schema)
-      // stage both batches concurrently, commit in order (identical history)
-      LakeTable.insertAll(s, log, "w", Seq(
-        (li.filter(col("l_orderkey") % 2 === 0), "b1"),
-        (li.filter(col("l_orderkey") % 2 === 1), "b2")))
-      LakeTable.deleteWhereMor(s, log, "w", "l_quantity > 45",
-        txnId = "del1")
-      LakeSql.execute(s, log,
-        "SELECT _change_type, l_returnflag, count(*) AS n, " +
-          "round(sum(l_quantity), 2) AS sum_qty " +
-          "FROM TABLE_CHANGES('w', 1) " +
-          "GROUP BY _change_type, l_returnflag " +
-          "ORDER BY _change_type, l_returnflag")
-    }),
-    "q_lake_cdf" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftcdf"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      // stage both halves concurrently, commit in order; v0 = the first
-      // commit's version, exactly what latestVersion returned between the
-      // old sequential inserts
-      val insRes = LakeTable.insertAll(s, log, "li", Seq(
-        (li.filter(col("l_orderkey") % 2 === 0),
-          java.util.UUID.randomUUID().toString),
-        (li.filter(col("l_orderkey") % 2 === 1),
-          java.util.UUID.randomUUID().toString)), numFiles = 2)
-      val v0 = insRes.head.version
-      LakeTable.deleteWhereMor(s, log, "li", "l_quantity > 45")
-      LakeTable.changeFeed(s, log, "li", v0)
-        .groupBy("_change_type")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-        .orderBy("_change_type")
-    }),
-
-    // Incremental MV maintenance UNDER DELETES: the deletion vector
-    // enumerates exactly the deleted rows, so the count/sum MV folds a
-    // merge-on-read delete as a NEGATIVE delta — O(delta), no base
-    // re-scan (the in-query require pins mode == incremental_dv). The
-    // final MV hash-checks against DuckDB's from-scratch aggregate.
-    "q_lake_mv_mor" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, MaterializedView}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmvmor"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      val mv = MaterializedView.MvDef("mv_flag", "li", "l_returnflag",
-        sumCols = Seq("l_quantity", "l_extendedprice"))
-      MaterializedView.create(log, mv)
-      LakeTable.insert(s, log, "li",
-        li.filter(col("l_orderkey") % 2 === 0), numFiles = 2)
-      MaterializedView.refresh(s, log, mv)
-      LakeTable.insert(s, log, "li",
-        li.filter(col("l_orderkey") % 2 === 1), numFiles = 2)
-      LakeTable.deleteWhereMor(s, log, "li", "l_quantity > 45")
-      val res = MaterializedView.refresh(s, log, mv)
-      require(res.mode == "incremental_dv",
-        s"expected incremental_dv refresh, got ${res.mode}")
-      MaterializedView.read(s, log, mv)
-        .select(col("l_returnflag"), col("n_rows"),
-          round(col("sum_l_quantity"), 2).as("sum_qty"),
-          round(col("sum_l_extendedprice"), 2).as("sum_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // The SQL DML surface end-to-end: CREATE / INSERT INTO..SELECT /
-    // merge-on-read DELETE / copy-on-write DELETE (hint) / OPTIMIZE /
-    // VACUUM / SELECT — every statement a LakeSql.execute string, every
-    // mutation a real OCC commit. DuckDB recomputes the final state from
-    // the raw source: the two deletes compose to l_quantity <= 40.
-    "q_lake_sql_dml" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftsql"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "src", li.schema)
-      LakeTable.insert(s, log, "src", li, numFiles = 2)
-      def sql(q: String) = LakeSql.execute(s, log, q)
-      sql("CREATE TABLE work (l_orderkey int64, l_linenumber int32, " +
-        "l_quantity float64, l_extendedprice float64)")
-      sql("INSERT INTO work SELECT l_orderkey, l_linenumber, l_quantity, " +
-        "l_extendedprice FROM src WHERE l_orderkey % 2 = 0")
-      sql("INSERT INTO work SELECT l_orderkey, l_linenumber, l_quantity, " +
-        "l_extendedprice FROM src WHERE l_orderkey % 2 = 1")
-      val mor = sql("DELETE FROM work WHERE l_quantity > 45").head()
-      require(mor.getAs[String]("mode") == "mor", "expected a MOR delete")
-      require(log.snapshot("work").files.exists(_.dvRows > 0),
-        "no deletion vector after SQL DELETE")
-      sql("DELETE /*+ COW */ FROM work WHERE l_quantity > 40")
-      sql("OPTIMIZE work")
-      sql("VACUUM work RETAIN 1 VERSIONS")
-      sql("SELECT l_orderkey % 4 AS bucket, count(*) AS n_rows, " +
-        "round(sum(l_quantity), 2) AS sum_qty, " +
-        "round(sum(l_extendedprice), 2) AS sum_price " +
-        "FROM work GROUP BY bucket ORDER BY bucket")
-    }),
-
-    // Iceberg-style TAGS (graft.lake.Refs): immutable named refs over
-    // versions — "what data trained this model" becomes a name. Three
-    // slice inserts mint v1..v3; tags pin v1/v2; the SELECT face
-    // resolves `VERSION AS OF 'tag'` through the refs; DESCRIBE REFS
-    // supplies the (tag, version) binding the output carries. The
-    // oracle recomputes each tagged snapshot's content from the same
-    // slices — hash-checking ref resolution end-to-end.
-    "q_lake_tag" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("grafttag"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insertAll(s, log, "li", (0 to 2).map(m =>
-        (li.filter(col("l_orderkey") % 3 === m), s"slice-$m")))
-      def sql(q: String) = LakeSql.execute(s, log, q)
-      sql("ALTER TABLE li CREATE TAG rel-1 AS OF VERSION 1")
-      sql("ALTER TABLE li CREATE TAG rel-2 AS OF VERSION 2")
-      // branch = the movable promotion pointer: created at v2 and
-      // MOVED to v3 after "validation" — consumers of 'prod' ride the
-      // move, which the oracle checks via the final binding + content
-      sql("ALTER TABLE li CREATE BRANCH prod AS OF VERSION 2")
-      sql("ALTER TABLE li MOVE BRANCH prod TO VERSION 3")
-      val per = Seq("prod", "rel-1", "rel-2").map { ref =>
-        sql(s"SELECT count(*) AS n_rows, " +
-            s"round(sum(l_extendedprice), 2) AS sum_price " +
-            s"FROM li VERSION AS OF '$ref'")
-          .select(lit(ref).as("ref"), col("n_rows"), col("sum_price"))
-      }.reduce(_ unionAll _)
-      sql("DESCRIBE REFS li")
-        .select(col("name").as("ref"), col("kind"), col("version"))
-        .join(per, "ref")
-        .orderBy("ref")
-    }),
-
-    // Write-audit-publish (graft.lake.Wap — Iceberg's WAP pattern): a
-    // staged batch is real files main readers cannot see; the audit
-    // reads the overlay; publish is one OCC commit adopting the staged
-    // files; a failing audit aborts with zero versions minted. The
-    // lifecycle emits one row per phase (counts + the version the main
-    // line showed at that moment) and DuckDB replays every number from
-    // the same slices — including the planted-duplicate audit failure.
-    "q_lake_wap" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, Wap}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftwap"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li",
-        li.filter(col("l_orderkey") % 3 === 0), txnId = "base")
-      def phase(name: String, n: Long, extra: Long) = {
-        import s.implicits._
-        Seq((name, log.latestVersion("li"), n, extra))
-          .toDF("phase", "version", "n_rows", "audit_dups")
-      }
-      // one aggregate answers both audit questions (row count = Σ group
-      // counts, duplicate keys = groups with n > 1) — was two jobs over
-      // the same overlay
-      def auditCounts(overlay: DataFrame): (Long, Long) = {
-        val r = overlay.groupBy("l_orderkey", "l_linenumber")
-          .agg(count(lit(1)).as("n"))
-          .agg(coalesce(sum("n"), lit(0L)).as("rows"),
-            count(when(col("n") > 1, 1)).as("dups")).head
-        (r.getLong(0), r.getLong(1))
-      }
-      val base = phase("1-base",
-        LakeTable.read(s, log, "li").count(), 0L)
-      // good batch: a DISJOINT slice — the audit records the overlay's
-      // duplicate-key count (the synthetic lineitem has internal key
-      // dups, so this is each slice's own baseline, not zero)
-      Wap.stage(s, log, "li", li.filter(col("l_orderkey") % 3 === 1),
-        wapId = "crawl-good")
-      val (gRows, gDups) = auditCounts(
-        Wap.readStaged(s, log, "li", "crawl-good"))
-      val auditGood = phase("2-audit-good", gRows, gDups)
-      Wap.publish(s, log, "li", "crawl-good")
-      val published = phase("3-published",
-        LakeTable.read(s, log, "li").count(), 0L)
-      // bad batch: REPLAYS the base slice — every key duplicates; the
-      // audit gate fails and the abort leaves no trace
-      Wap.stage(s, log, "li", li.filter(col("l_orderkey") % 3 === 0),
-        wapId = "crawl-bad")
-      val (bRows, bDups) = auditCounts(
-        Wap.readStaged(s, log, "li", "crawl-bad"))
-      val auditBad = phase("4-audit-bad", bRows, bDups)
-      Wap.abort(log, "li", "crawl-bad")
-      val fin = phase("5-final",
-        LakeTable.read(s, log, "li").count(), 0L)
-      Seq(base, auditGood, published, auditBad, fin)
-        .reduce(_ unionAll _).orderBy("phase")
-    }),
-
-    "q_lake_vacuum" -> ((s, d) => {
-      // VACUUM under the exact oracle: a multi-commit lifecycle (3 inserts
-      // → copy-on-write DELETE → forced compaction) strands every
-      // pre-rewrite file behind the latest snapshot; vacuum with
-      // retainVersions=1 physically deletes all of them, and the
-      // post-GC read must still hash-match DuckDB's recomputation of the
-      // surviving rows from the raw source. The in-query requires pin
-      // that GC really deleted files and never touched a live one (the
-      // file count visible to the latest snapshot is unchanged).
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftvac"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insertAll(s, log, "li", (0 to 2).map(m =>
-        (li.filter(pmod(col("l_orderkey"), lit(3)) === m), s"slice-$m")),
-        numFiles = 3)
-      LakeTable.deleteWhere(s, log, "li", "l_quantity > 40")
-      LakeTable.compact(s, log, "li", force = true)
-      val liveBefore = log.snapshot("li").files.map(_.path).toSet
-      val report = LakeTable.vacuum(log, "li", retainVersions = 1,
-        tmpRetainMs = 0L)
-      val liveAfter = log.snapshot("li").files.map(_.path).toSet
-      require(report.deleted > 0, "vacuum deleted nothing — lifecycle broken")
-      require(liveAfter == liveBefore &&
-        liveAfter.forall(p => java.nio.file.Files.exists(
-          java.nio.file.Paths.get(p))),
-        "vacuum touched a live file")
-      LakeTable.read(s, log, "li").agg(
-        count(lit(1)).as("n_rows"),
-        round(sum("l_quantity"), 2).as("sum_qty"),
-        round(sum("l_extendedprice"), 2).as("sum_price"))
-    }),
-
-    // Metadata-only aggregates: COUNT(*) / COUNT(c) / MIN / MAX answered
-    // ENTIRELY from the log's per-file footer stats (StatsAgg) — the
-    // Delta/Iceberg "select count(*) without touching data" trick. The
-    // in-query require makes the zero-I/O claim physical: every data file
-    // is DELETED from disk before the aggregate runs, so the numbers can
-    // only have come from metadata; DuckDB recomputes them from the
-    // original source. COUNT(c) additionally exercises the footer
-    // null-count stats via an injected 10%-null quantity column.
-    "q_lake_stats_agg" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, StatsAgg}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftstats"))
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey"),
-          when(col("l_linenumber") % 10 === 0, lit(null))
-            .otherwise(col("l_quantity")).as("l_quantity"),
-          col("l_extendedprice"))
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      log.snapshot("li").files.foreach(f =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(f.path)))
-      val res = StatsAgg.fromStats(s, log.snapshot("li"),
-        Seq("l_orderkey", "l_quantity", "l_extendedprice")).getOrElse(
-        throw new IllegalStateException(
-          "stats-only aggregate fell back — footer stats incomplete"))
-      res.select(col("n_rows"), col("cnt_l_quantity").as("cnt_qty"),
-        col("min_l_orderkey").as("min_ok"), col("max_l_orderkey").as("max_ok"),
-        col("min_l_quantity").as("min_qty"), col("max_l_quantity").as("max_qty"),
-        col("min_l_extendedprice").as("min_price"),
-        col("max_l_extendedprice").as("max_price"))
-    }),
-
-    // The grouped variant, through the API surface: GROUP BY the partition
-    // column is answered by grouping the log's FileAdds (each file carries
-    // its partition values + row count + stats) — the "rows per partition"
-    // ops query at O(#files). Same zero-I/O witness: data files deleted
-    // before the query; the answer comes through QueryApi's fast path.
-    "q_lake_stats_by_part" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftstatsp"))
-      val li = t(s, d, "lineitem")
-        .select("l_returnflag", "l_orderkey", "l_quantity")
-      LakeTable.createTable(log, "li", li.schema,
-        partitionBy = Seq("l_returnflag"))
-      LakeTable.insert(s, log, "li", li, numFiles = 3)
-      log.snapshot("li").files.foreach(f =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(f.path)))
-      graft.api.QueryApi.runLake(s, log, """
-        {"table_name": "li", "group_by": ["l_returnflag"],
-         "aggregates": [
-           {"function": "count", "column": "*", "alias": "n_rows"},
-           {"function": "min", "column": "l_orderkey", "alias": "min_ok"},
-           {"function": "max", "column": "l_orderkey", "alias": "max_ok"},
-           {"function": "min", "column": "l_quantity", "alias": "min_qty"},
-           {"function": "max", "column": "l_quantity", "alias": "max_qty"}]}""")
-    }),
-
-    // Row-level DIFF between versions (table_changes analog): a lifecycle
-    // of copy-on-write DELETE + UPSERT (updates + fresh inserts) between
-    // v1 and latest; diff reads ONLY the files in the two snapshots'
-    // symmetric difference and classifies each changed row. DuckDB
-    // re-derives the same change set from the raw source predicates;
-    // rows rewritten unchanged (delete/upsert survivors) must cancel.
-    "q_lake_diff" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftdiff"))
-      // the synthetic lineitem repeats (orderkey, linenumber) pairs — a
-      // keyed diff needs unique keys, so reduce to one row per key first
-      val li = t(s, d, "lineitem")
-        .groupBy((col("l_orderkey") * 10 + col("l_linenumber")).as("lkey"))
-        .agg(min("l_quantity").as("l_quantity"),
-          min("l_extendedprice").as("l_extendedprice"))
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      val v1 = log.latestVersion("li")
-      LakeTable.deleteWhere(s, log, "li", "l_quantity > 45")
-      val ups = li.filter(col("lkey") % 7 === 0 && col("l_quantity") <= 45)
-        .withColumn("l_extendedprice", col("l_extendedprice") + 1000)
-      val news = li.filter(col("lkey") % 11 === 0)
-        .select((-col("lkey")).as("lkey"), col("l_quantity"),
-          col("l_extendedprice"))
-      LakeTable.upsert(s, log, "li", ups.unionAll(news), keyCol = "lkey")
-      LakeTable.diff(s, log, "li", fromVersion = v1, keyCols = Seq("lkey"))
-        .orderBy("lkey")
-    }),
-
-    // SHALLOW CLONE: version 1 of the clone re-adds the source snapshot's
-    // files by path — zero bytes copied (the require pins that every clone
-    // file IS a source file). The tables then diverge: an extra slice
-    // lands only in the clone, a DELETE hits only the source — and the
-    // clone's hash must equal DuckDB's recomputation of (full source +
-    // extra slice), proving both the sharing and the independence.
-    "q_lake_clone" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftclone"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      val srcFiles = log.snapshot("li").files.map(_.path).toSet
-      LakeTable.cloneTable(log, "li", "li_clone")
-      require(log.snapshot("li_clone").files.map(_.path).toSet == srcFiles,
-        "clone staged new data files — not zero-copy")
-      // divergence ops hit DIFFERENT tables (per-table commit locks):
-      // run the clone's extra slice and the source's delete concurrently
-      LakeTable.inParallel(Seq(
-        () => { LakeTable.insert(s, log, "li_clone",
-          li.filter(col("l_orderkey") % 5 === 0), txnId = "extra"); () },
-        () => { LakeTable.deleteWhere(s, log, "li", "l_quantity > 25"); () }))
-      LakeTable.read(s, log, "li_clone").agg(
-        count(lit(1)).as("n_rows"),
-        round(sum("l_quantity"), 2).as("sum_qty"),
-        round(sum("l_extendedprice"), 2).as("sum_price"))
-    }),
-
-    // Inverted-index keyword search: postings (term, doc_id, tf) persisted
-    // as a term-clustered, bloom-indexed lake table; the conjunctive query
-    // probes only the files its terms can live in (pruning pinned in
-    // InvertedIndexSpec) and DuckDB replays tokenize → postings →
-    // AND-intersection over the raw text.
-    "q_search_index" -> ((s, d) => {
-      // derived from benchPhases — see q_dedup_minhash_index
-      val (build, probe) = benchPhases("q_search_index")(s, d)
-      build(); probe()
-    }),
-
-    // Exact-phrase retrieval over a persisted POSITIONAL index: each
-    // occurrence of term i rebased to its implied anchor (pos − i), a
-    // match = an anchor surviving every rebase join — work is
-    // O(occurrences of the phrase's terms) off bloom-pruned clustered
-    // postings runs, the corpus never moves. DuckDB replays positional
-    // postings and the rebase joins end-to-end.
-    "q_search_phrase" -> ((s, d) => {
-      // derived from benchPhases — see q_dedup_minhash_index
-      val (build, probe) = benchPhases("q_search_phrase")(s, d)
-      build(); probe()
-    }),
-
-    // Keyword-in-context snippets: every occurrence of a term with its
-    // ±3-token window — the attribution/audit UX over positions. Token
-    // arrays join back ONLY for matched docs (left-semi before the
-    // arrays materialize); DuckDB replays the slice arithmetic.
-    "q_search_kwic" -> ((s, d) =>
-      graft.operators.InvertedIndex.keywordInContext(
-          t(s, d, "documents"), "dup", window = 3)
-        .orderBy("doc_id", "pos")),
-
-    // Proximity (NEAR/3, any order) retrieval — the relevance signal
-    // between bag-of-words AND and the exact phrase: two bloom-pruned
-    // single-term postings runs equi-joined on doc_id with an |Δpos|
-    // filter; fan-out is per-doc occurrence products of two terms.
-    "q_search_near" -> ((s, d) => {
-      // derived from benchPhases — see q_dedup_minhash_index
-      val (build, probe) = benchPhases("q_search_near")(s, d)
-      build(); probe()
-    }),
-
-    // Incremental materialized-view maintenance, end-to-end under the
-    // oracle: two appended slices fold in via INCREMENTAL refreshes, a
-    // DELETE forces the full-recompute fallback, then a third slice folds
-    // into that state incrementally — so the final hash checks the
-    // delta-merge arithmetic (sum-of-sums / count merge), not just a
-    // recompute. Oracle = the same aggregate over the surviving logical
-    // rows: slices 0,1 minus the deleted quantities, plus all of slice 2.
-    // JOIN (star-schema) materialized view: revenue per dim attribute
-    // without re-joining per query. Fact appends fold INCREMENTALLY
-    // through the join while the dim is unchanged (delta ⋈ dim →
-    // upsert); a dim commit — even one adding no matching rows — forces
-    // the full-recompute path (a dim change can rewrite history for
-    // folded fact rows), and both mode transitions are `require`d
-    // in-query. The oracle replays the whole join-aggregate from raw
-    // lineitem ⋈ orders.
-    "q_lake_mv_join" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable, MaterializedView}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmvj"))
-      val fact = t(s, d, "lineitem").select(
-        col("l_orderkey").as("orderkey"),
-        col("l_quantity").as("qty"),
-        col("l_extendedprice").as("price"))
-      val dim = t(s, d, "orders").select(
-        col("o_orderkey").as("orderkey"),
-        col("o_orderpriority").as("priority"))
-      LakeTable.createTable(log, "fact", fact.schema)
-      LakeTable.createTable(log, "dim", dim.schema)
-      LakeTable.insert(s, log, "dim", dim, txnId = "dim-load")
-      LakeSql.execute(s, log, "CREATE MATERIALIZED VIEW rev_by_prio ON " +
-        "fact JOIN dim ON orderkey KEY priority SUM (qty, price)")
-      val mv = MaterializedView.loadDef(log, "rev_by_prio").get
-      LakeTable.insert(s, log, "fact",
-        fact.filter(col("orderkey") % 3 =!= 0), txnId = "facts-1")
-      val r1 = MaterializedView.refresh(s, log, mv)
-      require(r1.mode == "incremental",
-        s"first fact window should fold incrementally, got ${r1.mode}")
-      LakeTable.insert(s, log, "fact",
-        fact.filter(col("orderkey") % 3 === 0), txnId = "facts-2")
-      val r2 = MaterializedView.refresh(s, log, mv)
-      require(r2.mode == "incremental",
-        s"append window should fold incrementally, got ${r2.mode}")
-      // dim-only commit (no matching orderkey): fact is current but the
-      // MV is stale vs the dim — must NOT noop, must take the full path
-      import s.implicits._
-      LakeTable.insert(s, log, "dim",
-        Seq((-1L, "0-DUMMY")).toDF("orderkey", "priority"),
-        txnId = "dim-late")
-      val r3 = MaterializedView.refresh(s, log, mv)
-      require(r3.mode == "full",
-        s"dim commit must force full recompute, got ${r3.mode}")
-      LakeTable.read(s, log, "rev_by_prio")
-        .select(col("priority"), col("n_rows"),
-          round(col("sum_qty"), 2).as("sum_qty"),
-          round(col("sum_price"), 2).as("sum_price"))
-        .orderBy("priority")
-    }),
-    "q_lake_mv" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, MaterializedView}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftmv"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      val mv = MaterializedView.MvDef("li_by_flag", "li", "l_returnflag",
-        Seq("l_quantity", "l_extendedprice"),
-        minCols = Seq("l_quantity"), maxCols = Seq("l_extendedprice"))
-      MaterializedView.create(log, mv)
-      (0 to 1).foreach { m =>
-        LakeTable.insert(s, log, "li",
-          li.filter(col("l_orderkey") % 3 === m), txnId = s"slice-$m")
-        assert(MaterializedView.refresh(s, log, mv).mode == "incremental")
-      }
-      LakeTable.deleteWhere(s, log, "li", "l_quantity > 45")
-      assert(MaterializedView.refresh(s, log, mv).mode == "full")
-      LakeTable.insert(s, log, "li",
-        li.filter(col("l_orderkey") % 3 === 2), txnId = "slice-2")
-      // this last refresh exercises the monotone min/max merge: slice-2's
-      // per-key extremes fold into the post-delete MV values
-      assert(MaterializedView.refresh(s, log, mv).mode == "incremental")
-      LakeTable.read(s, log, "li_by_flag")
-        .select(col("l_returnflag"), col("n_rows"),
-          round(col("sum_l_quantity"), 2).as("sum_qty"),
-          round(col("sum_l_extendedprice"), 2).as("sum_price"),
-          round(col("min_l_quantity"), 2).as("min_qty"),
-          round(col("max_l_extendedprice"), 2).as("max_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Mann–Kendall monotone-trend test: S = Σ sign(v_j − v_i) over each
-    // type's time-ordered values — pure integer, outlier-robust,
-    // distribution-free. The engine counts inversions in O(n log n) per
-    // series (merge sort); the oracle brute-forces the textbook
-    // all-pairs sum — their equality checks the counting identity on
-    // real data.
-    "q_trend_mk" -> ((s, d) => {
-      val ev = t(s, d, "events").select(col("event_type"),
-        unix_micros(col("ts")).as("t_us"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("v_cents"))
-      graft.operators.Trend.mannKendall(ev, "event_type", "t_us",
-          "v_cents")
-        .orderBy("event_type")
-    }),
-
-    // LTTB downsampling (Steinarsson 2013): each event type's 2000-point
-    // series reduces to 22 visually-faithful points — first/last pinned,
-    // interior buckets keep their largest-triangle point vs the next
-    // bucket's centroid. Integer microsecond × cent-scaled arithmetic
-    // makes every area comparison exact; the oracle replays the full
-    // prev-dependent selection via a precomputed transition table + a
-    // recursive walk.
-    "q_ts_downsample" -> ((s, d) => {
-      val ev = t(s, d, "events").select(col("event_type"),
-        unix_micros(col("ts")).as("t_us"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("v_cents"))
-      graft.operators.Downsample.lttb(ev, "event_type", "t_us", "v_cents",
-          buckets = 22)
-        .orderBy("event_type", "t_us", "v_cents")
-    }),
-
-    // Column-level lineage from the analyzed plan — "which physical
-    // columns can influence this output": a revenue-style join+aggregate
-    // resolves through alias, arithmetic, join and aggregate down to the
-    // scanned parquet columns. The oracle pins the expected dependency
-    // set; any extraction regression (a dropped alias hop, a join side
-    // mixed up) changes rows and fails the hash. Plan-sized driver work —
-    // prices like EXPLAIN at any corpus size.
-    "q_lineage" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val ord = t(s, d, "orders")
-      val q = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .as("revenue"),
-          countDistinct(col("l_partkey")).as("n_parts"))
-      graft.operators.Lineage.columnLineage(s, q)
-        .orderBy("out_col", "src_table", "src_col")
-    }),
-
-    // Column masking policies: one physical table serves the analyst
-    // (segment truncated to its initial, balance coarsened to $1000
-    // bands) and the admin (raw) — masks are read-time projections, so
-    // pruning and skipping on other columns are untouched. Policies set
-    // through the SQL verbs; both role views hash-checked.
-    "q_lake_mask" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, Masking}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmask"))
-      val cust = t(s, d, "customer")
-        .select("c_custkey", "c_mktsegment", "c_acctbal")
-      LakeTable.createTable(log, "cust", cust.schema)
-      LakeTable.insert(s, log, "cust", cust)
-      graft.api.LakeSql.execute(s, log, "ALTER TABLE cust SET MASK " +
-        "c_mktsegment AS (concat(substring(c_mktsegment, 1, 1), '***')) " +
-        "EXEMPT (admin)")
-      graft.api.LakeSql.execute(s, log, "ALTER TABLE cust SET MASK " +
-        "c_acctbal AS (CAST((CAST(round(c_acctbal * 100) AS BIGINT) " +
-        "div 100000) * 1000 AS DOUBLE)) EXEMPT (admin)")
-      def view(role: String) =
-        Masking.readMasked(s, log, "cust", role)
-          .select("c_custkey", "c_mktsegment", "c_acctbal")
-          .withColumn("role", lit(role))
-      view("analyst").unionAll(view("admin"))
-        .orderBy("role", "c_custkey")
-    }),
-
-    // Full conditional MERGE, first-clause-wins: matched orders with a
-    // high source price DELETE, the rest UPDATE to the source row, and
-    // unmatched source rows INSERT only above a floor — the Delta-style
-    // ordered-WHEN DML over the lake's CoW machinery (stats-pruned
-    // touched files, survivors as layout rewrites, one atomic commit).
-    // The oracle replays the whole decision table over the base rows.
-    // Logical views (graft.lake.Views): persisted SELECT macros in the
-    // `_views/` OCC catalog mini-log, expanded at plan time — the third
-    // leg beside the MV and the transparent rewrite. Stacked views
-    // (cust_spend over big_orders), CREATE OR REPLACE re-pointing the
-    // whole stack (macro semantics: the dependent reads the REPLACED
-    // definition), and the final read through the SQL face. The oracle
-    // replays the post-replace stack inline from raw orders.
-    "q_lake_view" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable, Views}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftview"))
-      val ord = t(s, d, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      LakeTable.createTable(log, "ord", ord.schema)
-      LakeTable.insert(s, log, "ord", ord, numFiles = 2)
-      def sql(q: String) = LakeSql.execute(s, log, q)
-      sql("CREATE VIEW big_orders AS SELECT o_custkey, o_totalprice " +
-        "FROM ord WHERE o_totalprice > 150000")
-      sql("CREATE VIEW cust_spend AS SELECT o_custkey, " +
-        "count(*) AS n_big, round(sum(o_totalprice), 2) AS spend " +
-        "FROM big_orders GROUP BY o_custkey")
-      // re-point the base view: the dependent must read the NEW macro
-      sql("CREATE OR REPLACE VIEW big_orders AS SELECT o_custkey, " +
-        "o_totalprice FROM ord WHERE o_totalprice > 100000")
-      require(Views.catalogVersion(log) == 3L,
-        "expected 3 view-catalog versions (create, create, replace)")
-      sql("SELECT o_custkey, n_big, spend FROM cust_spend " +
-        "WHERE n_big >= 2 ORDER BY o_custkey")
-    }),
-    // BEGIN TRANSACTION 'id'; INSERT...; INSERT...; COMMIT — the SQL
-    // face over the presumed-abort 2PC (graft.lake.MultiTxn): a fact
-    // slice and its aggregate land in DIFFERENT tables atomically; a
-    // replayed block is a no-op returning the recorded versions; a
-    // ROLLBACK block leaves no trace. The emitted aggregate is
-    // recomputed by DuckDB from raw lineitem.
-    "q_lake_sql_txn" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("grafttxn"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity")
-      LakeTable.createTable(log, "src", li.schema)
-      LakeTable.insert(s, log, "src", li, numFiles = 2)
-      def sql(q: String) = LakeSql.execute(s, log, q)
-      sql("CREATE TABLE facts (l_orderkey int64, l_returnflag string, " +
-        "l_quantity float64)")
-      sql("CREATE TABLE agg (l_returnflag string, n_rows int64, " +
-        "sum_qty float64)")
-      val block = """BEGIN TRANSACTION 'load1';
-        INSERT INTO facts SELECT l_orderkey, l_returnflag, l_quantity
-          FROM src WHERE l_orderkey % 2 = 0;
-        INSERT INTO agg SELECT l_returnflag, count(*) AS n_rows,
-          sum(l_quantity) AS sum_qty FROM src WHERE l_orderkey % 2 = 0
-          GROUP BY l_returnflag;
-        COMMIT"""
-      val st = sql(block).head()
-      require(st.getAs[Boolean]("committed") &&
-        st.getAs[String]("tables") == "agg@1,facts@1",
-        s"unexpected txn result: $st")
-      // replay is idempotent: recorded versions, no double insert
-      val replay = sql(block).head()
-      require(replay.getAs[String]("tables") == "agg@1,facts@1" &&
-        log.latestVersion("facts") == 1L,
-        "replayed COMMIT block must be a no-op")
-      // a rolled-back txn leaves no trace on either table
-      sql("""BEGIN TRANSACTION 'load2';
-        INSERT INTO facts SELECT l_orderkey, l_returnflag, l_quantity
-          FROM src WHERE l_orderkey % 2 = 1;
-        ROLLBACK""")
-      require(log.latestVersion("facts") == 1L &&
-        log.latestVersion("agg") == 1L,
-        "ROLLBACK must not publish")
-      // the published aggregate must agree with a recount of the
-      // co-committed fact slice — the cross-table consistency the 2PC
-      // exists to give
-      sql("SELECT a.l_returnflag, a.n_rows, round(a.sum_qty, 2) " +
-        "AS sum_qty, f.n_check FROM agg a JOIN (SELECT l_returnflag, " +
-        "count(*) AS n_check FROM facts GROUP BY l_returnflag) f " +
-        "ON a.l_returnflag = f.l_returnflag ORDER BY a.l_returnflag")
-    }),
-
-    "q_lake_merge" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmrg"))
-      val ord = t(s, d, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      LakeTable.createTable(log, "ord", ord.schema)
-      LakeTable.insert(s, log, "ord", ord, numFiles = 4)
-      val src = ord.filter(col("o_orderkey") % 3 === 0)
-        .select(col("o_orderkey"), lit("M").as("o_orderstatus"),
-          (col("o_totalprice") + 1000).as("o_totalprice"))
-        .unionAll(ord.filter(col("o_orderkey") % 5 === 0)
-          .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-            lit("N").as("o_orderstatus"), col("o_totalprice")))
-      val r = LakeTable.merge(s, log, "ord", src, "o_orderkey",
-        matched = Seq(
-          LakeTable.MergeClause("delete", Some("src_o_totalprice > 150000")),
-          LakeTable.MergeClause("update")),
-        insertWhen = Some(Some("o_totalprice > 50000")))
-      require(r.updated > 0 && r.deleted > 0 && r.inserted > 0,
-        s"merge exercised a degenerate path: $r")
-      LakeTable.read(s, log, "ord")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice"), 2).as("o_totalprice"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Row-level security + the combined governed read: the analyst sees
-    // only non-negative balances (row filter, judged on RAW values) with
-    // the segment masked (column policy); the auditor is row-filter
-    // exempt but still masked; the admin reads raw. All three role
-    // views hash-checked — policies installed through the SQL verbs,
-    // read through the one governed face the REST layer serves.
-    "q_lake_rowfilter" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, RowFilter}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftrls"))
-      val cust = t(s, d, "customer")
-        .select("c_custkey", "c_mktsegment", "c_acctbal")
-      LakeTable.createTable(log, "cust", cust.schema)
-      LakeTable.insert(s, log, "cust", cust)
-      graft.api.LakeSql.execute(s, log, "ALTER TABLE cust SET ROW FILTER " +
-        "(c_acctbal >= 0) EXEMPT (auditor, admin)")
-      graft.api.LakeSql.execute(s, log, "ALTER TABLE cust SET MASK " +
-        "c_mktsegment AS (concat(substring(c_mktsegment, 1, 1), '***')) " +
-        "EXEMPT (admin)")
-      def view(role: String) =
-        RowFilter.readGoverned(s, log, "cust", role)
-          .withColumn("role", lit(role))
-      view("analyst").unionAll(view("auditor")).unionAll(view("admin"))
-        .orderBy("role", "c_custkey")
-    }),
-
-    // Snapshot-keyed result cache lifecycle: identical SELECT → hit with
-    // the SAME rows; any commit changes the fingerprint → miss with the
-    // new data. The hit/miss flags are computed from the REAL cache and
-    // hash-checked (a stale-serving cache would ship phase-3 rows equal
-    // to phase 1's and fail the oracle).
-    "q_result_cache" -> ((s, d) => {
-      import s.implicits._
-      import graft.api.ResultCache
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftrc"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity")
-      LakeTable.createTable(log, "li5", li.schema)
-      LakeTable.insert(s, log, "li5", li.filter(col("l_orderkey") % 2 === 0))
-      val cache = new ResultCache[Array[org.apache.spark.sql.Row]]()
-      val sqlTxt = "SELECT l_returnflag, count(*) AS n, " +
-        "round(sum(l_quantity), 2) AS sum_qty FROM li5 GROUP BY 1"
-      def run() = cache.getOrCompute(sqlTxt, cache.fingerprint(log))(
-        graft.api.SqlApi.queryLake(s, log, sqlTxt).collect())
-      val (r1, h1) = run()
-      val (r2, h2) = run()
-      require(!h1 && h2, "second identical read must serve from cache")
-      require(r2 eq r1, "a hit returns the cached rows, not a recompute")
-      LakeTable.insert(s, log, "li5", li.filter(col("l_orderkey") % 2 === 1))
-      val (r3, h3) = run()
-      require(!h3, "a commit must invalidate the fingerprint")
-      def phaseDf(phase: Int, hit: Boolean,
-                  rows: Array[org.apache.spark.sql.Row]) =
-        rows.toSeq.map(r => (phase, if (hit) 1 else 0,
-            r.getString(0), r.getLong(1), r.getDouble(2)))
-          .toDF("phase", "hit", "l_returnflag", "n", "sum_qty")
-      phaseDf(1, h1, r1).unionAll(phaseDf(2, h2, r2))
-        .unionAll(phaseDf(3, h3, r3))
-        .orderBy("phase", "l_returnflag")
-    }),
-
-    // The MV lifecycle through the SQL face alone: CREATE MATERIALIZED
-    // VIEW persists the definition beside the MV table, REFRESH by name
-    // folds each appended slice (incremental after the first build),
-    // and the final MV contents hash-check against the plain aggregate
-    // over everything inserted.
-    "q_lake_mv_sql" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      import graft.api.LakeSql
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmvs"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity")
-      LakeTable.createTable(log, "li3", li.schema)
-      LakeTable.insert(s, log, "li3",
-        li.filter(col("l_orderkey") % 2 === 0), txnId = "half-0")
-      LakeSql.execute(s, log, "CREATE MATERIALIZED VIEW li3_mv ON li3 " +
-        "KEY l_returnflag SUM (l_quantity)")
-      val r1 = LakeSql.execute(s, log,
-        "REFRESH MATERIALIZED VIEW li3_mv").collect().head
-      require(r1.getAs[String]("mode") == "incremental", "first fold")
-      LakeTable.insert(s, log, "li3",
-        li.filter(col("l_orderkey") % 2 === 1), txnId = "half-1")
-      val r2 = LakeSql.execute(s, log,
-        "REFRESH MATERIALIZED VIEW li3_mv").collect().head
-      require(r2.getAs[String]("mode") == "incremental", "second fold")
-      LakeTable.read(s, log, "li3_mv")
-        .select(col("l_returnflag"), col("n_rows"),
-          round(col("sum_l_quantity"), 2).as("sum_qty"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Transparent MV answering: the caller writes the naive aggregate
-    // over the BASE table; the injected Catalyst optimizer rule
-    // (MvRewriteRule via spark.experimental.extraOptimizations) swaps in
-    // the materialized view's O(groups) scan — verified in-query by
-    // asserting the optimized plan's only file scan IS the MV table
-    // before materializing. Freshness-gated: a stale MV never answers
-    // (MvRewriteSpec pins that plus every disqualifier). The oracle is
-    // the plain aggregate — the rewrite must be result-identical.
-    "q_lake_mv_rewrite" -> ((s, d) => {
-      import graft.lake.{LakeFileIndex, LakeLog, LakeTable,
-        MaterializedView, MvRewrite}
-      import org.apache.spark.sql.execution.datasources.{
-        HadoopFsRelation, LogicalRelation}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmvr"))
-      val li = t(s, d, "lineitem")
-        .select("l_returnflag", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      val mv = MaterializedView.MvDef("li_mv", "li", "l_returnflag",
-        sumCols = Seq("l_quantity"), minCols = Seq("l_extendedprice"),
-        maxCols = Seq("l_extendedprice"))
-      MaterializedView.create(log, mv)
-      MaterializedView.refresh(s, log, mv)
-      MvRewrite.register(s, log, Seq(mv))
-      try {
-        val q = LakeTable.readIndexed(s, log, "li")
-          .groupBy("l_returnflag")
-          .agg(count(lit(1)).as("n_rows"),
-            sum("l_quantity").as("sum_qty"),
-            min("l_extendedprice").as("min_price"),
-            max("l_extendedprice").as("max_price"))
-        val scanned = q.queryExecution.optimizedPlan.collectLeaves()
-          .flatMap {
-            case lr: LogicalRelation => lr.relation match {
-              case h: HadoopFsRelation => h.location match {
-                case i: LakeFileIndex => Some(i.tableName)
-                case _ => None
-              }
-              case _ => None
-            }
-            case _ => None
-          }
-        require(scanned == Seq("li_mv"),
-          s"MV rewrite did not fire (scanned: ${scanned.mkString(",")})")
-        // localCheckpoint materializes WHILE the rule is registered —
-        // the hash-checked rows really come off the MV scan
-        q.select(col("l_returnflag"), col("n_rows"),
-            round(col("sum_qty"), 2).as("sum_qty"),
-            round(col("min_price"), 2).as("min_price"),
-            round(col("max_price"), 2).as("max_price"))
-          .orderBy("l_returnflag")
-          .localCheckpoint()
-      } finally MvRewrite.clear(s)
-    }),
-
-    // MV rewrite, extended provable envelope #1: avg(c) answered as
-    // stored sum_c / n_rows. l_quantity is integer-valued, so the double
-    // sum is EXACT in IEEE regardless of accumulation order and the
-    // final division is bit-identical in Spark's Average, the MV's
-    // Divide(sum, n) and DuckDB's AVG — no rounding needed. The in-query
-    // require pins the optimized plan's only scan to the MV table.
-    "q_lake_mv_rewrite_avg" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, MaterializedView, MvRewrite}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmva"))
-      val li = t(s, d, "lineitem").select("l_returnflag", "l_quantity")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      val mv = MaterializedView.MvDef("li_avg_mv", "li", "l_returnflag",
-        sumCols = Seq("l_quantity"))
-      MaterializedView.create(log, mv)
-      MaterializedView.refresh(s, log, mv)
-      MvRewrite.register(s, log, Seq(mv))
-      try {
-        val q = LakeTable.readIndexed(s, log, "li")
-          .groupBy("l_returnflag")
-          .agg(count(lit(1)).as("n_rows"),
-            avg("l_quantity").as("avg_qty"),
-            sum("l_quantity").as("sum_qty"))
-        val scanned = lakeScans(q)
-        require(scanned == Seq("li_avg_mv"),
-          s"MV avg rewrite did not fire (scanned: ${scanned.mkString(",")})")
-        q.orderBy("l_returnflag").localCheckpoint()
-      } finally MvRewrite.clear(s)
-    }),
-
-    // MV rewrite, extended provable envelope #2: COMPOSITE group key
-    // (l_returnflag, l_linestatus) plus a KEY-ONLY filter — a predicate
-    // over group-key columns partitions whole groups, so it commutes
-    // with the aggregation and re-anchors onto the MV's stored key
-    // columns as a filtered MV scan. The require pins the plan to the
-    // MV; the oracle replays filter + aggregate over the base rows.
-    "q_lake_mv_rewrite_filter" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, MaterializedView, MvRewrite}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmvf"))
-      val li = t(s, d, "lineitem")
-        .select("l_returnflag", "l_linestatus", "l_quantity")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      val mv = MaterializedView.MvDef("li_fs_mv", "li", "l_returnflag",
-        sumCols = Seq("l_quantity"), extraKeyCols = Seq("l_linestatus"))
-      MaterializedView.create(log, mv)
-      MaterializedView.refresh(s, log, mv)
-      MvRewrite.register(s, log, Seq(mv))
-      try {
-        val q = LakeTable.readIndexed(s, log, "li")
-          .filter(col("l_returnflag") =!= "N")
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(count(lit(1)).as("n_rows"),
-            sum("l_quantity").as("sum_qty"))
-        val scanned = lakeScans(q)
-        require(scanned == Seq("li_fs_mv"),
-          s"filtered composite-key MV rewrite did not fire " +
-            s"(scanned: ${scanned.mkString(",")})")
-        q.orderBy("l_returnflag", "l_linestatus").localCheckpoint()
-      } finally MvRewrite.clear(s)
-    }),
-
-    // MV rewrite, extended provable envelope #3: ROLLUP — GROUP BY a
-    // strict subset of the MV's composite key answers by re-aggregating
-    // the MV (sum of sums, sum of counts, total-sum/total-count avg):
-    // O(|MV rows|) instead of O(corpus), the dashboard-hierarchy query
-    // every warehouse MV router handles. Integer-valued l_quantity
-    // keeps every derived number exact cross-engine.
-    "q_lake_mv_rewrite_rollup" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, MaterializedView, MvRewrite}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmvu"))
-      val li = t(s, d, "lineitem")
-        .select("l_returnflag", "l_linestatus", "l_quantity")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      val mv = MaterializedView.MvDef("li_ru_mv", "li", "l_returnflag",
-        sumCols = Seq("l_quantity"), extraKeyCols = Seq("l_linestatus"))
-      MaterializedView.create(log, mv)
-      MaterializedView.refresh(s, log, mv)
-      MvRewrite.register(s, log, Seq(mv))
-      try {
-        val q = LakeTable.readIndexed(s, log, "li")
-          .groupBy("l_returnflag")
-          .agg(count(lit(1)).as("n_rows"),
-            sum("l_quantity").as("sum_qty"),
-            avg("l_quantity").as("avg_qty"))
-        val scanned = lakeScans(q)
-        require(scanned == Seq("li_ru_mv"),
-          s"rollup MV rewrite did not fire (scanned: ${scanned.mkString(",")})")
-        q.orderBy("l_returnflag").localCheckpoint()
-      } finally MvRewrite.clear(s)
-    }),
-
-    // MV rewrite, extended provable envelope #4: the JOIN shape. The
-    // naive star aggregate (fact ⋈ dim grouped by the dim attribute) is
-    // answered from the join MV when the MV is fresh on BOTH tables —
-    // fact high-water AND folded dim version equal the scanned latest
-    // versions, the join is exactly the MV's inner equi-join on joinOn,
-    // and the MV read pins to the refresh commit that folded that
-    // (factV, dimV) pair. The in-query require pins the optimized plan
-    // to the MV table alone (neither fact nor dim is scanned); the
-    // oracle replays join + group over the raw rows. At 100 TB this is
-    // the difference between a fact-corpus shuffle-join per dashboard
-    // query and an O(groups) MV scan.
-    "q_lake_mv_rewrite_join" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable, MaterializedView, MvRewrite}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmvrj"))
-      val fact = t(s, d, "lineitem").select(
-        col("l_orderkey").as("orderkey"),
-        col("l_quantity").as("qty"),
-        col("l_extendedprice").as("price"))
-      val dim = t(s, d, "orders").select(
-        col("o_orderkey").as("orderkey"),
-        col("o_orderpriority").as("priority"))
-      LakeTable.createTable(log, "fact", fact.schema)
-      LakeTable.createTable(log, "dim", dim.schema)
-      // different tables (per-table commit locks): load dim and fact
-      // concurrently
-      LakeTable.inParallel(Seq(
-        () => { LakeTable.insert(s, log, "dim", dim,
-          txnId = "dim-load"); () },
-        () => { LakeTable.insert(s, log, "fact", fact, txnId = "fact-load",
-          numFiles = 4); () }))
-      LakeSql.execute(s, log, "CREATE MATERIALIZED VIEW rev_mv ON " +
-        "fact JOIN dim ON orderkey KEY priority SUM (qty, price)")
-      val mv = MaterializedView.loadDef(log, "rev_mv").get
-      MaterializedView.refresh(s, log, mv)
-      MvRewrite.register(s, log, Seq(mv))
-      try {
-        val q = LakeTable.readIndexed(s, log, "fact")
-          .join(LakeTable.readIndexed(s, log, "dim"),
-            Seq("orderkey"), "inner")
-          .groupBy("priority")
-          .agg(count(lit(1)).as("n_rows"),
-            sum("qty").as("sum_qty0"),
-            sum("price").as("sum_price0"))
-        val scanned = lakeScans(q)
-        require(scanned == Seq("rev_mv"),
-          s"join MV rewrite did not fire (scanned: ${scanned.mkString(",")})")
-        // hash-stable faces: integer-valued qty sums are exact; money
-        // sums are safe at 2 decimals (the q_lake_mv_join discipline)
-        q.select(col("priority"), col("n_rows"),
-            round(col("sum_qty0"), 2).as("sum_qty"),
-            round(col("sum_price0"), 2).as("sum_price"))
-          .orderBy("priority")
-          .localCheckpoint()
-      } finally MvRewrite.clear(s)
-    }),
-
-    // MV rewrite, extended provable envelope #5: the JOIN shape COMPOSED
-    // with the single-table rule's key-only-filter proof — a predicate
-    // over the join MV's key columns partitions whole joined-row groups,
-    // so it commutes with the grouping and re-anchors onto the MV's
-    // stored keys as a filtered MV scan. The filter sits naturally above
-    // the join in user code; Catalyst pushes it to the dim side and the
-    // envelope walker collects it from either position.
-    "q_lake_mv_rewrite_join_filter" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, MaterializedView, MvRewrite}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmvjf"))
-      val fact = t(s, d, "lineitem").select(
-        col("l_orderkey").as("orderkey"),
-        col("l_quantity").as("qty"))
-      val dim = t(s, d, "orders").select(
-        col("o_orderkey").as("orderkey"),
-        col("o_orderpriority").as("priority"))
-      LakeTable.createTable(log, "fact", fact.schema)
-      LakeTable.createTable(log, "dim", dim.schema)
-      // different tables (per-table commit locks): load dim and fact
-      // concurrently
-      LakeTable.inParallel(Seq(
-        () => { LakeTable.insert(s, log, "dim", dim,
-          txnId = "dim-load"); () },
-        () => { LakeTable.insert(s, log, "fact", fact, txnId = "fact-load",
-          numFiles = 4); () }))
-      val mv = MaterializedView.MvDef("revf_mv", "fact", "priority",
-        sumCols = Seq("qty"), joinTable = Some("dim"),
-        joinOn = Some("orderkey"))
-      MaterializedView.create(log, mv)
-      MaterializedView.refresh(s, log, mv)
-      MvRewrite.register(s, log, Seq(mv))
-      try {
-        val q = LakeTable.readIndexed(s, log, "fact")
-          .join(LakeTable.readIndexed(s, log, "dim"),
-            Seq("orderkey"), "inner")
-          .filter(col("priority") =!= "1-URGENT")
-          .groupBy("priority")
-          .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty0"))
-        val scanned = lakeScans(q)
-        require(scanned == Seq("revf_mv"),
-          s"filtered join-MV rewrite did not fire " +
-            s"(scanned: ${scanned.mkString(",")})")
-        q.select(col("priority"), col("n_rows"),
-            round(col("sum_qty0"), 2).as("sum_qty"))
-          .orderBy("priority")
-          .localCheckpoint()
-      } finally MvRewrite.clear(s)
-    }),
-
-    // MV rewrite, extended provable envelope #6: JOIN shape × ROLLUP —
-    // GROUP BY a strict subset of a COMPOSITE join-MV key answers by
-    // re-aggregating the MV (sum of sums, sum of counts, total-sum/
-    // total-count avg), exactly the single-table rollup proof lifted
-    // onto joined rows: O(|MV rows|) instead of a fact ⋈ dim shuffle.
-    "q_lake_mv_rewrite_join_rollup" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, MaterializedView, MvRewrite}
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftmvjr"))
-      val fact = t(s, d, "lineitem").select(
-        col("l_orderkey").as("orderkey"),
-        col("l_quantity").as("qty"))
-      val dim = t(s, d, "orders").select(
-        col("o_orderkey").as("orderkey"),
-        col("o_orderpriority").as("priority"),
-        col("o_orderstatus").as("status"))
-      LakeTable.createTable(log, "fact", fact.schema)
-      LakeTable.createTable(log, "dim", dim.schema)
-      // different tables (per-table commit locks): load dim and fact
-      // concurrently
-      LakeTable.inParallel(Seq(
-        () => { LakeTable.insert(s, log, "dim", dim,
-          txnId = "dim-load"); () },
-        () => { LakeTable.insert(s, log, "fact", fact, txnId = "fact-load",
-          numFiles = 4); () }))
-      val mv = MaterializedView.MvDef("revr_mv", "fact", "priority",
-        sumCols = Seq("qty"), extraKeyCols = Seq("status"),
-        joinTable = Some("dim"), joinOn = Some("orderkey"))
-      MaterializedView.create(log, mv)
-      MaterializedView.refresh(s, log, mv)
-      MvRewrite.register(s, log, Seq(mv))
-      try {
-        // qty is integer-valued, so sum/avg stay exact cross-engine
-        val q = LakeTable.readIndexed(s, log, "fact")
-          .join(LakeTable.readIndexed(s, log, "dim"),
-            Seq("orderkey"), "inner")
-          .groupBy("priority")
-          .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
-            avg("qty").as("avg_qty"))
-        val scanned = lakeScans(q)
-        require(scanned == Seq("revr_mv"),
-          s"join-MV rollup rewrite did not fire " +
-            s"(scanned: ${scanned.mkString(",")})")
-        q.orderBy("priority").localCheckpoint()
-      } finally MvRewrite.clear(s)
-    }),
-
-    "q_lake_zorder" -> ((s, d) => {
-      // z-order-clustered insert: multi-dimensional clustering gives BOTH
-      // curve columns tight per-file ranges, so this two-column range
-      // query reads a fraction of the files (LakeTableSpec pins the
-      // pruning; here the RESULT is hash-checked against plain SQL)
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftzo"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 16,
-        zOrderBy = Seq("l_orderkey", "l_partkey"))
-      LakeTable.readIndexed(s, log, "li")
-        .filter(col("l_orderkey") < 100 && col("l_partkey") < 200)
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-    }),
-
-    "q_lake_hilbert" -> ((s, d) => {
-      // Hilbert-clustered insert: the same write path as z-order but the
-      // curve value is the native codegen'd HilbertIndex2D — no diagonal
-      // jumps, so per-file bounding boxes are tighter and a 2-D box query
-      // reads fewer files (HilbertSpec pins hilbert <= morton across a
-      // box sweep; here the RESULT is hash-checked against plain SQL)
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("grafthb"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 16,
-        zOrderBy = Seq("l_orderkey", "l_partkey"), curve = "hilbert")
-      LakeTable.readIndexed(s, log, "li")
-        .filter(col("l_orderkey").between(100, 600) &&
-          col("l_partkey").between(50, 400))
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-    }),
-
-    "q_lake_partitioned" -> ((s, d) => {
-      // hive-style partitioned table: partition values live in the log only
-      // (flat data files), a partition-predicate DELETE touches no data
-      // files, and the partition-pruned Catalyst read reconstructs the
-      // partition column — hash-checked against plain SQL over the source
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftpart"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema,
-        partitionBy = Seq("l_returnflag"))
-      LakeTable.insert(s, log, "li", li)
-      LakeTable.deleteWhere(s, log, "li", "l_returnflag = R")
-      LakeTable.readIndexed(s, log, "li")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Atomic predicate-scoped overwrite (replaceWhere): the partition-
-    // backfill idiom — recompute the A slice (even orderkeys, doubled
-    // quantity), swap it in ONE commit, leave every other partition's
-    // files untouched (both pinned by in-query requires). DuckDB
-    // recomputes the final state from the raw source.
-    "q_lake_replace" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftrw"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
-      LakeTable.createTable(log, "li", li.schema,
-        partitionBy = Seq("l_returnflag"))
-      LakeTable.insert(s, log, "li", li)
-      val pre = log.snapshot("li")
-      val backfill = li
-        .filter(col("l_returnflag") === "A" && col("l_orderkey") % 2 === 0)
-        .withColumn("l_quantity", col("l_quantity") * 2)
-      val r = LakeTable.replaceWhere(s, log, "li", "l_returnflag = A",
-        backfill)
-      require(r.version == pre.version + 1,
-        "replaceWhere must be exactly one commit")
-      val untouched = pre.files
-        .filter(_.partition("l_returnflag") != "A").map(_.path).toSet
-      require(log.snapshot("li").files
-        .filter(_.partition("l_returnflag") != "A").map(_.path).toSet ==
-        untouched, "replaceWhere rewrote files outside the region")
-      LakeTable.readIndexed(s, log, "li")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    "q_lake_bloom" -> ((s, d) => {
-      // Bloom data skipping: orders land in 8 files clustered by STATUS, so
-      // every file's o_orderkey min/max range spans the whole key domain —
-      // range stats prune NOTHING for key point lookups; the per-file
-      // blooms prune every file the key can't be in. Results are pruning-
-      // transparent (DuckDB recomputes the same lookups over the raw
-      // table); the pruned-file counts are pinned in BloomSkipSpec.
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftbloom"))
-      val ord = t(s, d, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      LakeTable.createTable(log, "ord", ord.schema)
-      LakeTable.insert(s, log, "ord", ord, numFiles = 8,
-        clusterBy = Seq("o_orderstatus"), bloomCols = Seq("o_orderkey"))
-      LakeTable.readIndexed(s, log, "ord")
-        .filter(col("o_orderkey").isin(1L, 7L, 32L, 133L, 322L, 4000L))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          round(col("o_totalprice"), 2).as("price"))
-        .orderBy("o_orderkey")
-    }),
-
-    // ---- LLM-data-pipeline: embeddings -----------------------------------
-    "q_embed_neardup" -> ((s, d) =>
-      // threshold 0.3: the synthetic embeddings' max pairwise cosine is ~0.48,
-      // so 0.8 would select nothing — 0.3 exercises the operator for real.
-      Dedup.embeddingNearDupPairs(t(s, d, "embeddings"), threshold = 0.3,
-          exact = true)
-        .withColumn("cos", round(col("cos"), 6))
-        .orderBy("a_id", "b_id")),
-    "q_dedup_semantic_fixed" -> ((s, d) => {
-      // semantic dedup against a frozen codebook: centroids = the first 4
-      // corpus vectors (normalized), so assignment, within-cluster pairing
-      // and exact rescoring are all deterministic SQL — the one semantic-
-      // dedup path the DuckDB oracle can hash-match end-to-end.
-      // the normalize kernel is a registered native function — and Datasets
-      // analyze eagerly, so registration must precede this select
-      graft.functions.VectorExpressions.register(s)
-      val embs = t(s, d, "embeddings")
-      val cents = embs.filter(col("vec_id") < 4)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          graft.functions.VectorFunctions.normalize(col("embedding"))
-            .as("centroid"))
-      Dedup.semanticDupPairsWithCentroids(embs, cents, threshold = 0.3)
-        .withColumn("cos", round(col("cos"), 6))
-        .orderBy("a_id", "b_id")
-    }),
-    "q_dedup_spans" -> ((s, d) =>
-      // CCNet-style span dedup under the exact oracle: every 8-token span
-      // that appeared earlier in (doc_id, pos) order drops; DuckDB
-      // recomputes first occurrences with a rank window over the same
-      // span construction.
-      Dedup.dropDuplicateSpans(docsSpread(s, d), spanTokens = 8)
-        .select("doc_id", "text_spandedup", "n_spans_kept")
-        .orderBy("doc_id")),
-    "q_dedup_substr" -> ((s, d) =>
-      // ExactSubstr-style duplicate-substring masking (Lee et al. 2022)
-      // under the exact oracle: every stride-1 8-token window keeps its
-      // global first occurrence; tokens covered by later occurrences are
-      // removed. DuckDB replays the same window rank + coverage union +
-      // in-place token rebuild.
-      Dedup.maskDuplicateSubstrings(docsSpread(s, d), shingleTokens = 8)
-        .select("doc_id", "text_substrdedup", "n_tokens_removed")
-        .orderBy("doc_id")),
-    // HTML → text extraction (the WET-generation step): deterministic
-    // boilerplate pages synthesized around each doc's text in BOTH
-    // engines, then script/style/comment/tag strip + fixed-order entity
-    // decode + whitespace collapse, with title and link-count structure
-    // signals. Pure codegen projection — zero shuffles.
-    "q_html_extract" -> ((s, d) =>
-      graft.operators.HtmlExtract.extract(
-          graft.operators.HtmlExtract.synthesize(docsSpread(s, d)))
-        .orderBy("doc_id")),
-
-    // Crawl-graph construction from real markup: pages synthesized with
-    // actual <a href="/doc/N"> links + robots noindex directives, edges
-    // extracted by a pure regexp projection (zero shuffles) — the step
-    // between WET generation and PageRank/BFS. DuckDB re-synthesizes
-    // and re-parses the same bytes.
-    "q_link_extract" -> ((s, d) =>
-      graft.operators.HtmlExtract.extractLinks(
-          graft.operators.HtmlExtract.synthesizeLinked(docsSpread(s, d)))
-        .orderBy("src", "dst")),
-
-    "q_text_normalize" -> ((s, d) => {
-      // Unicode cleaning under the exact oracle: a deterministic dirty
-      // suffix (decomposed e + combining acute, a BEL control char, messy
-      // whitespace) is appended in BOTH engines; cleanText must NFC-compose
-      // it, strip the control char and collapse the runs to the same bytes
-      // DuckDB's nfc_normalize + regexp chain produces.
-      docsSpread(s, d)
-        .select(col("doc_id"),
-          cleanText(concat(col("text"),
-            lit("  café \u0007  fin "))).as("clean"))
-        .withColumn("clean_len", length(col("clean")))
-        .orderBy("doc_id")
-    }),
-    "q_bpe" -> ((s, d) => {
-      // BPE encoding under the EXACT oracle via the frozen merge table
-      // (production shape: tokenizer trained offline once — Bpe.train, the
-      // real Sennrich loop, stays pinned by BpeSpec — then shipped and
-      // applied everywhere). Greedy lowest-rank encoding equals in-rank-
-      // order replay for learned tables (BpeSpec pins the equivalence), so
-      // DuckDB replays the encoder as a 64-deep replace() chain over
-      // boundary-wrapped symbols and recomputes every subword of every
-      // doc. Encoding is a broadcast-ranks map over one projection — no
-      // shuffle, no training pass at query time.
-      val docs = docsSpread(s, d)
-      graft.operators.Bpe.encode(docs, graft.operators.Bpe.frozenModel)
-        .select(col("doc_id"),
-          size(col("bpe_tokens")).cast("long").as("n_subwords"),
-          array_join(col("bpe_tokens"), "|").as("subwords"))
-        .orderBy("doc_id")
-    }),
-    "q_embed_pca" -> ((s, d) => {
-      // PCA projection + whitening under the EXACT oracle via frozen
-      // components (the q_dedup_semantic_fixed trick): components are
-      // Sylvester Hadamard rows (±1/8, both engines construct them
-      // independently), while the centering mean and whitening variances
-      // are LEARNED from the data — DuckDB recomputes every constant and
-      // the full (x·c − mean·c)/√(var+eps) arithmetic. The eigensolver
-      // itself stays pinned by EmbeddingPcaSpec (eigenpair exactness vs
-      // direct covariance eigen, alignment, whitening variance,
-      // determinism).
-      val embs = t(s, d, "embeddings")
-      val model = EmbeddingPca.frozenModel(embs, rowIdx = Seq(1, 2, 3, 5))
-      EmbeddingPca.transform(embs, model, whiten = true)
-        .select(col("vec_id") +:
-          (0 until 4).map(i => round(col("pca")(i), 4).as(s"p$i")): _*)
-        .orderBy("vec_id")
-    }),
-    "q_dedup_semantic" -> ((s, d) =>
-      // SemDeDup with the FIT ITSELF under the exact oracle: fixed-point
-      // integer Lloyd — quantized vectors, integer L2 argmin, exact
-      // floor-mean centroid updates — is deterministic across
-      // partitionings AND engines (float Lloyd is neither: a double
-      // mean's value depends on partial-merge order), so assignment,
-      // within-cluster pairing and the exact-cosine rescore all replay
-      // in DuckDB with two unrolled Lloyd rounds. Rows-only through
-      // round 10 for exactly that float-mean reason; the learned float
-      // path stays exercised + recall-gated by q_dedup_semantic_recall.
-      Dedup.semanticDupPairsFixedPoint(t(s, d, "embeddings"),
-          threshold = 0.3, k = 4, kmeansIters = 2, nProbe = 2)
-        .withColumn("cos", round(col("cos"), 6))
-        .orderBy("a_id", "b_id")),
-    // Hard-negative mining for contrastive training: per anchor, the k
-    // closest corpus vectors with a DIFFERENT label (the most confusable
-    // wrong answers). Label filter runs before the bounded top-k
-    // aggregate, so the exchange stays anchors × k whatever the corpus.
-    "q_mine_negatives" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-          col("label").as("qlabel"))
-      Similarity.hardNegatives(emb, q, k = 5)
-        .withColumn("cos", round(col("cos"), 6))
-        .orderBy("query_id", "rank")
-    }),
-    "q_ann_brute" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      Similarity.bruteForceTopK(emb, q, k = 5)
-        .withColumn("cos", round(col("cos"), 6))
-        .orderBy("query_id", "rank")
-    }),
-
-    // Margin-based bitext mining (Artetxe & Schwenk ACL'19 — the
-    // LASER/CCMatrix parallel-pair recipe): mutual-top-1 pairs scored
-    // by cosine over the mean of each side's k-NN cosines, the margin
-    // that cancels hubness. Planted translations = exact vector copies
-    // under offset ids (synthesized in BOTH engines); decoys = a
-    // disjoint embedding slice. Integer-quantized cosines rank and the
-    // margin is pure integer arithmetic, so DuckDB replays both
-    // directions' neighborhoods, the mutual join and every margin
-    // exactly. Neighbor summaries are bounded graft_topk AGGREGATES —
-    // no per-anchor window funnel even in this brute/oracle face.
-    "q_bitext_mine" -> ((s, d) => withShufflePartitions(s, 8) {
-      val emb = t(s, d, "embeddings")
-      val src = emb.filter(col("vec_id") % 3 === 0)
-      val tgt = emb.filter(col("vec_id") % 3 === 1)
-        .select(col("vec_id"), col("embedding"))
-        .unionByName(emb.filter(col("vec_id") % 6 === 0)
-          .select((col("vec_id") + 1000000L).as("vec_id"),
-            col("embedding")))
-      graft.operators.Bitext.minePairs(src, tgt, k = 4,
-          minMarginPpm = 1050000L)
-        .orderBy("src_id", "tgt_id")
-    }),
-    "q_ann_srp" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      Similarity.srpTopK(emb, q, k = 5)
-        .withColumn("cos", round(col("cos"), 6))
-        .orderBy("query_id", "rank")
-    }),
-    // Retrieval-quality evaluation: recall@5 of the SRP-LSH index against
-    // brute-force ground truth, per query — the in-engine metric a
-    // pipeline watches after swapping exact search for an index. Both
-    // inputs are already-reduced top-k sets, so every join here is
-    // queries×k-sized; outputs are pure integers (hit counts, ranks,
-    // floor percentages) — no float crosses the engine boundary.
-    "q_ann_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      graft.operators.RankMetrics.topKOverlap(
-          Similarity.bruteForceTopK(emb, q, k = 5),
-          Similarity.srpTopK(emb, q, k = 5), k = 5)
-        .orderBy("query_id")
-    }),
-    // MMR diversified retrieval under the EXACT oracle: DuckDB regenerates
-    // the top-10 candidate sets, the pairwise candidate cosines, and
-    // replays the greedy λ=0.5 selection unrolled three stages deep —
-    // every argmax compares the identical IEEE doubles, ties break by id.
-    "q_ann_mmr" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      graft.operators.Mmr.diversifiedTopK(emb, q, n = 10, k = 3)
-        .withColumn("mmr_score", round(col("mmr_score"), 6))
-        .orderBy("query_id", "mmr_rank")
-    }),
-    // Plain IVF under the EXACT oracle via frozen Hadamard coarse
-    // centroids (the q_ann_ivfpq trick, PQ-less): DuckDB replays coarse
-    // assignment (ties → lower list id, the assignNearest rule), the
-    // nProbe=2 probe set and the exact cosine rescoring + top-k. The
-    // Spark side writes the real partition-pruned disk index and the
-    // probe opens only the 2 probed list directories. The LEARNED
-    // k-means coarse quantizer stays pinned by SimilaritySpec.
-    "q_ann_ivf" -> ((s, d) => {
-      // derived from benchPhases — see q_dedup_minhash_index
-      val (build, probe) = benchPhases("q_ann_ivf")(s, d)
-      build(); probe()
-    }),
-    // Product quantization + ADC under the EXACT oracle: codebooks are
-    // frozen closed-form dyadic constants (Pq.codebook scaladoc), so DuckDB
-    // independently re-encodes every vector (argmax subspace dots, same tie
-    // rule) and replays the LUT-sum scoring in the same subspace order —
-    // the hash match covers compression AND asymmetric scoring end to end.
-    "q_ann_pq" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      graft.operators.Pq.adcTopK(emb, q, k = 5)
-        .withColumn("adc", round(col("adc"), 6))
-        .orderBy("query_id", "rank")
-    }),
-    // Full IVF-PQ under the EXACT oracle: frozen Hadamard coarse centroids
-    // + frozen PQ codebooks, so DuckDB replays coarse assignment (ties →
-    // lower list id, the assignNearest rule), the nProbe=2 probe set, PQ
-    // encoding AND ADC scoring — while the Spark side actually writes the
-    // partition-pruned index to disk and reads back only probed lists.
-    "q_ann_ivfpq" -> ((s, d) => {
-      // derived from benchPhases — see q_dedup_minhash_index
-      val (build, probe) = benchPhases("q_ann_ivfpq")(s, d)
-      build(); probe()
-    }),
-
-    // k-core decomposition — the dense-subgraph extractor (link farms,
-    // tight crawl communities). The fixture plants a degree-10 circulant
-    // block inside the base link graph; peeling at k=6 cascades 4 rounds
-    // (452 → 336 → 128 → 50 survivors) before converging on the planted
-    // block. Fixed 6-round peel (rounds past convergence are no-ops) so
-    // DuckDB unrolls the exact same peeling in materialized CTEs; output
-    // = surviving nodes with their in-core degree.
-    "q_kcore" -> ((s, d) => withShufflePartitions(s, 8) {
-      val docs = t(s, d, "documents")
-      val edges = graft.operators.LinkGraph.syntheticLinks(
-          docs, k = 3, mult = 17L)
-        .unionAll(graft.operators.LinkGraph.syntheticHubLinks(
-          docs, every = 10, k = 5))
-      graft.operators.LinkGraph.kCore(edges, k = 6, rounds = 6)
-        .orderBy("id")
-    }),
-
-    // BM25 ranked retrieval over the inverted-index postings with the
-    // document length denormalized per posting (impact-index layout: no
-    // corpus-sized doc-length join at query time). DuckDB replays
-    // tokenize → tf/dl → df → the full Lucene-idf BM25 arithmetic;
-    // ranking ties break on the ROUNDED score then doc_id, so the order
-    // is engine-independent.
-    "q_search_bm25" -> ((s, d) => {
-      import graft.operators.InvertedIndex
-      // one corpus-tokenize pass: posts feeds BOTH the stats aggregate
-      // and the scoring join — unpersisted, each reference re-runs the
-      // tokenize+explode subtree (same rationale as q_search_eval's
-      // filtered cache; cleared per query by Verify/Bench)
-      val posts = InvertedIndex.postingsWithLen(t(s, d, "documents"))
-        .persist()
-      val stats = InvertedIndex.bm25Stats(posts)
-      InvertedIndex.bm25Search(posts, stats, Seq("spark", "window", "hash"))
-        .withColumn("score", round(col("score"), 6))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(20)
-    }),
-    // Ranking-metric evaluation (nDCG@10 / MRR / P@10, integer faces —
-    // SearchEval scaladoc) over a retrieval run: results = tf-ranking on
-    // each query's FIRST term only (deliberately weaker than the graded
-    // truth, so the metrics are non-trivial), qrels = graded 1..3 by how
-    // many of the query's terms the document contains. The discount
-    // weight table is driver-computed once and interpolated verbatim
-    // into the oracle — no engine-side logs, no float sums. The judged
-    // and ranked sets are both tiny (≤ k rows/query; judgment lists stay
-    // thousands of rows at any corpus size), broadcast onto the postings.
-    "q_search_eval" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      import graft.operators.{InvertedIndex, SearchEval}
-      val posts = InvertedIndex.postingsWithLen(t(s, d, "documents"))
-      val q = Seq((0L, "spark", 0), (0L, "window", 1), (0L, "hash", 2),
-        (1L, "join", 0), (1L, "sort", 1), (1L, "merge", 2))
-        .toDF("query_id", "term", "pos")
-      // one corpus-tokenize pass: the broadcast term join prunes the
-      // postings map-side to ≤ |terms| × docs-containing rows, and the
-      // tiny filtered result is persisted so the ranked-run and qrels
-      // branches don't re-tokenize the corpus each (tiny cache, cleared
-      // per query by Verify/Bench)
-      val filtered = posts.join(broadcast(q), Seq("term"))
-        .select("query_id", "pos", "term", "doc_id", "tf").persist()
-      val res = filtered.filter(col("pos") === 0)
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id")
-            .orderBy(col("tf").desc, col("doc_id").asc)))
-        .filter(col("rank") <= 10)
-        .select("query_id", "doc_id", "rank")
-      val qrels = filtered.groupBy("query_id", "doc_id")
-        .agg(countDistinct("term").as("rel"))
-      SearchEval.rankingMetrics(res, qrels, k = 10).orderBy("query_id")
-    }),
-
-    // Inter-annotator agreement (Cohen's kappa, exact integer ppm —
-    // Agreement scaladoc): two deterministic 3-class "annotators" over
-    // the corpus (char-length terciles vs whitespace-count terciles —
-    // correlated but not identical, so kappa is non-trivially between
-    // chance and perfect), per-source. Every exchange after the first
-    // aggregate is O(sources × classes).
-    "q_annotator_kappa" -> ((s, d) => {
-      import graft.operators.Agreement
-      val lab = t(s, d, "documents").select(col("source"),
-        when(col("n_chars") < 216, 0L).when(col("n_chars") < 373, 1L)
-          .otherwise(2L).as("a"),
-        when(expr("length(text) - length(replace(text, ' ', ''))") < 38,
-          0L)
-          .when(expr("length(text) - length(replace(text, ' ', ''))")
-            < 67, 1L)
-          .otherwise(2L).as("b"))
-      Agreement.cohenKappaBy(lab, "source", "a", "b").orderBy("source")
-    }),
-
-    // The PRODUCTION BM25 path under the same exact oracle: the impact
-    // index and its (n_docs, avgdl) row are PERSISTED lake tables built
-    // once; the query reads bloom-pruned postings + the one stats row and
-    // never touches the corpus (plan pinned corpus-free in
-    // InvertedIndexSpec; Bench splits build from probe).
-    "q_search_bm25_indexed" -> ((s, d) => {
-      // derived from benchPhases — see q_dedup_minhash_index
-      val (build, probe) = benchPhases("q_search_bm25_indexed")(s, d)
-      build(); probe()
-    }),
-
-    // Count-min sketch frequency estimation: the fixed-grid sketch whose
-    // shuffle is ≤ depth×width cells REGARDLESS of vocabulary size (the
-    // Hybrid retrieval with reciprocal-rank fusion (Cormack SIGIR'09):
-    // the RAG stack's standard two-arm retrieval — BM25 lexical + dense
-    // cosine over the same corpus, fused by Σ 10⁹ div (60 + rank) so
-    // neither score scale needs calibration. Each arm ranks on its
-    // round-6 score (the cross-engine-stable face) with min-id ties;
-    // fusion is a (query, id) full-outer join over ≤ 2·topN rows per
-    // query. Production swap for the dense arm is the IVF probe feeding
-    // the same rankArm contract.
-    "q_search_hybrid" -> ((s, d) => withShufflePartitions(s, 8) {
-      import graft.operators.{HybridSearch, InvertedIndex}
-      // one corpus-tokenize pass: posts is referenced by the stats
-      // aggregate AND once per lexical query (union arm) — unpersisted
-      // that is 3 tokenize+explode passes over the corpus
-      val posts = InvertedIndex.postingsWithLen(t(s, d, "documents"))
-        .persist()
-      val stats = InvertedIndex.bm25Stats(posts)
-      val lex = HybridSearch.lexicalArm(posts, stats,
-        Seq(0 -> Seq("spark", "window", "hash"),
-          1 -> Seq("join", "sort", "merge")), topN = 50)
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 2)
-        .select(col("vec_id").cast("int").as("query_id"),
-          col("embedding").as("qvec"))
-      HybridSearch.rrfFuse(lex, HybridSearch.cosineArm(emb, q, topN = 50))
-        .orderBy(col("query_id"), col("rrf").desc, col("id"))
-    }),
-
-    // map-side partial aggregate collapses occurrences into the grid
-    // before the exchange — contrast the vocabulary-sized word-count
-    // exchange). Portable affine hashes over the 60-bit md5 key, so
-    // DuckDB rebuilds the identical grid and replays the probes; output
-    // pairs each estimate with the exact count (est ≥ exact always —
-    // CMS never underestimates a point query).
-    "q_cms" -> ((s, d) => {
-      import graft.operators.Cms
-      val occ = t(s, d, "documents").repartition(16)
-        .select(explode(tokens(normalizeText(col("text")))).as("term"))
-      val grid = Cms.sketch(occ, width = 16, depth = 4)
-      val probes = Seq("spark", "window", "hash", "data", "query",
-        "fast", "slow", "table")
-      val exact = occ.filter(col("term").isin(probes: _*))
-        .groupBy("term").agg(count(lit(1)).as("exact_cnt"))
-      Cms.estimate(grid, probes, width = 16, depth = 4)
-        .join(exact, Seq("term"), "left")
-        .select(col("term"),
-          coalesce(col("exact_cnt"), lit(0L)).as("exact_cnt"),
-          col("est_cnt"))
-        .orderBy("term")
-    }),
-
-    // HyperLogLog distinct-cardinality sketch, per language: the exchange
-    // carries ≤ m=64 (idx, rho) registers per group REGARDLESS of
-    // vocabulary (map-side partial max), vs the vocabulary-sized shuffle
-    // of exact countDistinct shown alongside for calibration. Portable
-    // 60-bit md5 key → DuckDB rebuilds the identical register file; every
-    // hashed output is an INTEGER (s_scaled = Σ 2^(55−ρ_j) ≤ 2^61 exact
-    // in a long; est_milli = floor-scaled raw formula — deterministic
-    // IEEE divide, no ln()); the ln-corrected user estimate stays out of
-    // the hash (Java vs DuckDB libm differ by 1 ulp on some inputs) and
-    // is pinned by HllSpec instead.
-    "q_hll" -> ((s, d) => {
-      val occ = t(s, d, "documents").repartition(16)
-        .select(col("lang"),
-          explode(tokens(normalizeText(col("text")))).as("term"))
-      val exact = occ.groupBy("lang")
-        .agg(countDistinct("term").as("exact_distinct"))
-      graft.operators.Hll.distinctEstimate(occ, "term", b = 6,
-          groupCols = Seq("lang"))
-        .join(exact, Seq("lang"))
-        .select(col("lang"), col("exact_distinct"), col("s_scaled"),
-          col("zero_regs"), col("est_milli"))
-        .orderBy("lang")
-    }),
-
-    // Q-digest mergeable quantile sketch — the sketch-family percentile
-    // face (CMS=frequency, MG=top-k, HLL=distinct, q-digest=quantiles):
-    // per-partition digests of ≤3k trie nodes are the ONLY thing that
-    // moves (vs q_percentile's full sort), deterministic by construction
-    // (canonical compress, order-insensitive merges — no KLL coin
-    // flips), rank error ≤ depth/k. Gate in the recall-gate mold: exact
-    // rank intervals of every estimate computed in ONE extra scan,
-    // `require`d inside the ε budget (a regression crashes the query),
-    // and the emitted (q_ppm, n, eps_ppm, within) row is exactly
-    // oracle-expressible.
-    "q_quantile_sketch" -> ((s, d) => {
-      import s.implicits._
-      import graft.operators.QDigest
-      val depth = 25 // extendedprice cents < 2^25
-      val k = 5000L  // eps = depth/k = 0.5%
-      val cents = t(s, d, "lineitem")
-        .select(round(col("l_extendedprice") * 100).cast("long").as("v"))
-      // build parallel (narrow 1-col repartition; single-row-group
-      // source), but rank-scan the bare projection — partial aggs
-      // collapse in the scan partition, no exchange
-      val sk = QDigest.sketch(cents.repartition(16), "v", depth, k)
-      val qsP = Seq(10000L, 250000L, 500000L, 750000L, 900000L, 990000L)
-      val ests = qsP.map(q => q -> QDigest.quantile(sk, q))
-      val rankAggs = ests.flatMap { case (q, e) =>
-        Seq(sum(when(col("v") <= e, 1L).otherwise(0L)).as(s"le_$q"),
-          sum(when(col("v") < e, 1L).otherwise(0L)).as(s"lt_$q"))
-      }
-      val row = cents.agg(count(lit(1)).as("n"), rankAggs: _*).head()
-      val n = row.getAs[Long]("n")
-      require(n == sk.n, s"q-digest lost rows: sketch n=${sk.n} scan n=$n")
-      val bound = QDigest.rankErrorBound(sk)
-      ests.map { case (q, e) =>
-        val target = math.max(1L, (q * n + 999999L) / 1000000L)
-        val hi = row.getAs[Long](s"le_$q")
-        val lo = row.getAs[Long](s"lt_$q")
-        require(hi >= target - bound && lo <= target + bound,
-          s"q-digest rank error blown at q=$q ppm: est=$e " +
-            s"rank=[$lo,$hi] target=$target bound=$bound")
-        (q, n, 1000000L * depth / k, 1L)
-      }.toDF("q_ppm", "n", "eps_ppm", "within").orderBy("q_ppm")
-    }),
-    // The grouped face: per-(key, partition) partial digests, one
-    // (key, sketch) exchange, order-insensitive merge per key — the
-    // "running p50/p90 latency per service" shape. Same gate: exact
-    // per-group rank intervals via one broadcast join + aggregate.
-    "q_quantile_sketch_group" -> ((s, d) => {
-      import s.implicits._
-      import graft.operators.QDigest
-      val depth = 25
-      val k = 2000L
-      val li = t(s, d, "lineitem")
-        .select(col("l_returnflag"),
-          round(col("l_extendedprice") * 100).cast("long").as("v"))
-      val ests = QDigest.quantilesByKey(li.repartition(16),
-        "l_returnflag", "v", depth, k, Seq(500000L, 900000L))
-      val checked = li.join(broadcast(ests), "l_returnflag")
-        .groupBy("l_returnflag", "q_ppm", "qd_est", "qd_n")
-        .agg(sum(when(col("v") <= col("qd_est"), 1L).otherwise(0L))
-            .as("r_le"),
-          sum(when(col("v") < col("qd_est"), 1L).otherwise(0L))
-            .as("r_lt"))
-        .collect()
-      checked.map { r =>
-        val (flag, q) = (r.getAs[String]("l_returnflag"),
-          r.getAs[Long]("q_ppm"))
-        val n = r.getAs[Long]("qd_n")
-        val target = math.max(1L, (q * n + 999999L) / 1000000L)
-        val bound = depth.toLong * n / k
-        require(r.getAs[Long]("r_le") >= target - bound &&
-            r.getAs[Long]("r_lt") <= target + bound,
-          s"grouped q-digest rank error blown at ($flag, $q ppm)")
-        (flag, q, n, 1L)
-      }.toSeq.toDF("l_returnflag", "q_ppm", "n", "within")
-        .orderBy("l_returnflag", "q_ppm")
-    }),
-
-    // The mergeable sketch STORE: each "day's" batch collapses to one
-    // KB-sized digest row per key, APPENDED to a lake table (raw values
-    // never retained), and the serving read merges a key's rows —
-    // order-insensitively, so batches may land or replay in any order —
-    // to answer quantiles across all days. This is the running-p99-per-
-    // service shape the sketch family exists for: state and wire cost
-    // are (keys × batches × 3k nodes) regardless of corpus size. Gate:
-    // exact rank intervals over ALL raw rows, `require`d inside ε.
-    "q_quantile_store" -> ((s, d) => {
-      import s.implicits._
-      import graft.operators.QDigest
-      import graft.lake.{LakeLog, LakeTable}
-      val depth = 20
-      val k = 1000L
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftqs"))
-      val docs = t(s, d, "documents").select(col("source"),
-        col("doc_id"), col("n_chars").cast("long").as("v"))
-      val slices = (0 to 2).map(b => (QDigest.sketchRowsByKey(
-        docs.filter(col("doc_id") % 3 === b), "source", "v", depth, k),
-        s"day-$b"))
-      LakeTable.createTable(log, "sk", slices.head._1.schema)
-      // the three per-day sketch builds are independent heavy jobs: stage
-      // concurrently, commit in day order (identical history)
-      LakeTable.insertAll(s, log, "sk", slices)
-      val ests = QDigest.quantilesOfSketchRows(
-        LakeTable.read(s, log, "sk"), "source", Seq(500000L, 990000L))
-      val checked = docs.join(broadcast(ests), "source")
-        .groupBy("source", "q_ppm", "qd_est", "qd_n")
-        .agg(sum(when(col("v") <= col("qd_est"), 1L).otherwise(0L))
-            .as("r_le"),
-          sum(when(col("v") < col("qd_est"), 1L).otherwise(0L))
-            .as("r_lt"))
-        .collect()
-      checked.map { r =>
-        val n = r.getAs[Long]("qd_n")
-        val q = r.getAs[Long]("q_ppm")
-        val target = math.max(1L, (q * n + 999999L) / 1000000L)
-        val bound = depth.toLong * n / k
-        require(r.getAs[Long]("r_le") >= target - bound &&
-            r.getAs[Long]("r_lt") <= target + bound,
-          s"sketch-store rank error blown at " +
-            s"(${r.getAs[String]("source")}, $q ppm)")
-        (r.getAs[String]("source"), q, n, 1L)
-      }.toSeq.toDF("source", "q_ppm", "n", "within")
-        .orderBy("source", "q_ppm")
-    }),
-
-    // Sketch-store compaction: the OPTIMIZE verb merges each key's
-    // per-batch digest rows into ONE row per key in a single atomic
-    // overwrite commit. Q-digest merges are order-insensitive, so the
-    // compacted store PROVABLY answers every quantile query identically
-    // — the in-query require pins exact pre/post answer equality plus
-    // one-commit atomicity, and the emitted per-source row counts
-    // (batches carrying the source before, exactly 1 after) are
-    // hash-checked by the oracle.
-    "q_quantile_store_compact" -> ((s, d) => {
-      import s.implicits._
-      import graft.operators.QDigest
-      import graft.lake.{LakeLog, LakeTable}
-      val depth = 20
-      val k = 1000L
-      val log = new LakeLog(
-        java.nio.file.Files.createTempDirectory("graftqsc"))
-      val docs = t(s, d, "documents").select(col("source"),
-        col("doc_id"), col("n_chars").cast("long").as("v"))
-      val slices = (0 to 2).map(b => (QDigest.sketchRowsByKey(
-        docs.filter(col("doc_id") % 3 === b), "source", "v", depth, k),
-        s"day-$b"))
-      LakeTable.createTable(log, "sk", slices.head._1.schema)
-      // the three per-day sketch builds are independent heavy jobs: stage
-      // concurrently, commit in day order (identical history)
-      LakeTable.insertAll(s, log, "sk", slices)
-      def ests() = QDigest.quantilesOfSketchRows(
-          LakeTable.read(s, log, "sk"), "source", Seq(500000L, 990000L))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3)))
-        .sortBy(x => (x._1, x._2)).toSeq
-      val preRows = LakeTable.read(s, log, "sk").groupBy("source")
-        .agg(count(lit(1)).as("nb")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-      val pre = ests()
-      val vPre = log.latestVersion("sk")
-      val (nBefore, nAfter) =
-        QDigest.compactSketchStore(s, log, "sk", "source",
-          txnId = "sk-compact-1")
-      require(nAfter < nBefore,
-        s"compaction did not reduce rows: $nBefore -> $nAfter")
-      require(log.latestVersion("sk") == vPre + 1,
-        "compaction must land as exactly one commit")
-      require(pre == ests(), "compaction changed quantile answers")
-      // idempotent replay: same txn id is a duplicate, not a rewrite
-      QDigest.compactSketchStore(s, log, "sk", "source",
-        txnId = "sk-compact-1")
-      require(log.latestVersion("sk") == vPre + 1,
-        "replayed compaction must not commit again")
-      val postRows = LakeTable.read(s, log, "sk").groupBy("source")
-        .agg(count(lit(1)).as("na")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toMap
-      preRows.map { case (src, nb) => (src, nb, postRows(src), 1L) }
-        .toSeq.toDF("source", "rows_before", "rows_after",
-          "quantiles_equal")
-        .orderBy("source")
-    }),
-
-    // Corpus-overlap estimation: pairwise Jaccard between SOURCES from
-    // per-source minhash signatures — corpora are never joined, text
-    // never moves, the exchange is ≤ sources×k rows (map-side min), and
-    // every output is an integer. Same portable md5+affine family as
-    // q_dedup_minhash_fixed, grouped by source instead of doc id.
-    "q_corpus_overlap" -> ((s, d) =>
-      graft.operators.CorpusOverlap.signatureOverlap(
-          t(s, d, "documents").repartition(16), groupCol = "source", k = 16)
-        .orderBy("src_a", "src_b")),
-
-    // Edit-distance fuzzy matching on short linkage keys (40-char
-    // normalized prefixes): positional q-gram count filter + position and
-    // length windows generate candidates, exact levenshtein verifies —
-    // never the O(n²) cross join the DuckDB oracle is allowed to run at
-    // oracle scale.
-    "q_dedup_editdist" -> ((s, d) => {
-      val keys = t(s, d, "documents").repartition(16)
-        .select(col("doc_id"),
-          substring(normalizeText(col("text")), 1, 40).as("key"))
-      graft.operators.EditDist.editDistancePairs(keys, maxDist = 2, q = 3)
-        .withColumn("dist", col("dist").cast("long"))
-        .orderBy("id_1", "id_2")
-    }),
-
-    // UPDATE ... SET ... WHERE through the SQL face: copy-on-write row
-    // update with stat-pruned file rewrites in one OCC commit. The final
-    // read groups by the updated flag column, so the hash covers exactly
-    // which rows the predicate touched and the SET arithmetic applied.
-    "q_lake_update" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftupd"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4,
-        zOrderBy = Seq("l_quantity"))
-      val st = LakeSql.execute(s, log,
-        "UPDATE li SET l_extendedprice = l_extendedprice * 0.9, " +
-          "l_returnflag = 'X' WHERE l_quantity > 40")
-      // quantity-clustered files + stat pruning: the predicate must leave
-      // at least one file untouched (rewriting all 4 would mean pruning
-      // regressed to a full-table rewrite)
-      require(st.head.getAs[Long]("files_rewritten") < 4,
-        "UPDATE rewrote every file — stat pruning inoperative")
-      LakeTable.read(s, log, "li")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ALTER TABLE ADD/DROP CONSTRAINT with Delta's existing-row
-    // validation: the ADD scans the table once and rejects if any live
-    // row violates (asserted by adding a constraint the data breaks);
-    // once installed it gates writes exactly like CREATE-time checks,
-    // and DROP re-opens the gate. The final aggregate's hash covers
-    // which inserts landed.
-    "q_lake_constraint" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable, LakeValidationException}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftck"))
-      val li = t(s, d, "lineitem").select("l_orderkey", "l_quantity")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li.filter(col("l_quantity") <= 30))
-      // a constraint the existing rows satisfy installs...
-      LakeSql.execute(s, log,
-        "ALTER TABLE li ADD CONSTRAINT qty_cap CHECK (l_quantity <= 30)")
-      // ...one they violate must be rejected with the violation count
-      val rejected = try {
-        LakeSql.execute(s, log,
-          "ALTER TABLE li ADD CONSTRAINT impossible CHECK (l_quantity < 5)")
-        false
-      } catch { case _: LakeValidationException => true }
-      require(rejected, "ADD CONSTRAINT accepted over violating rows")
-      // the installed constraint gates writes
-      val writeRejected = try {
-        LakeTable.insert(s, log, "li", li.filter(col("l_quantity") > 30))
-        false
-      } catch { case _: LakeValidationException => true }
-      require(writeRejected, "installed constraint did not gate the write")
-      // DROP re-opens the gate; the big rows land
-      LakeSql.execute(s, log, "ALTER TABLE li DROP CONSTRAINT qty_cap")
-      LakeTable.insert(s, log, "li", li.filter(col("l_quantity") > 30))
-      LakeTable.read(s, log, "li").agg(
-        count(lit(1)).as("n_rows"),
-        round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-
-    // ANALYZE TABLE + DESCRIBE STATS: one aggregate pass persists exact
-    // per-column ndv / nulls / min / max and the row count as advisory
-    // schema metadata; DuckDB recomputes the identical statistics from
-    // the raw table.
-    "q_lake_analyze" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftan"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_returnflag")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li, numFiles = 4)
-      LakeSql.execute(s, log, "ANALYZE TABLE li COMPUTE STATISTICS " +
-        "FOR COLUMNS (l_orderkey, l_quantity, l_returnflag)")
-      LakeSql.execute(s, log, "DESCRIBE STATS li")
-        .select("column", "ndv_or_rows", "nulls", "min", "max")
-        .orderBy("column")
-    }),
-
-    // Deterministic training order: curriculum rank within each source
-    // (longest docs first) + stride-scheduling interleave across sources
-    // with integer virtual time, so any prefix matches the weight mixture
-    // and the whole order replays bit-identically in DuckDB's window
-    // recompute. Ranks and the final sequence are assigned DISTRIBUTED
-    // (range partition + zipWithIndex + offset join) — no global window.
-    "q_curriculum" -> ((s, d) => withShufflePartitions(s, 8) {
-      val docs = t(s, d, "documents").select("doc_id", "source", "n_chars")
-      graft.operators.Curriculum.interleave(docs, "source",
-          Seq(col("n_chars").desc, col("doc_id").asc),
-          lit(1) + substring(col("source"), 4, 10).cast("long") % 4)
-        .select("seq", "doc_id", "source", "rk", "vt")
-        .orderBy("seq")
-    }),
-
-    // Tokenizer-fit metric: out-of-vocabulary rate per source against a
-    // frozen vocabulary — the "does this corpus match the tokenizer"
-    // gate run before committing to a training mix. Zero shuffles before
-    // the tiny per-source aggregate; the token array never leaves its row.
-    "q_vocab_coverage" -> ((s, d) => {
-      val vlit = array(Seq("data", "query", "table", "row", "column",
-        "spark", "batch", "stream", "window", "filter", "scan", "merge",
-        "agg", "key", "value").map(lit): _*)
-      t(s, d, "documents")
-        .select(col("source"), tokens(normalizeText(col("text"))).as("toks"))
-        .select(col("source"), size(col("toks")).as("n_tok"),
-          size(filter(col("toks"),
-            tk => !array_contains(vlit, tk))).as("n_oov"))
-        .groupBy("source")
-        .agg(sum("n_tok").as("n_tokens"), sum("n_oov").as("oov_tokens"),
-          round(sum("n_oov").cast("double") / sum("n_tok"), 6)
-            .as("oov_rate"))
-        .orderBy("source")
-    }),
-
-    // Generated columns (Delta's GENERATED ALWAYS AS): the quantity band
-    // is a generated PARTITION column — writers never supply it, the
-    // write computes it, and a filter on it prunes whole partitions from
-    // the log alone (asserted via scan metrics). DuckDB recomputes the
-    // same derivation.
-    "q_lake_generated" -> ((s, d) => {
-      import graft.api.{LakeSql, SqlApi}
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftgen"))
-      LakeSql.execute(s, log,
-        "CREATE TABLE li (l_orderkey int64, l_quantity float64, " +
-          "l_extendedprice float64, " +
-          "qband int64 GENERATED ALWAYS AS " +
-          "(cast(floor(l_quantity / 10) as bigint))) " +
-          "PARTITIONED BY (qband)")
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice")
-      // the writer does NOT supply qband — the lake computes it
-      LakeTable.insert(s, log, "li", li, numFiles = 2)
-      val out = SqlApi.queryLake(s, log,
-        "SELECT qband, count(*) AS n_rows, " +
-          "round(sum(l_extendedprice), 2) AS sum_price " +
-          "FROM li WHERE qband >= 3 GROUP BY qband ORDER BY qband")
-      val m = graft.Metrics.measure("gen-partition-probe", out)
-      require(m.filesPruned > 0,
-        s"generated partition column did not prune " +
-          s"(scanned=${m.filesScanned})")
-      out
-    }),
-
-    // Column mapping: RENAME COLUMN is a metadata-only commit (the data
-    // files are untouched — asserted on the file set), reads alias the
-    // immutable physical name back to the new logical name, writes AFTER
-    // the rename land under the same physical name, stat pruning on the
-    // renamed column still skips files (asserted via scan metrics), and
-    // DROP COLUMN removes a field without rewriting a byte. The final
-    // aggregate runs over files written on BOTH sides of the rename.
-    "q_lake_rename" -> ((s, d) => {
-      import graft.api.{LakeSql, SqlApi}
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftcm"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li", li.filter(col("l_orderkey") % 2 === 0),
-        numFiles = 4, zOrderBy = Seq("l_quantity"))
-      val preFiles = log.snapshot("li").files.map(_.path).toSet
-      LakeSql.execute(s, log, "ALTER TABLE li RENAME COLUMN l_quantity TO qty")
-      require(log.snapshot("li").files.map(_.path).toSet == preFiles,
-        "RENAME COLUMN touched data files — not metadata-only")
-      LakeTable.insert(s, log, "li",
-        li.filter(col("l_orderkey") % 2 === 1)
-          .withColumnRenamed("l_quantity", "qty"),
-        numFiles = 4, zOrderBy = Seq("qty"))
-      LakeSql.execute(s, log, "ALTER TABLE li DROP COLUMN l_extendedprice")
-      val out = SqlApi.queryLake(s, log,
-        "SELECT l_returnflag, count(*) AS n_rows, " +
-          "round(sum(qty), 2) AS sum_qty " +
-          "FROM li WHERE qty > 45 GROUP BY l_returnflag ORDER BY l_returnflag")
-      // pre- AND post-rename files are quantity-sorted: the qty predicate
-      // must prune through the renamed logical name
-      val m = graft.Metrics.measure("rename-prune-probe", out)
-      require(m.filesPruned > 0,
-        s"no pruning through renamed column (scanned=${m.filesScanned})")
-      out
-    }),
-
-    // Timestamp time travel: TIMESTAMP AS OF resolves through the log's
-    // commit timestamps (binary search) to the newest version at-or-before
-    // the instant, then reads that snapshot. The query pins the instant to
-    // version 1's own commit timestamp, so the as-of read must see exactly
-    // the first slice while the latest read sees both — DuckDB recomputes
-    // both states from the base table.
-    "q_lake_timetravel_ts" -> ((s, d) => {
-      import graft.api.LakeSql
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftts"))
-      val li = t(s, d, "lineitem").select("l_orderkey", "l_quantity")
-      LakeTable.createTable(log, "li", li.schema)
-      (0 to 1).foreach { m =>
-        LakeTable.insert(s, log, "li",
-          li.filter(col("l_orderkey") % 3 === m), txnId = s"slice-$m")
-        // commit timestamps are millisecond-grained; keep versions on
-        // distinct instants so "as of v1's timestamp" is unambiguous
-        Thread.sleep(5)
-      }
-      val ts1 = LakeTable.history(s, log, "li")
-        .filter(col("version") === 1).head.getTimestamp(1)
-      val asOf = LakeSql.execute(s, log,
-        s"SELECT count(*) AS n_rows, round(sum(l_quantity), 2) AS sum_qty " +
-          s"FROM li TIMESTAMP AS OF '$ts1'")
-        .withColumn("which", lit("asof_v1"))
-      val latest = LakeSql.execute(s, log,
-        "SELECT count(*) AS n_rows, round(sum(l_quantity), 2) AS sum_qty " +
-          "FROM li")
-        .withColumn("which", lit("latest"))
-      asOf.unionAll(latest).select("which", "n_rows", "sum_qty")
-        .orderBy("which")
-    }),
-
-    // Point-in-time fact enrichment through SCD2 history: orders join
-    // the customer-dimension version valid AT THE ORDER'S OWN integer
-    // time — %4 customers move segment at t=1, so their t=0 orders
-    // credit the ORIGINAL segment and their t=1 orders the new one
-    // (today's-dimension joins get exactly this wrong). Equi-join on
-    // the key + interval filter; no range-join machinery (few versions
-    // per key). The oracle derives both dimension states analytically.
-    "q_scd2_fact_join" -> ((s, d) => {
-      // build (two full-dim SCD2 upsert commits) + probe (the point-in-
-      // time join) live ONCE in benchPhases so Bench prices the join as
-      // the headline and the dimension build in the `builds` sidecar;
-      // the correctness gate replays the bundled lifecycle
-      val (build, probe) = benchPhases("q_scd2_fact_join")(s, d)
-      build(); probe()
-    }),
-
-    // A/B experiment readout in exact arithmetic: two faces — the null
-    // test (purchase conversion on random user halves, expected
-    // insignificant) and a planted lift (arm 1 gains deterministic
-    // extra conversions). The two-proportion z-test's squared
-    // inequality cross-multiplies into one DECIMAL(38) comparison — no
-    // sqrt, no libm; DuckDB replays it in HUGEINT. Per-user reduction
-    // is the only data-sized aggregate; the verdict runs on two rows.
-    "q_abtest" -> ((s, d) => {
-      import graft.operators.AbTest
-      val ev = t(s, d, "events")
-        .withColumn("variant", pmod(col("user_id"), lit(2)))
-      def face(name: String, conv: org.apache.spark.sql.Column) =
-        AbTest.twoProportion(ev.withColumn("conv", conv.cast("int")),
-            "user_id", "variant", "conv")
-          .withColumn("face", lit(name))
-      // conversion = a HIGH-VALUE purchase: the raw event stream touches
-      // every user with every event type (small synthetic user domain),
-      // so an unthresholded conversion saturates both arms at 100%
-      val converts = col("event_type") === "purchase" && col("value") > 150
-      face("null_test", converts)
-        .unionByName(face("lifted", converts ||
-          (col("variant") === 1 && col("event_type") === "click")))
-        .select("face", "n_a", "x_a", "n_b", "x_b", "lift_ppm",
-          "significant")
-        .orderBy("face")
-    }),
-
-    // WordPiece tokenization: deterministic piece inventory (all ≤4-char
-    // word substrings clearing the count floor; single chars always, the
-    // coverage rule that makes [UNK] unreachable on corpus words), then
-    // greedy longest-match-first encoding per DISTINCT word, weighted
-    // back by corpus counts. The oracle rebuilds the inventory and
-    // replays maximal munch as a recursive CTE over word positions.
-    "q_tokenize_wordpiece" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val model = graft.operators.WordPiece.train(docs, maxPieceLen = 4,
-        minCount = 20L)
-      graft.operators.WordPiece.pieceCounts(docs, model)
-        .orderBy(col("n").desc, col("piece")).limit(40)
-    }),
-    // Unigram-LM tokenization (SentencePiece's model): the GLOBALLY best
-    // segmentation under frozen integer staircase-log₂ piece scores —
-    // where WordPiece munches the longest local piece, unigram can
-    // prefer two frequent pieces over one rare long one. The oracle
-    // enumerates every segmentation per distinct word via a recursive
-    // CTE and replays the identical (score, k, path) argmax.
-    "q_tokenize_unigram" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val model = graft.operators.Unigram.train(docs, maxPieceLen = 4,
-        minCount = 20L)
-      graft.operators.Unigram.pieceCounts(docs, model)
-        .orderBy(col("n").desc, col("piece")).limit(40)
-    }),
-
-    // Late-data dead-letter routing: where a watermark silently DROPS
-    // stragglers, this sink quarantines them. Three deterministic
-    // micro-batches (lake-source versions: two date windows, then the
-    // window-2 remainder plus id%13 stragglers of ANY age); each batch
-    // splits against the durable watermark of the PREVIOUS batches only
-    // (max ts so far − 1h), so the old stragglers land in the `late`
-    // table and everything else flows on-time — all three appends per
-    // batch txn-idempotent. The oracle replays batch assignment,
-    // cumulative-max watermarks and the split.
-    "q_stream_late" -> ((s, d) => withShufflePartitions(s, 4) {
-      import graft.lake.{LakeLog, LakeTable}
-      import graft.streaming.Streams
-      val ev = t(s, d, "events").select("ts", "event_id", "event_type")
-      val tmp = java.nio.file.Files.createTempDirectory("graftlate")
-      val log = new LakeLog(tmp.resolve("lake"))
-      val batchOf =
-        when(col("event_id") % 13 === 0, 2)
-          .when(col("ts") < lit("2024-01-11").cast("timestamp"), 0)
-          .when(col("ts") < lit("2024-01-21").cast("timestamp"), 1)
-          .otherwise(2)
-      LakeTable.createTable(log, "src", ev.schema)
-      for (t0 <- Seq("ontime", "late"))
-        LakeTable.createTable(log, t0, ev.schema)
-      LakeTable.createTable(log, "wm",
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("batch_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("max_ts",
-            org.apache.spark.sql.types.TimestampType))))
-      LakeTable.insertAll(s, log, "src", (0 to 2).map(b =>
-        (ev.filter(batchOf === b), s"slice-$b")))
-      val q = Streams.lateRoutingSinkToLake(
-        Streams.lakeStream(s, log, "src", maxVersionsPerBatch = Some(1L)),
-        log, "ontime", "late", "wm", "ts", latenessMs = 3600L * 1000L,
-        tmp.resolve("ckpt").toString)
-      q.processAllAvailable(); q.stop()
-      def face(name: String, table: String) =
-        LakeTable.read(s, log, table).groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("event_id").as("checksum"))
-          .withColumn("face", lit(name))
-      face("ontime", "ontime").unionByName(face("late", "late"))
-        .select("face", "event_type", "n", "checksum")
-        .orderBy("face", "event_type")
-    }),
-
-    // Entity resolution: planted dirty re-crawls of customer (case-folded
-    // copies with drifted balances, "inc"-suffixed copies) resolve back
-    // to their source entity through multi-pass blocking (normalized
-    // name; (nation, $100-balance-band)), integer field-agreement
-    // scoring, and connected components over the match graph. Every
-    // edge requires name agreement (50 of the 80 threshold), so realized
-    // components are same-name cliques — the oracle's 2-hop min replay
-    // is exact. Output = entity-size histogram with id checksums: any
-    // mis-clustering anywhere moves it.
-    "q_entity_resolution" -> ((s, d) => {
-      import graft.operators.EntityResolution
-      val base = t(s, d, "customer").select(col("c_custkey").as("id"),
-        col("c_name").as("name"), col("c_mktsegment").as("seg"),
-        col("c_nationkey").as("nat"),
-        expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal"))
-      val v1 = base.filter(col("id") % 3 === 0).select(
-        (col("id") + 1000000L).as("id"), upper(col("name")).as("name"),
-        col("seg"), col("nat"), (col("bal") + 37L).as("bal"))
-      val v2 = base.filter(col("id") % 9 === 0).select(
-        (col("id") + 2000000L).as("id"),
-        concat(col("name"), lit(" inc")).as("name"),
-        col("seg"), col("nat"), (col("bal") - 25L).as("bal"))
-      val records = base.unionByName(v1).unionByName(v2)
-        .withColumn("name_norm", regexp_replace(regexp_replace(
-          lower(col("name")), "\\b(inc|llc|ltd)\\b", ""),
-          "[^a-z0-9]", ""))
-      val matches = EntityResolution.matchPairs(records, "id",
-        blockExprs = Seq("name_norm",
-          "concat(cast(nat as string), '|', cast(bal div 10000 as string))"),
-        rules = Seq(("name_norm_a = name_norm_b", 50L),
-          ("abs(bal_a - bal_b) <= 100", 30L), ("seg_a = seg_b", 20L)),
-        threshold = 80L)
-      EntityResolution.entities(records, "id", matches)
-        .groupBy("entity").agg(count(lit(1)).as("n_records"),
-          sum("record_id").as("sum_id"))
-        .groupBy("n_records").agg(count(lit(1)).as("n_entities"),
-          sum("sum_id").as("checksum"))
-        .orderBy("n_records")
-    }),
-
-    // Partition-spec evolution (Iceberg UpdatePartitionSpec): half of
-    // lineitem lands flat, the spec flips to PARTITIONED BY
-    // (l_returnflag) in one metadata-only commit, the other half lands
-    // partitioned — nothing rewrites, the snapshot mixes layouts, and
-    // BOTH read paths reconstruct every row (legacy files reattach their
-    // own logged maps; current-spec files ride the FileIndex, where the
-    // probe's partition filter must actually prune). The `all` face
-    // aggregates the full mixed table; the `probe` face reads one
-    // partition through readIndexed with a pruning assert.
-    "q_lake_partition_evolution" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftpe"))
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity")
-      LakeTable.createTable(log, "li", li.schema)
-      LakeTable.insert(s, log, "li",
-        li.filter(col("l_orderkey") % 2 === 0), txnId = "flat-half",
-        numFiles = 2)
-      log.alterPartitioning("li", Seq("l_returnflag"), "adopt-rf")
-      LakeTable.insert(s, log, "li",
-        li.filter(col("l_orderkey") % 2 =!= 0), txnId = "part-half",
-        numFiles = 2)
-      val specs = log.snapshot("li").files.map(_.partition.keySet).toSet
-      require(specs == Set(Set.empty[String], Set("l_returnflag")),
-        s"expected mixed layouts after spec evolution, got $specs")
-      val all = LakeTable.read(s, log, "li")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"))
-        .withColumn("face", lit("all"))
-      val probe = LakeTable.readIndexed(s, log, "li")
-        .filter(col("l_returnflag") === "R")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"))
-        .withColumn("face", lit("probe"))
-      val m = graft.Metrics.measure("pevo-probe", probe)
-      require(m.filesPruned > 0,
-        s"partition filter did not prune current-spec files " +
-          s"(scanned=${m.filesScanned})")
-      all.unionByName(probe)
-        .select("face", "l_returnflag", "n_rows", "sum_qty")
-        .orderBy("face", "l_returnflag")
-    }),
-
-    // SCD Type 2 over the lake: three change batches against a customer
-    // dimension — initial load at t=0, a segment move (+balance bump on
-    // a subset) at t=1, a second move at t=2 whose keys chain
-    // close→reopen, plus a no-op CDC echo that must mint NO versions.
-    // Every version row carries integer (eff_from, eff_to, is_current),
-    // so the oracle derives the exact final dimension analytically from
-    // the base table. Sort key coalesces eff_to: Spark orders NULLS
-    // FIRST, DuckDB NULLS LAST — never sort oracle output on a nullable.
-    "q_lake_scd2" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, Scd}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftscd2"))
-      val base = t(s, d, "customer").select(
-        col("c_custkey").as("key"), col("c_mktsegment").as("seg"),
-        expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal"))
-      Scd.create(log, "dim", base.schema)
-      Scd.applyBatch(s, log, "dim", base, "key", Seq("seg", "bal"), 0L, "b0")
-      val bump = when(col("key") % 10 === 0, 1000L).otherwise(0L)
-      val b1 = base.filter(col("key") % 4 === 0)
-        .select(col("key"), lit("MOVED").as("seg"),
-          (col("bal") + bump).as("bal"))
-        .unionByName(base.filter(col("key") % 50 === 0)
-          .select((col("key") + 1000000L).as("key"), col("seg"), col("bal")))
-      Scd.applyBatch(s, log, "dim", b1, "key", Seq("seg", "bal"), 1L, "b1")
-      val b2 = base.filter(col("key") % 8 === 0)
-        .select(col("key"), lit("MOVED2").as("seg"),
-          (col("bal") + bump).as("bal"))
-        .unionByName(base
-          .filter(col("key") % 7 === 0 && col("key") % 8 =!= 0)
-          .select(col("key"),
-            when(col("key") % 4 === 0, "MOVED").otherwise(col("seg"))
-              .as("seg"),
-            (col("bal") + when(col("key") % 4 === 0 &&
-              col("key") % 10 === 0, 1000L).otherwise(0L)).as("bal")))
-      Scd.applyBatch(s, log, "dim", b2, "key", Seq("seg", "bal"), 2L, "b2")
-      LakeTable.read(s, log, "dim")
-        .groupBy("eff_from", "eff_to", "is_current")
-        .agg(count(lit(1)).as("n"), sum("key").as("sum_key"),
-          sum("bal").as("sum_bal"))
-        .orderBy(col("eff_from"), coalesce(col("eff_to"), lit(-1L)),
-          col("is_current"))
-    }),
-
-    // Cross-table atomic transaction: documents and their per-source
-    // stats move TOGETHER — one decided txn publishes both (src0+src1),
-    // an aborted txn (src2) leaves a trace in neither, and a later
-    // main-line insert into only the doc table (src3) shows what the
-    // txn's pinned snapshot protects against: the `main` face sees the
-    // now-inconsistent pair (src3 docs with no stats row) while the
-    // `txn_snapshot` face (readAt = version-pinned participants) stays
-    // consistent on every source. The oracle recomputes both faces from
-    // the base table.
-    "q_lake_multitxn" -> ((s, d) => {
-      import graft.lake.{LakeLog, LakeTable, MultiTxn}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftmt"))
-      val docs = t(s, d, "documents").select("doc_id", "source", "n_chars")
-      def stats(df: org.apache.spark.sql.DataFrame) =
-        df.groupBy("source").agg(count(lit(1)).as("n_docs"))
-      LakeTable.createTable(log, "meta", docs.schema)
-      LakeTable.createTable(log, "stats", stats(docs).schema)
-      val committed = docs.filter(col("source").isin("src0", "src1"))
-      MultiTxn.stage(s, log, "t1", "meta", committed)
-      MultiTxn.stage(s, log, "t1", "stats", stats(committed))
-      MultiTxn.commit(s, log, "t1", Seq("meta", "stats"))
-      val aborted = docs.filter(col("source") === "src2")
-      MultiTxn.stage(s, log, "t2", "meta", aborted)
-      MultiTxn.stage(s, log, "t2", "stats", stats(aborted))
-      MultiTxn.abort(log, "t2", Seq("meta", "stats"))
-      LakeTable.insert(s, log, "meta",
-        docs.filter(col("source") === "src3"), txnId = "late-main")
-      def face(name: String, meta: org.apache.spark.sql.DataFrame,
-               st: org.apache.spark.sql.DataFrame) =
-        meta.groupBy("source").agg(count(lit(1)).as("n_meta"))
-          .join(st.withColumnRenamed("n_docs", "n_stats"),
-            Seq("source"), "full_outer")
-          .select(lit(name).as("face"), col("source"),
-            coalesce(col("n_meta"), lit(0L)).as("n_meta"),
-            coalesce(col("n_stats"), lit(0L)).as("n_stats"))
-      val snap = MultiTxn.readAt(s, log, "t1")
-      face("main", LakeTable.read(s, log, "meta"),
-          LakeTable.read(s, log, "stats"))
-        .unionByName(face("txn_snapshot", snap("meta"), snap("stats")))
-        .withColumn("consistent",
-          (col("n_meta") === col("n_stats")).cast("int"))
-        .orderBy("face", "source")
-    }),
-
-    // CUSUM changepoint detection (Page 1954) with planted ground truth:
-    // hourly event counts gain a +3/hour level shift from Jan 21 (the
-    // planted-structure pattern q_kcore uses), and the integer CUSUM
-    // fold must alarm shortly after — detection delay shrinks as the
-    // data (and so the signal-to-noise) grows, visible across the SFs.
-    // Per-key folds run inside one row each; the raw stream reduces to
-    // (type, hour) counts first, so nothing corpus-sized shuffles.
-    "q_changepoint" -> ((s, d) => {
-      val series = t(s, d, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("n", col("n") +
-          when(col("hour") >= lit("2024-01-21").cast("timestamp"), 3L)
-            .otherwise(0L))
-      graft.operators.Changepoint.cusum(series, "event_type", "hour", "n",
-          baseline = 48, slackTimesB = 48L, thresholdTimesB = 960L)
-        .orderBy("event_type")
-    }),
-
-    // l-diversity on top of the k-anonymity search: the sensitive column
-    // (market segment) must show ≥ 3 DISTINCT values per class — k alone
-    // leaves the homogeneity attack open. The two gate SFs choose
-    // DIFFERENT ladder steps (the 1% corpus clears the budget at the
-    // finest step, the 0.1% corpus must coarsen once), so the oracle
-    // replays a search that actually branches on data.
-    "q_kanon_ldiv" -> ((s, d) =>
-      graft.operators.Anonymize.lDiversify(t(s, d, "customer"),
-        k = 3, l = 3,
-        ladders = Seq(
-          graft.operators.Anonymize.Ladder("g_nat", Seq(
-            "CAST(c_nationkey AS STRING)",
-            "CAST(c_nationkey div 5 AS STRING)", "'*'")),
-          graft.operators.Anonymize.Ladder("g_bal", Seq(
-            "CAST(CAST(round(c_acctbal * 100) AS BIGINT) div 100000 AS STRING)",
-            "CAST(CAST(round(c_acctbal * 100) AS BIGINT) div 500000 AS STRING)",
-            "'*'"))),
-        sensitiveCol = "c_mktsegment", maxSuppressedPpm = 200000L)
-        .orderBy("g_nat", "g_bal")),
-
-    // Local differential privacy via randomized response (Warner 1965):
-    // each event's conversion bit flips with p=1/4 (ε = ln 3) under a
-    // seeded deterministic md5 coin, then the per-type rate debiases
-    // exactly in integer ppm — the coin's determinism is what lets the
-    // oracle replay every flip and makes pipeline retries idempotent
-    // (documented: a deployment wanting adversarial unpredictability
-    // swaps in a keyed hash; estimator unchanged).
-    "q_dp_rr" -> ((s, d) => {
-      import graft.operators.Privacy
-      val ev = t(s, d, "events").select(col("event_id"), col("event_type"),
-        (col("value") > 150).cast("int").as("sig"))
-      Privacy.debiasedRate(
-          Privacy.randomizedResponse(ev, "event_id", "sig",
-            pPpm = 250000L, seed = "rr-r8"),
-          "event_type", pPpm = 250000L)
-        .orderBy("event_type")
-    }),
-
-    // k-anonymity AND t-closeness: each class's balance-band
-    // distribution must sit within EMD t of the corpus's — the
-    // skew leak l-diversity misses. EMD over the ordered bands is
-    // exact cross-multiplied integer arithmetic (no floats); the
-    // oracle replays the whole stepped search including every class's
-    // cumulative-count EMD in HUGEINT.
-    "q_kanon_tclose" -> ((s, d) =>
-      graft.operators.Anonymize.tCloseness(t(s, d, "customer"),
-        k = 3, tPpm = 250000L,
-        ladders = Seq(
-          graft.operators.Anonymize.Ladder("g_nat", Seq(
-            "CAST(c_nationkey AS STRING)",
-            "CAST(c_nationkey div 5 AS STRING)", "'*'")),
-          graft.operators.Anonymize.Ladder("g_seg", Seq(
-            "c_mktsegment", "c_mktsegment", "'*'"))),
-        sensitiveExpr = "CAST(round(c_acctbal * 100) AS BIGINT) div 100000",
-        maxSuppressedPpm = 200000L)
-        .orderBy("g_nat", "g_seg")),
-
-    // k-anonymity by stepped global recoding: generalize the customer
-    // quasi-identifiers (nation, segment, balance band) up a fixed
-    // ladder until the under-k residue fits the suppression budget,
-    // then emit the chosen step's ≥k equivalence classes. The step
-    // search is metadata-priced (one aggregate per ladder step, two
-    // longs to the driver); the oracle replays the whole search —
-    // per-step residue counts, budget comparison, fallback — not just
-    // the final class table.
-    "q_kanon" -> ((s, d) =>
-      graft.operators.Anonymize.kAnonymize(t(s, d, "customer"), k = 3,
-        ladders = Seq(
-          graft.operators.Anonymize.Ladder("g_nat", Seq(
-            "CAST(c_nationkey AS STRING)",
-            "CAST(c_nationkey div 5 AS STRING)", "'*'")),
-          graft.operators.Anonymize.Ladder("g_seg", Seq(
-            "c_mktsegment", "c_mktsegment", "'*'")),
-          graft.operators.Anonymize.Ladder("g_bal", Seq(
-            "CAST(CAST(round(c_acctbal * 100) AS BIGINT) div 100000 AS STRING)",
-            "CAST(CAST(round(c_acctbal * 100) AS BIGINT) div 500000 AS STRING)",
-            "'*'"))),
-        maxSuppressedPpm = 200000L)
-        .orderBy("g_nat", "g_seg", "g_bal")),
-
-    // Pareto frontier (skyline): suppliers not strictly beaten on BOTH
-    // total spend (minimized) and line volume (maximized, negated into
-    // the minimized frame). The engine runs the band-partitioned skyline
-    // (Skyline.frontier — per-bucket windows + a P-row prefix-min
-    // broadcast, no all-pairs pass and no global window); the oracle is
-    // the textbook NOT EXISTS dominance test, valid because the band
-    // formulation is exact, not approximate.
-    "q_pareto" -> ((s, d) => {
-      val per = t(s, d, "lineitem")
-        .groupBy(col("l_suppkey").as("suppkey"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
-          .as("cost_cents"), count(lit(1)).as("n_lines"))
-        .withColumn("neg_lines", -col("n_lines"))
-      graft.operators.Skyline.frontier(per, "cost_cents", "neg_lines")
-        .select("suppkey", "cost_cents", "n_lines")
-        .orderBy("suppkey")
-    }),
-  )
-
-  /** The SRP hyperplanes q_ann_srp uses, as DuckDB VALUES literals: the
-    * generator is deterministic (xorshift seed 42) and data-independent,
-    * so the oracle can carry the exact same doubles — Double.toString
-    * round-trips, and DuckDB's decimal parse recovers the identical bits.
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map { case (n, q) => n -> q.build }
+
+  /** DuckDB-runnable oracle for each query, declared in its [[Q]] beside
+    * the build. Column aliases and ORDER BY match the Spark side exactly
+    * (the gate sorts columns by name then hashes values). A query whose
+    * answer depends on Spark-internal hashes or ANN approximation carries
+    * an oracle for a falsifiable derivative instead (a recall floor, a
+    * count) and is property-tested in ScalaTest.
     */
-  private lazy val srpPlaneLiterals: String =
-    graft.functions.VectorFunctions.randomPlanes(8, 64).zipWithIndex
-      .map { case (p, i) => s"($i, [${p.mkString(",")}]::DOUBLE[])" }
-      .mkString(", ")
-
-  /** Unrolled fixed-point PageRank: the same integer recurrence
-    * [[graft.operators.LinkGraph.pageRank]] runs (teleport 0.15·10¹²,
-    * per-edge `rank // outdeg`, damped `(85·sum) // 100`), one CTE per
-    * iteration. Integer `//` in DuckDB and `div` in Spark agree on
-    * positives, which is what makes the oracle exact.
-    */
-  /** Shared by q_anomaly and q_stream_anomaly — the stream face's final
-    * state equals the batch aggregate by construction, so BOTH queries
-    * replay against this one batch SQL (one definition, no drift). */
-  private val anomalyOracleSql: String = """
-      WITH series AS (
-        SELECT event_type, date_trunc('hour', ts) AS hour,
-               CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      mo AS (
-        SELECT event_type, CAST(count(*) AS BIGINT) AS n_buckets,
-               CAST(sum(n) AS BIGINT) AS sum_n,
-               CAST(sum(n * n) AS BIGINT) AS sum_sq
-        FROM series GROUP BY 1),
-      j AS (
-        SELECT s.event_type, s.hour, s.n, m.n_buckets, m.sum_n,
-               (m.n_buckets * s.n - m.sum_n) *
-                 (m.n_buckets * s.n - m.sum_n) AS lhs,
-               9 * (m.n_buckets * m.sum_sq - m.sum_n * m.sum_n) AS rhs
-        FROM series s JOIN mo m USING (event_type))
-      SELECT event_type, hour, n, n_buckets, sum_n, lhs, rhs
-      FROM j WHERE lhs > rhs ORDER BY event_type, hour"""
-
-  /** THE frozen quality model — single source of truth for every query
-    * that scores with it (q_quality_model, q_model_eval, q_dataset_card,
-    * q_calibrate). Dyadic constants so standardization is IEEE-exact. */
-  private def frozenQualityModel: graft.operators.QualityClassifier.Model =
-    graft.operators.QualityClassifier.Model(
-      Seq("n_tokens_d", "mean_token_len", "symbol_ratio", "digit_ratio"),
-      Seq(0.75, -0.5, -1.25, -0.75), 0.25,
-      Seq(64.0, 5.0, 0.03125, 0.0625), Seq(32.0, 2.0, 0.03125, 0.0625))
-
-  /** documents → carry columns + the frozen model's four feature source
-    * columns (the one projection all frozen-model queries share). */
-  private def withQualityFeatures(df: DataFrame,
-                                  carry: Seq[String]): DataFrame = {
-    val c = carry.map(col)
-    df.select(c :+
-        graft.functions.TextFunctions.qualityFeatures(col("text")).as("f"): _*)
-      .select(c ++ Seq(
-        col("f.n_tokens").cast("double").as("n_tokens_d"),
-        col("f.mean_token_len").as("mean_token_len"),
-        col("f.symbol_ratio").as("symbol_ratio"),
-        col("f.digit_ratio").as("digit_ratio")): _*)
-  }
-
-  /** The DuckDB CTE chain every frozen-model oracle shares: features →
-    * standardized margin, with `carry` columns (never `text` — it is
-    * always carried) riding through to the final `m(carry, text, n_tok,
-    * sym, margin)`. One definition, or the gate silently diverges per
-    * query when the model moves. */
-  private def qualityMarginOracleCtes(carry: String): String = {
-    val c = if (carry.isEmpty) "" else carry + ", "
-    s"""
-      WITH norm AS (
-        SELECT ${c}text,
-               regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS nt
-        FROM documents),
-      f AS (
-        SELECT ${c}text,
-               CAST(length(nt) AS DOUBLE) AS n_chars,
-               CAST(len(list_filter(string_split_regex(nt, '\\s+'),
-                 x -> x <> '')) AS DOUBLE) AS n_tok,
-               CAST(length(regexp_replace(nt, '[\\p{L}\\p{N}\\s]', '', 'g'))
-                 AS DOUBLE) AS n_sym,
-               CAST(length(regexp_replace(nt, '[^0-9]', '', 'g'))
-                 AS DOUBLE) AS n_dig
-        FROM norm),
-      feats AS (
-        SELECT ${c}text, n_tok,
-               CASE WHEN n_tok > 0 THEN (n_chars - (n_tok - 1)) / n_tok
-                    ELSE 0.0 END AS mtl,
-               CASE WHEN n_chars > 0 THEN n_sym / n_chars ELSE 0.0 END AS sym,
-               CASE WHEN n_chars > 0 THEN n_dig / n_chars ELSE 0.0 END AS dig
-        FROM f),
-      m AS (
-        SELECT ${c}text, n_tok, sym,
-               0.25 + (n_tok - 64.0) / 32.0 * 0.75
-                    + (mtl - 5.0) / 2.0 * (-0.5)
-                    + (sym - 0.03125) / 0.03125 * (-1.25)
-                    + (dig - 0.0625) / 0.0625 * (-0.75) AS margin
-        FROM feats)"""
-  }
-
-  private def pageRankOracleSql(iters: Int,
-                                seedCond: String => String = _ => "TRUE")
-      : String = {
-    val base = s"""
-      WITH nodes AS (SELECT doc_id AS id FROM documents),
-      nn AS (SELECT count(*) AS n FROM nodes),
-      edges AS (
-        SELECT id AS src, (id * 17 + c.c) % nn.n AS dst
-        FROM nodes CROSS JOIN nn
-        CROSS JOIN (SELECT unnest([1, 2, 3]) AS c) c),
-      od AS (SELECT src, count(*) AS od FROM edges GROUP BY 1),
-      r0 AS (SELECT id,
-               CASE WHEN ${seedCond("id")}
-                    THEN CAST(1000000000000 AS BIGINT)
-                    ELSE CAST(0 AS BIGINT) END AS r
-             FROM nodes)"""
-    val iterCtes = (1 to iters).map { i =>
-      s""",
-      r$i AS (
-        SELECT n.id,
-               CAST((CASE WHEN ${seedCond("n.id")}
-                          THEN 150000000000 ELSE 0 END) +
-                    (85 * COALESCE(c.s, 0)) // 100
-                 AS BIGINT) AS r
-        FROM nodes n LEFT JOIN (
-          SELECT e.dst, CAST(SUM(r.r // od.od) AS BIGINT) AS s
-          FROM edges e
-          JOIN r${i - 1} r ON e.src = r.id
-          JOIN od ON od.src = e.src
-          GROUP BY e.dst) c ON c.dst = n.id)"""
-    }.mkString
-    base + iterCtes +
-      s"""
-      SELECT id, r AS rank_fp FROM r$iters
-      ORDER BY rank_fp DESC, id ASC LIMIT 20"""
-  }
-
-  /** Unrolled integer HITS over the synthetic link graph: `iters` rounds
-    * of auth-from-hub / hub-from-auth sums, each L1-renormalized by the
-    * division-only `max(total div scale, 1)` rule — exactly
-    * [[graft.operators.LinkGraph.hits]]'s recurrence. Sum CTEs are
-    * MATERIALIZED for the same reason as the k-core oracle's (multi-ref
-    * CTE re-expansion). DuckDB's integer SUM widens to HUGEINT, so every
-    * reduction is CAST back to BIGINT before it feeds the next round.
-    */
-  private def hitsOracleSql(iters: Int, scale: Long): String = {
-    val base = s"""
-      WITH nodes AS (SELECT doc_id AS id FROM documents),
-      nn AS (SELECT count(*) AS n FROM nodes),
-      edges AS MATERIALIZED (
-        SELECT id AS src, (id * 17 + c.c) % nn.n AS dst
-        FROM nodes CROSS JOIN nn
-        CROSS JOIN (SELECT unnest([1, 2, 3]) AS c) c),
-      h0 AS (SELECT id, CAST($scale AS BIGINT) AS v FROM nodes)"""
-    val iterCtes = (1 to iters).map { i =>
-      s""",
-      ra$i AS MATERIALIZED (
-        SELECT n.id, CAST(COALESCE(s.s, 0) AS BIGINT) AS v
-        FROM nodes n LEFT JOIN (
-          SELECT e.dst AS id, CAST(SUM(h.v) AS BIGINT) AS s
-          FROM edges e JOIN h${i - 1} h ON e.src = h.id
-          GROUP BY 1) s ON s.id = n.id),
-      ta$i AS (SELECT greatest(CAST(SUM(v) AS BIGINT) // $scale, 1) AS d
-               FROM ra$i),
-      a$i AS MATERIALIZED (
-        SELECT id, CAST(v // t.d AS BIGINT) AS v
-        FROM ra$i CROSS JOIN ta$i t),
-      rh$i AS MATERIALIZED (
-        SELECT n.id, CAST(COALESCE(s.s, 0) AS BIGINT) AS v
-        FROM nodes n LEFT JOIN (
-          SELECT e.src AS id, CAST(SUM(a.v) AS BIGINT) AS s
-          FROM edges e JOIN a$i a ON e.dst = a.id
-          GROUP BY 1) s ON s.id = n.id),
-      th$i AS (SELECT greatest(CAST(SUM(v) AS BIGINT) // $scale, 1) AS d
-               FROM rh$i),
-      h$i AS MATERIALIZED (
-        SELECT id, CAST(v // t.d AS BIGINT) AS v
-        FROM rh$i CROSS JOIN th$i t)"""
-    }.mkString
-    base + iterCtes + s"""
-      SELECT a.id, a.v AS auth_fp, h.v AS hub_fp
-      FROM a$iters a JOIN h$iters h ON a.id = h.id
-      ORDER BY auth_fp DESC, a.id ASC LIMIT 20"""
-  }
-
-  /** Unrolled synchronous label propagation over the block-structured
-    * synthetic graph — exactly
-    * [[graft.operators.LinkGraph.labelPropagation]]'s recurrence: per
-    * round every node adopts its neighbors' most frequent label, count
-    * ties broken by SMALLEST label (row_number over cnt DESC, label ASC —
-    * the same total order the Spark side encodes as
-    * `max(struct(cnt, -label))`). All-integer, so the replay is exact.
-    */
-  private def labelPropOracleSql(iters: Int, block: Int, k: Int): String = {
-    val cs = (1 to k).mkString("[", ", ", "]")
-    val base = s"""
-      WITH nodes0 AS (SELECT doc_id AS id FROM documents),
-      e AS MATERIALIZED (
-        SELECT id AS src,
-               (id // $block) * $block + ((id % $block + c.c) % $block) AS dst
-        FROM nodes0 CROSS JOIN (SELECT unnest($cs) AS c) c),
-      u0 AS MATERIALIZED (
-        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM e WHERE src <> dst),
-      und AS MATERIALIZED (
-        SELECT a AS v, b AS nbr FROM u0
-        UNION ALL SELECT b AS v, a AS nbr FROM u0),
-      nodes AS (SELECT src AS id FROM e UNION SELECT dst AS id FROM e),
-      l0 AS (SELECT id, id AS label FROM nodes)"""
-    val iterCtes = (1 to iters).map { i =>
-      s""",
-      c$i AS MATERIALIZED (
-        SELECT v, label FROM (
-          SELECT u.v, l.label, count(*) AS cnt
-          FROM und u JOIN l${i - 1} l ON u.nbr = l.id
-          GROUP BY u.v, l.label)
-        QUALIFY row_number() OVER (
-          PARTITION BY v ORDER BY cnt DESC, label ASC) = 1),
-      l$i AS MATERIALIZED (
-        SELECT p.id, COALESCE(c.label, p.label) AS label
-        FROM l${i - 1} p LEFT JOIN c$i c ON c.v = p.id)"""
-    }.mkString
-    base + iterCtes + s"""
-      SELECT label, CAST(count(*) AS BIGINT) AS size,
-             min(id) AS min_id, max(id) AS max_id
-      FROM l$iters GROUP BY label ORDER BY label"""
-  }
-
-  /** Unrolled grid-blocked DBSCAN over the planted point layout —
-    * exactly [[graft.operators.Dbscan]]'s semantics: eps-cell candidate
-    * join, core gate (count+self ≥ minPts), `rounds` min-label flooding
-    * rounds over the core-core graph, min-adjacent-core border
-    * assignment, noise = -1. All integer arithmetic.
-    */
-  private def dbscanOracleSql(eps: Long, minPts: Int, rounds: Int): String = {
-    val base = s"""
-      WITH pts AS (
-        SELECT vec_id AS id,
-          CASE WHEN vec_id % 17 = 0
-            THEN CAST(('0x' || substring(md5('dbnx:' || vec_id), 1, 15))
-                   AS BIGINT) % 4100
-            ELSE ((vec_id % 8) % 4) * 1000 +
-                 CAST(('0x' || substring(md5('dbx:' || vec_id), 1, 15))
-                   AS BIGINT) % 81 END AS x,
-          CASE WHEN vec_id % 17 = 0
-            THEN CAST(('0x' || substring(md5('dbny:' || vec_id), 1, 15))
-                   AS BIGINT) % 1100
-            ELSE ((vec_id % 8) // 4) * 1000 +
-                 CAST(('0x' || substring(md5('dby:' || vec_id), 1, 15))
-                   AS BIGINT) % 81 END AS y
-        FROM embeddings),
-      cells AS (
-        SELECT id, x, y, x // $eps AS cx, y // $eps AS cy FROM pts),
-      pairs AS MATERIALIZED (
-        SELECT a.id AS ai, b.id AS bi
-        FROM cells a JOIN cells b
-          ON b.cx BETWEEN a.cx - 1 AND a.cx + 1
-         AND b.cy BETWEEN a.cy - 1 AND a.cy + 1
-         AND a.id <> b.id
-        WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-              <= ${eps * eps}),
-      core AS MATERIALIZED (
-        SELECT ai AS id FROM pairs GROUP BY ai
-        HAVING count(*) + 1 >= $minPts),
-      ce AS MATERIALIZED (
-        SELECT p.ai, p.bi FROM pairs p
-        JOIN core c1 ON c1.id = p.ai
-        JOIN core c2 ON c2.id = p.bi),
-      l0 AS (SELECT id, id AS lbl FROM core)"""
-    val iterCtes = (1 to rounds).map { i =>
-      s""",
-      l$i AS MATERIALIZED (
-        SELECT l.id, least(l.lbl, COALESCE(min(n.lbl), l.lbl)) AS lbl
-        FROM l${i - 1} l
-        LEFT JOIN ce e ON e.ai = l.id
-        LEFT JOIN l${i - 1} n ON n.id = e.bi
-        GROUP BY l.id, l.lbl)"""
-    }.mkString
-    base + iterCtes + s""",
-      border AS (
-        SELECT p.ai AS id, min(l.lbl) AS lbl
-        FROM pairs p JOIN l$rounds l ON l.id = p.bi
-        WHERE p.ai NOT IN (SELECT id FROM core)
-        GROUP BY p.ai),
-      asg AS (
-        SELECT pts.id, COALESCE(cl.lbl, b.lbl, -1) AS cluster,
-               CASE WHEN cl.lbl IS NOT NULL THEN 1 ELSE 0 END AS is_core
-        FROM pts LEFT JOIN l$rounds cl ON cl.id = pts.id
-        LEFT JOIN border b ON b.id = pts.id)
-      SELECT cluster, CAST(count(*) AS BIGINT) AS n_points,
-             CAST(sum(is_core) AS BIGINT) AS n_core,
-             min(id) AS min_id, max(id) AS max_id
-      FROM asg GROUP BY cluster ORDER BY cluster"""
-  }
-
-  /** Shared CTE chain replaying [[graft.operators.Urls]] end-to-end:
-    * deterministic raw-URL synthesis from doc_id, then the exact
-    * canonicalization regex chain (same RE2 patterns, DuckDB needs the
-    * explicit 'g' flag where Spark replaces globally), host/registrable-
-    * domain extraction and path depth. Ends with a `norm` CTE of
-    * (doc_id, url_canon, host, domain, depth).
-    */
-  private val urlNormOracleCtes: String = """
-      WITH raw AS (
-        SELECT doc_id,
-          (CASE doc_id % 4 WHEN 0 THEN 'HTTP' WHEN 1 THEN 'http'
-                WHEN 2 THEN 'https' ELSE 'HTTPS' END) || '://' ||
-          (CASE doc_id % 6 WHEN 0 THEN 'News.Example.COM'
-                WHEN 1 THEN 'blog.sample.co.uk'
-                WHEN 2 THEN 'www.shop.example.com'
-                WHEN 3 THEN 'archive.example.org'
-                WHEN 4 THEN 'a.b.example.com.au'
-                ELSE 'Cdn.Assets.sample.net' END) ||
-          (CASE WHEN doc_id % 5 = 0 THEN
-                (CASE WHEN doc_id % 4 >= 2 THEN ':443' ELSE ':80' END)
-                ELSE '' END) ||
-          '/Articles/item' || CAST(doc_id AS VARCHAR) ||
-          (CASE doc_id % 4
-             WHEN 0 THEN '?utm_source=feed&id=' ||
-                         CAST(doc_id AS VARCHAR) || '&utm_campaign=x'
-             WHEN 1 THEN '?id=' || CAST(doc_id AS VARCHAR) ||
-                         '&fbclid=ZZtrack'
-             WHEN 2 THEN '?gclid=abc123' ELSE '' END) ||
-          (CASE WHEN doc_id % 3 = 0 THEN '#section2' ELSE '' END) AS url
-        FROM documents),
-      pre AS (
-        SELECT doc_id,
-          lower(regexp_extract(url, '^[A-Za-z]+://[^/?#]+', 0)) AS p0,
-          regexp_replace(url, '^[A-Za-z]+://[^/?#]+', '') AS r0
-        FROM raw),
-      canon AS (
-        SELECT doc_id,
-          regexp_replace(
-            CASE WHEN p0 LIKE 'http://%'
-                   THEN regexp_replace(p0, ':80$', '')
-                 WHEN p0 LIKE 'https://%'
-                   THEN regexp_replace(p0, ':443$', '')
-                 ELSE p0 END,
-            '://www\.', '://') ||
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(
-                regexp_replace(
-                  regexp_replace(r0, '#.*$', ''),
-                  '&(utm_[a-z]+|fbclid|gclid|ref)=[^&]*', '', 'g'),
-                '\?(utm_[a-z]+|fbclid|gclid|ref)=[^&]*&', '?', 'g'),
-              '\?(utm_[a-z]+|fbclid|gclid|ref)=[^&]*$', ''),
-            '\?$', '') AS url_canon
-        FROM pre),
-      parts AS (
-        SELECT doc_id, url_canon,
-          regexp_extract(url_canon, '^[a-z]+://([^/:?#]+)', 1) AS host,
-          regexp_extract(url_canon,
-                         '^[a-z]+://[^/?#]+([^?#]*)', 1) AS path
-        FROM canon),
-      norm AS (
-        SELECT doc_id, url_canon, host,
-          regexp_extract(host,
-            '([^.]+\.(co\.uk|org\.uk|ac\.uk|com\.au|net\.au|org\.au|co\.jp|co\.nz|com\.br|co\.in|co\.za|com\.sg|com\.mx|com\.cn|com\.tr|[^.]+))$',
-            1) AS domain,
-          len(regexp_extract_all(path, '/[^/]+')) AS depth
-        FROM parts)"""
-
-  /** Unrolled k-core peel over the synthetic link graph plus the planted
-    * circulant block: `rounds` fixed rounds of "drop nodes with degree
-    * < k", exactly the Spark loop's recurrence (rounds past convergence
-    * are no-ops on both sides). Every chained CTE is MATERIALIZED —
-    * DuckDB inlines single-reference CTEs by default, and u_{i-1}
-    * appears three times per round, so the un-hinted plan re-expands the
-    * whole chain exponentially (measured: 5 rounds un-hinted times out
-    * where materialized runs in 30 ms). */
-  private def kCoreOracleSql(k: Int, rounds: Int): String = {
-    val peel = (1 to rounds).map { i =>
-      s""",
-      d$i AS MATERIALIZED (SELECT v, count(*) AS d FROM (
-          SELECT a AS v FROM u${i - 1}
-          UNION ALL SELECT b AS v FROM u${i - 1}) GROUP BY 1),
-      al$i AS MATERIALIZED (SELECT v FROM d$i WHERE d >= $k),
-      u$i AS MATERIALIZED (SELECT u.a, u.b FROM u${i - 1} u
-        JOIN al$i x ON u.a = x.v
-        JOIN al$i y ON u.b = y.v)"""
-    }.mkString
-    s"""
-      WITH nodes AS (SELECT doc_id AS id FROM documents),
-      nn AS (SELECT count(*) AS n FROM nodes),
-      base AS (
-        SELECT id AS src, (id * 17 + c.c) % nn.n AS dst
-        FROM nodes CROSS JOIN nn
-        CROSS JOIN (SELECT unnest([1, 2, 3]) AS c) c),
-      blk AS (
-        SELECT id AS src, (id + 10 * c.c) % nn.n AS dst
-        FROM nodes CROSS JOIN nn
-        CROSS JOIN (SELECT unnest([1, 2, 3, 4, 5]) AS c) c
-        WHERE id % 10 = 0),
-      u0 AS MATERIALIZED (
-        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM (SELECT * FROM base UNION ALL SELECT * FROM blk)
-        WHERE src <> dst)""" + peel + s"""
-      SELECT id, core_deg FROM (
-        SELECT v AS id, count(*) AS core_deg FROM (
-          SELECT a AS v FROM u$rounds
-          UNION ALL SELECT b AS v FROM u$rounds) GROUP BY 1)
-      WHERE core_deg >= $k ORDER BY id"""
-  }
+  val oracleSql: Map[String, String] =
+    declared.map { case (n, q) => n -> q.oracleSql }
 
   /** Build/probe phase split for the queries that bundle a ONE-TIME
     * persisted-index build with the recurring probe — the SINGLE source
@@ -6072,5577 +57,7 @@ object SparkEntry {
     * overstates steady state 3-5×. Each call returns fresh
     * (build, probe) thunks sharing one index location.
     */
-  def benchPhases: Map[String, (SparkSession, String) =>
-      (() => Unit, () => DataFrame)] = Map(
-    // Recall gates + dedup-candidate eval: the exact all-pairs TRUTH arm
-    // (3-gram Jaccard / brute Hamming / exact cosine — gate machinery
-    // explicitly reserved for gate scale, never the production path)
-    // builds apart from the timed probe, so the headline number prices
-    // the PRODUCTION face: candidate generation + the set compare
-    // against the materialized truth. localCheckpoint pins the truth so
-    // the probe can't lazily recompute it inside the timed region.
-    "q_dedup_eval" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      var truth: DataFrame = null
-      (() => truth = Dedup.ngramJaccardPairs(docs, threshold = 0.5, n = 3)
-         .localCheckpoint(),
-       () => graft.operators.RankMetrics.pairSetMetrics(
-         Dedup.minhashLshPairsFixed(docs, threshold = 0.5), truth))
-    }),
-    "q_dedup_minhash_recall" -> ((s, d) => {
-      import s.implicits._
-      val docs = t(s, d, "documents")
-      var truth: DataFrame = null
-      (() => truth = Dedup.ngramJaccardPairs(docs, threshold = 0.5, n = 3)
-         .select("a_id", "b_id").localCheckpoint(),
-       () => {
-         val nTruth = pairRecallPpm(
-           Dedup.minhashLshPairs(docs, threshold = 0.5), truth,
-           floorPpm = 900000L, what = "minhash-lsh vs exact 3-gram jaccard")
-         Seq((nTruth, 900000L, 1L)).toDF("n_truth", "floor_ppm", "floor_met")
-       })
-    }),
-    "q_dedup_simhash_recall" -> ((s, d) => {
-      import s.implicits._
-      val docs = t(s, d, "documents")
-      var truth: DataFrame = null
-      // truth = brute-force Hamming over the SAME xxhash64 fingerprints;
-      // the Manku banding is pigeonhole-complete, so the floor is 100% —
-      // this checks the guarantee itself on real data at gate scale
-      // (n_truth is hash-internal → not oracle-expressible, not emitted)
-      (() => truth = Dedup.simhashPairsBrute(docs, maxHamming = 8)
-         .select("a_id", "b_id").localCheckpoint(),
-       () => {
-         pairRecallPpm(Dedup.simhashPairs(docs, maxHamming = 8), truth,
-           floorPpm = 1000000L, what = "simhash banding vs brute-force")
-         Seq((1000000L, 1L)).toDF("floor_ppm", "floor_met")
-       })
-    }),
-    "q_dedup_semantic_recall" -> ((s, d) => {
-      import s.implicits._
-      val embs = t(s, d, "embeddings")
-      var truth: DataFrame = null
-      (() => truth = Dedup.embeddingNearDupPairs(embs, threshold = 0.3,
-         exact = true).select("a_id", "b_id").localCheckpoint(),
-       () => {
-         val nTruth = pairRecallPpm(
-           Dedup.semanticDupPairs(embs, threshold = 0.3,
-             k = 4, kmeansIters = 2, nProbe = 2), truth,
-           floorPpm = 850000L, what = "semdedup vs exact cosine pairs")
-         Seq((nTruth, 850000L, 1L)).toDF("n_truth", "floor_ppm", "floor_met")
-       })
-    }),
-    "q_dedup_minhash_index" -> ((s, d) => {
-      import graft.lake.LakeLog
-      import graft.operators.DedupIndex
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftlsh"))
-      val docs = t(s, d, "documents")
-      (() => DedupIndex.buildIndex(s, log, "lsh",
-         docs.filter(col("doc_id") % 3 =!= 0)),
-       () => DedupIndex.probeIndex(s, log, "lsh",
-           docs.filter(col("doc_id") % 3 === 0), threshold = 0.5)
-         .orderBy("new_id", "hist_id"))
-    }),
-    // Candidate-pair generation (bucketed LSH) builds apart from the
-    // timed probe (CC fixpoint + anti-join + aggregate) — same pricing
-    // split as q_dedup_eval; the build's rep times land in the builds
-    // sidecar, so a host-mode spike in pair generation is attributable
-    // instead of inflating the headline.
-    "q_dedup_cc_minhash" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      var pairs: DataFrame = null
-      (() => pairs = Dedup.minhashLshPairsFixed(docs, threshold = 0.5)
-         .select("a_id", "b_id").localCheckpoint(),
-       () => {
-         val dropped = Dedup.connectedComponents(pairs)
-           .filter(col("component") =!= col("id"))
-           .select(col("id").as("doc_id"))
-         docs.join(dropped, Seq("doc_id"), "left_anti")
-           .groupBy("source")
-           .agg(count(lit(1)).as("n_kept"),
-             sum(octet_length(col("text"))).as("kept_chars"))
-           .orderBy("source")
-       })
-    }),
-    "q_search_index" -> ((s, d) => {
-      import graft.lake.LakeLog
-      import graft.operators.InvertedIndex
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftidx"))
-      (() => InvertedIndex.buildIndex(s, log, "idx", t(s, d, "documents"),
-         numFiles = 8),
-       () => InvertedIndex.searchIndex(s, log, "idx",
-           Seq("spark", "window", "hash"))
-         .orderBy("doc_id"))
-    }),
-    "q_search_phrase" -> ((s, d) => {
-      import graft.lake.LakeLog
-      import graft.operators.InvertedIndex
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftph"))
-      (() => InvertedIndex.buildPhraseIndex(s, log, "ph",
-         t(s, d, "documents"), numFiles = 8),
-       () => InvertedIndex.phraseSearchIndex(s, log, "ph",
-           Seq("table", "scan"))
-         .orderBy("doc_id"))
-    }),
-    "q_search_near" -> ((s, d) => {
-      import graft.lake.LakeLog
-      import graft.operators.InvertedIndex
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftnr"))
-      (() => InvertedIndex.buildPhraseIndex(s, log, "nr",
-         t(s, d, "documents"), numFiles = 8),
-       () => InvertedIndex.proximitySearchIndex(s, log, "nr",
-           "sort", "merge", window = 3)
-         .orderBy("doc_id"))
-    }),
-    "q_join_bucketed" -> ((s, d) => {
-      import graft.operators.Bucketing
-      val dir = java.nio.file.Files.createTempDirectory("graftbkt")
-      val li = t(s, d, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice")
-      val ord = t(s, d, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"))
-      (() => {
-         Bucketing.writeBucketed(s, li, "graft_bkt_li", "l_orderkey", 8,
-           Some(dir.resolve("li").toString))
-         Bucketing.writeBucketed(s, ord, "graft_bkt_ord", "l_orderkey", 8,
-           Some(dir.resolve("ord").toString))
-         ()
-       },
-       () => {
-         val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-         try {
-           s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-           val joined = Bucketing.bucketedJoin(s, "graft_bkt_li",
-               "graft_bkt_ord", "l_orderkey")
-             .groupBy("l_orderkey", "o_custkey")
-             .agg(count(lit(1)).as("n_items"),
-               round(sum("l_extendedprice"), 2).as("sum_price"))
-           require(Bucketing.hashExchanges(joined) == 0,
-             "co-bucketed join planned a hash exchange")
-           // the top-N sort is a range exchange over ALREADY-AGGREGATED
-           // rows
-           joined.orderBy(col("sum_price").desc, col("l_orderkey"))
-             .limit(10)
-             .select(col("l_orderkey").as("o_orderkey"), col("o_custkey"),
-               col("n_items"), col("sum_price"))
-         } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-       })
-    }),
-    "q_scd2_fact_join" -> ((s, d) => {
-      import graft.lake.{LakeLog, Scd}
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftsj"))
-      val base = t(s, d, "customer").select(
-        col("c_custkey").as("key"), col("c_mktsegment").as("seg"))
-      (() => {
-         Scd.create(log, "dim", base.schema)
-         Scd.applyBatch(s, log, "dim", base, "key", Seq("seg"), 0L, "b0")
-         Scd.applyBatch(s, log, "dim",
-           base.filter(col("key") % 4 === 0)
-             .select(col("key"), lit("MOVED").as("seg")),
-           "key", Seq("seg"), 1L, "b1")
-         ()
-       },
-       () => {
-         val facts = t(s, d, "orders").select(
-           col("o_custkey").as("custkey"),
-           (col("o_orderkey") % 2).as("t_fact"),
-           col("o_totalprice"))
-         Scd.joinAsOf(facts, graft.lake.LakeTable.read(s, log, "dim"),
-             "key", "custkey", "t_fact")
-           .groupBy(col("t_fact"), col("seg"))
-           .agg(count(lit(1)).as("n_orders"),
-             round(sum("o_totalprice"), 2).as("sum_price"))
-           .orderBy("t_fact", "seg")
-       })
-    }),
-    "q_search_bm25_indexed" -> ((s, d) => {
-      import graft.lake.LakeLog
-      import graft.operators.InvertedIndex
-      val log = new LakeLog(java.nio.file.Files.createTempDirectory("graftbm"))
-      (() => InvertedIndex.buildBm25Index(s, log, "bm",
-         t(s, d, "documents"), numFiles = 8),
-       () => InvertedIndex.bm25SearchIndex(s, log, "bm",
-           Seq("spark", "window", "hash"))
-         .withColumn("score", round(col("score"), 6))
-         .orderBy(col("score").desc, col("doc_id").asc)
-         .limit(20))
-    }),
-    "q_ann_ivf" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val dir = java.nio.file.Files.createTempDirectory("graftivf").toString
-      (() => Similarity.writeIvfIndex(emb, dir, nCentroids = 8,
-         coarse = graft.operators.Pq.hadamardCentroids(64, 8)),
-       () => Similarity.ivfTopKIndexed(s, dir, q, k = 5, nProbe = 2)
-         .withColumn("cos", round(col("cos"), 6))
-         .orderBy("query_id", "rank"))
-    }),
-    "q_ann_ivfpq" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val dir = java.nio.file.Files.createTempDirectory("graftivfpq").toString
-      (() => graft.operators.Pq.writeIvfPqIndex(emb, dir, nLists = 8,
-         coarse = graft.operators.Pq.hadamardCentroids(64, 8)),
-       () => graft.operators.Pq.ivfPqTopK(s, dir, q, k = 5, nProbe = 2)
-         .withColumn("adc", round(col("adc"), 6))
-         .orderBy("query_id", "rank"))
-    }))
-
-  /** DuckDB-runnable oracle for each hash-checkable query. Column aliases and
-    * ORDER BY match the Spark side exactly (driver sorts columns by name then
-    * hashes values). Queries without an entry get a rows-only check (their
-    * results depend on Spark-internal hashes like xxhash64, or on ANN
-    * approximation — those are property-tested in ScalaTest instead).
-    */
-  /** The q_bpe oracle's encoder: the frozen merge table applied in rank
-    * order as nested left-to-right replace()s over boundary-wrapped
-    * symbols ("~a~~b~" → "~ab~"; '~' never occurs in corpus tokens, and
-    * the wrapping makes matches symbol-exact). Generated by a fold so the
-    * SQL stays in lockstep with [[graft.operators.Bpe.frozenMerges]]. */
-  private val bpeReplayExpr: String =
-    graft.operators.Bpe.frozenMerges.foldLeft("wrapped") {
-      case (e, (a, b)) => s"replace($e, '~$a~~$b~', '~$a$b~')"
-    }
-
-  def oracleSql: Map[String, String] = Map(
-    "q_source_cap" -> """
-      SELECT source, doc_id, n_chars, rank_in_group FROM (
-        SELECT source, doc_id, n_chars,
-               row_number() OVER (PARTITION BY source
-                 ORDER BY n_chars DESC, doc_id ASC) AS rank_in_group
-        FROM documents)
-      WHERE rank_in_group <= 5
-      ORDER BY source, rank_in_group""",
-
-    "q_pagerank" -> pageRankOracleSql(5),
-
-    "q_trustrank" -> pageRankOracleSql(5, id => s"$id % 10 = 0"),
-
-    "q_hits" -> hitsOracleSql(3, 1000000000L),
-
-    "q_bfs_depth" -> """
-      WITH nodes AS (SELECT doc_id AS id FROM documents),
-      nn AS (SELECT count(*) AS n FROM nodes),
-      edges AS MATERIALIZED (
-        SELECT id AS src, (id * 17 + c.c) % nn.n AS dst
-        FROM nodes CROSS JOIN nn
-        CROSS JOIN (SELECT unnest([1, 2, 3]) AS c) c),
-      c0 AS MATERIALIZED (
-        SELECT id, CAST(0 AS BIGINT) AS depth FROM nodes
-        WHERE id % 97 = 0),
-      r1 AS MATERIALIZED (
-        SELECT DISTINCT e.dst AS id FROM edges e
-        JOIN c0 f ON e.src = f.id WHERE f.depth = 0),
-      d1 AS MATERIALIZED (
-        SELECT id, CAST(1 AS BIGINT) AS depth FROM r1
-        WHERE id NOT IN (SELECT id FROM c0)),
-      c1 AS MATERIALIZED (
-        SELECT * FROM c0 UNION ALL SELECT * FROM d1),
-      r2 AS MATERIALIZED (
-        SELECT DISTINCT e.dst AS id FROM edges e
-        JOIN d1 f ON e.src = f.id),
-      d2 AS MATERIALIZED (
-        SELECT id, CAST(2 AS BIGINT) AS depth FROM r2
-        WHERE id NOT IN (SELECT id FROM c1)),
-      c2 AS MATERIALIZED (
-        SELECT * FROM c1 UNION ALL SELECT * FROM d2),
-      r3 AS MATERIALIZED (
-        SELECT DISTINCT e.dst AS id FROM edges e
-        JOIN d2 f ON e.src = f.id),
-      d3 AS MATERIALIZED (
-        SELECT id, CAST(3 AS BIGINT) AS depth FROM r3
-        WHERE id NOT IN (SELECT id FROM c2)),
-      c3 AS (SELECT * FROM c2 UNION ALL SELECT * FROM d3)
-      SELECT id, depth FROM c3 ORDER BY depth, id""",
-
-    // SSSP replayed exactly: identical synthetic edges, identical md5
-    // weights, 6 unrolled Bellman-Ford rounds with the same explicit
-    // CASE merge.
-    "q_sssp" -> """
-      WITH nodes AS (SELECT doc_id AS id FROM documents),
-      nn AS (SELECT count(*) AS n FROM nodes),
-      e AS MATERIALIZED (
-        SELECT src, dst,
-               CAST(('0x' || substring(md5('w:' || CAST(src AS VARCHAR)
-                 || ':' || CAST(dst AS VARCHAR)), 1, 15)) AS BIGINT)
-                 % 9 + 1 AS w
-        FROM (SELECT id AS src, (id * 17 + c.c) % nn.n AS dst
-              FROM nodes CROSS JOIN nn
-              CROSS JOIN (SELECT unnest([1, 2, 3]) AS c) c) t),
-      d0 AS MATERIALIZED (
-        SELECT CAST(0 AS BIGINT) AS id, CAST(0 AS BIGINT) AS dist)
-      ,r1 AS MATERIALIZED (
-        SELECT e.dst AS id, min(d.dist + e.w) AS nd
-        FROM d0 d JOIN e ON e.src = d.id GROUP BY 1),
-      d1 AS MATERIALIZED (
-        SELECT COALESCE(d.id, r.id) AS id,
-               CASE WHEN d.dist IS NULL THEN r.nd
-                    WHEN r.nd IS NULL THEN d.dist
-                    WHEN r.nd < d.dist THEN r.nd
-                    ELSE d.dist END AS dist
-        FROM d0 d FULL OUTER JOIN r1 r ON r.id = d.id)
-      ,r2 AS MATERIALIZED (
-        SELECT e.dst AS id, min(d.dist + e.w) AS nd
-        FROM d1 d JOIN e ON e.src = d.id GROUP BY 1),
-      d2 AS MATERIALIZED (
-        SELECT COALESCE(d.id, r.id) AS id,
-               CASE WHEN d.dist IS NULL THEN r.nd
-                    WHEN r.nd IS NULL THEN d.dist
-                    WHEN r.nd < d.dist THEN r.nd
-                    ELSE d.dist END AS dist
-        FROM d1 d FULL OUTER JOIN r2 r ON r.id = d.id)
-      ,r3 AS MATERIALIZED (
-        SELECT e.dst AS id, min(d.dist + e.w) AS nd
-        FROM d2 d JOIN e ON e.src = d.id GROUP BY 1),
-      d3 AS MATERIALIZED (
-        SELECT COALESCE(d.id, r.id) AS id,
-               CASE WHEN d.dist IS NULL THEN r.nd
-                    WHEN r.nd IS NULL THEN d.dist
-                    WHEN r.nd < d.dist THEN r.nd
-                    ELSE d.dist END AS dist
-        FROM d2 d FULL OUTER JOIN r3 r ON r.id = d.id)
-      ,r4 AS MATERIALIZED (
-        SELECT e.dst AS id, min(d.dist + e.w) AS nd
-        FROM d3 d JOIN e ON e.src = d.id GROUP BY 1),
-      d4 AS MATERIALIZED (
-        SELECT COALESCE(d.id, r.id) AS id,
-               CASE WHEN d.dist IS NULL THEN r.nd
-                    WHEN r.nd IS NULL THEN d.dist
-                    WHEN r.nd < d.dist THEN r.nd
-                    ELSE d.dist END AS dist
-        FROM d3 d FULL OUTER JOIN r4 r ON r.id = d.id)
-      ,r5 AS MATERIALIZED (
-        SELECT e.dst AS id, min(d.dist + e.w) AS nd
-        FROM d4 d JOIN e ON e.src = d.id GROUP BY 1),
-      d5 AS MATERIALIZED (
-        SELECT COALESCE(d.id, r.id) AS id,
-               CASE WHEN d.dist IS NULL THEN r.nd
-                    WHEN r.nd IS NULL THEN d.dist
-                    WHEN r.nd < d.dist THEN r.nd
-                    ELSE d.dist END AS dist
-        FROM d4 d FULL OUTER JOIN r5 r ON r.id = d.id)
-      ,r6 AS MATERIALIZED (
-        SELECT e.dst AS id, min(d.dist + e.w) AS nd
-        FROM d5 d JOIN e ON e.src = d.id GROUP BY 1),
-      d6 AS MATERIALIZED (
-        SELECT COALESCE(d.id, r.id) AS id,
-               CASE WHEN d.dist IS NULL THEN r.nd
-                    WHEN r.nd IS NULL THEN d.dist
-                    WHEN r.nd < d.dist THEN r.nd
-                    ELSE d.dist END AS dist
-        FROM d5 d FULL OUTER JOIN r6 r ON r.id = d.id)
-      SELECT id, dist FROM d6 ORDER BY id""",
-
-    // Quantile normalization replayed exactly: histogram counts, the
-    // per-source cumulative CDF over aggregated (source, score) rows,
-    // the ppm floor and the join back to documents.
-    "q_score_qnorm" -> """
-      WITH sc AS (SELECT doc_id, source, n_chars FROM documents),
-      agg AS (SELECT source, n_chars, count(*) AS c FROM sc GROUP BY 1, 2),
-      cum AS (SELECT source, n_chars,
-                     sum(c) OVER (PARTITION BY source ORDER BY n_chars)
-                       AS cle
-              FROM agg),
-      ns AS (SELECT source, count(*) AS n FROM sc GROUP BY 1)
-      SELECT s.doc_id, s.source, s.n_chars,
-             CAST(c.cle * 1000000 // ns.n AS BIGINT) AS q_ppm
-      FROM sc s
-      JOIN cum c ON c.source = s.source AND c.n_chars = s.n_chars
-      JOIN ns ON ns.source = s.source
-      ORDER BY s.doc_id""",
-
-    // Contrastive pairs replayed exactly: same tokenizer, floor-half
-    // list slices, md5 batch assignment, batch-size negatives.
-    "q_contrastive" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), x -> x <> '')
-                 AS ws
-        FROM documents),
-      sp AS (
-        SELECT doc_id, len(ws) AS n, len(ws) // 2 AS half, ws
-        FROM toks WHERE len(ws) >= 8),
-      pairs AS (
-        SELECT doc_id,
-               CAST(('0x' || substring(md5('b:' ||
-                 CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 16
-                 AS batch_id,
-               array_to_string(list_slice(ws, 1, half), ' ') AS anchor,
-               array_to_string(list_slice(ws, half + 1, n), ' ')
-                 AS positive
-        FROM sp),
-      bs AS (SELECT batch_id, count(*) AS c FROM pairs GROUP BY 1)
-      SELECT p.doc_id, p.batch_id, p.anchor, p.positive,
-             CAST(bs.c - 1 AS BIGINT) AS n_negatives
-      FROM pairs p JOIN bs ON bs.batch_id = p.batch_id
-      ORDER BY p.doc_id""",
-
-
-    "q_communities" -> labelPropOracleSql(4, 50, 2),
-
-    "q_cluster_dbscan" -> dbscanOracleSql(60L, 4, 5),
-
-    // K-means replayed exactly: quantization, 3 unrolled Lloyd rounds
-    // (distances, min-dist + min-cid assignment, floor-division centroid
-    // updates with empty-cluster carryover), final sizes/inertia/
-    // centroid checksums. MATERIALIZED throughout — a1/s1/c1 are each
-    // referenced twice and un-hinted CTEs re-expand exponentially.
-    "q_cluster_kmeans" -> """
-      WITH pts AS MATERIALIZED (
-        SELECT vec_id,
-               list_transform(embedding, e ->
-                 CAST(floor(CAST(e AS DOUBLE) * 1000) AS BIGINT) + 4000)
-                 AS q
-        FROM embeddings),
-      c0 AS MATERIALIZED (
-        SELECT CAST(vec_id AS INTEGER) AS cid, q AS c
-        FROM pts WHERE vec_id < 8),
-      d1 AS MATERIALIZED (
-        SELECT p.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65), j ->
-                 (p.q[j] - c.c[j]) * (p.q[j] - c.c[j]))) AS dist
-        FROM pts p CROSS JOIN c0 c),
-      m1 AS MATERIALIZED (
-        SELECT vec_id, min(dist) AS bd FROM d1 GROUP BY 1),
-      a1 AS MATERIALIZED (
-        SELECT d.vec_id, min(d.cid) AS cid, m.bd AS dist
-        FROM d1 d JOIN m1 m ON m.vec_id = d.vec_id AND d.dist = m.bd
-        GROUP BY d.vec_id, m.bd),
-      s1 AS MATERIALIZED (
-        SELECT a.cid, j,
-               CAST(sum(p.q[j]) AS BIGINT) // count(*) AS cv
-        FROM a1 a JOIN pts p ON p.vec_id = a.vec_id
-        CROSS JOIN unnest(range(1, 65)) t(j)
-        GROUP BY 1, 2),
-      c1 AS MATERIALIZED (
-        SELECT cid, list(cv ORDER BY j) AS c FROM s1 GROUP BY 1
-        UNION ALL
-        SELECT c0.cid, c0.c FROM c0
-        WHERE c0.cid NOT IN (SELECT cid FROM s1)),
-      d2 AS MATERIALIZED (
-        SELECT p.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65), j ->
-                 (p.q[j] - c.c[j]) * (p.q[j] - c.c[j]))) AS dist
-        FROM pts p CROSS JOIN c1 c),
-      m2 AS MATERIALIZED (
-        SELECT vec_id, min(dist) AS bd FROM d2 GROUP BY 1),
-      a2 AS MATERIALIZED (
-        SELECT d.vec_id, min(d.cid) AS cid, m.bd AS dist
-        FROM d2 d JOIN m2 m ON m.vec_id = d.vec_id AND d.dist = m.bd
-        GROUP BY d.vec_id, m.bd),
-      s2 AS MATERIALIZED (
-        SELECT a.cid, j,
-               CAST(sum(p.q[j]) AS BIGINT) // count(*) AS cv
-        FROM a2 a JOIN pts p ON p.vec_id = a.vec_id
-        CROSS JOIN unnest(range(1, 65)) t(j)
-        GROUP BY 1, 2),
-      c2 AS MATERIALIZED (
-        SELECT cid, list(cv ORDER BY j) AS c FROM s2 GROUP BY 1
-        UNION ALL
-        SELECT c1.cid, c1.c FROM c1
-        WHERE c1.cid NOT IN (SELECT cid FROM s2)),
-      d3 AS MATERIALIZED (
-        SELECT p.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65), j ->
-                 (p.q[j] - c.c[j]) * (p.q[j] - c.c[j]))) AS dist
-        FROM pts p CROSS JOIN c2 c),
-      m3 AS MATERIALIZED (
-        SELECT vec_id, min(dist) AS bd FROM d3 GROUP BY 1),
-      a3 AS MATERIALIZED (
-        SELECT d.vec_id, min(d.cid) AS cid, m.bd AS dist
-        FROM d3 d JOIN m3 m ON m.vec_id = d.vec_id AND d.dist = m.bd
-        GROUP BY d.vec_id, m.bd),
-      s3 AS MATERIALIZED (
-        SELECT a.cid, j,
-               CAST(sum(p.q[j]) AS BIGINT) // count(*) AS cv
-        FROM a3 a JOIN pts p ON p.vec_id = a.vec_id
-        CROSS JOIN unnest(range(1, 65)) t(j)
-        GROUP BY 1, 2),
-      c3 AS MATERIALIZED (
-        SELECT cid, list(cv ORDER BY j) AS c FROM s3 GROUP BY 1
-        UNION ALL
-        SELECT c2.cid, c2.c FROM c2
-        WHERE c2.cid NOT IN (SELECT cid FROM s3)),
-      res AS MATERIALIZED (
-        SELECT cid, count(*) AS n, CAST(sum(dist) AS BIGINT) AS inertia
-        FROM a3 GROUP BY 1)
-      SELECT c.cid, COALESCE(r.n, 0) AS n,
-             COALESCE(r.inertia, 0) AS inertia,
-             CAST(list_sum(c.c) AS BIGINT) AS centroid_sum
-      FROM c3 c LEFT JOIN res r ON r.cid = c.cid
-      ORDER BY c.cid""",
-
-    // Containment replayed exactly: same quoted-page synthesis (left
-    // join against the source doc, 20-word slice), filtered tokens,
-    // distinct 3-grams, df ≤ 50 stop-gram gate, pair counts and the
-    // integer ppm floor.
-    "q_dedup_containment" -> """
-      WITH nn AS (SELECT count(*) AS n FROM documents),
-      pages AS (
-        SELECT d.doc_id,
-          CASE WHEN d.doc_id % 5 = 0
-            THEN d.text || ' ' || array_to_string(list_slice(
-                   list_filter(string_split_regex(s.text, '\s+'),
-                     x -> x <> ''), 1, 20), ' ')
-            ELSE d.text END AS page
-        FROM documents d CROSS JOIN nn
-        LEFT JOIN documents s
-          ON d.doc_id % 5 = 0 AND s.doc_id = (d.doc_id + 13) % nn.n),
-      toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(page, '\s+'), x -> x <> '')
-                 AS ws
-        FROM pages),
-      grams AS (
-        SELECT DISTINCT doc_id,
-               ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
-        FROM toks, unnest(range(1, len(ws) - 1)) t(i)),
-      rare AS (
-        SELECT g FROM (SELECT g, count(*) AS c FROM grams GROUP BY 1)
-        WHERE c <= 50),
-      fg AS (SELECT gr.doc_id, gr.g FROM grams gr JOIN rare ON rare.g = gr.g),
-      sz AS (SELECT doc_id, count(*) AS na FROM fg GROUP BY 1),
-      shared AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared
-        FROM fg a JOIN fg b ON a.g = b.g AND a.doc_id <> b.doc_id
-        GROUP BY 1, 2)
-      SELECT s.a_id, s.b_id, CAST(s.shared AS BIGINT) AS shared,
-             CAST(z.na AS BIGINT) AS n_grams,
-             CAST(s.shared * 1000000 // z.na AS BIGINT) AS c_ppm
-      FROM shared s JOIN sz z ON z.doc_id = s.a_id
-      WHERE CAST(s.shared * 1000000 // z.na AS BIGINT) >= 300000
-      ORDER BY a_id, b_id""",
-
-    // Winnowing replayed exactly: the containment quoted-page synthesis,
-    // 3-gram 60-bit md5 hashes in token order, then the stateless
-    // selection rule — position j is kept iff for SOME split a+b = w-1
-    // the a hashes left are all >= h and the b hashes right are all > h
-    // (rightmost-minimum of some full window; NULL comparisons fail the
-    // conjunction, enforcing fully-inside-document windows exactly like
-    // the Spark isNotNull guards) — then df gate, pair counts, ppm.
-    "q_dedup_winnow" -> """
-      WITH nn AS (SELECT count(*) AS n FROM documents),
-      pages AS (
-        SELECT d.doc_id,
-          CASE WHEN d.doc_id % 5 = 0
-            THEN d.text || ' ' || array_to_string(list_slice(
-                   list_filter(string_split_regex(s.text, '\s+'),
-                     x -> x <> ''), 1, 20), ' ')
-            ELSE d.text END AS page
-        FROM documents d CROSS JOIN nn
-        LEFT JOIN documents s
-          ON d.doc_id % 5 = 0 AND s.doc_id = (d.doc_id + 13) % nn.n),
-      toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(page, '\s+'), x -> x <> '')
-                 AS ws
-        FROM pages),
-      grams AS (
-        SELECT doc_id, i,
-               CAST(('0x' || substring(md5('wf:' ||
-                 ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]), 1, 15))
-                 AS BIGINT) AS h
-        FROM toks, unnest(range(1, len(ws) - 1)) t(i)),
-      lagged AS (
-        SELECT doc_id, h,
-               lag(h, 1)  OVER w AS l1, lag(h, 2)  OVER w AS l2,
-               lag(h, 3)  OVER w AS l3,
-               lead(h, 1) OVER w AS r1, lead(h, 2) OVER w AS r2,
-               lead(h, 3) OVER w AS r3
-        FROM grams WINDOW w AS (PARTITION BY doc_id ORDER BY i)),
-      fp AS (
-        SELECT DISTINCT doc_id, h FROM lagged
-        WHERE (r1 > h AND r2 > h AND r3 > h)
-           OR (l1 >= h AND r1 > h AND r2 > h)
-           OR (l1 >= h AND l2 >= h AND r1 > h)
-           OR (l1 >= h AND l2 >= h AND l3 >= h)),
-      rare AS (
-        SELECT h FROM (SELECT h, count(*) AS c FROM fp GROUP BY 1)
-        WHERE c <= 50),
-      fg AS (SELECT f.doc_id, f.h FROM fp f JOIN rare ON rare.h = f.h),
-      sz AS (SELECT doc_id, count(*) AS nfp FROM fg GROUP BY 1),
-      shared AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared
-        FROM fg a JOIN fg b ON a.h = b.h AND a.doc_id <> b.doc_id
-        GROUP BY 1, 2)
-      SELECT s.a_id, s.b_id, CAST(s.shared AS BIGINT) AS shared,
-             CAST(z.nfp AS BIGINT) AS nfp,
-             CAST(s.shared * 1000000 // z.nfp AS BIGINT) AS cov_ppm
-      FROM shared s JOIN sz z ON z.doc_id = s.a_id
-      WHERE s.shared >= 2
-      ORDER BY a_id, b_id""",
-
-    // SFT transcript assembly replayed exactly: q_sessions'
-    // sessionization CTEs, the role CASE, IS-DISTINCT-FROM turn starts,
-    // running turn ids, then two ordered string_agg levels (turn text by
-    // (ts, event_id), transcript by turn_id).
-    "q_dialog_sft" -> """
-      WITH lagged AS (
-        SELECT user_id, event_id, ts, event_type, props,
-               lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                 AS prev_ts
-        FROM events),
-      numbered AS (
-        SELECT user_id, event_id, ts, event_type, props,
-               CAST(sum(CASE WHEN prev_ts IS NULL
-                         OR epoch(ts) - epoch(prev_ts) > 1800
-                    THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS session_id
-        FROM lagged),
-      roled AS (
-        SELECT *, CASE WHEN event_type IN ('click', 'view')
-                       THEN 'user' ELSE 'assistant' END AS role
-        FROM numbered),
-      starts AS (
-        SELECT *, CASE WHEN lag(role) OVER (
-                 PARTITION BY user_id, session_id ORDER BY ts, event_id)
-               IS DISTINCT FROM role THEN 1 ELSE 0 END AS st
-        FROM roled),
-      turns AS (
-        SELECT *, CAST(sum(st) OVER (PARTITION BY user_id, session_id
-                 ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS turn_id
-        FROM starts),
-      turntext AS (
-        SELECT user_id, session_id, turn_id, role,
-               count(*) AS ne,
-               string_agg(event_type || ' ' || props, '; '
-                          ORDER BY ts, event_id) AS txt
-        FROM turns GROUP BY user_id, session_id, turn_id, role)
-      SELECT user_id, session_id,
-             CAST(count(*) AS BIGINT) AS n_turns,
-             CAST(sum(ne) AS BIGINT) AS n_events,
-             string_agg('<|' || role || '|> ' || txt, chr(10)
-                        ORDER BY turn_id) AS transcript
-      FROM turntext GROUP BY user_id, session_id
-      ORDER BY user_id, session_id""",
-
-    // Boilerplate removal replayed exactly: rebuild the same synthesized
-    // pages (concat_ws skips the NULL promo on non-%3 docs in both
-    // engines), split to lines, df = count(DISTINCT doc) per exact line
-    // string, drop df≥2 lines, reassemble ordered by position (COALESCE
-    // '' so a fully-boilerplate page matches Spark's empty-array join).
-    "q_boilerplate" -> """
-      WITH pages AS (
-        SELECT doc_id, concat_ws(chr(10),
-          'NAV ' || source || ' home about contact',
-          text,
-          CASE WHEN doc_id % 3 = 0
-               THEN 'PROMO subscribe to our newsletter today' END,
-          'FOOTER copyright sample site') AS page
-        FROM documents),
-      ls AS (SELECT doc_id, string_split(page, chr(10)) AS a FROM pages),
-      lines AS (
-        SELECT doc_id, pos, a[pos] AS line
-        FROM ls, unnest(range(1, len(a) + 1)) AS t(pos)),
-      freq AS (
-        SELECT line FROM (
-          SELECT line, count(DISTINCT doc_id) AS df FROM lines GROUP BY 1)
-        WHERE df >= 2),
-      flags AS (
-        SELECT l.doc_id, l.pos, l.line, (f.line IS NULL) AS keep
-        FROM lines l LEFT JOIN freq f ON l.line = f.line)
-      SELECT doc_id,
-        COALESCE(string_agg(CASE WHEN keep THEN line END,
-          chr(10) ORDER BY pos), '') AS clean,
-        CAST(count(*) AS BIGINT) AS n_lines,
-        CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-      FROM flags GROUP BY doc_id ORDER BY doc_id""",
-
-    // Span corruption replayed exactly: same \s+ tokenization as q_bpe,
-    // the portable 60-bit md5 mask hash, lag-based run starts, running
-    // run ids, and both string_agg assemblies (COALESCE '' so a document
-    // with no masked token matches Spark's empty-array join).
-    "q_span_corrupt" -> """
-      WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS ws
-        FROM documents),
-      w AS (
-        SELECT doc_id, pos, ws[pos] AS tok
-        FROM toks, unnest(range(1, len(ws) + 1)) AS t(pos)
-        WHERE ws[pos] <> ''),
-      m AS (
-        SELECT doc_id, pos, tok,
-               (CAST(('0x' || substring(
-                  md5('mask:' || doc_id || ':' || pos), 1, 15)) AS BIGINT)
-                % 5 = 0) AS mk
-        FROM w),
-      r AS (
-        SELECT doc_id, pos, tok, mk,
-               CASE WHEN mk AND NOT COALESCE(
-                   lag(mk) OVER (PARTITION BY doc_id ORDER BY pos), FALSE)
-                 THEN 1 ELSE 0 END AS st
-        FROM m),
-      s AS (
-        SELECT doc_id, pos, tok, mk, st,
-               CAST(sum(st) OVER (PARTITION BY doc_id ORDER BY pos)
-                 AS BIGINT) AS rid
-        FROM r)
-      SELECT doc_id,
-        COALESCE(string_agg(
-          CASE WHEN NOT mk THEN tok
-               WHEN st = 1 THEN '<extra_id_' || (rid - 1) || '>' END,
-          ' ' ORDER BY pos), '') AS input,
-        COALESCE(string_agg(
-          CASE WHEN mk THEN (CASE WHEN st = 1
-            THEN '<extra_id_' || (rid - 1) || '> ' || tok
-            ELSE tok END) END,
-          ' ' ORDER BY pos), '') AS target,
-        CAST(sum(CASE WHEN mk THEN 1 ELSE 0 END) AS BIGINT) AS n_masked,
-        CAST(sum(st) AS BIGINT) AS n_spans
-      FROM s GROUP BY doc_id ORDER BY doc_id""",
-
-    "q_url_canon" -> (urlNormOracleCtes + """
-      SELECT doc_id, url_canon, host, domain, depth
-      FROM norm ORDER BY doc_id"""),
-
-    "q_url_domain_stats" -> (urlNormOracleCtes + """
-      SELECT domain, count(*) AS n_docs,
-             count(DISTINCT host) AS n_hosts,
-             CAST(sum(depth) AS BIGINT) AS sum_depth
-      FROM norm WHERE domain <> 'sample.net'
-      GROUP BY domain ORDER BY domain"""),
-
-    "q_pagerank_warm" -> {
-      def iter(out: String, prev: String, edges: String,
-               od: String): String = s""",
-      $out AS (
-        SELECT n.id,
-               CAST(150000000000 + (85 * COALESCE(c.s, 0)) // 100
-                 AS BIGINT) AS r
-        FROM nodes n LEFT JOIN (
-          SELECT e.dst, CAST(SUM(r.r // $od.od) AS BIGINT) AS s
-          FROM $edges e
-          JOIN $prev r ON e.src = r.id
-          JOIN $od ON $od.src = e.src
-          GROUP BY e.dst) c ON c.dst = n.id)"""
-      """
-      WITH nodes AS (SELECT doc_id AS id FROM documents),
-      nn AS (SELECT count(*) AS n FROM nodes),
-      e1 AS (
-        SELECT id AS src, (id * 17 + c.c) % nn.n AS dst
-        FROM nodes CROSS JOIN nn
-        CROSS JOIN (SELECT unnest([1, 2]) AS c) c),
-      e2 AS (
-        SELECT id AS src, (id * 17 + c.c) % nn.n AS dst
-        FROM nodes CROSS JOIN nn
-        CROSS JOIN (SELECT unnest([1, 2, 3]) AS c) c),
-      od1 AS (SELECT src, count(*) AS od FROM e1 GROUP BY 1),
-      od2 AS (SELECT src, count(*) AS od FROM e2 GROUP BY 1),
-      p0 AS (SELECT id, CAST(1000000000000 AS BIGINT) AS r FROM nodes)""" +
-      (1 to 3).map(i => iter(s"p$i", s"p${i - 1}", "e1", "od1")).mkString +
-      """,
-      w0 AS (SELECT n.id, CAST(COALESCE(p.r, 150000000000) AS BIGINT) AS r
-             FROM nodes n LEFT JOIN p3 p ON p.id = n.id)""" +
-      (1 to 2).map(i => iter(s"w$i", s"w${i - 1}", "e2", "od2")).mkString +
-      """
-      SELECT id, r AS rank_fp FROM w2
-      ORDER BY rank_fp DESC, id ASC LIMIT 20"""
-    },
-
-    "q_embed_pool" -> """
-      WITH u AS (
-        SELECT label,
-               unnest(range(len(embedding))) AS pos,
-               unnest(CAST(embedding AS DOUBLE[])) AS v
-        FROM embeddings)
-      SELECT label, pos, round(avg(v), 6) AS mean
-      FROM u GROUP BY label, pos ORDER BY label, pos""",
-
-    "q_triangles" -> """
-      WITH nodes AS (SELECT doc_id AS id FROM documents),
-      nn AS (SELECT count(*) AS n FROM nodes),
-      edges AS (
-        SELECT id AS src, (id * 17 + c.c) % nn.n AS dst
-        FROM nodes CROSS JOIN nn
-        CROSS JOIN (SELECT unnest([1, 2, 3]) AS c) c),
-      und AS (
-        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM edges WHERE src <> dst)
-      SELECT count(*) AS n_triangles
-      FROM und e1
-      JOIN und e2 ON e2.a = e1.b
-      JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b""",
-
-    "q_curation_recipe" -> """
-      WITH capped AS (
-        SELECT doc_id, text, lang, source FROM (
-          SELECT doc_id, text, lang, source,
-                 row_number() OVER (PARTITION BY source
-                   ORDER BY n_chars DESC, doc_id ASC) AS rn
-          FROM documents) WHERE rn <= 40),
-      toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM capped),
-      raw_cnt AS (SELECT term, count(*) AS cnt_raw FROM toks GROUP BY 1),
-      tgt_cnt AS (
-        SELECT term, count(*) AS cnt_target
-        FROM toks JOIN capped USING (doc_id)
-        WHERE lang = 'en' GROUP BY 1),
-      j AS (
-        SELECT r.term, r.cnt_raw, COALESCE(t.cnt_target, 0) AS cnt_target
-        FROM raw_cnt r LEFT JOIN tgt_cnt t USING (term)),
-      tot AS (SELECT sum(cnt_raw) AS nr, sum(cnt_target) AS nt,
-                     count(*) AS v FROM j),
-      w AS (
-        SELECT term,
-               ln((cnt_target + 1) / CAST(nt + v AS DOUBLE)) -
-               ln((cnt_raw + 1) / CAST(nr + v AS DOUBLE)) AS w
-        FROM j CROSS JOIN tot),
-      scored AS (
-        SELECT doc_id, count(*) AS n_tokens, sum(w.w) AS score
-        FROM toks JOIN w USING (term) GROUP BY 1)
-      SELECT s.doc_id, c.source, s.n_tokens,
-             round(s.score, 6) AS score
-      FROM scored s JOIN capped c USING (doc_id)
-      ORDER BY round(s.score, 6) DESC, s.doc_id ASC LIMIT 100""",
-
-    "q_dsir" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      raw_cnt AS (SELECT term, count(*) AS cnt_raw FROM toks GROUP BY 1),
-      tgt_cnt AS (
-        SELECT term, count(*) AS cnt_target
-        FROM toks JOIN documents USING (doc_id)
-        WHERE lang = 'en' GROUP BY 1),
-      j AS (
-        SELECT r.term, r.cnt_raw, COALESCE(t.cnt_target, 0) AS cnt_target
-        FROM raw_cnt r LEFT JOIN tgt_cnt t USING (term)),
-      tot AS (SELECT sum(cnt_raw) AS nr, sum(cnt_target) AS nt,
-                     count(*) AS v FROM j),
-      w AS (
-        SELECT term,
-               ln((cnt_target + 1) / CAST(nt + v AS DOUBLE)) -
-               ln((cnt_raw + 1) / CAST(nr + v AS DOUBLE)) AS w
-        FROM j CROSS JOIN tot),
-      scored AS (
-        SELECT doc_id, count(*) AS n_tokens, sum(w.w) AS score
-        FROM toks JOIN w USING (term) GROUP BY 1)
-      SELECT doc_id, n_tokens, round(score, 6) AS score
-      FROM scored
-      ORDER BY round(score, 6) DESC, doc_id ASC LIMIT 100""",
-
-    "q_scan" ->
-      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber",
-    "q_filter" ->
-      "SELECT * FROM lineitem WHERE l_quantity > 45 ORDER BY l_orderkey, l_linenumber",
-    "q_filter_string" ->
-      "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'F' ORDER BY o_orderkey",
-    "q_project" ->
-      "SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem ORDER BY l_orderkey, l_linenumber",
-    "q_agg" -> """
-      SELECT l_returnflag, count(*) AS cnt,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(avg(l_extendedprice), 4) AS avg_price,
-             round(min(l_extendedprice), 2) AS min_price,
-             round(max(l_extendedprice), 2) AS max_price
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_agg_nogroup" -> """
-      SELECT count(*) AS cnt, round(sum(l_extendedprice), 2) AS sum_price,
-             round(avg(l_quantity), 6) AS avg_qty,
-             round(min(l_discount), 2) AS min_disc,
-             round(max(l_tax), 2) AS max_tax
-      FROM lineitem""",
-    "q_agg_golden" -> """
-      SELECT l_returnflag AS category, count(*) AS total_orders,
-             round(sum(l_extendedprice * l_quantity), 2) AS total_revenue,
-             round(avg(l_extendedprice), 4) AS avg_price
-      FROM lineitem GROUP BY 1 ORDER BY 1""",
-    "q_agg_having" -> """
-      SELECT l_suppkey, round(sum(l_quantity), 2) AS sum_qty, count(*) AS cnt
-      FROM lineitem GROUP BY l_suppkey HAVING count(*) > 100 ORDER BY l_suppkey""",
-    "q_simple_api" -> """
-      SELECT l_returnflag, count(*) AS "count_*",
-             sum(l_quantity) AS sum_l_quantity,
-             min(l_extendedprice) AS min_l_extendedprice,
-             max(l_extendedprice) AS max_l_extendedprice
-      FROM lineitem WHERE l_quantity >= 30
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_sort_limit" ->
-      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10",
-    "q_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem ORDER BY 1, 2",
-    "q_join_broadcast" -> """
-      SELECT c_mktsegment, count(*) AS n_orders,
-             round(sum(o_totalprice), 2) AS revenue
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q_join_multi" -> """
-      SELECT r_name, n_name,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-      FROM lineitem
-      JOIN orders   ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      JOIN nation   ON c_nationkey = n_nationkey
-      JOIN region   ON n_regionkey = r_regionkey
-      GROUP BY r_name, n_name ORDER BY r_name, n_name""",
-    "q_join_full" -> """
-      WITH f AS (
-        SELECT o_custkey AS ck, count(*) AS n_f,
-               round(sum(o_totalprice), 2) AS rev_f
-        FROM orders WHERE o_orderstatus = 'F' GROUP BY 1),
-      o AS (
-        SELECT o_custkey AS ck, count(*) AS n_o,
-               round(sum(o_totalprice), 2) AS rev_o
-        FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
-      SELECT coalesce(f.ck, o.ck) AS custkey,
-             coalesce(n_f, 0) AS n_f, coalesce(rev_f, 0.0) AS rev_f,
-             coalesce(n_o, 0) AS n_o, coalesce(rev_o, 0.0) AS rev_o
-      FROM f FULL OUTER JOIN o ON f.ck = o.ck
-      ORDER BY custkey""",
-    "q_udaf_weighted" -> """
-      SELECT l_returnflag,
-             round(sum((l_extendedprice / l_quantity) * l_quantity)
-                   / sum(l_quantity), 4) AS w_mean_unit_price
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_join_skew_salted" -> """
-      SELECT c_mktsegment, count(*) AS n_events,
-             round(sum(value), 2) AS total_value
-      FROM events JOIN customer ON user_id = c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q_join_range" -> """
-      SELECT c_custkey, count(*) AS n_events,
-             round(sum(value), 2) AS total_value
-      FROM events JOIN customer
-        ON value >= (c_custkey % 30) * 10.0
-       AND value <= (c_custkey % 30) * 10.0 + 2.0
-      GROUP BY c_custkey ORDER BY c_custkey""",
-    "q_join_skew_adaptive" -> """
-      SELECT c_mktsegment, count(*) AS n_events,
-             count(DISTINCT user_id) AS n_users,
-             round(sum(value), 2) AS total_value
-      FROM events JOIN customer ON user_id = c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q_tpch_q3" -> """
-      SELECT l_orderkey, o_orderdate, o_orderpriority,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-      FROM lineitem
-      JOIN orders   ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      WHERE c_mktsegment = 'BUILDING'
-        AND o_orderdate < TIMESTAMP '1998-01-01'
-        AND l_shipdate  > TIMESTAMP '1998-01-01'
-      GROUP BY l_orderkey, o_orderdate, o_orderpriority
-      ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "q_tpch_q5" -> """
-      SELECT n_name,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-      FROM customer
-      JOIN orders   ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      JOIN nation   ON s_nationkey = n_nationkey
-      JOIN region   ON n_regionkey = r_regionkey
-      WHERE r_name = 'ASIA'
-        AND o_orderdate >= TIMESTAMP '1996-01-01'
-        AND o_orderdate <  TIMESTAMP '1998-01-01'
-      GROUP BY n_name ORDER BY revenue DESC, n_name""",
-    "q_tpch_q17" -> """
-      SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-      FROM lineitem
-      JOIN part ON p_partkey = l_partkey
-      WHERE p_brand = 'Brand#23'
-        AND l_quantity < (
-          SELECT 0.2 * avg(l2.l_quantity)
-          FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)""",
-    "q_tpch_q18" -> """
-      SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-             round(sum(l_quantity), 2) AS total_qty
-      FROM customer
-      JOIN orders   ON c_custkey = o_custkey
-      JOIN lineitem ON o_orderkey = l_orderkey
-      WHERE o_orderkey IN (
-        SELECT l_orderkey FROM lineitem
-        GROUP BY l_orderkey HAVING sum(l_quantity) > 150)
-      GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-      ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""",
-    "q_tpch_q1" -> """
-      SELECT l_returnflag, l_linestatus,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_base_price,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-             round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)
-               AS sum_charge,
-             round(avg(l_quantity), 4) AS avg_qty,
-             round(avg(l_extendedprice), 4) AS avg_price,
-             round(avg(l_discount), 4) AS avg_disc,
-             count(*) AS count_order
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-      GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus""",
-    "q_tpch_q21" -> """
-      SELECT s_name, count(*) AS numwait
-      FROM supplier
-      JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-      JOIN orders ON o_orderkey = l1.l_orderkey
-      WHERE o_orderstatus = 'F'
-        AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-        AND EXISTS (
-          SELECT 1 FROM lineitem l2
-          WHERE l2.l_orderkey = l1.l_orderkey
-            AND l2.l_suppkey <> l1.l_suppkey)
-        AND NOT EXISTS (
-          SELECT 1 FROM lineitem l3
-          WHERE l3.l_orderkey = l1.l_orderkey
-            AND l3.l_suppkey <> l1.l_suppkey
-            AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
-      GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""",
-    "q_tpch_q4" -> """
-      SELECT o_orderpriority, count(*) AS order_count
-      FROM orders
-      WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-        AND o_orderdate <  TIMESTAMP '1996-10-01'
-        AND EXISTS (
-          SELECT 1 FROM lineitem
-          WHERE l_orderkey = o_orderkey
-            AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-      GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q_tpch_q12" -> """
-      SELECT l_returnflag,
-             CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                 THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-             CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                 THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        AND l_shipdate <  TIMESTAMP '1998-01-01'
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_tpch_q14" -> """
-      SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
-                   THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
-                 / sum(l_extendedprice * (1 - l_discount)), 4)
-               AS promo_revenue
-      FROM lineitem JOIN part ON l_partkey = p_partkey
-      WHERE l_shipdate >= TIMESTAMP '1997-06-01'
-        AND l_shipdate <  TIMESTAMP '1997-07-01'""",
-    "q_tpch_q19" -> """
-      SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-      FROM lineitem JOIN part ON l_partkey = p_partkey
-      WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-             AND l_quantity BETWEEN 1 AND 11)
-         OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-             AND l_quantity BETWEEN 10 AND 20)
-         OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-             AND l_quantity BETWEEN 20 AND 30)""",
-    "q_tpch_q6" -> """
-      SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        AND l_shipdate <  TIMESTAMP '1998-01-01'
-        AND l_discount >= 0.05 AND l_discount <= 0.07
-        AND l_quantity < 24""",
-    "q_tpch_q7" -> """
-      SELECT supp_nation, cust_nation, l_year,
-             round(sum(volume), 2) AS revenue
-      FROM (
-        SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-               year(l_shipdate) AS l_year,
-               l_extendedprice * (1 - l_discount) AS volume
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate <  TIMESTAMP '1998-01-01'
-          AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-            OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')))
-      GROUP BY supp_nation, cust_nation, l_year
-      ORDER BY supp_nation, cust_nation, l_year""",
-    "q_tpch_q8" -> """
-      SELECT o_year,
-             round(sum(CASE WHEN supp_nation = 'NATION_3' THEN volume
-                            ELSE 0.0 END) / sum(volume), 4) AS mkt_share
-      FROM (
-        SELECT year(o_orderdate) AS o_year,
-               l_extendedprice * (1 - l_discount) AS volume,
-               n1.n_name AS supp_nation
-        FROM lineitem
-        JOIN part     ON l_partkey = p_partkey
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        WHERE p_type = 'ECONOMY'
-          AND o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate <  TIMESTAMP '1998-01-01'
-          AND o_custkey IN (
-            SELECT c_custkey FROM customer
-            JOIN nation n2 ON c_nationkey = n2.n_nationkey
-            JOIN region ON n2.n_regionkey = r_regionkey
-            WHERE r_name = 'AMERICA'))
-      GROUP BY o_year ORDER BY o_year""",
-    "q_tpch_q9" -> """
-      SELECT nation, o_year,
-             sum(CAST(round(profit * 100) AS BIGINT)) / 100.0 AS sum_profit
-      FROM (
-        SELECT n_name AS nation, year(o_orderdate) AS o_year,
-               (l_extendedprice * (1 - l_discount))
-                 - (p_retailprice * 0.1 * l_quantity) AS profit
-        FROM lineitem
-        JOIN part     ON l_partkey = p_partkey
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation   ON s_nationkey = n_nationkey
-        WHERE p_name LIKE '%widget%')
-      GROUP BY nation, o_year ORDER BY nation, o_year DESC""",
-    "q_tpch_q10" -> """
-      SELECT c_custkey, c_name, c_acctbal, n_name,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-      FROM lineitem
-      JOIN orders   ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      JOIN nation   ON c_nationkey = n_nationkey
-      WHERE l_returnflag = 'R'
-        AND o_orderdate >= TIMESTAMP '1997-01-01'
-        AND o_orderdate <  TIMESTAMP '1997-04-01'
-      GROUP BY c_custkey, c_name, c_acctbal, n_name
-      ORDER BY revenue DESC, c_custkey LIMIT 20""",
-    "q_tpch_q11" -> """
-      WITH ps AS (
-        SELECT l_partkey,
-               sum(l_extendedprice * (1 - l_discount)) AS value
-        FROM lineitem
-        WHERE l_suppkey IN (
-          SELECT s_suppkey FROM supplier
-          JOIN nation ON s_nationkey = n_nationkey
-          WHERE n_name = 'NATION_7')
-        GROUP BY l_partkey)
-      SELECT l_partkey, round(value, 2) AS part_value
-      FROM ps
-      WHERE value > (SELECT sum(value) FROM ps) * 0.001
-      ORDER BY part_value DESC, l_partkey""",
-    "q_tpch_q13" -> """
-      SELECT c_count, count(*) AS custdist
-      FROM (
-        SELECT c_custkey, count(o_orderkey) AS c_count
-        FROM customer LEFT OUTER JOIN orders
-          ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        GROUP BY c_custkey)
-      GROUP BY c_count
-      ORDER BY custdist DESC, c_count DESC""",
-    "q_tpch_q15" -> """
-      WITH rev AS (
-        SELECT l_suppkey,
-               round(sum(l_extendedprice * (1 - l_discount)), 2)
-                 AS total_revenue
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate <  TIMESTAMP '1997-04-01'
-        GROUP BY l_suppkey)
-      SELECT s_suppkey, s_name, total_revenue
-      FROM rev JOIN supplier ON l_suppkey = s_suppkey
-      WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-      ORDER BY s_suppkey""",
-    "q_tpch_q16" -> """
-      SELECT p_brand, p_type, p_size,
-             count(DISTINCT l_suppkey) AS supplier_cnt
-      FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-      JOIN part ON l_partkey = p_partkey
-      WHERE p_brand <> 'Brand#5' AND p_type <> 'MEDIUM'
-        AND p_size IN (1, 4, 9, 16, 25, 36, 49)
-        AND l_suppkey NOT IN (
-          SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-      GROUP BY p_brand, p_type, p_size
-      ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
-    "q_tpch_q20" -> """
-      SELECT s_name, s_acctbal
-      FROM supplier JOIN nation ON s_nationkey = n_nationkey
-      WHERE n_name = 'NATION_4' AND s_suppkey IN (
-        SELECT l_suppkey FROM lineitem
-        WHERE l_shipdate < TIMESTAMP '1998-01-01'
-          AND l_partkey IN (
-            SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
-        GROUP BY l_partkey, l_suppkey
-        HAVING sum(CASE WHEN l_shipdate < TIMESTAMP '1997-01-01'
-                        THEN l_quantity ELSE 0.0 END)
-             > sum(CASE WHEN l_shipdate >= TIMESTAMP '1997-01-01'
-                        THEN l_quantity ELSE 0.0 END) * 0.5)
-      ORDER BY s_name""",
-    "q_tpch_q22" -> """
-      WITH cust AS (
-        SELECT c_custkey, c_acctbal,
-               CAST(c_nationkey % 10 AS BIGINT) AS cntrycode
-        FROM customer
-        WHERE c_nationkey % 10 IN (1, 2, 3, 4, 5))
-      SELECT cntrycode, count(*) AS numcust,
-             round(sum(c_acctbal), 2) AS totacctbal
-      FROM cust
-      WHERE c_acctbal > (SELECT avg(c_acctbal) FROM cust
-                         WHERE c_acctbal > 0)
-        AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-      GROUP BY cntrycode ORDER BY cntrycode""",
-    "q_tpch_q2" -> """
-      WITH ps AS (
-        SELECT l_partkey, l_suppkey,
-               min(l_extendedprice / l_quantity) AS cost
-        FROM lineitem
-        WHERE l_partkey IN (
-          SELECT p_partkey FROM part
-          WHERE p_size = 15 AND p_type = 'LARGE')
-        GROUP BY l_partkey, l_suppkey),
-      pse AS (
-        SELECT l_partkey, cost, s_name, s_acctbal, n_name
-        FROM ps
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation   ON s_nationkey = n_nationkey
-        JOIN region   ON n_regionkey = r_regionkey
-        WHERE r_name = 'EUROPE')
-      SELECT s_acctbal, s_name, n_name, l_partkey,
-             round(cost, 2) AS supply_cost
-      FROM pse
-      WHERE cost = (SELECT min(cost) FROM pse p2
-                    WHERE p2.l_partkey = pse.l_partkey)
-      ORDER BY s_acctbal DESC, n_name, s_name, l_partkey LIMIT 10""",
-    "q_grouping_sets" -> """
-      SELECT o_orderstatus, o_orderpriority,
-             CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
-             count(*) AS cnt, round(sum(o_totalprice), 2) AS rev
-      FROM orders
-      GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-                              (o_orderpriority), ())
-      ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "q_percentile" -> """
-      SELECT l_returnflag,
-             round(quantile_cont(l_quantity, 0.5), 4) AS qty_p50,
-             round(quantile_cont(l_quantity, 0.9), 4) AS qty_p90,
-             round(quantile_cont(l_extendedprice, 0.5), 4) AS price_p50
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_join_semi" -> """
-      SELECT c_custkey FROM customer
-      WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-      ORDER BY c_custkey""",
-    "q_join_anti" -> """
-      SELECT c_custkey, c_name FROM customer
-      WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-      ORDER BY c_custkey""",
-    "q_window_rank" -> """
-      SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        SELECT o_custkey, o_orderkey, o_totalprice,
-               row_number() OVER (PARTITION BY o_custkey
-                 ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""",
-    "q_window_running" -> """
-      SELECT user_id, event_id,
-             round(sum(value) OVER (PARTITION BY user_id ORDER BY event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4)
-               AS running_value
-      FROM events ORDER BY user_id, event_id""",
-    "q_window_range" -> """
-      SELECT user_id, event_id,
-             count(*) OVER (PARTITION BY user_id
-               ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-               RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS n_last_hour,
-             round(avg(value) OVER (PARTITION BY user_id ORDER BY event_id
-               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS avg_3
-      FROM events ORDER BY user_id, event_id""",
-    "q_window_analytics" -> """
-      SELECT user_id, event_id,
-             round(lag(value, 1) OVER w, 4) AS prev_value,
-             round(lead(value, 1) OVER w, 4) AS next_value,
-             round(first_value(value) OVER (PARTITION BY user_id
-               ORDER BY event_id ROWS BETWEEN UNBOUNDED PRECEDING AND
-               CURRENT ROW), 4) AS first_value,
-             ntile(4) OVER w AS quartile,
-             rank() OVER (PARTITION BY user_id
-               ORDER BY value DESC, event_id) AS value_rank
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
-      ORDER BY user_id, event_id""",
-    "q_union" -> """
-      SELECT r_name AS name FROM region
-      UNION ALL SELECT n_name FROM nation ORDER BY name""",
-    "q_intersect" -> """
-      SELECT c_nationkey AS nk FROM customer
-      INTERSECT SELECT s_nationkey FROM supplier ORDER BY nk""",
-    "q_except" -> """
-      SELECT c_nationkey AS nk FROM customer
-      EXCEPT SELECT s_nationkey FROM supplier ORDER BY nk""",
-    "q_scalar_funcs" -> """
-      SELECT o_orderkey, year(o_orderdate) AS yr, month(o_orderdate) AS mo,
-             upper(substring(o_orderpriority, 1, 4)) AS prio4,
-             length(o_orderstatus) AS status_len,
-             round(abs(o_totalprice - 1000.0), 2) AS abs_diff,
-             o_orderkey % 7 AS key_mod,
-             CASE WHEN o_totalprice > 100000 THEN 'big'
-                  WHEN o_totalprice > 10000 THEN 'mid'
-                  ELSE 'small' END AS bucket
-      FROM orders ORDER BY o_orderkey""",
-    "q_asof" -> """
-      WITH r AS (SELECT user_id, ts, max(value) AS rv
-                 FROM events GROUP BY 1, 2),
-           l AS (SELECT event_id, user_id, ts FROM events
-                 WHERE event_id % 10 = 0)
-      SELECT l.event_id, l.user_id, l.ts, round(r.rv, 4) AS ref_value
-      FROM l ASOF LEFT JOIN r
-        ON l.user_id = r.user_id AND l.ts >= r.ts
-      ORDER BY l.event_id""",
-    "q_asof_fwd" -> """
-      WITH r AS (SELECT user_id, ts, max(value) AS rv
-                 FROM events GROUP BY 1, 2),
-           l AS (SELECT event_id, user_id, ts FROM events
-                 WHERE event_id % 10 = 0)
-      SELECT l.event_id, l.user_id, l.ts, round(rr.rv, 4) AS ref_value
-      FROM l LEFT JOIN LATERAL (
-        SELECT r.rv FROM r
-        WHERE r.user_id = l.user_id AND r.ts >= l.ts
-          AND r.ts <= l.ts + INTERVAL 1 HOUR
-        ORDER BY r.ts LIMIT 1) rr ON TRUE
-      ORDER BY l.event_id""",
-    // BPE greedy rank-encode, replayed exactly: each word becomes
-    // boundary-wrapped symbols (~c~ per code point + ~</w>~), then the
-    // frozen merge table applies IN RANK ORDER as a nested replace()
-    // chain (replace is left-to-right non-overlapping — precisely the
-    // paper's merge step; equivalence to greedy-by-rank is the learned-
-    // table property BpeSpec pins). Distinct words encode once, then
-    // join back to positions.
-    "q_bpe" -> s"""
-      WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\\s+') AS ws
-        FROM documents),
-      w AS (
-        SELECT doc_id, pos, ws[pos] AS word
-        FROM toks, unnest(range(1, len(ws) + 1)) AS t(pos)
-        WHERE ws[pos] <> ''),
-      dw AS (SELECT DISTINCT word FROM w),
-      wrapped_t AS (
-        SELECT word,
-               regexp_replace(word, '(.)', '~\\1~', 'g') || '~</w>~'
-                 AS wrapped
-        FROM dw),
-      enc AS (
-        SELECT word, string_split(trim($bpeReplayExpr, '~'), '~~') AS parts
-        FROM wrapped_t)
-      SELECT w.doc_id,
-             CAST(sum(len(e.parts)) AS BIGINT) AS n_subwords,
-             string_agg(array_to_string(e.parts, '|'), '|'
-                        ORDER BY w.pos) AS subwords
-      FROM w JOIN enc e ON w.word = e.word
-      GROUP BY w.doc_id ORDER BY w.doc_id""",
-    "q_scalar_dates" -> """
-      SELECT o_orderkey,
-             datediff('day', o_orderdate, DATE '1998-12-31') AS days_to_end,
-             o_orderdate + INTERVAL 30 DAY AS due_date,
-             dayofweek(o_orderdate) + 1 AS dow,
-             quarter(o_orderdate) AS qtr,
-             last_day(o_orderdate) AS month_end
-      FROM orders ORDER BY o_orderkey""",
-    "q_scalar_strings" -> """
-      SELECT c_custkey,
-             concat_ws('|', c_mktsegment, c_name) AS joined,
-             replace(c_name, 'Customer', 'Cust') AS replaced,
-             lpad(CAST(c_custkey AS VARCHAR), 10, '0') AS padded,
-             reverse(c_mktsegment) AS rev,
-             position('E' IN c_mktsegment) AS e_pos,
-             trim(lower(c_mktsegment)) AS lower_seg
-      FROM customer ORDER BY c_custkey""",
-    "q_scalar_math" -> """
-      SELECT l_orderkey, l_linenumber,
-             round(sqrt(l_extendedprice), 6) AS sqrt_price,
-             round(ln(l_extendedprice + 1), 6) AS ln_price,
-             round(pow(l_discount, 2), 6) AS disc_sq,
-             CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil,
-             CAST(floor(l_tax * 100) AS BIGINT) AS tax_pct,
-             CAST(sign(l_quantity - 25) AS BIGINT) AS qty_sign
-      FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "q_nulls" -> """
-      SELECT l_returnflag, count(*) AS n_rows,
-             count(nullif(l_quantity, 1.0)) AS n_nonnull,
-             round(sum(coalesce(nullif(l_quantity, 1.0), 0.0)), 2) AS sum_qty0,
-             round(avg(nullif(l_quantity, 1.0)), 6) AS avg_nonnull
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_sample" -> """
-      SELECT source, least(25, count(*)) AS n_sampled,
-             least(25, count(*)) AS n_distinct
-      FROM documents GROUP BY source ORDER BY source""",
-    "q_mixture_temp" -> """
-      WITH c AS (SELECT lang, CAST(count(*) AS DOUBLE) AS n
-                 FROM documents GROUP BY lang),
-      s AS (SELECT list_sum(list(sqrt(n) ORDER BY lang)) AS sw FROM c),
-      r AS (SELECT lang, n, sqrt(n) / sw * 1000 / n AS rate FROM c, s),
-      x AS (SELECT d.doc_id, d.lang, r.rate,
-              CAST(floor(r.rate) AS BIGINT)
-              + CASE WHEN CAST(('0x' || substring(
-                      md5('t:' || CAST(d.doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) / 1152921504606846976.0
-                    < r.rate - floor(r.rate)
-                THEN 1 ELSE 0 END AS copies
-            FROM documents d JOIN r ON d.lang = r.lang)
-      SELECT lang, CAST(sum(copies) AS BIGINT) AS n_rows,
-             count(*) FILTER (WHERE copies > 0) AS n_docs,
-             max(copies) - 1 AS max_copy
-      FROM x GROUP BY lang HAVING sum(copies) > 0 ORDER BY lang""",
-    "q_json" -> """
-      SELECT event_type, count(*) AS n,
-             round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6)
-               AS avg_k,
-             min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-             max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-      FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_array_ops" -> """
-      SELECT vec_id, len(embedding) AS dim,
-             round(CAST(embedding[1] AS DOUBLE), 6) AS first_elem,
-             round(CAST(embedding[-1] AS DOUBLE), 6) AS last_elem,
-             round(list_sum(list_transform(embedding[1:8],
-               x -> CAST(x AS DOUBLE))), 6) AS head_sum
-      FROM embeddings ORDER BY vec_id""",
-    "q_pivot" -> """
-      SELECT l_linestatus,
-             round(sum(CASE WHEN l_returnflag = 'A' THEN l_quantity END), 2)
-               AS "A",
-             round(sum(CASE WHEN l_returnflag = 'N' THEN l_quantity END), 2)
-               AS "N",
-             round(sum(CASE WHEN l_returnflag = 'R' THEN l_quantity END), 2)
-               AS "R"
-      FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""",
-    "q_unpivot" -> """
-      SELECT l_orderkey, l_linenumber, measure, round(val, 2) AS val FROM (
-        SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure,
-               l_quantity AS val FROM lineitem
-        UNION ALL
-        SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
-        FROM lineitem
-        UNION ALL
-        SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem)
-      ORDER BY l_orderkey, l_linenumber, measure""",
-    "q_heavy_hitters" -> """
-      WITH tok AS (
-        SELECT unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS item
-        FROM documents),
-      t AS (SELECT count(*) AS n FROM tok),
-      c AS (SELECT item, count(*) AS cnt FROM tok GROUP BY item)
-      SELECT c.item, c.cnt, t.n FROM c, t WHERE c.cnt * 40 > t.n
-      ORDER BY c.cnt DESC, c.item""",
-    "q_heavy_hitters_grouped" -> """
-      WITH tok AS (
-        SELECT lang, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS item
-        FROM documents),
-      t AS (SELECT lang, count(*) AS n FROM tok GROUP BY 1),
-      c AS (SELECT lang, item, count(*) AS cnt FROM tok GROUP BY 1, 2)
-      SELECT c.lang, c.item, c.cnt, t.n
-      FROM c JOIN t USING (lang) WHERE c.cnt * 40 > t.n
-      ORDER BY c.lang, c.cnt DESC, c.item""",
-    "q_histogram" -> """
-      WITH c AS (
-        SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-        FROM lineitem),
-      mm AS (SELECT min(cents) AS lo, max(cents) AS hi FROM c)
-      SELECT (cents - lo) * 20 // (hi - lo + 1) AS bucket,
-             count(*) AS cnt, min(cents) AS min_cents,
-             max(cents) AS max_cents
-      FROM c, mm GROUP BY 1 ORDER BY bucket""",
-    "q_corr" -> """
-      SELECT round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-             round(corr(l_quantity, l_discount), 6) AS corr_qty_disc,
-             round(corr(l_extendedprice, l_tax), 6) AS corr_price_tax,
-             round(covar_samp(l_quantity, l_extendedprice), 2)
-               AS covar_qty_price,
-             round(covar_samp(l_discount, l_tax), 8) AS covar_disc_tax
-      FROM lineitem""",
-    "q_explode_tokens" -> """
-      SELECT tok, count(*) AS n FROM (
-        SELECT unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS tok
-        FROM documents)
-      GROUP BY tok ORDER BY n DESC, tok LIMIT 20""",
-    "q_entropy" -> """
-      WITH ch AS (
-        SELECT doc_id, unnest(string_split(text, '')) AS ch FROM documents),
-      ct AS (
-        SELECT doc_id, ch, count(*) AS c FROM ch WHERE ch <> ''
-        GROUP BY doc_id, ch),
-      wn AS (
-        SELECT doc_id, c, sum(c) OVER (PARTITION BY doc_id) AS n FROM ct),
-      t AS (
-        SELECT doc_id, n,
-               c * CAST(round(ln(CAST(c AS DOUBLE) / n) * 1000000)
-                 AS BIGINT) AS term
-        FROM wn)
-      SELECT doc_id, CAST(max(n) AS BIGINT) AS n_chars,
-             CAST(count(*) AS BIGINT) AS distinct_chars,
-             CAST(floor(-CAST(sum(term) AS DOUBLE) / max(n)) AS BIGINT)
-               AS entropy_micro
-      FROM t GROUP BY doc_id ORDER BY doc_id""",
-    "q_token_budget" -> """
-      WITH norm AS (
-        SELECT doc_id,
-               regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS nt,
-               len(list_filter(string_split_regex(text, '\s+'),
-                 x -> x <> '')) AS n_tokens
-        FROM documents),
-      f AS (
-        SELECT doc_id, n_tokens,
-               CAST(length(nt) AS DOUBLE) AS n_chars,
-               CAST(len(list_filter(string_split_regex(nt, '\s+'),
-                 x -> x <> '')) AS DOUBLE) AS n_tok,
-               CAST(length(regexp_replace(nt, '[\p{L}\p{N}\s]', '', 'g'))
-                 AS DOUBLE) AS n_sym,
-               CAST(length(regexp_replace(nt, '[^0-9]', '', 'g'))
-                 AS DOUBLE) AS n_dig
-        FROM norm),
-      scored AS (
-        SELECT doc_id, n_tokens,
-               round(
-                 (CASE WHEN n_tok >= 5 AND n_tok <= 100000 THEN 1.0
-                       ELSE 0.3 END) *
-                 (CASE WHEN (CASE WHEN n_tok > 0
-                               THEN (n_chars - (n_tok - 1)) / n_tok
-                               ELSE 0.0 END) >= 2
-                         AND (CASE WHEN n_tok > 0
-                               THEN (n_chars - (n_tok - 1)) / n_tok
-                               ELSE 0.0 END) <= 12
-                       THEN 1.0 ELSE 0.5 END) *
-                 greatest(0.0, 1.0 - (CASE WHEN n_chars > 0
-                   THEN n_sym / n_chars ELSE 0.0 END) * 4) *
-                 greatest(0.0, 1.0 - (CASE WHEN n_chars > 0
-                   THEN n_dig / n_chars ELSE 0.0 END) * 2), 6) AS q
-        FROM f),
-      c AS (
-        SELECT doc_id, q, n_tokens,
-               CAST(sum(n_tokens) OVER (ORDER BY q DESC, doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS cum_weight
-        FROM scored)
-      SELECT doc_id, q, n_tokens, cum_weight
-      FROM c WHERE cum_weight <= 20000 ORDER BY cum_weight""",
-    "q_outlier_gate" -> """
-      WITH med AS (
-        SELECT lang, quantile_cont(CAST(n_chars AS DOUBLE), 0.5) AS med
-        FROM documents GROUP BY lang),
-      dev AS (
-        SELECT d.lang, CAST(d.n_chars AS DOUBLE) AS v, m.med
-        FROM documents d JOIN med m USING (lang)),
-      mad AS (
-        SELECT lang, quantile_cont(abs(v - med), 0.5) AS mad
-        FROM dev GROUP BY lang),
-      z AS (
-        SELECT dev.lang, v, dev.med, mad.mad,
-               CASE WHEN mad.mad > 0 THEN abs(v - dev.med) / (mad.mad * 1.4826)
-                    WHEN v = dev.med THEN 0
-                    ELSE CAST('inf' AS DOUBLE) END AS rz
-        FROM dev JOIN mad USING (lang))
-      SELECT lang, count(*) AS n_rows,
-             CAST(sum(CASE WHEN rz <= 3.5 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_kept,
-             round(max(med), 4) AS med, round(max(mad), 4) AS mad,
-             round(min(CASE WHEN rz <= 3.5 THEN v END), 4) AS kept_lo,
-             round(max(CASE WHEN rz <= 3.5 THEN v END), 4) AS kept_hi
-      FROM z GROUP BY lang ORDER BY lang""",
-    "q_profile" -> """
-      WITH p AS (
-        SELECT 'l_quantity' AS "column", count(*) AS n_rows,
-               count(*) - count(l_quantity) AS n_nulls,
-               round(min(l_quantity), 4) AS min_v,
-               round(max(l_quantity), 4) AS max_v,
-               round(avg(l_quantity), 6) AS mean_v,
-               round(stddev_samp(l_quantity), 6) AS stddev_v,
-               round(quantile_cont(l_quantity, 0.25), 4) AS p25,
-               round(quantile_cont(l_quantity, 0.5), 4) AS p50,
-               round(quantile_cont(l_quantity, 0.75), 4) AS p75
-        FROM lineitem
-        UNION ALL
-        SELECT 'l_extendedprice', count(*), count(*) - count(l_extendedprice),
-               round(min(l_extendedprice), 4), round(max(l_extendedprice), 4),
-               round(avg(l_extendedprice), 6),
-               round(stddev_samp(l_extendedprice), 6),
-               round(quantile_cont(l_extendedprice, 0.25), 4),
-               round(quantile_cont(l_extendedprice, 0.5), 4),
-               round(quantile_cont(l_extendedprice, 0.75), 4)
-        FROM lineitem
-        UNION ALL
-        SELECT 'l_discount', count(*), count(*) - count(l_discount),
-               round(min(l_discount), 4), round(max(l_discount), 4),
-               round(avg(l_discount), 6), round(stddev_samp(l_discount), 6),
-               round(quantile_cont(l_discount, 0.25), 4),
-               round(quantile_cont(l_discount, 0.5), 4),
-               round(quantile_cont(l_discount, 0.75), 4)
-        FROM lineitem
-        UNION ALL
-        SELECT 'l_tax', count(*), count(*) - count(l_tax),
-               round(min(l_tax), 4), round(max(l_tax), 4),
-               round(avg(l_tax), 6), round(stddev_samp(l_tax), 6),
-               round(quantile_cont(l_tax, 0.25), 4),
-               round(quantile_cont(l_tax, 0.5), 4),
-               round(quantile_cont(l_tax, 0.75), 4)
-        FROM lineitem)
-      SELECT * FROM p ORDER BY "column" """,
-    "q_cube" -> """
-      SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
-             round(sum(o_totalprice), 2) AS rev
-      FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-      ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "q_rollup" -> """
-      SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-             round(sum(l_quantity), 2) AS sum_qty
-      FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-      ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q_events_hourly" -> """
-      SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-             round(sum(value), 4) AS total_value
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    // streaming dedup emits each key exactly once == batch DISTINCT
-    "q_stream_dedup" -> """
-      SELECT DISTINCT user_id, event_type FROM events
-      ORDER BY user_id, event_type""",
-    "q_stream_enrich" -> """
-      SELECT c_mktsegment, event_type, count(*) AS n,
-             round(sum(value), 4) AS total_value
-      FROM events LEFT JOIN customer ON user_id = c_custkey
-      GROUP BY 1, 2 ORDER BY c_mktsegment, event_type""",
-    // the CDC-sourced lake->lake pipeline must land exactly the one-shot
-    // batch transform of the source rows
-    "q_stream_cdf" -> """
-      SELECT ct AS _change_type, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM (
-        SELECT 'insert' AS ct, l_quantity, l_extendedprice FROM lineitem
-        UNION ALL
-        SELECT 'delete' AS ct, l_quantity, l_extendedprice
-        FROM lineitem WHERE l_quantity > 40)
-      GROUP BY ct ORDER BY ct""",
-    "q_stream_cdc" -> """
-      SELECT l_returnflag, count(*) AS n,
-             round(sum(l_quantity * l_extendedprice), 2) AS sum_rev
-      FROM lineitem WHERE l_quantity > 10
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // the quarantined slice (blocklisted bucket 2) aborted before any
-    // commit — the published table is exactly the other three slices
-    "q_stream_wap" -> """
-      SELECT l_returnflag, count(*) AS n,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_orderkey % 4 <> 2
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // nothing is late under the 7-day horizon, so the stream-stream join
-    // must emit exactly the batch interval join
-    "q_stream_join" -> """
-      SELECT l.user_id AS user_id, l.event_id AS a_id, r.event_id AS b_id,
-             epoch_ms(l.ts) AS a_ms, epoch_ms(r.ts) AS b_ms
-      FROM events l JOIN events r
-        ON l.user_id = r.user_id AND r.ts >= l.ts
-        AND r.ts <= l.ts + INTERVAL 3600 SECOND
-      WHERE l.event_type = 'view' AND r.event_type = 'click'
-      ORDER BY user_id, a_id, b_id""",
-    // stream sessionization emits every CLOSED session; with NoTimeout each
-    // user's final session deterministically never closes, so the oracle is
-    // batch sessionization (same millisecond gap rule) minus that session
-    "q_stream_sessions" -> """
-      WITH e AS (
-        SELECT user_id, event_id, epoch_ms(ts) AS tms, value FROM events),
-      m AS (
-        SELECT user_id, event_id, tms, value,
-               CASE WHEN lag(tms) OVER w IS NULL
-                      OR tms - lag(tms) OVER w > 1800000 THEN 1 ELSE 0 END
-                 AS new_s
-        FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tms, event_id)),
-      s AS (
-        SELECT user_id, tms, value,
-               sum(new_s) OVER (PARTITION BY user_id ORDER BY tms, event_id
-                 ROWS UNBOUNDED PRECEDING) AS sid
-        FROM m),
-      agg AS (
-        SELECT user_id, sid, CAST(count(*) AS BIGINT) AS n_events,
-               round(sum(value), 4) AS total_value,
-               min(tms) AS start_ms, max(tms) AS end_ms
-        FROM s GROUP BY user_id, sid),
-      last AS (SELECT user_id, max(sid) AS mx FROM agg GROUP BY user_id)
-      SELECT a.user_id, a.n_events, a.total_value, a.start_ms, a.end_ms
-      FROM agg a JOIN last l ON a.user_id = l.user_id AND a.sid < l.mx
-      ORDER BY a.user_id, a.start_ms""",
-    // the streaming upsert pipeline must land exactly the batch GROUP BY
-    "q_stream_hourly" -> """
-      SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-             round(sum(value), 4) AS total_value
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_events_regexp" -> """
-      SELECT event_type, count(*) AS n,
-             round(avg(CAST(regexp_extract(props, '"k": (\d+)', 1) AS INT)), 6)
-               AS avg_k
-      FROM events GROUP BY event_type ORDER BY event_type""",
-    // Best-of-n replayed exactly: contiguous fans of 8 by integer div,
-    // rewards to integer cents, argmax via max + min-id-among-max join.
-    "q_best_of_n" -> """
-      WITH cand AS (
-        SELECT event_id // 8 AS prompt_id, event_id AS cand_id,
-               CAST(round(value * 100) AS BIGINT) AS reward_c
-        FROM events),
-      agg AS (
-        SELECT prompt_id, max(reward_c) AS mx, min(reward_c) AS mn,
-               count(*) AS n
-        FROM cand GROUP BY 1)
-      SELECT a.prompt_id, min(c.cand_id) AS chosen_id,
-             a.mx AS reward_c, a.n AS n_cands, a.mn AS min_reward_c
-      FROM agg a
-      JOIN cand c ON c.prompt_id = a.prompt_id AND c.reward_c = a.mx
-      GROUP BY a.prompt_id, a.mx, a.n, a.mn
-      ORDER BY a.prompt_id""",
-
-    // DPO pairs replayed exactly: both extreme-reward candidates with
-    // min-id tie-breaks, integer-cent margin, n >= 2 and margin >= 500.
-    "q_pref_pairs" -> """
-      WITH cand AS (
-        SELECT event_id // 8 AS prompt_id, event_id AS cand_id,
-               CAST(round(value * 100) AS BIGINT) AS reward_c
-        FROM events),
-      agg AS (
-        SELECT prompt_id, max(reward_c) AS mx, min(reward_c) AS mn,
-               count(*) AS n
-        FROM cand GROUP BY 1),
-      ch AS (
-        SELECT a.prompt_id, min(c.cand_id) AS chosen_id
-        FROM agg a
-        JOIN cand c ON c.prompt_id = a.prompt_id AND c.reward_c = a.mx
-        GROUP BY 1),
-      rj AS (
-        SELECT a.prompt_id, min(c.cand_id) AS rejected_id
-        FROM agg a
-        JOIN cand c ON c.prompt_id = a.prompt_id AND c.reward_c = a.mn
-        GROUP BY 1)
-      SELECT a.prompt_id, ch.chosen_id, rj.rejected_id,
-             a.mx - a.mn AS margin_c, a.n AS n_cands
-      FROM agg a
-      JOIN ch USING (prompt_id) JOIN rj USING (prompt_id)
-      WHERE a.n >= 2 AND a.mx - a.mn >= 500
-      ORDER BY prompt_id""",
-
-    "q_funnel" -> """
-      WITH v AS (
-        SELECT user_id, min(ts) AS t_view FROM events
-        WHERE event_type = 'view' GROUP BY 1),
-      c AS (
-        SELECT e.user_id, min(e.ts) AS t_click
-        FROM events e JOIN v ON e.user_id = v.user_id
-        WHERE e.event_type = 'click' AND e.ts > v.t_view GROUP BY 1),
-      p AS (
-        SELECT e.user_id, min(e.ts) AS t_purchase
-        FROM events e JOIN c ON e.user_id = c.user_id
-        WHERE e.event_type = 'purchase' AND e.ts > c.t_click GROUP BY 1)
-      SELECT '1_view' AS stage, count(*) AS n FROM v
-      UNION ALL SELECT '2_click', count(*) FROM c
-      UNION ALL SELECT '3_purchase', count(*) FROM p
-      ORDER BY stage""",
-    "q_retention" -> """
-      WITH s AS (
-        SELECT user_id, date_trunc('week', min(ts)) AS cweek FROM events
-        WHERE event_type = 'signup' GROUP BY 1),
-      a AS (
-        SELECT DISTINCT user_id, date_trunc('week', ts) AS aweek
-        FROM events)
-      SELECT s.cweek,
-             date_diff('day', s.cweek, a.aweek) // 7 AS week_offset,
-             count(DISTINCT s.user_id) AS n_users
-      FROM s JOIN a USING (user_id)
-      WHERE a.aweek >= s.cweek
-      GROUP BY 1, 2 ORDER BY cweek, week_offset""",
-    "q_text_stats" -> """
-      SELECT doc_id,
-             len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-               AS n_tokens,
-             len(regexp_extract_all(text, '[\p{L}]+|[\p{N}]+|[^\p{L}\p{N}\s]'))
-               AS n_bpe_tokens,
-             length(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-               AS n_norm_chars,
-             md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-      FROM documents ORDER BY doc_id""",
-    "q_dedup_exact" -> """
-      SELECT min(doc_id) AS doc_id FROM documents
-      GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-      ORDER BY doc_id""",
-    // Exact all-pairs word-3-gram Jaccard — independent re-derivation of the
-    // shingle semantics (normalize → whitespace tokens → 3-gram shingles,
-    // <3 tokens ⇒ the whole normalized text as one shingle). Exact-value
-    // oracle is valid for BOTH engine strategies (prefix-filter and bitmask)
-    // because each is exact, not approximate.
-    "q_dedup_jaccard" -> """
-      WITH toks AS (
-        SELECT doc_id AS id,
-               list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-                 x -> x <> '') AS tk
-        FROM documents),
-      sh AS (
-        SELECT id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_transform(range(1, len(tk) - 1),
-                           i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-               END AS shl
-        FROM toks),
-      tok AS (SELECT DISTINCT id, tok
-              FROM (SELECT id, unnest(shl) AS tok FROM sh)),
-      sizes AS (SELECT id, count(*) AS sz FROM tok GROUP BY id),
-      inter AS (
-        SELECT a.id AS a_id, b.id AS b_id, count(*) AS c
-        FROM tok a JOIN tok b ON a.tok = b.tok AND a.id < b.id
-        GROUP BY 1, 2)
-      SELECT i.a_id, i.b_id,
-             round(CAST(c AS DOUBLE) / (sa.sz + sb.sz - c), 6) AS jaccard
-      FROM inter i
-      JOIN sizes sa ON sa.id = i.a_id
-      JOIN sizes sb ON sb.id = i.b_id
-      WHERE CAST(c AS DOUBLE) / (sa.sz + sb.sz - c) >= 0.6
-      ORDER BY a_id, b_id""",
-    // Incremental dedup re-derived: same re-crawl construction, dedup
-    // within the batch (min doc_id per normalized-text md5), then
-    // anti-join against the corpus fingerprint set.
-    "q_dedup_incremental" -> """
-      WITH corpus AS (
-        SELECT doc_id, text FROM documents WHERE source <> 'src1'),
-      newb AS (
-        SELECT doc_id, text FROM documents WHERE source = 'src1'
-        UNION ALL
-        SELECT doc_id + 1000000 AS doc_id, text FROM corpus
-        WHERE doc_id % 3 = 0),
-      nfp AS (
-        SELECT doc_id,
-               md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-        FROM newb),
-      within AS (SELECT min(doc_id) AS doc_id FROM nfp GROUP BY fp),
-      cfp AS (
-        SELECT DISTINCT
-               md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-        FROM corpus)
-      SELECT n.doc_id
-      FROM nfp n JOIN within USING (doc_id)
-      LEFT JOIN cfp c ON n.fp = c.fp
-      WHERE c.fp IS NULL
-      ORDER BY n.doc_id""",
-    // Decontamination re-derived: distinct 5-gram shingles per doc, eval
-    // set = src0's distinct shingles, left join counts overlap per train doc.
-    "q_decontaminate" -> """
-      WITH toks AS (
-        SELECT doc_id, source,
-               list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-                 x -> x <> '') AS tk
-        FROM documents),
-      sh AS (
-        SELECT doc_id, source,
-               CASE WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-                    ELSE list_transform(range(1, len(tk) - 3),
-                           i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                                || ' ' || tk[i+3] || ' ' || tk[i+4])
-               END AS shl
-        FROM toks),
-      tok AS (SELECT DISTINCT doc_id, source, tok
-              FROM (SELECT doc_id, source, unnest(shl) AS tok FROM sh)),
-      ev AS (SELECT DISTINCT tok FROM tok WHERE source = 'src0')
-      SELECT t.doc_id,
-             count(e.tok) AS n_overlap,
-             count(*) AS n_shingles,
-             round(CAST(count(e.tok) AS DOUBLE) / count(*), 6) AS overlap_frac
-      FROM tok t LEFT JOIN ev e ON t.tok = e.tok
-      WHERE t.source <> 'src0'
-      GROUP BY t.doc_id
-      ORDER BY t.doc_id""",
-    // Repetition metrics re-derived: token list per doc, top 2-/3-gram
-    // occurrence counts via unnest+group, token-fraction formulas as in
-    // Repetition.metrics (empty doc ⇒ distinct_frac 1, <n tokens ⇒ 0).
-    "q_repetition" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-                 x -> x <> '') AS tk
-        FROM documents),
-      grams AS (
-        SELECT doc_id, n, g, count(*) AS c FROM (
-          SELECT doc_id, 2 AS n,
-                 unnest(list_transform(range(1, len(tk)),
-                   i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM toks WHERE len(tk) >= 2
-          UNION ALL
-          SELECT doc_id, 3 AS n,
-                 unnest(list_transform(range(1, len(tk) - 1),
-                   i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
-          FROM toks WHERE len(tk) >= 3)
-        GROUP BY 1, 2, 3),
-      tops AS (
-        SELECT doc_id, max(CASE WHEN n = 2 THEN c END) AS t2,
-               max(CASE WHEN n = 3 THEN c END) AS t3
-        FROM grams GROUP BY doc_id)
-      SELECT b.doc_id, len(b.tk) AS n_tokens,
-             round(CASE WHEN len(b.tk) = 0 THEN 1.0
-                   ELSE CAST(len(list_distinct(b.tk)) AS DOUBLE) / len(b.tk)
-                   END, 6) AS distinct_frac,
-             round(coalesce(CAST(t2 * 2 AS DOUBLE) / len(b.tk), 0.0), 6)
-               AS top2gram_frac,
-             round(coalesce(CAST(t3 * 3 AS DOUBLE) / len(b.tk), 0.0), 6)
-               AS top3gram_frac
-      FROM toks b LEFT JOIN tops USING (doc_id)
-      ORDER BY doc_id""",
-    // Redaction re-derived: identical PII seeding from doc_id, identical
-    // portable regexes; DuckDB regexp_replace needs the 'g' flag to match
-    // Spark's replace-all, counts via len(regexp_extract_all).
-    "q_redact" -> """
-      WITH seeded AS (
-        SELECT doc_id, text
-          || CASE WHEN doc_id % 7 = 0 THEN ' mail u' || doc_id || '@ex'
-               || (doc_id % 5) || '.org' ELSE '' END
-          || CASE WHEN doc_id % 11 = 0 THEN ' ip 10.' || (doc_id % 250)
-               || '.0.' || (doc_id % 100) ELSE '' END
-          || CASE WHEN doc_id % 13 = 0 THEN ' tel +1 415-555-'
-               || (doc_id % 9000 + 1000) ELSE '' END
-          || CASE WHEN doc_id % 17 = 0 THEN ' ssn 078-05-'
-               || (doc_id % 9000 + 1000) ELSE '' END AS text
-        FROM documents)
-      SELECT doc_id,
-        len(regexp_extract_all(text,
-          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-        len(regexp_extract_all(text,
-          '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS n_ips,
-        len(regexp_extract_all(text,
-          '\+[0-9]{1,2}[ -][0-9]{3}[ -][0-9]{3}[ -][0-9]{4}\b')) AS n_phones,
-        len(regexp_extract_all(text,
-          '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b')) AS n_ssns,
-        regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-          '\+[0-9]{1,2}[ -][0-9]{3}[ -][0-9]{3}[ -][0-9]{4}\b', '<PHONE>', 'g'),
-          '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b', '<SSN>', 'g') AS text_clean
-      FROM seeded ORDER BY doc_id""",
-    // TF-IDF re-derived: same tokenize, same integer rank key, same
-    // smoothed ln((N+1)/(df+1)) score.
-    "q_tfidf" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens
-             FROM tf GROUP BY 1),
-      dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      n AS (SELECT count(*) AS nn FROM documents),
-      scored AS (
-        SELECT tf.doc_id, tf.term, tf.tf, dl.n_tokens, dfreq.df,
-               CAST(tf.tf AS DOUBLE) / dl.n_tokens
-                 * ln(CAST(nn + 1 AS DOUBLE) / (dfreq.df + 1)) AS tfidf,
-               row_number() OVER (PARTITION BY tf.doc_id
-                 ORDER BY tf.tf DESC, dfreq.df ASC, tf.term ASC) AS rank
-        FROM tf JOIN dl USING (doc_id) JOIN dfreq USING (term) CROSS JOIN n)
-      SELECT doc_id, term, tf, n_tokens, df, round(tfidf, 6) AS tfidf, rank
-      FROM scored WHERE rank <= 3 ORDER BY doc_id, rank""",
-    // Gate pipeline re-derived end-to-end: dedup = min doc_id per
-    // md5(normalized text); repetition and decontamination formulas as in
-    // q_repetition / q_decontaminate (per-doc metrics are subset-invariant,
-    // so gates compose as id-set intersection in any order).
-    "q_pipeline_gates" -> """
-      WITH train AS (
-        SELECT doc_id, source, text,
-               regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS nt
-        FROM documents WHERE source <> 'src0'),
-      dedup AS (
-        SELECT min(doc_id) AS doc_id FROM train GROUP BY md5(nt)),
-      tk AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(nt, '\s+'), x -> x <> '') AS tk
-        FROM train),
-      grams AS (
-        SELECT doc_id, n, g, count(*) AS c FROM (
-          SELECT doc_id, 2 AS n,
-                 unnest(list_transform(range(1, len(tk)),
-                   i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM tk WHERE len(tk) >= 2
-          UNION ALL
-          SELECT doc_id, 3 AS n,
-                 unnest(list_transform(range(1, len(tk) - 1),
-                   i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
-          FROM tk WHERE len(tk) >= 3)
-        GROUP BY 1, 2, 3),
-      tops AS (
-        SELECT doc_id, max(CASE WHEN n = 2 THEN c END) AS t2,
-               max(CASE WHEN n = 3 THEN c END) AS t3
-        FROM grams GROUP BY doc_id),
-      rep AS (
-        SELECT b.doc_id FROM tk b LEFT JOIN tops USING (doc_id)
-        WHERE (CASE WHEN len(b.tk) = 0 THEN 1.0
-               ELSE CAST(len(list_distinct(b.tk)) AS DOUBLE) / len(b.tk)
-               END) >= 0.35
-          AND coalesce(CAST(t2 * 2 AS DOUBLE) / len(b.tk), 0.0) <= 0.25
-          AND coalesce(CAST(t3 * 3 AS DOUBLE) / len(b.tk), 0.0) <= 0.30),
-      shtr AS (
-        SELECT DISTINCT doc_id, tok FROM (
-          SELECT doc_id, unnest(CASE WHEN len(tk) < 5
-                   THEN [array_to_string(tk, ' ')]
-                   ELSE list_transform(range(1, len(tk) - 3),
-                          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                               || ' ' || tk[i+3] || ' ' || tk[i+4])
-                 END) AS tok
-          FROM tk)),
-      evtk AS (
-        SELECT list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-                 x -> x <> '') AS tk
-        FROM documents WHERE source = 'src0'),
-      ev AS (
-        SELECT DISTINCT tok FROM (
-          SELECT unnest(CASE WHEN len(tk) < 5
-                   THEN [array_to_string(tk, ' ')]
-                   ELSE list_transform(range(1, len(tk) - 3),
-                          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                               || ' ' || tk[i+3] || ' ' || tk[i+4])
-                 END) AS tok
-          FROM evtk)),
-      decon AS (
-        SELECT t.doc_id FROM shtr t LEFT JOIN ev e ON t.tok = e.tok
-        GROUP BY t.doc_id
-        HAVING CAST(count(e.tok) AS DOUBLE) / count(*) <= 0.2),
-      surv AS (
-        SELECT tr.doc_id, tr.source, tr.text FROM train tr
-        JOIN dedup USING (doc_id) JOIN rep USING (doc_id)
-        JOIN decon USING (doc_id))
-      SELECT source, count(*) AS n_docs,
-             CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-               x -> x <> ''))) AS BIGINT) AS n_tokens
-      FROM surv GROUP BY source ORDER BY source""",
-    // Quantization re-derived: same max-abs scale, same round-half-away
-    // int8 codes, same in-order element folds (the scale cancels in the
-    // cosine, so no float scale multiplication enters the metric).
-    "q_quantize" -> """
-      WITH base AS (
-        SELECT vec_id, embedding AS v,
-               CAST(list_aggregate(list_transform(embedding,
-                 x -> abs(CAST(x AS DOUBLE))), 'max') AS DOUBLE) AS m
-        FROM embeddings),
-      qz AS (
-        SELECT vec_id, v,
-               CASE WHEN m > 0 THEN m / 127.0 ELSE 1.0 END AS s,
-               list_transform(v, x -> CAST(round(CAST(x AS DOUBLE) /
-                 (CASE WHEN m > 0 THEN m / 127.0 ELSE 1.0 END)) AS INT))
-                 AS qv
-        FROM base),
-      metrics AS (
-        SELECT vec_id, s,
-               list_aggregate(list_transform(range(1, len(v) + 1),
-                 i -> abs(CAST(v[i] AS DOUBLE) - qv[i] * s)), 'max')
-                 AS max_err,
-               list_aggregate(list_transform(range(1, len(v) + 1),
-                 i -> CAST(v[i] AS DOUBLE) * qv[i]), 'sum') AS dvq,
-               sqrt(list_aggregate(list_transform(v,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-                 AS nv,
-               sqrt(list_aggregate(list_transform(qv,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-                 AS nq
-        FROM qz)
-      SELECT vec_id, round(s, 6) AS scale, round(max_err, 6) AS max_err,
-             round(CASE WHEN nv > 0 AND nq > 0 THEN dvq / (nv * nq) END, 6)
-               AS recon_cos
-      FROM metrics ORDER BY vec_id""",
-    // LM scoring re-derived: same bigram counts, same add-1 smoothing,
-    // same integer scaling round(ln·1e6) — integer sums make the per-doc
-    // aggregation order-independent on both engines.
-    "q_lm_score" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-                 x -> x <> '') AS tk
-        FROM documents),
-      bg AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(tk)),
-                 i -> tk[i] || ' ' || tk[i+1])) AS b
-        FROM toks WHERE len(tk) >= 2),
-      sp AS (
-        SELECT doc_id, split_part(b, ' ', 1) AS w1,
-               split_part(b, ' ', 2) AS w2
-        FROM bg),
-      c12 AS (SELECT w1, w2, count(*) AS c12 FROM sp GROUP BY 1, 2),
-      c1 AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12 GROUP BY 1),
-      vv AS (SELECT count(DISTINCT w) AS v FROM
-               (SELECT unnest(tk) AS w FROM toks)),
-      pairs AS (
-        SELECT w1, w2,
-               CAST(round(ln((c12 + 1) / (c1 + 1.0 * v)) * 1e6) AS BIGINT)
-                 AS lp
-        FROM c12 JOIN c1 USING (w1) CROSS JOIN vv),
-      uni AS (
-        SELECT w1,
-               CAST(round(ln(1.0 / (c1 + 1.0 * v)) * 1e6) AS BIGINT)
-                 AS lp_unseen
-        FROM c1 CROSS JOIN vv),
-      ctx AS (SELECT CAST(round(ln(1.0 / v) * 1e6) AS BIGINT) AS lp0 FROM vv),
-      scored AS (
-        SELECT s.doc_id,
-               coalesce(p.lp, u.lp_unseen, ctx.lp0) AS slp
-        FROM sp s
-        LEFT JOIN pairs p ON s.w1 = p.w1 AND s.w2 = p.w2
-        LEFT JOIN uni u ON s.w1 = u.w1
-        CROSS JOIN ctx)
-      SELECT doc_id, count(*) AS n_bigrams,
-             CAST(floor(CAST(sum(slp) AS DOUBLE) / count(*)) AS BIGINT)
-               AS avg_logp_u
-      FROM scored GROUP BY doc_id ORDER BY doc_id""",
-
-    "q_validate" -> """
-      SELECT 'not_null' AS check_name, 'text' AS target,
-             count(*) - count(text) = 0 AS passed,
-             CAST(count(*) - count(text) AS BIGINT) AS observed
-      FROM documents
-      UNION ALL
-      SELECT 'unique', 'doc_id',
-             count(doc_id) - count(DISTINCT doc_id) = 0,
-             CAST(count(doc_id) - count(DISTINCT doc_id) AS BIGINT)
-      FROM documents
-      UNION ALL
-      SELECT 'in_range', 'n_chars',
-             sum(CASE WHEN n_chars IS NOT NULL
-                       AND (n_chars < 1 OR n_chars > 1000000)
-                      THEN 1 ELSE 0 END) = 0,
-             CAST(sum(CASE WHEN n_chars IS NOT NULL
-                            AND (n_chars < 1 OR n_chars > 1000000)
-                           THEN 1 ELSE 0 END) AS BIGINT)
-      FROM documents
-      UNION ALL
-      SELECT 'in_set', 'lang',
-             sum(CASE WHEN lang IS NOT NULL
-                       AND lang NOT IN ('de','en','es','fr','zh')
-                      THEN 1 ELSE 0 END) = 0,
-             CAST(sum(CASE WHEN lang IS NOT NULL
-                            AND lang NOT IN ('de','en','es','fr','zh')
-                           THEN 1 ELSE 0 END) AS BIGINT)
-      FROM documents
-      UNION ALL
-      SELECT 'matches', 'source',
-             sum(CASE WHEN source IS NOT NULL
-                       AND NOT regexp_matches(source, '^src[0-9]+$')
-                      THEN 1 ELSE 0 END) = 0,
-             CAST(sum(CASE WHEN source IS NOT NULL
-                            AND NOT regexp_matches(source, '^src[0-9]+$')
-                           THEN 1 ELSE 0 END) AS BIGINT)
-      FROM documents
-      UNION ALL
-      SELECT 'row_count', '*',
-             count(*) BETWEEN 1 AND 10000000,
-             CAST(count(*) AS BIGINT)
-      FROM documents
-      ORDER BY check_name, target""",
-
-    "q_sample_weighted" -> """
-      WITH keyed AS (
-        SELECT doc_id, source, n_chars,
-               -ln(CAST(('0x' || substring(
-                   md5('ws:' || CAST(doc_id AS VARCHAR)), 1, 15))
-                 AS BIGINT) / 1152921504606846976.0)
-               / CAST(n_chars AS DOUBLE) AS sk
-        FROM documents WHERE n_chars > 0)
-      SELECT doc_id, source, n_chars, round(sk, 9) AS sample_key
-      FROM keyed ORDER BY sk ASC, doc_id ASC LIMIT 50""",
-
-    "q_ccnet_buckets" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-                 x -> x <> '') AS tk
-        FROM documents),
-      bg AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(tk)),
-                 i -> tk[i] || ' ' || tk[i+1])) AS b
-        FROM toks WHERE len(tk) >= 2),
-      sp AS (
-        SELECT doc_id, split_part(b, ' ', 1) AS w1,
-               split_part(b, ' ', 2) AS w2
-        FROM bg),
-      c12 AS (SELECT w1, w2, count(*) AS c12 FROM sp GROUP BY 1, 2),
-      c1 AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12 GROUP BY 1),
-      vv AS (SELECT count(DISTINCT w) AS v FROM
-               (SELECT unnest(tk) AS w FROM toks)),
-      pairs AS (
-        SELECT w1, w2,
-               CAST(round(ln((c12 + 1) / (c1 + 1.0 * v)) * 1e6) AS BIGINT)
-                 AS lp
-        FROM c12 JOIN c1 USING (w1) CROSS JOIN vv),
-      uni AS (
-        SELECT w1,
-               CAST(round(ln(1.0 / (c1 + 1.0 * v)) * 1e6) AS BIGINT)
-                 AS lp_unseen
-        FROM c1 CROSS JOIN vv),
-      ctx AS (SELECT CAST(round(ln(1.0 / v) * 1e6) AS BIGINT) AS lp0 FROM vv),
-      perdoc AS (
-        SELECT s.doc_id,
-               CAST(floor(CAST(sum(coalesce(p.lp, u.lp_unseen, ctx.lp0))
-                 AS DOUBLE) / count(*)) AS BIGINT) AS avg_logp_u
-        FROM sp s
-        LEFT JOIN pairs p ON s.w1 = p.w1 AND s.w2 = p.w2
-        LEFT JOIN uni u ON s.w1 = u.w1
-        CROSS JOIN ctx
-        GROUP BY s.doc_id),
-      bk AS (
-        SELECT d.lang, pd.doc_id, pd.avg_logp_u,
-               ntile(3) OVER (PARTITION BY d.lang
-                 ORDER BY pd.avg_logp_u DESC, pd.doc_id ASC) AS bucket
-        FROM perdoc pd JOIN documents d USING (doc_id))
-      SELECT lang, bucket, count(*) AS n_docs,
-             max(avg_logp_u) AS best, min(avg_logp_u) AS worst
-      FROM bk GROUP BY lang, bucket ORDER BY lang, bucket""",
-    // Shard stats re-derived: identical modular multiplicative mix
-    // ((id mod p)·2654435761 mod p, p = 1e9+7 — overflow-free in BIGINT),
-    // same whitespace token counts.
-    "q_shard" -> """
-      WITH a AS (
-        SELECT CAST(((doc_id % 1000000007) * 2654435761) % 1000000007
-                 % 16 AS INT) AS shard,
-               doc_id,
-               CAST(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> x <> '')) AS BIGINT) AS n_tok
-        FROM documents)
-      SELECT shard, count(*) AS n_docs,
-             CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-             min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM a GROUP BY shard ORDER BY shard""",
-    // Chunking re-derived: same raw whitespace tokens, same stride-24
-    // starts, 1-based inclusive list slicing clamped at the end.
-    "q_chunk" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'),
-                 x -> x <> '') AS tk
-        FROM documents),
-      starts AS (
-        SELECT doc_id, tk, unnest(range(0, len(tk), 24)) AS start_tok
-        FROM toks WHERE len(tk) > 0)
-      SELECT doc_id,
-             CAST(start_tok / 24 AS BIGINT) AS chunk_idx,
-             CAST(start_tok AS BIGINT) AS start_tok,
-             CAST(len(tk[start_tok + 1 : start_tok + 32]) AS BIGINT)
-               AS n_tok,
-             array_to_string(tk[start_tok + 1 : start_tok + 32], ' ')
-               AS chunk_text
-      FROM starts ORDER BY doc_id, chunk_idx""",
-    // Split assignment re-derived: same mix, bucket = mix % 10000,
-    // train < 9000 ≤ val < 9500 ≤ test.
-    "q_split" -> """
-      WITH a AS (
-        SELECT CASE
-                 WHEN ((doc_id % 1000000007) * 2654435761) % 1000000007
-                      % 10000 < 9000 THEN 'train'
-                 WHEN ((doc_id % 1000000007) * 2654435761) % 1000000007
-                      % 10000 < 9500 THEN 'val'
-                 ELSE 'test' END AS split,
-               source
-        FROM documents)
-      SELECT split, source, count(*) AS n_docs
-      FROM a GROUP BY split, source ORDER BY split, source""",
-    // Sequence packing re-derived: same shard split (doc_id mod 8), same
-    // start-offset cumulative window, chunk = floor(start / budget).
-    "q_pack" -> """
-      WITH base AS (
-        SELECT doc_id, source, CAST(doc_id % 8 AS INT) AS shard,
-               CAST(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> x <> '')) AS BIGINT) AS n_tok
-        FROM documents)
-      SELECT doc_id, source, shard, n_tok,
-             CAST(floor(coalesce(sum(n_tok) OVER (
-                 PARTITION BY source, shard ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               / 2048) AS BIGINT) AS chunk_id
-      FROM base ORDER BY doc_id""",
-    "q_sql_golden" -> """
-      SELECT l_returnflag AS category, COUNT(*) AS total_orders,
-             round(SUM(l_extendedprice * l_quantity), 2) AS total_revenue,
-             round(AVG(l_extendedprice), 4) AS avg_price
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_sql_topn" -> """
-      SELECT l_orderkey,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-             o_orderdate
-      FROM customer
-      JOIN orders ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      WHERE c_mktsegment = 'BUILDING'
-      GROUP BY l_orderkey, o_orderdate
-      ORDER BY revenue DESC, l_orderkey LIMIT 20""",
-    "q_sql_subquery" -> """
-      SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-      FROM lineitem l1
-      WHERE l_quantity < (SELECT 0.5 * avg(l_quantity)
-                          FROM lineitem l2
-                          WHERE l2.l_partkey = l1.l_partkey)""",
-    "q_sessions" -> """
-      WITH lagged AS (
-        SELECT user_id, event_id, ts, value,
-               lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                 AS prev_ts
-        FROM events),
-      marked AS (
-        SELECT user_id, event_id, ts, value,
-               CASE WHEN prev_ts IS NULL
-                         OR epoch(ts) - epoch(prev_ts) > 1800
-                    THEN 1 ELSE 0 END AS new_session
-        FROM lagged),
-      numbered AS (
-        SELECT user_id, value,
-               CAST(sum(new_session) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS session_id
-        FROM marked)
-      SELECT user_id, session_id, count(*) AS n_events,
-             round(sum(value), 4) AS total_value
-      FROM numbered GROUP BY user_id, session_id
-      ORDER BY user_id, session_id""",
-    "q_multimodal_meta" -> """
-      SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0 THEN 'image'
-                  WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS modality,
-             octet_length(encode(text)) +
-               CASE WHEN doc_id % 3 = 0 THEN 33
-                    WHEN doc_id % 3 = 1 THEN 44 ELSE 52 END AS size_bytes,
-             CASE WHEN doc_id % 3 = 0 THEN 'image/png'
-                  WHEN doc_id % 3 = 1 THEN 'audio/wav'
-                  ELSE 'video/mp4' END AS content_type
-      FROM documents ORDER BY doc_id""",
-    // q_multimodal_decode: recompute the header fields the Spark side
-    // PARSES out of the synthesized-but-valid PNG/WAV/MP4 bytes, from the
-    // same construction rule (Multimodal.syntheticCorpus scaladoc)
-    "q_multimodal_decode" -> """
-      WITH f AS (
-        SELECT CASE WHEN doc_id % 3 = 0 THEN 'image'
-                    WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS modality,
-               CASE WHEN doc_id % 3 = 0 THEN 16 * (1 + doc_id % 64)
-                    ELSE 0 END AS width,
-               CASE WHEN doc_id % 3 = 0 THEN
-                      (CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 4 END)
-                    WHEN doc_id % 3 = 1 THEN 1 + doc_id % 2
-                    ELSE 0 END AS channels,
-               CASE WHEN doc_id % 3 = 1 THEN
-                      (octet_length(encode(text)) * 1000)
-                        // (16000 * (1 + doc_id % 2) * 2)
-                    WHEN doc_id % 3 = 2 THEN octet_length(encode(text)) * 40
-                    ELSE 0 END AS duration_ms
-        FROM documents)
-      SELECT modality, count(*) AS n, round(avg(width), 4) AS avg_width,
-             round(avg(channels), 4) AS avg_channels,
-             round(avg(duration_ms), 4) AS avg_duration_ms
-      FROM f GROUP BY modality ORDER BY modality""",
-    // q_multimodal_pixels: recompute the per-image channel-byte sums from
-    // the closed-form pixel rule (pixel (x,y,c) of image id =
-    // (id + 7y + 13x + 101c) mod 256, dims 8·(1+id%16) × 8·(1+id%9)) —
-    // the Spark side must arrive at the same integers by actually DECODING
-    // the PNGs it encoded (Multimodal.pixelCorpus/decodeImage scaladoc)
-    "q_multimodal_video" -> """
-      WITH d AS (
-        SELECT doc_id, 8*(1+doc_id%8) AS w, 8*(1+doc_id%5) AS h,
-          list_sum(list_transform([0, 2, 4], f ->
-            list_sum(list_transform(range(0, 8*(1+doc_id%5)), y ->
-              list_sum(list_transform(range(0, 8*(1+doc_id%8)), x ->
-                list_sum(list_transform(range(0, 3), c ->
-                  (doc_id + 1000003*f + 7*y + 13*x + 101*c) % 256))))))))
-            AS ps
-        FROM documents)
-      SELECT doc_id, CAST(3 AS BIGINT) AS n_sampled,
-             CAST(w AS INT) AS w, CAST(h AS INT) AS h,
-             CAST(ps AS BIGINT) AS sum_channel_bytes
-      FROM d ORDER BY doc_id""",
-    // dHash near-dups replayed exactly from the closed pixel formula:
-    // block means with NULL empty columns (w < 9), gradient bits, two
-    // 32-bit halves, and the FULL all-pairs popcount <= 3 set (the
-    // banded Spark path must recover exactly this — pigeonhole).
-    "q_multimodal_phash" -> """
-      WITH imgs AS (
-        SELECT doc_id, doc_id AS seed,
-               8*(1+doc_id%16) AS w, 8*(1+doc_id%9) AS h
-        FROM documents
-        UNION ALL
-        SELECT doc_id + 1000000, doc_id + 1,
-               8*(1+doc_id%16), 8*(1+doc_id%9)
-        FROM documents WHERE doc_id % 7 = 0),
-      cells AS MATERIALIZED (
-        SELECT i.doc_id, cy, cx,
-          CASE WHEN (cx+1)*w//9 = cx*w//9 THEN NULL ELSE
-            list_sum(list_transform(range(cy*h//8, (cy+1)*h//8), y ->
-              list_sum(list_transform(range(cx*w//9, (cx+1)*w//9), x ->
-                299*((i.seed + 7*y + 13*x) % 256) +
-                587*((i.seed + 7*y + 13*x + 101) % 256) +
-                114*((i.seed + 7*y + 13*x + 202) % 256)))))
-            // (((cy+1)*h//8 - cy*h//8) * ((cx+1)*w//9 - cx*w//9))
-          END AS cell
-        FROM imgs i CROSS JOIN unnest(range(0,8)) t1(cy)
-        CROSS JOIN unnest(range(0,9)) t2(cx)),
-      bits AS (
-        SELECT g1.doc_id, g1.cy*8 + g1.cx AS k,
-               CASE WHEN g2.cell > g1.cell THEN 1 ELSE 0 END AS bit
-        FROM cells g1 JOIN cells g2 ON g2.doc_id = g1.doc_id
-          AND g2.cy = g1.cy AND g2.cx = g1.cx + 1),
-      halves AS MATERIALIZED (
-        SELECT doc_id,
-          CAST(sum(CASE WHEN k < 32
-            THEN bit * (CAST(1 AS BIGINT) << k) ELSE 0 END) AS BIGINT)
-            AS h_lo,
-          CAST(sum(CASE WHEN k >= 32
-            THEN bit * (CAST(1 AS BIGINT) << (k - 32)) ELSE 0 END)
-            AS BIGINT) AS h_hi
-        FROM bits GROUP BY 1)
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-             CAST(bit_count(xor(a.h_lo, b.h_lo)) +
-                  bit_count(xor(a.h_hi, b.h_hi)) AS BIGINT) AS hamming
-      FROM halves a JOIN halves b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.h_lo, b.h_lo)) +
-            bit_count(xor(a.h_hi, b.h_hi)) <= 3
-      ORDER BY a_id, b_id""",
-
-    "q_multimodal_pixels" -> """
-      WITH d AS (
-        SELECT doc_id, 8*(1+doc_id%16) AS w, 8*(1+doc_id%9) AS h,
-          list_sum(list_transform(range(0, 8*(1+doc_id%9)), y ->
-            list_sum(list_transform(range(0, 8*(1+doc_id%16)), x ->
-              list_sum(list_transform(range(0, 3), c ->
-                (doc_id + 7*y + 13*x + 101*c) % 256)))))) AS ps
-        FROM documents)
-      SELECT doc_id % 4 AS grp, count(*) AS n,
-             CAST(sum(w) AS BIGINT) AS sum_w,
-             CAST(sum(h) AS BIGINT) AS sum_h,
-             CAST(sum(w * h) AS BIGINT) AS sum_px,
-             CAST(sum(ps) AS BIGINT) AS sum_channel_bytes
-      FROM d GROUP BY 1 ORDER BY 1""",
-    "q_lake_timetravel" -> """
-      SELECT 1 AS version, count(*) AS n_rows,
-             round(sum(l_extendedprice), 2) AS sum_price
-        FROM lineitem WHERE l_orderkey % 3 <= 0
-      UNION ALL SELECT 2, count(*), round(sum(l_extendedprice), 2)
-        FROM lineitem WHERE l_orderkey % 3 <= 1
-      UNION ALL SELECT 3, count(*), round(sum(l_extendedprice), 2)
-        FROM lineitem
-      UNION ALL SELECT 4, count(*), round(sum(l_extendedprice), 2)
-        FROM lineitem
-      ORDER BY version""",
-    "q_stream_join_outer" -> """
-      WITH v AS (SELECT * FROM events WHERE event_type = 'view'),
-      cl AS (SELECT * FROM events WHERE event_type = 'click'),
-      wm AS (SELECT least((SELECT max(ts) FROM v),
-                          (SELECT max(ts) FROM cl))
-                    - INTERVAL 1 HOUR AS w)
-      SELECT v.user_id, v.event_id AS a_id, cl.event_id AS b_id,
-             epoch_ms(v.ts) AS a_ms, epoch_ms(cl.ts) AS b_ms
-      FROM v JOIN cl ON v.user_id = cl.user_id
-        AND cl.ts >= v.ts AND cl.ts <= v.ts + INTERVAL 3600 SECONDS
-      UNION ALL
-      SELECT v.user_id, v.event_id, CAST(NULL AS BIGINT),
-             epoch_ms(v.ts), CAST(NULL AS BIGINT)
-      FROM v
-      WHERE NOT EXISTS (SELECT 1 FROM cl WHERE cl.user_id = v.user_id
-          AND cl.ts >= v.ts AND cl.ts <= v.ts + INTERVAL 3600 SECONDS)
-        AND v.ts + INTERVAL 3600 SECONDS < (SELECT w FROM wm)
-      ORDER BY user_id, a_id, b_id""",
-    "q_lake_restore" -> """
-      SELECT 'head' AS state, count(*) AS n_rows,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_orderkey % 3 IN (0, 2)
-      UNION ALL
-      SELECT 'pre_restore', count(*), round(sum(l_extendedprice), 2)
-      FROM lineitem WHERE l_orderkey % 3 IN (0, 1)
-      ORDER BY state""",
-    "q_lake_upsert" -> """
-      WITH final AS (
-        SELECT o_orderkey,
-               CASE WHEN o_orderkey % 5 = 0
-                    THEN o_totalprice * 2
-                    ELSE o_totalprice END AS p
-        FROM orders
-        UNION ALL
-        SELECT o_orderkey + 10000000, 0.0
-        FROM orders WHERE o_orderkey % 7 = 0)
-      SELECT o_orderkey % 10 AS bucket, count(*) AS n_rows,
-             round(sum(p), 2) AS sum_price
-      FROM final GROUP BY bucket ORDER BY bucket""",
-    "q_dedup_cc_minhash" -> """
-      WITH RECURSIVE norm AS (
-        SELECT doc_id, list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-               x -> x <> '') AS t
-        FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, sh FROM (
-          SELECT doc_id,
-                 CASE WHEN len(t) < 3 THEN array_to_string(t, ' ')
-                      ELSE array_to_string(t[i:i+2], ' ') END AS sh
-          FROM norm, UNNEST(CASE WHEN len(t) < 3 THEN [CAST(1 AS BIGINT)]
-                                 ELSE range(1, len(t) - 1) END) AS u(i))),
-      hb AS (
-        SELECT doc_id,
-               CAST(('0x' || substring(md5(sh), 1, 7)) AS BIGINT) AS h
-        FROM sh),
-      sig AS (
-        SELECT doc_id, i,
-               min((((1103515245 * (2 * i + 1)) % 2147483647) * h
-                    + ((12345 + 1013904223 * i) % 2147483647))
-                   % 2147483647) AS h
-        FROM hb, UNNEST(range(16)) AS s(i)
-        GROUP BY doc_id, i),
-      band AS (
-        SELECT doc_id, i // 2 AS band,
-               string_agg(h::VARCHAR, ',' ORDER BY i) AS key
-        FROM sig GROUP BY doc_id, i // 2),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM band a JOIN band b ON a.band = b.band AND a.key = b.key
-                                AND a.doc_id < b.doc_id),
-      pairs AS (
-        SELECT c.a_id, c.b_id
-        FROM cand c
-        JOIN sig sa ON sa.doc_id = c.a_id
-        JOIN sig sb ON sb.doc_id = c.b_id AND sb.i = sa.i
-        GROUP BY c.a_id, c.b_id
-        HAVING sum(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) / 16.0 >= 0.5),
-      edges AS (
-        SELECT a_id AS u, b_id AS v FROM pairs
-        UNION SELECT b_id, a_id FROM pairs),
-      r(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r2.u, e.v FROM r r2 JOIN edges e ON r2.v = e.u),
-      labels AS (
-        SELECT u AS id, least(u, min(v)) AS comp FROM r GROUP BY u),
-      dropped AS (SELECT id FROM labels WHERE comp < id)
-      SELECT source, count(*) AS n_kept,
-             CAST(sum(strlen(text)) AS BIGINT) AS kept_chars
-      FROM documents
-      WHERE doc_id NOT IN (SELECT id FROM dropped)
-      GROUP BY source ORDER BY source""",
-    "q_lake_evolution" -> """
-      WITH b0 AS (
-        SELECT c_custkey AS id, CAST(c_nationkey AS INTEGER) AS nk,
-               CAST(c_acctbal AS REAL) AS bal, NULL AS seg
-        FROM customer WHERE c_custkey % 2 = 0),
-      b1 AS (
-        SELECT c_custkey AS id, CAST(c_nationkey AS BIGINT) AS nk,
-               CAST(c_acctbal AS DOUBLE) AS bal, c_mktsegment AS seg
-        FROM customer WHERE c_custkey % 2 = 1),
-      v3 AS (SELECT * FROM b0 UNION ALL SELECT * FROM b1)
-      SELECT 1 AS version, count(*) AS n_rows,
-             CAST(sum(nk) AS BIGINT) AS sum_nk,
-             sum(CAST(round(CAST(bal AS DOUBLE) * 100) AS BIGINT)) / 100.0
-               AS sum_bal,
-             CAST(0 AS BIGINT) AS n_seg
-        FROM b0
-      UNION ALL SELECT 2, count(*), CAST(sum(nk) AS BIGINT),
-             sum(CAST(round(CAST(bal AS DOUBLE) * 100) AS BIGINT)) / 100.0,
-             CAST(0 AS BIGINT)
-        FROM b0
-      UNION ALL SELECT 3, count(*), CAST(sum(nk) AS BIGINT),
-             sum(CAST(round(CAST(bal AS DOUBLE) * 100) AS BIGINT)) / 100.0,
-             count(seg)
-        FROM v3
-      ORDER BY version""",
-    "q_job_lifecycle" -> """
-      SELECT l_returnflag, count(*) AS cnt,
-             round(sum(l_quantity), 2) AS sum_qty
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // q_trend_mk: the textbook all-pairs sign sum — equality with the
-    // engine's merge-sort inversion count IS the identity under test.
-    "q_trend_mk" -> """
-      WITH pts AS (
-        SELECT event_type AS k2,
-               CAST(round(value * 100) AS BIGINT) AS v,
-               row_number() OVER (PARTITION BY event_type
-                 ORDER BY epoch_us(ts), CAST(round(value * 100) AS BIGINT))
-                 AS pos
-        FROM events),
-      n_t AS (SELECT k2, COUNT(*) AS n FROM pts GROUP BY 1),
-      sgn AS (
-        SELECT a.k2,
-               CAST(SUM(CASE WHEN b.v > a.v THEN 1
-                             WHEN b.v < a.v THEN -1 ELSE 0 END) AS BIGINT)
-                 AS s
-        FROM pts a JOIN pts b ON b.k2 = a.k2 AND b.pos > a.pos
-        GROUP BY 1)
-      SELECT sgn.k2 AS event_type, CAST(n_t.n AS BIGINT) AS n, sgn.s,
-             CAST(sgn.s * 1000000 // (n_t.n * (n_t.n - 1) // 2)
-               AS BIGINT) AS tau_ppm
-      FROM sgn JOIN n_t ON n_t.k2 = sgn.k2
-      ORDER BY event_type""",
-
-    // q_ts_downsample: LTTB's selection depends on the PREVIOUSLY kept
-    // point, so the oracle precomputes a (bucket, prev-candidate) →
-    // best-candidate transition table (windows allowed there) and a
-    // recursive CTE walks it — the same static-transition + linear-walk
-    // split as the WordPiece/CUSUM oracles. All HUGEINT cross-products.
-    "q_ts_downsample" -> """
-      WITH RECURSIVE pts AS (
-        SELECT event_type AS k2, epoch_us(ts) AS t,
-               CAST(round(value * 100) AS BIGINT) AS v,
-               row_number() OVER (PARTITION BY event_type
-                 ORDER BY epoch_us(ts), CAST(round(value * 100) AS BIGINT))
-                 - 1 AS pos
-        FROM events),
-      n_t AS (SELECT k2, COUNT(*) AS n FROM pts GROUP BY 1),
-      b AS (
-        SELECT k2, i, 1 + (i * (n - 2)) // 20 AS lo,
-               1 + ((i + 1) * (n - 2)) // 20 AS hi
-        FROM n_t, UNNEST(range(20)) AS u(i)),
-      bagg AS (
-        SELECT b.k2, b.i, SUM(p.t) AS sx, SUM(p.v) AS sy, COUNT(*) AS m
-        FROM b JOIN pts p ON p.k2 = b.k2 AND p.pos >= b.lo AND p.pos < b.hi
-        GROUP BY 1, 2),
-      lastp AS (
-        SELECT p.k2, CAST(p.t AS HUGEINT) AS sx, CAST(p.v AS HUGEINT) AS sy,
-               CAST(1 AS HUGEINT) AS m
-        FROM pts p JOIN n_t nt ON nt.k2 = p.k2 WHERE p.pos = nt.n - 1),
-      anchor AS (
-        SELECT k2, i - 1 AS i, CAST(sx AS HUGEINT) AS sx,
-               CAST(sy AS HUGEINT) AS sy, CAST(m AS HUGEINT) AS m
-        FROM bagg WHERE i >= 1
-        UNION ALL
-        SELECT k2, 19, sx, sy, m FROM lastp),
-      prevdom AS (
-        SELECT k2, 0 AS i, CAST(0 AS BIGINT) AS ppos FROM n_t
-        UNION ALL
-        SELECT b.k2, b.i + 1 AS i, p.pos AS ppos
-        FROM b JOIN pts p ON p.k2 = b.k2 AND p.pos >= b.lo AND p.pos < b.hi
-        WHERE b.i + 1 <= 19),
-      scored AS (
-        SELECT pd.k2, pd.i, pd.ppos, c.pos AS cpos, c.t AS ct, c.v AS cv,
-               abs((a.m * CAST(pp.t AS HUGEINT) - a.sx)
-                     * (CAST(c.v AS HUGEINT) - pp.v)
-                   - (CAST(pp.t AS HUGEINT) - c.t)
-                     * (a.sy - a.m * CAST(pp.v AS HUGEINT))) AS score
-        FROM prevdom pd
-        JOIN pts pp ON pp.k2 = pd.k2 AND pp.pos = pd.ppos
-        JOIN b ON b.k2 = pd.k2 AND b.i = pd.i
-        JOIN pts c ON c.k2 = pd.k2 AND c.pos >= b.lo AND c.pos < b.hi
-        JOIN anchor a ON a.k2 = pd.k2 AND a.i = pd.i),
-      trans AS (
-        SELECT k2, i, ppos, cpos,
-               row_number() OVER (PARTITION BY k2, i, ppos
-                 ORDER BY score DESC, cpos ASC) AS rn
-        FROM scored),
-      walk AS (
-        SELECT k2, CAST(-1 AS BIGINT) AS i, CAST(0 AS BIGINT) AS pos
-        FROM n_t
-        UNION ALL
-        SELECT w.k2, w.i + 1, t2.cpos
-        FROM walk w JOIN trans t2 ON t2.k2 = w.k2 AND t2.i = w.i + 1
-                                 AND t2.ppos = w.pos AND t2.rn = 1
-        WHERE w.i + 1 <= 19),
-      selpos AS (
-        SELECT k2, pos FROM walk
-        UNION
-        SELECT nt.k2, nt.n - 1 FROM n_t nt)
-      SELECT p.k2 AS event_type, p.t AS t_us, p.v AS v_cents
-      FROM selpos s JOIN pts p ON p.k2 = s.k2 AND p.pos = s.pos
-      ORDER BY event_type, t_us, v_cents""",
-
-    // q_lineage: the dependency set is a plan-derived FACT the oracle
-    // states — golden in form, falsifiable in substance (any extraction
-    // bug changes the rows).
-    "q_lineage" -> """
-      SELECT * FROM (VALUES
-        ('n_parts', 'lineitem', 'l_partkey'),
-        ('o_custkey', 'orders', 'o_custkey'),
-        ('revenue', 'lineitem', 'l_discount'),
-        ('revenue', 'lineitem', 'l_extendedprice'))
-        AS t(out_col, src_table, src_col)
-      ORDER BY out_col, src_table, src_col""",
-
-    // q_lake_mask: replay both role views — the analyst's mask
-    // expressions applied verbatim, the admin's raw columns.
-    "q_lake_mask" -> """
-      WITH masked AS (
-        SELECT c_custkey,
-               substring(c_mktsegment, 1, 1) || '***' AS c_mktsegment,
-               CAST((CAST(round(c_acctbal * 100) AS BIGINT) // 100000)
-                 * 1000 AS DOUBLE) AS c_acctbal,
-               'analyst' AS role
-        FROM customer),
-      raw AS (
-        SELECT c_custkey, c_mktsegment, c_acctbal, 'admin' AS role
-        FROM customer)
-      SELECT * FROM (SELECT * FROM masked UNION ALL SELECT * FROM raw)
-      ORDER BY role, c_custkey""",
-
-    // q_lake_view: replay the POST-REPLACE view stack inline — the
-    // dependent view must read the replaced base macro (> 100000).
-    "q_lake_view" -> """
-      SELECT o_custkey, count(*) AS n_big,
-             round(sum(o_totalprice), 2) AS spend
-      FROM orders WHERE o_totalprice > 100000
-      GROUP BY o_custkey HAVING count(*) >= 2
-      ORDER BY o_custkey""",
-    // q_lake_sql_txn: the committed even-orderkey slice's aggregate,
-    // with the co-committed fact recount riding beside it.
-    "q_lake_sql_txn" -> """
-      SELECT l_returnflag, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             count(*) AS n_check
-      FROM lineitem WHERE l_orderkey % 2 = 0
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    // q_lake_merge: the full decision table — matched+high-price rows
-    // vanish, matched rows take the source values, unmatched source
-    // rows insert above the floor, everything else survives untouched.
-    "q_lake_merge" -> """
-      WITH src AS (
-        SELECT o_orderkey, 'M' AS o_orderstatus,
-               o_totalprice + 1000 AS o_totalprice
-        FROM orders WHERE o_orderkey % 3 = 0
-        UNION ALL
-        SELECT o_orderkey + 100000000 AS o_orderkey,
-               'N' AS o_orderstatus, o_totalprice
-        FROM orders WHERE o_orderkey % 5 = 0),
-      final_t AS (
-        SELECT t.o_orderkey, t.o_orderstatus, t.o_totalprice
-        FROM orders t LEFT JOIN src s ON t.o_orderkey = s.o_orderkey
-        WHERE s.o_orderkey IS NULL
-        UNION ALL
-        SELECT t.o_orderkey, s.o_orderstatus, s.o_totalprice
-        FROM orders t JOIN src s ON t.o_orderkey = s.o_orderkey
-        WHERE NOT (s.o_totalprice > 150000)
-        UNION ALL
-        SELECT s.o_orderkey, s.o_orderstatus, s.o_totalprice
-        FROM src s LEFT JOIN orders t ON t.o_orderkey = s.o_orderkey
-        WHERE t.o_orderkey IS NULL AND s.o_totalprice > 50000)
-      SELECT o_orderkey, o_orderstatus,
-             round(o_totalprice, 2) AS o_totalprice
-      FROM final_t ORDER BY o_orderkey""",
-
-    // q_lake_rowfilter: analyst = row filter + mask; auditor =
-    // filter-exempt but masked; admin = raw. The oracle replays all
-    // three governed views over the base rows.
-    "q_lake_rowfilter" -> """
-      WITH analyst AS (
-        SELECT c_custkey,
-               substring(c_mktsegment, 1, 1) || '***' AS c_mktsegment,
-               c_acctbal, 'analyst' AS role
-        FROM customer WHERE c_acctbal >= 0),
-      auditor AS (
-        SELECT c_custkey,
-               substring(c_mktsegment, 1, 1) || '***' AS c_mktsegment,
-               c_acctbal, 'auditor' AS role
-        FROM customer),
-      admin AS (
-        SELECT c_custkey, c_mktsegment, c_acctbal, 'admin' AS role
-        FROM customer)
-      SELECT * FROM (SELECT * FROM analyst UNION ALL
-                     SELECT * FROM auditor UNION ALL SELECT * FROM admin)
-      ORDER BY role, c_custkey""",
-
-    // q_result_cache: phase 1 = the even-orderkey half (miss), phase 2 =
-    // the identical cached rows (hit), phase 3 = the whole table after
-    // the invalidating commit (miss).
-    "q_result_cache" -> """
-      WITH half AS (
-        SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
-               round(SUM(l_quantity), 2) AS sum_qty
-        FROM lineitem WHERE l_orderkey % 2 = 0 GROUP BY 1),
-      full_t AS (
-        SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
-               round(SUM(l_quantity), 2) AS sum_qty
-        FROM lineitem GROUP BY 1)
-      SELECT * FROM (
-        SELECT 1 AS phase, 0 AS hit, * FROM half
-        UNION ALL SELECT 2 AS phase, 1 AS hit, * FROM half
-        UNION ALL SELECT 3 AS phase, 0 AS hit, * FROM full_t)
-      ORDER BY phase, l_returnflag""",
-
-    // q_lake_mv_sql: both halves of lineitem fold in → the MV must equal
-    // the aggregate over the whole table.
-    "q_lake_mv_sql" -> """
-      SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_rows,
-             round(SUM(l_quantity), 2) AS sum_qty
-      FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    // q_lake_mv_rewrite: the rewrite must be result-identical to the
-    // naive aggregate, so the oracle IS the naive aggregate.
-    "q_lake_mv_rewrite" -> """
-      SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_rows,
-             round(SUM(l_quantity), 2) AS sum_qty,
-             round(MIN(l_extendedprice), 2) AS min_price,
-             round(MAX(l_extendedprice), 2) AS max_price
-      FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    // q_lake_mv_rewrite_avg: avg over integer-valued l_quantity — the
-    // double sum is exact, so sum/count is bit-identical across Spark's
-    // Average, the MV's Divide(sum_c, n_rows) and DuckDB's AVG.
-    "q_lake_mv_rewrite_avg" -> """
-      SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_rows,
-             AVG(l_quantity) AS avg_qty,
-             SUM(l_quantity) AS sum_qty
-      FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    // q_lake_mv_rewrite_rollup: GROUP BY a subset of the MV key — the
-    // re-aggregated MV must equal the naive aggregate over the base.
-    "q_lake_mv_rewrite_rollup" -> """
-      SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_rows,
-             SUM(l_quantity) AS sum_qty,
-             AVG(l_quantity) AS avg_qty
-      FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    // q_lake_mv_rewrite_filter: key-only filter + composite group key —
-    // the rewrite must equal the naive filtered aggregate.
-    "q_lake_mv_rewrite_filter" -> """
-      SELECT l_returnflag, l_linestatus,
-             CAST(COUNT(*) AS BIGINT) AS n_rows,
-             SUM(l_quantity) AS sum_qty
-      FROM lineitem WHERE l_returnflag <> 'N'
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // q_lake_mv_join: the star-join aggregate recomputed from raw
-    // tables — the dummy dim row matches no facts and must not appear.
-    "q_lake_mv_join" -> """
-      SELECT o_orderpriority AS priority, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY 1 ORDER BY 1""",
-    // q_lake_mv_rewrite_join: the naive star aggregate the rewrite rule
-    // must answer from the join MV alone (the in-query require pins the
-    // plan); DuckDB replays join + group over the raw rows
-    "q_lake_mv_rewrite_join" -> """
-      SELECT o_orderpriority AS priority, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY 1 ORDER BY 1""",
-    // q_lake_mv_rewrite_join_filter: join shape × key-only filter — the
-    // filtered rewrite must equal the naive filtered star aggregate
-    "q_lake_mv_rewrite_join_filter" -> """
-      SELECT o_orderpriority AS priority, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      WHERE o_orderpriority <> '1-URGENT'
-      GROUP BY 1 ORDER BY 1""",
-    // q_lake_mv_rewrite_join_rollup: join shape × rollup — GROUP BY a
-    // strict subset of the composite join-MV key, re-aggregated from
-    // the MV; integer-valued l_quantity keeps sum/avg exact
-    "q_lake_mv_rewrite_join_rollup" -> """
-      SELECT o_orderpriority AS priority,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             sum(l_quantity) AS sum_qty,
-             avg(l_quantity) AS avg_qty
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY 1 ORDER BY 1""",
-    "q_lake_mv" -> """
-      SELECT l_returnflag, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price,
-             round(min(l_quantity), 2) AS min_qty,
-             round(max(l_extendedprice), 2) AS max_price
-      FROM lineitem
-      WHERE (l_orderkey % 3 <> 2 AND l_quantity <= 45)
-         OR l_orderkey % 3 = 2
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_lake_delete" -> """
-      SELECT count(*) AS n_rows, round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_quantity <= 40""",
-    "q_join_bucketed" -> """
-      SELECT o_orderkey, o_custkey, count(*) AS n_items,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY o_orderkey, o_custkey
-      ORDER BY sum_price DESC, o_orderkey LIMIT 10""",
-    "q_lake_dv" -> """
-      SELECT l_orderkey % 4 AS bucket, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_quantity <= 40
-      GROUP BY bucket ORDER BY bucket""",
-    // q_lake_table_changes: the (v1, latest] feed = batch-2 inserts
-    // plus DV-delete pre-images over the whole table.
-    "q_lake_table_changes" -> """
-      WITH feed AS (
-        SELECT 'insert' AS _change_type, l_returnflag, l_quantity
-        FROM lineitem WHERE l_orderkey % 2 = 1
-        UNION ALL
-        SELECT 'delete' AS _change_type, l_returnflag, l_quantity
-        FROM lineitem WHERE l_quantity > 45)
-      SELECT _change_type, l_returnflag, count(*) AS n,
-             round(sum(l_quantity), 2) AS sum_qty
-      FROM feed GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_lake_cdf" -> """
-      SELECT ct AS _change_type, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM (
-        SELECT 'insert' AS ct, l_quantity, l_extendedprice
-        FROM lineitem WHERE l_orderkey % 2 = 1
-        UNION ALL
-        SELECT 'delete' AS ct, l_quantity, l_extendedprice
-        FROM lineitem WHERE l_quantity > 45)
-      GROUP BY ct ORDER BY ct""",
-    "q_lake_mv_mor" -> """
-      SELECT l_returnflag, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_quantity <= 45
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_lake_sql_dml" -> """
-      SELECT l_orderkey % 4 AS bucket, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_quantity <= 40
-      GROUP BY bucket ORDER BY bucket""",
-    // Ref resolution replayed: tags rel-1/rel-2 pin v1/v2 (slices 0 /
-    // 0-1); the prod BRANCH was created at v2 then moved to v3, so its
-    // binding is v3 with the full corpus — content recomputed from the
-    // same slices.
-    "q_lake_tag" -> """
-      SELECT 'prod' AS ref, 'branch' AS kind, CAST(3 AS BIGINT) AS version,
-             count(*) AS n_rows,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem
-      UNION ALL
-      SELECT 'rel-1' AS ref, 'tag' AS kind, CAST(1 AS BIGINT) AS version,
-             count(*) AS n_rows,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_orderkey % 3 = 0
-      UNION ALL
-      SELECT 'rel-2' AS ref, 'tag' AS kind, CAST(2 AS BIGINT) AS version,
-             count(*) AS n_rows,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_orderkey % 3 <= 1
-      ORDER BY ref""",
-    // WAP lifecycle replayed: staged batches never touch the main
-    // line's counts or versions. The synthetic lineitem's (okey, lineno)
-    // keys are NOT unique, so the audit gate's duplicate-key counts are
-    // real key math: the good overlay carries each slice's internal
-    // dups; restaging slice 0 makes EVERY slice-0 key a duplicate.
-    "q_lake_wap" -> """
-      WITH k0 AS (SELECT l_orderkey, l_linenumber, count(*) AS c
-                  FROM lineitem WHERE l_orderkey % 3 = 0 GROUP BY 1, 2),
-           k1 AS (SELECT l_orderkey, l_linenumber, count(*) AS c
-                  FROM lineitem WHERE l_orderkey % 3 = 1 GROUP BY 1, 2),
-           s0 AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-                         CAST(count(*) AS BIGINT) AS dk,
-                         CAST(count(*) FILTER (WHERE c > 1) AS BIGINT) AS dup
-                  FROM k0),
-           s1 AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-                         CAST(count(*) FILTER (WHERE c > 1) AS BIGINT) AS dup
-                  FROM k1)
-      SELECT '1-base' AS phase, CAST(1 AS BIGINT) AS version,
-             s0.n AS n_rows, CAST(0 AS BIGINT) AS audit_dups FROM s0
-      UNION ALL
-      SELECT '2-audit-good', CAST(1 AS BIGINT),
-             s0.n + s1.n, s0.dup + s1.dup FROM s0, s1
-      UNION ALL
-      SELECT '3-published', CAST(2 AS BIGINT),
-             s0.n + s1.n, CAST(0 AS BIGINT) FROM s0, s1
-      UNION ALL
-      SELECT '4-audit-bad', CAST(2 AS BIGINT),
-             2 * s0.n + s1.n, s0.dk + s1.dup FROM s0, s1
-      UNION ALL
-      SELECT '5-final', CAST(2 AS BIGINT),
-             s0.n + s1.n, CAST(0 AS BIGINT) FROM s0, s1
-      ORDER BY phase""",
-    "q_lake_vacuum" -> """
-      SELECT count(*) AS n_rows, round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_quantity <= 40""",
-    "q_lake_zorder" -> """
-      SELECT count(*) AS n_rows, round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_orderkey < 100 AND l_partkey < 200""",
-    "q_lake_hilbert" -> """
-      SELECT count(*) AS n_rows, round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem
-      WHERE l_orderkey BETWEEN 100 AND 600
-        AND l_partkey BETWEEN 50 AND 400""",
-    "q_lake_bloom" -> """
-      SELECT o_orderkey, o_custkey, o_orderstatus,
-             round(o_totalprice, 2) AS price
-      FROM orders
-      WHERE o_orderkey IN (1, 7, 32, 133, 322, 4000)
-      ORDER BY o_orderkey""",
-    "q_lake_partitioned" -> """
-      SELECT l_returnflag, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM lineitem WHERE l_returnflag <> 'R'
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_lake_replace" -> """
-      SELECT l_returnflag, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM (
-        SELECT l_returnflag, l_quantity, l_extendedprice
-        FROM lineitem WHERE l_returnflag <> 'A'
-        UNION ALL
-        SELECT l_returnflag, l_quantity * 2 AS l_quantity, l_extendedprice
-        FROM lineitem WHERE l_returnflag = 'A' AND l_orderkey % 2 = 0)
-      GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // the Spark side answered these from footer stats alone (data files
-    // physically deleted before the aggregate); DuckDB computes them the
-    // honest way from the raw source — equality proves the metadata is an
-    // exact witness, not an approximation
-    "q_lake_stats_agg" -> """
-      SELECT count(*) AS n_rows,
-             count(CASE WHEN l_linenumber % 10 = 0 THEN NULL
-                        ELSE l_quantity END) AS cnt_qty,
-             min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok,
-             min(CASE WHEN l_linenumber % 10 = 0 THEN NULL
-                      ELSE l_quantity END) AS min_qty,
-             max(CASE WHEN l_linenumber % 10 = 0 THEN NULL
-                      ELSE l_quantity END) AS max_qty,
-             min(l_extendedprice) AS min_price,
-             max(l_extendedprice) AS max_price
-      FROM lineitem""",
-    "q_lake_diff" -> """
-      WITH base AS (
-        SELECT l_orderkey * 10 + l_linenumber AS lkey,
-               min(l_quantity) AS l_quantity,
-               min(l_extendedprice) AS l_extendedprice
-        FROM lineitem GROUP BY 1),
-      del AS (
-        SELECT lkey, 'delete' AS change_type,
-               l_quantity AS old_l_quantity,
-               CAST(NULL AS DOUBLE) AS new_l_quantity,
-               l_extendedprice AS old_l_extendedprice,
-               CAST(NULL AS DOUBLE) AS new_l_extendedprice
-        FROM base WHERE l_quantity > 45),
-      upd AS (
-        SELECT lkey, 'update', l_quantity, l_quantity,
-               l_extendedprice, l_extendedprice + 1000
-        FROM base WHERE lkey % 7 = 0 AND l_quantity <= 45),
-      ins AS (
-        SELECT -lkey, 'insert', CAST(NULL AS DOUBLE), l_quantity,
-               CAST(NULL AS DOUBLE), l_extendedprice
-        FROM base WHERE lkey % 11 = 0)
-      SELECT * FROM (
-        SELECT * FROM del UNION ALL SELECT * FROM upd
-        UNION ALL SELECT * FROM ins)
-      ORDER BY lkey""",
-    "q_lake_stats_by_part" -> """
-      SELECT l_returnflag, count(*) AS n_rows,
-             min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok,
-             min(l_quantity) AS min_qty, max(l_quantity) AS max_qty
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_lake_clone" -> """
-      SELECT count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM (SELECT l_quantity, l_extendedprice FROM lineitem
-            UNION ALL
-            SELECT l_quantity, l_extendedprice FROM lineitem
-            WHERE l_orderkey % 5 = 0)""",
-    "q_search_index" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      m AS (SELECT doc_id, count(*) AS n_matched,
-                   CAST(sum(tf) AS BIGINT) AS total_tf
-            FROM tf WHERE term IN ('spark', 'window', 'hash') GROUP BY 1)
-      SELECT doc_id, total_tf FROM m WHERE n_matched = 3 ORDER BY doc_id""",
-    "q_drift" -> """
-      WITH refs AS (
-        SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-        FROM lineitem WHERE l_orderkey % 2 = 0),
-      curs AS (
-        SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-        FROM lineitem WHERE l_quantity > 25),
-      rb AS (SELECT least(greatest(cents - 0, 0) // 500000, 19) AS bucket,
-                    count(*) AS ref_n FROM refs GROUP BY 1),
-      cb AS (SELECT least(greatest(cents - 0, 0) // 500000, 19) AS bucket,
-                    count(*) AS cur_n FROM curs GROUP BY 1),
-      spine AS (SELECT unnest(range(0, 20)) AS bucket),
-      tot AS (SELECT (SELECT count(*) FROM refs) AS rt,
-                     (SELECT count(*) FROM curs) AS ct),
-      j AS (SELECT s.bucket, coalesce(ref_n, 0) AS ref_n,
-                   coalesce(cur_n, 0) AS cur_n, rt, ct
-            FROM spine s LEFT JOIN rb USING (bucket)
-            LEFT JOIN cb USING (bucket) CROSS JOIN tot)
-      SELECT bucket, ref_n, cur_n,
-             round(((CAST(cur_n AS DOUBLE) + 0.5) /
-                      (CAST(ct AS DOUBLE) + 10.0)
-                  - (CAST(ref_n AS DOUBLE) + 0.5) /
-                      (CAST(rt AS DOUBLE) + 10.0))
-               * ln(((CAST(cur_n AS DOUBLE) + 0.5) /
-                       (CAST(ct AS DOUBLE) + 10.0))
-                  / ((CAST(ref_n AS DOUBLE) + 0.5) /
-                       (CAST(rt AS DOUBLE) + 10.0))), 6) AS psi_term
-      FROM j ORDER BY bucket""",
-    "q_text_vectorize" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      b AS (
-        SELECT doc_id,
-               CAST(('0x' || substring(md5('tv:' || term), 1, 15))
-                 AS BIGINT) % 64 AS bucket
-        FROM toks)
-      SELECT doc_id, bucket, count(*) AS tf
-      FROM b GROUP BY 1, 2 ORDER BY doc_id, bucket""",
-    "q_quality_model" -> (qualityMarginOracleCtes("doc_id") + """
-      SELECT doc_id, round(1.0 / (1.0 + exp(-margin)), 6) AS quality_prob,
-             1.0 / (1.0 + exp(-margin)) >= 0.5 AS keep
-      FROM m ORDER BY doc_id"""),
-    "q_model_eval" -> (qualityMarginOracleCtes("doc_id") + """,
-      lab AS (
-        SELECT margin, (n_tok >= 64.0 AND sym <= 0.03125) AS label
-        FROM m),
-      c AS (
-        SELECT t.threshold,
-               CAST(sum(CASE WHEN label AND margin >= t.threshold
-                             THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-               CAST(sum(CASE WHEN NOT label AND margin >= t.threshold
-                             THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-               CAST(sum(CASE WHEN label AND margin < t.threshold
-                             THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-               CAST(sum(CASE WHEN NOT label AND margin < t.threshold
-                             THEN 1 ELSE 0 END) AS BIGINT) AS tn
-        FROM lab CROSS JOIN (
-          SELECT CAST(unnest([-1.0, -0.5, 0.0, 0.5, 1.0]) AS DOUBLE)
-            AS threshold) t
-        GROUP BY 1)
-      SELECT threshold, tp, fp, fn, tn,
-             CASE WHEN tp + fp > 0 THEN (tp * 1000000) // (tp + fp)
-                  ELSE -1 END AS precision_ppm,
-             CASE WHEN tp + fn > 0 THEN (tp * 1000000) // (tp + fn)
-                  ELSE -1 END AS recall_ppm
-      FROM c ORDER BY threshold"""),
-
-    "q_mixture_plan" -> """
-      WITH tc AS (
-        SELECT source,
-               CAST(sum(len(list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                 '\s+'), x -> x <> ''))) AS BIGINT) AS natural_tokens
-        FROM documents GROUP BY source),
-      w AS (SELECT * FROM (VALUES ('src0', 5), ('src1', 3), ('src2', 1))
-            v(source, weight)),
-      j AS (
-        SELECT tc.source, tc.natural_tokens,
-               CAST(COALESCE(w.weight, 0) AS BIGINT) AS weight
-        FROM tc LEFT JOIN w USING (source)),
-      t AS (SELECT CAST(sum(weight) AS BIGINT) AS tw FROM j),
-      p AS (
-        SELECT j.source, j.natural_tokens, j.weight,
-               CAST(CASE WHEN t.tw > 0
-                    THEN j.weight * (500000 // t.tw) +
-                         (j.weight * (500000 % t.tw)) // t.tw
-                    ELSE 0 END AS BIGINT) AS target_tokens
-        FROM j CROSS JOIN t)
-      SELECT source, natural_tokens, weight, target_tokens,
-             CAST(CASE WHEN natural_tokens = 0 THEN 0
-                  WHEN target_tokens <= 9000000000000
-                  THEN (target_tokens * 1000000) // natural_tokens
-                  ELSE target_tokens //
-                       greatest(natural_tokens // 1000000, 1)
-                  END AS BIGINT) AS epochs_ppm
-      FROM p ORDER BY source""",
-
-    "q_dataset_card" -> (qualityMarginOracleCtes("source") + """,
-      base AS (
-        SELECT source, CAST(n_tok AS BIGINT) AS nt, md5(text) AS fp,
-               margin
-        FROM m)
-      SELECT source,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(nt) AS BIGINT) AS n_tokens,
-             CAST(count(*) - count(DISTINCT fp) AS BIGINT) AS n_dup_docs,
-             CAST((sum(nt) * 100) // count(*) AS BIGINT)
-               AS mean_tokens_x100,
-             CAST((sum(CASE WHEN nt >= 64 THEN 1 ELSE 0 END) * 1000000)
-               // count(*) AS BIGINT) AS long_doc_ppm,
-             CAST((sum(CASE WHEN margin >= 0.0 THEN 1 ELSE 0 END)
-               * 1000000) // count(*) AS BIGINT) AS quality_keep_ppm
-      FROM base GROUP BY source ORDER BY source"""),
-
-    "q_rag_context" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'),
-                 x -> x <> '') AS tk
-        FROM documents),
-      chunks AS (
-        SELECT doc_id,
-               CAST(start_tok / 24 AS BIGINT) AS chunk_idx,
-               CAST(len(tk[start_tok + 1 : start_tok + 32]) AS BIGINT)
-                 AS n_tok,
-               tk[start_tok + 1 : start_tok + 32] AS ctk
-        FROM (SELECT doc_id, tk,
-                     unnest(range(0, len(tk), 24)) AS start_tok
-              FROM toks WHERE len(tk) > 0)),
-      cterms AS (
-        SELECT doc_id, chunk_idx, n_tok, term,
-               CAST(count(*) AS BIGINT) AS tfc
-        FROM (SELECT doc_id, chunk_idx, n_tok, unnest(ctk) AS term
-              FROM chunks)
-        GROUP BY 1, 2, 3, 4),
-      q AS (SELECT * FROM (VALUES
-              ('q1', 'sort merge join'),
-              ('q2', 'table scan filter'),
-              ('q3', 'stream window state')) v(query_id, qtext)),
-      qterms AS (
-        SELECT query_id, term, CAST(count(*) AS BIGINT) AS tfq
-        FROM (SELECT query_id,
-                     unnest(list_filter(string_split_regex(qtext, '\s+'),
-                       x -> x <> '')) AS term
-              FROM q)
-        GROUP BY 1, 2),
-      dots AS (
-        SELECT query_id, doc_id, chunk_idx, n_tok,
-               CAST(sum(c.tfc * t.tfq) AS BIGINT) AS dot
-        FROM cterms c JOIN qterms t USING (term)
-        GROUP BY 1, 2, 3, 4
-        HAVING sum(c.tfc * t.tfq) >= 1),
-      sel AS (
-        SELECT query_id, doc_id, chunk_idx, n_tok, dot,
-               CAST(COALESCE(sum(n_tok) OVER (PARTITION BY query_id
-                 ORDER BY dot DESC, doc_id ASC, chunk_idx ASC
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 AS BIGINT) AS cum_before
-        FROM dots)
-      SELECT query_id, doc_id, chunk_idx, n_tok, dot, cum_before
-      FROM sel WHERE cum_before < 256
-      ORDER BY query_id, cum_before, doc_id, chunk_idx""",
-
-    "q_calibrate" -> (qualityMarginOracleCtes("doc_id, source") + """,
-      r AS (
-        SELECT doc_id, source,
-               row_number() OVER (PARTITION BY source
-                 ORDER BY margin DESC, doc_id ASC) AS rk,
-               count(*) OVER (PARTITION BY source) AS n
-        FROM m)
-      SELECT doc_id, source,
-             CASE WHEN n > 1 THEN ((rk - 1) * 1000000) // (n - 1)
-                  ELSE 0 END AS pct_ppm
-      FROM r
-      WHERE (CASE WHEN n > 1 THEN ((rk - 1) * 1000000) // (n - 1)
-                  ELSE 0 END) < 400000
-      ORDER BY source, pct_ppm, doc_id"""),
-
-    "q_collocations" -> """
-      WITH toks AS (
-        SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                           x -> x <> '') AS t
-        FROM documents),
-      uni AS (
-        SELECT w, count(*) AS w1_n FROM (
-          SELECT unnest(t) AS w FROM toks) GROUP BY 1),
-      pairs AS (
-        SELECT t[i + 1] AS w1, t[i + 2] AS w2
-        FROM toks, UNNEST(range(len(t) - 1)) AS u(i)
-        WHERE len(t) >= 2),
-      bi AS (
-        SELECT w1, w2, CAST(count(*) AS BIGINT) AS pair_n
-        FROM pairs GROUP BY 1, 2 HAVING count(*) >= 5)
-      SELECT b.w1, b.w2, b.pair_n, CAST(u.w1_n AS BIGINT) AS w1_n,
-             CAST((b.pair_n * 1000000) // u.w1_n AS BIGINT) AS conf_ppm
-      FROM bi b JOIN uni u ON u.w = b.w1
-      ORDER BY conf_ppm DESC, b.w1 ASC, b.w2 ASC LIMIT 20""",
-
-    "q_anomaly" -> anomalyOracleSql,
-
-    "q_search_phrase" -> """
-      WITH toks AS (
-        SELECT doc_id, list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '') AS t
-        FROM documents),
-      pp AS (
-        SELECT doc_id, i AS pos, t[i + 1] AS term
-        FROM toks, UNNEST(range(len(t))) AS u(i)),
-      a0 AS (SELECT doc_id, pos AS p0 FROM pp WHERE term = 'table'),
-      a1 AS (SELECT doc_id, pos - 1 AS p0 FROM pp WHERE term = 'scan'),
-      m AS (SELECT a0.doc_id, a0.p0 FROM a0 JOIN a1 USING (doc_id, p0))
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches
-      FROM m GROUP BY 1 ORDER BY doc_id""",
-
-    "q_length_batches" -> """
-      WITH base AS (
-        SELECT doc_id, CAST(len(list_filter(string_split_regex(text,
-          '\s+'), x -> x <> '')) AS BIGINT) AS len
-        FROM documents),
-      b AS (SELECT doc_id, len, (len - 1) // 16 AS bucket
-            FROM base WHERE len > 0),
-      r AS (SELECT bucket, len,
-              (row_number() OVER (PARTITION BY bucket
-                 ORDER BY len DESC, doc_id ASC) - 1) // 8 AS batch_id
-            FROM b)
-      SELECT bucket, batch_id, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(max(len) AS BIGINT) AS max_len,
-             CAST(sum(len) AS BIGINT) AS sum_len,
-             CAST(count(*) * max(len) - sum(len) AS BIGINT) AS padding
-      FROM r GROUP BY 1, 2 ORDER BY bucket, batch_id""",
-
-    "q_search_kwic" -> """
-      WITH toks AS (
-        SELECT doc_id, list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '') AS t
-        FROM documents),
-      pp AS (
-        SELECT doc_id, i AS pos, t[i + 1] AS term
-        FROM toks, UNNEST(range(len(t))) AS u(i)),
-      m AS (SELECT doc_id, pos FROM pp WHERE term = 'dup')
-      SELECT m.doc_id, CAST(m.pos AS BIGINT) AS pos,
-             array_to_string(
-               t.t[greatest(m.pos - 3, 0) + 1 : m.pos + 4], ' ')
-               AS snippet
-      FROM m JOIN toks t USING (doc_id)
-      ORDER BY doc_id, pos""",
-
-    "q_search_near" -> """
-      WITH toks AS (
-        SELECT doc_id, list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '') AS t
-        FROM documents),
-      pp AS (
-        SELECT doc_id, i AS pos, t[i + 1] AS term
-        FROM toks, UNNEST(range(len(t))) AS u(i)),
-      a AS (SELECT doc_id, pos AS p1 FROM pp WHERE term = 'sort'),
-      b AS (SELECT doc_id, pos AS p2 FROM pp WHERE term = 'merge')
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs
-      FROM a JOIN b USING (doc_id) WHERE abs(p1 - p2) <= 3
-      GROUP BY 1 ORDER BY doc_id""",
-
-    "q_lake_forget" -> """
-      WITH surv AS (SELECT * FROM events WHERE user_id <> 7)
-      SELECT * FROM (
-        SELECT 'ev' AS tbl, CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        FROM surv
-        UNION ALL
-        SELECT 'prof' AS tbl,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS n_rows,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        FROM surv)
-      ORDER BY tbl""",
-
-    "q_gapfill" -> """
-      WITH series AS (
-        SELECT event_type, date_trunc('hour', ts) AS hour,
-               CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      b AS (SELECT min(hour) AS lo, max(hour) AS hi FROM series),
-      g AS (SELECT DISTINCT event_type FROM series),
-      spine AS (
-        SELECT g.event_type, CAST(u.h AS TIMESTAMP) AS hour
-        FROM g CROSS JOIN b,
-             UNNEST(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS u(h))
-      SELECT s.event_type, s.hour, COALESCE(se.n, 0) AS n
-      FROM spine s LEFT JOIN series se USING (event_type, hour)
-      ORDER BY event_type, hour""",
-
-    "q_stream_trending" -> """
-      SELECT term, CAST(n AS BIGINT) AS n FROM (
-        SELECT term, count(*) AS n FROM (
-          SELECT unnest(list_filter(string_split_regex(
-            regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-            x -> x <> '')) AS term
-          FROM documents)
-        GROUP BY term)
-      ORDER BY n DESC, term LIMIT 20""",
-
-    "q_stream_anomaly" -> anomalyOracleSql,
-
-    "q_quality" -> """
-      WITH norm AS (
-        SELECT doc_id,
-               regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS nt
-        FROM documents),
-      f AS (
-        SELECT doc_id,
-               CAST(length(nt) AS DOUBLE) AS n_chars,
-               CAST(len(list_filter(string_split_regex(nt, '\s+'),
-                 x -> x <> '')) AS DOUBLE) AS n_tok,
-               CAST(length(regexp_replace(nt, '[\p{L}\p{N}\s]', '', 'g'))
-                 AS DOUBLE) AS n_sym,
-               CAST(length(regexp_replace(nt, '[^0-9]', '', 'g'))
-                 AS DOUBLE) AS n_dig
-        FROM norm),
-      feats AS (
-        SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tokens,
-               CASE WHEN n_tok > 0 THEN (n_chars - (n_tok - 1)) / n_tok
-                    ELSE 0.0 END AS mean_token_len,
-               CASE WHEN n_chars > 0 THEN n_sym / n_chars ELSE 0.0 END
-                 AS symbol_ratio,
-               CASE WHEN n_chars > 0 THEN n_dig / n_chars ELSE 0.0 END
-                 AS digit_ratio
-        FROM f)
-      SELECT doc_id, n_tokens,
-             round(mean_token_len, 6) AS mean_token_len,
-             round(symbol_ratio, 6) AS symbol_ratio,
-             round(digit_ratio, 6) AS digit_ratio,
-             round(
-               (CASE WHEN n_tokens >= 5 AND n_tokens <= 100000 THEN 1.0
-                     ELSE 0.3 END) *
-               (CASE WHEN mean_token_len >= 2 AND mean_token_len <= 12
-                     THEN 1.0 ELSE 0.5 END) *
-               greatest(0.0, 1.0 - symbol_ratio * 4) *
-               greatest(0.0, 1.0 - digit_ratio * 2), 6) AS quality
-      FROM feats ORDER BY doc_id""",
-    "q_corpus_pipeline" -> """
-      WITH norm AS (
-        SELECT doc_id, text,
-               regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS nt
-        FROM documents),
-      f AS (
-        SELECT doc_id,
-               CAST(length(nt) AS DOUBLE) AS n_chars,
-               CAST(len(list_filter(string_split_regex(nt, '\s+'),
-                 x -> x <> '')) AS DOUBLE) AS n_tok,
-               CAST(length(regexp_replace(nt, '[\p{L}\p{N}\s]', '', 'g'))
-                 AS DOUBLE) AS n_sym,
-               CAST(length(regexp_replace(nt, '[^0-9]', '', 'g'))
-                 AS DOUBLE) AS n_dig
-        FROM norm),
-      qual AS (
-        SELECT doc_id, round(
-          (CASE WHEN n_tok >= 5 AND n_tok <= 100000 THEN 1.0 ELSE 0.3 END) *
-          (CASE WHEN n_tok > 0 AND (n_chars - (n_tok - 1)) / n_tok >= 2
-                 AND (n_chars - (n_tok - 1)) / n_tok <= 12
-                THEN 1.0 ELSE 0.5 END) *
-          greatest(0.0, 1.0 - (CASE WHEN n_chars > 0 THEN n_sym / n_chars
-                                    ELSE 0.0 END) * 4) *
-          greatest(0.0, 1.0 - (CASE WHEN n_chars > 0 THEN n_dig / n_chars
-                                    ELSE 0.0 END) * 2), 6) AS q
-        FROM f),
-      kept AS (
-        SELECT n.doc_id, n.text, n.nt, qual.q
-        FROM norm n JOIN qual USING (doc_id) WHERE qual.q >= 0.5),
-      keepers AS (
-        SELECT min(doc_id) AS doc_id FROM kept GROUP BY md5(nt)),
-      cjk AS (
-        SELECT doc_id,
-               CASE WHEN length(regexp_replace(text, '\s', '', 'g')) = 0
-                    THEN 0.0
-                    ELSE length(regexp_replace(
-                           regexp_replace(text, '\s', '', 'g'),
-                           '[^\p{Han}\p{Hiragana}\p{Katakana}\p{Hangul}]',
-                           '', 'g'))
-                         / CAST(length(regexp_replace(text, '\s', '', 'g'))
-                                AS DOUBLE) END AS cjk_ratio
-        FROM kept),
-      toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(nt, '\s+'), x -> x <> '') AS t
-        FROM kept),
-      scores AS (
-        SELECT doc_id,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['der','die','und','das','ist','nicht','von','mit','den','ein'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_de,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['the','of','and','to','in','is','that','it','was','for'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_en,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['de','la','que','el','en','los','del','las','por','un'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_es,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['le','la','les','des','est','dans','que','une','pour','qui'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_fr,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['di','che','il','la','per','del','con','una','sono','della'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_it,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['de','que','em','para','com','uma','os','não','mais','das'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_pt
-        FROM toks),
-      lang AS (
-        SELECT s.doc_id,
-             CASE WHEN c.cjk_ratio > 0.3 THEN 'zh'
-                  WHEN greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) <= 0.0 THEN 'und'
-                  WHEN s_de = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'de'
-                  WHEN s_en = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'en'
-                  WHEN s_es = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'es'
-                  WHEN s_fr = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'fr'
-                  WHEN s_it = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'it'
-                  ELSE 'pt' END AS lang
-        FROM scores s JOIN cjk c ON s.doc_id = c.doc_id)
-      SELECT l.lang, count(*) AS n_docs, round(avg(k.q), 6) AS avg_quality
-      FROM keepers kp
-      JOIN kept k ON k.doc_id = kp.doc_id
-      JOIN lang l ON l.doc_id = kp.doc_id
-      GROUP BY l.lang ORDER BY l.lang""",
-    "q_lang_id" -> """
-      WITH cjk AS (
-        SELECT doc_id,
-               CASE WHEN length(regexp_replace(text, '\s', '', 'g')) = 0
-                    THEN 0.0
-                    ELSE length(regexp_replace(
-                           regexp_replace(text, '\s', '', 'g'),
-                           '[^\p{Han}\p{Hiragana}\p{Katakana}\p{Hangul}]',
-                           '', 'g'))
-                         / CAST(length(regexp_replace(text, '\s', '', 'g'))
-                                AS DOUBLE) END AS cjk_ratio
-        FROM documents),
-      toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-                 x -> x <> '') AS t
-        FROM documents),
-      scores AS (
-        SELECT doc_id,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['der','die','und','das','ist','nicht','von','mit','den','ein'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_de,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['the','of','and','to','in','is','that','it','was','for'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_en,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['de','la','que','el','en','los','del','las','por','un'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_es,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['le','la','les','des','est','dans','que','une','pour','qui'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_fr,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['di','che','il','la','per','del','con','una','sono','della'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_it,
-          CASE WHEN len(t) = 0 THEN 0.0 ELSE
-            len(list_filter(t, x -> list_contains(
-              ['de','que','em','para','com','uma','os','não','mais','das'], x)))
-            / CAST(len(t) AS DOUBLE) END AS s_pt
-        FROM toks)
-      SELECT s.doc_id,
-             CASE WHEN c.cjk_ratio > 0.3 THEN 'zh'
-                  WHEN greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) <= 0.0 THEN 'und'
-                  WHEN s_de = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'de'
-                  WHEN s_en = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'en'
-                  WHEN s_es = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'es'
-                  WHEN s_fr = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'fr'
-                  WHEN s_it = greatest(s_de,s_en,s_es,s_fr,s_it,s_pt) THEN 'it'
-                  ELSE 'pt' END AS lang_guess,
-             round(s_en, 6) AS en_score
-      FROM scores s JOIN cjk c ON s.doc_id = c.doc_id
-      ORDER BY s.doc_id""",
-    "q_dedup_cc" -> """
-      WITH fp AS (SELECT doc_id,
-                    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS f
-                  FROM documents),
-           g AS (SELECT f, min(doc_id) AS m, count(*) AS c
-                 FROM fp GROUP BY f)
-      SELECT fp.doc_id AS id, g.m AS component
-      FROM fp JOIN g USING (f) WHERE g.c > 1 ORDER BY id""",
-    // hard negatives: brute cosine with the label-mismatch filter, same
-    // arithmetic as q_ann_brute
-    "q_mine_negatives" -> """
-      WITH q AS (SELECT vec_id AS query_id, embedding AS qvec,
-                        label AS qlabel
-                 FROM embeddings WHERE vec_id < 10),
-      scored AS (
-        SELECT q.query_id, e.vec_id, e.label,
-               list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                      CAST(q.qvec AS DOUBLE[])) AS cos
-        FROM embeddings e CROSS JOIN q WHERE e.label <> q.qlabel),
-      ranked AS (
-        SELECT query_id, vec_id, label, cos,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos DESC, vec_id) AS rank
-        FROM scored)
-      SELECT query_id, vec_id, label, round(cos, 6) AS cos, rank
-      FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-    // leak-free split: closed-form CC rep (min doc_id per dup-fingerprint
-    // group; singletons are their own rep) + the q_split bucket formula
-    // keyed on the rep
-    "q_split_leakfree" -> """
-      WITH fp AS (SELECT doc_id,
-                    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-                      AS f
-                  FROM documents),
-           g AS (SELECT f, min(doc_id) AS m FROM fp GROUP BY f),
-           r AS (SELECT fp.doc_id, g.m AS rep FROM fp JOIN g USING (f))
-      SELECT doc_id, rep,
-             CASE WHEN ((rep % 1000000007) * 2654435761) % 1000000007
-                       % 10000 < 9000 THEN 'train'
-                  WHEN ((rep % 1000000007) * 2654435761) % 1000000007
-                       % 10000 < 9500 THEN 'val'
-                  ELSE 'test' END AS split
-      FROM r ORDER BY doc_id""",
-    // Bitext mining replayed: both directions' integer-quantized
-    // cosine neighborhoods, the mutual-top-1 join, and the integer
-    // mean-of-means margin (CASE mirrors the engine's non-positive-
-    // denominator guard).
-    "q_bitext_mine" -> """
-      WITH src AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-                   FROM embeddings WHERE vec_id % 3 = 0),
-      tgt AS (
-        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings WHERE vec_id % 3 = 1
-        UNION ALL
-        SELECT vec_id + 1000000, CAST(embedding AS DOUBLE[])
-        FROM embeddings WHERE vec_id % 6 = 0),
-      p AS MATERIALIZED (
-        SELECT s.id AS src_id, t.id AS tgt_id,
-               CAST(round(list_cosine_similarity(s.v, t.v) * 1000000)
-                 AS BIGINT) AS cos_u
-        FROM src s CROSS JOIN tgt t),
-      sr AS MATERIALIZED (
-        SELECT src_id, tgt_id, cos_u, row_number() OVER (
-          PARTITION BY src_id ORDER BY cos_u DESC, tgt_id) AS rk FROM p),
-      ss AS (SELECT src_id, CAST(sum(cos_u) AS BIGINT) AS sum_s,
-                    CAST(count(*) AS BIGINT) AS n_s
-             FROM sr WHERE rk <= 4 GROUP BY 1),
-      sb AS (SELECT src_id, tgt_id, cos_u FROM sr WHERE rk = 1),
-      tr AS MATERIALIZED (
-        SELECT src_id, tgt_id, cos_u, row_number() OVER (
-          PARTITION BY tgt_id ORDER BY cos_u DESC, src_id) AS rk FROM p),
-      ts AS (SELECT tgt_id, CAST(sum(cos_u) AS BIGINT) AS sum_t,
-                    CAST(count(*) AS BIGINT) AS n_t
-             FROM tr WHERE rk <= 4 GROUP BY 1),
-      tb AS (SELECT tgt_id, src_id AS best_s FROM tr WHERE rk = 1),
-      mined AS (
-        SELECT sb.src_id, sb.tgt_id, sb.cos_u,
-               CASE WHEN ss.sum_s * ts.n_t + ts.sum_t * ss.n_s > 0
-                 THEN CAST((2000000 * sb.cos_u * ss.n_s * ts.n_t) //
-                   (ss.sum_s * ts.n_t + ts.sum_t * ss.n_s) AS BIGINT)
-                 ELSE CAST(0 AS BIGINT) END AS margin_ppm
-        FROM sb
-        JOIN tb ON tb.tgt_id = sb.tgt_id AND tb.best_s = sb.src_id
-        JOIN ss ON ss.src_id = sb.src_id
-        JOIN ts ON ts.tgt_id = sb.tgt_id)
-      SELECT src_id, tgt_id, cos_u, margin_ppm FROM mined
-      WHERE margin_ppm >= 1050000
-      ORDER BY src_id, tgt_id""",
-    "q_ann_brute" -> """
-      WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
-                 FROM embeddings WHERE vec_id < 10),
-      scored AS (
-        SELECT q.query_id, e.vec_id,
-               list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                      CAST(q.qvec AS DOUBLE[])) AS cos
-        FROM embeddings e CROSS JOIN q),
-      ranked AS (
-        SELECT query_id, vec_id, cos,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos DESC, vec_id) AS rank
-        FROM scored)
-      SELECT query_id, vec_id, round(cos, 6) AS cos, rank
-      FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-    // q_ann_srp: EXACT oracle via frozen hyperplanes — the planes are
-    // deterministic seeded vectors (VectorFunctions.randomPlanes(8, 64,
-    // seed 42)), inlined below as literals, so DuckDB recomputes the SRP
-    // buckets (sign bits over dot products — normalization can't change a
-    // sign), replays the 1-bit-flip multi-probe, and exact-rescores the
-    // same candidate set.
-    "q_ann_srp" -> s"""
-      WITH planes(i, p) AS (VALUES $srpPlaneLiterals),
-      e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      b AS (
-        SELECT e.vec_id,
-               CAST(sum(CASE WHEN list_dot_product(e.v, pl.p) >= 0
-                             THEN (1::BIGINT << pl.i) ELSE 0 END) AS BIGINT)
-                 AS bucket
-        FROM e CROSS JOIN planes pl GROUP BY e.vec_id),
-      q AS (SELECT vec_id AS query_id, bucket AS qbucket
-            FROM b WHERE vec_id < 10),
-      probes AS (
-        SELECT query_id,
-               CASE WHEN g < 0 THEN qbucket
-                    ELSE xor(qbucket, (1::BIGINT << g)) END AS bucket
-        FROM q, UNNEST(range(-1, 8)) t(g)),
-      cand AS (SELECT DISTINCT p.query_id, c.vec_id
-               FROM probes p JOIN b c USING (bucket)),
-      scored AS (
-        SELECT cand.query_id, cand.vec_id,
-               list_cosine_similarity(CAST(ce.embedding AS DOUBLE[]),
-                                      CAST(qe.embedding AS DOUBLE[])) AS cos
-        FROM cand JOIN embeddings ce ON ce.vec_id = cand.vec_id
-                  JOIN embeddings qe ON qe.vec_id = cand.query_id),
-      ranked AS (
-        SELECT query_id, vec_id, cos,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos DESC, vec_id) AS rank
-        FROM scored)
-      SELECT query_id, vec_id, round(cos, 6) AS cos, rank
-      FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-    // q_ann_recall: replay BOTH retrieval sides (the q_ann_brute scan and
-    // the q_ann_srp frozen-hyperplane index, verbatim CTE shapes), then
-    // set-compare ids per query — every output is an integer, so nothing
-    // float-sensitive crosses the engine boundary.
-    "q_ann_recall" -> s"""
-      WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
-                 FROM embeddings WHERE vec_id < 10),
-      bscored AS (
-        SELECT q.query_id, e.vec_id,
-               list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                      CAST(q.qvec AS DOUBLE[])) AS cos
-        FROM embeddings e CROSS JOIN q),
-      brute AS (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos DESC, vec_id) AS rank
-        FROM bscored QUALIFY rank <= 5),
-      planes(i, p) AS (VALUES $srpPlaneLiterals),
-      ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             FROM embeddings),
-      b AS (
-        SELECT ev.vec_id,
-               CAST(sum(CASE WHEN list_dot_product(ev.v, pl.p) >= 0
-                             THEN (1::BIGINT << pl.i) ELSE 0 END) AS BIGINT)
-                 AS bucket
-        FROM ev CROSS JOIN planes pl GROUP BY ev.vec_id),
-      qb AS (SELECT vec_id AS query_id, bucket AS qbucket
-             FROM b WHERE vec_id < 10),
-      probes AS (
-        SELECT query_id,
-               CASE WHEN g < 0 THEN qbucket
-                    ELSE xor(qbucket, (1::BIGINT << g)) END AS bucket
-        FROM qb, UNNEST(range(-1, 8)) t(g)),
-      cand AS (SELECT DISTINCT p.query_id, c.vec_id
-               FROM probes p JOIN b c USING (bucket)),
-      ascored AS (
-        SELECT cand.query_id, cand.vec_id,
-               list_cosine_similarity(CAST(ce.embedding AS DOUBLE[]),
-                                      CAST(qe.embedding AS DOUBLE[])) AS cos
-        FROM cand JOIN embeddings ce ON ce.vec_id = cand.vec_id
-                  JOIN embeddings qe ON qe.vec_id = cand.query_id),
-      approx AS (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos DESC, vec_id) AS rank
-        FROM ascored QUALIFY rank <= 5),
-      hit AS (
-        SELECT a.query_id, count(*) AS hits,
-               min(a.rank) AS first_hit_rank
-        FROM approx a JOIN brute USING (query_id, vec_id)
-        GROUP BY 1)
-      SELECT q.query_id,
-             CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-             CAST(coalesce(h.hits, 0) * 100 // 5 AS BIGINT) AS recall_pct,
-             CAST(coalesce(h.first_hit_rank, -1) AS BIGINT)
-               AS first_hit_rank
-      FROM q LEFT JOIN hit h ON h.query_id = q.query_id
-      ORDER BY q.query_id""",
-
-    // q_multimodal_audio: rebuild the 16-bit LE PCM samples from the UTF-8
-    // text bytes (the synthetic WAV's data chunk) via hex-pair extraction,
-    // and recompute the exact integer invariants the Spark decoder reports
-    "q_multimodal_audio" -> """
-      WITH b AS (SELECT doc_id, hex(encode(text)) AS h,
-                        octet_length(encode(text)) AS n
-                 FROM documents WHERE doc_id % 3 = 1),
-      s AS (SELECT doc_id, n,
-              list_transform(range(0, n // 2), i ->
-                CAST(('0x' || substr(h, 4*i+3, 2) || substr(h, 4*i+1, 2))
-                  AS INTEGER)) AS raw
-            FROM b),
-      v AS (SELECT doc_id, n, list_transform(raw, x ->
-              CASE WHEN x >= 32768 THEN x - 65536 ELSE x END) AS sm
-            FROM s)
-      SELECT doc_id, CAST(1 + doc_id % 2 AS INT) AS channels,
-             CAST(n // 2 AS BIGINT) AS n_samples,
-             CAST(coalesce(list_sum(list_transform(sm, x ->
-               CAST(x AS BIGINT) * x)), 0) AS BIGINT) AS sum_sq,
-             CAST(coalesce(list_max(list_transform(sm, x -> abs(x))), 0)
-               AS INT) AS peak
-      FROM v ORDER BY doc_id""",
-    // q_ann_pq: re-derive the frozen closed-form codebooks, re-encode every
-    // vector (row_number over (d DESC, c DESC) = Spark's array_max struct
-    // tie rule), rebuild each query's flattened LUT in (s, c) order and sum
-    // lookups in s order — float-order-identical to the Spark aggregate.
-    "q_ann_pq" -> """
-      WITH cb AS (
-        SELECT s, c, list_transform(range(0, 8), j ->
-          (((5*s + 3*c + 7*j + c*j) % 16) - 7.5) / 64.0) AS v
-        FROM range(0, 8) t1(s), range(0, 16) t2(c)),
-      e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw
-            FROM embeddings),
-      n AS (SELECT vec_id,
-              list_transform(raw, x -> x / sqrt(list_dot_product(raw, raw)))
-                AS cv
-            FROM e),
-      qn AS (SELECT vec_id AS query_id, cv AS qv FROM n WHERE vec_id < 10),
-      sub AS (SELECT n.vec_id, cb.s, cb.c,
-                list_dot_product(n.cv[cb.s*8+1 : cb.s*8+8], cb.v)
-                  - list_dot_product(cb.v, cb.v) / 2.0 AS d
-              FROM n CROSS JOIN cb),
-      codes AS (
-        SELECT vec_id, array_agg(c ORDER BY s) AS cs
-        FROM (SELECT vec_id, s, c, row_number() OVER (
-                PARTITION BY vec_id, s ORDER BY d DESC, c DESC) AS rk
-              FROM sub) WHERE rk = 1 GROUP BY vec_id),
-      lut AS (SELECT qn.query_id, array_agg(
-                list_dot_product(qn.qv[cb.s*8+1 : cb.s*8+8], cb.v)
-                ORDER BY cb.s, cb.c) AS lf
-              FROM qn CROSS JOIN cb GROUP BY qn.query_id),
-      adc AS (SELECT lut.query_id, codes.vec_id,
-                list_sum(list_transform(range(0, 8), s ->
-                  lf[s*16 + cs[s+1] + 1])) AS adc
-              FROM codes CROSS JOIN lut),
-      ranked AS (SELECT query_id, vec_id, adc,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY adc DESC, vec_id) AS rank FROM adc)
-      SELECT query_id, vec_id, round(adc, 6) AS adc, rank
-      FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-    // q_ann_ivfpq: frozen-everything IVF-PQ — Hadamard coarse centroids
-    // (unit ±1/8 rows), coarse assignment ties → lower list id
-    // (assignNearest), PQ encode ties → higher code id (array_max), probes
-    // = top-2 lists per query, ADC only over candidates in probed lists.
-    // Plain IVF, frozen Hadamard coarse centroids: assignment → probe →
-    // exact cosine rescore → top-k, replayed end-to-end (the PQ-less
-    // sibling of q_ann_ivfpq below; same hc/assign/probes CTE shapes).
-    "q_ann_ivf" -> """
-      WITH hc AS (
-        SELECT g, list_transform(range(0, 64), j ->
-          (CASE WHEN bit_count((g+1) & j) % 2 = 0
-                THEN 1.0 ELSE -1.0 END) / 8.0) AS hv
-        FROM range(0, 8) t(g)),
-      e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw
-            FROM embeddings),
-      n AS (SELECT vec_id,
-              list_transform(raw, x -> x / sqrt(list_dot_product(raw, raw)))
-                AS cv
-            FROM e),
-      assign AS (SELECT vec_id, g FROM (
-          SELECT n.vec_id, hc.g, row_number() OVER (PARTITION BY n.vec_id
-            ORDER BY list_dot_product(n.cv, hc.hv) DESC, hc.g ASC) AS rk
-          FROM n CROSS JOIN hc) WHERE rk = 1),
-      qn AS (SELECT vec_id AS query_id, cv AS qv FROM n WHERE vec_id < 10),
-      probes AS (SELECT query_id, g FROM (
-          SELECT qn.query_id, hc.g, row_number() OVER (
-            PARTITION BY qn.query_id
-            ORDER BY list_dot_product(qn.qv, hc.hv) DESC, hc.g ASC) AS rk
-          FROM qn CROSS JOIN hc) WHERE rk <= 2),
-      scored AS (SELECT p.query_id, a.vec_id,
-                   list_dot_product(n.cv, qn.qv) AS cos
-                 FROM probes p JOIN assign a USING (g)
-                 JOIN n ON n.vec_id = a.vec_id
-                 JOIN qn ON qn.query_id = p.query_id),
-      ranked AS (SELECT query_id, vec_id, cos,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY cos DESC, vec_id) AS rank FROM scored)
-      SELECT query_id, vec_id, round(cos, 6) AS cos, rank
-      FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-    "q_ann_ivfpq" -> """
-      WITH hc AS (
-        SELECT g, list_transform(range(0, 64), j ->
-          (CASE WHEN bit_count((g+1) & j) % 2 = 0
-                THEN 1.0 ELSE -1.0 END) / 8.0) AS hv
-        FROM range(0, 8) t(g)),
-      cb AS (
-        SELECT s, c, list_transform(range(0, 8), j ->
-          (((5*s + 3*c + 7*j + c*j) % 16) - 7.5) / 64.0) AS v
-        FROM range(0, 8) t1(s), range(0, 16) t2(c)),
-      e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw
-            FROM embeddings),
-      n AS (SELECT vec_id,
-              list_transform(raw, x -> x / sqrt(list_dot_product(raw, raw)))
-                AS cv
-            FROM e),
-      assign AS (SELECT vec_id, g FROM (
-          SELECT n.vec_id, hc.g, row_number() OVER (PARTITION BY n.vec_id
-            ORDER BY list_dot_product(n.cv, hc.hv) DESC, hc.g ASC) AS rk
-          FROM n CROSS JOIN hc) WHERE rk = 1),
-      sub AS (SELECT n.vec_id, cb.s, cb.c,
-                list_dot_product(n.cv[cb.s*8+1 : cb.s*8+8], cb.v)
-                  - list_dot_product(cb.v, cb.v) / 2.0 AS d
-              FROM n CROSS JOIN cb),
-      codes AS (
-        SELECT vec_id, array_agg(c ORDER BY s) AS cs
-        FROM (SELECT vec_id, s, c, row_number() OVER (
-                PARTITION BY vec_id, s ORDER BY d DESC, c DESC) AS rk
-              FROM sub) WHERE rk = 1 GROUP BY vec_id),
-      qn AS (SELECT vec_id AS query_id, cv AS qv FROM n WHERE vec_id < 10),
-      probes AS (SELECT query_id, g FROM (
-          SELECT qn.query_id, hc.g, row_number() OVER (
-            PARTITION BY qn.query_id
-            ORDER BY list_dot_product(qn.qv, hc.hv) DESC, hc.g ASC) AS rk
-          FROM qn CROSS JOIN hc) WHERE rk <= 2),
-      lut AS (SELECT qn.query_id, array_agg(
-                list_dot_product(qn.qv[cb.s*8+1 : cb.s*8+8], cb.v)
-                ORDER BY cb.s, cb.c) AS lf
-              FROM qn CROSS JOIN cb GROUP BY qn.query_id),
-      cand AS (SELECT p.query_id, a.vec_id
-               FROM probes p JOIN assign a USING (g)),
-      adc AS (SELECT cand.query_id, cand.vec_id,
-                list_sum(list_transform(range(0, 8), s ->
-                  lf[s*16 + cs[s+1] + 1])) AS adc
-              FROM cand JOIN codes USING (vec_id) JOIN lut USING (query_id)),
-      ranked AS (SELECT query_id, vec_id, adc,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY adc DESC, vec_id) AS rank FROM adc)
-      SELECT query_id, vec_id, round(adc, 6) AS adc, rank
-      FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-    // q_embed_pca: frozen Hadamard components h_i[j] = (−1)^popcount(r&j)/8
-    // (r ∈ {1,2,3,5}); DuckDB re-learns the centering means and whitening
-    // variances from the data and replays (x·h − μ)/√(var+1e-9) exactly.
-    "q_embed_pca" -> """
-      WITH hh AS (
-        SELECT i, list_transform(range(0, 64), j ->
-                 (CASE WHEN bit_count(r & j) % 2 = 0
-                       THEN 1.0 ELSE -1.0 END) / 8) AS h
-        FROM (VALUES (0, 1), (1, 2), (2, 3), (3, 5)) planes(i, r)),
-      e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      p AS (SELECT e.vec_id, hh.i, list_dot_product(e.v, hh.h) AS praw
-            FROM e CROSS JOIN hh),
-      st AS (SELECT i, avg(praw) AS mu,
-                    avg(praw * praw) - avg(praw) * avg(praw) AS vr
-             FROM p GROUP BY i)
-      SELECT p.vec_id,
-             round(max(CASE WHEN p.i = 0
-               THEN (praw - mu) / sqrt(vr + 1e-9) END), 4) AS p0,
-             round(max(CASE WHEN p.i = 1
-               THEN (praw - mu) / sqrt(vr + 1e-9) END), 4) AS p1,
-             round(max(CASE WHEN p.i = 2
-               THEN (praw - mu) / sqrt(vr + 1e-9) END), 4) AS p2,
-             round(max(CASE WHEN p.i = 3
-               THEN (praw - mu) / sqrt(vr + 1e-9) END), 4) AS p3
-      FROM p JOIN st USING (i) GROUP BY p.vec_id ORDER BY p.vec_id""",
-    "q_dedup_spans" -> """
-      WITH toks AS (
-        SELECT doc_id, list_filter(string_split_regex(text, '\s+'),
-                                   x -> x <> '') AS t
-        FROM documents),
-      sp AS (
-        SELECT doc_id, i AS pos,
-               array_to_string(t[(i*8+1):(i*8+8)], ' ') AS span
-        FROM toks, UNNEST(range(CAST(ceil(len(t)/8.0) AS BIGINT))) AS u(i)),
-      k AS (
-        SELECT doc_id, pos FROM (
-          SELECT doc_id, pos,
-                 row_number() OVER (PARTITION BY span
-                                    ORDER BY doc_id, pos) AS rk
-          FROM sp) WHERE rk = 1)
-      SELECT d.doc_id AS doc_id,
-             coalesce(s.txt, '') AS text_spandedup,
-             CAST(coalesce(s.n, 0) AS INT) AS n_spans_kept
-      FROM documents d LEFT JOIN (
-        SELECT sp.doc_id AS sdoc, string_agg(sp.span, ' ' ORDER BY sp.pos) AS txt,
-               count(*) AS n
-        FROM sp JOIN k USING (doc_id, pos) GROUP BY sp.doc_id) s
-        ON d.doc_id = s.sdoc
-      ORDER BY d.doc_id""",
-    // q_dedup_minhash: the PRODUCTION face's portable banding replayed at
-    // its own operating point — k=64 affine hashes, 16 bands of 4 raw
-    // signature rows, est = matches/64 (exact dyadic, no rounding)
-    "q_dedup_minhash" -> """
-      WITH norm AS (
-        SELECT doc_id, list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-               x -> x <> '') AS t
-        FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, sh FROM (
-          SELECT doc_id,
-                 CASE WHEN len(t) < 3 THEN array_to_string(t, ' ')
-                      ELSE array_to_string(t[i:i+2], ' ') END AS sh
-          FROM norm, UNNEST(CASE WHEN len(t) < 3 THEN [CAST(1 AS BIGINT)]
-                                 ELSE range(1, len(t) - 1) END) AS u(i))),
-      hb AS (
-        SELECT doc_id,
-               CAST(('0x' || substring(md5(sh), 1, 7)) AS BIGINT) AS h
-        FROM sh),
-      sig AS (
-        SELECT doc_id, i,
-               min((((1103515245 * (2 * i + 1)) % 2147483647) * h
-                    + ((12345 + 1013904223 * i) % 2147483647))
-                   % 2147483647) AS h
-        FROM hb, UNNEST(range(64)) AS s(i)
-        GROUP BY doc_id, i),
-      band AS (
-        SELECT doc_id, i // 4 AS band,
-               string_agg(h::VARCHAR, ',' ORDER BY i) AS key
-        FROM sig GROUP BY doc_id, i // 4),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM band a JOIN band b ON a.band = b.band AND a.key = b.key
-                                AND a.doc_id < b.doc_id)
-      SELECT c.a_id AS a_id, c.b_id AS b_id,
-             sum(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) / 64.0
-               AS est_jaccard
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.a_id
-      JOIN sig sb ON sb.doc_id = c.b_id AND sb.i = sa.i
-      GROUP BY c.a_id, c.b_id
-      HAVING sum(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) / 64.0 >= 0.5
-      ORDER BY a_id, b_id""",
-    // q_dedup_simhash: the production face's portable fingerprints at
-    // radius 4 — brute-force Hamming IS the full-recall guarantee the
-    // Manku banding provides, checked on real data
-    "q_dedup_simhash" -> """
-      WITH norm AS (
-        SELECT doc_id, list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-               x -> x <> '') AS t
-        FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id,
-               CAST(('0x' || substring(md5(sh), 1, 15)) AS BIGINT) AS h
-        FROM (
-          SELECT doc_id,
-                 CASE WHEN len(t) < 2 THEN array_to_string(t, ' ')
-                      ELSE array_to_string(t[i:i+1], ' ') END AS sh
-          FROM norm, UNNEST(CASE WHEN len(t) < 2 THEN [CAST(1 AS BIGINT)]
-                                 ELSE range(1, len(t)) END) AS u(i))),
-      fp AS (
-        SELECT doc_id,
-               list_sum(list_transform(range(64), b ->
-                 CASE WHEN list_sum(list_transform(hl, h ->
-                        CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) > 0
-                      THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)) AS fp
-        FROM (SELECT doc_id, list(h) AS hl FROM sh GROUP BY doc_id)),
-      p AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-               bit_count(xor(a.fp, b.fp)) AS hamming
-        FROM fp a JOIN fp b ON a.doc_id < b.doc_id)
-      SELECT a_id, b_id, CAST(hamming AS INT) AS hamming FROM p
-      WHERE hamming <= 4 ORDER BY a_id, b_id""",
-    "q_dedup_minhash_fixed" -> """
-      WITH norm AS (
-        SELECT doc_id, list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-               x -> x <> '') AS t
-        FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, sh FROM (
-          SELECT doc_id,
-                 CASE WHEN len(t) < 3 THEN array_to_string(t, ' ')
-                      ELSE array_to_string(t[i:i+2], ' ') END AS sh
-          FROM norm, UNNEST(CASE WHEN len(t) < 3 THEN [CAST(1 AS BIGINT)]
-                                 ELSE range(1, len(t) - 1) END) AS u(i))),
-      hb AS (
-        SELECT doc_id,
-               CAST(('0x' || substring(md5(sh), 1, 7)) AS BIGINT) AS h
-        FROM sh),
-      sig AS (
-        SELECT doc_id, i,
-               min((((1103515245 * (2 * i + 1)) % 2147483647) * h
-                    + ((12345 + 1013904223 * i) % 2147483647))
-                   % 2147483647) AS h
-        FROM hb, UNNEST(range(16)) AS s(i)
-        GROUP BY doc_id, i),
-      band AS (
-        SELECT doc_id, i // 2 AS band,
-               string_agg(h::VARCHAR, ',' ORDER BY i) AS key
-        FROM sig GROUP BY doc_id, i // 2),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM band a JOIN band b ON a.band = b.band AND a.key = b.key
-                                AND a.doc_id < b.doc_id)
-      SELECT c.a_id AS a_id, c.b_id AS b_id,
-             sum(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) / 16.0
-               AS est_jaccard
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.a_id
-      JOIN sig sb ON sb.doc_id = c.b_id AND sb.i = sa.i
-      GROUP BY c.a_id, c.b_id
-      HAVING sum(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) / 16.0 >= 0.5
-      ORDER BY a_id, b_id""",
-    "q_dedup_minhash_index" -> """
-      WITH norm AS (
-        SELECT doc_id, list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-               x -> x <> '') AS t
-        FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, sh FROM (
-          SELECT doc_id,
-                 CASE WHEN len(t) < 3 THEN array_to_string(t, ' ')
-                      ELSE array_to_string(t[i:i+2], ' ') END AS sh
-          FROM norm, UNNEST(CASE WHEN len(t) < 3 THEN [CAST(1 AS BIGINT)]
-                                 ELSE range(1, len(t) - 1) END) AS u(i))),
-      hb AS (
-        SELECT doc_id,
-               CAST(('0x' || substring(md5(sh), 1, 7)) AS BIGINT) AS h
-        FROM sh),
-      sig AS (
-        SELECT doc_id, i,
-               min((((1103515245 * (2 * i + 1)) % 2147483647) * h
-                    + ((12345 + 1013904223 * i) % 2147483647))
-                   % 2147483647) AS h
-        FROM hb, UNNEST(range(16)) AS s(i)
-        GROUP BY doc_id, i),
-      band AS (
-        SELECT doc_id, i // 2 AS band,
-               string_agg(h::VARCHAR, ',' ORDER BY i) AS key
-        FROM sig GROUP BY doc_id, i // 2),
-      cand AS (
-        SELECT DISTINCT b.doc_id AS new_id, a.doc_id AS hist_id
-        FROM band a JOIN band b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id % 3 <> 0 AND b.doc_id % 3 = 0)
-      SELECT c.new_id AS new_id, c.hist_id AS hist_id,
-             sum(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) / 16.0
-               AS est_jaccard
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.new_id
-      JOIN sig sb ON sb.doc_id = c.hist_id AND sb.i = sa.i
-      GROUP BY c.new_id, c.hist_id
-      HAVING sum(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) / 16.0 >= 0.5
-      ORDER BY new_id, hist_id""",
-    "q_dedup_simhash_fixed" -> """
-      WITH norm AS (
-        SELECT doc_id, list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-               x -> x <> '') AS t
-        FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id,
-               CAST(('0x' || substring(md5(sh), 1, 15)) AS BIGINT) AS h
-        FROM (
-          SELECT doc_id,
-                 CASE WHEN len(t) < 2 THEN array_to_string(t, ' ')
-                      ELSE array_to_string(t[i:i+1], ' ') END AS sh
-          FROM norm, UNNEST(CASE WHEN len(t) < 2 THEN [CAST(1 AS BIGINT)]
-                                 ELSE range(1, len(t)) END) AS u(i))),
-      fp AS (
-        SELECT doc_id,
-               list_sum(list_transform(range(64), b ->
-                 CASE WHEN list_sum(list_transform(hl, h ->
-                        CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) > 0
-                      THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)) AS fp
-        FROM (SELECT doc_id, list(h) AS hl FROM sh GROUP BY doc_id)),
-      p AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-               bit_count(xor(a.fp, b.fp)) AS hamming
-        FROM fp a JOIN fp b ON a.doc_id < b.doc_id)
-      SELECT a_id, b_id, CAST(hamming AS INT) AS hamming FROM p
-      WHERE hamming <= 8 ORDER BY a_id, b_id""",
-    "q_dedup_substr" -> """
-      WITH toks AS (
-        SELECT doc_id, list_filter(string_split_regex(text, '\s+'),
-                                   x -> x <> '') AS t
-        FROM documents),
-      occ AS (
-        SELECT doc_id, i AS pos, array_to_string(t[(i+1):(i+8)], ' ') AS w
-        FROM toks, UNNEST(range(len(t) - 8 + 1)) AS u(i)
-        WHERE len(t) >= 8),
-      masked AS (
-        SELECT doc_id, pos FROM (
-          SELECT doc_id, pos,
-                 row_number() OVER (PARTITION BY w
-                                    ORDER BY doc_id, pos) AS rk
-          FROM occ) WHERE rk > 1),
-      cov AS (
-        SELECT DISTINCT doc_id, pos + j AS p
-        FROM masked, UNNEST(range(8)) AS v(j)),
-      tokpos AS (
-        SELECT doc_id, i AS p, t[i+1] AS tok
-        FROM toks, UNNEST(range(len(t))) AS u(i))
-      SELECT d.doc_id AS doc_id,
-             coalesce(s.txt, '') AS text_substrdedup,
-             CAST(coalesce(c.nrem, 0) AS INT) AS n_tokens_removed
-      FROM documents d
-      LEFT JOIN (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS txt
-                 FROM tokpos ANTI JOIN cov USING (doc_id, p)
-                 GROUP BY doc_id) s ON d.doc_id = s.doc_id
-      LEFT JOIN (SELECT doc_id, count(*) AS nrem FROM cov
-                 GROUP BY doc_id) c ON d.doc_id = c.doc_id
-      ORDER BY d.doc_id""",
-    "q_html_extract" -> """
-      WITH h AS (
-        SELECT doc_id,
-          '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
-          '</title><style>body { color: #333; }</style><script>var id=' ||
-          CAST(doc_id AS VARCHAR) ||
-          ';</script></head><body><nav><a href="/">home</a> | ' ||
-          '<a href="/about">about</a></nav><!-- boilerplate --><h1>Doc ' ||
-          CAST(doc_id AS VARCHAR) ||
-          '</h1><p>Q&amp;A &lt;tag&gt; &quot;q&quot; it&#39;s ' ||
-          'x&nbsp;y</p><p>' || text ||
-          '</p><footer>&copy; example</footer></body></html>' AS html
-        FROM documents)
-      SELECT doc_id,
-        regexp_extract(html, '(?is)<title>(.*?)</title>', 1) AS title,
-        len(regexp_extract_all(html, '(?is)<a\s')) AS n_links,
-        trim(regexp_replace(
-          replace(replace(replace(replace(replace(replace(
-            regexp_replace(
-              regexp_replace(
-                regexp_replace(
-                  regexp_replace(html,
-                    '(?is)<script.*?</script>', ' ', 'g'),
-                  '(?is)<style.*?</style>', ' ', 'g'),
-                '(?s)<!--.*?-->', ' ', 'g'),
-              '(?s)<[^>]+>', ' ', 'g'),
-            '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-            '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-          '\s+', ' ', 'g')) AS text_clean
-      FROM h ORDER BY doc_id""",
-
-    "q_link_extract" -> """
-      WITH nn AS (SELECT count(*) AS n FROM documents),
-      pages AS (
-        SELECT doc_id,
-          '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
-          '</title>' ||
-          (CASE WHEN doc_id % 13 = 0
-                THEN '<meta name="robots" content="noindex">'
-                ELSE '' END) ||
-          '</head><body><p>page body</p><a href="/doc/' ||
-          CAST((doc_id * 7 + 1) % nn.n AS VARCHAR) ||
-          '">next</a> <a href="/doc/' ||
-          CAST((doc_id * 7 + 2) % nn.n AS VARCHAR) ||
-          '">more</a></body></html>' AS html
-        FROM documents CROSS JOIN nn)
-      SELECT doc_id AS src,
-             CAST(u.t AS BIGINT) AS dst,
-             regexp_extract(html,
-               '(?i)<meta name="robots" content="noindex">', 0) <> ''
-               AS src_noindex
-      FROM pages,
-           UNNEST(regexp_extract_all(html, 'href="/doc/([0-9]+)"', 1))
-             AS u(t)
-      ORDER BY src, dst""",
-
-    "q_text_normalize" -> """
-      SELECT doc_id,
-             trim(regexp_replace(regexp_replace(
-               nfc_normalize(text || '  cafe' || chr(769) || ' ' || chr(7)
-                             || '  fin '),
-               '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-               '\s+', ' ', 'g')) AS clean,
-             length(trim(regexp_replace(regexp_replace(
-               nfc_normalize(text || '  cafe' || chr(769) || ' ' || chr(7)
-                             || '  fin '),
-               '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-               '\s+', ' ', 'g'))) AS clean_len
-      FROM documents ORDER BY doc_id""",
-    // q_dedup_semantic: the fixed-point Lloyd fit replayed end-to-end —
-    // quantize (floor(x·10⁶), bit-exact: float→double widening + one
-    // rounded multiply), seed from the 4 smallest ids, two unrolled
-    // rounds of integer-L2 argmin + exact integer floor-mean, then the
-    // nProbe=2 soft assignment, within-cluster pairing and exact-cosine
-    // rescore. Every clustering step is order-independent integer math,
-    // which is what makes a learned-kmeans face cross-engine checkable.
-    "q_dedup_semantic" -> """
-      WITH e AS (
-        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v,
-               list_transform(embedding,
-                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-                 AS qv
-        FROM embeddings),
-      -- dim guard: the distance/floor-mean CTEs below hard-code range(64);
-      -- if the embeddings generator's dimension ever drifts, this errors
-      -- loudly instead of silently computing truncated distances (the
-      -- final SELECT's WHERE forces its evaluation)
-      chk AS (
-        SELECT CASE WHEN count(*) = 0 OR
-                         (min(len(qv)) = 64 AND max(len(qv)) = 64) THEN 1
-               ELSE CAST(error('embedding dim <> 64: oracle range(64) ' ||
-                               'CTEs would truncate') AS INT) END AS ok
-        FROM e),
-      c0 AS (
-        SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS cid,
-               qv AS qc
-        FROM (SELECT id, qv FROM e ORDER BY id LIMIT 4)),
-      d1 AS (
-        SELECT e.id, c.cid,
-               list_sum(list_transform(range(64),
-                 i -> (e.qv[i+1] - c.qc[i+1]) * (e.qv[i+1] - c.qc[i+1])))
-                 AS dist
-        FROM e CROSS JOIN c0 c),
-      a1 AS (SELECT id, cid FROM (
-               SELECT id, cid, row_number() OVER (PARTITION BY id
-                 ORDER BY dist, cid) AS rk FROM d1) WHERE rk = 1),
-      u1 AS (
-        SELECT a1.cid, r.i AS pos, sum(e.qv[r.i+1]) AS s, count(*) AS n
-        FROM a1, e, UNNEST(range(64)) AS r(i)
-        WHERE e.id = a1.id
-        GROUP BY 1, 2),
-      n1 AS (
-        SELECT cid, list((s - ((s % n) + n) % n) // n ORDER BY pos) AS qc
-        FROM u1 GROUP BY cid),
-      c1 AS (
-        SELECT c0.cid, COALESCE(n1.qc, c0.qc) AS qc
-        FROM c0 LEFT JOIN n1 ON n1.cid = c0.cid),
-      d2 AS (
-        SELECT e.id, c.cid,
-               list_sum(list_transform(range(64),
-                 i -> (e.qv[i+1] - c.qc[i+1]) * (e.qv[i+1] - c.qc[i+1])))
-                 AS dist
-        FROM e CROSS JOIN c1 c),
-      a2 AS (SELECT id, cid FROM (
-               SELECT id, cid, row_number() OVER (PARTITION BY id
-                 ORDER BY dist, cid) AS rk FROM d2) WHERE rk = 1),
-      u2 AS (
-        SELECT a2.cid, r.i AS pos, sum(e.qv[r.i+1]) AS s, count(*) AS n
-        FROM a2, e, UNNEST(range(64)) AS r(i)
-        WHERE e.id = a2.id
-        GROUP BY 1, 2),
-      n2 AS (
-        SELECT cid, list((s - ((s % n) + n) % n) // n ORDER BY pos) AS qc
-        FROM u2 GROUP BY cid),
-      c2 AS (
-        SELECT c1.cid, COALESCE(n2.qc, c1.qc) AS qc
-        FROM c1 LEFT JOIN n2 ON n2.cid = c1.cid),
-      df AS (
-        SELECT e.id, c.cid,
-               list_sum(list_transform(range(64),
-                 i -> (e.qv[i+1] - c.qc[i+1]) * (e.qv[i+1] - c.qc[i+1])))
-                 AS dist
-        FROM e CROSS JOIN c2 c),
-      af AS (SELECT id, cid FROM (
-               SELECT id, cid, row_number() OVER (PARTITION BY id
-                 ORDER BY dist, cid) AS rk FROM df) WHERE rk <= 2),
-      p AS (
-        SELECT x.id AS a_id, y.id AS b_id,
-               list_cosine_similarity(ex.v, ey.v) AS cos
-        FROM af x JOIN af y ON x.cid = y.cid AND x.id < y.id
-        JOIN e ex ON ex.id = x.id
-        JOIN e ey ON ey.id = y.id
-        WHERE list_cosine_similarity(ex.v, ey.v) >= 0.3)
-      SELECT a_id, b_id, round(max(cos), 6) AS cos
-      FROM p CROSS JOIN chk WHERE chk.ok = 1
-      GROUP BY a_id, b_id ORDER BY a_id, b_id""",
-    "q_dedup_semantic_fixed" -> """
-      WITH c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
-                 FROM embeddings WHERE vec_id < 4),
-           s AS (SELECT e.vec_id, c.cid,
-                        list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                               c.ce) AS sc
-                 FROM embeddings e CROSS JOIN c),
-           a AS (SELECT vec_id, cid FROM (
-                   SELECT vec_id, cid,
-                          row_number() OVER (PARTITION BY vec_id
-                                             ORDER BY sc DESC, cid) AS rk
-                   FROM s) t WHERE rk = 1)
-      SELECT x.vec_id AS a_id, y.vec_id AS b_id,
-             round(list_cosine_similarity(CAST(ex.embedding AS DOUBLE[]),
-                                          CAST(ey.embedding AS DOUBLE[])), 6)
-               AS cos
-      FROM a x JOIN a y ON x.cid = y.cid AND x.vec_id < y.vec_id
-      JOIN embeddings ex ON ex.vec_id = x.vec_id
-      JOIN embeddings ey ON ey.vec_id = y.vec_id
-      WHERE list_cosine_similarity(CAST(ex.embedding AS DOUBLE[]),
-                                   CAST(ey.embedding AS DOUBLE[])) >= 0.3
-      ORDER BY a_id, b_id""",
-    // q_ann_mmr: replay candidate generation (brute top-10), pairwise
-    // candidate sims, then the greedy MMR selection unrolled k=3 stages —
-    // stage argmaxes ORDER BY the same 0.5*rel - 0.5*maxSim doubles Spark
-    // compares, ties by vec_id
-    "q_ann_mmr" -> """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                 FROM embeddings),
-      q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-      cand AS (SELECT query_id, vec_id, rel FROM (
-        SELECT q.query_id, e.vec_id,
-               list_cosine_similarity(e.v, q.qv) AS rel,
-               row_number() OVER (PARTITION BY q.query_id
-                 ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.vec_id)
-                 AS rn
-        FROM e CROSS JOIN q) WHERE rn <= 10),
-      sims AS (SELECT a.query_id, a.vec_id AS a_id, b.vec_id AS b_id,
-                      list_cosine_similarity(ea.v, eb.v) AS sim
-               FROM cand a
-               JOIN cand b ON a.query_id = b.query_id
-                          AND a.vec_id < b.vec_id
-               JOIN e ea ON ea.vec_id = a.vec_id
-               JOIN e eb ON eb.vec_id = b.vec_id),
-      s1 AS (SELECT query_id, vec_id, 0.5 * rel AS sc FROM (
-        SELECT query_id, vec_id, rel, row_number() OVER (
-          PARTITION BY query_id ORDER BY rel DESC, vec_id) AS rn
-        FROM cand) WHERE rn = 1),
-      p2 AS (SELECT c.query_id, c.vec_id,
-                    0.5 * c.rel - 0.5 * coalesce(s.sim, 0) AS sc
-             FROM cand c
-             JOIN s1 ON c.query_id = s1.query_id AND c.vec_id <> s1.vec_id
-             LEFT JOIN sims s ON s.query_id = c.query_id
-               AND ((s.a_id = c.vec_id AND s.b_id = s1.vec_id) OR
-                    (s.a_id = s1.vec_id AND s.b_id = c.vec_id))),
-      s2 AS (SELECT query_id, vec_id, sc FROM (
-        SELECT query_id, vec_id, sc, row_number() OVER (
-          PARTITION BY query_id ORDER BY sc DESC, vec_id) AS rn
-        FROM p2) WHERE rn = 1),
-      p3 AS (SELECT c.query_id, c.vec_id,
-                    0.5 * c.rel - 0.5 * greatest(coalesce(x1.sim, 0),
-                                                 coalesce(x2.sim, 0)) AS sc
-             FROM cand c
-             JOIN s1 ON c.query_id = s1.query_id AND c.vec_id <> s1.vec_id
-             JOIN s2 ON c.query_id = s2.query_id AND c.vec_id <> s2.vec_id
-             LEFT JOIN sims x1 ON x1.query_id = c.query_id
-               AND ((x1.a_id = c.vec_id AND x1.b_id = s1.vec_id) OR
-                    (x1.a_id = s1.vec_id AND x1.b_id = c.vec_id))
-             LEFT JOIN sims x2 ON x2.query_id = c.query_id
-               AND ((x2.a_id = c.vec_id AND x2.b_id = s2.vec_id) OR
-                    (x2.a_id = s2.vec_id AND x2.b_id = c.vec_id))),
-      s3 AS (SELECT query_id, vec_id, sc FROM (
-        SELECT query_id, vec_id, sc, row_number() OVER (
-          PARTITION BY query_id ORDER BY sc DESC, vec_id) AS rn
-        FROM p3) WHERE rn = 1),
-      sel AS (
-        SELECT query_id, vec_id, 1 AS mmr_rank, sc FROM s1
-        UNION ALL SELECT query_id, vec_id, 2, sc FROM s2
-        UNION ALL SELECT query_id, vec_id, 3, sc FROM s3)
-      SELECT query_id, vec_id, mmr_rank, round(sc, 6) AS mmr_score
-      FROM sel ORDER BY query_id, mmr_rank""",
-    "q_embed_neardup" -> """
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-             round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                          CAST(b.embedding AS DOUBLE[])), 6) AS cos
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                   CAST(b.embedding AS DOUBLE[])) >= 0.3
-      ORDER BY a_id, b_id""",
-
-    "q_kcore" -> kCoreOracleSql(6, 6),
-
-    "q_search_bm25" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-      st AS (SELECT count(*) AS n_docs,
-                    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-      df_ AS (SELECT term, count(*) AS df FROM tf
-              WHERE term IN ('spark', 'window', 'hash') GROUP BY 1),
-      sc AS (SELECT t.doc_id,
-               ln(1.0 + (st.n_docs - df_.df + 0.5) / (df_.df + 0.5)) *
-                 (t.tf * (1.2 + 1)) /
-                 (t.tf + 1.2 * ((1 - 0.75) + 0.75 * dl.dl / st.avgdl)) AS s
-             FROM tf t
-             JOIN df_ ON df_.term = t.term
-             JOIN dl ON dl.doc_id = t.doc_id
-             CROSS JOIN st)
-      SELECT doc_id, round(sum(s), 6) AS score
-      FROM sc GROUP BY 1
-      ORDER BY score DESC, doc_id ASC LIMIT 20""",
-    // Integer ranking metrics replayed exactly: same tokenizer CTE, the
-    // tf-ranking with (tf DESC, doc_id ASC) ties, graded qrels, and the
-    // SAME driver-computed discount weight table interpolated as VALUES —
-    // 10⁹-scaled nDCG and 10⁶-scaled MRR/P@k in pure integer division,
-    // so no float sum order or libm log can desync the engines
-    "q_search_eval" -> {
-      val wVals = graft.operators.SearchEval.discountWeightsU(10)
-        .zipWithIndex.map { case (wu, i) => s"(${i + 1}, $wu)" }
-        .mkString(", ")
-      val L = graft.operators.SearchEval.lcmTo(10) // 2520
-      raw"""
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      q(query_id, term, pos) AS (VALUES
-        (0, 'spark', 0), (0, 'window', 1), (0, 'hash', 2),
-        (1, 'join', 0), (1, 'sort', 1), (1, 'merge', 2)),
-      w(r, wu) AS (VALUES $wVals),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      qrels AS (
-        SELECT q.query_id, t.doc_id,
-               CAST(count(DISTINCT q.term) AS BIGINT) AS rel
-        FROM q JOIN tf t ON t.term = q.term GROUP BY 1, 2),
-      res AS (SELECT query_id, doc_id, rank FROM (
-        SELECT q.query_id, t.doc_id,
-               row_number() OVER (PARTITION BY q.query_id
-                 ORDER BY t.tf DESC, t.doc_id ASC) AS rank
-        FROM q JOIN tf t ON t.term = q.term WHERE q.pos = 0)
-        WHERE rank <= 10),
-      r2 AS (
-        SELECT r.query_id, r.rank, COALESCE(qr.rel, 0) AS rel,
-               sum(CASE WHEN COALESCE(qr.rel, 0) > 0 THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY r.query_id ORDER BY r.rank)
-                 AS cumhits
-        FROM res r
-        LEFT JOIN qrels qr ON qr.query_id = r.query_id
-                          AND qr.doc_id = r.doc_id),
-      got AS (
-        SELECT r2.query_id,
-               sum(r2.rel * w.wu) AS dcg_u,
-               min(CASE WHEN r2.rel > 0 THEN r2.rank END) AS first_rel,
-               sum(CASE WHEN r2.rel > 0 THEN 1 ELSE 0 END) AS hits,
-               sum(CASE WHEN r2.rel > 0
-                   THEN r2.cumhits * ($L // r2.rank) ELSE 0 END) AS ap_num
-        FROM r2 JOIN w ON w.r = r2.rank
-        GROUP BY 1),
-      ideal AS (
-        SELECT query_id,
-               sum(CASE WHEN rn <= 10 THEN rel * wu ELSE 0 END) AS idcg_u,
-               count(*) AS r_total
-        FROM (SELECT query_id, rel, row_number() OVER (
-                PARTITION BY query_id ORDER BY rel DESC, doc_id ASC) AS rn
-              FROM qrels WHERE rel > 0) i
-        LEFT JOIN w ON w.r = i.rn
-        GROUP BY 1)
-      SELECT CAST(g.query_id AS BIGINT) AS query_id,
-             CAST(CASE WHEN COALESCE(i.idcg_u, 0) > 0
-                  THEN (1000000000 * g.dcg_u) // i.idcg_u
-                  ELSE 0 END AS BIGINT) AS ndcg_u,
-             CAST(COALESCE(1000000 // g.first_rel, 0) AS BIGINT) AS mrr_u,
-             CAST(g.hits * 1000000 // 10 AS BIGINT) AS p_at_k_u,
-             CAST(CASE WHEN COALESCE(i.r_total, 0) > 0
-                  THEN (1000000 * g.ap_num) // ($L * LEAST(i.r_total, 10))
-                  ELSE 0 END AS BIGINT) AS ap_u
-      FROM got g LEFT JOIN ideal i ON i.query_id = g.query_id
-      ORDER BY query_id"""
-    },
-
-    // Cohen's kappa replayed in the exact integer form: the same label
-    // CASEs, the marginal-product S, and the sign-safe floor idiom
-    // (num − (((num % den) + den) % den)) // den — floor under the
-    // truncating % BOTH engines share, so negative kappas can't desync
-    "q_annotator_kappa" -> """
-      WITH lab AS (
-        SELECT source,
-               CASE WHEN n_chars < 216 THEN 0
-                    WHEN n_chars < 373 THEN 1 ELSE 2 END AS a,
-               CASE WHEN length(text) - length(replace(text, ' ', ''))
-                         < 38 THEN 0
-                    WHEN length(text) - length(replace(text, ' ', ''))
-                         < 67 THEN 1
-                    ELSE 2 END AS b
-        FROM documents),
-      agg AS (SELECT source, count(*) AS n,
-                     sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS agree
-              FROM lab GROUP BY 1),
-      ma AS (SELECT source, a AS cls, count(*) AS na FROM lab
-             GROUP BY 1, 2),
-      mb AS (SELECT source, b AS cls, count(*) AS nb FROM lab
-             GROUP BY 1, 2),
-      s AS (SELECT ma.source, sum(ma.na * mb.nb) AS s
-            FROM ma JOIN mb ON mb.source = ma.source
-                           AND mb.cls = ma.cls
-            GROUP BY 1),
-      k AS (SELECT agg.source, agg.n, agg.agree,
-                   1000000 * (agg.n * agg.agree - COALESCE(s.s, 0))
-                     AS num,
-                   agg.n * agg.n - COALESCE(s.s, 0) AS den
-            FROM agg LEFT JOIN s ON s.source = agg.source)
-      SELECT source, CAST(n AS BIGINT) AS n,
-             CAST(agree AS BIGINT) AS agree,
-             CAST(CASE WHEN den = 0
-                  THEN CASE WHEN agree = n THEN 1000000 ELSE 0 END
-                  ELSE (num - (((num % den) + den) % den)) // den
-                  END AS BIGINT) AS kappa_ppm
-      FROM k ORDER BY source""",
-
-    // identical arithmetic: the persisted stats/postings hold the same
-    // values the in-plan branch computes, so one oracle serves both faces
-    "q_search_bm25_indexed" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-      st AS (SELECT count(*) AS n_docs,
-                    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-      df_ AS (SELECT term, count(*) AS df FROM tf
-              WHERE term IN ('spark', 'window', 'hash') GROUP BY 1),
-      sc AS (SELECT t.doc_id,
-               ln(1.0 + (st.n_docs - df_.df + 0.5) / (df_.df + 0.5)) *
-                 (t.tf * (1.2 + 1)) /
-                 (t.tf + 1.2 * ((1 - 0.75) + 0.75 * dl.dl / st.avgdl)) AS s
-             FROM tf t
-             JOIN df_ ON df_.term = t.term
-             JOIN dl ON dl.doc_id = t.doc_id
-             CROSS JOIN st)
-      SELECT doc_id, round(sum(s), 6) AS score
-      FROM sc GROUP BY 1
-      ORDER BY score DESC, doc_id ASC LIMIT 20""",
-
-    // Hybrid RRF replayed exactly: the BM25 CTEs per query term-set,
-    // the dense cosine arm, round-6-then-rank with min-id ties in both
-    // arms, integer reciprocal-rank contributions over the full-outer
-    // fused set.
-    "q_search_hybrid" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-      st AS (SELECT count(*) AS n_docs,
-                    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-      qt AS (SELECT * FROM (VALUES
-               (0, 'spark'), (0, 'window'), (0, 'hash'),
-               (1, 'join'), (1, 'sort'), (1, 'merge')) v(qid, term)),
-      df_ AS (SELECT term, count(*) AS df FROM tf
-              WHERE term IN ('spark', 'window', 'hash',
-                             'join', 'sort', 'merge') GROUP BY 1),
-      sc AS (SELECT q.qid, t.doc_id,
-               ln(1.0 + (st.n_docs - df_.df + 0.5) / (df_.df + 0.5)) *
-                 (t.tf * (1.2 + 1)) /
-                 (t.tf + 1.2 * ((1 - 0.75) + 0.75 * dl.dl / st.avgdl)) AS s
-             FROM tf t
-             JOIN qt q ON q.term = t.term
-             JOIN df_ ON df_.term = t.term
-             JOIN dl ON dl.doc_id = t.doc_id
-             CROSS JOIN st),
-      lexsc AS (SELECT qid, doc_id, round(sum(s), 6) AS rs
-                FROM sc GROUP BY 1, 2),
-      lex AS (SELECT qid, id, lex_rank FROM (
-                SELECT CAST(qid AS INTEGER) AS qid, doc_id AS id,
-                       CAST(row_number() OVER (PARTITION BY qid
-                         ORDER BY rs DESC, doc_id) AS BIGINT) AS lex_rank
-                FROM lexsc) t WHERE lex_rank <= 50),
-      qv AS (SELECT CAST(vec_id AS INTEGER) AS qid, embedding
-             FROM embeddings WHERE vec_id < 2),
-      semsc AS (SELECT q.qid, e.vec_id AS id,
-                  round(list_cosine_similarity(
-                    CAST(e.embedding AS DOUBLE[]),
-                    CAST(q.embedding AS DOUBLE[])), 6) AS rs
-                FROM embeddings e CROSS JOIN qv q),
-      sem AS (SELECT qid, id, sem_rank FROM (
-                SELECT qid, id,
-                       CAST(row_number() OVER (PARTITION BY qid
-                         ORDER BY rs DESC, id) AS BIGINT) AS sem_rank
-                FROM semsc) t WHERE sem_rank <= 50)
-      SELECT COALESCE(l.qid, s.qid) AS query_id,
-             COALESCE(l.id, s.id) AS id,
-             COALESCE(l.lex_rank, 0) AS lex_rank,
-             COALESCE(s.sem_rank, 0) AS sem_rank,
-             COALESCE(1000000000 // (60 + l.lex_rank), 0) +
-               COALESCE(1000000000 // (60 + s.sem_rank), 0) AS rrf
-      FROM lex l FULL OUTER JOIN sem s ON s.qid = l.qid AND s.id = l.id
-      ORDER BY query_id, rrf DESC, id""",
-
-    // q_quantile_sketch / _group: the estimates themselves are
-    // sketch-internal (partition-dependent), so — recall-gate mold — the
-    // oracle pins the exact row counts per probed quantile plus the
-    // in-query-`require`d within flags and the ε budget.
-    "q_quantile_sketch" -> """
-      SELECT q_ppm, count(*) AS n, CAST(5000 AS BIGINT) AS eps_ppm,
-             CAST(1 AS BIGINT) AS within
-      FROM lineitem CROSS JOIN (VALUES (CAST(10000 AS BIGINT)),
-        (CAST(250000 AS BIGINT)), (CAST(500000 AS BIGINT)),
-        (CAST(750000 AS BIGINT)), (CAST(900000 AS BIGINT)),
-        (CAST(990000 AS BIGINT))) AS qv(q_ppm)
-      GROUP BY q_ppm ORDER BY q_ppm""",
-    "q_quantile_sketch_group" -> """
-      SELECT l_returnflag, q_ppm, count(*) AS n, CAST(1 AS BIGINT) AS within
-      FROM lineitem CROSS JOIN (VALUES (CAST(500000 AS BIGINT)),
-        (CAST(900000 AS BIGINT))) AS qv(q_ppm)
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_quantile_store" -> """
-      SELECT source, q_ppm, count(*) AS n, CAST(1 AS BIGINT) AS within
-      FROM documents CROSS JOIN (VALUES (CAST(500000 AS BIGINT)),
-        (CAST(990000 AS BIGINT))) AS qv(q_ppm)
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-    // q_quantile_store_compact: rows_before = batches (doc_id % 3
-    // slices) carrying the source, rows_after = exactly one merged row
-    // per key; the answer-identity proof is the in-query require
-    "q_quantile_store_compact" -> """
-      SELECT source, count(DISTINCT doc_id % 3) AS rows_before,
-        CAST(1 AS BIGINT) AS rows_after,
-        CAST(1 AS BIGINT) AS quantiles_equal
-      FROM documents GROUP BY 1 ORDER BY 1""",
-    "q_cms" -> """
-      WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      tc AS (SELECT term, count(*) AS cnt FROM toks GROUP BY 1),
-      keys AS (SELECT term, cnt,
-          CAST(('0x' || substring(md5(term), 1, 15)) AS BIGINT)
-            % 2147483647 AS xm
-        FROM tc),
-      fam AS (SELECT unnest([0, 1, 2, 3]) AS row_i,
-                     unnest([1103515245, 1664525, 22695477,
-                             1566083941]) AS a,
-                     unnest([12345, 1013904223, 1, 2531011]) AS b),
-      cells AS (SELECT row_i,
-                       ((a * xm + b) % 2147483647) % 16 AS bucket,
-                       CAST(sum(cnt) AS BIGINT) AS cnt
-                FROM keys CROSS JOIN fam GROUP BY 1, 2),
-      probes AS (SELECT unnest(['data', 'fast', 'hash', 'query', 'slow',
-                                'spark', 'table', 'window']) AS term),
-      pc AS (SELECT p.term, f.row_i,
-                    ((f.a * (CAST(('0x' || substring(md5(p.term), 1, 15))
-                        AS BIGINT) % 2147483647) + f.b)
-                      % 2147483647) % 16 AS bucket
-             FROM probes p CROSS JOIN fam f),
-      est AS (SELECT pc.term,
-                     CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est_cnt
-              FROM pc LEFT JOIN cells c
-                ON c.row_i = pc.row_i AND c.bucket = pc.bucket
-              GROUP BY 1),
-      ex AS (SELECT term, count(*) AS exact_cnt FROM toks
-             WHERE term IN ('data', 'fast', 'hash', 'query', 'slow',
-                            'spark', 'table', 'window') GROUP BY 1)
-      SELECT e.term, CAST(coalesce(ex.exact_cnt, 0) AS BIGINT) AS exact_cnt,
-             e.est_cnt
-      FROM est e LEFT JOIN ex ON ex.term = e.term
-      ORDER BY e.term""",
-
-    // q_hll: rebuild the identical 64-register file from the 60-bit md5
-    // key (idx = key mod 64, w = key div 64, rho = 55 - len(bin(w)));
-    // integer harmonic sum, same IEEE estimate + small-range branch.
-    "q_hll" -> """
-      WITH toks AS (
-        SELECT lang, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      d AS (SELECT DISTINCT lang, term FROM toks),
-      k AS (SELECT lang,
-          CAST(('0x' || substring(md5(term), 1, 15)) AS BIGINT) AS key
-        FROM d),
-      r AS (SELECT lang, key % 64 AS idx,
-                   max(CASE WHEN key // 64 = 0 THEN 55
-                            ELSE 55 - length(bin(key // 64)) END) AS rho
-            FROM k GROUP BY 1, 2),
-      g AS (SELECT lang,
-                   CAST(sum(1::BIGINT << (55 - rho)) AS BIGINT)
-                     AS s_present,
-                   count(*) AS n_present
-            FROM r GROUP BY 1),
-      e AS (SELECT lang,
-                   CAST(s_present + (64 - n_present) * (1::BIGINT << 55)
-                     AS BIGINT) AS s_scaled,
-                   CAST(64 - n_present AS BIGINT) AS zero_regs
-            FROM g),
-      est AS (SELECT lang, s_scaled, zero_regs,
-          CAST(floor(0.709 * 64.0 * 64.0 * power(2.0, 55.0)
-                     / CAST(s_scaled AS DOUBLE) * 1000.0) AS BIGINT)
-            AS est_milli
-        FROM e),
-      ex AS (SELECT lang, count(DISTINCT term) AS exact_distinct
-             FROM toks GROUP BY 1)
-      SELECT est.lang, CAST(ex.exact_distinct AS BIGINT) AS exact_distinct,
-             est.s_scaled, est.zero_regs, est.est_milli
-      FROM est JOIN ex ON ex.lang = est.lang
-      ORDER BY est.lang""",
-
-    // q_stream_hll: register max-merge is order-invariant, so the
-    // streaming upsert state == the batch register file — replay the
-    // batch build (global, no groups).
-    "q_stream_hll" -> """
-      WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents),
-      d AS (SELECT DISTINCT term FROM toks),
-      k AS (SELECT CAST(('0x' || substring(md5(term), 1, 15)) AS BIGINT)
-              AS key FROM d),
-      r AS (SELECT key % 64 AS idx,
-                   max(CASE WHEN key // 64 = 0 THEN 55
-                            ELSE 55 - length(bin(key // 64)) END) AS rho
-            FROM k GROUP BY 1),
-      g AS (SELECT CAST(sum(1::BIGINT << (55 - rho)) AS BIGINT)
-                     AS s_present,
-                   count(*) AS n_present
-            FROM r),
-      e AS (SELECT CAST(s_present + (64 - n_present) * (1::BIGINT << 55)
-                     AS BIGINT) AS s_scaled,
-                   CAST(64 - n_present AS BIGINT) AS zero_regs
-            FROM g)
-      SELECT (SELECT CAST(count(DISTINCT term) AS BIGINT) FROM toks)
-               AS exact_distinct,
-             s_scaled, zero_regs,
-             CAST(floor(0.709 * 64.0 * 64.0 * power(2.0, 55.0)
-                        / CAST(s_scaled AS DOUBLE) * 1000.0) AS BIGINT)
-               AS est_milli
-      FROM e""",
-
-    // q_dedup_eval: replay BOTH generators — the portable-hash LSH face
-    // (q_dedup_minhash_fixed's CTEs) and exact 3-gram Jaccard
-    // (q_dedup_jaccard's shape at threshold 0.5) — then full-join the
-    // pair sets and count tp/fp/fn. The `sh` CTE feeds both sides.
-    "q_dedup_eval" -> """
-      WITH norm AS (
-        SELECT doc_id, list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-               x -> x <> '') AS t
-        FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, sh FROM (
-          SELECT doc_id,
-                 CASE WHEN len(t) < 3 THEN array_to_string(t, ' ')
-                      ELSE array_to_string(t[i:i+2], ' ') END AS sh
-          FROM norm, UNNEST(CASE WHEN len(t) < 3 THEN [CAST(1 AS BIGINT)]
-                                 ELSE range(1, len(t) - 1) END) AS u(i))),
-      hb AS (
-        SELECT doc_id,
-               CAST(('0x' || substring(md5(sh), 1, 7)) AS BIGINT) AS h
-        FROM sh),
-      sig AS (
-        SELECT doc_id, i,
-               min((((1103515245 * (2 * i + 1)) % 2147483647) * h
-                    + ((12345 + 1013904223 * i) % 2147483647))
-                   % 2147483647) AS h
-        FROM hb, UNNEST(range(16)) AS s(i)
-        GROUP BY doc_id, i),
-      band AS (
-        SELECT doc_id, i // 2 AS band,
-               string_agg(h::VARCHAR, ',' ORDER BY i) AS key
-        FROM sig GROUP BY doc_id, i // 2),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM band a JOIN band b ON a.band = b.band AND a.key = b.key
-                                AND a.doc_id < b.doc_id),
-      pred AS (
-        SELECT c.a_id, c.b_id
-        FROM cand c
-        JOIN sig sa ON sa.doc_id = c.a_id
-        JOIN sig sb ON sb.doc_id = c.b_id AND sb.i = sa.i
-        GROUP BY c.a_id, c.b_id
-        HAVING sum(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) / 16.0 >= 0.5),
-      sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-      inter AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS c
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      truth AS (
-        SELECT i.a_id, i.b_id
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.a_id
-        JOIN sizes sb ON sb.doc_id = i.b_id
-        WHERE CAST(c AS DOUBLE) / (sa.sz + sb.sz - c) >= 0.5),
-      m AS (
-        SELECT
-          CAST(coalesce(sum(CASE WHEN p.a_id IS NOT NULL
-                                  AND t.a_id IS NOT NULL
-                                 THEN 1 ELSE 0 END), 0) AS BIGINT) AS tp,
-          CAST(coalesce(sum(CASE WHEN p.a_id IS NOT NULL
-                                  AND t.a_id IS NULL
-                                 THEN 1 ELSE 0 END), 0) AS BIGINT) AS fp,
-          CAST(coalesce(sum(CASE WHEN p.a_id IS NULL
-                                  AND t.a_id IS NOT NULL
-                                 THEN 1 ELSE 0 END), 0) AS BIGINT) AS fn
-        FROM pred p FULL JOIN truth t
-          ON p.a_id = t.a_id AND p.b_id = t.b_id)
-      SELECT tp, fp, fn,
-             CASE WHEN tp + fp > 0
-                  THEN CAST(tp * 100 // (tp + fp) AS BIGINT)
-                  ELSE CAST(-1 AS BIGINT) END AS precision_pct,
-             CASE WHEN tp + fn > 0
-                  THEN CAST(tp * 100 // (tp + fn) AS BIGINT)
-                  ELSE CAST(-1 AS BIGINT) END AS recall_pct
-      FROM m""",
-
-    // Recall-gate siblings: the truth-pair count replays exactly where
-    // the truth set is oracle-expressible (3-gram Jaccard, exact cosine);
-    // floor/met are literals the Spark side computes from the REAL
-    // comparison — a recall regression either crashes the query (require)
-    // or flips floor_met and fails the hash.
-    "q_dedup_minhash_recall" -> """
-      WITH norm AS (
-        SELECT doc_id, list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-               x -> x <> '') AS t
-        FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, sh FROM (
-          SELECT doc_id,
-                 CASE WHEN len(t) < 3 THEN array_to_string(t, ' ')
-                      ELSE array_to_string(t[i:i+2], ' ') END AS sh
-          FROM norm, UNNEST(CASE WHEN len(t) < 3 THEN [CAST(1 AS BIGINT)]
-                                 ELSE range(1, len(t) - 1) END) AS u(i))),
-      sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-      inter AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS c
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      truth AS (
-        SELECT i.a_id, i.b_id
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.a_id
-        JOIN sizes sb ON sb.doc_id = i.b_id
-        WHERE CAST(c AS DOUBLE) / (sa.sz + sb.sz - c) >= 0.5)
-      SELECT CAST(count(*) AS BIGINT) AS n_truth,
-             CAST(900000 AS BIGINT) AS floor_ppm,
-             CAST(1 AS BIGINT) AS floor_met
-      FROM truth""",
-    "q_dedup_simhash_recall" -> """
-      SELECT CAST(1000000 AS BIGINT) AS floor_ppm,
-             CAST(1 AS BIGINT) AS floor_met""",
-    "q_dedup_semantic_recall" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n_truth,
-             CAST(850000 AS BIGINT) AS floor_ppm,
-             CAST(1 AS BIGINT) AS floor_met
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                   CAST(b.embedding AS DOUBLE[])) >= 0.3""",
-
-    // q_corpus_overlap: rebuild per-source signatures with the same
-    // md5+affine family (min over the source's shingles), pairwise
-    // position-match count — all integer.
-    "q_corpus_overlap" -> """
-      WITH norm AS (
-        SELECT source, list_filter(string_split_regex(
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-               x -> x <> '') AS t
-        FROM documents),
-      sh AS (
-        SELECT DISTINCT source, sh FROM (
-          SELECT source,
-                 CASE WHEN len(t) < 3 THEN array_to_string(t, ' ')
-                      ELSE array_to_string(t[i:i+2], ' ') END AS sh
-          FROM norm, UNNEST(CASE WHEN len(t) < 3 THEN [CAST(1 AS BIGINT)]
-                                 ELSE range(1, len(t) - 1) END) AS u(i))),
-      hb AS (
-        SELECT source,
-               CAST(('0x' || substring(md5(sh), 1, 7)) AS BIGINT) AS h
-        FROM sh),
-      sig AS (
-        SELECT source, i,
-               min((((1103515245 * (2 * i + 1)) % 2147483647) * h
-                    + ((12345 + 1013904223 * i) % 2147483647))
-                   % 2147483647) AS h
-        FROM hb, UNNEST(range(16)) AS s(i)
-        GROUP BY source, i),
-      pair AS (
-        SELECT a.source AS src_a, b.source AS src_b,
-               CAST(sum(CASE WHEN a.h = b.h THEN 1 ELSE 0 END) AS BIGINT)
-                 AS matches
-        FROM sig a JOIN sig b ON a.i = b.i AND a.source < b.source
-        GROUP BY 1, 2)
-      SELECT src_a, src_b, matches,
-             CAST(matches * 100 // 16 AS BIGINT) AS jaccard_pct
-      FROM pair ORDER BY src_a, src_b""",
-
-    "q_dedup_editdist" -> """
-      WITH k AS (
-        SELECT doc_id, substr(regexp_replace(lower(trim(text)),
-          '\s+', ' ', 'g'), 1, 40) AS key
-        FROM documents)
-      SELECT a.doc_id AS id_1, b.doc_id AS id_2,
-             CAST(levenshtein(a.key, b.key) AS BIGINT) AS dist
-      FROM k a JOIN k b ON a.doc_id < b.doc_id
-        AND abs(length(a.key) - length(b.key)) <= 2
-      WHERE levenshtein(a.key, b.key) <= 2
-      ORDER BY id_1, id_2""",
-
-    "q_lake_update" -> """
-      WITH upd AS (
-        SELECT l_quantity,
-               CASE WHEN l_quantity > 40 THEN l_extendedprice * 0.9
-                    ELSE l_extendedprice END AS l_extendedprice,
-               CASE WHEN l_quantity > 40 THEN 'X'
-                    ELSE l_returnflag END AS l_returnflag
-        FROM lineitem)
-      SELECT l_returnflag, count(*) AS n_rows,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM upd GROUP BY 1 ORDER BY 1""",
-
-    "q_lake_constraint" -> """
-      SELECT count(*) AS n_rows, round(sum(l_quantity), 2) AS sum_qty
-      FROM lineitem""",
-
-    "q_lake_analyze" -> """
-      SELECT * FROM (
-        SELECT '__table' AS "column", count(*) AS ndv_or_rows,
-               CAST(NULL AS VARCHAR) AS nulls, CAST(NULL AS VARCHAR) AS min,
-               CAST(NULL AS VARCHAR) AS max
-        FROM lineitem
-        UNION ALL
-        SELECT 'l_orderkey', count(DISTINCT l_orderkey),
-               CAST(sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END)
-                 AS VARCHAR),
-               CAST(min(l_orderkey) AS VARCHAR),
-               CAST(max(l_orderkey) AS VARCHAR)
-        FROM lineitem
-        UNION ALL
-        SELECT 'l_quantity', count(DISTINCT l_quantity),
-               CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END)
-                 AS VARCHAR),
-               CAST(min(l_quantity) AS VARCHAR),
-               CAST(max(l_quantity) AS VARCHAR)
-        FROM lineitem
-        UNION ALL
-        SELECT 'l_returnflag', count(DISTINCT l_returnflag),
-               CAST(sum(CASE WHEN l_returnflag IS NULL THEN 1 ELSE 0 END)
-                 AS VARCHAR),
-               min(l_returnflag), max(l_returnflag)
-        FROM lineitem)
-      ORDER BY "column"""",
-
-    "q_curriculum" -> """
-      WITH ranked AS (
-        SELECT doc_id, source,
-               row_number() OVER (PARTITION BY source
-                 ORDER BY n_chars DESC, doc_id ASC) - 1 AS rk
-        FROM documents),
-      keyed AS (
-        SELECT doc_id, source, rk,
-               ((2 * rk + 1) * 1048576) //
-                 (1 + CAST(substr(source, 4) AS BIGINT) % 4) AS vt
-        FROM ranked)
-      SELECT row_number() OVER (ORDER BY vt, source, rk) AS seq,
-             doc_id, source, rk, vt
-      FROM keyed ORDER BY seq""",
-
-    "q_vocab_coverage" -> """
-      WITH toks AS (
-        SELECT source, unnest(list_filter(string_split_regex(
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\s+'),
-          x -> x <> '')) AS term
-        FROM documents)
-      SELECT source, count(*) AS n_tokens,
-             CAST(count(*) FILTER (WHERE term NOT IN ('data', 'query',
-               'table', 'row', 'column', 'spark', 'batch', 'stream',
-               'window', 'filter', 'scan', 'merge', 'agg', 'key',
-               'value')) AS BIGINT) AS oov_tokens,
-             round(CAST(count(*) FILTER (WHERE term NOT IN ('data',
-               'query', 'table', 'row', 'column', 'spark', 'batch',
-               'stream', 'window', 'filter', 'scan', 'merge', 'agg',
-               'key', 'value')) AS DOUBLE) / count(*), 6) AS oov_rate
-      FROM toks GROUP BY source ORDER BY source""",
-
-    "q_lake_generated" -> """
-      WITH src AS (
-        SELECT CAST(floor(l_quantity / 10) AS BIGINT) AS qband,
-               l_extendedprice
-        FROM lineitem)
-      SELECT qband, count(*) AS n_rows,
-             round(sum(l_extendedprice), 2) AS sum_price
-      FROM src WHERE qband >= 3 GROUP BY 1 ORDER BY 1""",
-
-    "q_lake_rename" -> """
-      WITH src AS (
-        SELECT l_quantity AS qty, l_returnflag FROM lineitem)
-      SELECT l_returnflag, count(*) AS n_rows, round(sum(qty), 2) AS sum_qty
-      FROM src WHERE qty > 45 GROUP BY 1 ORDER BY 1""",
-
-    "q_lake_timetravel_ts" -> """
-      SELECT * FROM (
-        SELECT 'asof_v1' AS which, count(*) AS n_rows,
-               round(sum(l_quantity), 2) AS sum_qty
-        FROM lineitem WHERE l_orderkey % 3 = 0
-        UNION ALL
-        SELECT 'latest' AS which, count(*) AS n_rows,
-               round(sum(l_quantity), 2) AS sum_qty
-        FROM lineitem WHERE l_orderkey % 3 IN (0, 1))
-      ORDER BY which""",
-
-    // Point-in-time join re-derived: the dimension state at integer time
-    // t is analytic (%4 keys read MOVED from t=1), so the oracle joins
-    // facts to a CASE, not to history rows. Every order key resolves
-    // (verified: orders ⊆ customer), so no NULL group risks the
-    // cross-engine null-ordering trap.
-    "q_scd2_fact_join" -> """
-      WITH facts AS (
-        SELECT o_custkey AS custkey, o_orderkey % 2 AS t_fact,
-               o_totalprice
-        FROM orders),
-      dim AS (SELECT c_custkey AS key, c_mktsegment AS seg FROM customer)
-      SELECT f.t_fact,
-             CASE WHEN f.t_fact >= 1 AND d.key % 4 = 0 THEN 'MOVED'
-                  ELSE d.seg END AS seg,
-             COUNT(*) AS n_orders,
-             round(SUM(f.o_totalprice), 2) AS sum_price
-      FROM facts f LEFT JOIN dim d ON d.key = f.custkey
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // A/B readout re-derived: per-user max-conversion, per-arm counts,
-    // and the cross-multiplied z² inequality in HUGEINT — int128 covers
-    // the DECIMAL(38) envelope exactly.
-    "q_abtest" -> """
-      WITH per_user AS (
-        SELECT user_id % 2 AS variant, user_id,
-               max(CASE WHEN event_type = 'purchase' AND value > 150
-                   THEN 1 ELSE 0 END) AS conv0,
-               max(CASE WHEN (event_type = 'purchase' AND value > 150)
-                     OR (user_id % 2 = 1 AND event_type = 'click')
-                   THEN 1 ELSE 0 END) AS conv1
-        FROM events GROUP BY 1, 2),
-      faces AS (
-        SELECT 'null_test' AS face, variant, COUNT(*) AS n,
-               CAST(SUM(conv0) AS BIGINT) AS x
-        FROM per_user GROUP BY 1, 2
-        UNION ALL
-        SELECT 'lifted', variant, COUNT(*), CAST(SUM(conv1) AS BIGINT)
-        FROM per_user GROUP BY 1, 2),
-      ab AS (
-        SELECT face,
-               CAST(max(CASE WHEN variant = 0 THEN n END) AS BIGINT) AS n_a,
-               CAST(max(CASE WHEN variant = 0 THEN x END) AS BIGINT) AS x_a,
-               CAST(max(CASE WHEN variant = 1 THEN n END) AS BIGINT) AS n_b,
-               CAST(max(CASE WHEN variant = 1 THEN x END) AS BIGINT) AS x_b
-        FROM faces GROUP BY 1)
-      SELECT face, n_a, x_a, n_b, x_b,
-             x_b * 1000000 // n_b - x_a * 1000000 // n_a AS lift_ppm,
-             CAST(CASE WHEN
-               CAST(2500 AS HUGEINT) * (n_a + n_b) *
-               (CAST(x_a AS HUGEINT) * n_b - CAST(x_b AS HUGEINT) * n_a) *
-               (CAST(x_a AS HUGEINT) * n_b - CAST(x_b AS HUGEINT) * n_a)
-               > CAST(9604 AS HUGEINT) * (x_a + x_b) *
-                 (n_a + n_b - x_a - x_b) * n_a * n_b
-             THEN 1 ELSE 0 END AS INT) AS significant
-      FROM ab ORDER BY face""",
-
-    // WordPiece re-derived: inventory from the same substring counts,
-    // maximal munch as a recursive CTE — (word, pos) advances by the MAX
-    // matching piece length; coverage makes the recursion total.
-    "q_tokenize_wordpiece" -> """
-      WITH RECURSIVE words AS (
-        SELECT w, COUNT(*) AS c FROM (
-          SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-            x -> x <> '')) AS w
-          FROM documents) GROUP BY 1),
-      cand AS (
-        SELECT CASE WHEN p = 1 THEN substr(w, p, l)
-                    ELSE '##' || substr(w, p, l) END AS piece,
-               SUM(c) AS n
-        FROM words,
-             UNNEST(range(1, len(w) + 1)) AS t(p),
-             UNNEST(range(1, least(4, len(w) - p + 1) + 1)) AS u(l)
-        GROUP BY 1),
-      vocab AS (
-        SELECT piece FROM cand
-        WHERE n >= 20 OR length(piece) = 1
-           OR (length(piece) = 3 AND substr(piece, 1, 2) = '##')),
-      matches AS (
-        SELECT w, p AS pos, max(l) AS best
-        FROM (SELECT w.w, t.p, u.l
-              FROM words w,
-                   UNNEST(range(1, len(w.w) + 1)) AS t(p),
-                   UNNEST(range(1, least(4, len(w.w) - t.p + 1) + 1)) AS u(l)
-              WHERE (CASE WHEN t.p = 1 THEN substr(w.w, t.p, u.l)
-                          ELSE '##' || substr(w.w, t.p, u.l) END)
-                    IN (SELECT piece FROM vocab))
-        GROUP BY 1, 2),
-      rec AS (
-        SELECT w, CAST(1 AS BIGINT) AS pos FROM words
-        UNION ALL
-        SELECT r.w, r.pos + m.best
-        FROM rec r JOIN matches m ON m.w = r.w AND m.pos = r.pos),
-      emitted AS (
-        SELECT r.w, CASE WHEN r.pos = 1 THEN substr(r.w, 1, m.best)
-                         ELSE '##' || substr(r.w, r.pos, m.best) END AS piece
-        FROM rec r JOIN matches m ON m.w = r.w AND m.pos = r.pos)
-      SELECT e.piece, CAST(SUM(wd.c) AS BIGINT) AS n
-      FROM emitted e JOIN words wd ON wd.w = e.w
-      GROUP BY 1 ORDER BY n DESC, piece LIMIT 40""",
-
-    // q_tokenize_unigram: rebuild the inventory + integer staircase-log₂
-    // scores (bin()/shift arithmetic — no libm), enumerate EVERY
-    // segmentation per distinct word with a recursive CTE, argmax under
-    // the same (score DESC, pieces ASC, path ASC) total order, re-weight
-    // by word frequency.
-    "q_tokenize_unigram" -> """
-      WITH RECURSIVE words AS (
-        SELECT w, COUNT(*) AS c FROM (
-          SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-            x -> x <> '')) AS w
-          FROM documents) GROUP BY 1),
-      vocab AS (
-        SELECT piece, SUM(c) AS n FROM (
-          SELECT substr(w, p, l) AS piece, c
-          FROM words,
-               UNNEST(range(1, len(w) + 1)) AS t(p),
-               UNNEST(range(1, least(4, len(w) - p + 1) + 1)) AS u(l))
-        GROUP BY 1
-        HAVING SUM(c) >= 20 OR length(piece) = 1),
-      tot AS (SELECT SUM(n) AS t FROM vocab),
-      sc AS (
-        SELECT piece,
-               ((length(bin(n)) - 1) * 8
-                  + (n * 8) // (CAST(1 AS BIGINT) << (length(bin(n)) - 1))
-                  - 8)
-               - (SELECT (length(bin(t)) - 1) * 8
-                    + (t * 8) // (CAST(1 AS BIGINT) << (length(bin(t)) - 1))
-                    - 8 FROM tot) AS s
-        FROM vocab),
-      paths AS (
-        SELECT w, CAST(1 AS BIGINT) AS pos, CAST(0 AS BIGINT) AS score,
-               CAST(0 AS BIGINT) AS k, '' AS path
-        FROM words
-        UNION ALL
-        SELECT p.w, p.pos + length(v.piece), p.score + v.s, p.k + 1,
-               p.path || '|' || v.piece
-        FROM paths p
-        JOIN sc v ON v.piece = substr(p.w, p.pos, length(v.piece))
-        WHERE p.pos <= len(p.w)),
-      best AS (
-        SELECT w, path,
-               row_number() OVER (PARTITION BY w
-                 ORDER BY score DESC, k ASC, path ASC) AS rn
-        FROM paths WHERE pos = len(w) + 1),
-      emitted AS (
-        SELECT w, unnest(string_split(substr(path, 2), '|')) AS piece
-        FROM best WHERE rn = 1)
-      SELECT e.piece, CAST(SUM(wd.c) AS BIGINT) AS n
-      FROM emitted e JOIN words wd ON wd.w = e.w
-      GROUP BY 1 ORDER BY n DESC, piece LIMIT 40""",
-
-    // Late routing re-derived: batch assignment is a pure row function,
-    // the watermark a strictly-earlier-batch cumulative max minus the
-    // lateness, the split a comparison — all on microsecond-exact
-    // timestamps.
-    "q_stream_late" -> """
-      WITH b AS (
-        SELECT ts, event_id, event_type,
-               CASE WHEN event_id % 13 = 0 THEN 2
-                    WHEN ts < TIMESTAMP '2024-01-11' THEN 0
-                    WHEN ts < TIMESTAMP '2024-01-21' THEN 1
-                    ELSE 2 END AS batch
-        FROM events),
-      m AS (SELECT batch, max(ts) AS mx FROM b GROUP BY 1),
-      wm AS (
-        SELECT b0.batch, max(m.mx) - INTERVAL 1 HOUR AS w
-        FROM (SELECT DISTINCT batch FROM b) b0
-        JOIN m ON m.batch < b0.batch GROUP BY 1),
-      lab AS (
-        SELECT b.event_type, b.event_id,
-               CASE WHEN w.w IS NOT NULL AND b.ts < w.w
-                    THEN 'late' ELSE 'ontime' END AS face
-        FROM b LEFT JOIN wm w ON w.batch = b.batch)
-      SELECT face, event_type, COUNT(*) AS n,
-             CAST(SUM(event_id) AS BIGINT) AS checksum
-      FROM lab GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // Entity resolution re-derived: same planted variants, both blocking
-    // passes unioned DISTINCT, identical integer scoring, and the match
-    // graph collapsed by a 2-hop minimum — exact here because every edge
-    // requires name agreement, making components same-name cliques.
-    "q_entity_resolution" -> """
-      WITH base AS (
-        SELECT c_custkey AS id, c_name AS name, c_mktsegment AS seg,
-               c_nationkey AS nat,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal
-        FROM customer),
-      records AS (
-        SELECT id, name, seg, nat, bal FROM base
-        UNION ALL
-        SELECT id + 1000000, upper(name), seg, nat, bal + 37
-        FROM base WHERE id % 3 = 0
-        UNION ALL
-        SELECT id + 2000000, name || ' inc', seg, nat, bal - 25
-        FROM base WHERE id % 9 = 0),
-      recn AS (
-        SELECT *, regexp_replace(regexp_replace(lower(name),
-          '\b(inc|llc|ltd)\b', '', 'g'), '[^a-z0-9]', '', 'g') AS nn
-        FROM records),
-      cand AS (
-        SELECT DISTINCT a_id, b_id, na, nb, ba, bb, sa, sb FROM (
-          SELECT a.id AS a_id, b.id AS b_id, a.nn AS na, b.nn AS nb,
-                 a.bal AS ba, b.bal AS bb, a.seg AS sa, b.seg AS sb
-          FROM recn a JOIN recn b ON a.nn = b.nn AND a.id < b.id
-          UNION ALL
-          SELECT a.id, b.id, a.nn, b.nn, a.bal, b.bal, a.seg, b.seg
-          FROM recn a JOIN recn b
-            ON a.nat = b.nat AND a.bal // 10000 = b.bal // 10000
-               AND a.id < b.id)),
-      matches AS (
-        SELECT a_id, b_id FROM cand
-        WHERE (CASE WHEN na = nb THEN 50 ELSE 0 END) +
-              (CASE WHEN abs(ba - bb) <= 100 THEN 30 ELSE 0 END) +
-              (CASE WHEN sa = sb THEN 20 ELSE 0 END) >= 80),
-      edges AS (
-        SELECT a_id AS u, b_id AS v FROM matches
-        UNION SELECT b_id, a_id FROM matches),
-      nbr1 AS (
-        SELECT r.id, least(r.id, coalesce(min(e.v), r.id)) AS m1
-        FROM recn r LEFT JOIN edges e ON e.u = r.id GROUP BY r.id),
-      comp AS (
-        SELECT n.id, least(n.m1, coalesce(min(n2.m1), n.m1)) AS entity
-        FROM nbr1 n LEFT JOIN edges e ON e.u = n.id
-        LEFT JOIN nbr1 n2 ON n2.id = e.v
-        GROUP BY n.id, n.m1),
-      per AS (
-        SELECT entity, COUNT(*) AS n_records,
-               CAST(SUM(id) AS BIGINT) AS sum_id
-        FROM comp GROUP BY 1)
-      SELECT n_records, COUNT(*) AS n_entities,
-             CAST(SUM(sum_id) AS BIGINT) AS checksum
-      FROM per GROUP BY 1 ORDER BY 1""",
-
-    // Partition evolution re-derived: layouts are an engine-side detail —
-    // the oracle just aggregates the base table (both faces), proving the
-    // mixed-layout reconstruction loses and duplicates nothing.
-    "q_lake_partition_evolution" -> """
-      SELECT * FROM (
-        SELECT 'all' AS face, l_returnflag, count(*) AS n_rows,
-               round(sum(l_quantity), 2) AS sum_qty
-        FROM lineitem GROUP BY 2
-        UNION ALL
-        SELECT 'probe', l_returnflag, count(*), round(sum(l_quantity), 2)
-        FROM lineitem WHERE l_returnflag = 'R' GROUP BY 2)
-      ORDER BY face, l_returnflag""",
-
-    // SCD2 re-derived analytically: each (eff_from, eff_to, is_current)
-    // stratum's membership is a pure function of the key's residues —
-    // %4 keys closed at 1, %8 keys re-closed at 2, %50 synthetics opened
-    // at 1, the %7 echo contributing nothing.
-    "q_lake_scd2" -> """
-      WITH base AS (
-        SELECT c_custkey AS key, c_mktsegment AS seg,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal
-        FROM customer),
-      vers AS (
-        SELECT key, bal, CAST(0 AS BIGINT) AS eff_from,
-               CASE WHEN key % 4 = 0 THEN CAST(1 AS BIGINT) END AS eff_to,
-               CASE WHEN key % 4 = 0 THEN 0 ELSE 1 END AS is_current
-        FROM base
-        UNION ALL
-        SELECT key, bal + CASE WHEN key % 10 = 0 THEN 1000 ELSE 0 END, 1,
-               CASE WHEN key % 8 = 0 THEN CAST(2 AS BIGINT) END,
-               CASE WHEN key % 8 = 0 THEN 0 ELSE 1 END
-        FROM base WHERE key % 4 = 0
-        UNION ALL
-        SELECT key + 1000000, bal, 1, NULL, 1
-        FROM base WHERE key % 50 = 0
-        UNION ALL
-        SELECT key, bal + CASE WHEN key % 10 = 0 THEN 1000 ELSE 0 END,
-               2, NULL, 1
-        FROM base WHERE key % 8 = 0)
-      SELECT eff_from, eff_to, is_current, COUNT(*) AS n,
-             CAST(SUM(key) AS BIGINT) AS sum_key,
-             CAST(SUM(bal) AS BIGINT) AS sum_bal
-      FROM vers GROUP BY 1, 2, 3
-      ORDER BY eff_from, coalesce(eff_to, -1), is_current""",
-
-    // Multi-table txn re-derived: the committed txn's sources appear in
-    // both faces, the aborted one in neither, the late main-line-only
-    // insert (src3) only in the main face — where its stats row is the
-    // empty COALESCE and consistency flips to 0.
-    "q_lake_multitxn" -> """
-      WITH meta_main AS (
-        SELECT source, COUNT(*) AS n_meta FROM documents
-        WHERE source IN ('src0', 'src1', 'src3') GROUP BY 1),
-      stats_main AS (
-        SELECT source, COUNT(*) AS n_stats FROM documents
-        WHERE source IN ('src0', 'src1') GROUP BY 1),
-      meta_snap AS (
-        SELECT source, COUNT(*) AS n_meta FROM documents
-        WHERE source IN ('src0', 'src1') GROUP BY 1),
-      faces AS (
-        SELECT 'main' AS face, COALESCE(m.source, s.source) AS source,
-               COALESCE(m.n_meta, 0) AS n_meta,
-               COALESCE(s.n_stats, 0) AS n_stats
-        FROM meta_main m FULL OUTER JOIN stats_main s USING (source)
-        UNION ALL
-        SELECT 'txn_snapshot', m.source, m.n_meta,
-               COALESCE(s.n_stats, 0)
-        FROM meta_snap m FULL OUTER JOIN stats_main s USING (source))
-      SELECT face, source, CAST(n_meta AS BIGINT) AS n_meta,
-             CAST(n_stats AS BIGINT) AS n_stats,
-             CAST(CASE WHEN n_meta = n_stats THEN 1 ELSE 0 END AS INT)
-               AS consistent
-      FROM faces ORDER BY face, source""",
-
-    // CUSUM re-derived as a recursive CTE: the max(0, S + B·v − bs −
-    // slackB) recurrence unrolls one series step per iteration (~700
-    // steps × 5 keys — bounded by the calendar). Pure integer state, so
-    // every S, max-S and alarm instant matches the Spark fold exactly.
-    "q_changepoint" -> """
-      WITH RECURSIVE series AS (
-        SELECT event_type AS k, date_trunc('hour', ts) AS t,
-               CAST(COUNT(*) AS BIGINT) +
-                 CASE WHEN date_trunc('hour', ts) >= TIMESTAMP '2024-01-21'
-                      THEN 3 ELSE 0 END AS v
-        FROM events GROUP BY event_type, date_trunc('hour', ts)),
-      idx AS (
-        SELECT k, t, v, ROW_NUMBER() OVER (PARTITION BY k ORDER BY t) AS i,
-               COUNT(*) OVER (PARTITION BY k) AS np FROM series),
-      base AS (
-        SELECT k, CAST(SUM(v) AS BIGINT) AS bs
-        FROM idx WHERE i <= 48 GROUP BY 1),
-      rec AS (
-        SELECT b.k, CAST(48 AS BIGINT) AS i, CAST(0 AS BIGINT) AS s,
-               CAST(0 AS BIGINT) AS mx, CAST(NULL AS TIMESTAMP) AS at
-        FROM base b
-        UNION ALL
-        SELECT r.k, r.i + 1,
-               greatest(r.s + 48 * x.v - b.bs - 48, 0),
-               greatest(r.mx, greatest(r.s + 48 * x.v - b.bs - 48, 0)),
-               COALESCE(r.at,
-                 CASE WHEN greatest(r.s + 48 * x.v - b.bs - 48, 0) > 960
-                      THEN x.t END)
-        FROM rec r JOIN idx x ON x.k = r.k AND x.i = r.i + 1
-        JOIN base b ON b.k = r.k)
-      SELECT r.k AS event_type, CAST(max(i.np) AS BIGINT) AS n_points,
-             CAST(max(b.bs) AS BIGINT) AS base_sum,
-             CAST(max(r.mx) FILTER (r.i = i.np) AS BIGINT) AS max_s,
-             max(r.at) FILTER (r.i = i.np) AS alarm_time
-      FROM rec r JOIN idx i ON i.k = r.k AND i.i = 1
-      JOIN base b ON b.k = r.k
-      GROUP BY 1 ORDER BY 1""",
-
-    // l-diversity re-derived: the same stepped search with the dual bar
-    // (class size ≥ k AND distinct sensitive ≥ l) in the residue.
-    "q_kanon_ldiv" -> """
-      WITH base AS (
-        SELECT c_nationkey AS nat, c_mktsegment AS seg,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal
-        FROM customer),
-      gen AS (
-        SELECT s,
-          CASE WHEN s = 0 THEN CAST(nat AS VARCHAR)
-               WHEN s = 1 THEN CAST(nat // 5 AS VARCHAR)
-               ELSE '*' END AS g_nat,
-          CASE WHEN s = 0 THEN CAST(bal // 100000 AS VARCHAR)
-               WHEN s = 1 THEN CAST(bal // 500000 AS VARCHAR)
-               ELSE '*' END AS g_bal,
-          seg
-        FROM base CROSS JOIN (SELECT unnest([0, 1, 2]) AS s)),
-      classes AS (
-        SELECT s, g_nat, g_bal, COUNT(*) AS n,
-               COUNT(DISTINCT seg) AS n_sens
-        FROM gen GROUP BY 1, 2, 3),
-      residue AS (
-        SELECT s,
-               COALESCE(SUM(CASE WHEN n < 3 OR n_sens < 3 THEN n END), 0)
-                 AS viol,
-               SUM(n) AS tot
-        FROM classes GROUP BY 1),
-      chosen AS (
-        SELECT COALESCE(
-          (SELECT min(s) FROM residue WHERE viol * 1000000 <= tot * 200000),
-          2) AS s)
-      SELECT CAST(c.s AS INT) AS step, g_nat, g_bal,
-             CAST(n AS BIGINT) AS n, CAST(n_sens AS BIGINT) AS n_sens
-      FROM classes c JOIN chosen ch ON c.s = ch.s
-      WHERE n >= 3 AND n_sens >= 3
-      ORDER BY g_nat, g_bal""",
-
-    // q_dp_rr: replay the seeded md5 coin per event, the flips, and the
-    // integer-ppm debiasing — the mechanism is exactly auditable, which
-    // is the point of the deterministic coin.
-    "q_dp_rr" -> """
-      WITH base AS (
-        SELECT event_id, event_type,
-               CASE WHEN value > 150 THEN 1 ELSE 0 END AS sig
-        FROM events),
-      coin AS (
-        SELECT event_type,
-               CASE WHEN CAST(('0x' || substring(md5('rr-r8|' ||
-                        CAST(event_id AS VARCHAR)), 1, 12)) AS BIGINT)
-                        % 1000000 < 250000
-                    THEN 1 - sig ELSE sig END AS rr
-        FROM base),
-      g AS (SELECT event_type, COUNT(*) AS n,
-                   CAST(SUM(rr) AS BIGINT) AS n_reported
-            FROM coin GROUP BY 1)
-      SELECT event_type, CAST(n AS BIGINT) AS n, n_reported,
-             CAST(least(1000000, greatest(0,
-               ((n_reported * 1000000 // n) - 250000) * 1000000
-                 // (1000000 - 500000))) AS BIGINT) AS est_true_ppm
-      FROM g ORDER BY event_type""",
-
-    // t-closeness re-derived: the stepped search again, now with each
-    // class's ordered-EMD vs the global balance-band distribution in the
-    // residue — cumulative counts cross-multiplied in HUGEINT, integral
-    // `//` for the reported ppm (floor; all terms non-negative).
-    "q_kanon_tclose" -> """
-      WITH base AS (
-        SELECT c_nationkey AS nat, c_mktsegment AS seg,
-               CAST(round(c_acctbal * 100) AS BIGINT) // 100000 AS sens
-        FROM customer),
-      gdist AS (SELECT sens, COUNT(*) AS g FROM base GROUP BY 1),
-      globc AS (
-        SELECT sens, SUM(g) OVER (ORDER BY sens) AS cg FROM gdist),
-      tot AS (SELECT CAST(SUM(g) AS HUGEINT) AS big_n,
-                     COUNT(*) AS m FROM gdist),
-      gen AS (
-        SELECT s,
-          CASE WHEN s = 0 THEN CAST(nat AS VARCHAR)
-               WHEN s = 1 THEN CAST(nat // 5 AS VARCHAR)
-               ELSE '*' END AS g_nat,
-          CASE WHEN s <= 1 THEN seg ELSE '*' END AS g_seg,
-          sens
-        FROM base CROSS JOIN (SELECT unnest([0, 1, 2]) AS s)),
-      cs AS (SELECT s, g_nat, g_seg, sens, COUNT(*) AS cnt
-             FROM gen GROUP BY 1, 2, 3, 4),
-      sizes AS (SELECT s, g_nat, g_seg, SUM(cnt) AS n
-                FROM cs GROUP BY 1, 2, 3),
-      grid AS (
-        SELECT z.s, z.g_nat, z.g_seg, z.n, v.sens, v.cg,
-               COALESCE(c.cnt, 0) AS cnt
-        FROM sizes z CROSS JOIN globc v
-        LEFT JOIN cs c ON c.s = z.s AND c.g_nat = z.g_nat
-                      AND c.g_seg = z.g_seg AND c.sens = v.sens),
-      cum AS (
-        SELECT s, g_nat, g_seg, n, cg,
-               SUM(cnt) OVER (PARTITION BY s, g_nat, g_seg
-                              ORDER BY sens) AS cc
-        FROM grid),
-      emd AS (
-        SELECT s, g_nat, g_seg, n,
-               (SUM(abs(CAST(cc AS HUGEINT) * (SELECT big_n FROM tot)
-                        - CAST(n AS HUGEINT) * cg)) * 1000000)
-               // (CAST(n AS HUGEINT) * (SELECT big_n FROM tot)
-                  * ((SELECT m FROM tot) - 1)) AS emd_ppm
-        FROM cum GROUP BY 1, 2, 3, 4),
-      residue AS (
-        SELECT s,
-               COALESCE(SUM(CASE WHEN n < 3 OR emd_ppm > 250000 THEN n END),
-                 0) AS viol,
-               SUM(n) AS tot_n
-        FROM emd GROUP BY 1),
-      chosen AS (
-        SELECT COALESCE(
-          (SELECT min(s) FROM residue
-           WHERE viol * 1000000 <= tot_n * 200000), 2) AS s)
-      SELECT CAST(e.s AS INT) AS step, g_nat, g_seg,
-             CAST(n AS BIGINT) AS n, CAST(emd_ppm AS BIGINT) AS emd_ppm
-      FROM emd e JOIN chosen ch ON e.s = ch.s
-      WHERE n >= 3 AND emd_ppm <= 250000
-      ORDER BY g_nat, g_seg""",
-
-    // k-anonymity re-derived: the oracle replays the STEP SEARCH (per-step
-    // under-k residues vs the 20% suppression budget, coarsest-step
-    // fallback), then emits the chosen step's ≥k classes. DuckDB `//`
-    // truncates toward zero exactly like Spark's `div` (verified on
-    // negatives — acctbal bands cross zero).
-    "q_kanon" -> """
-      WITH base AS (
-        SELECT c_nationkey AS nat, c_mktsegment AS seg,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal
-        FROM customer),
-      gen AS (
-        SELECT s,
-          CASE WHEN s = 0 THEN CAST(nat AS VARCHAR)
-               WHEN s = 1 THEN CAST(nat // 5 AS VARCHAR)
-               ELSE '*' END AS g_nat,
-          CASE WHEN s <= 1 THEN seg ELSE '*' END AS g_seg,
-          CASE WHEN s = 0 THEN CAST(bal // 100000 AS VARCHAR)
-               WHEN s = 1 THEN CAST(bal // 500000 AS VARCHAR)
-               ELSE '*' END AS g_bal
-        FROM base CROSS JOIN (SELECT unnest([0, 1, 2]) AS s)),
-      classes AS (
-        SELECT s, g_nat, g_seg, g_bal, COUNT(*) AS n
-        FROM gen GROUP BY 1, 2, 3, 4),
-      residue AS (
-        SELECT s, COALESCE(SUM(CASE WHEN n < 3 THEN n END), 0) AS viol,
-               SUM(n) AS tot
-        FROM classes GROUP BY 1),
-      chosen AS (
-        SELECT COALESCE(
-          (SELECT min(s) FROM residue WHERE viol * 1000000 <= tot * 200000),
-          2) AS s)
-      SELECT CAST(c.s AS INT) AS step, g_nat, g_seg, g_bal,
-             CAST(n AS BIGINT) AS n
-      FROM classes c JOIN chosen ch ON c.s = ch.s
-      WHERE n >= 3
-      ORDER BY g_nat, g_seg, g_bal""",
-
-    // Skyline re-derived as the textbook NOT EXISTS dominance predicate —
-    // exact-value oracle is valid for the engine's band-partitioned
-    // formulation because banding never changes the answer, only the
-    // parallel decomposition.
-    "q_pareto" -> """
-      WITH per AS (
-        SELECT l_suppkey AS suppkey,
-               CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-                 AS BIGINT) AS cost_cents,
-               COUNT(*) AS n_lines
-        FROM lineitem GROUP BY 1)
-      SELECT p.suppkey, p.cost_cents, p.n_lines
-      FROM per p
-      WHERE NOT EXISTS (
-        SELECT 1 FROM per q
-        WHERE q.cost_cents <= p.cost_cents AND q.n_lines >= p.n_lines
-          AND (q.cost_cents < p.cost_cents OR q.n_lines > p.n_lines))
-      ORDER BY suppkey""",
-  )
+  val benchPhases: Map[String, (SparkSession, String) =>
+      (() => Unit, () => DataFrame)] =
+    declared.collect { case (n, Q(_, _, _, Some(p))) => n -> p }
 }

@@ -1,10 +1,14 @@
 package graft
 
+import graft.queries.Q
+
 /** Consistency pins around SparkEntry's query/oracle/benchPhases maps.
-  * The bundled `queries` entries for split queries are now DERIVED from
-  * benchPhases (`build(); probe()`), so face drift is impossible by
-  * construction — what remains worth pinning is that every split entry
-  * has a query twin, actually runs standalone, and returns rows.
+  * Each query is declared once, as a [[Q]] holding its build beside its
+  * oracle SQL, and a split query's bundled build is DERIVED from its
+  * phases (`build(); probe()`), so face drift is impossible by
+  * construction — what remains worth pinning is that the assembly drops
+  * no declaration, and that every split entry actually runs standalone
+  * and returns rows.
   */
 class BenchPhasesSpec extends SparkSpec {
 
@@ -15,6 +19,19 @@ class BenchPhasesSpec extends SparkSpec {
     // checked by the gate (Verify only dumps queries)
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles with no query: $orphans")
+  }
+
+  test("assembly refuses a repeated name and keeps every declaration") {
+    // a repeated key in a Map literal silently keeps the last entry —
+    // the query it shadowed would drop out of Verify and the gate
+    val q = Q("q_twice", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val err = intercept[IllegalArgumentException](
+      Q.byName(Seq(q, q.copy(oracleSql = "SELECT 2"))))
+    assert(err.getMessage.contains("q_twice"), err.getMessage)
+    assert(SparkEntry.queries.size == 275)
+    assert(SparkEntry.oracleSql.size == 275)
+    assert(SparkEntry.benchPhases.size == 14)
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   test("every benchPhases entry has a query twin and probes non-empty") {
