@@ -9,7 +9,10 @@ For every end-to-end metric it prints each side's median and quartiles,
 B's wins over the pairs (ties count for neither side), whether B's
 median is worse than A's by more than the metric's bound, and whether
 the gain rule holds: B wins at least 9 of every 10 pairs and its median
-is better than A's by more than A's interquartile distance.
+is better than A's by more than A's interquartile distance. It then
+prints each side's median of the metrics a run prints but the benchmark
+does not gate (lake_dml's write_amp and space_amp, and each op kind's
+*_p50_ms), which show the layer a change moved.
 
 With --counters SEED it instead makes one traced run (`--trace 1`) per
 side at that seed and prints perfbench/selftest.py's DETERMINISTIC
@@ -40,6 +43,8 @@ sys.dont_write_bytecode = True  # leave perfbench/ as checked out
 sys.path.insert(0, str(ROOT / "perfbench"))
 import stats  # noqa: E402
 from selftest import DETERMINISTIC  # noqa: E402
+
+UNGATED = re.compile(r"write_amp|space_amp|\w+_p50_ms")
 
 
 def parse_seeds(text):
@@ -75,11 +80,15 @@ def run(tree, workload, seed, seconds, trace=0):
     return p.stdout.strip().splitlines()
 
 
+def printed(lines):
+    """The metrics a run prints, as printed."""
+    return {m.group(1): m.group(2) for m in (re.match(r"metric (\S+) = (\S+)", ln) for ln in lines) if m}
+
+
 def traced(tree, workload, seed, seconds):
     """The metrics one traced run prints, as printed, or None when it failed."""
     lines = run(tree, workload, seed, seconds, trace=1)
-    return None if lines is None else {
-        m.group(1): m.group(2) for m in (re.match(r"metric (\S+) = (\S+)", ln) for ln in lines) if m}
+    return None if lines is None else printed(lines)
 
 
 def counters(sides, workload, seed, seconds):
@@ -125,16 +134,21 @@ def main():
     if a.counters is not None:
         counters(sides, a.workload, a.counters, spec["run_seconds"])
 
+    gated = {m["name"] for m in spec["end_to_end"]}
     pairs = []  # (seed, result A, result B), both runs succeeded
     for i, seed in enumerate(parse_seeds(a.seeds)):
         order = (0, 1) if i % 2 == 0 else (1, 0)
         res = [None, None]
         for side in order:
             lines = run(sides[side][1], a.workload, seed, spec["run_seconds"])
-            res[side] = None if lines is None else json.loads(lines[-1])
+            if lines is not None:
+                res[side] = json.loads(lines[-1])
+                res[side]["ungated"] = {k: float(v) for k, v in printed(lines).items()
+                                        if k not in gated and UNGATED.fullmatch(k) and v != "None"}
         line = " | ".join(
             f"{'AB'[s]} " + ("failed" if r is None else f"correct={r['correct']} failed={r['failed']} "
-                             + " ".join(f"{k}={v['value']:.4g}" for k, v in r["metrics"].items()))
+                             + " ".join(f"{k}={v['value']:.4g}" for k, v in r["metrics"].items())
+                             + "".join(f" {k}={v:.4g}" for k, v in r["ungated"].items()))
             for s, r in enumerate(res))
         print(f"pair {i + 1} seed {seed} ({'AB'[order[0]]} first): {line}", flush=True)
         if None not in res:
@@ -158,6 +172,10 @@ def main():
               f"B wins {wins}/{len(pairs)} (loses {losses})  "
               f"{'WORSE THAN BOUND ' + str(m['bound']) if regressed else 'within bound ' + str(m['bound'])}  "
               f"gain rule {'holds' if gain else 'not met'}")
+    for name in pairs[0][1]["ungated"]:
+        va, vb = ([p[s]["ungated"][name] for p in pairs if name in p[s]["ungated"]] for s in (1, 2))
+        if va and vb:
+            print(f"{name:16s} A {stats.median(va):.4g}  B {stats.median(vb):.4g}  (printed, not gated)")
 
 
 if __name__ == "__main__":

@@ -4,6 +4,7 @@ import java.nio.file.Path
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -39,8 +40,12 @@ object FooterStats {
   def read(hadoopConf: Configuration, file: Path, cols: Seq[StructField],
            sessionTz: String)
       : (Long, Map[String, String], Map[String, String], Map[String, Long]) = {
+    // read options from the caller's conf: the one-argument open builds
+    // them from a fresh Configuration, whose first read re-parses the
+    // core-*.xml resources off the classpath (milliseconds per footer)
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file.toUri), hadoopConf))
+      HadoopInputFile.fromPath(new HPath(file.toUri), hadoopConf),
+      HadoopReadOptions.builder(hadoopConf).build())
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum

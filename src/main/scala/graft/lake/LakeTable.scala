@@ -913,9 +913,20 @@ object LakeTable {
                                     filesRemoved: Int, filesAdded: Int,
                                     finalVersion: Long)
 
-  /** Plan: candidates = files < minFileSize, sorted by size ascending; greedy
-    * bin-packing into groups whose total stays ≤ maxFileSize; only groups of
-    * ≥ minFilesCount files qualify (`compaction_service.go:160-200`).
+  /** A file joins a compaction group only while it is at most this many
+    * times the group's smallest file (the size tiers of the LSM-tree). */
+  private val TierRatio = 2L
+
+  /** Plan, size-tiered: candidates = files < minFileSize, sorted by size
+    * ascending; a file joins the open group only while it is at most
+    * [[TierRatio]]× the group's smallest file and the group's total stays
+    * ≤ maxFileSize; only groups of ≥ minFilesCount files qualify. The
+    * reference bin-packs every small file together
+    * (`compaction_service.go:160-200`), so each OPTIMIZE of a table under
+    * minFileSize rewrites the whole table again, and its output's key
+    * stats span every key for the DML that follows. Under tiers a file is
+    * merged again only with files of its own size, so each byte is
+    * rewritten O(log N) times over N appends.
     */
   def planCompaction(snap: Snapshot, cfg: CompactionConfig): Seq[Seq[FileAdd]] = {
     val candidates = snap.files.filter(_.size < cfg.minFileSize)
@@ -924,7 +935,8 @@ object LakeTable {
     var current = scala.collection.mutable.ArrayBuffer[FileAdd]()
     var currentSize = 0L
     candidates.foreach { c =>
-      if (currentSize + c.size > cfg.maxFileSize && current.nonEmpty) {
+      if (current.nonEmpty && (c.size > TierRatio * current.head.size ||
+          currentSize + c.size > cfg.maxFileSize)) {
         if (current.size >= cfg.minFilesCount) groups += current.toSeq
         current = scala.collection.mutable.ArrayBuffer(c)
         currentSize = c.size
@@ -1140,9 +1152,7 @@ object LakeTable {
     val w = rewriteRows(spark, log, table, sch, txnId, "update")(candidates,
       _ => updated, probes = Seq(
         () => enforceChecks(table, sch, updated),
-        () => { rowsUpdated = src.agg(coalesce(
-            sum(when(hit, 1L).otherwise(0L)), lit(0L)).as("n"))
-          .head.getLong(0) }))
+        () => { rowsUpdated = src.filter(hit).count() }))
     UpdateReport(candidates.size, snap.files.size - candidates.size,
       rowsUpdated, w.result.version)
   }
@@ -2131,7 +2141,7 @@ object LakeTable {
     VacuumReport(all.size, deleted, live.size)
   }
 
-  private def deleteRecursively(p: Path): Unit =
+  private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)
       val all = try walk.iterator().asScala.toList finally walk.close()
