@@ -529,6 +529,7 @@ object LakeTable {
       partCols: Seq[String] = sch.partCols,
       partition: Map[String, String] = Map.empty,
       bloomCols: Seq[String] = sch.bloomCols): Seq[FileAdd] = {
+    LocalFs.install(spark)
     val tmp = log.tmpDir(table, tag)
     try {
       withStatFriendlyWrites(spark) {
@@ -1402,11 +1403,13 @@ object LakeTable {
     // complete hole set per candidate: prior DV positions ∪ new matches
     val priorDvPaths = candidates.flatMap(_.dv.map(_.path)).distinct
     val candNames = candidates.map(f => baseName(f.path))
+    // with no prior DV each (file, pos) is already unique: one scan per
+    // file, unique row indexes, basenames checked unique above
     val merged = (if (priorDvPaths.isEmpty) newPos
       else newPos.unionAll(
         spark.read.schema(DvSchema).parquet(priorDvPaths: _*)
-          .filter(col("file").isin(candNames: _*))))
-      .distinct().persist()
+          .filter(col("file").isin(candNames: _*))).distinct())
+      .persist()
     try {
       // O(#candidates) rows to the driver — metadata-priced
       val totals: Map[String, Long] = merged.groupBy("file").count()
@@ -1423,8 +1426,9 @@ object LakeTable {
       try {
         if (partial.nonEmpty) {
           val partialNames = partial.map(f => baseName(f.path))
+          LocalFs.install(spark)
           merged.filter(col("file").isin(partialNames: _*))
-            .repartition(1).sortWithinPartitions("file", "pos")
+            .coalesce(1).sortWithinPartitions("file", "pos")
             .write.mode("overwrite").option("compression", "snappy")
             .parquet(staged.toString)
           val one = stagedParts(staged) match {

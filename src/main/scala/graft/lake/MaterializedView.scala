@@ -386,7 +386,8 @@ object MaterializedView {
     */
   def continuousRefresh(spark: SparkSession, log: LakeLog, d: MvDef,
                         checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    LocalFs.install(spark)
     graft.streaming.Streams.lakeStream(spark, log, d.base).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (_: DataFrame, _: Long) =>
@@ -394,6 +395,7 @@ object MaterializedView {
         ()
       }
       .start()
+  }
 
   /** Read the MV, with derived exact means (`avg_<c> = sum_<c>/n_rows`)
     * appended — the read-side face of count/sum self-maintainability. */

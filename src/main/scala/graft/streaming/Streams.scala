@@ -202,6 +202,7 @@ object Streams {
                  checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val appId = appIdFor(checkpointDir)
+    graft.lake.LocalFs.install(stream.sparkSession)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -231,6 +232,7 @@ object Streams {
                    (gate: (DataFrame, DataFrame) => Boolean)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val appId = appIdFor(checkpointDir)
+    graft.lake.LocalFs.install(stream.sparkSession)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -269,6 +271,7 @@ object Streams {
                             latenessMs: Long, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val appId = appIdFor(checkpointDir)
+    graft.lake.LocalFs.install(stream.sparkSession)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
@@ -344,6 +347,7 @@ object Streams {
     import graft.functions.{VectorExpressions, VectorFunctions}
     val appId = appIdFor(checkpointDir)
     val centsLocal = cents.localCheckpoint() // reused every batch
+    graft.lake.LocalFs.install(stream.sparkSession)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -396,6 +400,7 @@ object Streams {
                     keyCol: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val appId = appIdFor(checkpointDir)
+    graft.lake.LocalFs.install(stream.sparkSession)
     stream.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)

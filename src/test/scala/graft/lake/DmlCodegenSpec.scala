@@ -1,10 +1,8 @@
 package graft.lake
 
-import graft.SparkSpec
 import graft.api.LakeSql
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.types._
 
 /** Every lake DML verb, run a second time with new key literals, reuses
   * the classes its first run compiled: no statement may put its literals
@@ -12,28 +10,10 @@ import org.apache.spark.sql.types._
   * distinct value would compile a class on the driver and another on the
   * executor, and evict stable classes from Spark's codegen cache).
   */
-class DmlCodegenSpec extends SparkSpec {
+class DmlCodegenSpec extends DmlLake {
 
   private def compiles(): Long =
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-
-  private val schema = StructType(Seq(StructField("id", LongType),
-    StructField("cust", LongType), StructField("status", StringType),
-    StructField("price", DoubleType)))
-
-  /** A lake with `src` (keys 0–599) and `t` (keys 0–199 in two files). */
-  private def lake(name: String): LakeLog = {
-    val log = new LakeLog(tmpDir(name))
-    def rows(ks: Range) = spark.createDataFrame(spark.sparkContext
-      .parallelize(ks.map(k => Row(k.toLong, k % 17L, "O", k * 1.25)), 1),
-      schema)
-    LakeTable.createTable(log, "src", schema)
-    LakeTable.insert(spark, log, "src", rows(0 until 600))
-    LakeTable.createTable(log, "t", schema)
-    Seq(0 until 100, 100 until 200).foreach(ks =>
-      LakeTable.insert(spark, log, "t", rows(ks)))
-    log
-  }
 
   /** Runs `setup`, `first`, `between`, then `second` (the same verb with
     * new literals); `second` must compile no class. Returns its status
