@@ -16,10 +16,11 @@ does not gate (lake_dml's write_amp and space_amp, and each op kind's
 
 With --counters SEED it instead makes one traced run (`--trace 1`) per
 side at that seed and prints perfbench/selftest.py's DETERMINISTIC
-counters and ok_ratio side by side; it exits 1 when any counter differs,
-a run fails or ok_ratio is below 1.0. That is the check that a change
-leaves the work a workload does (Spark jobs, commits, files added,
-removed and scanned, orphans) as it was.
+counters, the log's cold entry parses (lake.log.entry_reads) and
+ok_ratio side by side; it exits 1 when any counter differs, a run fails
+or ok_ratio is below 1.0. That is the check that a change leaves the
+work a workload does (Spark jobs, commits, log entries read, files
+added, removed and scanned, orphans) as it was.
 
 Usage:
   python3 scripts/abpair.py <revA> <revB> <workload> <seeds> [--work DIR]
@@ -44,6 +45,9 @@ sys.path.insert(0, str(ROOT / "perfbench"))
 import stats  # noqa: E402
 from selftest import DETERMINISTIC  # noqa: E402
 
+# the traced run's work counters: selftest's repeatable set plus the log
+# entries parsed, which a change to the log's replay must leave as it was
+COUNTERS = DETERMINISTIC + ["lake.log.entry_reads"]
 UNGATED = re.compile(r"write_amp|space_amp|\w+_p50_ms")
 
 
@@ -92,16 +96,16 @@ def traced(tree, workload, seed, seconds):
 
 
 def counters(sides, workload, seed, seconds):
-    """Exit 1 unless both sides' traced runs print equal DETERMINISTIC
-    counters and every op of both succeeded."""
+    """Exit 1 unless both sides' traced runs print equal COUNTERS and
+    every op of both succeeded."""
     got = [traced(tree, workload, seed, seconds) for _, tree in sides]
     if None in got:
         sys.exit(1)
-    differ = [k for k in DETERMINISTIC if got[0].get(k) != got[1].get(k)]
-    for k in DETERMINISTIC + ["ok_ratio"]:
+    differ = [k for k in COUNTERS if got[0].get(k) != got[1].get(k)]
+    for k in COUNTERS + ["ok_ratio"]:
         print(f"{k:24s} A {got[0].get(k)}  B {got[1].get(k)}{'  DIFFERS' if k in differ else ''}")
     failing = [s for s, g in zip("AB", got) if g.get("ok_ratio") != "1.0"]
-    print(f"{len(differ)} of {len(DETERMINISTIC)} counters differ; "
+    print(f"{len(differ)} of {len(COUNTERS)} counters differ; "
           f"ok_ratio below 1.0 on: {' '.join(failing) or 'neither side'}")
     sys.exit(1 if differ or failing else 0)
 

@@ -147,6 +147,17 @@ final case class LogCheckpoint(version: Long,
   * sorted by path for determinism (`transaction_log.go:212-215`). */
 final case class Snapshot(table: String, version: Long,
                           schema: Option[TableSchema], files: Seq[FileAdd])
+/** One [[LakeLog.replay]]: the versions its listing found, the snapshot
+  * at its target and the txn-id → version map through it, built on first
+  * use so a plain snapshot never pays for the table's whole history. */
+private[lake] final class LogState(val versions: Seq[Long],
+    val snapshot: Snapshot, checkpoint: Option[LogCheckpoint],
+    tail: Seq[LogEntry]) {
+  def latest: Long = versions.last
+  lazy val txns: Map[String, Long] =
+    checkpoint.fold(Map.empty[String, Long])(_.txnMap) ++
+      tail.map(e => e.txn_id -> e.version)
+}
 final case class CommitResult(version: Long, duplicate: Boolean)
 
 final class CommitConflictException(msg: String) extends RuntimeException(msg)
@@ -286,8 +297,7 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
   def tableExists(table: String): Boolean = Files.exists(logDir(table))
 
   /** Files.list with the stream CLOSED — the bare iterator leaks one
-    * directory fd per call until GC, and commits list directories several
-    * times each. */
+    * directory fd per call until GC. */
   private def listNames(dir: java.nio.file.Path): Seq[String] = {
     val s = Files.list(dir)
     try s.iterator().asScala.map(_.getFileName.toString).toList
@@ -334,12 +344,8 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
   def dropTable(table: String): Unit = lockFor(table).synchronized {
     if (!tableExists(table))
       throw new LakeValidationException(s"table $table does not exist")
-    def deleteTree(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) listNames(p).foreach(n => deleteTree(p.resolve(n)))
-      Files.deleteIfExists(p)
-    }
-    deleteTree(logDir(table))
-    deleteTree(tableDir(table))
+    LakeTable.deleteRecursively(logDir(table))
+    LakeTable.deleteRecursively(tableDir(table))
     // a later CREATE of the same name would otherwise resurrect parsed
     // entries/checkpoints cached under the deleted paths
     val prefix = logDir(table)
@@ -353,50 +359,30 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
   private def checkpointPath(table: String, v: Long): Path =
     logDir(table).resolve(f"$v%020d.checkpoint.json")
 
-  /** Largest checkpoint at or below `upTo`, if one exists. */
-  private def latestCheckpointAt(table: String, upTo: Long)
-      : Option[LogCheckpoint] = {
+  /** Listings of `_log`: one per read of log state (LakeCheckpointSpec). */
+  val dirListings = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The one listing of `_log`: entry versions (ascending) and checkpoint
+    * versions — canonical names only, never a writer's `.staged*` file. */
+  private def listLog(table: String): (Seq[Long], Seq[Long]) = {
     val dir = logDir(table)
-    if (!Files.exists(dir)) None
-    else listNames(dir).collect { case CheckpointNameRe(v) => v.toLong }
-      .filter(_ <= upTo).maxOption
-      .map { v =>
-        val p = checkpointPath(table, v)
-        checkpointCache.computeIfAbsent(p,
-          path => mapper.readValue[LogCheckpoint](Files.readString(path)))
-      }
+    if (!Files.exists(dir)) (Nil, Nil)
+    else {
+      dirListings.incrementAndGet()
+      val names = listNames(dir)
+      (names.collect { case EntryNameRe(v) => v.toLong }.sorted.toVector,
+        names.collect { case CheckpointNameRe(v) => v.toLong })
+    }
   }
 
-  /** Write the checkpoint for `version`. An atomic [[LakeLog.replace]], so
-    * a partial checkpoint can never be observed; called with the table
-    * lock held (from writeEntry), so the replay it materializes is
-    * stable. */
-  private def writeCheckpoint(table: String, version: Long): Unit = {
-    val snap = snapshot(table, version)
-    val cp = LogCheckpoint(version, snap.schema, snap.files,
-      txnsThrough(table, version))
-    LakeLog.replace(checkpointPath(table, version),
-      mapper.writeValueAsString(cp))
-  }
+  /** Committed versions in ascending order. */
+  def versions(table: String): Seq[Long] = listLog(table)._1
 
-  /** Committed versions in ascending order. Only canonical `%020d.json`
-    * names count — a concurrent writer's `.staged*` temp file must never be
-    * visible to readers (they appear atomically via rename).
-    */
-  def versions(table: String): Seq[Long] = {
-    val dir = logDir(table)
-    if (!Files.exists(dir)) Nil
-    else listNames(dir)
-      .collect { case EntryNameRe(v) => v.toLong }
-      .sorted
-  }
+  def latestVersion(table: String): Long = existing(table, versions(table)).last
 
-  def latestVersion(table: String): Long = {
-    val vs = versions(table)
-    if (vs.isEmpty)
-      throw new LakeValidationException(s"table $table does not exist")
-    vs.last
-  }
+  private def existing(table: String, vs: Seq[Long]): Seq[Long] =
+    if (vs.nonEmpty) vs
+    else throw new LakeValidationException(s"table $table does not exist")
 
   /** Resolve `TIMESTAMP AS OF`: the newest version committed at or before
     * `tsMs`. Commit timestamps are non-decreasing in version order (one
@@ -407,9 +393,7 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     * commit fails loudly instead of silently reading the latest state.
     */
   def versionAtTimestamp(table: String, tsMs: Long): Long = {
-    val vs = versions(table)
-    if (vs.isEmpty)
-      throw new LakeValidationException(s"table $table does not exist")
+    val vs = existing(table, versions(table))
     var lo = 0
     var hi = vs.size - 1
     var ans = -1L
@@ -451,64 +435,75 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
       throw new CommitConflictException(
         s"version ${entry.version} already committed for $table " +
           "(lost the cross-process commit race)")
-    // checkpoint cadence: every Nth commit materializes the replay state.
-    // Best-effort by design — the entry above IS committed, and a reader
-    // finding no checkpoint just replays more entries
-    if (checkpointInterval > 0 && entry.version > 0 &&
-        entry.version % checkpointInterval == 0)
-      try writeCheckpoint(table, entry.version)
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[lake] checkpoint ${entry.version} for $table failed: " +
-            e.getMessage)
-      }
   }
 
-  /** Replay the log through `version` (0 or negative = latest) — from the
-    * newest checkpoint at or below it when one exists, so the fold touches
-    * at most `checkpointInterval` entries however old the table is. Latest
-    * schema wins (`transaction_log.go:191-194`); files sorted by path. */
-  def snapshot(table: String, version: Long = 0L): Snapshot = {
-    val latest = latestVersion(table)
-    val target = if (version <= 0) latest else version
-    if (target > latest)
-      throw new LakeValidationException(
-        s"version $target does not exist for $table (latest $latest)")
-    val cp = latestCheckpointAt(table, target)
-    var schema: Option[TableSchema] = cp.flatMap(_.schema)
-    val fileMap = scala.collection.mutable.LinkedHashMap[String, FileAdd]()
-    cp.foreach(_.files.foreach(a => fileMap(a.path) = a))
-    val from = cp.map(_.version).getOrElse(-1L)
-    versions(table).foreach { v =>
-      if (v > from && v <= target) {
-        val e = readEntry(table, v)
-        if (e.schema.isDefined) schema = e.schema
-        // removes BEFORE adds (Delta semantics): an entry that removes and
-        // re-adds the same path REPLACES the file entry — the shape a
-        // deletion-vector commit uses to attach a DvRef in place
-        e.removes.foreach(fileMap.remove)
-        e.adds.foreach(a => fileMap(a.path) = a)
-      }
+  /** The checkpoint at `version`: the commit's own replay `prior` plus the
+    * entry it just committed (read back as every later reader sees it),
+    * written by an atomic [[LakeLog.replace]]. Best-effort — the entry IS
+    * committed, and a reader finding no checkpoint replays more entries. */
+  private def writeCheckpoint(table: String, prior: LogState,
+                              version: Long): Unit =
+    try {
+      val e = readEntry(table, version)
+      val snap = rolled(prior.snapshot, Seq(e), version)
+      LakeLog.replace(checkpointPath(table, version),
+        mapper.writeValueAsString(LogCheckpoint(version, snap.schema,
+          snap.files, prior.txns + (e.txn_id -> version))))
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(
+        s"[lake] checkpoint $version for $table failed: ${e.getMessage}")
     }
-    Snapshot(table, target, schema, fileMap.values.toSeq.sortBy(_.path))
+
+  /** THE replay every read of table state goes through: one listing of
+    * `_log` gives the versions and the newest checkpoint at or below
+    * `target` (None = latest), and the entries above it fold once — at
+    * most `checkpointInterval` of them at any table age. A target below
+    * 0 is the state before CREATE: no schema, no files. */
+  private[lake] def replay(table: String, target: Option[Long] = None)
+      : LogState = {
+    val (listed, cps) = listLog(table)
+    val vs = existing(table, listed)
+    val to = target.getOrElse(vs.last)
+    if (to > vs.last)
+      throw new LakeValidationException(
+        s"version $to does not exist for $table (latest ${vs.last})")
+    val cp = cps.filter(_ <= to).maxOption.map(v =>
+      checkpointCache.computeIfAbsent(checkpointPath(table, v),
+        p => mapper.readValue[LogCheckpoint](Files.readString(p))))
+    val from = cp.fold(-1L)(_.version)
+    val tail = vs.filter(v => v > from && v <= to).map(readEntry(table, _))
+    val base = Snapshot(table, from, cp.flatMap(_.schema),
+      cp.fold(Seq.empty[FileAdd])(_.files))
+    new LogState(vs, rolled(base, tail, to), cp, tail)
   }
+
+  /** `base` rolled forward by `entries` to `version`: latest schema wins
+    * (`transaction_log.go:191-194`); removes go before adds, so an entry
+    * that re-adds a path it removes REPLACES the file (how a DV commit
+    * attaches its DvRef in place). Files sorted by path. */
+  private def rolled(base: Snapshot, entries: Seq[LogEntry],
+                     version: Long): Snapshot = {
+    val files = scala.collection.mutable.HashMap.from(
+      base.files.map(a => a.path -> a))
+    var schema = base.schema
+    entries.foreach { e =>
+      schema = e.schema.orElse(schema)
+      e.removes.foreach(files.remove)
+      e.adds.foreach(a => files(a.path) = a)
+    }
+    Snapshot(base.table, version, schema, files.values.toSeq.sortBy(_.path))
+  }
+
+  /** Table state at `version` (0 or negative = latest). */
+  def snapshot(table: String, version: Long = 0L): Snapshot =
+    replay(table, if (version <= 0) None else Some(version)).snapshot
 
   /** Look up whether `txnId` already committed (its version if so) —
     * writers use this to skip re-staging data for a redelivered batch,
-    * and to settle a commit whose outcome a throw left unknown. */
+    * and to settle a commit whose outcome a throw left unknown (the
+    * reference keeps this map in its Raft FSM, `state.go:150-159`). */
   def committedVersion(table: String, txnId: String): Option[Long] =
-    txnsThrough(table, latestVersion(table)).get(txnId)
-
-  /** The transaction-id → version idempotency map through `upTo`, rebuilt
-    * from the log (the reference persists it in the Raft FSM,
-    * `state.go:150-159`), checkpoint-accelerated. */
-  private def txnsThrough(table: String, upTo: Long): Map[String, Long] = {
-    val cp = latestCheckpointAt(table, upTo)
-    val from = cp.map(_.version).getOrElse(-1L)
-    cp.map(_.txnMap).getOrElse(Map.empty) ++
-      versions(table).filter(v => v > from && v <= upTo)
-        .map(v => { val e = readEntry(table, v); e.txn_id -> v })
-  }
+    replay(table).txns.get(txnId)
 
   /** The one commit tail of every log entry after CREATE
     * (`state.go:124-195`), under the table's lock:
@@ -517,16 +512,17 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
     *  2. otherwise count an attempt; a data commit's `base` must equal
     *     latest, else [[CommitConflictException]] (metadata verbs pass
     *     None: they apply to whatever is latest);
-    *  3. `build` turns the one snapshot replay into the entry's (schema,
+    *  3. `build` turns the replay's snapshot into the entry's (schema,
     *     adds, removes), throwing [[LakeValidationException]] to refuse;
     *  4. the entry is written at latest + 1 through the create-if-absent
-    *     commit point.
+    *     commit point, then checkpointed from this replay when due.
     */
   private def commitEntry(table: String, txnId: String, base: Option[Long])(
       build: Snapshot => (Option[TableSchema], Seq[FileAdd], Seq[String]))
       : CommitResult = lockFor(table).synchronized {
-    val latest = latestVersion(table) // also validates existence
-    txnsThrough(table, latest).get(txnId) match {
+    val state = replay(table) // also validates existence
+    val latest = state.latest
+    state.txns.get(txnId) match {
       case Some(v) =>
         // a replay is not a commit ATTEMPT for alerting purposes:
         // counting it would deflate the conflict ratio the alert watches
@@ -540,9 +536,11 @@ final class LakeLog(val root: Path, val checkpointInterval: Int = 10) {
             s"optimistic concurrency failure: base version $b " +
               s"does not match current version $latest")
         }
-        val (schema, adds, removes) = build(snapshot(table, latest))
+        val (schema, adds, removes) = build(state.snapshot)
         writeEntry(table, LogEntry(latest + 1, System.currentTimeMillis(),
           txnId, schema, adds, removes))
+        if (checkpointInterval > 0 && (latest + 1) % checkpointInterval == 0)
+          writeCheckpoint(table, state, latest + 1)
         CommitResult(latest + 1, duplicate = false)
     }
   }

@@ -1702,23 +1702,19 @@ object LakeTable {
 
   /** Label every version of `(fromVersion, toVersion]` (0/negative
     * `toVersion` = latest), rolling the file map forward from the
-    * snapshot at `fromVersion` — one replay per window, not one per
-    * version. */
+    * state at `fromVersion` — one replay per window gives that state and
+    * the window's versions, not one per version. */
   private[lake] def changeWindow(log: LakeLog, table: String,
                                  fromVersion: Long,
                                  toVersion: Long = 0L): ChangeWindow = {
-    val to = if (toVersion <= 0) log.latestVersion(table) else toVersion
+    val replay = log.replay(table, Some(fromVersion))
+    val to = if (toVersion <= 0) replay.latest else toVersion
     require(fromVersion <= to, s"fromVersion $fromVersion > toVersion $to")
-    // snapshot() reads version <= 0 as LATEST; the state before version 1
-    // is the empty table under the CREATE entry's schema
-    val start =
-      if (fromVersion <= 0)
-        Snapshot(table, 0L, log.readEntry(table, 0L).schema, Nil)
-      else log.snapshot(table, fromVersion)
+    val start = replay.snapshot
     val startFiles = start.files.map(f => f.path -> f).toMap
     var files = startFiles
     var schema = start.schema
-    val labelled = log.versions(table)
+    val labelled = replay.versions
       .filter(v => v > fromVersion && v <= to).map { v =>
         val e = log.readEntry(table, v)
         val c = classify(files, e)
@@ -1866,17 +1862,12 @@ object LakeTable {
            fromVersion: Long, toVersion: Long = 0L,
            keyCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "diff needs key columns")
-    val latest = log.latestVersion(table)
-    val to = if (toVersion <= 0) latest else toVersion
-    require(fromVersion <= to, s"fromVersion $fromVersion > toVersion $to")
-    // fromVersion <= 0 means "since creation": snapshot() would resolve
-    // the 0-sentinel to LATEST (an empty latest-vs-latest diff — silent
-    // wrong answer), so the creation state is materialized explicitly as
-    // the empty file set and every current row diffs as an insert
-    val snapB = log.snapshot(table, to)
-    val snapA =
-      if (fromVersion <= 0) snapB.copy(version = 0, files = Nil)
-      else log.snapshot(table, fromVersion)
+    val snapB = log.snapshot(table, toVersion)
+    require(fromVersion <= snapB.version,
+      s"fromVersion $fromVersion > toVersion ${snapB.version}")
+    // an explicit target, not snapshot()'s 0-means-latest: fromVersion 0
+    // is the creation state, so every current row diffs as an insert
+    val snapA = log.replay(table, Some(fromVersion)).snapshot
     val sch = snapB.schema.get
     val st = toStructType(sch)
     keyCols.foreach(c => require(st.fieldNames.contains(c), s"no column $c"))

@@ -45,8 +45,8 @@ import org.apache.spark.sql.types._
   * The refresh high-water mark lives in the MV table's OWN log: the commit
   * that applies versions `(last, cur]` carries txn id `mv-<name>-to-<cur>`.
   * That makes refresh crash-safe and exactly-once — a retried refresh
-  * re-derives `last` by parsing the MV log and its upsert lands in the
-  * idempotency map as a duplicate — with no sidecar state file to drift.
+  * re-derives `last` from the MV log's txn map and its upsert lands in
+  * that map as a duplicate — with no sidecar state file to drift.
   *
   * JOIN MVs (`joinTable`/`joinOn`): the aggregate runs over the star
   * join fact ⋈ dim (inner, USING joinOn) — "revenue per dim attribute"
@@ -185,10 +185,9 @@ object MaterializedView {
       .map(mapper.readValue[MvDef](_))
 
   /** The highest base version already folded into the MV, parsed from the
-    * MV log's refresh txn ids (0 = never refreshed). */
+    * refresh txn ids in the MV log's txn map (0 = never refreshed). */
   def lastRefreshed(log: LakeLog, d: MvDef): Long =
-    log.versions(d.name)
-      .map(v => log.readEntry(d.name, v).txn_id)
+    log.replay(d.name).txns.keys
       .collect { case TxnPattern(v) => v.toLong }
       .foldLeft(0L)(math.max)
 
@@ -201,11 +200,9 @@ object MaterializedView {
     // dim-only full refresh re-lands the SAME fact high-water with a
     // newer dim token — a max-by-fact-version pick would tie onto the
     // stale one and loop "full" forever)
-    val ids = log.versions(d.name).sorted
-      .map(v => log.readEntry(d.name, v).txn_id)
-      .collect { case id @ TxnPattern(_) => id }
-    ids.lastOption match {
-      case Some(DimPattern(dv)) => dv.toLong
+    log.replay(d.name).txns.collect { case (id @ TxnPattern(_), v) => v -> id }
+      .maxByOption(_._1) match {
+      case Some((_, DimPattern(dv))) => dv.toLong
       case _ => -1L
     }
   }
@@ -218,8 +215,7 @@ object MaterializedView {
     * scanned. */
   def refreshVersionAt(log: LakeLog, d: MvDef, baseVersion: Long,
                        dimVersion: Long = -1L): Option[Long] =
-    log.versions(d.name).find(v =>
-      log.readEntry(d.name, v).txn_id == txnFor(d, baseVersion, dimVersion))
+    log.replay(d.name).txns.get(txnFor(d, baseVersion, dimVersion))
 
   /** Aggregate a slice of the base into MV shape. */
   private def aggOf(df: DataFrame, d: MvDef): DataFrame = {

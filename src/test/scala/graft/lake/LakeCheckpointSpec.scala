@@ -36,15 +36,37 @@ class LakeCheckpointSpec extends SparkSpec {
     commitN(log, "t", 12)
     assert(checkpointFiles(log, "t") ==
       List(f"${5L}%020d.checkpoint.json", f"${10L}%020d.checkpoint.json"))
+    // v13 removes a file, v14 evolves the schema, v15 (a checkpoint)
+    // removes another: each checkpoint is its commit's replay plus the
+    // new entry, so removes and schema changes must carry through it
+    val first = log.snapshot("t").files.map(_.path)
+    log.commit("t", 12L, "rm-1", Nil, Seq(first.head))
+    val sch = log.snapshot("t").schema.get
+    log.evolveSchema("t", sch.copy(fields = sch.fields :+ Field("w", "string")),
+      "evolve")
+    log.commit("t", 14L, "rm-2", Nil, Seq(first(1)))
+    assert(checkpointFiles(log, "t").size == 3)
+    val latest = 15L
+    val txnIds = (0L to latest).map(log.readEntry("t", _).txn_id) :+ "unknown"
+    // every version's snapshot and txn map, and every txn id's
+    // committedVersion, read through the checkpoints by a fresh instance
+    def answers(l: LakeLog) =
+      ((0L to latest).map(v => (l.snapshot("t", v),
+        l.replay("t", Some(v)).txns)),
+        txnIds.map(l.committedVersion("t", _)))
+    val withCp = answers(new LakeLog(log.root))
     // same root read WITHOUT checkpoints = pure replay
-    val withCp = (0L to 12L).map(v => log.snapshot("t", v))
     checkpointFiles(log, "t").foreach(n =>
       java.nio.file.Files.delete(log.logDir("t").resolve(n)))
-    val pure = new LakeLog(log.root) // fresh instance, no caches
-    (0L to 12L).foreach { v =>
-      assert(pure.snapshot("t", v) == withCp(v.toInt),
+    val pure = answers(new LakeLog(log.root)) // fresh instance, no caches
+    (0L to latest).foreach { v =>
+      assert(pure._1(v.toInt)._1 == withCp._1(v.toInt)._1,
         s"checkpointed snapshot at v$v diverged from replay")
+      assert(pure._1(v.toInt)._2 == withCp._1(v.toInt)._2,
+        s"checkpointed txn map at v$v diverged from replay")
     }
+    assert(pure._2 == withCp._2)
+    assert(pure._2.init == (0L to latest).map(Some(_)))
   }
 
   test("txn idempotency survives across a checkpoint boundary") {
@@ -80,6 +102,34 @@ class LakeCheckpointSpec extends SparkSpec {
     commitN(log, "t", 9)
     assert(log.snapshot("t", 2L).files.size == 2)
     assert(log.snapshot("t", 4L).files.size == 4)
+  }
+
+  test("log reads list _log a fixed number of times at any table age") {
+    val log = new LakeLog(tmpDir("ckpt"))
+    log.createTable("t", LakeTable.fromStructType(schema))
+    // one live file, replaced by each commit, so only the log grows
+    def growTo(n: Long): Unit = (log.latestVersion("t") + 1 to n).foreach { v =>
+      log.commit("t", v - 1, s"grow-$v", Seq(FileAdd(s"f$v", 1, 1)),
+        log.snapshot("t").files.map(_.path))
+    }
+    def listings(op: => Any): Long = {
+      val before = log.dirListings.get()
+      op
+      log.dirListings.get() - before
+    }
+    def perOp(): Seq[Long] = Seq(
+      listings(log.snapshot("t")),
+      listings(log.committedVersion("t", "grow-1")),
+      listings(log.latestVersion("t")),
+      listings(LakeTable.insert(spark, log, "t",
+        Seq((1L, 1.0)).toDF("id", "v"))))
+    growTo(20)
+    val at20 = perOp()
+    growTo(200)
+    val at200 = perOp()
+    assert(at20 == at200, s"20 versions: $at20, 200 versions: $at200")
+    // snapshot, committedVersion, latestVersion, committed insert
+    assert(at200 == Seq(1L, 1L, 1L, 4L))
   }
 
   test("interval 0 disables checkpointing") {

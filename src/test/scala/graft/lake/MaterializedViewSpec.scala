@@ -269,6 +269,57 @@ class MaterializedViewSpec extends SparkSpec {
     assert(refreshCommits == 1)
   }
 
+  test("refresh bookkeeping reads O(interval) entries of the MV log") {
+    // interval 2, more refreshes than that: a reader that scans every
+    // entry of the MV log reads 6-7 of them; the txn map reads <= 3
+    val log = new LakeLog(tmpDir("mvck"), checkpointInterval = 2)
+    LakeTable.createTable(log, "sales", schema)
+    LakeTable.createTable(log, "cats", StructType(Seq(
+      StructField("category", StringType, nullable = false),
+      StructField("region", StringType))))
+    LakeTable.insert(spark, log, "cats",
+      Seq(("a", "north"), ("b", "south")).toDF("category", "region"))
+    val d = MvDef("by_cat", "sales", "category", Seq("amount"))
+    val j = MvDef("by_region", "sales", "region", Seq("amount"),
+      joinTable = Some("cats"), joinOn = Some("category"))
+    Seq(d, j).foreach(MaterializedView.create(log, _))
+    // (base version, dim version, MV version) of every refresh commit
+    val folded = Map(d -> Seq.newBuilder[(Long, Long, Long)],
+      j -> Seq.newBuilder[(Long, Long, Long)])
+    def refresh(m: MvDef): Unit = {
+      MaterializedView.refresh(spark, log, m)
+      val dimV = m.joinTable.fold(-1L)(log.latestVersion)
+      folded(m) += ((log.latestVersion("sales"), dimV,
+        log.latestVersion(m.name)))
+    }
+    (1 to 5).foreach { i =>
+      LakeTable.insert(spark, log, "sales",
+        rows(i * 10 to i * 10 + 3, if (i % 2 == 0) "a" else "b"))
+      if (i == 3) LakeTable.insert(spark, log, "cats",
+        Seq(("c", "west")).toDF("category", "region"))
+      Seq(d, j).foreach(refresh)
+    }
+    // a dim-only refresh: the same fact high-water under a newer dim token
+    LakeTable.insert(spark, log, "cats",
+      Seq(("d", "east")).toDF("category", "region"))
+    refresh(j)
+    assert(log.latestVersion(d.name) == 5 && log.latestVersion(j.name) == 6)
+    Seq(d, j).foreach { m =>
+      val fresh = new LakeLog(log.root, checkpointInterval = 2)
+      assert(MaterializedView.lastRefreshed(fresh, m) ==
+        log.latestVersion("sales"))
+      if (m.joinTable.isDefined)
+        assert(MaterializedView.lastDimVersion(fresh, m) ==
+          log.latestVersion("cats"))
+      folded(m).result().foreach { case (baseV, dimV, mvV) =>
+        assert(MaterializedView.refreshVersionAt(fresh, m, baseV, dimV) ==
+          Some(mvV), s"${m.name}: refresh of base v$baseV dim v$dimV")
+      }
+      assert(fresh.entryReads.get() <= 3,
+        s"${m.name}: read ${fresh.entryReads.get()} MV log entries")
+    }
+  }
+
   test("read() derives exact means from the maintained sums") {
     val (log, d) = setup()
     LakeTable.insert(spark, log, "sales", rows(1 to 4, "a")) // amounts 1..4
